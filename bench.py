@@ -5,11 +5,10 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric": ...,
 "sf": ...}.
 
 The headline suite is PINNED to BENCH_BASELINE.json's query set (the
-round-1 catalog), independent of the driver-catalog rotation
-(plans/rotation.py) — otherwise every rotation would silently change
-what the suite total measures and BENCH_r{N} would stop being
-comparable across rounds. Rotated-out queries are found in the twin
-registry; the timing contract is identical.
+round-1 catalog), independent of which registry each query sits in,
+so the suite total measures the same queries in every BENCH_r{N}.
+Queries outside the driver catalog are found in the twin registry;
+the timing contract is identical.
 
 Each query is timed over a full materialization (collect) after a
 warm-up of the session itself; inputs are re-read per query (no
@@ -52,8 +51,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from bigdata_commerce_spark import get_spark  # noqa: E402
 from bigdata_commerce_spark.plans import QUERIES, TWIN_QUERIES  # noqa: E402
 
-# Driver slots rotate per round; the bench suite must not (see module
-# docstring). Both registries share the (spark, sf_dir) contract.
+# The pinned suite spans both registries (see module docstring); they
+# share the (spark, sf_dir) contract.
 ALL_QUERIES = {**TWIN_QUERIES, **QUERIES}
 
 

@@ -1,6 +1,11 @@
 """Query catalog: the reference's ten requirements (plus the
 relational and training-data operator suites) as (Spark, oracle-SQL)
-pairs over the shared testdata."""
+pairs over the shared testdata.
+
+Each query's decorator states its registry: ``@query`` for the 50
+driver slots, ``@twin_query`` for the pytest-checked twins.
+ROTATION.md lists the membership and tests/test_rotation_ledger.py
+pins it."""
 
 from bigdata_commerce_spark.plans import (  # noqa: F401
     catalog,
@@ -15,36 +20,7 @@ from bigdata_commerce_spark.plans.registry import (
 )
 
 # The SQL-surface twin must produce byte-identical results to the
-# DataFrame form — give it the same oracle (checked in pytest; twins
-# don't burn driver catalog slots).
-TWIN_ORACLES.setdefault("region_top3_parts_sql", ORACLES["region_top3_parts"])
-
-# Rotate this round's driver catalog: anchors stay, ~35 slots go to
-# queries the driver's independent gate has never checked (see
-# plans/rotation.py and ROTATION.md). Rotations apply in round order
-# so the ledger history stays executable.
-from bigdata_commerce_spark.plans.rotation import (  # noqa: E402
-    DEMOTE_R7,
-    DEMOTE_R8,
-    DEMOTE_R9,
-    DEMOTE_R10,
-    DEMOTE_R11,
-    DEMOTE_R12,
-    PROMOTE_R7,
-    PROMOTE_R8,
-    PROMOTE_R9,
-    PROMOTE_R10,
-    PROMOTE_R11,
-    PROMOTE_R12,
-    apply_rotation,
-)
-
-apply_rotation()  # r6: PROMOTE_R6 / DEMOTE_R6
-apply_rotation(PROMOTE_R7, DEMOTE_R7)  # r7: closes the ledger
-apply_rotation(PROMOTE_R8, DEMOTE_R8)  # r8: maintenance (oldest-first)
-apply_rotation(PROMOTE_R9, DEMOTE_R9)  # r9: maintenance (oldest-first)
-apply_rotation(PROMOTE_R10, DEMOTE_R10)  # r10: maintenance (oldest-first)
-apply_rotation(PROMOTE_R11, DEMOTE_R11)  # r11: maintenance (oldest-first)
-apply_rotation(PROMOTE_R12, DEMOTE_R12)  # r12: maintenance (oldest-first)
+# DataFrame form — give it the same oracle.
+ORACLES.setdefault("region_top3_parts_sql", ORACLES["region_top3_parts"])
 
 __all__ = ["QUERIES", "ORACLES", "TWIN_QUERIES", "TWIN_ORACLES"]

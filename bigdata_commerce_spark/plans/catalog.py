@@ -126,7 +126,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@twin_query(
     "top_orders_by_revenue",
     oracle="""
     SELECT l_orderkey,
@@ -214,21 +214,24 @@ def region_top3_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an ObjectHashAggregate — and the name list is decoded after the
     # aggregate from a name-sorted literal table (the funnel-spec /
     # centroid bounded-collect pattern; 25 rows, build-time).
-    # Identical output: filter() preserves the literal array's
-    # name-ascending order, so the joined string equals
+    # Identical output: the literal table holds one entry per distinct
+    # non-NULL name (the OR of its keys' bits), and filter() preserves
+    # its name-ascending order, so the joined string equals
     # array_join(array_sort(collect_set(nation)), ",").
     nat_rows = nat.select("n_nationkey", "n_name").collect()
     mask_safe = bool(nat_rows) and all(
         r[0] is not None and 0 <= int(r[0]) < 63 for r in nat_rows
     )
+    name_masks: dict[str, int] = {}
     if mask_safe:
+        for key, name in nat_rows:
+            if name is not None:
+                name_masks[name] = name_masks.get(name, 0) | (1 << int(key))
+    if name_masks:
         name_table = F.array(
             *[
-                F.struct(
-                    F.lit(1 << int(r[0])).cast("long").alias("m"),
-                    F.lit(r[1]).alias("nm"),
-                )
-                for r in sorted(nat_rows, key=lambda r: r[1])
+                F.struct(F.lit(m).cast("long").alias("m"), F.lit(nm).alias("nm"))
+                for nm, m in sorted(name_masks.items())
             ]
         )
         basic = (
@@ -263,7 +266,7 @@ def region_top3_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("nation_list"),
             )
         )
-    else:  # nation keys outside [0, 63) — fall back to the set form
+    else:  # nation keys outside [0, 63) or no names — the set form
         basic = (
             li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
             .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
@@ -367,8 +370,7 @@ def sessionize_skew_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The time-bucketized (skew-bounded) sessionizer against the SAME
     lag+running-sum oracle the exact path answers to — the operator's
     bucket_seconds path must emit identical session ids (round-5 skew
-    probe: exact 5.8x under a 30%-hot key, bucketized 0.9x). Twin
-    slot: driver catalog is at its 50-entry cap."""
+    probe: exact 5.8x under a 30%-hot key, bucketized 0.9x)."""
     ev = load_table(spark, "events", sf_dir).select("user_id", "ts")
     return sessionize(ev, gap_minutes=30, bucket_seconds=3600)
 
@@ -382,7 +384,7 @@ def session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return visit_step_histogram(_session_agg(spark, sf_dir))
 
 
-@query(
+@twin_query(
     "session_extract",
     oracle=f"""
     WITH {_SESSION_CTE},
@@ -424,7 +426,7 @@ def session_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+@twin_query(
     "top_categories",
     oracle=f"""
     WITH {_EVENTS_ORACLE_CTE}
@@ -462,7 +464,7 @@ def top_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@twin_query(
     "top_users_per_category",
     oracle=f"""
     WITH {_EVENTS_ORACLE_CTE},
@@ -514,7 +516,7 @@ def top_users_per_category(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FLOW = ("view", "click", "purchase")
 
 
-@query(
+@twin_query(
     "page_funnel",
     oracle="""
     WITH trans AS (
@@ -562,7 +564,7 @@ def page_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+@twin_query(
     "ad_blacklist",
     oracle=f"""
     WITH {_EVENTS_ORACLE_CTE}
@@ -600,7 +602,7 @@ def ad_cumulative_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return adstats.cumulative_stats(ev)
 
 
-@query(
+@twin_query(
     "ad_province_top3",
     oracle=f"""
     WITH {_EVENTS_ORACLE_CTE},
@@ -631,7 +633,7 @@ def ad_province_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     return adstats.province_top3(ev)
 
 
-@query(
+@twin_query(
     "ad_minute_counts",
     oracle=f"""
     WITH {_EVENTS_ORACLE_CTE}
@@ -649,7 +651,7 @@ def ad_minute_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return adstats.minute_counts(ev)
 
 
-@query(
+@twin_query(
     "ad_click_trend",
     oracle=f"""
     WITH {_EVENTS_ORACLE_CTE},
@@ -680,7 +682,7 @@ def ad_click_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@twin_query(
     "local_supplier_volume",
     oracle="""
     SELECT n_name,
@@ -725,7 +727,7 @@ def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@twin_query(
     "returned_item_customers",
     oracle="""
     SELECT c_custkey, c_name,

@@ -88,12 +88,10 @@ FROM tok_docs
 """
 
 
-@twin_query("text_stats", oracle=_TEXT_STATS_SQL)
+@query("text_stats", oracle=_TEXT_STATS_SQL)
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality statistics — pure projection, no shuffle,
-    stays in whole-stage codegen (operators/text.py). Twin slot:
-    ``text_quality_score``'s driver-checked oracle embeds this whole
-    CTE, so the stats frame itself is pytest-checked."""
+    stays in whole-stage codegen (operators/text.py)."""
     docs = load_table(spark, "documents", sf_dir)
     out = text_ops.text_stats(docs)
     return out.withColumn("n_chars", F.col("n_chars").cast("bigint"))
@@ -112,7 +110,7 @@ def _ngram_list_sql(n: int) -> str:
     return f"list_transform(range(1, len(toks) - {n - 2}), i -> {parts})"
 
 
-@query(
+@twin_query(
     "repetition_stats",
     oracle=f"""
     WITH {_NORM_CTE}
@@ -132,7 +130,7 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_ops.repetition_stats(docs)
 
 
-@query(
+@twin_query(
     "pii_scrub",
     oracle=f"""
     SELECT doc_id,
@@ -200,8 +198,7 @@ def ts_similar_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series similarity search: users resampled onto a fixed
     120x6h grid over the events month, cosine top-5 most similar
     users per probe via the shared vector machinery
-    (operators/timeseries.py -> similarity.cosine_topk). Twin slot:
-    driver catalog is at its 50-entry cap."""
+    (operators/timeseries.py -> similarity.cosine_topk)."""
     from bigdata_commerce_spark.operators.timeseries import similar_series
 
     ev = load_table(spark, "events", sf_dir)
@@ -230,12 +227,11 @@ _CHUNK_ORACLE = f"""
     """
 
 
-@twin_query("chunk_documents", oracle=_CHUNK_ORACLE)
+@query("chunk_documents", oracle=_CHUNK_ORACLE)
 def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token windows per document (256-token chunks,
     32-token overlap -> stride 224) — map-side array expressions + one
-    explode (operators/text.py). Twin slot: the driver catalog is at
-    its 50-entry cap; oracle-checked in pytest."""
+    explode (operators/text.py)."""
     docs = load_table(spark, "documents", sf_dir)
     return text_ops.chunk_documents(docs, chunk_tokens=256, overlap=32)
 
@@ -338,8 +334,7 @@ def corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent, while a rounded mean sits on half-boundaries where
     Spark's decimal-string HALF_UP and DuckDB's binary rounding
     disagree — measured 0.7011 vs 0.7010 at sf0.01). One projection
-    (stats + quality are pure expressions) and one hash aggregate.
-    Twin slot: driver catalog is at its 50-entry cap."""
+    (stats + quality are pure expressions) and one hash aggregate."""
     from bigdata_commerce_spark.operators.text import _doc_profile, _quality_expr
 
     docs = load_table(spark, "documents", sf_dir)
@@ -448,7 +443,7 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+@twin_query(
     "dedup_exact",
     oracle=f"""
     WITH {_NORM_CTE}
@@ -517,7 +512,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted index — the container side has no size bound, so only
     one side's prefix applies); the exact cross-multiplied verify
     keeps the result identical to the all-pairs definition the
-    oracle computes. Twin slot: queued for its first driver row."""
+    oracle computes."""
     docs = load_table(spark, "documents", sf_dir)
     return dedup.containment_pairs(docs, threshold=0.8)
 
@@ -546,8 +541,7 @@ def top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     / top_ngrams): top-50 bigrams by total occurrences with document
     frequency — the statistic behind contamination thresholds and
     boilerplate detection. Map-side fold, one explode, one hash
-    aggregate on the ngram key, distributed top-k. Twin slot: driver
-    catalog is at its 50-entry cap."""
+    aggregate on the ngram key, distributed top-k."""
     docs = load_table(spark, "documents", sf_dir)
     return text_ops.top_ngrams(docs, n=2, k=50)
 
@@ -593,15 +587,14 @@ def boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     strip lines whose document frequency reaches the threshold,
     preserving original order. posexplode fan-out, one hash agg for
     the frequency table, one equi-join on the line key, one hash agg
-    to reassemble — no window, no per-doc sort. Twin slot: driver
-    catalog is at its 50-entry cap."""
+    to reassemble — no window, no per-doc sort."""
     docs = load_table(spark, "documents", sf_dir)
     return text_ops.remove_frequent_lines(
         docs, min_docs=_BOILER_MIN_DOCS, delimiter=" "
     )
 
 
-@twin_query(
+@query(
     "benchmark_contamination",
     oracle=f"""
     WITH {_SHINGLE_CTE}
@@ -624,8 +617,7 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     (corpus doc, benchmark doc) pair sharing word 3-grams, scored by
     the fraction of the benchmark doc's distinct n-grams present. The
     benchmark here is the deterministic doc_id % 40 == 7 slice playing
-    the role of a held-out eval set; the corpus is everything else.
-    Twin slot: driver catalog is at its 50-entry cap."""
+    the role of a held-out eval set; the corpus is everything else."""
     from bigdata_commerce_spark.operators.contamination import contamination_report
 
     docs = load_table(spark, "documents", sf_dir)
@@ -657,8 +649,7 @@ def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     fractions applied by deterministic id-hash threshold — zero
     shuffle, pure scan+filter, nested samples across fraction changes.
     Fractions here sweep 0..1 over the 20 sources (src0 dropped
-    entirely, src19 kept entirely). Twin slot: driver catalog is at
-    its 50-entry cap."""
+    entirely, src19 kept entirely)."""
     from bigdata_commerce_spark.operators.mixing import mixture_sample as _mix
 
     docs = load_table(spark, "documents", sf_dir).select(
@@ -716,7 +707,7 @@ def _minhash_sig_sql(num_hashes: int = 8) -> str:
     return f"SELECT id, {cols} FROM ex GROUP BY id"
 
 
-@twin_query(
+@query(
     "minhash_signatures",
     oracle=f"""
     WITH {_SHINGLE_CTE}
@@ -726,9 +717,7 @@ def _minhash_sig_sql(num_hashes: int = 8) -> str:
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-component MinHash signature per document (min of md5(i||':'||
     shingle) — fixed-width hex makes string-min == numeric-min, so the
-    signature is engine-portable). Twin slot: the consuming
-    ``dedup_minhash_lsh`` recomputes these signatures inside its own
-    driver-checked oracle, so the frame itself is pytest-checked."""
+    signature is engine-portable)."""
     docs = load_table(spark, "documents", sf_dir)
     return dedup.minhash_signatures(docs, num_hashes=8)
 
@@ -808,11 +797,9 @@ def _simhash_sql() -> str:
     """
 
 
-@twin_query("simhash_values", oracle=_simhash_sql())
+@query("simhash_values", oracle=_simhash_sql())
 def simhash_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """60-bit SimHash per document (nibble-arithmetic portable).
-    Twin slot: ``dedup_simhash``'s driver-checked oracle embeds the
-    same simhash CTE, so the value frame is pytest-checked."""
+    """60-bit SimHash per document (nibble-arithmetic portable)."""
     docs = load_table(spark, "documents", sf_dir)
     return dedup.simhash(docs)
 
@@ -983,7 +970,7 @@ def embedding_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     are top-k results (n_probes x k rows — tiny however large the
     corpus), so the report itself is one cheap equi-join + per-probe
     agg; the oracle composes the two driver-verified search oracles
-    verbatim. Twin slot: queued for its first driver row."""
+    verbatim."""
     emb = load_table(spark, "embeddings", sf_dir)
     probes = emb.where(F.col("vec_id") < 5)
     exact = similarity.cosine_topk(emb, probes, k=5)
@@ -1129,7 +1116,7 @@ def embedding_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid (ties toward smaller id), zero-magnitude vectors always
     kept with a NULL cell. The only shuffle is the cell-keyed
     self-join; centroid sims rounded to 4dp and pair cosines to 6dp
-    before any comparison (engine parity). Twin slot: queued (r9)."""
+    before any comparison (engine parity)."""
     emb = load_table(spark, "embeddings", sf_dir)
     return similarity.semdedup(emb, tau=0.9, n_centroids=16)
 
@@ -1147,7 +1134,7 @@ def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_topk(emb, probes, k=5, n_centroids=16, nprobe=4)
 
 
-@twin_query("embedding_ann_ivf_indexed", oracle=_IVF_ORACLE)
+@query("embedding_ann_ivf_indexed", oracle=_IVF_ORACLE)
 def embedding_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The build-once / search-many form of ``embedding_ann_ivf``: the
     corpus is written to parquet ``partitionBy`` cell (one broadcast
@@ -1234,8 +1221,7 @@ def multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed from sha2 hex directly (exactly "feature >= 0.5" for the
     deterministic kernel, with no float32 round-trip), so the DuckDB
     oracle replays them nibble for nibble; the oracle's OR-banded
-    brute join is the semantic spec the banded union must equal.
-    Twin slot: queued (r9)."""
+    brute join is the semantic spec the banded union must equal."""
     docs = load_table(spark, "documents", sf_dir)
     media = multimodal.documents_as_media(docs)
     return multimodal.media_phash_pairs(media, max_hamming=1)
@@ -1310,7 +1296,7 @@ def multimodal_phash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction and NULL contract across engines instead, and the
     pixel path is pytest-pinned against brute force in
     tests/test_codecs.py). Words flattened to scalar columns for the
-    driver's canonicalizer. Twin slot: queued (r11)."""
+    driver's canonicalizer."""
     docs = load_table(spark, "documents", sf_dir)
     media = multimodal.documents_as_media(docs)
     h = multimodal.media_phash_wide_det(media).where(
@@ -1353,7 +1339,7 @@ def multimodal_phash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (~14% of the corpus -> a guaranteed non-empty pair
     set; the dup-heavy fuzz profile adds organic dup chains on top);
     the near-miss bit arithmetic is pinned by the planted hamming-1/3
-    pairs in tests/test_codecs.py. Twin slot: queued (r11)."""
+    pairs in tests/test_codecs.py."""
     docs = load_table(spark, "documents", sf_dir)
     media = multimodal.documents_as_media(docs)
     planted = media.unionByName(
@@ -1367,7 +1353,7 @@ def multimodal_phash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.phash_words_hamming_pairs(h, n_words=4, max_hamming=3)
 
 
-@twin_query(
+@query(
     "multimodal_resize",
     oracle="""
     SELECT doc_id AS media_id,
@@ -1380,15 +1366,13 @@ def multimodal_phash_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Media resize plumbing: Arrow-batched mapInPandas kernel (the
     PIL/libvips decode->resample->encode seam), deterministic stub
-    fingerprint reproduced by the DuckDB oracle via sha256. Twin
-    slot: same kernel plumbing as the driver-checked
-    ``multimodal_features`` / ``multimodal_frame_sample``."""
+    fingerprint reproduced by the DuckDB oracle via sha256."""
     docs = load_table(spark, "documents", sf_dir)
     media = multimodal.documents_as_media(docs)
     return multimodal.resize_media(media, width=64, height=64)
 
 
-@query(
+@twin_query(
     "multimodal_frame_sample",
     oracle="""
     SELECT doc_id AS media_id,
@@ -1494,7 +1478,7 @@ def _session_stats_oracle() -> str:
     """
 
 
-@query("commerce_session_stats", oracle=_session_stats_oracle())
+@twin_query("commerce_session_stats", oracle=_session_stats_oracle())
 def commerce_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference req 1 end-to-end on the commerce schema: seeded
     fixtures -> typed ingest -> session aggregate -> user join ->
@@ -1541,7 +1525,7 @@ WHERE r.rank <= 3
 """
 
 
-@query("commerce_area_top3", oracle=_AREA_TOP3_ORACLE)
+@twin_query("commerce_area_top3", oracle=_AREA_TOP3_ORACLE)
 def commerce_area_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference req 6 end-to-end on the commerce schema (JSON status
     decode, sorted distinct city list, area banding, top-3 window;
@@ -1674,7 +1658,7 @@ GROUP BY lang
 """
 
 
-@twin_query("corpus_token_economics", oracle=_TOKEN_ECON_SQL)
+@query("corpus_token_economics", oracle=_TOKEN_ECON_SQL)
 def corpus_token_economics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility per language — the mixture-budgeting
     data-card row (tokens-per-byte drives how many corpus bytes buy a
@@ -1685,8 +1669,7 @@ def corpus_token_economics(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang is its own observable group. Float parity: the ratio is
     (double)sum*1024.0/(double)sum — two IEEE ops with identical
     parenthesization in both engines, no ROUND surface; NULL for a
-    zero-byte language on both (try_divide <-> NULLIF). Twin slot:
-    queued (r9)."""
+    zero-byte language on both (try_divide <-> NULLIF)."""
     docs = load_table(spark, "documents", sf_dir)
     t = F.coalesce(F.col("text"), F.lit(""))
     per_doc = docs.select(
@@ -1705,7 +1688,7 @@ def corpus_token_economics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@twin_query(
     "ad_launch_window_counts",
     oracle=f"""
     WITH {_EVENTS_ORACLE_CTE}
@@ -1830,7 +1813,7 @@ def heavy_hitter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return heavy_hitters(ev, "user_id", top_n=10, k=256)
 
 
-@query(
+@twin_query(
     "salted_user_event_counts",
     oracle=f"""
     WITH {_EVENTS_ORACLE_CTE}
@@ -1871,8 +1854,7 @@ def incremental_dedup_novel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the store — the ingest-loop question batch dedup can't answer
     without rescanning history. Store reads are partition-pruned by
     md5 prefix (asserted in tests/test_incremental_dedup.py); the
-    oracle is the equivalent one-shot set difference. Twin slot:
-    driver catalog is at its 50-entry cap."""
+    oracle is the equivalent one-shot set difference."""
     import hashlib
     import os
     import shutil
@@ -1915,8 +1897,7 @@ def source_capped_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     at most 20 documents per source, selected by the deterministic
     salted-id hash rank — the per-domain cap of crawl curation. One
     shuffle on source + a ranking window; order is partitioning-
-    independent so the DuckDB oracle reproduces it exactly. Twin
-    slot: driver catalog is at its 50-entry cap."""
+    independent so the DuckDB oracle reproduces it exactly."""
     from bigdata_commerce_spark.operators.mixing import cap_per_source
 
     docs = load_table(spark, "documents", sf_dir)
@@ -1954,8 +1935,7 @@ def token_budget_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     source survives with at least one document and overshoots by
     less than one document. One shuffle on source + a narrow-key
     running-sum window; order is partitioning-independent so the
-    DuckDB oracle reproduces it exactly. Twin slot: driver catalog
-    is at its 50-entry cap."""
+    DuckDB oracle reproduces it exactly."""
     from bigdata_commerce_spark.operators.mixing import token_budget_per_source
 
     docs = load_table(spark, "documents", sf_dir)
@@ -2073,8 +2053,7 @@ def length_bucketed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/shards.with_group_shuffled_index) so there is NO
     single-reducer-per-bucket stage — the oracle's plain per-bucket
     ROW_NUMBER proves the two-level construction equals the global
-    hash order. NULL-token docs land deterministically in bucket 1.
-    Twin slot: queued for its first driver row."""
+    hash order. NULL-token docs land deterministically in bucket 1."""
     from bigdata_commerce_spark.operators.packing import length_bucketed_index
 
     docs = load_table(spark, "documents", sf_dir)
@@ -2137,8 +2116,7 @@ def temperature_token_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-float-surface discipline as the curation recipes — so the
     DuckDB oracle (FLOOR(SQRT()) + //) reproduces the kept set
     bit-for-bit. ``temperature_token_budgets`` is the general-tau
-    float helper; this twin pins the tau=0.5 integer-exact path.
-    Twin slot: driver catalog is at its 50-entry cap."""
+    float helper; this twin pins the tau=0.5 integer-exact path."""
     import math
 
     from bigdata_commerce_spark.operators.mixing import token_budget_per_source
@@ -2190,8 +2168,7 @@ def cross_corpus_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     which documents of the second half of the corpus near-duplicate a
     first-half document at 3-gram Jaccard >= 0.8 — entity resolution
     across two corpora riding the unchanged PPJoin prefix pipeline
-    via the side-tagged id encoding. Twin slot: driver catalog is at
-    its 50-entry cap."""
+    via the side-tagged id encoding."""
     from bigdata_commerce_spark.operators.dedup import similarity_join
 
     docs = load_table(spark, "documents", sf_dir)
@@ -2213,8 +2190,7 @@ def documents_global_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense 0-based global numbering by doc_id order
     (sources/shards.with_global_index): two-level bucketed prefix sum,
     never a one-partition global window — the distributed
-    zipWithIndex replacement that also addresses the shard exporter.
-    Twin slot: driver catalog is at its 50-entry cap."""
+    zipWithIndex replacement that also addresses the shard exporter."""
     from bigdata_commerce_spark.sources.shards import with_global_index
 
     docs = load_table(spark, "documents", sf_dir)
@@ -2238,8 +2214,7 @@ def documents_shuffled_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible pseudo-random permutation index — the
     shuffle-before-sharding step, engine-portable (DuckDB reproduces
     the md5 order key exactly) and free of rand()/partitioning
-    dependence. Same two-level prefix sum as the dense index. Twin
-    slot: driver catalog is at its 50-entry cap."""
+    dependence. Same two-level prefix sum as the dense index."""
     from bigdata_commerce_spark.sources.shards import with_shuffled_index
 
     docs = load_table(spark, "documents", sf_dir)
@@ -2279,7 +2254,7 @@ tok AS (
 """
 
 
-@twin_query(
+@query(
     "bm25_doc_scores",
     oracle=f"WITH {_BM25_CTE.strip()} SELECT doc_id, bm25 FROM bm",
 )
@@ -2289,8 +2264,7 @@ def bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     for training corpora. The oracle replays the exact formulation
     (same k1/b constants, per-term contributions rounded to 8 dp then
     decimal-summed, so libm 1-ulp ln() differences and float sum
-    order cannot drift the hash). Twin slot: driver catalog is at its
-    50-entry cap."""
+    order cannot drift the hash)."""
     from bigdata_commerce_spark.operators.bm25 import bm25_scores
 
     docs = load_table(spark, "documents", sf_dir)
@@ -2410,7 +2384,7 @@ _NLL_DOCS_CTE = f"""
 """
 
 
-@twin_query(
+@query(
     "doc_char_bigram_nll",
     oracle=f"WITH {_NLL_DOCS_CTE} SELECT * FROM nll_docs",
 )
@@ -2418,8 +2392,7 @@ def doc_char_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM quality scores (operators/lm_quality.py):
     self-perplexity of every document under the corpus's own
     Laplace-smoothed char-bigram model, replayed exactly by the
-    oracle (8dp-rounded log-probs, decimal sums). Twin slot: driver
-    catalog is at its 50-entry cap."""
+    oracle (8dp-rounded log-probs, decimal sums)."""
     from bigdata_commerce_spark.operators.lm_quality import char_bigram_nll
 
     docs = load_table(spark, "documents", sf_dir)
@@ -2440,7 +2413,7 @@ def docs_bloom_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     key side broadcasts and eliminates non-members map-side; the exact
     semi join then sees only true members + the fpp sliver — identical
     rows to the plain semi join, which is precisely what the oracle
-    checks. Twin slot: driver catalog is at its 50-entry cap."""
+    checks."""
     from bigdata_commerce_spark.operators.bloom import bloom_semi_join
 
     docs = load_table(spark, "documents", sf_dir)
@@ -2468,8 +2441,7 @@ def docs_bloom_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     the filter rejects are definitely absent and pass through
     map-side; only the fpp sliver reaches the exact anti join. The
     incremental-dedup accelerator shape for fingerprint stores beyond
-    broadcast size. Twin slot: driver catalog is at its 50-entry
-    cap."""
+    broadcast size."""
     from bigdata_commerce_spark.operators.bloom import bloom_anti_join
 
     docs = load_table(spark, "documents", sf_dir)
@@ -2534,8 +2506,7 @@ def events_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     of `events` — ONE narrow full-outer key join, unchanged rows
     dropped before anything downstream (module docstring has the
     100 TB shape). `apply_changes(old, feed) == new` round-trip is
-    pinned in tests/test_diff.py. Twin slot: driver catalog is at
-    its 50-entry cap."""
+    pinned in tests/test_diff.py."""
     from bigdata_commerce_spark.operators.diff import table_diff
 
     old, new = _diff_versions(spark, sf_dir)
@@ -2594,8 +2565,7 @@ def events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     events column: counts, exact distinct cardinality, typed min/max,
     exact-decimal mean. Exact distinct here because the oracle must
     hash-match; production default is the single-pass HLL++ path
-    (module docstring). Twin slot: driver catalog is at its 50-entry
-    cap."""
+    (module docstring)."""
     from bigdata_commerce_spark.operators.profile import profile_table
 
     ev = load_table(spark, "events", sf_dir)
@@ -2655,8 +2625,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     fusion (operators/hybrid.py — RRF k=60, per-list depth 50). Each
     list is cut to top-m by TakeOrderedAndProject BEFORE any window
     ranks it, so the global ranking windows only ever see m rows;
-    fusion is one tiny full-outer join. Twin slot: driver catalog is
-    at its 50-entry cap."""
+    fusion is one tiny full-outer join."""
     from bigdata_commerce_spark.operators.bm25 import bm25_scores
     from bigdata_commerce_spark.operators.hybrid import rrf_fuse
     from bigdata_commerce_spark.operators.topk import rank_top_m
@@ -2712,8 +2681,7 @@ def docs_editdist_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     same metric where bytes == codepoints — caught by the round-8
     unicode fuzz rows landing inside the length band. The operator's
     codepoint semantics (including unicode) are differential-tested
-    against a pure-Python reference in tests/test_editdist.py. Twin
-    slot: driver catalog is at its 50-entry cap."""
+    against a pure-Python reference in tests/test_editdist.py."""
     from bigdata_commerce_spark.operators.editdist import edit_distance_join
 
     docs = load_table(spark, "documents", sf_dir).where(
@@ -2752,8 +2720,7 @@ def docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang with inclusion biased by n_chars (mixing.weighted_sample —
     the A-ES key over the module's engine-portable md5 uniform; the
     oracle replays ln(u)/w to the same 10 dp rounding, so sample
-    membership AND rank hash-match). Twin slot: driver catalog is at
-    its 50-entry cap."""
+    membership AND rank hash-match)."""
     from bigdata_commerce_spark.operators.mixing import weighted_sample
 
     docs = load_table(spark, "documents", sf_dir)
@@ -2766,7 +2733,7 @@ def docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@twin_query(
+@query(
     "dedup_canonical_docs",
     oracle=f"""
     WITH RECURSIVE {_CLUSTERS_CTE.strip()}
@@ -2792,8 +2759,7 @@ def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup_cluster.canonical_per_cluster: a single max_by aggregate,
     no ranking window; the oracle reaches the same survivor through
     the recursive-CTE clusters + a ranking window, so BOTH the
-    cluster fixpoint and the argmax law are cross-checked). Twin
-    slot: driver catalog is at its 50-entry cap."""
+    cluster fixpoint and the argmax law are cross-checked)."""
     from bigdata_commerce_spark.operators.dedup_cluster import (
         canonical_per_cluster,
         connected_components,
@@ -2944,13 +2910,12 @@ FROM grp GROUP BY doc_id, g
     )
 
 
-@twin_query("doc_duplicate_spans", oracle=_dupspan_sql(keep_first=False))
+@query("doc_duplicate_spans", oracle=_dupspan_sql(keep_first=False))
 def doc_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merged spans of corpus-duplicated 8-token runs per document
     (operators/dupspans.py — the Lee et al. 2022 ExactSubstr family):
     every occurrence of a window repeated >= 2 times anywhere in the
-    corpus, islands merged per doc. Audit mode (all occurrences).
-    Twin slot: driver catalog is at its 50-entry cap."""
+    corpus, islands merged per doc. Audit mode (all occurrences)."""
     from bigdata_commerce_spark.operators import dupspans
 
     docs = load_table(spark, "documents", sf_dir)
@@ -3012,8 +2977,7 @@ FROM rebuilt
 def docs_scrubbed_dupspans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus with duplicated 8-token runs scrubbed, one canonical
     copy kept (dupspans.scrub_duplicate_spans — Lee et al. keep-one
-    policy). Output text is whitespace-normalized by contract.
-    Twin slot: driver catalog is at its 50-entry cap."""
+    policy). Output text is whitespace-normalized by contract."""
     from bigdata_commerce_spark.operators import dupspans
 
     docs = load_table(spark, "documents", sf_dir)
@@ -3078,14 +3042,13 @@ def _linscore_sql() -> str:
     """
 
 
-@twin_query("doc_quality_linear_score", oracle=_linscore_sql())
+@query("doc_quality_linear_score", oracle=_linscore_sql())
 def doc_quality_linear_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents scored by a hashed-feature linear model
     (operators/linear_model.py — the fastText quality-filter seam):
     L1-normalized hashed TF, broadcast weight join, per-doc dot
     product as a bucket-ordered sequential fold (bit-identical to the
-    oracle's list_reduce). Twin slot: driver catalog is at its
-    50-entry cap."""
+    oracle's list_reduce)."""
     from bigdata_commerce_spark.operators import linear_model as lm
 
     docs = load_table(spark, "documents", sf_dir)
@@ -3115,8 +3078,7 @@ def _group_split_sql() -> str:
 def docs_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """25% holdout decided by the SOURCE hash (mixing.split_by_group):
     every document of a source lands in the same split — the
-    leakage-safe form of train_test_split for near-dup-heavy corpora.
-    Twin slot: driver catalog is at its 50-entry cap."""
+    leakage-safe form of train_test_split for near-dup-heavy corpora."""
     from bigdata_commerce_spark.operators.mixing import split_by_group
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "source")
@@ -3158,15 +3120,14 @@ FROM grp GROUP BY doc_id, g
 )
 
 
-@twin_query("doc_contaminated_spans", oracle=_CONTAM_SPAN_SQL)
+@query("doc_contaminated_spans", oracle=_CONTAM_SPAN_SQL)
 def doc_contaminated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token runs of the corpus appearing VERBATIM in the benchmark
     slice (dupspans.contaminated_spans — span-level refinement of the
     doc-level contamination report; benchmark = the deterministic
     doc_id % 40 == 7 holdout, as in benchmark_contamination). The
     benchmark reduces to distinct window fingerprints and is
-    broadcast; the corpus never shuffles for the match. Twin slot:
-    driver catalog is at its 50-entry cap."""
+    broadcast; the corpus never shuffles for the match."""
     from bigdata_commerce_spark.operators import dupspans
 
     docs = load_table(spark, "documents", sf_dir)
@@ -3209,13 +3170,12 @@ SELECT doc_id, term, tfidf, rank FROM ranked WHERE rank <= 5
 """
 
 
-@twin_query("doc_tfidf_keywords", oracle=_TFIDF_SQL)
+@query("doc_tfidf_keywords", oracle=_TFIDF_SQL)
 def doc_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 characteristic terms per document by smoothed TF-IDF
     (text.tfidf_top_terms): one explode + one (doc, term) aggregate,
     document frequencies from that aggregate's own output (no second
-    corpus scan), per-DOC ranking window. Twin slot: driver catalog
-    is at its 50-entry cap."""
+    corpus scan), per-DOC ranking window."""
     return text_ops.tfidf_top_terms(load_table(spark, "documents", sf_dir), k=5)
 
 
@@ -3252,14 +3212,13 @@ def _tag_phrases_sql() -> str:
     """
 
 
-@twin_query("doc_phrase_tags", oracle=_tag_phrases_sql())
+@query("doc_phrase_tags", oracle=_tag_phrases_sql())
 def doc_phrase_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every occurrence of a 4-phrase dictionary across the corpus
     (dupspans.tag_phrases — FlashText job on the window-fingerprint
     kernel): dictionary fingerprints computed driver-side and
     broadcast, corpus windows built only at the dictionary's lengths,
-    no corpus shuffle. Twin slot: driver catalog is at its 50-entry
-    cap."""
+    no corpus shuffle."""
     from bigdata_commerce_spark.operators import dupspans
 
     docs = load_table(spark, "documents", sf_dir)
@@ -3313,8 +3272,7 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     mine_hard_negatives — the DPR/contrastive-training recipe):
     queries = the vec_id % 50 == 3 slice, labeled positives = self and
     self+1, excluded BEFORE ranking by a broadcast anti join; queries
-    broadcast, corpus never shuffles. Twin slot: driver catalog is at
-    its 50-entry cap."""
+    broadcast, corpus never shuffles."""
     from bigdata_commerce_spark.operators import similarity
 
     emb = load_table(spark, "embeddings", sf_dir)
@@ -3439,8 +3397,7 @@ def embedding_centroid_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves of the embedding corpus (drift.embedding_centroid_drift —
     the semantic counterpart of the PSI monitor): per-(group, dim)
     aggregate with map-side combine, shuffle carries groups x dims
-    rows, never the corpus. Twin slot: driver catalog is at its
-    50-entry cap."""
+    rows, never the corpus."""
     from bigdata_commerce_spark.operators.drift import embedding_centroid_drift
 
     emb = load_table(spark, "embeddings", sf_dir)
@@ -3504,8 +3461,7 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source survival counts through the curate() gate chain
     (text.curation_funnel): raw -> quality -> quality+lang -> unique
     canonical. One corpus scan (persisted flag frame, both aggregates
-    materialized eagerly). Twin slot: driver catalog is at its
-    50-entry cap."""
+    materialized eagerly)."""
     docs = load_table(spark, "documents", sf_dir)
     out = text_ops.curation_funnel(docs)
     return out.select(
@@ -3565,7 +3521,7 @@ def docs_upsampled_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     src2 x2.5, src3 x0.4, src0 dropped, everything else x1 — integer
     part as full epochs, fractional part a deterministic per-(id,
     epoch) hash draw against thresholds the oracle regenerates from
-    the same dict. Twin slot: driver catalog is at its 50-entry cap."""
+    the same dict."""
     from bigdata_commerce_spark.operators.mixing import upsample_epochs
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "source")
@@ -3611,8 +3567,7 @@ def orders_customer_key_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-join diagnostic for orders.o_custkey vs customer.c_custkey
     (profile.join_key_overlap): each side collapses to distinct keys
     with ONE map-side-combined aggregate, one key-set full-outer join,
-    one one-row report — no row-level join. Twin slot: driver catalog
-    is at its 50-entry cap."""
+    one one-row report — no row-level join."""
     from bigdata_commerce_spark.operators.profile import join_key_overlap
 
     orders = load_table(spark, "orders", sf_dir)
@@ -3651,8 +3606,7 @@ def orders_scd2_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     build -> scd2_join equi-join with the interval as a residual
     condition. Orders before 1995-06-01 carry the original segment,
     later ones the _V2 rename — history is never rewritten by
-    today's dimension. Twin slot: driver catalog is at its 50-entry
-    cap."""
+    today's dimension."""
     from bigdata_commerce_spark.operators.scd2 import changes_to_scd2, scd2_join
 
     cust = load_table(spark, "customer", sf_dir)
@@ -3725,8 +3679,7 @@ def _rfm_sql() -> str:
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer RFM quartile scores over orders (operators/rfm.py):
     one hash aggregate, exact-percentile boundaries broadcast as a
-    literal fold — never a global ntile window. Twin slot: driver
-    catalog is at its 50-entry cap."""
+    literal fold — never a global ntile window."""
     from bigdata_commerce_spark.operators.rfm import rfm_scores
 
     orders = load_table(spark, "orders", sf_dir)
@@ -3754,8 +3707,7 @@ def events_variant_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     — parse ONCE, typed variant_get per field; malformed/missing ->
     NULL, never an ANSI abort). Row-identical to the per-field
     get_json_object path the commerce queries use, proven by the
-    DuckDB json oracle. Twin slot: driver catalog is at its 50-entry
-    cap."""
+    DuckDB json oracle."""
     from bigdata_commerce_spark.functions.semistructured import variant_extract
 
     ev = load_table(spark, "events", sf_dir)
@@ -3793,8 +3745,7 @@ def user_decayed_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     (timeseries.decayed_sum_per_key, 7-day half-life): decay against
     a FIXED anchor is a plain weighted sum — ONE hash aggregate with
     map-side partials, no order, no sequential state (the cheap
-    alternative to ewma when only 'score now' is needed). Twin slot:
-    driver catalog is at its 50-entry cap."""
+    alternative to ewma when only 'score now' is needed)."""
     import datetime as dt
 
     from bigdata_commerce_spark.operators.timeseries import decayed_sum_per_key
@@ -3842,8 +3793,7 @@ def source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the prefix to exercise real cross-source volume)
     (dedup.cross_source_dup_matrix): one (fingerprint, source)
     aggregate, a fingerprint self-join bounded by sources-per-content,
-    exact integer pair arithmetic — no pair materialized. Twin slot:
-    driver catalog is at its 50-entry cap."""
+    exact integer pair arithmetic — no pair materialized."""
     from bigdata_commerce_spark.operators.dedup import cross_source_dup_matrix
 
     docs = load_table(spark, "documents", sf_dir)
@@ -3882,8 +3832,7 @@ def event_value_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p50/p95/p99/max of value per event type — the SLO/latency-band
     report shape: ONE hash aggregate, exact interpolated percentiles
     (the same engine-portable `percentile` the drift machinery uses —
-    NOT a per-group sort or window). Twin slot: driver catalog is at
-    its 50-entry cap."""
+    NOT a per-group sort or window)."""
     ev = load_table(spark, "events", sf_dir).where(F.col("value").isNotNull())
     return ev.groupBy("event_type").agg(
         F.count("value").alias("n"),
@@ -4007,8 +3956,7 @@ _CANON_URLS_SQL = f"WITH {_URL_CANON_CTE} SELECT doc_id, canonical_url, register
 def documents_canonical_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document canonical URL + registered domain — the crawl
     pipeline's keying stage. Pure projection: zero shuffle, no UDF,
-    evaluated inside the scan (operators/urltools.py). Twin slot:
-    driver catalog is at its 50-entry cap."""
+    evaluated inside the scan (operators/urltools.py)."""
     docs = load_table(spark, "documents", sf_dir).withColumn("url", _messy_url())
     out = urltools.with_registered_domain(urltools.with_canonical_url(docs))
     return out.select("doc_id", "canonical_url", "registered_domain")
@@ -4041,7 +3989,7 @@ def host_capped_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel (operators/mixing.cap_per_source) partitioned by domain.
     One shuffle on domain + a ranking window; rank order is content-
     and partitioning-independent so the oracle reproduces it row for
-    row. Twin slot: queued for its first driver row."""
+    row."""
     from bigdata_commerce_spark.operators.mixing import cap_per_source
 
     docs = load_table(spark, "documents", sf_dir).withColumn("url", _messy_url())
@@ -4064,8 +4012,7 @@ GROUP BY canonical_url
 def url_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL-level dedup survivors (min doc_id per canonical URL) — the
     cheap pre-pass that runs BEFORE content dedup: one hash aggregate
-    on the canonical string, map-side partial min. Twin slot: driver
-    catalog is at its 50-entry cap."""
+    on the canonical string, map-side partial min."""
     docs = load_table(spark, "documents", sf_dir).withColumn("url", _messy_url())
     return urltools.dedup_by_canonical_url(docs)
 
@@ -4086,8 +4033,7 @@ GROUP BY registered_domain
 def url_host_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-registered-domain rows / distinct-URL / dup-ratio stats —
     the table a crawl operator reads to set per-domain quota caps
-    (mixing.cap_per_source). One hash aggregate keyed on the domain.
-    Twin slot: driver catalog is at its 50-entry cap."""
+    (mixing.cap_per_source). One hash aggregate keyed on the domain."""
     docs = load_table(spark, "documents", sf_dir).withColumn("url", _messy_url())
     return urltools.host_report(docs)
 
@@ -4105,8 +4051,7 @@ def url_blocklist_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-blocklist filtering: rows per registered domain after
     dropping a blocked domain — one left-anti equi-join (no forced
     broadcast: blocklists range tens to hundreds of millions of
-    domains; AQE's size-based planning decides). Twin slot: driver
-    catalog is at its 50-entry cap."""
+    domains; AQE's size-based planning decides)."""
     docs = load_table(spark, "documents", sf_dir).withColumn("url", _messy_url())
     blocked = spark.createDataFrame([("example.co.uk",)], "domain string")
     out = urltools.filter_blocked_domains(docs, blocked)
@@ -4194,8 +4139,7 @@ def domain_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed prefix-sum kernel (no single-reducer window at 1e8
     hosts); every ratio is one correctly-rounded division of exact
     int64 masses and the Gini/HHI follow the exact-DECIMAL-sum
-    discipline, so the oracle hash cannot drift. Twin slot: queued
-    for its first driver row."""
+    discipline, so the oracle hash cannot drift."""
     from bigdata_commerce_spark.operators.concentration import (
         concentration_report,
     )
@@ -4274,15 +4218,14 @@ def _gopher_sql() -> str:
     """
 
 
-@twin_query("gopher_quality_flags", oracle=_gopher_sql())
+@query("gopher_quality_flags", oracle=_gopher_sql())
 def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Gopher pretraining quality-filter rules (Rae et al. 2021
     §A1.1; the base of Dolma/RefinedWeb filters) as one flag per rule
     + combined verdict (operators/text.py). Engine-parity by
     construction: every ratio threshold is integer arithmetic (10 *
     symbols <= n_words), so no float exists to drift. One projection,
-    no shuffle, no UDF. Twin slot: driver catalog is at its 50-entry
-    cap."""
+    no shuffle, no UDF."""
     docs = load_table(spark, "documents", sf_dir)
     return text_ops.gopher_quality_flags(docs)
 
@@ -4338,7 +4281,7 @@ def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle of its own. Probabilities enter bin sums via their
     shortest decimal repr (exact DECIMAL(16,6)); rates/gaps are
     8dp-rounded single divisions; ECE sums 8dp terms as
-    DECIMAL(20,8). Twin slot: queued for its first driver row."""
+    DECIMAL(20,8)."""
     from bigdata_commerce_spark.operators import linear_model as lm
     from bigdata_commerce_spark.operators.calibration import (
         calibration_bins,
@@ -4400,8 +4343,7 @@ def preference_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-limited window (row_number ≤ k, the WindowGroupLimit
     per-partition-heap shape), so no group is ever fully sorted; the
     recombination joins two ≤3-rows-per-group frames. Deterministic:
-    ties break on doc_id, pairing is partitioning-independent. Twin
-    slot: queued for its first driver row."""
+    ties break on doc_id, pairing is partitioning-independent."""
     from bigdata_commerce_spark.operators import linear_model as lm
     from bigdata_commerce_spark.operators.preference import (
         preference_pairs,
@@ -4450,8 +4392,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     2019) per language (operators/lm_quality.perplexity_buckets):
     char-bigram self-NLL + per-language exact tercile boundaries
     (one tiny agg, broadcast back — never a global sort), boundaries
-    rounded before comparison per the percentile discipline. Twin
-    slot: driver catalog is at its 50-entry cap."""
+    rounded before comparison per the percentile discipline."""
     from bigdata_commerce_spark.operators.lm_quality import perplexity_buckets
 
     docs = load_table(spark, "documents", sf_dir)
@@ -4540,22 +4481,21 @@ def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     double); the total sums as DECIMAL(20,8) and rounds in the
     decimal domain, so float order cannot drift the hash. One explode
     + one hash aggregate + a TakeOrderedAndProject top-k — never a
-    vocabulary sort. Twin slot: queued for its first driver row."""
+    vocabulary sort."""
     from bigdata_commerce_spark.operators.lm_quality import unigram_kl_report
 
     docs = load_table(spark, "documents", sf_dir)
     return unigram_kl_report(docs, "src1", "src2")
 
 
-@twin_query("dsir_importance_weights", oracle=_DSIR_SQL)
+@query("dsir_importance_weights", oracle=_DSIR_SQL)
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR data selection (Xie et al. 2023) with the English slice as
     the target distribution (operators/lm_quality.dsir_logratio): two
     broadcast char-bigram LMs scored over ONE exploded pass of the
     corpus, per-bigram terms 8dp-rounded then decimal-summed (the
     bm25 discipline), keep = top quartile by exact global percentile
-    (broadcast threshold, no global sort). Twin slot: driver catalog
-    is at its 50-entry cap."""
+    (broadcast threshold, no global sort)."""
     from bigdata_commerce_spark.operators.lm_quality import dsir_logratio
 
     docs = load_table(spark, "documents", sf_dir)
@@ -4602,8 +4542,7 @@ def c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-javascript line scrub, >=3-surviving-lines / no-lorem-ipsum /
     no-brace page verdict, scrubbed text re-joined (NULL for dropped
     pages). Pure projection — integer counts and lowercased contains
-    only, no float surface. Twin slot: driver catalog is at its
-    50-entry cap."""
+    only, no float surface."""
     docs = load_table(spark, "documents", sf_dir)
     return text_ops.c4_line_filter(docs)
 
@@ -4639,8 +4578,7 @@ def published_recipe_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor funnel (operators/lm_quality.published_recipe_funnel) —
     the corpus_curation_funnel discipline applied to the published
     recipes: each stage ANDs all previous gates, LM-unscorable docs
-    fail their stage explicitly, single-row data-card output. Twin
-    slot: queued (r9)."""
+    fail their stage explicitly, single-row data-card output."""
     from bigdata_commerce_spark.operators.lm_quality import (
         published_recipe_funnel as _funnel,
     )
@@ -4677,13 +4615,12 @@ def _top_ngram_sql() -> str:
     """
 
 
-@twin_query("doc_top_ngram_coverage", oracle=_top_ngram_sql())
+@query("doc_top_ngram_coverage", oracle=_top_ngram_sql())
 def doc_top_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher repetition rules 2-4 (operators/text.
     top_ngram_char_fraction): per (doc, n in 2..4) the dominant word
     n-gram and the text fraction it covers, deterministic total-order
-    tie-break, one explode + two doc-keyed aggregates. Twin slot:
-    driver catalog is at its 50-entry cap."""
+    tie-break, one explode + two doc-keyed aggregates."""
     docs = load_table(spark, "documents", sf_dir)
     out = text_ops.top_ngram_char_fraction(docs)
     return out.select(
@@ -4717,13 +4654,12 @@ def _encoding_quality_sql() -> str:
     """
 
 
-@twin_query("doc_encoding_quality", oracle=_encoding_quality_sql())
+@query("doc_encoding_quality", oracle=_encoding_quality_sql())
 def doc_encoding_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encoding-damage detection (operators/text.encoding_quality):
     U+FFFD / mojibake-marker / C0-control counts + clean verdict, all
     exact integer arithmetic — the ftfy-style pre-filter, detection at
-    scan speed, repair deferred to a byte-level kernel. Twin slot:
-    driver catalog is at its 50-entry cap."""
+    scan speed, repair deferred to a byte-level kernel."""
     docs = load_table(spark, "documents", sf_dir)
     return text_ops.encoding_quality(docs)
 
@@ -4760,7 +4696,7 @@ def _encoding_repair_sql() -> str:
     """
 
 
-@twin_query("doc_encoding_repair", oracle=_encoding_repair_sql())
+@query("doc_encoding_repair", oracle=_encoding_repair_sql())
 def doc_encoding_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan-speed mojibake repair (operators/encoding_repair
     .repair_encoding, the kernel encoding_quality defers to): chained
@@ -4769,7 +4705,7 @@ def doc_encoding_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated from the same map in the same order, so parity holds by
     construction; the exact codec round-trip variant
     (repair_encoding_exact) is byte-fixture-tested in pytest — codecs
-    are not SQL-expressible. Twin slot: queued (r9)."""
+    are not SQL-expressible."""
     from bigdata_commerce_spark.operators.encoding_repair import repair_encoding
 
     docs = load_table(spark, "documents", sf_dir)

@@ -18,7 +18,7 @@ from bigdata_commerce_spark.plans.registry import query, twin_query
 from bigdata_commerce_spark.sources.testdata import load_table
 
 
-@query(
+@twin_query(
     "asof_click_attribution",
     oracle=f"""
     WITH {_EVENTS_ORACLE_CTE},
@@ -77,7 +77,7 @@ def asof_skew_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     (skew-bounded) as-of path, against the same native ASOF JOIN
     oracle — the bucket-spine stitch must be invisible in the result
     (round-5 skew probe: exact 3.2x under a 30%-hot key, bucketized
-    0.9x). Twin slot: driver catalog is at its 50-entry cap."""
+    0.9x)."""
     ev = _events(spark, sf_dir)
     clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts", "ad_id")
     purch = ev.where(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
@@ -112,7 +112,7 @@ def events_running_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket_seconds=3600) against the plain running-SUM-window oracle —
     the bucket-spine arithmetic must be invisible in the result.
     Exact DECIMAL internals make the two addition orders (and DuckDB)
-    bit-identical. Twin slot: driver catalog is at its 50-entry cap."""
+    bit-identical."""
     from bigdata_commerce_spark.operators.running import running_sum_per_key
 
     ev = _events(spark, sf_dir).select("event_id", "user_id", "ts", "value")
@@ -183,7 +183,7 @@ def events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@twin_query(
     "users_click_no_purchase",
     oracle="""
     SELECT user_id FROM events WHERE event_type = 'click'
@@ -199,7 +199,7 @@ def users_click_no_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clickers.subtract(buyers)
 
 
-@twin_query(
+@query(
     "users_click_and_purchase",
     oracle="""
     SELECT user_id FROM events WHERE event_type = 'click'
@@ -208,16 +208,14 @@ def users_click_no_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def users_click_and_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set intersection (INTERSECT). Twin slot: §2.7's set-operation
-    surface keeps ``users_click_no_purchase`` (EXCEPT, including the
-    0-row edge) as its driver-checked representative."""
+    """Set intersection (INTERSECT)."""
     ev = load_table(spark, "events", sf_dir)
     clickers = ev.where(F.col("event_type") == "click").select("user_id")
     buyers = ev.where(F.col("event_type") == "purchase").select("user_id")
     return clickers.intersect(buyers)
 
 
-@query(
+@twin_query(
     "approx_distinct_users",
     oracle="""
     SELECT event_type, COUNT(DISTINCT user_id) AS exact_users
@@ -237,7 +235,7 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@twin_query(
     "supplier_window_suite",
     oracle="""
     WITH per_supplier AS (
@@ -297,14 +295,13 @@ def supplier_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@twin_query("region_top3_parts_sql")
+@query("region_top3_parts_sql")
 def region_top3_parts_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-surface parity (SURVEY.md §3.2): the area/top-3 pipeline as
     the reference writes it — a chain of temp views consumed by
     spark.sql — proving the engine's full SQL surface produces the
     same plan/result as the DataFrame form (views are logical plans;
-    the chain fuses into one physical plan). Twin slot: pytest asserts
-    row-identical output vs the driver-checked ``region_top3_parts``."""
+    the chain fuses into one physical plan)."""
     from bigdata_commerce_spark.sources.testdata import register_views
 
     register_views(spark, sf_dir)
@@ -429,7 +426,7 @@ def lineitem_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@twin_query(
     "price_quantiles",
     oracle="""
     SELECT o_orderpriority,
@@ -476,8 +473,7 @@ def price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def latest_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read current-state view: each user's latest event from
     the append-only log (operators/upsert_view.py — max_by aggregate,
-    no per-key sort; the oracle is the equivalent row_number spec).
-    Twin slot: driver catalog is at its 50-entry cap."""
+    no per-key sort; the oracle is the equivalent row_number spec)."""
     from bigdata_commerce_spark.operators.upsert_view import latest_by_key
 
     ev = load_table(spark, "events", sf_dir).select(
@@ -486,7 +482,7 @@ def latest_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return latest_by_key(ev, ["user_id"], "ts", tiebreak_col="event_id")
 
 
-@twin_query(
+@query(
     "cohort_retention",
     oracle="""
     WITH activity AS (
@@ -515,8 +511,7 @@ def latest_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly cohort retention matrix over the events table
-    (operators/cohort.py). Twin slot: driver catalog is at its
-    50-entry cap."""
+    (operators/cohort.py)."""
     from bigdata_commerce_spark.operators.cohort import cohort_retention as _cr
 
     ev = load_table(spark, "events", sf_dir)
@@ -596,8 +591,7 @@ def data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest boundary runs before publishing a partition. The discount
     range is deliberately tighter than the data (and the synthetic
     (l_orderkey, l_linenumber) key is deliberately non-unique), so the
-    report exercises both passing and failing constraints. Twin slot:
-    driver catalog is at its 50-entry cap."""
+    report exercises both passing and failing constraints."""
     from bigdata_commerce_spark.operators import validate as V
 
     li = load_table(spark, "lineitem", sf_dir)
@@ -666,8 +660,7 @@ def customer_kanonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships as training data. ONE hash aggregate keyed by the
     quasi-identifiers, a tiny aggregate over the class frame, and a
     global top-k (TakeOrderedAndProject, never a full sort); pure
-    integer outputs, nothing to drift. Twin slot: queued for its
-    first driver row."""
+    integer outputs, nothing to drift."""
     from bigdata_commerce_spark.operators.privacy import kanonymity_report
 
     cust = load_table(spark, "customer", sf_dir).withColumn(
@@ -736,7 +729,7 @@ def multitouch_attribution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter — no nested-loop), position ranks window per CONVERSION
     (bounded by touches-per-conversion), one final hash aggregate per
     campaign. Per-touch credit rounds to 8 dp and sums as
-    DECIMAL(20,8). Twin slot: queued for its first driver row."""
+    DECIMAL(20,8)."""
     from bigdata_commerce_spark.operators.attribution import (
         multitouch_attribution,
     )
@@ -823,8 +816,7 @@ def campaign_conversion_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE double chain rounded once at 8 dp (the token-economics
     discipline), so the verdict boolean cannot drift. Two
     user-keyed hash-distincts + one user equi-join + one per-campaign
-    aggregate; population totals broadcast as one row. Twin slot:
-    queued for its first driver row."""
+    aggregate; population totals broadcast as one row."""
     from bigdata_commerce_spark.operators.abtest import conversion_chi2
 
     ev = _events(spark, sf_dir)
@@ -904,8 +896,7 @@ def events_value_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     endpoints are exact order statistics of the resample means
     (rank-picked, not interpolated). Weighted sums ride DECIMAL(30,8)
     and each mean is one correctly-rounded division — nothing
-    floats free of the oracle. Twin slot: queued for its first
-    driver row."""
+    floats free of the oracle."""
     from bigdata_commerce_spark.operators.bootstrap import (
         poisson_bootstrap_ci,
     )
@@ -938,8 +929,7 @@ def events_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the oracle), which is exactly the self-maintainability property.
     Refresh cost is delta-sized, never history-sized. Sums are kept in
     exact decimal partial state (functions.money_sum discipline) so
-    merge order can never drift the value hash. Twin slot: driver
-    catalog is at its 50-entry cap."""
+    merge order can never drift the value hash."""
     from bigdata_commerce_spark.operators import incremental_agg as ia
 
     keys = ["event_date", "event_type"]
@@ -995,8 +985,7 @@ def events_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, hottest-20 keys with row share, and the max/mean skew
     factor — the measurement that decides whether a key needs salting
     or AQE skew handling before the expensive job runs. One hash agg +
-    one-row broadcast summary + TakeOrderedAndProject. Twin slot:
-    driver catalog is at its 50-entry cap."""
+    one-row broadcast summary + TakeOrderedAndProject."""
     from bigdata_commerce_spark.operators.salted import key_skew_report
 
     ev = load_table(spark, "events", sf_dir)
@@ -1020,7 +1009,7 @@ def lineitem_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     of events_pivot): the four lineitem measures as (measure, value)
     rows. Map-side only — Catalyst expands unpivot to a generator
     projection, no shuffle; the oracle is the portable UNION ALL
-    form. Twin slot: driver catalog is at its 50-entry cap."""
+    form."""
     li = load_table(spark, "lineitem", sf_dir)
     return li.unpivot(
         ["l_orderkey", "l_linenumber"],
@@ -1065,8 +1054,7 @@ def user_daily_value_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     observation forward — the regularization step before window
     features or the similarity grid. One aggregate for per-bucket
     last-obs, a map-side sequence explode for the grid, one key
-    shuffle shared by the join and the carry-forward window. Twin
-    slot: driver catalog is at its 50-entry cap."""
+    shuffle shared by the join and the carry-forward window."""
     from bigdata_commerce_spark.operators.timeseries import fill_gaps_locf
 
     ev = load_table(spark, "events", sf_dir).where(F.col("user_id") < 200)
@@ -1093,8 +1081,7 @@ def events_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Catalyst expands the sets map-side; one shuffle), with
     GROUPING() flags disambiguating real NULLs from subtotal rows.
     SQL surface on the Spark side too — the temp-view path the
-    reference used for its area pipeline. Twin slot: driver catalog
-    is at its 50-entry cap."""
+    reference used for its area pipeline."""
     load_table(spark, "events", sf_dir).createOrReplaceTempView("events_gs")
     return spark.sql("""
         SELECT event_type, CAST(ts AS DATE) AS event_date,
@@ -1148,8 +1135,7 @@ def user_value_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key mean/stddev come from exact decimal sums, so every float
     in the z computation is bit-identical across engines and
     partitionings — no order-dependent avg/stddev in an
-    exact-equality oracle. Twin slot:
-    driver catalog is at its 50-entry cap."""
+    exact-equality oracle."""
     from bigdata_commerce_spark.functions import money_sum
     from bigdata_commerce_spark.operators.timeseries import flag_anomalies
 
@@ -1217,8 +1203,7 @@ def price_distribution_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks. Exact-percentile boundaries (engine-portable), broadcast
     literal fold for assignment, two tiny share aggregates. The two
     halves are drawn from one distribution, so the PSI also
-    demonstrates the stable (< 0.1) verdict. Twin slot: driver
-    catalog is at its 50-entry cap."""
+    demonstrates the stable (< 0.1) verdict."""
     from bigdata_commerce_spark.operators.drift import psi_report
 
     orders = load_table(spark, "orders", sf_dir)
@@ -1265,8 +1250,7 @@ def events_value_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative sums run as a two-level ordered prefix sum keyed by
     equi-depth value ranges — never the classic single-reducer global
     window the textbook formulation implies (the oracle's plain
-    OVER (ORDER BY v) proves the two-level construction). Twin slot:
-    queued for its first driver row."""
+    OVER (ORDER BY v) proves the two-level construction)."""
     from bigdata_commerce_spark.operators.drift import ks_report
 
     ev = load_table(spark, "events", sf_dir)
@@ -1303,8 +1287,7 @@ def user_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's hourly open/high/low/close value bars in ONE hash
     aggregate — min_by/max_by on the (ts, value) total order replaces
     the two ranking windows the naive form needs (the oracle spells
-    out that naive form). Twin slot: driver catalog is at its
-    50-entry cap."""
+    out that naive form)."""
     from bigdata_commerce_spark.operators.timeseries import ohlc_resample
 
     ev = load_table(spark, "events", sf_dir).where(F.col("user_id") < 100)
@@ -1329,8 +1312,7 @@ def rate_capped_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest burst limiting (operators/mixing.rate_cap_per_key_bucket):
     at most 3 events per user per hour, earliest kept — one shuffle on
     (user, hour) + a ranking window with a total tie order, so reruns
-    and engines agree exactly. Twin slot: driver catalog is at its
-    50-entry cap."""
+    and engines agree exactly."""
     from bigdata_commerce_spark.operators.mixing import rate_cap_per_key_bucket
 
     ev = load_table(spark, "events", sf_dir)
@@ -1370,8 +1352,7 @@ def events_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE — doubles hash-match UNROUNDED, the determinism claim the
     docstring makes, proven. (The skew-bounded bucketized path is
     tolerance-tested in tests/test_timeseries_ext.py: float
-    re-association is ~1e-12, deliberately not hash-stable.) Twin
-    slot: driver catalog is at its 50-entry cap."""
+    re-association is ~1e-12, deliberately not hash-stable.)"""
     from bigdata_commerce_spark.operators.timeseries import ewma_per_key
 
     ev = load_table(spark, "events", sf_dir).select(
@@ -1420,7 +1401,7 @@ def customer_negative_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     slot, positives removed by anti-join, survivors ranked by slot.
     Linear in users (never users x items); one anti-join shuffle
     against the interaction set; <= k*oversample rows per user at the
-    ranking window. Twin slot: queued for its first driver row."""
+    ranking window."""
     from bigdata_commerce_spark.operators.mixing import negative_samples
 
     orders = load_table(spark, "orders", sf_dir)
@@ -1469,8 +1450,7 @@ def parts_bought_together(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/cooccur.py): part pairs sharing >= 2 orders, scored by
     pointwise mutual information from exact basket counts — ONE
     group-key self-join (whale baskets boundable via cap_per_group)
-    plus broadcast count joins. Twin slot: driver catalog is at its
-    50-entry cap."""
+    plus broadcast count joins."""
     from bigdata_commerce_spark.operators.cooccur import cooccurrence_pmi
 
     li = load_table(spark, "lineitem", sf_dir)
@@ -1526,8 +1506,7 @@ def user_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     windowFunnel family): a sequential latest-chain-start DP folded
     per key in ONE pass, integer-microsecond exact; the oracle
     replays the identical DP as a RECURSIVE CTE, so every level
-    hash-matches. Twin slot: driver catalog is at its 50-entry
-    cap."""
+    hash-matches."""
     from bigdata_commerce_spark.operators.funnel import window_funnel
 
     ev = load_table(spark, "events", sf_dir)
@@ -1560,7 +1539,7 @@ def events_value_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile bounds (the quantile_cont-proven pairing), rounded
     before the clip so interpolation noise cannot flip a boundary
     row, then a pure CASE projection — one aggregate, one join, no
-    window. Twin slot: driver catalog is at its 50-entry cap."""
+    window."""
     from bigdata_commerce_spark.operators.robust import winsorize
 
     ev = load_table(spark, "events", sf_dir)
@@ -1602,8 +1581,7 @@ def user_value_robust_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     outlier-resistant sibling of user_value_anomalies on the same
     decimal-exact series: both percentile boundaries are rounded
     before any comparison, so every float in the robust-z is
-    bit-identical across engines and partitionings. Twin slot:
-    driver catalog is at its 50-entry cap."""
+    bit-identical across engines and partitionings."""
     from bigdata_commerce_spark.functions import money_sum
     from bigdata_commerce_spark.operators.robust import robust_flag_anomalies
 
@@ -1668,8 +1646,7 @@ def lineitem_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Pearson correlation over lineitem's metric columns
     (operators/stats.corr_matrix): every pair's six sufficient sums
     in ONE scan / ONE aggregate, exact decimal partials, statistic
-    derived by an identical double-op sequence in both engines. Twin
-    slot: driver catalog is at its 50-entry cap."""
+    derived by an identical double-op sequence in both engines."""
     from bigdata_commerce_spark.operators.stats import corr_matrix
 
     li = load_table(spark, "lineitem", sf_dir)
@@ -1726,8 +1703,7 @@ def user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     series as user_value_anomalies (operators/stats.trend_per_key):
     one grouped aggregate of exact sums; slope/intercept/r2 derived
     by the identical double-op sequence in both engines (squares by
-    multiplication, never libm pow). Twin slot: driver catalog is at
-    its 50-entry cap."""
+    multiplication, never libm pow)."""
     from bigdata_commerce_spark.functions import money_sum
     from bigdata_commerce_spark.operators.stats import trend_per_key
 

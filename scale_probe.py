@@ -1,14 +1,23 @@
-"""Scale probe: does the dedup/ANN family stay sub-quadratic when the
-corpus grows 10x?
+"""Scale probe: how does each named catalog query's wall grow when its
+input grows 10x?
 
-No sf1 testdata ships in this environment, so the probe synthesizes a
-10x corpus from sf0.1 by unioning 10 id-remapped, DECORRELATED
-copies. Decorrelation is the load-bearing choice: a verbatim (or
-lightly-marked) 10x copy makes every document a 10-way near-dup, so
-pair outputs grow ~45x and the measurement becomes "how fast can you
-emit 1000x more pairs", not "does candidate generation stay linear"
-(a first probe run with one marker token per copy measured exactly
-that: 971x the output pairs). Instead:
+    python scale_probe.py name1,name2,...
+
+Each name must be registered in ``QUERIES`` or ``TWIN_QUERIES``. The
+query runs on a layout-matched 1x sf-dir and on a 10x sf-dir built
+from $SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata); both are
+written once under .scratch/scale_probe and reused. The headline per
+query is wall(10x)/wall(1x): linear work lands near 10x plus constant
+overhead, a secretly all-pairs plan near 100x. Prints one JSON line on
+stdout; per-query progress goes to stderr.
+
+No sf1 testdata ships with the repo, so the 10x corpus unions 10
+id-remapped, DECORRELATED copies. Decorrelation is the load-bearing
+choice: a verbatim (or lightly-marked) 10x copy makes every document a
+10-way near-dup, so pair outputs grow ~45x and the measurement becomes
+"how fast can you emit 1000x more pairs", not "does candidate
+generation stay linear" (a first probe run with one marker token per
+copy measured exactly that: 971x the output pairs). Instead:
 
 - documents: every third token gets a copy-specific suffix, so EVERY
   3-gram shingle of a copy differs from the original and from other
@@ -18,23 +27,11 @@ that: 971x the output pairs). Instead:
   similarity survives). Output pairs grow exactly 10x.
 - embeddings: each copy is multiplied elementwise by a deterministic
   per-copy +-1 sign pattern — an orthogonal transform, so within-copy
-  cosines are EXACTLY the originals' while cross-copy cosines collapse
-  toward 0. Output near-dup pairs grow exactly 10x.
-
-For each probed operator the headline number is wall(10x)/wall(1x):
-a candidate-generation design that is secretly all-pairs goes ~100x;
-the banded/bucketed designs should stay near ~10x (plus constant
-overhead). Prints one JSON line; run ad-hoc, results recorded in
-SCALE.md.
-
-Suites (argv[1]): ``dedup`` (default), ``relational``, ``round4``
-through ``round8``, ``memory``, ``streaming``, and ``skew`` — the
-skew suite measures wall(skewed)/wall(uniform) on
-twin corpora differing ONLY in key distribution (one planted hot key
-owning ~30% of rows), across the execution shapes key skew can land
-on: hash agg, salted agg, rank-limit window, running-frame window,
-composite-key window, sort-merge join with AQE skew-split on/off, and
-the salted join.
+  cosines are EXACTLY the originals' while cross-copy cosines shrink
+  toward 0. Not all fall below a low threshold: embedding_neardup's
+  pairs at cosine >= 0.45 grow 136x (SCALE.md).
+- fact tables: key remapping only (see ``build_relational_corpus``);
+  dimension tables are copied verbatim.
 """
 
 from __future__ import annotations
@@ -51,8 +48,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from bigdata_commerce_spark import get_spark  # noqa: E402
-from bigdata_commerce_spark.operators import dedup, similarity  # noqa: E402
-from bigdata_commerce_spark.operators.dedup_cluster import connected_components  # noqa: E402
 
 SCRATCH = Path(__file__).resolve().parent / ".scratch" / "scale_probe"
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -138,48 +133,6 @@ def build_corpus(spark) -> tuple[str, str]:
     return docs_out, emb_out
 
 
-def probes(spark, docs_path: str, emb_path: str):
-    docs = spark.read.parquet(docs_path)
-    emb = spark.read.parquet(emb_path)
-    probe_vecs = emb.where(F.col("vec_id") < 5)
-    return {
-        "dedup_exact": lambda: dedup.exact_duplicates(docs).count(),
-        "dedup_minhash_lsh": lambda: dedup.minhash_lsh_pairs(
-            docs, num_hashes=8, bands=4, threshold=0.8
-        ).count(),
-        "dedup_simhash": lambda: dedup.simhash_pairs(docs, max_hamming=3).count(),
-        "dedup_ngram_jaccard": lambda: dedup.jaccard_pairs(docs, threshold=0.8).count(),
-        "dedup_clusters": lambda: connected_components(
-            docs.select(F.col("doc_id").alias("id")),
-            dedup.jaccard_pairs(docs, threshold=0.8),
-            node_col="id",
-        ).count(),
-        "embedding_ann_ivf": lambda: similarity.ivf_topk(
-            emb, probe_vecs, k=5, n_centroids=16, nprobe=4
-        ).count(),
-        "embedding_neardup": lambda: similarity.neardup_pairs(
-            emb, threshold=0.45
-        ).count(),
-    }
-
-
-# The relational/session/streaming-batch heavies (top unprobed bench
-# timings at sf0.1, incl. every r3-verdict target). corpus_curation
-# rides along because the 10x documents land in the same dir.
-RELATIONAL_PROBE = [
-    "region_top3_parts",
-    "event_rollup_ladder",
-    "ad_launch_window_counts",
-    "lineitem_cube",
-    "session_extract",
-    "asof_click_attribution",
-    "heavy_hitter_users",
-    "session_stats",
-    "pricing_summary",
-    "supplier_window_suite",
-    "corpus_curation",
-]
-
 
 def build_relational_corpus(spark, docs10: str, emb10: str, n_copies: int) -> str:
     """A full sf-dir at ``n_copies``x: fact tables (lineitem, orders,
@@ -262,591 +215,6 @@ def build_relational_corpus(spark, docs10: str, emb10: str, n_copies: int) -> st
     return str(out_dir)
 
 
-def round4_probes(spark, docs_path: str, ev_path: str):
-    """The round-4 shuffle-bearing additions: boilerplate line scrub
-    (3 shuffles on line/doc keys), incremental fingerprint-store
-    commit + novelty (store build and pruned anti-join), PageRank (2
-    shuffles x iterations), and the partial-state rollup refresh.
-    min_docs for the scrub scales with the corpus (0.8 * n_docs) so
-    'ubiquitous' means the same thing at both sizes."""
-    import tempfile
-
-    from bigdata_commerce_spark.operators import incremental_agg as ia
-    from bigdata_commerce_spark.operators import incremental_dedup as inc
-    from bigdata_commerce_spark.operators.graph import pagerank
-    from bigdata_commerce_spark.operators.text import remove_frequent_lines
-
-    docs = spark.read.parquet(docs_path)
-    n_docs = docs.count()
-    ev = spark.read.parquet(ev_path)
-
-    def _boiler():
-        return remove_frequent_lines(
-            docs, min_docs=int(0.8 * n_docs), delimiter=" "
-        ).count()
-
-    def _inc_dedup():
-        store = tempfile.mkdtemp(dir=str(SCRATCH), prefix="fp_") + "/s"
-        inc.init_store(spark, store)
-        inc.commit_batch(docs.where(F.col("doc_id") % 10 != 0), store)
-        return inc.novel_documents(docs.where(F.col("doc_id") % 10 == 0), store).count()
-
-    def _pagerank():
-        edges = ev.select(
-            F.col("user_id").alias("src"),
-            (F.lit(10_000_000) + F.col("event_id") % 500).alias("dst"),
-        )
-        return pagerank(edges, iterations=5).count()
-
-    def _agg_refresh():
-        base = ev.withColumn("event_date", F.to_date("ts")).withColumn(
-            "value_dec", F.col("value").cast("decimal(30,8)")
-        )
-        keys = ["event_date", "event_type"]
-        m: ia.MeasureSpec = {"n": ("count", None), "s": ("sum", "value_dec")}
-        cut = F.col("user_id") % 5 == 0
-        existing = ia.partial_agg(base.where(~cut), keys, m)
-        return ia.refresh_with_delta(existing, base.where(cut), keys, m).count()
-
-    return {
-        "boilerplate_scrub": _boiler,
-        "incremental_dedup": _inc_dedup,
-        "pagerank_5it": _pagerank,
-        "agg_refresh": _agg_refresh,
-    }
-
-
-# ------------------------------------------- streaming throughput
-
-
-def streaming_probe(
-    spark, n_chunks: int = 20, files_per_trigger: int = 1, backend: str = "parquet"
-) -> dict:
-    """Sustained-throughput probe of the four-sink reqs 7-10 topology
-    (the soak test proves restart correctness; this measures rate):
-    sf0.1's ~20k click events (~95x the soak volume; the reference's
-    mock feed is 102 events/s, MockRealTimeData.scala:30,72) land as
-    ``n_chunks`` files -> one micro-batch each, through
-    run_ad_pipeline with the parquet epoch backend. Records rows/sec
-    and the per-batch latency TREND from the query's own progress
-    telemetry — the trend is the point: every accumulate sink
-    re-merges full state per epoch, so per-batch cost grows with
-    state size and the slope says when the parquet stand-in stops
-    being a stand-in (the JDBC MERGE backend is the per-batch-I/O
-    production path)."""
-    import tempfile
-
-    from bigdata_commerce_spark.streaming import pipelines
-
-    work = tempfile.mkdtemp(dir=str(SCRATCH), prefix="stream_probe_")
-    src = Path(work) / "src"
-    src.mkdir()
-    ev = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
-    ad = (
-        ev.where(F.col("event_type") == "click")
-        .select(
-            F.col("ts").cast("timestamp").alias("event_time"),
-            F.to_date(F.col("ts").cast("timestamp")).alias("event_date"),
-            F.concat(F.lit("p"), (F.col("user_id") % 10).cast("string")).alias(
-                "province"
-            ),
-            F.concat(F.lit("c"), (F.col("user_id") % 100).cast("string")).alias(
-                "city"
-            ),
-            "user_id",
-            F.get_json_object("props", "$.k").cast("bigint").alias("ad_id"),
-        )
-        .orderBy("event_time")
-    )
-    rows = ad.collect()
-    step = len(rows) // n_chunks
-    for i in range(n_chunks):
-        chunk = rows[i * step :] if i == n_chunks - 1 else rows[i * step : (i + 1) * step]
-        chunk_dir = Path(work) / f"chunk_{i}"
-        spark.createDataFrame(chunk, ad.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(chunk_dir))
-        shutil.copy(
-            next(chunk_dir.glob("part-*.parquet")), src / f"{i:03d}.parquet"
-        )
-
-    state_backend = None
-    if backend == "jdbc":
-        from bigdata_commerce_spark.sources.sinks import derby_config
-        from bigdata_commerce_spark.streaming.jdbc_state import JdbcStateBackend
-
-        state_backend = JdbcStateBackend(
-            spark, derby_config(os.path.join(work, "derby"))
-        )
-    handles = pipelines.run_ad_pipeline(
-        pipelines.file_event_source(
-            spark, str(src), max_files_per_trigger=files_per_trigger
-        ),
-        os.path.join(work, "state"),
-        blacklist_threshold=10**9,  # organic data: measure rate, not feedback
-        backend=state_backend,
-    )
-    t0 = time.perf_counter()
-    handles.process_all()
-    wall = time.perf_counter() - t0
-    progress = [
-        {
-            "batch": p.batchId,
-            "rows": int(p.numInputRows),
-            "trigger_ms": int(p.durationMs.get("triggerExecution", -1)),
-        }
-        for p in handles.queries[0].recentProgress
-        if p.numInputRows > 0
-    ]
-    handles.stop()
-    total = sum(p["rows"] for p in progress)
-    first3 = [p["trigger_ms"] for p in progress[:3]]
-    last3 = [p["trigger_ms"] for p in progress[-3:]]
-    return {
-        "metric": "streaming_four_sink_throughput",
-        "total_rows": total,
-        "n_batches": len(progress),
-        "wall_sec": round(wall, 2),
-        "rows_per_sec": round(total / wall, 1),
-        "batch_ms_first3": first3,
-        "batch_ms_last3": last3,
-        "growth_factor": round(
-            (sum(last3) / len(last3)) / (sum(first3) / len(first3)), 2
-        ),
-        "batches": progress,
-    }
-
-
-def round5_probes(spark, docs_path: str, emb_path: str):
-    """The round-5 corpus operators: BM25 (explode + map-side term
-    filter), char-bigram LM scoring (train + score, two explodes),
-    int8 quantization (pure projection). Each consumed through an
-    aggregate over its OUTPUT columns so Catalyst can't prune the
-    scored expression out of the timed plan (the trap the asof probe
-    documented)."""
-    from bigdata_commerce_spark.operators.bm25 import bm25_scores
-    from bigdata_commerce_spark.operators.lm_quality import char_bigram_nll
-    from bigdata_commerce_spark.operators.quantize import quantize_embeddings
-
-    docs = spark.read.parquet(docs_path)
-    emb = spark.read.parquet(emb_path)
-    return {
-        "bm25": lambda: float(
-            bm25_scores(docs, ["spark", "shuffle", "join", "window"])
-            .agg(F.sum("bm25"))
-            .collect()[0][0]
-        ),
-        "lm_nll": lambda: float(
-            char_bigram_nll(docs).agg(F.sum("nll")).collect()[0][0]
-        ),
-        "quantize": lambda: float(
-            quantize_embeddings(emb)
-            .agg(F.sum("qscale") + F.sum(F.element_at("qvec", 1).cast("long")))
-            .collect()[0][0]
-        ),
-    }
-
-
-def round5b_probes(spark, docs_path: str):
-    """Bloom join pruning + BPE training. Bloom: the EXACT anti join
-    of the corpus against a 30%-of-ids fingerprint store, bloom-pruned
-    vs plain left_anti — the ratio of interest is rows reaching the
-    exact join's shuffle (the 100 TB term), reported alongside wall.
-    BPE: the one corpus-scale pass (word frequencies) + 8 merge
-    iterations; the 10× corpus here repeats the same documents, so the
-    vocab is IDENTICAL at both scales and the probe isolates exactly
-    what the module docstring claims — the corpus pass scales, the
-    iteration cost doesn't."""
-    from bigdata_commerce_spark.operators import bloom, bpe
-
-    docs = spark.read.parquet(docs_path)
-    keys = docs.where(F.col("doc_id") % 10 < 3).select("doc_id")
-
-    def bloom_anti():
-        return bloom.bloom_anti_join(docs, keys, "doc_id").count()
-
-    def plain_anti():
-        return docs.join(keys, "doc_id", "left_anti").count()
-
-    def bpe_train():
-        vocab = bpe.word_frequencies(docs)
-        merges = bpe.train_bpe(vocab, 8, checkpoint_every=4)
-        return len(merges)
-
-    def cms_sketch():
-        # sketch every doc's source key, then look every doc's key up
-        # (build = explode+agg over the corpus; lookup = map-side) and
-        # consume the estimates so the probe times the full path
-        from bigdata_commerce_spark.operators import cms
-
-        width, depth = cms.cms_params(epsilon=0.01, delta=0.01)
-        sk = cms.cms_build(docs, "source", width, depth)
-        return int(
-            cms.cms_lookup(docs, "source", sk, width, depth)
-            .agg(F.sum("est_count"))
-            .collect()[0][0]
-        )
-
-    return {
-        "bloom_anti_join": bloom_anti,
-        "plain_anti_join": plain_anti,
-        "bpe_train_8_merges": bpe_train,
-        "cms_build_and_lookup": cms_sketch,
-    }
-
-
-def round5c_probes(spark, docs_path: str, emb_path: str, ev_path: str):
-    """Round-5c operators over the layout-matched corpora. table_diff
-    simulates two adjacent snapshot versions of events (drop ~10%,
-    re-insert ~14%, double `value` on every 5th id) — the diff's own
-    output grows ~linearly with the table, so a near-10x wall would
-    mean the JOIN scales, a flat wall would mean the probe is
-    overhead-bound. profile_table runs the production approx path
-    over every events column (the single scan+agg claim). EWMA runs
-    both paths; the exact path's per-key fold is the shape the skew
-    add-on below bounds. Hybrid search re-ranks against the probe
-    corpus (top-50 lists, fusion over 100 rows — wall should be flat
-    in corpus size past the two scans)."""
-    from bigdata_commerce_spark.operators import diff as diff_ops
-    from bigdata_commerce_spark.operators.bm25 import bm25_scores
-    from bigdata_commerce_spark.operators.hybrid import rrf_fuse
-    from bigdata_commerce_spark.operators.topk import rank_top_m
-    from bigdata_commerce_spark.operators.profile import profile_table
-    from bigdata_commerce_spark.operators.editdist import edit_distance_join
-    from bigdata_commerce_spark.operators.mixing import weighted_sample
-    from bigdata_commerce_spark.operators.similarity import cosine_topk
-    from bigdata_commerce_spark.operators.timeseries import ewma_per_key
-
-    ev = spark.read.parquet(ev_path)
-    docs = spark.read.parquet(docs_path)
-    emb = spark.read.parquet(emb_path)
-
-    def snapshot_diff():
-        base = ev.select("event_id", "user_id", "value")
-        old = base.where(F.col("event_id") % 10 != 3)
-        new = base.where(F.col("event_id") % 7 != 2).withColumn(
-            "value",
-            F.when(F.col("event_id") % 5 == 0, F.col("value") * 2).otherwise(
-                F.col("value")
-            ),
-        )
-        return diff_ops.table_diff(old, new, ["event_id"]).count()
-
-    def profile():
-        return profile_table(ev).count()
-
-    def ewma_exact():
-        return ewma_per_key(ev, 0.1, tiebreak_col="event_id").count()
-
-    def ewma_bucketized():
-        return ewma_per_key(
-            ev, 0.1, tiebreak_col="event_id", bucket_seconds=3600
-        ).count()
-
-    def hybrid():
-        probe = emb.orderBy("vec_id").limit(1)
-        lex = rank_top_m(
-            bm25_scores(docs, ["spark", "shuffle", "join"]),
-            [F.desc("bm25"), F.asc("doc_id")],
-            50,
-        ).select("doc_id", "rank")
-        sem = cosine_topk(emb, probe, k=50).select(
-            F.col("corpus_id").alias("doc_id"), "rank"
-        )
-        return rrf_fuse(
-            {"lex": lex, "sem": sem}, ["doc_id"], top_n=10
-        ).count()
-
-    def editdist():
-        # the batch-vs-corpus matching shape (new crawl slice against
-        # the standing corpus): 100 probes, full right side — probe
-        # count fixed, corpus grows 10x
-        probes = docs.orderBy("doc_id").limit(100)
-        corpus = docs.where(F.col("doc_id") >= 1000)
-        return edit_distance_join(probes, corpus, max_distance=20, q=3).count()
-
-    def weighted():
-        return weighted_sample(
-            docs, k=100, weight_col="n_chars", group_cols=["lang"]
-        ).count()
-
-    def cooccur():
-        from bigdata_commerce_spark.operators.cooccur import cooccurrence_pmi
-
-        li = spark.read.parquet(
-            os.path.join(os.path.dirname(ev_path), "lineitem.parquet")
-        )
-        return cooccurrence_pmi(
-            li, "l_orderkey", "l_partkey", min_pairs=2
-        ).count()
-
-    return {
-        "table_diff_snapshots": snapshot_diff,
-        "profile_all_columns": profile,
-        "ewma_exact": ewma_exact,
-        "ewma_bucketized": ewma_bucketized,
-        "hybrid_search_rrf": hybrid,
-        "editdist_100_probes": editdist,
-        "weighted_sample_per_lang": weighted,
-        "cooccur_pmi_lineitem": cooccur,
-    }
-
-
-def round5d_probes(spark, docs_path: str, emb_path: str, ev_path: str):
-    """Duplicate-span family (operators/dupspans.py): the detection
-    pipeline (window fingerprints -> count agg -> mark join -> island
-    merge) and the full scrub (detection + token-filter rebuild).
-    Consumed through aggregates over output columns so the scored
-    expressions stay in the timed plan. The 10x corpus mutates every
-    third token of copies 1..9, so cross-copy windows (w=8) never
-    collide and the duplicated volume itself scales ~10x with the
-    corpus — wall should track corpus size, not pair count."""
-    from bigdata_commerce_spark.operators import dupspans
-
-    docs = spark.read.parquet(docs_path)
-
-    def spans():
-        return int(
-            dupspans.duplicate_spans(docs, window=8)
-            .agg(F.coalesce(F.sum("span_tokens"), F.lit(0)))
-            .collect()[0][0]
-        )
-
-    def scrub():
-        return int(
-            dupspans.scrub_duplicate_spans(docs, window=8)
-            .agg(F.sum("removed_tokens"))
-            .collect()[0][0]
-        )
-
-    from bigdata_commerce_spark.operators import linear_model as lm
-    from bigdata_commerce_spark.plans.catalog_dataops import (
-        _LIN_BIAS,
-        _LIN_BUCKETS,
-        _lin_weights,
-    )
-
-    w = spark.createDataFrame(_lin_weights(), "bucket long, w double")
-
-    def linear_score():
-        return int(
-            lm.score_linear(docs, w, _LIN_BIAS, _LIN_BUCKETS)
-            .agg(F.sum(F.when(F.col("prob") > 0.5, 1).otherwise(0)))
-            .collect()[0][0]
-        )
-
-    from bigdata_commerce_spark.operators import dupspans as _ds
-    from bigdata_commerce_spark.operators import text as _text
-
-    def tfidf():
-        return int(
-            _text.tfidf_top_terms(docs, k=5)
-            .agg(F.count(F.lit(1)))
-            .collect()[0][0]
-        )
-
-    def phrase_tags():
-        return int(
-            _ds.tag_phrases(docs, ["order fast", "window join", "big order scan"])
-            .agg(F.count(F.lit(1)))
-            .collect()[0][0]
-        )
-
-    def contam():
-        bench = docs.where(F.col("doc_id") % 40 == 7)
-        corpus = docs.where(F.col("doc_id") % 40 != 7)
-        return int(
-            _ds.contaminated_spans(corpus, bench, window=8)
-            .agg(F.coalesce(F.sum("span_tokens"), F.lit(0)))
-            .collect()[0][0]
-        )
-
-    from bigdata_commerce_spark.operators.drift import embedding_centroid_drift
-    from bigdata_commerce_spark.operators.mixing import upsample_epochs
-    from bigdata_commerce_spark.operators.profile import join_key_overlap
-    from bigdata_commerce_spark.operators.seqpairs import next_event_examples
-
-    emb = spark.read.parquet(emb_path)
-    ev = spark.read.parquet(ev_path)
-
-    def centroid_drift():
-        return int(
-            embedding_centroid_drift(
-                emb.where(F.col("vec_id") % 2 == 0),
-                emb.where(F.col("vec_id") % 2 == 1),
-            )
-            .agg(F.count(F.lit(1)))
-            .collect()[0][0]
-        )
-
-    def funnel():
-        return int(
-            text_ops_funnel(docs).agg(F.sum("n_raw")).collect()[0][0]
-        )
-
-    def upsample():
-        return int(
-            upsample_epochs(
-                docs.select("doc_id", "source"),
-                {"src1": 2.0, "src2": 2.5, "src3": 0.4},
-            ).count()
-        )
-
-    def key_overlap():
-        return int(
-            join_key_overlap(ev, ev.select("user_id"), "user_id", "user_id")
-            .collect()[0]["matched_keys"]
-        )
-
-    def seqpairs():
-        return int(next_event_examples(ev, context_len=3).count())
-
-    def text_ops_funnel(d):
-        from bigdata_commerce_spark.operators.text import curation_funnel
-
-        return curation_funnel(d)
-
-    return {
-        "dupspans_detect": spans,
-        "dupspans_scrub": scrub,
-        "linear_score": linear_score,
-        "tfidf_keywords": tfidf,
-        "phrase_tags": phrase_tags,
-        "contam_spans": contam,
-        "centroid_drift": centroid_drift,
-        "curation_funnel": funnel,
-        "upsample_epochs": upsample,
-        "key_overlap": key_overlap,
-        "next_event_examples": seqpairs,
-    }
-
-
-def round5e_probes(spark, ord_path: str, cust_path: str, ev_path: str, emb_path: str):
-    """The commerce-classics wave: SCD2 point-in-time join, RFM
-    segmentation, time-decayed scores, VARIANT extraction, projected
-    IVF. Consumed through output aggregates (the catalog probe
-    discipline)."""
-    import datetime as dt
-
-    from bigdata_commerce_spark.functions.semistructured import variant_extract
-    from bigdata_commerce_spark.operators.rfm import rfm_scores
-    from bigdata_commerce_spark.operators.scd2 import changes_to_scd2, scd2_join
-    from bigdata_commerce_spark.operators.similarity import ivf_projected_topk
-    from bigdata_commerce_spark.operators.timeseries import decayed_sum_per_key
-
-    orders = spark.read.parquet(ord_path)
-    cust = spark.read.parquet(cust_path)
-    ev = spark.read.parquet(ev_path)
-    emb = spark.read.parquet(emb_path)
-
-    def scd2():
-        chg = cust.select(
-            "c_custkey",
-            F.lit("1992-01-01").cast("date").alias("ts"),
-            F.col("c_mktsegment").alias("segment"),
-        ).unionByName(
-            cust.select(
-                "c_custkey",
-                F.lit("1995-06-01").cast("date").alias("ts"),
-                F.concat(F.col("c_mktsegment"), F.lit("_V2")).alias("segment"),
-            )
-        )
-        dim = changes_to_scd2(chg, ["c_custkey"], "ts")
-        o = orders.withColumnRenamed("o_custkey", "c_custkey")
-        return int(
-            scd2_join(o, dim, ["c_custkey"], "o_orderdate")
-            .agg(F.count("segment"))
-            .collect()[0][0]
-        )
-
-    def rfm():
-        return int(
-            rfm_scores(orders).agg(F.count(F.lit(1))).collect()[0][0]
-        )
-
-    def decayed():
-        return int(
-            decayed_sum_per_key(ev, 86400.0 * 7, dt.datetime(2024, 3, 1))
-            .agg(F.count(F.lit(1)))
-            .collect()[0][0]
-        )
-
-    def variant():
-        return int(
-            variant_extract(ev, "props", {"ad_id": ("$.k", "int")})
-            .agg(F.count("ad_id"))
-            .collect()[0][0]
-        )
-
-    def ivf_proj():
-        return int(
-            ivf_projected_topk(emb, emb.where("vec_id % 200 = 3"), k=5)
-            .agg(F.count(F.lit(1)))
-            .collect()[0][0]
-        )
-
-    return {
-        "scd2_join": scd2,
-        "rfm_scores": rfm,
-        "decayed_sum": decayed,
-        "variant_extract": variant,
-        "ivf_projected": ivf_proj,
-    }
-
-
-def round5f_probes(spark, li_path: str, ev_path: str):
-    """Robust/sufficient-statistics wave: winsorize, median/MAD
-    anomaly flags, pairwise correlation, per-key OLS trend. Consumed
-    through output aggregates (the catalog probe discipline)."""
-    from bigdata_commerce_spark.operators.robust import (
-        robust_flag_anomalies,
-        winsorize,
-    )
-    from bigdata_commerce_spark.operators.stats import corr_matrix, trend_per_key
-
-    li = spark.read.parquet(li_path)
-    ev = spark.read.parquet(ev_path)
-    daily = (
-        ev.withColumn("bucket", F.floor(F.unix_timestamp("ts") / 86400).cast("bigint"))
-        .groupBy("user_id", "bucket")
-        .agg(F.round(F.sum("value"), 2).alias("value"))
-    )
-
-    def wins():
-        return int(
-            winsorize(ev, ["value"], 0.05, 0.95, group_col="event_type")
-            .agg(F.count("value_w"))
-            .collect()[0][0]
-        )
-
-    def mad():
-        return int(
-            robust_flag_anomalies(daily, "user_id", "value", z_threshold=3.0)
-            .agg(F.sum(F.col("is_anomaly").cast("long")))
-            .collect()[0][0]
-        )
-
-    def corr():
-        return int(
-            corr_matrix(li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
-            .agg(F.count("corr"))
-            .collect()[0][0]
-        )
-
-    def trend():
-        return int(
-            trend_per_key(daily, "user_id", "bucket", "value")
-            .agg(F.count("slope"))
-            .collect()[0][0]
-        )
-
-    return {
-        "winsorize": wins,
-        "robust_mad_flags": mad,
-        "corr_matrix": corr,
-        "trend_per_key": trend,
-    }
-
 
 def run_probe(pairs: dict, headline: str, labels: tuple[str, str] = ("1x", "10x")) -> dict:
     a, b = labels
@@ -874,1339 +242,45 @@ def run_probe(pairs: dict, headline: str, labels: tuple[str, str] = ("1x", "10x"
     return out
 
 
-def r12opt_probes(spark, sf1: str, sf10: str) -> dict:
-    """Round-12 OPTIMIZATION evidence at 10x data — two probe sets:
-
-    1. pre-vs-post at 10x: the pre-optimization expression/plan forms
-       (reconstructed inline, byte-identical to the e68fdb9^/30e02dd^
-       code) against the shipped forms, so the round's claimed wins
-       are measured where they matter, not only at sf0.1;
-    2. 1x-vs-10x scaling of the shipped forms: the rewritten
-       operators must stay ~linear (ratio near 10x = scan/CPU-bound,
-       the map-side design intent).
-    """
-    from bigdata_commerce_spark.operators import text as text_ops
-    from bigdata_commerce_spark.operators.range_join import range_join
-    from bigdata_commerce_spark.operators.rollup_hierarchy import rollup_ladder
+def resolve_queries(argv: list[str]) -> dict:
+    """Map the comma-separated names in ``argv`` to registry functions.
+    Exits non-zero naming the bad input before any Spark session or
+    corpus exists."""
+    usage = "usage: python scale_probe.py name1,name2,..."
+    if len(argv) != 1:
+        sys.exit(usage)
+    names = argv[0].split(",")
+    if any(not n.strip() for n in names):
+        sys.exit(f"scale_probe: empty query name in {argv[0]!r}; {usage}")
     from bigdata_commerce_spark.plans import QUERIES, TWIN_QUERIES
-    from bigdata_commerce_spark.plans.catalog import _events
-    from bigdata_commerce_spark.sources.testdata import load_table
 
-    all_q = {**TWIN_QUERIES, **QUERIES}
-
-    # --- pre-optimization replicas (the exact pre-round expressions) ---
-    def _old_stat_exprs(text_col):
-        t = text_ops.tokens(text_col)
-        n_chars = F.length(F.col(text_col))
-        n_tokens = F.size(t)
-        en_stops = text_ops.LANG_STOPWORDS["en"]
-        stop_hits = F.size(F.filter(t, lambda x: x.isin(*en_stops)))
-        punct = F.length(F.regexp_replace(F.col(text_col), text_ops.PUNCT_CLASS, ""))
-        digits = F.length(F.regexp_replace(F.col(text_col), text_ops.DIGIT_CLASS, ""))
-        norm_len = F.length(text_ops.normalize_text(text_col))
-        return [
-            n_chars.alias("n_chars"),
-            n_tokens.alias("n_tokens"),
-            F.round((norm_len - (n_tokens - 1)) / n_tokens, 4).alias("mean_token_len"),
-            F.round(F.try_divide(punct, n_chars), 4).alias("punct_ratio"),
-            F.round(F.try_divide(digits, n_chars), 4).alias("digit_ratio"),
-            F.round(stop_hits / n_tokens, 4).alias("stopword_ratio"),
-        ]
-
-    def _old_lang_pred(text_col):
-        t = text_ops.tokens(text_col)
-        cjk = F.length(
-            F.regexp_replace(F.col(text_col), text_ops.CJK_PATTERN, "")
-        ) < F.length(F.col(text_col))
-        def _hits(stops):
-            # closure factory, NOT a default-arg lambda: the latter
-            # changes arity and filter() then passes (element, index)
-            return F.size(F.filter(t, lambda x: x.isin(*stops)))
-
-        hit_cols = {
-            lang: _hits(stops) for lang, stops in text_ops.LANG_STOPWORDS.items()
-        }
-        best = F.greatest(*[hit_cols[lang] for lang in text_ops.LANG_ORDER])
-        pred = F.when(cjk, F.lit("zh"))
-        for lang in text_ops.LANG_ORDER:
-            pred = pred.when((best > 0) & (hit_cols[lang] == best), F.lit(lang))
-        return pred.otherwise(F.lit("unknown"))
-
-    def old_curate(sf):
-        docs = load_table(spark, "documents", sf)
-        enriched = docs.select(
-            "doc_id",
-            *_old_stat_exprs("text"),
-            _old_lang_pred("text").alias("predicted_lang"),
-            text_ops.fingerprint("text").alias("fp"),
-        ).withColumn("quality", text_ops._quality_expr())
-        kept = enriched.where(
-            (F.col("quality") >= 0.5) & (F.col("predicted_lang") == "en")
-        )
-        return kept.groupBy("fp").agg(
-            F.min("doc_id").alias("doc_id"),
-            F.min_by("quality", "doc_id").alias("quality"),
-            F.min_by("n_tokens", "doc_id").alias("n_tokens"),
-            F.count(F.lit(1)).alias("dup_count"),
-        )
-
-    def old_repetition(sf):
-        docs = load_table(spark, "documents", sf)
-        t = text_ops.tokens("text")
-
-        def dupf(arr):
-            n = F.size(arr)
-            return F.when(
-                n > 0, F.round((n - F.size(F.array_distinct(arr))) / n, 4)
-            ).otherwise(F.lit(0.0))
-
-        barrier = docs.select(
-            "doc_id", F.explode(F.array(F.struct(t.alias("t")))).alias("x")
-        )
-        tb = F.col("x.t")
-
-        def dup_of(n):
-            if n == 1:
-                return dupf(tb)
-            return F.when(
-                F.size(tb) >= n, dupf(text_ops.ngram_fold(tb, n))
-            ).otherwise(F.lit(0.0))
-
-        return barrier.select(
-            "doc_id",
-            F.size(tb).alias("n_tokens"),
-            dup_of(1).alias("dup_token_frac"),
-            dup_of(2).alias("dup_2gram_frac"),
-            dup_of(3).alias("dup_3gram_frac"),
-        )
-
-    def old_launch_counts(sf):
-        ev = _events(spark, sf).select("ad_id", "ts")  # no cache: 2 scans
-        windows = (
-            ev.groupBy("ad_id")
-            .agg(F.min("ts").alias("window_start"))
-            .withColumn("window_end", F.col("window_start") + F.expr("INTERVAL 2 HOURS"))
-        )
-        joined = range_join(
-            ev, windows, ts_col="ts", start_col="window_start",
-            end_col="window_end", key_cols=["ad_id"], bucket_seconds=3600,
-        )
-        return joined.groupBy("ad_id", "window_start", "window_end").agg(
-            F.count(F.lit(1)).alias("events_in_window")
-        )
-
-    def old_ladder(sf):
-        ev = _events(spark, sf)
-        ladder = rollup_ladder(
-            ev, ts_col="ts", key_cols=["province"], value_col="ad_id", persist=False
-        )
-        out = None
-        for lvl, df in ladder.items():
-            tagged = df.select(
-                F.lit(lvl).alias("level"), "bucket", "province", "event_count",
-                F.col("value_sum").cast("bigint").alias("value_sum"),
-            )
-            out = tagged if out is None else out.unionByName(tagged)
-        return out
-
-    def with_objagg(thresh, fn):
-        key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, str(thresh))
-        try:
-            return fn()
-        finally:
-            spark.conf.set(key, prev)
-
-    pre_post = {
-        "curate_text_binding": (
-            lambda: len(old_curate(sf10).collect()),
-            lambda: len(all_q["corpus_curation"](spark, sf10).collect()),
-        ),
-        "repetition_binding": (
-            lambda: len(old_repetition(sf10).collect()),
-            lambda: len(all_q["repetition_stats"](spark, sf10).collect()),
-        ),
-        "launch_window_cache": (
-            lambda: len(old_launch_counts(sf10).collect()),
-            lambda: len(all_q["ad_launch_window_counts"](spark, sf10).collect()),
-        ),
-        "rollup_ladder_scans": (
-            lambda: len(old_ladder(sf10).collect()),
-            lambda: len(all_q["event_rollup_ladder"](spark, sf10).collect()),
-        ),
-        "objagg_fallback_region_top3": (
-            lambda: with_objagg(
-                128, lambda: len(all_q["region_top3_parts"](spark, sf10).collect())
-            ),
-            lambda: len(all_q["region_top3_parts"](spark, sf10).collect()),
-        ),
-    }
-    out_pre = run_probe(pre_post, "r12opt_pre_vs_post_10x", labels=("pre", "post"))
-
-    scaling = {
-        name: (
-            lambda n=name: len(all_q[n](spark, sf1).collect()),
-            lambda n=name: len(all_q[n](spark, sf10).collect()),
-        )
-        for name in (
-            "corpus_curation",
-            "lang_id",
-            "repetition_stats",
-            "text_quality_score",
-            "ad_launch_window_counts",
-            "event_rollup_ladder",
-            "region_top3_parts",
-        )
-    }
-    out_scale = run_probe(scaling, "r12opt_scaling_1x_vs_10x")
-    return {"metric": "r12opt", "pre_vs_post_10x": out_pre, "scaling": out_scale}
-
-
-def round10_phash_probes(spark) -> dict:
-    """Round-10 (verdict item 5): the production-width 16x16 -> 256-bit
-    real-decode aHash, banding vs brute force at growing corpus sizes
-    — where is the crossover on the REAL seam (decoded pixels, 4-word
-    hashes, array-keyed band joins)?
-
-    Corpus: binary-valued 16x16 BMP/PPM images (bits sit at +-85 from
-    the mean, so cell flips ARE hash-bit flips); ~25% are near-dup
-    variants of an earlier base at hamming 1-3, the rest independent.
-    The hash frame is computed ONCE per size and localCheckpointed so
-    both timers measure the pair JOIN, not the Arrow decode kernel
-    (since round 11 the banded op persists its input itself — VERDICT
-    r10 item 3 — so the explicit checkpoint here only keeps the
-    BRUTE-FORCE side honest, which bypasses the banded kernel).
-    Brute force = the open (a < b) nested-loop join + exact hamming;
-    banded = phash_words_hamming_pairs (4 one-word bands at
-    max_hamming=3). Both are consumed through the same aggregate and
-    must agree pair-for-pair (asserted per size)."""
-    import numpy as np
-
-    from bigdata_commerce_spark.operators.codecs import encode_bmp, encode_ppm
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_phash_real_wide,
-        phash_words_hamming_pairs,
-    )
-
-    rng = np.random.default_rng(41)
-    dark, bright = 40, 210
-
-    def build(n: int):
-        payloads = []
-        bases: list[np.ndarray] = []
-        for i in range(n):
-            if bases and rng.random() < 0.25:
-                var = bases[rng.integers(len(bases))].copy()
-                flat = var.reshape(256, 3)
-                for cell in rng.choice(256, rng.integers(1, 4), replace=False):
-                    flat[cell] = bright if flat[cell][0] == dark else dark
-            else:
-                var = (
-                    np.where(rng.random((16, 16, 1)) < 0.5, dark, bright)
-                    .astype(np.uint8)
-                    .repeat(3, axis=2)
-                )
-                bases.append(var)
-            payloads.append(encode_bmp(var) if i % 2 == 0 else encode_ppm(var))
-        df = spark.createDataFrame(
-            [(i, bytearray(p)) for i, p in enumerate(payloads)],
-            "media_id long, content binary",
-        ).repartition(32)
-        return media_phash_real_wide(df, hash_size=16).localCheckpoint(eager=True)
-
-    def consume(pairs_df) -> tuple[int, int]:
-        row = pairs_df.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("hamming").alias("s")
-        ).collect()[0]
-        return int(row["n"]), int(row["s"] or 0)
-
-    out = {"metric": "scale_probe_phash256_banding_crossover", "sizes": {}}
-    for n in (500, 2000, 8000, 24000):
-        h = build(n)
-        banded = phash_words_hamming_pairs(h, n_words=4, max_hamming=3)
-        a = h.select(F.col("media_id").alias("media_a"), F.col("phash_words").alias("__pa"))
-        b = h.select(F.col("media_id").alias("media_b"), F.col("phash_words").alias("__pb"))
-        hamming = F.aggregate(
-            F.zip_with(
-                F.col("__pa"),
-                F.col("__pb"),
-                lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).cast("int")
-        brute = (
-            a.join(b, F.col("media_a") < F.col("media_b"))
-            .select("media_a", "media_b", hamming.alias("hamming"))
-            .where(F.col("hamming") <= 3)
-        )
-        consume(banded), consume(brute)  # warm both plans
-        t0 = time.perf_counter()
-        nb = consume(banded)
-        wall_band = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        nf = consume(brute)
-        wall_brute = time.perf_counter() - t0
-        assert nb == nf, f"banded {nb} != brute {nf} at n={n}"
-        out["sizes"][n] = {
-            "pairs": nb[0],
-            "wall_banded": round(wall_band, 2),
-            "wall_brute": round(wall_brute, 2),
-            "brute_over_banded": round(wall_brute / wall_band, 2),
-        }
-        print(
-            f"# phash256 n={n}: banded {wall_band:.2f}s vs brute "
-            f"{wall_brute:.2f}s ({wall_brute / wall_band:.2f}x), {nb[0]} pairs",
-            file=sys.stderr,
-        )
-    return out
-
-
-def round11_dct_probes(spark) -> dict:
-    """Round-11 (verdict item 6 follow-through): does the DCT matmul
-    in ``media_phash_dct`` cost anything next to the decode, on the
-    same Arrow seam at growing corpus sizes? The claim in the operator
-    docstring — "decode still dominates" — measured instead of
-    asserted: the SAME images hashed by the 16x16 average hash
-    (``media_phash_real_wide``: decode + resize + mean threshold) and
-    by the 256-bit DCT pHash (``media_phash_dct``: decode + resize to
-    64x64 + dense (64,64) DCT matmuls + median threshold), both
-    consumed by the same checksum aggregate so the timers compare
-    kernel cost, not plan shape. The DCT path resizes to a 4x-larger
-    grid AND pays two matrix multiplies, so its overhead is the upper
-    bound for any production DCT width."""
-    import numpy as np
-
-    from bigdata_commerce_spark.operators.codecs import encode_bmp, encode_ppm
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_phash_dct,
-        media_phash_real_wide,
-    )
-
-    rng = np.random.default_rng(43)
-    dark, bright = 40, 210
-
-    def build(n: int):
-        payloads = []
-        for i in range(n):
-            img = (
-                np.where(rng.random((16, 16, 1)) < 0.5, dark, bright)
-                .astype(np.uint8)
-                .repeat(3, axis=2)
-            )
-            payloads.append(encode_bmp(img) if i % 2 == 0 else encode_ppm(img))
-        return spark.createDataFrame(
-            [(i, bytearray(p)) for i, p in enumerate(payloads)],
-            "media_id long, content binary",
-        ).repartition(32).localCheckpoint(eager=True)
-
-    def consume(h) -> tuple[int, int]:
-        # popcount checksum: summing raw words overflows int64 (ANSI)
-        row = h.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.aggregate(
-                "phash_words",
-                F.lit(0).cast("long"),
-                lambda a, v: a + F.bit_count(v),
-            )).alias("s"),
-        ).collect()[0]
-        return int(row["n"]), int(row["s"] or 0)
-
-    out = {"metric": "scale_probe_dct_vs_ahash_kernel", "sizes": {}}
-    for n in (2000, 8000, 24000):
-        df = build(n)
-        ahash = media_phash_real_wide(df, hash_size=16)
-        dct = media_phash_dct(df, hash_size=16)
-        consume(ahash), consume(dct)  # warm both kernels' workers
-        t0 = time.perf_counter()
-        na = consume(ahash)
-        wall_a = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        nd = consume(dct)
-        wall_d = time.perf_counter() - t0
-        assert na[0] == nd[0] == n
-        out["sizes"][n] = {
-            "wall_ahash": round(wall_a, 2),
-            "wall_dct": round(wall_d, 2),
-            "dct_over_ahash": round(wall_d / wall_a, 2),
-        }
-        print(
-            f"# dct-vs-ahash n={n}: aHash {wall_a:.2f}s vs DCT "
-            f"{wall_d:.2f}s ({wall_d / wall_a:.2f}x)",
-            file=sys.stderr,
-        )
-    return out
-
-
-# ------------------------------------------------- skew-stress suite
-
-HOT_USER = -777  # outside the real user_id domain
-
-
-def build_skew_corpus(spark, sf10: str) -> tuple[str, str, str]:
-    """Uniform/skewed twins of the 10x events table + a user dim,
-    all landed through the same 32-file writer so walls compare data
-    distribution, not layout.
-
-    The base is the 10x events fanned ANOTHER 10x (id-remapped copies,
-    10M rows, 150k users): at 1M rows the hot partition sorts in
-    ~0.1 s and per-task overhead swamps the skew term — a first probe
-    run measured every ratio at 0.93-1.15x, i.e. noise. At 10M rows
-    the hot key is ~3M rows on one reducer and the skew term dominates
-    where it really would.
-
-    The skewed twin plants one Zipfian-style hot key: every row with
-    event_id % 10 < 3 (~30% of all rows) is reassigned to HOT_USER —
-    the one-user-owns-a-third-of-traffic shape (bot account, default
-    id, null-substitute) that breaks naive key-partitioned stages at
-    100 TB. The uniform twin runs the SAME projection with a
-    never-true condition, so both sides' files come from identical
-    plans. The dim carries every user of either side plus a sha256
-    payload column, and broadcast is disabled in the join probes so
-    the sort-merge reducer path (where key skew actually lands) is
-    what gets measured."""
-    out = SCRATCH / "skew"
-    done = out / "_BUILT"
-    ev_unif = str(out / "events_unif.parquet")
-    ev_skew = str(out / "events_skew.parquet")
-    user_dim = str(out / "user_dim.parquet")
-    if done.exists():
-        return ev_unif, ev_skew, user_dim
-    shutil.rmtree(out, ignore_errors=True)
-    out.mkdir(parents=True)
-    base = spark.read.parquet(os.path.join(sf10, "events.parquet"))
-    strides = {
-        c: int(base.agg(F.max(c)).collect()[0][0]) + 1
-        for c in ("event_id", "user_id")
-    }
-    copies = spark.range(COPIES).withColumnRenamed("id", "copy")
-    ev = base.crossJoin(F.broadcast(copies))
-    for c, stride in strides.items():
-        ev = ev.withColumn(c, F.col(c) + F.col("copy") * F.lit(stride))
-    ev = ev.drop("copy")
-
-    def land(df, path):
-        df.repartition(32).write.parquet(path)
-
-    def reassign(threshold: int):
-        return ev.withColumn(
-            "user_id",
-            F.when(F.col("event_id") % 10 < threshold, F.lit(HOT_USER)).otherwise(
-                F.col("user_id")
-            ),
-        )
-
-    land(reassign(-1), ev_unif)  # never-true: uniform, identical plan
-    land(reassign(3), ev_skew)  # ~30% of rows on one key
-    users = (
-        spark.read.parquet(ev_unif)
-        .select("user_id")
-        .union(spark.read.parquet(ev_skew).select("user_id"))
-        .distinct()
-    )
-    land(
-        users.withColumn("segment", F.pmod("user_id", F.lit(100)).cast("int"))
-        .withColumn("profile", F.sha2(F.col("user_id").cast("string"), 256)),
-        user_dim,
-    )
-    done.touch()
-    return ev_unif, ev_skew, user_dim
-
-
-def skew_probes(spark, ev_path: str, dim_path: str):
-    """One entry per skew-relevant execution shape. Thresholds inside
-    the join probes are lowered so AQE's skew split fires at the local
-    toy scale (the hot partition here is ~10 MB; production defaults —
-    256 MB / 5x median — fire on real skew without tuning)."""
-    from pyspark.sql import Window
-
-    from bigdata_commerce_spark.operators.mixing import rate_cap_per_key_bucket
-    from bigdata_commerce_spark.operators.salted import salted_count, salted_join
-
-    ev = spark.read.parquet(ev_path)
-    dim = spark.read.parquet(dim_path)
-
-    def with_conf(conf: dict, fn):
-        def wrapped():
-            old = {k: spark.conf.get(k) for k in conf}
-            for k, v in conf.items():
-                spark.conf.set(k, v)
-            try:
-                return fn()
-            finally:
-                for k, v in old.items():
-                    spark.conf.set(k, v)
-
-        return wrapped
-
-    smj = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
-    aqe_tuned = {
-        **smj,
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1MB",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1MB",
-    }
-    aqe_off = {**aqe_tuned, "spark.sql.adaptive.skewJoin.enabled": "false"}
-
-    def join_fn():
-        # payload columns on both sides so the join moves real bytes
-        # (count() alone would let column pruning empty the shuffle)
-        return (
-            ev.join(dim, "user_id")
-            .agg(F.sum(F.length("profile")) + F.sum(F.length("props")))
-            .collect()[0][0]
-        )
-
-    def window_fn():
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        return (
-            ev.withColumn("r", F.row_number().over(w)).where("r <= 5").count()
-        )
-
-    def cumsum_fn():
-        # the REAL single-key-window anti-pattern: a running frame
-        # cannot be saved by WindowGroupLimit (unlike rank<=k, which
-        # Spark 4 pushes below the shuffle as a per-map-partition
-        # top-k), so the hot key's 3M rows sort and scan on ONE task
-        w = (
-            Window.partitionBy("user_id")
-            .orderBy("ts", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return (
-            ev.withColumn("rt", F.sum("value").over(w))
-            .agg(F.sum("rt"))
-            .collect()[0][0]
-        )
-
-    def running_sum_fn(bucket_seconds):
-        # the operator form of the same cumulative sum (exact decimal,
-        # two-level prefix path when bucketed)
-        from bigdata_commerce_spark.operators.running import running_sum_per_key
-
-        return float(
-            running_sum_per_key(
-                ev, "user_id", "ts", "value", "rt",
-                bucket_seconds=bucket_seconds, tiebreak_col="event_id",
-            )
-            .agg(F.sum("rt"))
-            .collect()[0][0]
-        )
-
-    from bigdata_commerce_spark.operators.asof import asof_join
-    from bigdata_commerce_spark.operators.sessionize import sessionize
-
-    def asof_fn(bucket_seconds):
-        # probe side = ALL events (the hot key then owns 3M window
-        # rows — a click/purchase-only probe leaves walls too small
-        # for the skew term to dominate at this scale)
-        clicks = ev.where(F.col("event_type") == "click").select(
-            "user_id", "ts", "value"
-        )
-        probes_side = ev.select("event_id", "user_id", "ts")
-        # count the MATCHED payloads, not the rows: a bare count()
-        # lets Catalyst prune the running-last window away entirely
-        # (the side filter doesn't depend on it) and the probe then
-        # times an empty plan — measured 0.36s flat for 10M rows
-        return (
-            asof_join(
-                probes_side,
-                clicks,
-                on="user_id",
-                left_ts="ts",
-                right_ts="ts",
-                payload_cols=["value"],
-                bucket_seconds=bucket_seconds,
-            )
-            .agg(F.count("asof_value"))
-            .collect()[0][0]
-        )
-
-    def sessionize_fn(bucket_seconds):
-        # max() forces session-id computation for every row without a
-        # second big shuffle on top
-        return (
-            sessionize(ev, gap_minutes=30, bucket_seconds=bucket_seconds)
-            .agg(F.max("session_id"))
-            .collect()[0][0]
-        )
-
-    return {
-        "groupby_count": lambda: ev.groupBy("user_id").count().count(),
-        "asof_exact": lambda: asof_fn(None),
-        "asof_bucketed_1h": lambda: asof_fn(3600),
-        "sessionize_exact": lambda: sessionize_fn(None),
-        "sessionize_bucketed_1h": lambda: sessionize_fn(3600),
-        "salted_count_16": lambda: salted_count(
-            ev, ["user_id"], F.col("event_id"), 16
-        ).count(),
-        "window_per_key_top5": window_fn,
-        "window_cumsum_per_key": cumsum_fn,
-        "running_sum_exact": lambda: running_sum_fn(None),
-        "running_sum_bucketed_1h": lambda: running_sum_fn(3600),
-        "rate_cap_bucketed": lambda: rate_cap_per_key_bucket(
-            ev, 5, 3600, tiebreak_col="event_id"
-        ).count(),
-        "smj_aqe_skew_on": with_conf(aqe_tuned, join_fn),
-        "smj_aqe_skew_off": with_conf(aqe_off, join_fn),
-        "salted_join_16": with_conf(
-            smj,
-            lambda: salted_join(
-                ev, dim, ["user_id"], F.col("event_id"), salt_buckets=16
-            )
-            .agg(F.sum(F.length("profile")) + F.sum(F.length("props")))
-            .collect()[0][0],
-        ),
-    }
-
-
-
-def round7_probes(spark, docs_path: str):
-    """Round-7 published curation recipes. The decorrelated 10x
-    corpus mutates every third token, so bigram vocabularies GROW with
-    the copies (unlike a verbatim copy) — the LM ops probe the honest
-    larger-model case. Consumed through output aggregates."""
-    from bigdata_commerce_spark.operators import lm_quality, text
-
-    docs = spark.read.parquet(docs_path)
-
-    def gopher():
-        return int(
-            text.gopher_quality_flags(docs)
-            .agg(F.sum(F.col("passes_gopher").cast("long")) + F.sum("n_words"))
-            .collect()[0][0]
-        )
-
-    def c4():
-        out = text.c4_line_filter(docs)
-        return int(
-            out.agg(
-                F.sum("n_lines_kept")
-                + F.sum(F.coalesce(F.length("text_clean"), F.lit(0)))
-            ).collect()[0][0]
-        )
-
-    def ccnet():
-        return int(
-            lm_quality.perplexity_buckets(docs)
-            .groupBy("bucket")
-            .count()
-            .agg(F.sum("count"))
-            .collect()[0][0]
-        )
-
-    def dsir():
-        return int(
-            lm_quality.dsir_logratio(docs, docs.where("lang = 'en'"))
-            .agg(F.sum(F.col("keep").cast("long")) + F.sum("n_bigrams"))
-            .collect()[0][0]
-        )
-
-    def top_ngram():
-        return int(
-            text.top_ngram_char_fraction(docs)
-            .agg(F.sum("top_count"))
-            .collect()[0][0]
-        )
-
-    return {
-        "gopher_quality_flags": gopher,
-        "c4_line_filter": c4,
-        "ccnet_perplexity_buckets": ccnet,
-        "dsir_importance": dsir,
-        "top_ngram_coverage": top_ngram,
-    }
-
-
-def round8_probes(spark, docs_path: str, emb_path: str):
-    """Round-8 encoding-repair wave. The synthetic corpus is clean, so
-    5% of documents get a mojibake suffix appended in-plan (the
-    realistic flagged-sliver regime the kernels are designed for) —
-    the probe then measures: the fast chained-replace path over the
-    WHOLE corpus, and the exact codec kernel whose vectorized
-    short-circuit should keep the 95% clean majority at Arrow
-    passthrough speed. Consumed through output aggregates."""
-    from bigdata_commerce_spark.operators import encoding_repair
-
-    moji = " Ã©lÃ©phant â€œquotedâ€\x9d Ã¼ber â€” cafÃ©"
-    docs = spark.read.parquet(docs_path).withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 20 == 0, F.concat(F.coalesce("text", F.lit("")), F.lit(moji))
-        ).otherwise(F.col("text")),
-    )
-
-    def fast():
-        return int(
-            encoding_repair.repair_encoding(docs)
-            .agg(
-                F.sum(F.col("was_repaired").cast("long"))
-                + F.sum(F.coalesce(F.length("text_repaired"), F.lit(0)))
-            )
-            .collect()[0][0]
-        )
-
-    def exact():
-        return int(
-            encoding_repair.repair_encoding_exact(docs)
-            .agg(
-                F.sum(F.col("was_repaired").cast("long"))
-                + F.sum(F.coalesce(F.length("text_repaired"), F.lit(0)))
-            )
-            .collect()[0][0]
-        )
-
-    from bigdata_commerce_spark.operators import similarity
-
-    emb = spark.read.parquet(emb_path)
-
-    n_vecs = emb.count()
-
-    def semdedup():
-        # the paper's scale path: clusters GROW with the corpus
-        # (LAION runs 50k), keeping cell size ~constant so the
-        # within-cell self-join stays linear in corpus size; a fixed
-        # n_centroids would grow cells 10x and the join 100x/cells
-        # (measured 4.95x wall before this scaling). ~250 vecs/cell.
-        # Consumed through output aggregates (catalog probe
-        # discipline).
-        return int(
-            similarity.semdedup(emb, tau=0.9, n_centroids=max(16, n_vecs // 250))
-            .agg(
-                F.sum(F.col("kept").cast("long"))
-                + F.count(F.lit(1))
-            )
-            .collect()[0][0]
-        )
-
-    return {
-        "repair_encoding_fast": fast,
-        "repair_encoding_exact": exact,
-        "embedding_semdedup": semdedup,
-    }
-
-
-def plant_hot_blob(emb):
-    """Semantic-skew twin of an embeddings frame: every 5th vector
-    becomes a near-copy of one constant direction (pairwise cosine
-    ~1, tiny deterministic jitter), so ALL of them share one best
-    centroid — the duplicate-heavy blob that defeats SemDeDup's
-    corpus-proportional centroid dial (near-identical vectors pick
-    the same cell no matter how many centroids exist)."""
-    base = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda i: F.lit(0.1) + i.cast("double") * F.lit(0.001),
-    )
-    jitter = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda i: (
-            F.pmod(F.xxhash64(F.col("vec_id"), i), F.lit(1000)).cast("double")
-            * F.lit(1e-7)
-        ),
-    )
-    hot_vec = F.zip_with(base, jitter, lambda b, j: (b + j).cast("float"))
-    return emb.withColumn(
-        "embedding",
-        F.when(F.col("vec_id") % 5 == 0, hot_vec).otherwise(F.col("embedding")),
-    )
-
-
-def round5g_probes(spark, docs_path: str):
-    """URL-curation wave: canonical-URL projection, URL-level dedup,
-    per-domain host report (operators/urltools.py). URLs are derived
-    from (source, doc_id) with the catalog twin's expression, so the
-    probe measures the operators, not a synthetic reader. Consumed
-    through output aggregates (the catalog probe discipline)."""
-    from bigdata_commerce_spark.operators import urltools
-    from bigdata_commerce_spark.plans.catalog_dataops import _messy_url
-
-    docs = spark.read.parquet(docs_path).withColumn("url", _messy_url())
-
-    def canon():
-        out = urltools.with_registered_domain(
-            urltools.with_canonical_url(docs)
-        )
-        return int(
-            out.agg(
-                F.sum(F.length("canonical_url"))
-                + F.sum(F.length("registered_domain"))
-            ).collect()[0][0]
-        )
-
-    def url_dedup():
-        return int(urltools.dedup_by_canonical_url(docs).count())
-
-    def hosts():
-        return int(
-            urltools.host_report(docs).agg(F.sum("n_urls")).collect()[0][0]
-        )
-
-    def blocklist():
-        blocked = spark.createDataFrame([("example.co.uk",)], "domain string")
-        return int(urltools.filter_blocked_domains(docs, blocked).count())
-
-    def idna_prepass():
-        # ASCII corpus through the IDNA pandas-UDF pre-pass, then the
-        # same canonical+domain aggregate as `canon`: the wall delta
-        # vs url_canonicalize IS the pre-pass's passthrough overhead
-        # (the UDF's vectorized ASCII short-circuit claim, measured).
-        out = urltools.with_registered_domain(
-            urltools.with_canonical_url(urltools.with_idna_host(docs))
-        )
-        return int(
-            out.agg(
-                F.sum(F.length("canonical_url"))
-                + F.sum(F.length("registered_domain"))
-            ).collect()[0][0]
-        )
-
-    return {
-        "url_canonicalize": canon,
-        "url_dedup": url_dedup,
-        "url_host_report": hosts,
-        "url_blocklist": blocklist,
-        "idna_prepass": idna_prepass,
-    }
-
-
-def mixing_budget_probes(spark):
-    """token_budget_per_source (r9): decorrelated 10x ratio on a
-    synthetic NARROW frame — isolates the one shuffle + running-sum
-    window the operator adds (the upstream tokenizer is probed with
-    the text family) — plus the mega-source escape measured: the
-    exact prefix on a 90%-skewed corpus next to mixture_sample
-    pre-thin + exact, proven bit-identical inline before timing
-    (same-salt hash-order-prefix property, pinned in
-    tests/test_weighted_sample.py)."""
-    from bigdata_commerce_spark.operators.mixing import (
-        mixture_sample,
-        token_budget_per_source,
-    )
-
-    budget = 50_000
-
-    def frame(n, skew):
-        uni = F.concat(
-            F.lit("s"),
-            F.pmod(F.xxhash64("id", F.lit(7)), F.lit(20)).cast("string"),
-        )
-        src = (
-            F.when(F.pmod(F.xxhash64("id"), F.lit(10)) < 9, F.lit("mega")).otherwise(uni)
-            if skew
-            else uni
-        )
-        return spark.range(n).select(
-            F.col("id").alias("doc_id"),
-            src.alias("source"),
-            (F.pmod(F.col("id") * 53, F.lit(97)) + 1).alias("n_tokens"),
-        )
-
-    def count_run(n, skew):
-        def fn():
-            return token_budget_per_source(frame(n, skew), budget).count()
-
-        return fn
-
-    def exact_skew():
-        return token_budget_per_source(frame(2_000_000, True), budget)
-
-    def prethin():
-        df = frame(2_000_000, True)
-        # keep ~2x budget of the mega source's ~88M estimated tokens
-        frac = 2 * budget / (1_800_000 * 49)
-        return token_budget_per_source(
-            mixture_sample(df, {"mega": frac}, default=1.0), budget
-        )
-
-    out = run_probe(
-        {"token_budget": (count_run(200_000, False), count_run(2_000_000, False))},
-        "scale_probe_10x_ratio_mixing_budget",
-    )
-    got_exact = sorted(map(tuple, exact_skew().collect()))
-    got_thin = sorted(map(tuple, prethin().collect()))
-    assert got_exact == got_thin, (
-        f"pre-thin escape not exact: {len(got_exact)} vs {len(got_thin)} rows"
-    )
-    out["mega_source_escape"] = run_probe(
-        {
-            "skewed_2M_rows": (
-                lambda: exact_skew().count(),
-                lambda: prethin().count(),
-            )
-        },
-        "scale_probe_token_budget_escape",
-        labels=("exact", "prethin"),
-    )["ops"]
-    out["escape_exactness"] = {"rows": len(got_exact), "identical": True}
-    return out
-
-
-def _spill_meter(spark):
-    """Cumulative (memoryBytesSpilled, diskBytesSpilled) across all
-    completed stages, via the UI REST API (the session must run with
-    spark.ui.enabled=true). Callers diff two readings around an op."""
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-
-    def read() -> tuple[int, int]:
-        url = f"{ui}/api/v1/applications/{app}/stages?status=COMPLETE"
-        with urllib.request.urlopen(url) as r:
-            stages = json.load(r)
-        return (
-            sum(s.get("memoryBytesSpilled", 0) for s in stages),
-            sum(s.get("diskBytesSpilled", 0) for s in stages),
-        )
-
-    return read
-
-
-def memory_probes(spark, docs10: str, ev_path: str) -> dict:
-    """Memory-pressure probe (round-6 verdict item 4): the heaviest
-    operator families under a capped executor heap, with spill bytes
-    read from the stage metrics. Run the suite twice —
-    SPARK_DRIVER_MEMORY=8g (the tuned default: no spill expected) and
-    a hard cap like 2g — and compare wall degradation vs spill volume.
-    In local mode the driver heap IS the executor heap, so the cap
-    models a 100x input-to-memory ratio: execution memory per task =
-    heap * memory.fraction / 32 threads."""
-    from bigdata_commerce_spark.operators.sessionize import sessionize
-
-    docs = spark.read.parquet(docs10)
-
-    # Fan the 10M-row events another 5x (50M rows, ~5 GB of payload
-    # through the sessionize sort) — the '100x-class' input-to-memory
-    # ratio a capped heap is probed against. Built once.
-    ev50 = str(SCRATCH / "events_50m.parquet")
-    if not os.path.exists(os.path.join(ev50, "_SUCCESS")):
-        base = spark.read.parquet(ev_path)
-        stride = int(base.agg(F.max("event_id")).collect()[0][0]) + 1
-        copies = spark.range(5).withColumnRenamed("id", "copy")
-        (
-            base.crossJoin(F.broadcast(copies))
-            .withColumn("event_id", F.col("event_id") + F.col("copy") * F.lit(stride))
-            .drop("copy")
-            .repartition(32)
-            .write.mode("overwrite")
-            .parquet(ev50)
-        )
-    ev = spark.read.parquet(ev50)
-    n_docs, n_ev = docs.count(), ev.count()
-
-    # Every op is consumed through an aggregate over its OUTPUT
-    # columns — a bare count() lets column pruning delete the window/
-    # join work entirely (first draft measured sessionize_exact at
-    # 0.19s for 10M rows: Catalyst had pruned the session ids).
-    def session_sum(bucket_seconds):
-        def fn():
-            s = sessionize(ev, gap_minutes=30, bucket_seconds=bucket_seconds)
-            # pmod before the sum: 50M raw xxhash64 values overflow
-            # the ANSI-mode long sum
-            h = F.pmod(F.xxhash64("user_id", "session_id"), F.lit(1_000_000))
-            return int(s.agg(F.sum(h)).collect()[0][0] % 1_000_000)
-
-        return fn
-
-    def minhash():
-        pairs = dedup.minhash_lsh_pairs(docs, num_hashes=8, bands=4, threshold=0.8)
-        return int(pairs.agg(F.sum(F.col("id1") + F.col("id2"))).collect()[0][0])
-
-    def clusters():
-        edges = dedup.jaccard_pairs(docs, threshold=0.8)
-        cc = connected_components(
-            docs.select(F.col("doc_id").alias("id")),
-            edges,
-            node_col="id",
-            small_graph_threshold=0,  # force the distributed tier
-        )
-        return int(cc.agg(F.sum("cluster_id")).collect()[0][0] % 1_000_000)
-
-    ops = {
-        "dedup_minhash_lsh": minhash,
-        "sessionize_exact": session_sum(None),
-        "sessionize_bucketed_1h": session_sum(3600),
-        "dedup_clusters_distributed": clusters,
-    }
-    meter = _spill_meter(spark)
-    out = {
-        "heap": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
-        "rows": {"documents": n_docs, "events": n_ev},
-        "ops": {},
-    }
-    for name, fn in ops.items():
-        fn()  # warm: reader/codegen cost out of the timed run
-        m0, d0 = meter()
-        t0 = time.perf_counter()
-        n = fn()
-        wall = time.perf_counter() - t0
-        m1, d1 = meter()
-        out["ops"][name] = {
-            "wall": round(wall, 2),
-            "rows": n,
-            "spill_mem_mb": round((m1 - m0) / 1048576, 1),
-            "spill_disk_mb": round((d1 - d0) / 1048576, 1),
-        }
-        print(f"# {name}: {wall:.2f}s spill_mem={(m1-m0)/1048576:.0f}MB "
-              f"spill_disk={(d1-d0)/1048576:.0f}MB", file=sys.stderr)
-    return out
+    registry = {**TWIN_QUERIES, **QUERIES}
+    unknown = [n for n in names if n not in registry]
+    if unknown:
+        sys.exit(f"scale_probe: unknown query name(s): {', '.join(unknown)}")
+    return {n: registry[n] for n in names}
 
 
 def main() -> None:
-    suite = sys.argv[1] if len(sys.argv) > 1 else "dedup"
-    spark = get_spark(
-        app_name="scale_probe",
-        # the memory suite reads spill bytes from the UI REST API
-        extra_conf={"spark.ui.enabled": "true"} if suite == "memory" else None,
-    )
+    queries = resolve_queries(sys.argv[1:])
+    from bench import reset_caches
+
+    spark = get_spark(app_name="scale_probe")
     docs10, emb10 = build_corpus(spark)
+    sf1 = build_relational_corpus(spark, docs10, emb10, 1)
+    sf10 = build_relational_corpus(spark, docs10, emb10, COPIES)
 
-    if suite == "relational":
-        # rotation-proof: the probed names may sit in either registry
-        from bigdata_commerce_spark.plans import QUERIES, TWIN_QUERIES
+    def shot(fn, sf_dir: str):
+        # every shot drops the data caches the previous one left, as
+        # in bench.py, so a timed run never rides its warm-up's cache
+        def run() -> int:
+            reset_caches(spark)
+            return len(fn(spark, sf_dir).collect())
 
-        all_q = {**TWIN_QUERIES, **QUERIES}
-        sf1 = build_relational_corpus(spark, docs10, emb10, 1)
-        sf10 = build_relational_corpus(spark, docs10, emb10, COPIES)
-        pairs = {
-            name: (
-                lambda n=name: len(all_q[n](spark, sf1).collect()),
-                lambda n=name: len(all_q[n](spark, sf10).collect()),
-            )
-            for name in RELATIONAL_PROBE
-        }
-        out = run_probe(pairs, "scale_probe_10x_ratio_relational")
-    elif suite == "round12":
-        # the six round-12 catalog additions at 1x vs 10x data — the
-        # standing 10x probe every new operator family gets
-        from bigdata_commerce_spark.plans import QUERIES, TWIN_QUERIES
+        return run
 
-        all_q = {**TWIN_QUERIES, **QUERIES}
-        sf1 = build_relational_corpus(spark, docs10, emb10, 1)
-        sf10 = build_relational_corpus(spark, docs10, emb10, COPIES)
-        names = [
-            "dedup_containment",
-            "length_bucketed_docs",
-            "events_value_ks",
-            "customer_negative_parts",
-            "host_capped_docs",
-            "embedding_ann_recall",
-        ]
-        pairs = {
-            name: (
-                lambda n=name: len(all_q[n](spark, sf1).collect()),
-                lambda n=name: len(all_q[n](spark, sf10).collect()),
-            )
-            for name in names
-        }
-        out = run_probe(pairs, "scale_probe_10x_ratio_round12")
-    elif suite == "round12b":
-        # the round-12 continuation additions at 1x vs 10x data.
-        # customer_kanonymity is excluded by construction: the probe
-        # corpus copies dimension tables verbatim (dims stay
-        # broadcast-sized), so its input does not scale here — its
-        # shape (one hash aggregate keyed by the quasi-identifiers +
-        # a top-k) is the already-probed dedup_exact/topk regime.
-        from bigdata_commerce_spark.plans import QUERIES, TWIN_QUERIES
-
-        all_q = {**TWIN_QUERIES, **QUERIES}
-        sf1 = build_relational_corpus(spark, docs10, emb10, 1)
-        sf10 = build_relational_corpus(spark, docs10, emb10, COPIES)
-        names = [
-            "domain_concentration",
-            "quality_calibration_bins",
-            "preference_pairs",
-            "multitouch_attribution",
-            "campaign_conversion_chi2",
-            "events_value_bootstrap_ci",
-        ]
-        pairs = {
-            name: (
-                lambda n=name: len(all_q[n](spark, sf1).collect()),
-                lambda n=name: len(all_q[n](spark, sf10).collect()),
-            )
-            for name in names
-        }
-        out = run_probe(pairs, "scale_probe_10x_ratio_round12b")
-    elif suite == "round4":
-        sf1 = build_relational_corpus(spark, docs10, emb10, 1)
-        sf10 = build_relational_corpus(spark, docs10, emb10, COPIES)
-        p1 = round4_probes(
-            spark,
-            os.path.join(sf1, "documents.parquet"),
-            os.path.join(sf1, "events.parquet"),
-        )
-        p10 = round4_probes(
-            spark,
-            os.path.join(sf10, "documents.parquet"),
-            os.path.join(sf10, "events.parquet"),
-        )
-        pairs = {name: (p1[name], p10[name]) for name in p1}
-        out = run_probe(pairs, "scale_probe_10x_ratio_round4")
-    elif suite == "skew":
-        sf10 = build_relational_corpus(spark, docs10, emb10, COPIES)
-        ev_unif, ev_skew, user_dim = build_skew_corpus(spark, sf10)
-        p_unif = skew_probes(spark, ev_unif, user_dim)
-        p_skew = skew_probes(spark, ev_skew, user_dim)
-        pairs = {name: (p_unif[name], p_skew[name]) for name in p_unif}
-        out = run_probe(pairs, "scale_probe_skew_ratio", labels=("unif", "skew"))
-        # context for the SCALE.md table: how hot is the planted key
-        from bigdata_commerce_spark.operators.salted import key_skew_report
-
-        rep = key_skew_report(
-            spark.read.parquet(ev_skew), ["user_id"], k=1
-        ).collect()[0]
-        out["planted_skew"] = {
-            "hot_share": float(rep.share),
-            "skew_factor": float(rep.skew_factor),
-            "n_keys": int(rep.n_keys),
-            "total_rows": int(rep.total_rows),
-        }
-    elif suite == "round5b":
-        sf1 = build_relational_corpus(spark, docs10, emb10, 1)
-        p1 = round5b_probes(spark, os.path.join(sf1, "documents.parquet"))
-        p10 = round5b_probes(spark, docs10)
-        pairs = {name: (p1[name], p10[name]) for name in p1}
-        out = run_probe(pairs, "scale_probe_10x_ratio_round5b")
-    elif suite == "round5":
-        sf1 = build_relational_corpus(spark, docs10, emb10, 1)
-        p1 = round5_probes(
-            spark,
-            os.path.join(sf1, "documents.parquet"),
-            os.path.join(sf1, "embeddings.parquet"),
-        )
-        p10 = round5_probes(spark, docs10, emb10)
-        pairs = {name: (p1[name], p10[name]) for name in p1}
-        out = run_probe(pairs, "scale_probe_10x_ratio_round5")
-    elif suite == "round5c":
-        sf1 = build_relational_corpus(spark, docs10, emb10, 1)
-        sf10 = build_relational_corpus(spark, docs10, emb10, COPIES)
-
-        def paths(d):
-            return (
-                os.path.join(d, "documents.parquet"),
-                os.path.join(d, "embeddings.parquet"),
-                os.path.join(d, "events.parquet"),
-            )
-
-        p1 = round5c_probes(spark, *paths(sf1))
-        p10 = round5c_probes(spark, *paths(sf10))
-        pairs = {name: (p1[name], p10[name]) for name in p1}
-        out = run_probe(pairs, "scale_probe_10x_ratio_round5c")
-
-        # Skew add-on: bucketized EWMA under the planted 30%-hot key
-        # (10M rows, ~3M on one user). The exact path is deliberately
-        # NOT run here — a 3M-row sequential fold in one task is the
-        # documented anti-pattern the bucketized path exists to avoid;
-        # 60s buckets keep every fold's array bounded (~1k rows).
-        from bigdata_commerce_spark.operators.timeseries import ewma_per_key
-
-        ev_unif, ev_skew, _ = build_skew_corpus(spark, sf10)
-
-        def ewma_skew_probe(path):
-            def fn():
-                return ewma_per_key(
-                    spark.read.parquet(path),
-                    0.1,
-                    tiebreak_col="event_id",
-                    bucket_seconds=60,
-                ).count()
-
-            return fn
-
-        out["skew_addon"] = run_probe(
-            {"ewma_bucketized_60s": (ewma_skew_probe(ev_unif), ewma_skew_probe(ev_skew))},
-            "ewma_skew_ratio",
-            labels=("unif", "skew"),
-        )
-    elif suite == "round5d":
-        sf1 = build_relational_corpus(spark, docs10, emb10, 1)
-        sf10 = build_relational_corpus(spark, docs10, emb10, COPIES)
-        p1 = round5d_probes(
-            spark,
-            os.path.join(sf1, "documents.parquet"),
-            os.path.join(sf1, "embeddings.parquet"),
-            os.path.join(sf1, "events.parquet"),
-        )
-        p10 = round5d_probes(
-            spark,
-            docs10,
-            emb10,
-            os.path.join(sf10, "events.parquet"),
-        )
-        pairs = {name: (p1[name], p10[name]) for name in p1}
-        out = run_probe(pairs, "scale_probe_10x_ratio_round5d")
-    elif suite == "round5e":
-        sf1 = build_relational_corpus(spark, docs10, emb10, 1)
-        sf10 = build_relational_corpus(spark, docs10, emb10, COPIES)
-
-        def pth(d, t):
-            return os.path.join(d, f"{t}.parquet")
-
-        p1 = round5e_probes(
-            spark, pth(sf1, "orders"), pth(sf1, "customer"),
-            pth(sf1, "events"), pth(sf1, "embeddings"),
-        )
-        p10 = round5e_probes(
-            spark, pth(sf10, "orders"), pth(sf10, "customer"),
-            pth(sf10, "events"), pth(sf10, "embeddings"),
-        )
-        pairs = {name: (p1[name], p10[name]) for name in p1}
-        out = run_probe(pairs, "scale_probe_10x_ratio_round5e")
-    elif suite == "round5f":
-        sf1 = build_relational_corpus(spark, docs10, emb10, 1)
-        sf10 = build_relational_corpus(spark, docs10, emb10, COPIES)
-
-        def pth(d, t):
-            return os.path.join(d, f"{t}.parquet")
-
-        p1 = round5f_probes(spark, pth(sf1, "lineitem"), pth(sf1, "events"))
-        p10 = round5f_probes(spark, pth(sf10, "lineitem"), pth(sf10, "events"))
-        pairs = {name: (p1[name], p10[name]) for name in p1}
-        out = run_probe(pairs, "scale_probe_10x_ratio_round5f")
-    elif suite == "round5g":
-        docs1 = os.path.join(SF_DIR, "documents.parquet")
-        p1 = round5g_probes(spark, docs1)
-        p10 = round5g_probes(spark, docs10)
-        pairs = {name: (p1[name], p10[name]) for name in p1}
-        out = run_probe(pairs, "scale_probe_10x_ratio_round5g")
-    elif suite == "round7":
-        docs1 = os.path.join(SF_DIR, "documents.parquet")
-        p1 = round7_probes(spark, docs1)
-        p10 = round7_probes(spark, docs10)
-        pairs = {name: (p1[name], p10[name]) for name in p1}
-        out = run_probe(pairs, "scale_probe_10x_ratio_round7")
-    elif suite == "round8":
-        docs1 = os.path.join(SF_DIR, "documents.parquet")
-        emb1 = os.path.join(SF_DIR, "embeddings.parquet")
-        p1 = round8_probes(spark, docs1, emb1)
-        p10 = round8_probes(spark, docs10, emb10)
-        pairs = {name: (p1[name], p10[name]) for name in p1}
-        out = run_probe(pairs, "scale_probe_10x_ratio_round8")
-    elif suite == "round9":
-        from bigdata_commerce_spark.operators import similarity
-        from bigdata_commerce_spark.operators.lm_quality import (
-            published_recipe_funnel,
-        )
-
-        # (a) SemDeDup hot-cell (r8 verdict item 2): the 10x corpus
-        # with a planted duplicate blob on 20% of vectors. Centroids
-        # are corpus-proportional (the paper's dial), which the blob
-        # DEFEATS — all blob members share one cell, so the uncapped
-        # within-cell join is ~(N/5)^2 pairs regardless of centroid
-        # count. max_cell_size=256 salt-splits the blob and must hold
-        # the hot/uniform wall ratio near 1.
-        def semdedup_run(hot: bool, cap):
-            def fn():
-                emb = spark.read.parquet(emb10)
-                if hot:
-                    emb = plant_hot_blob(emb)
-                n = emb.count()
-                return int(
-                    similarity.semdedup(
-                        emb, tau=0.9, n_centroids=max(16, n // 250), max_cell_size=cap
-                    )
-                    .agg(F.sum(F.col("kept").cast("long")) + F.count(F.lit(1)))
-                    .collect()[0][0]
-                )
-
-            return fn
-
-        out = run_probe(
-            {
-                "semdedup_uncapped": (
-                    semdedup_run(False, None),
-                    semdedup_run(True, None),
-                ),
-                "semdedup_cap256": (
-                    semdedup_run(False, 256),
-                    semdedup_run(True, 256),
-                ),
-            },
-            "scale_probe_semdedup_hotcell",
-            labels=("unif", "hot"),
-        )
-
-        # (b) published_recipe_funnel decorrelated 10x (verdict item
-        # 5): the composed Gopher.C4.CCNet.DSIR scan next to its
-        # already-probed components. Consumed through the funnel's
-        # own one-row survivor counts.
-        docs1 = os.path.join(SF_DIR, "documents.parquet")
-
-        def funnel_run(path):
-            def fn():
-                row = published_recipe_funnel(spark.read.parquet(path)).collect()[0]
-                return int(sum(v for v in row.asDict().values()))
-
-            return fn
-
-        out["recipe_funnel_10x"] = run_probe(
-            {"published_recipe_funnel": (funnel_run(docs1), funnel_run(docs10))},
-            "scale_probe_10x_ratio_round9",
-        )
-    elif suite == "r12opt":
-        sf1 = build_relational_corpus(spark, docs10, emb10, 1)
-        sf10 = build_relational_corpus(spark, docs10, emb10, COPIES)
-        out = r12opt_probes(spark, sf1, sf10)
-    elif suite == "round10":
-        out = round10_phash_probes(spark)
-    elif suite == "round11":
-        out = round11_dct_probes(spark)
-    elif suite == "mixing_budget":
-        out = mixing_budget_probes(spark)
-    elif suite == "memory":
-        sf10 = build_relational_corpus(spark, docs10, emb10, COPIES)
-        ev_unif, _, _ = build_skew_corpus(spark, sf10)
-        out = {
-            "metric": "memory_pressure_probe",
-            **memory_probes(spark, docs10, ev_unif),
-        }
-    elif suite == "streaming":
-        # per-file batches (the soak cadence) vs one big batch: the
-        # spread between the two rates is the per-batch FIXED cost
-        # (sink merges + state reads), not per-row work
-        out = {
-            "metric": "streaming_four_sink_throughput",
-            "per_file_batches": streaming_probe(spark, files_per_trigger=1),
-            "single_batch": streaming_probe(spark, files_per_trigger=20),
-            # the production state store: per-batch-delta MERGE I/O
-            # instead of the parquet store's full-state rewrite.
-            # 10 chunks for BOTH backends (the SCALE.md comparison
-            # rows): Derby's single-process insert throughput makes
-            # the trend sink's replay-artifact volume the wall-clock
-            # term, so the jdbc run is ~10s/batch
-            "per_file_batches_10": streaming_probe(spark, n_chunks=10),
-            "per_file_batches_10_jdbc": streaming_probe(
-                spark, n_chunks=10, backend="jdbc"
-            ),
-        }
-    elif suite == "trigger_shapes":
-        # round-8 (verdict item 6): the throughput/latency trade at
-        # realistic batch sizes — 40 landed files consumed 1 / 4 / 10 /
-        # 40 files per trigger. Throughput rises with batch size (the
-        # per-batch fixed cost — four sink merges + state reads —
-        # amortizes over more rows) while per-event latency bound is
-        # the trigger interval itself; the table is the dial a 100 TB
-        # ingest chooses an operating point on.
-        out = {
-            "metric": "streaming_trigger_shapes",
-            "shapes": {
-                f"files_per_trigger={k}": streaming_probe(
-                    spark, n_chunks=40, files_per_trigger=k
-                )
-                for k in (1, 4, 10, 40)
-            },
-        }
-        for name, s in out["shapes"].items():
-            s.pop("batches", None)  # keep the JSON line readable
-    else:
-        docs1 = os.path.join(SF_DIR, "documents.parquet")
-        emb1 = os.path.join(SF_DIR, "embeddings.parquet")
-        p1 = probes(spark, docs1, emb1)
-        p10 = probes(spark, docs10, emb10)
-        pairs = {name: (p1[name], p10[name]) for name in p1}
-        out = run_probe(pairs, "scale_probe_10x_ratio")
-    print(json.dumps(out))
+    pairs = {name: (shot(fn, sf1), shot(fn, sf10)) for name, fn in queries.items()}
+    print(json.dumps(run_probe(pairs, "scale_probe_10x_ratio")))
     spark.stop()
 
 

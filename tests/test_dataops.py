@@ -11,8 +11,7 @@ from bigdata_commerce_spark.plans import QUERIES, TWIN_QUERIES
 from bigdata_commerce_spark.sources.testdata import load_table
 from tests.conftest import SF_SMOKE
 
-# rotation-proof lookups (plans/rotation.py moves names between the
-# driver catalog and the twin registry round to round)
+# lookups span the driver catalog and the twin registry
 ALL_QUERIES = {**TWIN_QUERIES, **QUERIES}
 
 

@@ -1,12 +1,12 @@
 """Full-registry plan-fingerprint manifest (VERDICT r11 item 5).
 
 bench.py fingerprints only the 50 headline queries, so a plan
-regression in one of the 97 twins was invisible until its next
-rotation slot — up to 4 rounds later. PLAN_FP_MANIFEST.json commits a
-fingerprint for EVERY registered query (driver slots and twins) at
-sf0.01, and this test re-derives them and diffs: any twin plan change
-is flagged the round it lands. Builds are planning-only (no
-execution), so the sweep is cheap relative to the oracle suites.
+regression in one of the 111 twins would go unflagged.
+PLAN_FP_MANIFEST.json commits a fingerprint for EVERY registered
+query (driver slots and twins) at sf0.01, and this test re-derives
+them and diffs: any twin plan change is flagged the round it lands.
+Builds are planning-only (no execution), so the sweep is cheap
+relative to the oracle suites.
 
 The check runs in a SUBPROCESS (fresh Python process, fresh Spark
 session) because fingerprints legitimately depend on in-session cache

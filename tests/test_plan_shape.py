@@ -5,6 +5,12 @@ test_commerce.py; bucketing in test_bucketing.py)."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import functions as F
+
 from bigdata_commerce_spark.plans import QUERIES
 from bigdata_commerce_spark.sources.testdata import load_table
 from tests.conftest import SF_SMOKE
@@ -356,3 +362,46 @@ def test_region_top3_bitmask_aggregate(spark):
     plan = _formatted(QUERIES["region_top3_parts"](spark, SF_SMOKE))
     assert "ObjectHashAggregate" not in plan, plan[:1200]
     assert "bit_or" in plan
+
+
+def test_region_top3_nation_list_on_adversarial_dims(spark, tmp_path):
+    """The bitmask decode must equal
+    array_join(array_sort(collect_set(n_name)), ",") when the nation
+    dim is not a clean key -> unique-name map: two keys sharing one
+    name (NATION_20 renamed NATION_15, both in AFRICA's top rows)
+    collapse to one entry, and a NULL name (NATION_13, in EUROPE's)
+    drops out as collect_set drops it."""
+    for name in os.listdir(SF_SMOKE):
+        if name != "nation.parquet":
+            os.symlink(os.path.join(SF_SMOKE, name), tmp_path / name)
+    nation = pq.read_table(os.path.join(SF_SMOKE, "nation.parquet"))
+    renamed = {"NATION_20": "NATION_15", "NATION_13": None}
+    names = [renamed.get(n, n) for n in nation.column("n_name").to_pylist()]
+    idx = nation.schema.get_field_index("n_name")
+    nation = nation.set_column(idx, nation.schema.field(idx), pa.array(names, pa.string()))
+    pq.write_table(nation, tmp_path / "nation.parquet")
+    sf = str(tmp_path)
+
+    got = {
+        (r["area"], r["l_partkey"]): r["nation_list"]
+        for r in QUERIES["region_top3_parts"](spark, sf).collect()
+    }
+    li = load_table(spark, "lineitem", sf)
+    sup = load_table(spark, "supplier", sf)
+    nat = load_table(spark, "nation", sf)
+    reg = load_table(spark, "region", sf)
+    want = {
+        (r["area"], r["l_partkey"]): r["nation_list"]
+        for r in li.join(sup, li.l_suppkey == sup.s_suppkey)
+        .join(nat, sup.s_nationkey == nat.n_nationkey)
+        .join(reg, nat.n_regionkey == reg.r_regionkey)
+        .groupBy(F.col("r_name").alias("area"), "l_partkey")
+        .agg(F.array_join(F.array_sort(F.collect_set("n_name")), ",").alias("nation_list"))
+        .collect()
+    }
+    assert got and got == {k: want[k] for k in got}
+    # the adversarial names reach the output, so the check is not vacuous
+    assert "NATION_15" in {v for (a, _), v in got.items() if a == "AFRICA"}
+    assert "NATION_18,NATION_3,NATION_8" in {
+        v for (a, _), v in got.items() if a == "EUROPE"
+    }

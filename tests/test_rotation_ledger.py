@@ -1,12 +1,14 @@
-"""ROTATION.md's ledger as an enforced invariant (VERDICT r6 item 7).
+"""ROTATION.md's ledger pins the frozen query registry.
 
-After round 7 the rotation closes: every catalog/twin query must have
-at least one driver-verified round, be slotted for the current round
-(``rN*``), or carry an explicit row-identity pin to a driver-verified
-sibling. This test parses the ledger table and fails on any query
-that has none — so a future registry addition without a rotation plan
-(or a ledger row that silently loses its verification) breaks the
-suite instead of rotting quietly.
+Each query's decorator states its registry (``@query`` for a driver
+slot, ``@twin_query`` for a pytest-checked twin); the registry was
+frozen at the round-12 membership. The ledger table is the committed
+membership list: every registered query has a row, every row names a
+registered query, the slot column matches the decorator, and every
+query carries its oracle. The remaining checks keep the ledger's
+verification history honest: each query has a driver-verified round,
+a row-identity pin to a driver-verified sibling, or a queue marker,
+and no driver row is older than the horizon.
 """
 
 from __future__ import annotations
@@ -14,7 +16,7 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
-from bigdata_commerce_spark.plans import QUERIES, TWIN_QUERIES
+from bigdata_commerce_spark.plans import ORACLES, QUERIES, TWIN_ORACLES, TWIN_QUERIES
 
 LEDGER = Path(__file__).resolve().parent.parent / "ROTATION.md"
 _ROW = re.compile(r"^\| `([^`]+)` \| ([^|]+) \| ([^|]+) \|$")
@@ -35,9 +37,20 @@ def test_every_query_is_in_the_ledger():
     assert not missing, f"registry queries absent from ROTATION.md ledger: {missing}"
 
 
+def test_every_ledger_row_is_registered():
+    rows = _parse_ledger()
+    stale = sorted(set(rows) - (set(QUERIES) | set(TWIN_QUERIES)))
+    assert not stale, f"ROTATION.md ledger rows naming no registered query: {stale}"
+
+
+def test_every_query_has_an_oracle():
+    assert set(ORACLES) == set(QUERIES)
+    assert set(TWIN_ORACLES) == set(TWIN_QUERIES)
+
+
 def test_ledger_slots_match_registry():
-    """The ledger's slot column must mirror the live registry — a
-    rotation edit without a ledger update (or vice versa) fails."""
+    """The ledger's slot column must mirror the registry — a decorator
+    flip without a ledger update (or vice versa) fails."""
     rows = _parse_ledger()
     wrong = sorted(
         name
