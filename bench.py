@@ -13,14 +13,13 @@ the timing contract is identical.
 Each query is timed over a full materialization (collect) after a
 warm-up of the session itself; inputs are re-read per query (no
 cross-query caching — ENFORCED since round 13: every timed shot first
-resets the operator persist registry, the memoized pairs frame and the
-Spark catalog cache, so a cache-bearing query's recorded time always
-includes materializing its own caches. VERDICT r12 item 1: the warm
-re-shot protocol recorded cache-hit minimums — ad_launch_window_counts
-0.141 s warm vs 0.961 s cold — and queries riding a cache an EARLIER
-query materialized, e.g. dedup_ngram_jaccard at 0.057 s, were not
-measuring their own plan at all. Set SPARK_GRAFT_BENCH_WARM=1 to
-reproduce the pre-r13 warm protocol for cross-round comparison).
+resets the operator persist registry and the Spark catalog cache, so a
+cache-bearing query's recorded time always includes materializing its
+own caches. VERDICT r12 item 1: the warm re-shot protocol recorded
+cache-hit minimums — ad_launch_window_counts 0.141 s warm vs 0.961 s
+cold — and queries riding a cache an EARLIER query materialized, e.g.
+dedup_ngram_jaccard at 0.057 s, were not measuring their own plan at
+all).
 The timed region is the collect alone — the
 DataFrame build, planning, and plan fingerprint run BEFORE the timer
 (ADVICE r11 item 3: the fingerprint's toString + normalization inside
@@ -175,11 +174,11 @@ def fp_changes(
 def reset_caches(spark) -> None:
     """Cold-honest shot boundary (VERDICT r12 item 1): drop every
     in-session data cache so the next timed collect pays for
-    materializing its own persists. Covers the three cache layers the
-    operators use: the bounded persist registry (cache_util), the
-    memoized cross-query pairs frame (catalog_dataops), and the Spark
-    catalog cache itself (which also catches raw .persist() calls
-    inside iterative operators). JVM/codegen/scheduler warmth is NOT
+    materializing its own persists. Covers the two cache layers the
+    operators use: the bounded persist registry (cache_util, which
+    also holds the cross-query pairs frame) and the Spark catalog
+    cache itself (which also catches raw .persist() calls inside
+    iterative operators). JVM/codegen/scheduler warmth is NOT
     reset — re-shots stay warm in every sense except data caches,
     which is the quantity the suite claims to measure.
 
@@ -189,13 +188,9 @@ def reset_caches(spark) -> None:
     sf0.01 — heavy_hitter_users recorded 15-22 s for a 10-row window).
     clearCache() is async by API, so any RDD still registered after it
     gets a second, blocking unpersist via the JVM handle."""
-    if os.environ.get("SPARK_GRAFT_BENCH_WARM") == "1":
-        return
     from bigdata_commerce_spark.operators.cache_util import release_all
-    from bigdata_commerce_spark.plans.catalog_dataops import reset_pairs_cache
 
     release_all(blocking=True)
-    reset_pairs_cache()
     spark.catalog.clearCache()
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -566,9 +561,18 @@ def fp_manifest(check: bool = False) -> None:
     order reproduces the same fingerprints). With ``check``, diffs
     against the committed PLAN_FP_MANIFEST.json and exits nonzero on
     any change — regenerate with `python bench.py --fp-manifest` and
-    commit when a change is intended."""
+    commit when a change is intended.
+
+    The session is pinned to local[32] with 32 shuffle partitions, the
+    configuration the manifest was recorded at: partition counts appear
+    in the plans, so a $SPARK_GRAFT_CPUS-sized session would change most
+    fingerprints on any box that sets it."""
     sf_dir = os.environ.get("SPARK_GRAFT_FP_SF_DIR", "/root/testdata/sf0.01")
-    spark = get_spark(app_name="bigdata_commerce_spark_fp_manifest")
+    spark = get_spark(
+        app_name="bigdata_commerce_spark_fp_manifest",
+        master="local[32]",
+        shuffle_partitions=32,
+    )
     fps: dict[str, str] = {}
     for name in sorted(ALL_QUERIES):
         fps[name] = plan_fingerprint(ALL_QUERIES[name](spark, sf_dir))

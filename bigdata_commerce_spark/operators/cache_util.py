@@ -14,9 +14,10 @@ a long-lived session (the 150-query suite, a notebook) holds a fixed
 number of these frames no matter how many operator calls it makes.
 
 An evicted frame's consumers stay CORRECT on re-collect: the lineage
-simply recomputes (the ``catalog_dataops._PAIRS_CACHE`` eviction
-contract). The bound is 4 so a composed pipeline's wide/narrow paths
-and a re-run of either coexist without thrash.
+simply recomputes. The catalog's cross-query Jaccard pairs frame
+(``catalog_dataops._jaccard_pairs_cached``) is registered here too,
+so this registry plus Spark's catalog cache are the only data caches
+a session holds.
 """
 
 from __future__ import annotations

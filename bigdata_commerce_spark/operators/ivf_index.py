@@ -29,6 +29,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdata_commerce_spark.operators.cache_util import persist_bounded
 from bigdata_commerce_spark.operators.similarity import (
     _as_double,
     _assign_cells_best,
@@ -164,7 +165,9 @@ def search_ivf_index(
     p = probes.select(
         F.col(id_col).alias("probe_id"), _as_double(vec_col).alias("pvec")
     )
-    probe_cells = _probe_cells(p, cent_row, nprobe).cache()
+    # Persisted because the cell-id collect and the returned lazy
+    # frame both read it; the bounded registry releases it later.
+    probe_cells = persist_bounded(_probe_cells(p, cent_row, nprobe))
     # Bounded collect (<= probes x nprobe ids): materializing the cell
     # list as LITERALS is what lets the scan prune statically — a
     # broadcast-join form would read every partition and discard rows

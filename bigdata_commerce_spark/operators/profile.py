@@ -13,11 +13,14 @@ Scale shape:
   default approx path).
 - Distinct counts default to `approx_count_distinct` (HLL++, one
   pass, mergeable partials). `exact_distinct=True` switches to true
-  COUNT(DISTINCT): Spark plans multiple distinct aggregates via an
-  Expand (one input replica per distinct column) — fine at audit
-  scale, wrong as a routine 100 TB job; the docstring IS the
+  COUNT(DISTINCT), one single-distinct aggregate per column
+  cross-joined onto the 1-row result: each reads only its own column
+  and shuffles only that column's map-side-deduplicated values. Fine
+  at audit scale, wrong as a routine 100 TB job; the docstring IS the
   guidance, and the twin query uses exact only because its oracle
-  must hash-match.
+  must hash-match. (Several COUNT(DISTINCT)s in ONE aggregate plan
+  as an Expand whose group order follows expression-id hashes, so
+  that plan — and its fingerprint — varies from run to run.)
 - The wide 1-row agg result is reshaped to one-row-per-column with
   `inline` on a literal struct array — driver-free, shuffle-free.
 - Mean uses the money_sum discipline (exact decimal(38,6) try_sum /
@@ -76,8 +79,8 @@ def profile_table(
     for c in cols:
         dt = by_name[c]
         aggs.append(F.count(c).alias(f"_nn_{c}"))
-        nd = F.count_distinct(c) if exact_distinct else F.approx_count_distinct(c)
-        aggs.append(nd.alias(f"_nd_{c}"))
+        if not exact_distinct:
+            aggs.append(F.approx_count_distinct(c).alias(f"_nd_{c}"))
         if isinstance(dt, _NUMERIC):
             aggs.append(F.min(c).cast("double").alias(f"_minn_{c}"))
             aggs.append(F.max(c).cast("double").alias(f"_maxn_{c}"))
@@ -99,6 +102,9 @@ def profile_table(
             aggs.append(F.date_format(F.min(c), fmt).alias(f"_mins_{c}"))
             aggs.append(F.date_format(F.max(c), fmt).alias(f"_maxs_{c}"))
     wide = df.agg(*aggs)
+    if exact_distinct:
+        for c in cols:
+            wide = wide.crossJoin(df.agg(F.count_distinct(c).alias(f"_nd_{c}")))
 
     null_d = F.lit(None).cast("double")
     null_s = F.lit(None).cast("string")

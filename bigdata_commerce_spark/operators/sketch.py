@@ -1,116 +1,16 @@
-"""Frequency sketches: distributed Misra-Gries heavy hitters.
+"""Sketch-shaped aggregates: mergeable HLL distinct-count rollups and
+exact per-group percentiles with a loud scale guard.
 
-The 100 TB heavy-hitter pattern in two passes:
-
-1. **Sketch pass** — each partition builds a k-counter Misra-Gries
-   summary (vectorized: pandas ``value_counts`` per Arrow batch,
-   then the standard compress step — subtract the (k+1)-th largest
-   count, keep positives). A summary underestimates any key's true
-   partition count by at most n_p/(k+1); summing summaries across
-   partitions (one tiny shuffle of <= k rows per partition) keeps the
-   global error <= n/(k+1). THE GUARANTEE: every key with true
-   frequency > n/(k+1) survives into the candidate set — for any
-   partitioning, so the candidate SET is partitioning-independent
-   even though the estimates are not.
-2. **Exact pass** — re-scan with a broadcast semi-join on the (tiny)
-   candidate set and count exactly. Output is therefore exact for
-   every reported key, deterministic, and oracle-checkable; the
-   sketch only bounded how much had to be counted.
-
-Total cost: two scans, one <= k-rows-per-partition shuffle, one
-candidate-count shuffle — never a full groupBy over all keys on the
-first pass. Use when key cardinality (user ids, URLs, n-grams) is
-itself too large to aggregate cheaply.
+Exact top-N frequent keys need no sketch here: a partial/final count
+aggregate plus ``topk.rank_top_m`` (TakeOrderedAndProject) is the
+plan (``heavy_hitter_users``). The streaming Misra-Gries summary lives
+in ``streaming/stateful.misra_gries_stateful``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def misra_gries_candidates(df: DataFrame, key_col: str, k: int = 256) -> DataFrame:
-    """Per-partition Misra-Gries summaries merged into a global
-    candidate set: (key, est_count) with est_count underestimating the
-    true count by at most n/(k+1). Superset of every key with
-    frequency > n/(k+1)."""
-    key_type = df.schema[key_col].dataType.simpleString()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: pd.Series | None = None
-        for pdf in batches:
-            vc = pdf[key_col].value_counts()
-            acc = vc if acc is None else acc.add(vc, fill_value=0)
-            if len(acc) > k:
-                # compress: subtract the (k+1)-th largest, keep > 0
-                thresh = acc.nlargest(k + 1).iloc[-1]
-                acc = acc - thresh
-                acc = acc[acc > 0]
-        if acc is None or acc.empty:
-            yield pd.DataFrame({key_col: [], "est_count": []})
-        else:
-            yield pd.DataFrame(
-                {key_col: acc.index, "est_count": acc.values.astype("int64")}
-            )
-
-    summaries = df.select(key_col).mapInPandas(
-        kernel, schema=f"{key_col} {key_type}, est_count long"
-    )
-    return summaries.groupBy(key_col).agg(F.sum("est_count").alias("est_count"))
-
-
-def heavy_hitters(
-    df: DataFrame, key_col: str, top_n: int = 10, k: int = 256
-) -> DataFrame:
-    """Exact top-N frequent keys via sketch-then-verify, CERTIFIED:
-    Misra-Gries candidates, broadcast semi-join re-count, rank — then
-    check the guarantee actually covers the answer. The sketch only
-    promises that keys with true frequency > n/(k+1) survive into the
-    candidate set, so the top-N is provably exact iff the N-th
-    candidate's exact count clears that bound (no non-candidate can
-    then outrank it). On flat distributions where it doesn't, the
-    sketch path would be silently distribution-dependent — instead we
-    fall back to the plain exact groupBy, so the result equals the
-    GROUP BY oracle UNCONDITIONALLY. Certification costs one count()
-    of the input and one materialization of the <= top_n candidate
-    rows; size k so the bound clears and neither fallback nor the
-    extra pass triggers in steady state."""
-    cands = misra_gries_candidates(df, key_col, k)
-    exact = (
-        df.join(F.broadcast(cands.select(key_col)), key_col, "left_semi")
-        .groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("event_count"))
-    )
-    # TakeOrderedAndProject first: the candidate set is <= k rows per
-    # *sketch* partition, which at cluster scale is still millions —
-    # orderBy+limit keeps the top-N selection distributed (per-partition
-    # heaps merged on the driver) instead of sorting all candidates in
-    # the single partition a global window would force. The ranking
-    # window then runs over exactly top_n rows.
-    top = exact.orderBy(F.desc("event_count"), F.asc(key_col)).limit(top_n)
-    top_rows = top.collect()
-    bound = df.count() / (k + 1)
-    certified = len(top_rows) == top_n and top_rows[-1].event_count > bound
-    if certified:
-        # the rows are already in hand — re-localize them instead of
-        # leaving a lazy plan that would re-run the whole
-        # sketch+re-count pipeline when the caller evaluates
-        top = df.sparkSession.createDataFrame(top_rows, top.schema)
-    else:
-        top = (
-            df.groupBy(key_col)
-            .agg(F.count(F.lit(1)).alias("event_count"))
-            .orderBy(F.desc("event_count"), F.asc(key_col))
-            .limit(top_n)
-        )
-    w = Window.orderBy(F.desc("event_count"), F.asc(key_col))
-    return (
-        top.withColumn("rank", F.row_number().over(w))
-        .select(key_col, "event_count", "rank")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -15,6 +15,9 @@ Scale shape: state is one small tuple per ACTIVE user (bounded by the
 timeout, not history); each micro-batch shuffles only that batch's
 rows by user_id. The same operator at 100 TB/day is bounded by
 concurrent-active keys — the classic streaming-sessionization design.
+
+Forward path: Spark 4's ``transformWithStateInPandas`` (needs the
+``protobuf`` package for its state server).
 """
 
 from __future__ import annotations
@@ -223,30 +226,29 @@ def misra_gries_stateful(
     time_col: str = "event_time",
     key_col: str = "user_id",
 ) -> DataFrame:
-    """Streaming heavy-hitter sketch: the stateful twin of
-    ``sketch.misra_gries_candidates`` — a bounded Misra-Gries summary
+    """Streaming heavy-hitter sketch: a bounded Misra-Gries summary
     maintained ACROSS micro-batches, so "who is hot over the whole
     stream" never needs a full-history replay.
 
-    The sketch state is DISTRIBUTED the same way the batch kernel's
-    per-partition summaries are: keys hash into ``n_buckets`` groups
-    and each bucket holds its own k-entry summary (state is bounded by
-    n_buckets x k rows, forever). A key lives in exactly one bucket,
-    so each bucket's standard MG guarantees hold against ITS OWN
-    traffic n_b: any key with true count > n_b/(k+1) is present, and
-    its estimate undercounts by at most n_b/(k+1) — tighter than a
-    global-n bound, since n_b ~ n/n_buckets. Compression uses the
-    batch kernel's subtract-(k+1)-th-largest form, so stream and batch
-    sketches obey the identical invariant (pinned by test; an MG
-    summary's exact contents are boundary-dependent, its GUARANTEES
-    are not — the test asserts the guarantees, plus exact equality in
-    the k >= distinct-keys regime where compression never fires).
+    The sketch state is DISTRIBUTED: keys hash into ``n_buckets``
+    groups and each bucket holds its own k-entry summary (state is
+    bounded by n_buckets x k rows, forever). A key lives in exactly
+    one bucket, so each bucket's standard MG guarantees hold against
+    ITS OWN traffic n_b: any key with true count > n_b/(k+1) is
+    present, and its estimate undercounts by at most n_b/(k+1) —
+    tighter than a global-n bound, since n_b ~ n/n_buckets. Each batch
+    adds its ``value_counts`` to the bucket's summary; once the summary
+    holds more than k keys, the compress step subtracts the
+    (k+1)-th-largest count from every entry and drops the keys left at
+    zero or below. An MG summary's exact contents are
+    boundary-dependent, its GUARANTEES are not — the test asserts the
+    guarantees, plus exact equality in the k >= distinct-keys regime
+    where compression never fires.
 
     Each micro-batch emits every bucket's refreshed summary:
     (bucket, key, est_count, n_seen) in update mode — n_seen is the
     bucket's lifetime traffic, so a consumer (or test) takes the
-    max-n_seen generation per bucket as current. Certify-and-recount
-    (sketch.heavy_hitters' exact top-N) applies downstream unchanged.
+    max-n_seen generation per bucket as current.
     """
     if k < 1 or n_buckets < 1:
         raise ValueError("k and n_buckets must be >= 1")

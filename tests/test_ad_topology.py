@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from bigdata_commerce_spark.operators.topk import top_k_per_group
 from bigdata_commerce_spark.streaming import ad_stream, pipelines, sinks
+from tests.conftest import in_job_group
 
 THRESHOLD = 3
 HEAVY = 99
@@ -133,14 +134,6 @@ def test_trend_matches_f_window(spark, drained):
     assert [r.click_count for r in opened.collect()] == [1]
 
 
-def _in_group(sc, group: str, action):
-    sc.setJobGroup(group, group)
-    try:
-        return action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-
-
 def test_read_state_submits_no_job_and_pins_inferred_schema(spark, drained, tmp_path):
     """Reading a committed epoch takes its schema from a part-file
     footer instead of a schema-inference job; the pinned schema is the
@@ -154,10 +147,10 @@ def test_read_state_submits_no_job_and_pins_inferred_schema(spark, drained, tmp_
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    pinned = _in_group(
+    pinned = in_job_group(
         sc, "read_state_probe", lambda: [sinks.read_state(spark, d).schema for d in dirs]
     )
-    inferred = _in_group(
+    inferred = in_job_group(
         sc,
         "inference_probe",
         lambda: [

@@ -30,7 +30,7 @@ def test_fingerprint_stable_and_discriminating_smoke(spark):
 
 
 @pytest.mark.slow
-def test_headline_fingerprints_deterministic(spark, monkeypatch):
+def test_headline_fingerprints_deterministic(spark):
     """Unchanged code => unchanged fingerprints at fixed SF: two full
     passes over the pinned headline suite must agree
     fingerprint-for-fingerprint — and the 50 fingerprints must be
@@ -38,19 +38,13 @@ def test_headline_fingerprints_deterministic(spark, monkeypatch):
     differences would be useless as a drift detector).
 
     The pass boundary resets ALL data-cache layers via the bench's own
-    ``reset_caches`` — the persist registry, the memoized pairs frame
-    AND the catalog cache — exactly the state the bench resets between
-    timed shots. Clearing only ``spark.catalog.clearCache()`` (the
-    pre-r13 form) left the Python-side pairs memo alive, so pass 2
-    skipped rebuilding jaccard_pairs and its shingle-frame persist: a
-    LATER query sharing that subtree (dedup_minhash_lsh, dedup_simhash)
-    then planned without the InMemoryRelation pass 1 saw — the two
-    passes were genuinely different cache environments, not a
-    fingerprint instability. SPARK_GRAFT_BENCH_WARM=1 turns
-    ``reset_caches`` into a no-op, so it is cleared here."""
+    ``reset_caches`` — the persist registry (which holds the pairs
+    frame) AND the catalog cache — exactly the state the bench resets
+    between timed shots — so both passes plan in the same cache
+    environment, and a difference is a fingerprint instability rather
+    than a later query (dedup_minhash_lsh, dedup_simhash) planning
+    against a shared subtree an earlier pass left cached."""
     from bench import reset_caches
-
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_WARM", raising=False)
 
     names = headline_names()
 

@@ -680,34 +680,6 @@ def test_dedup_survivors_string_ids_with_quality(spark):
     assert got2 == {"a": "a"}
 
 
-def test_heavy_hitters_flat_distribution_falls_back_to_exact(spark):
-    """When the 10th-heaviest key's count doesn't clear the n/(k+1)
-    sketch bound (flat distribution, small k), the certification must
-    fall back to the exact groupBy — output equals the plain GROUP BY
-    top-N regardless of distribution."""
-    from bigdata_commerce_spark.operators.sketch import heavy_hitters
-
-    # 600 near-uniform keys, counts 5..6; k=8 -> bound = n/9 >> 6
-    rows = [(i % 600,) for i in range(3300)]
-    df = spark.createDataFrame(rows, "user_id long").repartition(8)
-    got = [(r.user_id, r.event_count, r.rank)
-           for r in heavy_hitters(df, "user_id", top_n=10, k=8).collect()]
-    want = [
-        (r.user_id, r.n, i + 1)
-        for i, r in enumerate(
-            df.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.desc("n"), F.asc("user_id")).limit(10).collect()
-        )
-    ]
-    assert got == want
-    # and the certified regime still takes the sketch path (same output)
-    skewed = spark.createDataFrame(
-        [(1,)] * 500 + [(2,)] * 300 + [(i,) for i in range(3, 60)], "user_id long"
-    ).repartition(8)
-    hh = heavy_hitters(skewed, "user_id", top_n=2, k=64).collect()
-    assert [(r.user_id, r.event_count) for r in hh] == [(1, 500), (2, 300)]
-
-
 def test_ngram_counts_known_values(spark):
     from bigdata_commerce_spark.operators.text import ngram_counts
 

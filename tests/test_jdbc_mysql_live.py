@@ -2,10 +2,9 @@
 (round-7 verdict item 4): the MySQL dialect is statement-pinned in
 tests/test_jdbc_dialects.py, but only execution against a real server
 proves the two-statement upsert, the error-code markers, and the
-VARCHAR(32) __kh index width. No MySQL server (or Connector/J jar)
-exists in this sandbox, so the suite is env-gated — the
-transformWithStateInPandas protobuf-skip pattern — and self-skips
-cleanly here. The day an environment provides one:
+VARCHAR(32) __kh index width. The suite needs a MySQL server and
+Connector/J, so it is env-gated and self-skips without them. To run
+it against a server:
 
     export SPARK_GRAFT_MYSQL_URL='jdbc:mysql://host:3306/db'
     export SPARK_GRAFT_MYSQL_USER='...'
