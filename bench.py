@@ -45,7 +45,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+REPO = Path(__file__).resolve().parent
+sys.path.insert(0, str(REPO))
 
 from bigdata_commerce_spark import get_spark  # noqa: E402
 from bigdata_commerce_spark.plans import QUERIES, TWIN_QUERIES  # noqa: E402
@@ -59,7 +60,7 @@ def headline_names() -> list[str]:
     """The pinned suite: BENCH_BASELINE.json's keys (round-1 catalog).
     Falls back to the current driver catalog when no baseline exists
     (fresh checkout)."""
-    baseline_path = Path(__file__).resolve().parent / "BENCH_BASELINE.json"
+    baseline_path = REPO / "BENCH_BASELINE.json"
     if baseline_path.exists():
         names = sorted(json.loads(baseline_path.read_text())["queries"])
         missing = [n for n in names if n not in ALL_QUERIES]
@@ -76,6 +77,10 @@ def headline_names() -> list[str]:
 # filters, read schemas — which is a pure function of code + config +
 # data layout at a fixed SF.
 _PLAN_NOISE = (
+    # scans of files inside the checkout (the commerce fixtures, the
+    # ivf index store) print their absolute path; where the checkout
+    # sits on disk is not plan shape
+    (re.compile(re.escape(str(REPO))), "<repo>"),
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"\*\(\d+\)"), "*(n)"),
@@ -169,6 +174,18 @@ def fp_changes(
         for q in cur
         if q in prev and prev[q] != cur[q]
     }
+
+
+def baseline_comparable(baseline: dict, cpus: int) -> bool:
+    """Whether per-query ratios against ``baseline`` (a
+    BENCH_BASELINE.json document) mean anything on a session of
+    ``cpus`` cores: the baseline's provenance protocol names the
+    ``local[N]`` it was recorded at, and a different N changes every
+    query's parallelism. A baseline that names no N is taken as
+    comparable."""
+    protocol = baseline.get("provenance", {}).get("protocol", "")
+    m = re.search(r"local\[(\d+)\]", protocol)
+    return m is None or int(m.group(1)) == cpus
 
 
 def reset_caches(spark) -> None:
@@ -332,10 +349,10 @@ def _run_suite() -> dict:
             plan_fp.setdefault(name, None)
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
 
-    baseline_path = Path(__file__).resolve().parent / "BENCH_BASELINE.json"
-    base: dict[str, float] = {}
-    if baseline_path.exists():
-        base = json.loads(baseline_path.read_text()).get("queries", {})
+    baseline_path = REPO / "BENCH_BASELINE.json"
+    baseline = json.loads(baseline_path.read_text()) if baseline_path.exists() else {}
+    base: dict[str, float] = baseline.get("queries", {})
+    cpus = spark.sparkContext.defaultParallelism
 
     # Artifact hygiene: single-shot noise must not survive into the
     # round artifact. SYMMETRIC rule (round-6 advice: a one-sided
@@ -389,6 +406,7 @@ def _run_suite() -> dict:
         "queries": timings,
         "plan_fp": plan_fp,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": cpus,
     }
     if errors:
         out["errors"] = errors
@@ -401,8 +419,9 @@ def _run_suite() -> dict:
     # eviction) routinely cross 2x — so a first-pass flag is only a
     # *suspect*: re-time it twice and keep the flag only if the best
     # of three is still >2x baseline. Re-runs are warm-cache, which
-    # biases toward NOT flagging — a flag that survives is real.
-    if base and str(out["sf"]) == "0.1":
+    # biases toward NOT flagging — a flag that survives is real. Ratios
+    # only mean something at the local[N] the baseline was recorded at.
+    if base and str(out["sf"]) == "0.1" and baseline_comparable(baseline, cpus):
         out["baseline_queries"] = base
         out["baseline_ratio"] = {
             q: round(t / base[q], 3)
@@ -421,8 +440,7 @@ def _run_suite() -> dict:
     # this run's fingerprints against the PREVIOUS committed archive
     # so a plan change is flagged the round it lands, in the bench
     # output itself. Headline sf only — the archive is sf0.1.
-    repo_dir = Path(__file__).resolve().parent
-    prev_latest = repo_dir / "BENCH_LATEST.json"
+    prev_latest = REPO / "BENCH_LATEST.json"
     if str(out["sf"]) == "0.1" and prev_latest.exists():
         try:
             prev_fp = json.loads(prev_latest.read_text()).get("plan_fp", {})
@@ -437,11 +455,10 @@ def _run_suite() -> dict:
     # timings; BENCH_LATEST.json makes every ratio auditable. Only the
     # headline sf lands there — smoke runs at other sfs archive to
     # .scratch so they can't clobber the committed artifact.
-    repo = Path(__file__).resolve().parent
     latest_path = (
-        repo / "BENCH_LATEST.json"
+        REPO / "BENCH_LATEST.json"
         if str(out["sf"]) == "0.1"
-        else repo / ".scratch" / f"bench_latest_sf{out['sf']}.json"
+        else REPO / ".scratch" / f"bench_latest_sf{out['sf']}.json"
     )
     try:
         latest_path.parent.mkdir(parents=True, exist_ok=True)
@@ -490,7 +507,7 @@ def rebaseline(n_warm: int = 5, names: list[str] | None = None) -> None:
     queries: dict[str, float] = {}
     plan_fp: dict[str, str] = {}
     shots_log: dict[str, list[float]] = {}
-    path = Path(__file__).resolve().parent / "BENCH_BASELINE.json"
+    path = REPO / "BENCH_BASELINE.json"
     if names is not None:
         prior = json.loads(path.read_text())
         unknown = sorted(set(names) - set(prior["queries"]))
@@ -513,7 +530,7 @@ def rebaseline(n_warm: int = 5, names: list[str] | None = None) -> None:
     try:
         head = subprocess.run(
             ["git", "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, cwd=Path(__file__).parent,
+            capture_output=True, text=True, cwd=REPO,
         ).stdout.strip()
     except OSError:
         head = "unknown"
@@ -576,7 +593,7 @@ def fp_manifest(check: bool = False) -> None:
     fps: dict[str, str] = {}
     for name in sorted(ALL_QUERIES):
         fps[name] = plan_fingerprint(ALL_QUERIES[name](spark, sf_dir))
-    path = Path(__file__).resolve().parent / "PLAN_FP_MANIFEST.json"
+    path = REPO / "PLAN_FP_MANIFEST.json"
     if check:
         committed = json.loads(path.read_text())["plan_fp"]
         changed = fp_changes(committed, fps)

@@ -192,6 +192,10 @@ def session_aggregates(
     session stream was being shuffled a second time for nothing).
     ``min(user_id)`` per session equals the key, so output values are
     unchanged; the final select pins the original column order.
+
+    Contract: the output has one row per (user, session). A session id
+    assigned outside ``sessionize`` and shared by several users is that
+    many sessions, each aggregated over its own user's events only.
     """
     return (
         df.groupBy(user_col, session_col)

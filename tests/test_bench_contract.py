@@ -22,7 +22,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from bench import reset_caches
+from bench import _PLAN_NOISE, baseline_comparable, reset_caches
 from bigdata_commerce_spark.operators import cache_util
 from bigdata_commerce_spark.plans import catalog_dataops
 from tests.conftest import SF_SMOKE
@@ -71,6 +71,26 @@ def test_pairs_frame_shared_across_builds(spark):
     reset_caches(spark)
 
 
+def test_baseline_ratios_only_at_the_baseline_cores():
+    """baseline_ratio/regressions compare against BENCH_BASELINE.json
+    only on a session with the core count its protocol names."""
+    doc = json.loads((REPO / "BENCH_BASELINE.json").read_text())
+    assert "local[32]" in doc["provenance"]["protocol"]
+    assert baseline_comparable(doc, 32)
+    assert not baseline_comparable(doc, 4)
+    assert not baseline_comparable(doc, 320)
+    # a baseline that names no local[N] keeps the ratios
+    assert baseline_comparable({"queries": {}}, 4)
+    assert baseline_comparable({"provenance": {"protocol": "best of 3"}}, 4)
+
+
+def test_plan_noise_drops_the_checkout_path():
+    line = f"Location: InMemoryFileIndex(1 paths)[file:{REPO}/.scratch/ivf_index/sf0.01]"
+    for pat, repl in _PLAN_NOISE:
+        line = pat.sub(repl, line)
+    assert line == "Location: InMemoryFileIndex(1 paths)[file:<repo>/.scratch/ivf_index/sf0.01]"
+
+
 @pytest.mark.slow
 def test_bench_stdout_is_one_json_line():
     """End-to-end at the smoke SF: stdout must be exactly one line and
@@ -95,4 +115,5 @@ def test_bench_stdout_is_one_json_line():
     assert out["metric"] == "catalog_suite_wall"
     assert out["unit"] == "sec"
     assert isinstance(out["queries"], dict) and len(out["queries"]) == 50
+    assert out["cpus"] == int(env["SPARK_GRAFT_CPUS"])
     assert not out.get("errors"), out.get("errors")

@@ -609,6 +609,70 @@ def test_dedup_survivors(spark):
     assert surv[3] == (3, 1)
 
 
+def _sort_fallback_tasks(jdf) -> int:
+    """Tasks in which an executed ObjectHashAggregate switched to its
+    sort-based fallback, summed over the plan (through AQE stages and
+    cached relations)."""
+    total, stack = 0, [jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "ObjectHashAggregateExec":
+            total += node.metrics().apply("numTasksFallBacked").value()
+        elif cls == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif cls == "InMemoryTableScanExec":
+            stack.append(node.relation().cachedPlan())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return total
+
+
+def test_jaccard_multi_mb_document_under_sort_fallback(spark):
+    """A 2.3 MB document is one collect_list group holding ~400k
+    (df, shingle) structs. With the object-agg fallback threshold
+    lowered to 1 key, every aggregating task sorts its buffers instead
+    of hashing them; the pairs must equal the default threshold's."""
+    import random
+
+    from bench import reset_caches
+    from bigdata_commerce_spark.operators.dedup import jaccard_pairs
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(5000)]
+    small = " ".join(rng.choice(vocab) for _ in range(60))
+    docs = spark.createDataFrame(
+        [
+            (1, " ".join(rng.choice(vocab) for _ in range(400_000))),
+            (3, small),
+            (4, small + " tail"),
+            (5, "a b c d e f g h"),
+            (6, "p q r s t u v w"),
+        ],
+        "doc_id long, text string",
+    )
+
+    def run():
+        reset_caches(spark)
+        q = jaccard_pairs(docs, threshold=0.8)
+        return sorted(q.collect()), _sort_fallback_tasks(q._jdf)
+
+    key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    default, default_fallbacks = run()
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        lowered, lowered_fallbacks = run()
+    finally:
+        spark.conf.set(key, prev)
+        reset_caches(spark)
+    assert [(r.id1, r.id2, r.jaccard) for r in default] == [(3, 4, 0.9831)]
+    assert lowered == default
+    assert default_fallbacks == 0 and lowered_fallbacks > 0
+
+
 def test_corpus_curation_consistent_with_standalone_ops(spark):
     """curate() must equal the composition of the standalone operators
     it fuses: quality gate, language gate, exact-dedup min-id survivor

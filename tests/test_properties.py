@@ -49,6 +49,29 @@ def test_sessionize_partitions_events(spark, seed):
             assert b.start_time > a.end_time
 
 
+def test_session_aggregates_cross_user_session_id(spark):
+    """An externally assigned session id shared by two users yields
+    one row per (user, session), each over that user's events only."""
+    t0 = datetime(2024, 1, 1)
+    ev = spark.createDataFrame(
+        [
+            (1, "s1", t0),
+            (1, "s1", t0 + timedelta(seconds=60)),
+            (2, "s1", t0 + timedelta(seconds=10)),
+            (2, "s1", t0 + timedelta(seconds=130)),
+            (2, "s1", t0 + timedelta(seconds=70)),
+            (2, "s2", t0 + timedelta(seconds=500)),
+        ],
+        "user_id long, session_id string, ts timestamp",
+    )
+    got = sorted(tuple(r) for r in session_aggregates(ev).collect())
+    assert got == [
+        ("s1", 1, t0, t0 + timedelta(seconds=60), 2, 60),
+        ("s1", 2, t0 + timedelta(seconds=10), t0 + timedelta(seconds=130), 3, 120),
+        ("s2", 2, t0 + timedelta(seconds=500), t0 + timedelta(seconds=500), 1, 0),
+    ]
+
+
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_sessionize_bucketed_equals_exact(spark, seed):
     """The skew-bounded (time-bucketized) sessionizer must emit the
