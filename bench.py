@@ -49,6 +49,7 @@ REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
 from bigdata_commerce_spark import get_spark  # noqa: E402
+from bigdata_commerce_spark.operators.cache_util import reset_caches  # noqa: E402
 from bigdata_commerce_spark.plans import QUERIES, TWIN_QUERIES  # noqa: E402
 
 # The pinned suite spans both registries (see module docstring); they
@@ -186,35 +187,6 @@ def baseline_comparable(baseline: dict, cpus: int) -> bool:
     protocol = baseline.get("provenance", {}).get("protocol", "")
     m = re.search(r"local\[(\d+)\]", protocol)
     return m is None or int(m.group(1)) == cpus
-
-
-def reset_caches(spark) -> None:
-    """Cold-honest shot boundary (VERDICT r12 item 1): drop every
-    in-session data cache so the next timed collect pays for
-    materializing its own persists. Covers the two cache layers the
-    operators use: the bounded persist registry (cache_util, which
-    also holds the cross-query pairs frame) and the Spark catalog
-    cache itself (which also catches raw .persist() calls inside
-    iterative operators). JVM/codegen/scheduler warmth is NOT
-    reset — re-shots stay warm in every sense except data caches,
-    which is the quantity the suite claims to measure.
-
-    Every drop is BLOCKING: async unpersist floods the block manager
-    with removal RPCs that stall the NEXT job's scheduling (measured:
-    random 7-22 s spikes on trivial collects in the cold loop at
-    sf0.01 — heavy_hitter_users recorded 15-22 s for a 10-row window).
-    clearCache() is async by API, so any RDD still registered after it
-    gets a second, blocking unpersist via the JVM handle."""
-    from bigdata_commerce_spark.operators.cache_util import release_all
-
-    release_all(blocking=True)
-    spark.catalog.clearCache()
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in list(jmap.values()):
-            jrdd.unpersist(True)
-    except Exception:  # noqa: BLE001 — py4j surface, never fail the bench
-        pass
 
 
 def time_query(fn, spark, sf_dir: str) -> tuple[float, str]:

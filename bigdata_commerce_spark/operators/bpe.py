@@ -114,9 +114,9 @@ def train_bpe(
     cur = vocab.select(
         _initial_symbols(F.col("word")).alias("syms"), F.col("freq")
     ).persist()
-    cur.count()  # materialize before the loop
     merges: list[tuple[str, str]] = []
     try:
+        cur.count()  # materialize before the loop
         for it in range(num_merges):
             pairs = cur.select(
                 F.explode(
@@ -148,9 +148,11 @@ def train_bpe(
             if (it + 1) % checkpoint_every == 0:
                 nxt = nxt.localCheckpoint(eager=True)
             nxt = nxt.persist()
-            nxt.count()
-            cur.unpersist()
-            cur = nxt
+            try:
+                nxt.count()
+            finally:
+                cur.unpersist()
+                cur = nxt
     finally:
         cur.unpersist()
     return merges

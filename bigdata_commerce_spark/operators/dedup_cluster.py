@@ -48,78 +48,78 @@ def connected_components(
     Returns (node_col, 'cluster_id').
     """
     raw = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")).persist()
-    n_edges = raw.count()
-
-    if n_edges <= small_graph_threshold:
-        # Small graph: collect the raw (un-symmetrized, possibly
-        # duplicated) edges straight to the driver — union-find doesn't
-        # need the distinct/symmetrize shuffle the distributed loop
-        # does.
-        spark = nodes.sparkSession
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        edge_rows = raw.collect()
-        raw.unpersist()
-        for r in edge_rows:
-            ra, rb = find(r.a), find(r.b)
-            if ra != rb:
-                # union by min: the surviving root is the smaller id,
-                # so every final root IS the component minimum
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        members = {x for r in edge_rows for x in (r.a, r.b)}
-        labels_local = [(x, find(x)) for x in members]
-        id_type = nodes.schema[node_col].dataType.simpleString()
-        # One local DF + one broadcast LEFT join: edge-nodes take
-        # their union-find label, everything else falls through
-        # coalesce to its own id (singletons). Parallelize the local
-        # list as ONE slice: plain createDataFrame splits it into
-        # defaultParallelism Python-RDD slices, each costing a
-        # Python-worker round-trip to evaluate — and coalesce(1)
-        # makes that *worse* (one task evaluates all slices serially;
-        # measured ~7 s for 25 rows on local[32]).
-        labels = spark.createDataFrame(
-            spark.sparkContext.parallelize(labels_local or [], 1),
-            f"a {id_type}, label {id_type}",
-        )
-        return (
-            nodes.select(F.col(node_col).alias("a"))
-            .join(F.broadcast(labels), "a", "left")
-            .select(
-                F.col("a").alias(node_col),
-                F.coalesce("label", F.col("a")).alias("cluster_id"),
-            )
-        )
-
-    sym = (
-        raw.unionByName(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        # Materialize once via persist (NOT localCheckpoint: that goes
-        # through the RDD path and bypasses AQE's optimized shuffles,
-        # measured 4x slower on a Jaccard-derived edge list). The edge
-        # list is consumed every iteration; leaving it lazy re-runs
-        # the upstream near-dup pipeline per round.
-        .persist()
-    )
-    sym.count()
-    # Only nodes with edges participate in propagation; isolated nodes
-    # are singleton clusters by definition and skip the loop entirely
-    # (on a dedup graph that's the overwhelming majority).
-    # localCheckpoint (eager): consumed again by the singleton
-    # anti-join AFTER sym is unpersisted below — a lazy plan there
-    # would re-run the whole upstream pair pipeline.
-    edge_nodes = sym.select("a").distinct().localCheckpoint()
-    labels = edge_nodes.select("a", F.col("a").alias("label"))
-    changed = -1
+    sym = None
     try:
+        n_edges = raw.count()
+
+        if n_edges <= small_graph_threshold:
+            # Small graph: collect the raw (un-symmetrized, possibly
+            # duplicated) edges straight to the driver — union-find doesn't
+            # need the distinct/symmetrize shuffle the distributed loop
+            # does.
+            spark = nodes.sparkSession
+            parent: dict = {}
+
+            def find(x):
+                root = x
+                while parent.get(root, root) != root:
+                    root = parent[root]
+                while parent.get(x, x) != x:  # path compression
+                    parent[x], x = root, parent[x]
+                return root
+
+            edge_rows = raw.collect()
+            for r in edge_rows:
+                ra, rb = find(r.a), find(r.b)
+                if ra != rb:
+                    # union by min: the surviving root is the smaller id,
+                    # so every final root IS the component minimum
+                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
+                    parent[hi] = lo
+            members = {x for r in edge_rows for x in (r.a, r.b)}
+            labels_local = [(x, find(x)) for x in members]
+            id_type = nodes.schema[node_col].dataType.simpleString()
+            # One local DF + one broadcast LEFT join: edge-nodes take
+            # their union-find label, everything else falls through
+            # coalesce to its own id (singletons). Parallelize the local
+            # list as ONE slice: plain createDataFrame splits it into
+            # defaultParallelism Python-RDD slices, each costing a
+            # Python-worker round-trip to evaluate — and coalesce(1)
+            # makes that *worse* (one task evaluates all slices serially;
+            # measured ~7 s for 25 rows on local[32]).
+            labels = spark.createDataFrame(
+                spark.sparkContext.parallelize(labels_local or [], 1),
+                f"a {id_type}, label {id_type}",
+            )
+            return (
+                nodes.select(F.col(node_col).alias("a"))
+                .join(F.broadcast(labels), "a", "left")
+                .select(
+                    F.col("a").alias(node_col),
+                    F.coalesce("label", F.col("a")).alias("cluster_id"),
+                )
+            )
+
+        sym = (
+            raw.unionByName(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
+            .distinct()
+            # Materialize once via persist (NOT localCheckpoint: that goes
+            # through the RDD path and bypasses AQE's optimized shuffles,
+            # measured 4x slower on a Jaccard-derived edge list). The edge
+            # list is consumed every iteration; leaving it lazy re-runs
+            # the upstream near-dup pipeline per round.
+            .persist()
+        )
+        sym.count()
+        # Only nodes with edges participate in propagation; isolated nodes
+        # are singleton clusters by definition and skip the loop entirely
+        # (on a dedup graph that's the overwhelming majority).
+        # localCheckpoint (eager): consumed again by the singleton
+        # anti-join AFTER sym is unpersisted below — a lazy plan there
+        # would re-run the whole upstream pair pipeline.
+        edge_nodes = sym.select("a").distinct().localCheckpoint()
+        labels = edge_nodes.select("a", F.col("a").alias("label"))
+        changed = -1
         for _ in range(max_iterations):
             neighbor_min = (
                 sym.join(labels.withColumnRenamed("a", "b"), "b")
@@ -171,12 +171,14 @@ def connected_components(
             F.col("a").alias(node_col), F.col("label").alias("cluster_id")
         )
     finally:
-        # labels/edge_nodes are localCheckpoint-ed (lineage cut), so
-        # the cached edge lists are no longer needed on ANY exit —
-        # including the non-convergence raise, where leaking them
-        # would accumulate storage across retry attempts
+        # the small-graph result is a local frame and labels/edge_nodes
+        # are localCheckpoint-ed (lineage cut), so the cached edge lists
+        # are no longer needed on ANY exit — including a failing edge
+        # count and the non-convergence raise, where leaking them would
+        # accumulate storage across retry attempts
         raw.unpersist()
-        sym.unpersist()
+        if sym is not None:
+            sym.unpersist()
 
 
 def dedup_survivors(

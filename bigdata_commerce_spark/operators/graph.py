@@ -73,53 +73,62 @@ def pagerank(
     # per-iteration join is edges+degree x ranks only.
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     e = e.join(out_deg, "src").repartition("src").persist()
-    n_nodes = nodes.count()  # also materializes the node set
-    if n_nodes == 0:
-        # empty link graph (a crawl slice with no extracted edges is
-        # routine): empty result, not a ZeroDivisionError
-        e.unpersist()
-        # preserve the caller's node type (ids may be strings/URLs)
-        return nodes.select("node", F.lit(0.0).alias("rank")).limit(0)
-
-    nodes = nodes.repartition("node").persist()
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-
+    # every persisted frame is released on every exit, the error
+    # paths included
+    held = [e]
     live_contribs: list[DataFrame] = []
-    for i in range(iterations):
-        # The ONE edges-x-ranks join + aggregate per iteration,
-        # persisted because TWO consumers need it (the dangling-mass
-        # scalar and the rank update) — unpersisted at the next
-        # checkpoint, once nothing can re-reference it.
-        contribs = (
-            e.join(ranks, e.src == F.col("node"))
-            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_sum"))
-            .persist()
-        )
-        live_contribs.append(contribs)
-        # Dangling mass = 1 - what left through edges this round
-        # (total received == total sent, so the SAME aggregate serves;
-        # a second join here measured ~2x per-iteration wall). The
-        # collect is ONE float and doubles as the materialization of
-        # the persisted aggregate — the Pregel-loop cadence: each
-        # iteration computes exactly its own join+agg, the plan stays
-        # linear in iterations.
-        sent = contribs.agg(F.coalesce(F.sum("in_sum"), F.lit(0.0))).collect()[0][0]
-        dm = 1.0 - sent
-        ranks = nodes.join(contribs, "node", "left").select(
-            "node",
-            (
-                F.lit((1.0 - damping) / n_nodes)
-                + F.lit(damping)
-                * (F.coalesce(F.col("in_sum"), F.lit(0.0)) + F.lit(dm / n_nodes))
-            ).alias("rank"),
-        )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-            for c in live_contribs:
-                c.unpersist()
-            live_contribs = []
-    e.unpersist()
-    nodes.unpersist()
-    return ranks
+    try:
+        n_nodes = nodes.count()  # also materializes the node set
+        if n_nodes == 0:
+            # empty link graph (a crawl slice with no extracted edges is
+            # routine): empty result, not a ZeroDivisionError; preserve
+            # the caller's node type (ids may be strings/URLs)
+            return nodes.select("node", F.lit(0.0).alias("rank")).limit(0)
+
+        nodes = nodes.repartition("node").persist()
+        held.append(nodes)
+        ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
+
+        for i in range(iterations):
+            # The ONE edges-x-ranks join + aggregate per iteration,
+            # persisted because TWO consumers need it (the dangling-mass
+            # scalar and the rank update) — unpersisted at the next
+            # checkpoint, once nothing can re-reference it.
+            contribs = (
+                e.join(ranks, e.src == F.col("node"))
+                .select(
+                    F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c")
+                )
+                .groupBy("node")
+                .agg(F.sum("c").alias("in_sum"))
+                .persist()
+            )
+            live_contribs.append(contribs)
+            # Dangling mass = 1 - what left through edges this round
+            # (total received == total sent, so the SAME aggregate serves;
+            # a second join here measured ~2x per-iteration wall). The
+            # collect is ONE float and doubles as the materialization of
+            # the persisted aggregate — the Pregel-loop cadence: each
+            # iteration computes exactly its own join+agg, the plan stays
+            # linear in iterations.
+            sent = (
+                contribs.agg(F.coalesce(F.sum("in_sum"), F.lit(0.0))).collect()[0][0]
+            )
+            dm = 1.0 - sent
+            ranks = nodes.join(contribs, "node", "left").select(
+                "node",
+                (
+                    F.lit((1.0 - damping) / n_nodes)
+                    + F.lit(damping)
+                    * (F.coalesce(F.col("in_sum"), F.lit(0.0)) + F.lit(dm / n_nodes))
+                ).alias("rank"),
+            )
+            if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
+                ranks = ranks.localCheckpoint(eager=True)
+                for c in live_contribs:
+                    c.unpersist()
+                live_contribs = []
+        return ranks
+    finally:
+        for df in held + live_contribs:
+            df.unpersist()

@@ -158,50 +158,58 @@ def train_logreg(
         F.col(id_col), F.col(label_col).cast("double").alias("__y")
     )
     feats = hashed_features(df, n_buckets, text_col=text_col, id_col=id_col).persist()
-    n_docs = labels.count()
-    if n_docs == 0:
-        raise ValueError("train_logreg needs at least one labeled document")
-    spark = df.sparkSession
-    w = spark.createDataFrame([], "bucket long, w double")
-    bias = 0.0
-    for it in range(iters):
-        dots = (
-            feats.join(F.broadcast(w), "bucket", "left")
-            .groupBy(id_col)
-            .agg(F.sum(F.col("x") * F.coalesce(F.col("w"), F.lit(0.0))).alias("__dot"))
-        )
-        err = (
-            labels.join(dots, id_col, "left")
-            .select(
-                id_col,
-                (
-                    F.lit(1.0)
-                    / (
+    try:
+        n_docs = labels.count()
+        if n_docs == 0:
+            raise ValueError("train_logreg needs at least one labeled document")
+        spark = df.sparkSession
+        w = spark.createDataFrame([], "bucket long, w double")
+        bias = 0.0
+        for it in range(iters):
+            dots = (
+                feats.join(F.broadcast(w), "bucket", "left")
+                .groupBy(id_col)
+                .agg(
+                    F.sum(F.col("x") * F.coalesce(F.col("w"), F.lit(0.0))).alias("__dot")
+                )
+            )
+            err = (
+                labels.join(dots, id_col, "left")
+                .select(
+                    id_col,
+                    (
                         F.lit(1.0)
-                        + F.exp(-(F.coalesce(F.col("__dot"), F.lit(0.0)) + F.lit(bias)))
-                    )
-                    - F.col("__y")
-                ).alias("__e"),
+                        / (
+                            F.lit(1.0)
+                            + F.exp(
+                                -(F.coalesce(F.col("__dot"), F.lit(0.0)) + F.lit(bias))
+                            )
+                        )
+                        - F.col("__y")
+                    ).alias("__e"),
+                )
             )
-        )
-        grad = (
-            feats.join(err, id_col)
-            .groupBy("bucket")
-            .agg((F.sum(F.col("x") * F.col("__e")) / F.lit(float(n_docs))).alias("__g"))
-        )
-        bias_grad = err.agg(F.avg("__e")).collect()[0][0]
-        w = (
-            w.join(grad, "bucket", "full")
-            .select(
-                "bucket",
-                (
-                    F.coalesce(F.col("w"), F.lit(0.0))
-                    - F.lit(lr) * F.coalesce(F.col("__g"), F.lit(0.0))
-                ).alias("w"),
+            grad = (
+                feats.join(err, id_col)
+                .groupBy("bucket")
+                .agg(
+                    (F.sum(F.col("x") * F.col("__e")) / F.lit(float(n_docs))).alias("__g")
+                )
             )
-        )
-        bias -= lr * float(bias_grad)
-        if (it + 1) % checkpoint_every == 0 or it == iters - 1:
-            w = w.localCheckpoint()
-    feats.unpersist()
+            bias_grad = err.agg(F.avg("__e")).collect()[0][0]
+            w = (
+                w.join(grad, "bucket", "full")
+                .select(
+                    "bucket",
+                    (
+                        F.coalesce(F.col("w"), F.lit(0.0))
+                        - F.lit(lr) * F.coalesce(F.col("__g"), F.lit(0.0))
+                    ).alias("w"),
+                )
+            )
+            bias -= lr * float(bias_grad)
+            if (it + 1) % checkpoint_every == 0 or it == iters - 1:
+                w = w.localCheckpoint()
+    finally:
+        feats.unpersist()
     return w, bias

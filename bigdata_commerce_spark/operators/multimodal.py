@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bigdata_commerce_spark.operators.cache_util import persist_bounded
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -432,21 +434,6 @@ def media_phash_pairs(df: DataFrame, max_hamming: int = 1) -> DataFrame:
     return phash_hamming_pairs(h, FEATURE_DIM, max_hamming)
 
 
-# The pair ops persist their narrow (id, hash) input so the band
-# union pays ONE image decode per image instead of 2 x bands — but
-# the returned pairs frame is lazy, so the operator cannot unpersist
-# before the caller consumes it. The shared bounded registry
-# (operators/cache_util.py — VERDICT r11 hygiene item) evicts and
-# unpersists the oldest cached input past the bound, so a long-lived
-# session holds a fixed number of these ~40 B/row frames no matter
-# how many times the ops run.
-from bigdata_commerce_spark.operators.cache_util import (  # noqa: E402
-    PERSIST_BOUND as _PERSIST_BOUND,
-    _PERSISTED_INPUTS,
-    persist_bounded as _persist_bounded,
-)
-
-
 def phash_hamming_pairs(
     h: DataFrame, n_bits: int, max_hamming: int = 1
 ) -> DataFrame:
@@ -463,8 +450,8 @@ def phash_hamming_pairs(
     made manually with localCheckpoint. The cached frame is just
     (media_id, phash): ~16 bytes a row, memory-and-disk safe at any
     corpus size. Cache lifetime is bounded (VERDICT r11): see
-    ``_persist_bounded`` — repeated calls evict-and-unpersist the
-    oldest input past a fixed bound instead of accumulating."""
+    ``cache_util.persist_bounded`` — repeated calls evict-and-unpersist
+    the oldest input past a fixed bound instead of accumulating."""
     bands = max_hamming + 1
     if n_bits % bands:
         raise ValueError(
@@ -476,7 +463,7 @@ def phash_hamming_pairs(
     def band(col: str, j: int):
         return F.shiftrightunsigned(F.col(col), j * width).bitwiseAND(F.lit(mask))
 
-    h = _persist_bounded(h.select("media_id", "phash"))
+    h = persist_bounded(h.select("media_id", "phash"))
     a = h.select(F.col("media_id").alias("media_a"), F.col("phash").alias("__pa"))
     b = h.select(F.col("media_id").alias("media_b"), F.col("phash").alias("__pb"))
     cands = None
@@ -603,16 +590,16 @@ def phash_words_hamming_pairs(
     per image — the cache makes it ONE (the round-10 scale probe's
     manual localCheckpoint, now built in). Cached frame is
     (media_id, phash_words): ~40 bytes a row at 256 bits. Cache
-    lifetime is bounded (VERDICT r11): see ``_persist_bounded`` —
-    repeated calls evict-and-unpersist the oldest input past a fixed
-    bound instead of accumulating."""
+    lifetime is bounded (VERDICT r11): see
+    ``cache_util.persist_bounded`` — repeated calls evict-and-unpersist
+    the oldest input past a fixed bound instead of accumulating."""
     bands = max_hamming + 1
     if n_words % bands:
         raise ValueError(
             f"max_hamming+1 must divide n_words (got {bands} over {n_words})"
         )
     width = n_words // bands
-    h = _persist_bounded(h.select("media_id", "phash_words"))
+    h = persist_bounded(h.select("media_id", "phash_words"))
     a = h.select(
         F.col("media_id").alias("media_a"), F.col("phash_words").alias("__pa")
     )

@@ -25,23 +25,11 @@ def rollup_ladder(
     ts_col: str = "event_time",
     key_cols: list[str] | None = None,
     value_col: str | None = None,
-    persist: bool = False,
 ) -> dict[str, DataFrame]:
     """Build the minute/hour/day ladder. Each level carries
     (bucket, keys, event_count, value_sum) — the mergeable form.
     Only the minute level touches the raw events; each coarser level
-    re-aggregates the previous one.
-
-    ``persist=True`` caches the minute level (bounded registry —
-    operators/cache_util) before deriving the coarser levels. A
-    caller that consumes several levels in ONE plan (the
-    event_rollup_ladder union) does NOT need it: AQE's runtime stage
-    reuse dedups the identical minute partial-agg exchange across the
-    branches (ReusedExchange in the executed plan), so raw is scanned
-    once either way and the cache only adds a blocking in-memory
-    materialization (measured slower at sf0.1 — r13). persist=True
-    remains for callers that consume levels in SEPARATE actions,
-    where no single plan exists for stage reuse to work on."""
+    re-aggregates the previous one."""
     key_cols = key_cols or []
     base_val = (
         F.col(value_col) if value_col is not None else F.lit(1).cast("bigint")
@@ -55,10 +43,6 @@ def rollup_ladder(
             F.sum(base_val).alias("value_sum"),
         )
     )
-    if persist:
-        from bigdata_commerce_spark.operators.cache_util import persist_bounded
-
-        minute = persist_bounded(minute)
     ladder = {"minute": minute}
     finer = minute
     for level in ("hour", "day"):

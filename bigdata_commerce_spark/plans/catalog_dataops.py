@@ -1735,16 +1735,7 @@ def event_rollup_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_commerce_spark.operators.rollup_hierarchy import rollup_ladder
 
     ev = _events(spark, sf_dir)
-    # persist=False (optimization round 13): AQE reuses the minute
-    # level's shuffle stage across the three union branches at runtime
-    # (executed plan shows ReusedExchange on the minute partial-agg
-    # exchange, and again hour->day), so the one-raw-scan contract
-    # holds WITHOUT materializing a cache — the r12 persist paid a
-    # blocking in-memory materialization per run that stage reuse gets
-    # for free (measured 1.83 -> 1.37 s min-of-6 at sf0.1, same box).
-    ladder = rollup_ladder(
-        ev, ts_col="ts", key_cols=["province"], value_col="ad_id", persist=False
-    )
+    ladder = rollup_ladder(ev, ts_col="ts", key_cols=["province"], value_col="ad_id")
     out = None
     for lvl, df in ladder.items():
         tagged = df.select(

@@ -48,6 +48,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from bigdata_commerce_spark import get_spark  # noqa: E402
+from bigdata_commerce_spark.operators.cache_util import reset_caches  # noqa: E402
 
 SCRATCH = Path(__file__).resolve().parent / ".scratch" / "scale_probe"
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -263,8 +264,6 @@ def resolve_queries(argv: list[str]) -> dict:
 
 def main() -> None:
     queries = resolve_queries(sys.argv[1:])
-    from bench import reset_caches
-
     spark = get_spark(app_name="scale_probe")
     docs10, emb10 = build_corpus(spark)
     sf1 = build_relational_corpus(spark, docs10, emb10, 1)

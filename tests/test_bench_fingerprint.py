@@ -37,14 +37,14 @@ def test_headline_fingerprints_deterministic(spark):
     pairwise distinct (a normalization that collapsed real plan
     differences would be useless as a drift detector).
 
-    The pass boundary resets ALL data-cache layers via the bench's own
-    ``reset_caches`` — the persist registry (which holds the pairs
-    frame) AND the catalog cache — exactly the state the bench resets
-    between timed shots — so both passes plan in the same cache
+    The pass boundary resets ALL data-cache layers via
+    ``cache_util.reset_caches`` — the persist registry (which holds the
+    pairs frame) AND Spark's cache — the call the bench makes between
+    timed shots — so both passes plan in the same cache
     environment, and a difference is a fingerprint instability rather
     than a later query (dedup_minhash_lsh, dedup_simhash) planning
     against a shared subtree an earlier pass left cached."""
-    from bench import reset_caches
+    from bigdata_commerce_spark.operators.cache_util import reset_caches
 
     names = headline_names()
 

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -104,6 +106,20 @@ def test_early_stop_when_pairs_exhaust(spark):
     merges = bpe.train_bpe(_vocab_df(spark, freqs), 100, min_pair_freq=2)
     # (a,b) then (ab,EOW) merge at freq 5, then nothing is left
     assert 0 < len(merges) < 100
+
+
+def test_failed_training_releases_its_vocab(spark):
+    """A vocab that fails to compute leaves no cached symbol table
+    behind: the persisted frame is released on every exit."""
+    vocab = _vocab_df(spark, {"ab": 3}).withColumn(
+        "freq", F.raise_error(F.lit("bad freq")).cast("long")
+    )
+    with pytest.raises(Exception, match="bad freq"):
+        bpe.train_bpe(vocab, 2)
+    syms = vocab.select(
+        bpe._initial_symbols(F.col("word")).alias("syms"), F.col("freq")
+    )
+    assert syms.storageLevel == StorageLevel.NONE
 
 
 def test_encoder_lossless_and_matches_reference(spark):

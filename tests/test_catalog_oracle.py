@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from bigdata_commerce_spark.operators import cache_util
 from bigdata_commerce_spark.plans import ORACLES, QUERIES
 from tests.conftest import SF_SMOKE
 from tests.oracle_utils import assert_driver_compatible, compare_to_oracle
@@ -18,9 +19,16 @@ def test_query_matches_oracle(spark, name):
 
 
 def test_all_queries_run(spark):
+    """Every driver query runs, and the pass leaks no cache: the only
+    persisted RDDs it may add are the persist registry's live entries,
+    since every other persist is released by the operator that made
+    it."""
+    jsc = spark.sparkContext._jsc
+    base = jsc.getPersistentRDDs().size()
     for name, fn in QUERIES.items():
         n = fn(spark, SF_SMOKE).count()
         assert n >= 0, name
+    assert jsc.getPersistentRDDs().size() - base <= len(cache_util._REGISTRY)
 
 
 def test_driver_catalog_emits_only_scalar_columns(spark):

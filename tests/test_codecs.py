@@ -553,10 +553,11 @@ def test_banded_pair_ops_cache_is_bounded(spark):
     """VERDICT r11 hygiene item: the pair ops' built-in persist()
     must not accumulate one cache entry per call for the session
     lifetime — repeated calls (the 147-query suite, a notebook) keep
-    at most _PERSIST_BOUND inputs live, the oldest unpersisted on
+    at most PERSIST_BOUND inputs live, the oldest unpersisted on
     eviction. Counts live cache entries via the JVM's persistent-RDD
     registry; runs BOTH kernels interleaved so the shared bound is
     the thing pinned."""
+    from bigdata_commerce_spark.operators import cache_util
     from bigdata_commerce_spark.operators import multimodal as mm
 
     def n_persistent() -> int:
@@ -584,8 +585,8 @@ def test_banded_pair_ops_cache_is_bounded(spark):
         ).collect()
     # 12 calls happened; live entries grew by at most the bound (other
     # suite fixtures may hold their own caches — measure the delta)
-    assert n_persistent() - base <= mm._PERSIST_BOUND
-    assert len(mm._PERSISTED_INPUTS) <= mm._PERSIST_BOUND
+    assert n_persistent() - base <= cache_util.PERSIST_BOUND
+    assert len(cache_util._REGISTRY) <= cache_util.PERSIST_BOUND
 
 
 def _hk_clip(freqs, bed, sr=16000):

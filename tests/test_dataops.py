@@ -637,7 +637,7 @@ def test_jaccard_multi_mb_document_under_sort_fallback(spark):
     of hashing them; the pairs must equal the default threshold's."""
     import random
 
-    from bench import reset_caches
+    from bigdata_commerce_spark.operators.cache_util import reset_caches
     from bigdata_commerce_spark.operators.dedup import jaccard_pairs
 
     rng = random.Random(7)
