@@ -12,12 +12,19 @@ Layout:
   session.py    SparkSession factory tuned for local[32] tests and
                 cluster-scale defaults (AQE, Arrow, shuffle sizing)
   sources/      typed ingest: testdata loaders, seeded commerce
-                fixture generator, JDBC/stream helpers
+                fixture generator, snapshot store, JDBC/Hive sinks
   operators/    pure DataFrame -> DataFrame operators mirroring
                 SURVEY.md §2 plus the training-data extensions
   functions/    scalar column helpers (sentinel handling, buckets)
-  plans/        the ten reference "requirements" as compositions
-  streaming/    Structured Streaming pipelines (reqs 7-10)
+  plans/        the query registry: the reference's requirements
+                (reqs 1-6 as commerce twins) and every operator
+                as a named query with its DuckDB oracle
+  streaming/    the ad-click topology (reqs 7-10) and its parquet
+                and JDBC state sinks
+
+Every module is reached from an entry point (plans, __main__,
+streaming.pipelines, bench.py, scale_probe.py) or allow-listed with a
+reason in tests/test_reachability.py.
 """
 
 from bigdata_commerce_spark.session import get_spark

@@ -11,22 +11,13 @@ calls pay.
 
 Totality discipline: ``try_parse_json`` — a malformed payload becomes
 a NULL variant (and NULL extractions) instead of an ANSI-mode job
-abort; ``malformed_json_report`` quantifies exactly how many rows
-took that path (the conform_schema/try_cast posture applied to JSON).
+abort (the conform_schema/try_cast posture applied to JSON).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def parse_json_variant(
-    df: DataFrame, json_col: str, out_col: str = "v"
-) -> DataFrame:
-    """Add a VARIANT column parsed from a JSON string column —
-    malformed JSON yields NULL, never an error."""
-    return df.withColumn(out_col, F.try_parse_json(F.col(json_col)))
 
 
 def variant_extract(
@@ -47,36 +38,3 @@ def variant_extract(
     for name, (path, typ) in fields.items():
         out = out.withColumn(name, F.try_variant_get(F.col("__v"), path, typ))
     return out if keep_variant else out.drop("__v")
-
-
-def malformed_json_report(df: DataFrame, json_col: str) -> DataFrame:
-    """One row: (n_rows, n_null_input, n_malformed, malformed_frac) —
-    how much of the payload column failed to parse (NULL inputs are
-    counted separately; they are absent data, not bad data). One
-    aggregate, map-side combined."""
-    raw = F.col(json_col)
-    parsed = F.try_parse_json(raw)
-    return df.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(raw.isNull(), 1).otherwise(0)).cast("bigint").alias(
-            "n_null_input"
-        ),
-        F.sum(F.when(raw.isNotNull() & parsed.isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_malformed"),
-        F.round(
-            F.coalesce(
-                F.sum(F.when(raw.isNotNull() & parsed.isNull(), 1).otherwise(0))
-                / F.sum(F.when(raw.isNotNull(), 1).otherwise(0)),
-                F.lit(0.0),
-            ),
-            6,
-        ).alias("malformed_frac"),
-    )
-
-
-def variant_type_of(vcol: Column | str) -> Column:
-    """The variant value's runtime JSON type as a string (the
-    schema-discovery helper for an unfamiliar payload column)."""
-    c = F.col(vcol) if isinstance(vcol, str) else vcol
-    return F.schema_of_variant(c)

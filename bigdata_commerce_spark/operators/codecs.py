@@ -174,45 +174,3 @@ def resize_nearest(rgb: np.ndarray, width: int, height: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 # WAV (PCM) — stdlib `wave`, dependency-free like BMP/PPM above
 # ---------------------------------------------------------------------------
-
-
-def encode_wav(
-    samples: np.ndarray, sample_rate: int = 16000, n_channels: int = 1
-) -> bytes:
-    """PCM16 WAV bytes from float samples in [-1, 1] (mono: 1-D;
-    multi-channel: shape (n, channels), interleaved on write)."""
-    import io
-    import wave
-
-    pcm = np.clip(np.asarray(samples, dtype="float64"), -1.0, 1.0)
-    ints = (pcm * 32767.0).round().astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(n_channels)
-        w.setsampwidth(2)
-        w.setframerate(sample_rate)
-        w.writeframes(ints.tobytes())
-    return buf.getvalue()
-
-
-def decode_wav(data: bytes) -> tuple[np.ndarray, int, int]:
-    """(samples float64 in [-1,1] shaped (n_frames, n_channels),
-    sample_rate, n_channels) from PCM16 WAV bytes. Raises ValueError
-    on anything that is not 16-bit PCM — the callers' documented
-    decode-failure contract."""
-    import io
-    import wave
-
-    try:
-        with wave.open(io.BytesIO(data), "rb") as w:
-            if w.getsampwidth() != 2:
-                raise ValueError(
-                    f"only PCM16 supported, got sampwidth={w.getsampwidth()}"
-                )
-            n_ch = w.getnchannels()
-            sr = w.getframerate()
-            raw = w.readframes(w.getnframes())
-    except wave.Error as e:
-        raise ValueError(f"not a WAV payload: {e}") from e
-    ints = np.frombuffer(raw, dtype="<i2")
-    return ints.reshape(-1, n_ch).astype("float64") / 32767.0, sr, n_ch

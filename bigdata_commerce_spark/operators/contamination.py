@@ -62,26 +62,3 @@ def contamination_report(
         "bench_ngrams",
         F.round(F.col("shared_ngrams") / F.col("bench_ngrams"), 4).alias("coverage"),
     )
-
-
-def contaminated_ids(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 3,
-    min_coverage: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The decontamination filter form: distinct corpus ids whose
-    coverage of ANY benchmark doc reaches ``min_coverage`` — anti-join
-    this against the corpus to drop them. Same plan as the report plus
-    one cheap distinct over the (rare) flagged ids."""
-    report = contamination_report(corpus, benchmark, n, text_col, id_col)
-    # threshold the UNROUNDED ratio (coverage is rounded for output
-    # only) — same discipline as the neardup cosine verify: a rounded
-    # filter would misclassify docs within 5e-5 of the cutoff
-    return (
-        report.where(F.col("shared_ngrams") / F.col("bench_ngrams") >= min_coverage)
-        .select(F.col("corpus_id").alias(id_col))
-        .distinct()
-    )

@@ -30,17 +30,6 @@ from bigdata_commerce_spark.operators.text import (
 HEX_DIGITS = "0123456789abcdef"
 
 
-def shingle_array(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the normalized text; documents
-    shorter than n tokens use the whole normalized text as the single
-    shingle. The fold itself is the shared ``text.ngram_fold`` (see
-    its docstring for the slice-vs-element_at rationale)."""
-    t = tokens(col)
-    return F.when(F.size(t) >= n, F.array_distinct(ngram_fold(t, n))).otherwise(
-        F.array(normalize_text(col))
-    )
-
-
 def exact_duplicates(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -57,7 +46,7 @@ def _exploded_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> Dat
     """Distinct (id, shingle) pairs, with the tokenizer evaluated
     exactly once per document and **zero shuffles before the distinct**.
 
-    The naive ``explode(shingle_array(...))`` re-runs the regex
+    A naive ``explode`` of a shingle-array expression re-runs the regex
     tokenization per consumer expression: Catalyst's CollapseProject
     inlines a shared token-array alias into every reference. The fix
     is a one-element ``explode(array(struct(tokens, norm)))`` barrier:
@@ -85,7 +74,7 @@ def _exploded_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> Dat
     )
     t = F.col("x.t")
     # documents shorter than n tokens use the whole normalized text as
-    # their single shingle — same contract as shingle_array().
+    # their single shingle.
     arr = F.when(F.size(t) >= n, F.array_distinct(ngram_fold(t, n))).otherwise(
         F.array(F.col("x.norm"))
     )
@@ -357,22 +346,6 @@ def _verify_jaccard(
     )
 
 
-def minhash_hash_exprs(num_hashes: int = 8) -> dict[str, Column]:
-    """Hash family for MinHash: 8-hex-char (32-bit) slices of
-    md5(seed || shingle) — ceil(num_hashes/4) md5 evaluations yield
-    num_hashes independent components instead of one md5 per
-    component. Min over fixed-width lowercase hex == min over the
-    32-bit values, so string min is a faithful minhash and is
-    bit-identical in the oracle."""
-    exprs: dict[str, Column] = {}
-    for i in range(num_hashes):
-        seed, slot = divmod(i, 4)
-        exprs[f"mh_{i}"] = F.substring(
-            F.md5(F.concat(F.lit(f"{seed}:"), F.col("shingle"))), slot * 8 + 1, 8
-        )
-    return exprs
-
-
 def _minhash_digest_barrier(ex: DataFrame, num_hashes: int) -> tuple[DataFrame, list[Column]]:
     """(digest-bound frame, min-aggregates) for the signature agg.
 
@@ -383,9 +356,9 @@ def _minhash_digest_barrier(ex: DataFrame, num_hashes: int) -> tuple[DataFrame, 
     substring(md5(...)) input expression and codegen subexpression
     elimination only partially dedups the md5 calls — measured 13% on
     the isolated signature aggregate at the 10x corpus (0.70 -> 0.61 s
-    median), a pure per-row CPU cut. The md5/substring expressions are
-    byte-identical to minhash_hash_exprs', so signatures are unchanged
-    (oracle twin replays the same SQL)."""
+    median), a pure per-row CPU cut. Component i is the 8-hex-char
+    slice i%4 of md5((i//4) || ':' || shingle); the oracle twin replays
+    the same SQL."""
     n_seeds = (num_hashes + 3) // 4
     bound = ex.select(
         "id",

@@ -34,61 +34,6 @@ def step_transitions(
     return df.withColumn("next_page", F.lead(page_col).over(w))
 
 
-def funnel_conversion(
-    spark: SparkSession,
-    df: DataFrame,
-    flow: Sequence[str],
-    session_col: str = "session_id",
-    ts_col: str = "ts",
-    page_col: str = "page_id",
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """Single-step conversion rate along ``flow`` = [p1, p2, ... pn].
-
-    rate(p_i -> p_{i+1}) = count(sessions' p_i->p_{i+1} transitions)
-    / count(visits of p_i as a flow start), with the reference's
-    chaining semantics: denominator for the first step is the count
-    of p1 occurrences; later steps divide by the previous step's
-    transition count (``PageOneStepConvertRate.scala:96-118``).
-    Missing transitions are 0, not an error.
-    """
-    trans = step_transitions(df, session_col, ts_col, page_col, tiebreak_col)
-    pairs = [(flow[i], flow[i + 1], i + 1) for i in range(len(flow) - 1)]
-    spec = spark.createDataFrame(
-        [(i, a, b, f"{a}_{b}") for a, b, i in pairs],
-        "step int, from_page string, to_page string, split string",
-    )
-    counts = (
-        trans.where(F.col("next_page").isNotNull())
-        .select(
-            F.concat_ws(
-                "_", F.col(page_col).cast("string"), F.col("next_page").cast("string")
-            ).alias("split")
-        )
-        .groupBy("split")
-        .agg(F.count(F.lit(1)).alias("split_count"))
-    )
-    start_count = df.where(F.col(page_col).cast("string") == str(flow[0])).count()
-
-    got = (
-        spec.join(counts, "split", "left")
-        .withColumn("split_count", F.coalesce(F.col("split_count"), F.lit(0)))
-        .orderBy("step")
-    )
-    # Chained denominators are a short driver-side fold over <=10 rows
-    # (the flow length), not a data-sized collect.
-    rows = got.collect()
-    out = []
-    prev = start_count
-    for r in rows:
-        rate = round(r["split_count"] / prev, 2) if prev else 0.0
-        out.append((r["step"], r["split"], int(r["split_count"]), float(rate)))
-        prev = r["split_count"]
-    return spark.createDataFrame(
-        out, "step int, split string, split_count bigint, convert_rate double"
-    )
-
-
 def funnel_counts(
     spark: SparkSession,
     df: DataFrame,

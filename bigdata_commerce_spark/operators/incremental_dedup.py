@@ -19,8 +19,7 @@ the first ``PREFIX_LEN`` hex chars of the md5 fingerprint
   (PartitionFilters, asserted in tests).
 - **Append-only growth**: committing a batch's novel fingerprints is
   a partition-wise append — no rewrite of existing files, no
-  compaction required for correctness (sources/compaction.py handles
-  small-file hygiene separately).
+  compaction required for correctness.
 
 The md5 prefix is uniform by construction, so the partitioning never
 skews no matter how skewed the document keys are.
@@ -28,22 +27,6 @@ skews no matter how skewed the document keys are.
 Within-batch duplicates are also collapsed (keep the min id per
 fingerprint) so one run is idempotent end to end: running the same
 batch twice yields zero novel documents the second time.
-
-**Bloom sidecar** (optional, operators/bloom.py): once the store is
-huge, even the prefix-pruned anti-join reads a slice proportional to
-the batch's prefix spread. ``init_bloom`` persists a Bloom filter of
-the store's fingerprints under ``<store>/_bloom`` (the underscore
-prefix makes it invisible to the store's own parquet reads — Spark
-skips underscore-paths when listing), and ``novel_documents`` then
-probes it map-side: rows the filter rejects are DEFINITELY novel and
-never touch the store; only the "maybe" sliver (true dups + fpp false
-positives) reaches the exact anti-join. Crash-safety ordering in
-``commit_batch``: the sidecar is updated BEFORE the store append —
-a crash in between leaves the bloom with keys the store lacks, which
-are harmless false positives caught by the exact verify; the reverse
-order could yield false NEGATIVES (re-admitted duplicates). A filter
-past its sized capacity only degrades fpp (more exact-verify rows),
-never correctness; ``init_bloom`` rebuilds at a new capacity.
 """
 
 from __future__ import annotations
@@ -95,51 +78,6 @@ def init_store(
     empty.write.partitionBy("fp_prefix").mode("overwrite").parquet(path)
 
 
-BLOOM_DIR = "_bloom"  # underscore prefix: hidden from the store scan
-
-
-def _bloom_paths(store_path: str) -> tuple[str, str]:
-    base = store_path.rstrip("/")
-    return f"{base}/{BLOOM_DIR}/filter", f"{base}/{BLOOM_DIR}/meta"
-
-
-def init_bloom(
-    spark: SparkSession,
-    store_path: str,
-    capacity: int,
-    fpp: float = 0.01,
-    id_col: str = "doc_id",
-) -> None:
-    """Create (or rebuild, e.g. at a larger capacity) the store's
-    Bloom sidecar from its CURRENT contents. ``capacity`` is the
-    expected total fingerprint count the filter is sized for —
-    overshooting it later degrades fpp, never correctness."""
-    from bigdata_commerce_spark.operators import bloom
-
-    m, k = bloom.bloom_params(capacity, fpp)
-    filter_path, meta_path = _bloom_paths(store_path)
-    store = spark.read.schema(store_schema(id_col)).parquet(store_path)
-    filt = bloom.bloom_build(store, "fp", m, k).localCheckpoint(eager=True)
-    filt.write.mode("overwrite").parquet(filter_path)
-    spark.createDataFrame(
-        [(m, k, capacity)], "num_bits long, num_hashes int, capacity long"
-    ).write.mode("overwrite").parquet(meta_path)
-
-
-def _read_bloom(spark: SparkSession, store_path: str):
-    """(filter_df, num_bits, num_hashes) or None when no sidecar
-    exists — callers fall back to the plain pruned anti-join."""
-    from bigdata_commerce_spark.sources.hadoopfs import fs_and_path
-
-    filter_path, meta_path = _bloom_paths(store_path)
-    fs, meta_hpath, _ = fs_and_path(spark, meta_path)
-    if not fs.exists(meta_hpath):
-        return None
-    meta = spark.read.parquet(meta_path).collect()[0]
-    filt = spark.read.parquet(filter_path)
-    return filt, int(meta.num_bits), int(meta.num_hashes)
-
-
 def novel_documents(
     df: DataFrame,
     store_path: str,
@@ -155,9 +93,7 @@ def novel_documents(
     prefixes present in the batch) anti-joined on fp. The batch is
     the small side at steady state — the store never shuffles more
     than the pruned slice, and AQE broadcasts the batch when it
-    fits. When the Bloom sidecar exists (init_bloom), batch rows the
-    filter rejects skip the store entirely; both the prefix collect
-    and the anti-join then see only the "maybe" sliver."""
+    fits."""
     spark = df.sparkSession
     batch = (
         _fingerprints(df, text_col, id_col)
@@ -165,20 +101,11 @@ def novel_documents(
         .agg(F.min(id_col).alias(id_col))
     )
     # Materialize the batch aggregate ONCE (eager checkpoint): the
-    # prefix collect, the anti-join, and (with a sidecar) both probe
-    # branches consume it, and without this the fingerprint
-    # projection + groupBy shuffle runs per consumer. (Checkpoint
-    # rather than persist: the caller may append to the store and
-    # re-execute — see commit_batch's lineage note.)
+    # prefix collect and the anti-join both consume it, and without
+    # this the fingerprint projection + groupBy shuffle runs per
+    # consumer. (Checkpoint rather than persist: the caller may append
+    # to the store and re-execute — see commit_batch's lineage note.)
     batch = batch.localCheckpoint(eager=True)
-    sidecar = _read_bloom(spark, store_path)
-    if sidecar is not None:
-        from bigdata_commerce_spark.operators import bloom
-
-        filt, m, k = sidecar
-        flagged = bloom.bloom_might_contain(batch, "fp", filt, m, k, "__maybe")
-        definite = flagged.where(~F.col("__maybe")).drop("__maybe")
-        batch = flagged.where(F.col("__maybe")).drop("__maybe")
     # Prefix pruning: the distinct prefixes of the batch are <= 256
     # rows by construction — a bounded driver-side collect that turns
     # the store read into a partition-pruned scan.
@@ -186,12 +113,7 @@ def novel_documents(
     store = spark.read.schema(store_schema(id_col)).parquet(store_path).where(
         F.col("fp_prefix").isin(prefixes)
     )
-    verified = batch.join(store, "fp", "left_anti").select(
-        id_col, "fp", "fp_prefix"
-    )
-    if sidecar is not None:
-        return definite.select(id_col, "fp", "fp_prefix").unionByName(verified)
-    return verified
+    return batch.join(store, "fp", "left_anti").select(id_col, "fp", "fp_prefix")
 
 
 def commit_batch(
@@ -219,37 +141,9 @@ def commit_batch(
     # the mutated path. (A multi-session production loop would
     # checkpoint to reliable storage; same idea.)
     novel = novel.localCheckpoint(eager=True)
-    # Sidecar BEFORE store (module docstring): a crash in between
-    # leaves extra keys in the bloom — harmless false positives; the
-    # reverse order could create false negatives (missed duplicates).
-    sidecar = _read_bloom(df.sparkSession, store_path)
-    if sidecar is not None and not novel.isEmpty():
-        from bigdata_commerce_spark.operators import bloom
-
-        filt, m, k = sidecar
-        merged = bloom.bloom_merge(
-            filt, bloom.bloom_build(novel, "fp", m, k)
-        ).localCheckpoint(eager=True)  # materialize before overwriting its own input
-        filter_path, _ = _bloom_paths(store_path)
-        merged.write.mode("overwrite").parquet(filter_path)
     (
         novel.write.partitionBy("fp_prefix")
         .mode("append")
         .parquet(store_path)
     )
     return novel
-
-
-def dedup_commit_sink(store_path: str, text_col: str = "text", id_col: str = "doc_id"):
-    """foreachBatch sink running one fingerprint-store commit per
-    micro-batch: each arriving shard is deduped against EVERYTHING
-    previously ingested (any earlier batch, any earlier run — the
-    store is durable) and only novel fingerprints are appended. The
-    streaming twin of ``commit_batch``; replay of a micro-batch after
-    a restart re-commits the same rows and appends nothing
-    (commit_batch is idempotent by construction)."""
-
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        commit_batch(batch_df, store_path, text_col, id_col)
-
-    return fn

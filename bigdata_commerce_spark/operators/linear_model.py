@@ -4,9 +4,7 @@ model over hashed bag-of-words features).
 
 operators/lm_quality.py scores fluency with a char-bigram LM; this
 module is the *supervised* counterpart — score documents against a
-trained weight vector, and train that vector distributedly when
-labels exist (gold prose vs crawl noise). Both halves are pure
-DataFrame plans:
+trained weight vector. Both halves are pure DataFrame plans:
 
 - **Featurization** (hashing trick, Weinberger et al. 2009): token ->
   bucket via the package's engine-portable md5 machinery
@@ -19,13 +17,6 @@ DataFrame plans:
   SEQUENTIAL FOLD over the bucket-sorted contribution list, so the
   float sum has one defined association order — bit-identical across
   engines/partitionings (the bm25/ewma hash-stability discipline).
-- **Training** (full-batch logistic GD): per iteration, one
-  broadcast-join + doc aggregate (scores), one key aggregate
-  (bucket gradients), one scalar collect (bias gradient — one float,
-  the PageRank dangling-mass pattern). Feature rows are computed ONCE
-  and persisted; iteration cost is independent of vocabulary. Not
-  SQL-expressible (iterative float fixpoint) — verified against a
-  numpy reference instead, the graph.py precedent.
 
 Ref: reference engine has no model scoring at all; spec follows the
 public fastText linear classifier (Joulin et al. 2016) restricted to
@@ -128,88 +119,3 @@ def score_linear(
         F.round(score, 6).alias("score"),
         F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-score)), 6).alias("prob"),
     )
-
-
-def train_logreg(
-    df: DataFrame,
-    n_buckets: int,
-    label_col: str = "label",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    iters: int = 20,
-    lr: float = 1.0,
-    checkpoint_every: int = 5,
-) -> tuple[DataFrame, float]:
-    """Full-batch logistic regression by gradient descent over hashed
-    features. Returns ((bucket, w) DataFrame, bias).
-
-    Loss = mean log-loss over documents; gradients are exact (no
-    sampling), so the result is a deterministic function of the data
-    up to float-sum association (verified against a numpy twin to
-    1e-6 in tests — the PageRank verification posture). Per
-    iteration: broadcast current weights -> per-doc score aggregate ->
-    per-doc error -> per-bucket gradient aggregate + ONE collected
-    float (bias gradient). The feature table is computed once and
-    persisted; weight lineage is truncated by localCheckpoint every
-    ``checkpoint_every`` iterations (graph.py cadence) so the plan
-    does not grow with the iteration count.
-    """
-    labels = df.select(
-        F.col(id_col), F.col(label_col).cast("double").alias("__y")
-    )
-    feats = hashed_features(df, n_buckets, text_col=text_col, id_col=id_col).persist()
-    try:
-        n_docs = labels.count()
-        if n_docs == 0:
-            raise ValueError("train_logreg needs at least one labeled document")
-        spark = df.sparkSession
-        w = spark.createDataFrame([], "bucket long, w double")
-        bias = 0.0
-        for it in range(iters):
-            dots = (
-                feats.join(F.broadcast(w), "bucket", "left")
-                .groupBy(id_col)
-                .agg(
-                    F.sum(F.col("x") * F.coalesce(F.col("w"), F.lit(0.0))).alias("__dot")
-                )
-            )
-            err = (
-                labels.join(dots, id_col, "left")
-                .select(
-                    id_col,
-                    (
-                        F.lit(1.0)
-                        / (
-                            F.lit(1.0)
-                            + F.exp(
-                                -(F.coalesce(F.col("__dot"), F.lit(0.0)) + F.lit(bias))
-                            )
-                        )
-                        - F.col("__y")
-                    ).alias("__e"),
-                )
-            )
-            grad = (
-                feats.join(err, id_col)
-                .groupBy("bucket")
-                .agg(
-                    (F.sum(F.col("x") * F.col("__e")) / F.lit(float(n_docs))).alias("__g")
-                )
-            )
-            bias_grad = err.agg(F.avg("__e")).collect()[0][0]
-            w = (
-                w.join(grad, "bucket", "full")
-                .select(
-                    "bucket",
-                    (
-                        F.coalesce(F.col("w"), F.lit(0.0))
-                        - F.lit(lr) * F.coalesce(F.col("__g"), F.lit(0.0))
-                    ).alias("w"),
-                )
-            )
-            bias -= lr * float(bias_grad)
-            if (it + 1) % checkpoint_every == 0 or it == iters - 1:
-                w = w.localCheckpoint()
-    finally:
-        feats.unpersist()
-    return w, bias

@@ -18,12 +18,6 @@ them:
   Thresholds are NESTED: the f=0.2 sample is a strict subset of the
   f=0.5 sample — growing a source's weight only ADDS documents,
   which keeps ablation runs comparable (tested).
-- ``temperature_fractions``: the standard temperature-scaled helper
-  that turns observed source counts into fractions
-  (w_s ∝ n_s^tau, share_s = budget * w_s / Σw, fraction =
-  min(1, share_s / n_s)). Counts come from one tiny aggregate
-  (source cardinality is small by contract); the result is config —
-  feed it to ``mixture_sample``.
 
 Expected sample size per source is fraction * n_s (binomial, not
 exact-quota): the price of the shuffle-free plan. An exact-quota
@@ -90,29 +84,6 @@ def mixture_oracle_case(
         for s in sorted(fractions)
     )
     return f"CASE {whens} ELSE '{threshold_hex(default)}' END"
-
-
-def temperature_fractions(
-    counts: dict[str, int], budget_rows: int, temperature: float = 0.5
-) -> dict[str, float]:
-    """Temperature-scaled mixture config from observed source counts:
-    tau=1 reproduces the natural mix, tau=0 uniform-over-sources,
-    tau in between flattens the head and boosts the tail. Plain
-    driver-side floats over a handful of sources — the scale-bearing
-    part is that it ships OUT of the query as config."""
-    # zero-count sources carry no rows and must carry no WEIGHT either:
-    # 0.0**0 == 1.0 would hand an empty source a full share of the
-    # budget at tau=0 (diluting every real source), and 0.0**-tau
-    # raises. Exclude them from the sum and emit 0.0.
-    pos = {s: n for s, n in counts.items() if n > 0}
-    if not pos:
-        return {s: 0.0 for s in counts}
-    w = {s: float(n) ** temperature for s, n in pos.items()}
-    total = sum(w[s] for s in sorted(w))
-    return {
-        s: min(1.0, (budget_rows * w[s] / total) / counts[s]) if s in pos else 0.0
-        for s in counts
-    }
 
 
 def split_by_group(
@@ -258,89 +229,6 @@ def negative_samples(
     ).drop("__j")
 
 
-def temperature_token_budgets(
-    token_counts: dict[str, int], budget_tokens: int, temperature: float = 0.5
-) -> dict[str, int]:
-    """Per-source TOKEN budgets from observed per-source token totals
-    — the token-denominated sibling of ``temperature_fractions``:
-    tau=1 reproduces the natural token mix, tau=0 splits the budget
-    uniformly over sources, tau in between flattens the head and
-    boosts the tail. A source's budget is capped at its own total (a
-    tail source cannot be handed more tokens than it has). Plain
-    driver-side floats over a handful of sources; feed the result
-    dict straight into ``token_budget_per_source``.
-
-    The returned budgets may SUM BELOW ``budget_tokens`` (ADVICE r9
-    item 2): int() truncation loses < 1 token per source, and the
-    own-total cap drops the capped source's surplus with no
-    redistribution — e.g. tau=0 splits uniformly, so a small source
-    caps at its total and its unused share is simply not reassigned.
-    That is deliberate: redistribution (iterative water-filling)
-    would make a source's budget depend on every OTHER source's
-    total, breaking the simple engine/oracle exactness contract.
-    Callers that need an exact global fill should use
-    ``water_fill_token_budgets`` instead (same signature, iterative
-    redistribution, sum(budgets) == min(budget, total available))
-    and check the result with ``token_budget_fill_report``."""
-    pos = {s: n for s, n in token_counts.items() if n > 0}
-    if not pos:
-        return {s: 0 for s in token_counts}
-    w = {s: float(n) ** temperature for s, n in pos.items()}
-    total = sum(w[s] for s in sorted(w))
-    return {
-        s: min(token_counts[s], int(budget_tokens * w[s] / total)) if s in pos else 0
-        for s in token_counts
-    }
-
-
-def water_fill_token_budgets(
-    token_counts: dict[str, int], budget_tokens: int, temperature: float = 0.5
-) -> dict[str, int]:
-    """``temperature_token_budgets`` with EXACT global fill (the
-    redistribution branch of ADVICE r9 item 2): iterative
-    water-filling — allocate the remaining budget over uncapped
-    sources by temperature weight, cap any source at its own total,
-    re-split the capped surplus over the rest, repeat until the
-    budget is spent or every source is exhausted. Guarantees
-    ``sum(budgets) == min(budget_tokens, sum(token_counts))`` and
-    ``budgets[s] <= token_counts[s]`` for every source; floor-
-    truncation residue is handed out one token at a time in sorted
-    source order, so the result is deterministic. The price vs the
-    simple helper: a source's budget now depends on every OTHER
-    source's total (that is what redistribution means), so prefer
-    ``temperature_token_budgets`` when per-source reproducibility
-    across corpus subsets matters more than hitting the global
-    number exactly. Driver-side over <= n_sources entries, like its
-    sibling."""
-    target = min(int(budget_tokens), sum(max(0, n) for n in token_counts.values()))
-    budgets = {s: 0 for s in token_counts}
-    remaining = target
-    active = {s for s, n in token_counts.items() if n > 0}
-    while remaining > 0 and active:
-        w = {s: float(token_counts[s]) ** temperature for s in active}
-        total_w = sum(w[s] for s in sorted(w))
-        alloc = {
-            s: min(token_counts[s] - budgets[s], int(remaining * w[s] / total_w))
-            for s in sorted(active)
-        }
-        if any(alloc.values()):
-            for s, a in alloc.items():
-                budgets[s] += a
-                remaining -= a
-        else:
-            # every floor share truncated to 0: hand out the residue
-            # one token per source in sorted order (terminates —
-            # remaining strictly decreases while any source has room)
-            for s in sorted(active):
-                if remaining == 0:
-                    break
-                give = min(1, token_counts[s] - budgets[s])
-                budgets[s] += give
-                remaining -= give
-        active = {s for s in active if budgets[s] < token_counts[s]}
-    return budgets
-
-
 def token_budget_per_source(
     df: DataFrame,
     budget: int | dict[str, int],
@@ -358,8 +246,7 @@ def token_budget_per_source(
     final mix; this is the token-denominated counterpart. ``budget``
     is one int for every source, or a per-source dict (sources absent
     from the dict get ``default_budget``, 0 = dropped) — the dict a
-    real mix spec is, e.g. straight from
-    ``temperature_token_budgets``.
+    real mix spec is.
 
     Keep rule: ``tokens_before < budget``. The first document of a
     source always survives a positive budget, and the kept set

@@ -28,7 +28,6 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -290,95 +289,6 @@ def frame_sample(
     return df.mapInPandas(kernel, schema=FRAMES_SCHEMA)
 
 
-AUDIO_SCHEMA = (
-    "media_id long, n_bytes long, content_sha string, duration_ms long,"
-    " sample_rate int, n_channels int, features array<float>"
-)
-AUDIO_FEATURE_DIM = 8
-
-
-def _real_audio_features(raw: bytes) -> tuple[int, int, int, list[float]]:
-    """(duration_ms, sample_rate, n_channels, AUDIO_FEATURE_DIM floats)
-    from an actually-decoded PCM16 WAV: loudness (RMS), peak,
-    zero-crossing rate, windowed-RMS spread, DC offset — the cheap
-    audio descriptor, and the slot a learned audio embedding fills in
-    a GPU-equipped deployment."""
-    from bigdata_commerce_spark.operators.codecs import decode_wav
-
-    samples, sr, n_ch = decode_wav(raw)
-    mono = samples.mean(axis=1)
-    n = len(mono)
-    duration_ms = int(round(n * 1000.0 / sr)) if sr else 0
-    if n == 0:
-        return duration_ms, sr, n_ch, [0.0] * AUDIO_FEATURE_DIM
-    rms = float(np.sqrt(np.mean(mono**2)))
-    peak = float(np.abs(mono).max())
-    zcr = float(np.mean(np.abs(np.diff(np.signbit(mono).astype("int8"))))) if n > 1 else 0.0
-    win = max(1, n // 10)
-    wrms = [
-        float(np.sqrt(np.mean(mono[i : i + win] ** 2)))
-        for i in range(0, n - win + 1, win)
-    ]
-    return duration_ms, sr, n_ch, [
-        min(duration_ms / 60000.0, 1.0),
-        min(sr / 96000.0, 1.0),
-        min(n_ch / 8.0, 1.0),
-        rms,
-        peak,
-        zcr,
-        float(np.std(wrms)),
-        float(abs(np.mean(mono))),
-    ]
-
-
-def audio_features(df: DataFrame, decode: str = "deterministic") -> DataFrame:
-    """Arrow-batched audio feature extraction over a binary media
-    column — the audio twin of extract_features. ``decode="real"``
-    parses PCM16 WAV payloads (operators/codecs.decode_wav, stdlib
-    `wave` — dependency-free like the BMP/PPM image codecs) and emits
-    loudness/zero-crossing statistics; deterministic mode hashes the
-    bytes so the plumbing is testable with any payload. Absent media
-    (NULL content) yields NULL features/meta, never a decode crash."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # None = absent media -> NULL n_bytes/sha too (absent is
-            # not a 0-byte payload), consistent with extract_features
-            digests = pdf["content"].map(
-                lambda b: None if b is None else hashlib.sha256(bytes(b)).digest()
-            )
-            dur, sr, ch, feats = [], [], [], []
-            for b in pdf["content"]:
-                if b is None:
-                    dur.append(None); sr.append(None); ch.append(None)
-                    feats.append(None)
-                elif decode == "real":
-                    d, s, c, f = _real_audio_features(bytes(b))
-                    dur.append(d); sr.append(s); ch.append(c); feats.append(f)
-                else:
-                    dg = hashlib.sha256(bytes(b)).digest()
-                    dur.append(len(b)); sr.append(16000); ch.append(1)
-                    feats.append(_fake_features(dg))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": pd.array(
-                        [len(b) if b is not None else None for b in pdf["content"]],
-                        dtype="Int64",
-                    ),
-                    "content_sha": digests.map(
-                        lambda d: None if d is None else d.hex()[:16]
-                    ),
-                    "duration_ms": dur,
-                    "sample_rate": sr,
-                    "n_channels": ch,
-                    "features": feats,
-                }
-            )
-
-    return df.mapInPandas(kernel, schema=AUDIO_SCHEMA)
-
-
 def media_phash(df: DataFrame) -> DataFrame:
     """Perceptual-hash column for near-dup detection over media:
     ``(media_id, phash)`` where bit i is the sign of feature i around
@@ -426,9 +336,7 @@ def media_phash_pairs(df: DataFrame, max_hamming: int = 1) -> DataFrame:
 
     Note the deterministic kernel's feature space is FEATURE_DIM=8
     bits, so chance collisions are dense by construction (2^8
-    buckets) — the plumbing under test; the real-decode path
-    (``media_phash_real`` + ``phash_hamming_pairs``) runs the same
-    banding over a 64-bit aHash of actually-decoded pixels.
+    buckets) — the plumbing under test.
     """
     h = media_phash(df).where(F.col("phash").isNotNull())
     return phash_hamming_pairs(h, FEATURE_DIM, max_hamming)
@@ -482,69 +390,8 @@ def phash_hamming_pairs(
     )
 
 
-PHASH_REAL_BITS = 64
-
-
-def media_phash_real_wide(df: DataFrame, hash_size: int = 16) -> DataFrame:
-    """``hash_size`` x ``hash_size`` average-hash over the real decode
-    path — the production-width sibling of ``media_phash_real``'s 8x8:
-    a 16x16 grid gives a 256-bit hash, which separates near-dups from
-    chance collisions far better on large corpora (the 64-bit space
-    saturates around a few million images; pHash deployments run
-    64-256 bits). Bits pack little-endian into ``hash_size^2 / 64``
-    signed int64 WORDS: ``(media_id, phash_words array<long>)`` —
-    words because the banding join then needs no bit surgery (a
-    256-bit hash with max_hamming=3 bands as exactly one word per
-    band). NULL / undecodable media -> NULL phash_words. Same Arrow
-    mapInPandas shape as every real-decode kernel; decode cost is the
-    same (one image decode), only the resize target widens.
-    """
-    import numpy as np
-
-    from bigdata_commerce_spark.operators.codecs import (
-        decode_image,
-        resize_nearest,
-    )
-
-    n_bits = hash_size * hash_size
-    if n_bits % 64:
-        raise ValueError(f"hash_size^2 must be a multiple of 64 (got {n_bits})")
-    n_words = n_bits // 64
-
-    def one(raw) -> list[int] | None:
-        if raw is None:
-            return None
-        try:
-            rgb = decode_image(bytes(raw))
-        except ValueError:
-            return None
-        gray = (
-            resize_nearest(rgb, hash_size, hash_size)
-            .astype("float64")
-            .mean(axis=2)
-            .ravel()
-        )
-        bits = gray >= gray.mean()
-        words = [0] * n_words
-        for k in np.flatnonzero(bits):
-            words[int(k) // 64] |= 1 << (int(k) % 64)
-        # wrap each word to signed int64 (bit 63 = sign)
-        return [w - (1 << 64) if w >= 1 << 63 else w for w in words]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "phash_words": [one(b) for b in pdf["content"]],
-                }
-            )
-
-    return df.mapInPandas(kernel, schema="media_id long, phash_words array<long>")
-
-
 def media_phash_wide_det(df: DataFrame) -> DataFrame:
-    """Deterministic twin of ``media_phash_real_wide``'s word layout:
+    """Deterministic multi-word perceptual-hash layout:
     4 int64 words derived straight from the content sha2 hex — word w
     is the 15-nibble slice ``hex[16w : 16w+15]`` parsed as an integer
     (60 bits per word; the 16th nibble of each group is skipped so
@@ -585,12 +432,11 @@ def phash_words_hamming_pairs(
     width.
 
     The input is persisted here (VERDICT r10 item 3): the band union
-    scans ``h`` 2 x bands times, and when ``h`` is
-    ``media_phash_real_wide`` that would mean 2 x bands image decodes
-    per image — the cache makes it ONE (the round-10 scale probe's
-    manual localCheckpoint, now built in). Cached frame is
-    (media_id, phash_words): ~40 bytes a row at 256 bits. Cache
-    lifetime is bounded (VERDICT r11): see
+    scans ``h`` 2 x bands times, and when ``h`` decodes images that
+    would mean 2 x bands image decodes per image — the cache makes it
+    ONE (the round-10 scale probe's manual localCheckpoint, now built
+    in). Cached frame is (media_id, phash_words): ~40 bytes a row at
+    256 bits. Cache lifetime is bounded (VERDICT r11): see
     ``cache_util.persist_bounded`` — repeated calls evict-and-unpersist
     the oldest input past a fixed bound instead of accumulating."""
     bands = max_hamming + 1
@@ -631,406 +477,3 @@ def phash_words_hamming_pairs(
         .where(F.col("hamming") <= max_hamming)
         .distinct()
     )
-
-
-def media_phash_dct(
-    df: DataFrame, hash_size: int = 8, highfreq_factor: int = 4
-) -> DataFrame:
-    """TRUE perceptual hash (pHash) over the real decode path —
-    VERDICT r10 item 6: decode, grayscale, nearest-resize to
-    ``hash_size * highfreq_factor`` square, 2D DCT-II, keep the
-    top-left ``hash_size x hash_size`` LOW-FREQUENCY block, bit k =
-    (coefficient k > median of the block) — the published pHash
-    construction (Zauner 2010; the imagehash library's ``phash``).
-    Versus the average hash (``media_phash_real*``): aHash thresholds
-    PIXELS against the global mean, so any non-uniform luminance
-    change — a brightness gradient, highlight clipping, vignetting —
-    moves many pixels across the mean and flips bits all over the
-    hash; pHash thresholds DCT COEFFICIENTS, where that same gradient
-    is energy in one or two low-frequency terms, so the rest of the
-    spectrum (and the hash) survives. A uniform contrast SCALE leaves
-    both invariant (scales every coefficient); a smooth gradient or
-    clipped shift breaks aHash but not pHash — pinned by the crafted
-    brightness-gradient test in tests/test_codecs.py.
-
-    Output shape matches ``media_phash_real_wide``: ``(media_id,
-    phash_words array<long>)``, bits packed little-endian (row-major
-    coefficient order) into ``hash_size^2 / 64`` signed int64 words —
-    so ``phash_words_hamming_pairs`` runs the SAME banded hamming
-    join over it, nothing downstream changes. Default 8x8 block = the
-    classic 64-bit pHash in one word; hash_size=16 gives the 256-bit
-    production width. The DCT is a dense ``(N,N) @ (N,N) @ (N,N)``
-    numpy matmul per image inside the same Arrow ``mapInPandas``
-    kernel as every real-decode op — measured (scale_probe.py
-    round11): ~38us/image at 256 bits vs ~26us for the aHash kernel
-    (1.44x at 24k images; the delta is the 4x-larger resize grid +
-    the matmuls), microseconds either way, so real-payload decode
-    cost dominates and the hash should be chosen by robustness, not
-    kernel speed. NULL / undecodable media -> NULL phash_words.
-    """
-    import numpy as np
-
-    from bigdata_commerce_spark.operators.codecs import (
-        decode_image,
-        resize_nearest,
-    )
-
-    n_bits = hash_size * hash_size
-    if n_bits % 64:
-        raise ValueError(f"hash_size^2 must be a multiple of 64 (got {n_bits})")
-    n_words = n_bits // 64
-    n = hash_size * highfreq_factor
-    # orthonormal DCT-II matrix (row 0 scaled 1/sqrt(2)); dct2(A) =
-    # C @ A @ C.T — float64 throughout, deterministic across runs
-    k = np.arange(n, dtype="float64")
-    C = np.sqrt(2.0 / n) * np.cos(np.pi * np.outer(k, 2 * k + 1) / (2 * n))
-    C[0] /= np.sqrt(2.0)
-
-    def one(raw) -> list[int] | None:
-        if raw is None:
-            return None
-        try:
-            rgb = decode_image(bytes(raw))
-        except ValueError:
-            return None
-        gray = resize_nearest(rgb, n, n).astype("float64").mean(axis=2)
-        low = (C @ gray @ C.T)[:hash_size, :hash_size].ravel()
-        bits = low > np.median(low)
-        words = [0] * n_words
-        for j in np.flatnonzero(bits):
-            words[int(j) // 64] |= 1 << (int(j) % 64)
-        return [w - (1 << 64) if w >= 1 << 63 else w for w in words]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "phash_words": [one(b) for b in pdf["content"]],
-                }
-            )
-
-    return df.mapInPandas(kernel, schema="media_id long, phash_words array<long>")
-
-
-def media_audio_fingerprint(
-    df: DataFrame,
-    n_frames: int = 8,
-    n_bands: int = 33,
-    frame_len: int = 2048,
-    f_min: float = 300.0,
-    f_max: float = 2000.0,
-) -> DataFrame:
-    """Haitsma-Kalker audio fingerprint over the REAL WAV decode path
-    (Haitsma & Kalker 2002, "A Highly Robust Audio Fingerprint
-    System" — the published construction behind industrial audio
-    matching): per frame, FFT energy in ``n_bands`` log-spaced bands
-    between ``f_min`` and ``f_max``; bit (n, m) is the sign of the
-    band-energy difference differentiated ALONG TIME —
-    ``(E(n,m) - E(n,m+1)) - (E(n-1,m) - E(n-1,m+1)) > 0`` (the first
-    frame uses the pure band difference). Energy DIFFERENCES make the
-    bits exactly invariant to global gain (a volume change scales
-    every energy by the same factor) and robust to mild additive
-    noise — the audio analogue of what the DCT buys the image hash.
-
-    Per clip: ``n_frames`` frames at EVENLY SPACED offsets (the
-    frame_sample discipline — duration-independent width), 32
-    difference bits each at the default 33 bands, packed little-endian
-    (frame-major) into ``phash_words array<long>`` — the SAME layout
-    as ``media_phash_real_wide``/``media_phash_dct``, so
-    ``phash_words_hamming_pairs`` runs the identical banded hamming
-    join over audio with nothing downstream changing (8 x 32 = 256
-    bits = 4 words = one word per band at max_hamming=3). Clips
-    shorter than ``frame_len`` samples zero-pad. NULL / undecodable
-    media -> NULL fingerprint. Same Arrow ``mapInPandas`` posture as
-    every real-decode kernel; the FFT is a (frame_len)-point rfft per
-    frame, microseconds next to payload decode/fetch."""
-    import numpy as np
-
-    from bigdata_commerce_spark.operators.codecs import decode_wav
-
-    bits_per_frame = n_bands - 1
-    n_bits = n_frames * bits_per_frame
-    if n_bits % 64:
-        raise ValueError(
-            f"n_frames * (n_bands - 1) must be a multiple of 64 (got {n_bits})"
-        )
-    n_words = n_bits // 64
-
-    def one(raw) -> list[int] | None:
-        if raw is None:
-            return None
-        try:
-            samples, sr, _ = decode_wav(bytes(raw))
-        except ValueError:
-            return None
-        mono = samples.mean(axis=1)
-        if len(mono) < frame_len:
-            mono = np.pad(mono, (0, frame_len - len(mono)))
-        # log-spaced band edges -> FFT bin indices (>= 1 bin per band)
-        edges = np.geomspace(f_min, min(f_max, sr / 2.0), n_bands + 1)
-        bins = np.maximum(1, (edges / sr * frame_len).astype(int))
-        bins = np.maximum.accumulate(bins)  # monotone even at low sr
-        span = max(len(mono) - frame_len, 0)
-        starts = [
-            round(i * span / max(n_frames - 1, 1)) for i in range(n_frames)
-        ]
-        words = [0] * n_words
-        prev = None
-        for n, s in enumerate(starts):
-            spec = np.abs(np.fft.rfft(mono[s : s + frame_len])) ** 2
-            e = np.array(
-                [spec[bins[m] : max(bins[m + 1], bins[m] + 1)].sum()
-                 for m in range(n_bands)]
-            )
-            d = e[:-1] - e[1:]
-            diff = d if prev is None else d - prev
-            prev = d
-            for m in np.flatnonzero(diff > 0):
-                j = n * bits_per_frame + int(m)
-                words[j // 64] |= 1 << (j % 64)
-        return [w - (1 << 64) if w >= 1 << 63 else w for w in words]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "phash_words": [one(b) for b in pdf["content"]],
-                }
-            )
-
-    return df.mapInPandas(kernel, schema="media_id long, phash_words array<long>")
-
-
-AUDIO_SEGMENTS_SCHEMA = (
-    "media_id long, n_segments int, seg_no int, start_ms long,"
-    " end_ms long, seg_rms double"
-)
-
-
-def media_audio_segments(
-    df: DataFrame, frame_len: int = 1024, threshold: float = 0.02
-) -> DataFrame:
-    """Energy-based activity segmentation over the REAL WAV decode
-    path — the classic VAD front-end: frame the mono signal into
-    non-overlapping ``frame_len``-sample frames, mark a frame active
-    when its RMS (on the decoder's [-1, 1] scale) exceeds
-    ``threshold``, and merge consecutive active frames into segments.
-    One row per segment with its millisecond span and mean frame RMS
-    — the "where is there anything to transcribe/fingerprint" index
-    an audio pipeline computes before paying for any heavier model,
-    and the trim mask a training-data pass uses to drop silence.
-
-    Same Arrow ``mapInPandas`` posture as the other real-decode
-    kernels (per-clip fan-out inside the kernel, rows = segments, no
-    explode shuffle); the framing is one reshape + one vectorized
-    RMS per clip. All-silent or undecodable/NULL clips contribute no
-    rows (the frame_sample contract); the trailing partial frame is
-    padded with zeros, so a clip shorter than one frame still
-    segments. No SQL-expressible oracle (real PCM decode) — pytest-
-    pinned like ``media_scene_changes``."""
-    import numpy as np
-
-    def segments_of(raw: bytes) -> list[tuple[int, int, float]] | None:
-        from bigdata_commerce_spark.operators.codecs import decode_wav
-
-        try:
-            samples, sr, _ = decode_wav(bytes(raw))
-        except ValueError:
-            return None
-        if sr == 0 or len(samples) == 0:
-            return None
-        mono = samples.mean(axis=1)
-        pad = (-len(mono)) % frame_len
-        if pad:
-            mono = np.pad(mono, (0, pad))
-        frames = mono.reshape(-1, frame_len)
-        rms = np.sqrt((frames * frames).mean(axis=1))
-        active = rms > threshold
-        out = []
-        start = None
-        for i, on in enumerate(list(active) + [False]):
-            if on and start is None:
-                start = i
-            elif not on and start is not None:
-                seg_rms = float(rms[start:i].mean())
-                start_ms = start * frame_len * 1000 // sr
-                end_ms = i * frame_len * 1000 // sr
-                out.append((start_ms, end_ms, round(seg_rms, 6)))
-                start = None
-        return out or None
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                "media_id": [],
-                "n_segments": [],
-                "seg_no": [],
-                "start_ms": [],
-                "end_ms": [],
-                "seg_rms": [],
-            }
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                found = segments_of(bytes(content))
-                if found is None:
-                    continue
-                for seg_no, (s_ms, e_ms, seg_rms) in enumerate(found):
-                    cols["media_id"].append(mid)
-                    cols["n_segments"].append(len(found))
-                    cols["seg_no"].append(seg_no)
-                    cols["start_ms"].append(s_ms)
-                    cols["end_ms"].append(e_ms)
-                    cols["seg_rms"].append(seg_rms)
-            yield pd.DataFrame(cols)
-
-    return df.mapInPandas(kernel, schema=AUDIO_SEGMENTS_SCHEMA)
-
-
-SCENES_SCHEMA = (
-    "media_id long, n_frames int, n_scenes int, scene_no int,"
-    " start_frame int, end_frame int, keyframe_sha string"
-)
-
-
-def media_scene_changes(df: DataFrame, threshold: float = 32.0) -> DataFrame:
-    """Scene-boundary detection over the REAL frame decode path: one
-    output row per detected scene, with the scene's frame span and
-    the sha of its first frame (the keyframe a thumbnailer or a
-    frame-dedup pass would keep — one representative per scene
-    instead of ``frame_sample``'s blind every-k-th stride).
-
-    The cut detector is the classic frame-differencing rule: a new
-    scene starts at frame i when the mean absolute pixel difference
-    against frame i-1 exceeds ``threshold`` (0..255 scale), or when
-    the frame geometry changes (a hard cut by construction). Solid
-    content, small noise, and gradual motion stay below a sane
-    threshold; a cut between unrelated frames lands near the mean
-    inter-frame distance of random content (~85) and clears it.
-
-    Same Arrow ``mapInPandas`` posture as the other real-decode
-    kernels: the per-clip fan-out (rows = scenes) happens INSIDE the
-    kernel, so no explode shuffle and output partitioning follows
-    input splits. The differencing is one int16 subtraction per pixel
-    pair — microseconds next to payload decode. NULL / undecodable
-    media contribute no rows (the ``frame_sample`` contract).
-    Single-frame media are one scene. No SQL-expressible oracle
-    (real pixel decode), so correctness is pytest-pinned like
-    ``media_phash_dct`` / ``media_audio_fingerprint``."""
-    import numpy as np
-
-    def scenes_of(raw: bytes) -> list[tuple[int, int, int, str]] | None:
-        from bigdata_commerce_spark.operators.codecs import (
-            decode_image,
-            encode_ppm,
-            iter_ppm_frames,
-        )
-
-        try:
-            if raw[:2] == b"P6":
-                frames = list(iter_ppm_frames(raw))
-            else:
-                frames = [decode_image(raw)]
-        except ValueError:
-            return None
-        if not frames:
-            return None
-        bounds = [0]
-        for i in range(1, len(frames)):
-            a, b = frames[i - 1], frames[i]
-            if a.shape != b.shape:
-                bounds.append(i)
-                continue
-            mad = float(
-                np.abs(a.astype(np.int16) - b.astype(np.int16)).mean()
-            )
-            if mad > threshold:
-                bounds.append(i)
-        bounds.append(len(frames))
-        out = []
-        for s, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
-            sha = hashlib.sha256(encode_ppm(frames[lo])).hexdigest()[:16]
-            out.append((s, lo, hi - 1, sha))
-        return out
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                "media_id": [],
-                "n_frames": [],
-                "n_scenes": [],
-                "scene_no": [],
-                "start_frame": [],
-                "end_frame": [],
-                "keyframe_sha": [],
-            }
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                if content is None:
-                    continue
-                found = scenes_of(bytes(content))
-                if found is None:
-                    continue
-                n_frames = found[-1][2] + 1
-                for scene_no, lo, hi, sha in found:
-                    cols["media_id"].append(mid)
-                    cols["n_frames"].append(n_frames)
-                    cols["n_scenes"].append(len(found))
-                    cols["scene_no"].append(scene_no)
-                    cols["start_frame"].append(lo)
-                    cols["end_frame"].append(hi)
-                    cols["keyframe_sha"].append(sha)
-            yield pd.DataFrame(cols)
-
-    return df.mapInPandas(kernel, schema=SCENES_SCHEMA)
-
-
-def media_phash_real(df: DataFrame) -> DataFrame:
-    """64-bit average-hash over the REAL decode path: decode the
-    BMP/PPM payload (operators/codecs.py), nearest-resize to 8x8,
-    grayscale, then bit k = (pixel k >= mean) — the classic aHash,
-    which is invariant to uniform brightness scaling and resolution
-    and flips only a few bits under small local edits, so hamming
-    distance is a perceptual near-dup metric (the CNN/DCT slot of
-    ``media_phash``'s docstring made concrete). Arrow-batched
-    mapInPandas like the other real-decode kernels; NULL or
-    undecodable media -> NULL phash. Bits pack little-endian
-    (pixel 0 = bit 0) into one signed int64 — band extraction in
-    ``phash_hamming_pairs`` is unsigned, so the sign bit is safe."""
-    import numpy as np
-
-    from bigdata_commerce_spark.operators.codecs import (
-        decode_image,
-        resize_nearest,
-    )
-
-    def one(raw) -> int | None:
-        if raw is None:
-            return None
-        try:
-            rgb = decode_image(bytes(raw))
-        except ValueError:
-            return None
-        gray = resize_nearest(rgb, 8, 8).astype("float64").mean(axis=2).ravel()
-        bits = gray >= gray.mean()
-        word = 0
-        for k in np.flatnonzero(bits):
-            word |= 1 << int(k)
-        # wrap to signed int64 (bit 63 = sign)
-        if word >= 1 << 63:
-            word -= 1 << 64
-        return word
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "phash": pd.array(
-                        [one(b) for b in pdf["content"]], dtype="Int64"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(kernel, schema="media_id long, phash long")

@@ -55,56 +55,3 @@ def range_join(
         )
         .drop("__bucket")
     )
-
-
-def interval_overlap_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_start: str,
-    left_end: str,
-    right_start: str,
-    right_end: str,
-    key_cols: list[str] | None = None,
-    bucket_seconds: int = 3600,
-) -> DataFrame:
-    """Interval x interval overlap join (inclusive bounds): every
-    (left, right) pair whose time ranges intersect, plus the
-    intersection itself (``overlap_start`` / ``overlap_end``).
-
-    Same bucketization as range_join — both sides explode over the
-    buckets they cover and equi-join on (keys..., bucket) — with the
-    exactly-once refinement: a pair sharing many buckets is kept only
-    in the bucket containing max(start_l, start_r), the first moment
-    both intervals are live. That bucket is covered by both sides by
-    construction, so every overlapping pair appears exactly once and
-    no distinct pass (which would need the full output shuffled) is
-    ever run. Column names must not collide across the two inputs.
-    """
-    key_cols = key_cols or []
-    b = F.lit(bucket_seconds)
-
-    def _exploded(df: DataFrame, s: str, e: str) -> DataFrame:
-        return df.withColumn(
-            "__bucket",
-            F.explode(
-                F.sequence(
-                    F.floor(F.unix_timestamp(F.col(s)) / b),
-                    F.floor(F.unix_timestamp(F.col(e)) / b),
-                )
-            ),
-        )
-
-    l = _exploded(left, left_start, left_end)
-    r = _exploded(right, right_start, right_end)
-    overlap_start = F.greatest(F.col(left_start), F.col(right_start))
-    overlap_end = F.least(F.col(left_end), F.col(right_end))
-    return (
-        l.join(r, [*key_cols, "__bucket"])
-        .where(
-            (overlap_start <= overlap_end)
-            & (F.col("__bucket") == F.floor(F.unix_timestamp(overlap_start) / b))
-        )
-        .drop("__bucket")
-        .withColumn("overlap_start", overlap_start)
-        .withColumn("overlap_end", overlap_end)
-    )

@@ -38,50 +38,6 @@ def salted_count(
     return partial.groupBy(*key_cols).agg(F.sum("__partial").alias(count_alias))
 
 
-def salted_join(
-    facts: DataFrame,
-    dim: DataFrame,
-    on: Sequence[str],
-    salt_col: Column,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join for the case AQE can't fix: a dim side too
-    big to broadcast and ONE fact key hot enough that even AQE's
-    skew-split leaves every split of that key joining the same dim
-    partition. The classic manual remedy: replicate each dim row
-    ``salt_buckets`` ways (explode over the salt domain), salt each
-    fact row into one bucket by a deterministic hash, and join on
-    (keys + salt) — the hot key's rows spread over ``salt_buckets``
-    reducers, each holding its own dim replica.
-
-    Cost is deliberate and visible: the dim side shuffles at
-    ``salt_buckets``x its size. Worth it only when the hot key
-    dominates the stage; for ordinary skew prefer AQE
-    (spark.sql.adaptive.skewJoin), and for broadcast-sized dims just
-    broadcast. Results are identical to the unsalted join (tested);
-    ``how`` supports the dim-preserving shapes ('inner', 'left').
-
-    ``salt_col`` must be a deterministic row expression (hash of a
-    high-cardinality column) so task retries land rows in the same
-    bucket.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    on = list(on)
-    # coalesce: a NULL salt_col (nullable hash input) would never
-    # equi-match the dim's salt domain — the fact row would silently
-    # drop (inner) or mis-null (left), breaking the identity with the
-    # plain join. NULLs all land in bucket 0: correct, just unspread.
-    salted_facts = facts.withColumn(
-        "__salt", F.coalesce(F.pmod(salt_col, F.lit(salt_buckets)), F.lit(0)).cast("int")
-    )
-    replicated_dim = dim.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    return salted_facts.join(replicated_dim, [*on, "__salt"], how).drop("__salt")
-
-
 def key_skew_report(
     df: DataFrame,
     key_cols: Sequence[str],

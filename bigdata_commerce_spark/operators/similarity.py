@@ -49,17 +49,6 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def _cosine(a: Column, b: Column) -> Column:
-    """Raw cosine via try_divide: a zero-magnitude vector makes the
-    denominator 0, which under Spark 4's default ANSI mode would THROW
-    from plain `/` — one degenerate embedding anywhere in the corpus
-    killing the job. try_divide yields NULL instead, which is ALSO
-    DuckDB's division-by-zero semantics, so the oracles agree: NULL
-    scores fail >= thresholds and sort after real scores (NULLS LAST
-    in both engines)."""
-    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
-
-
 def cosine_topk(
     corpus: DataFrame,
     probes: DataFrame,

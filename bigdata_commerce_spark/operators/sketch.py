@@ -3,8 +3,7 @@ exact per-group percentiles with a loud scale guard.
 
 Exact top-N frequent keys need no sketch here: a partial/final count
 aggregate plus ``topk.rank_top_m`` (TakeOrderedAndProject) is the
-plan (``heavy_hitter_users``). The streaming Misra-Gries summary lives
-in ``streaming/stateful.misra_gries_stateful``.
+plan (``heavy_hitter_users``).
 """
 
 from __future__ import annotations

@@ -37,7 +37,7 @@ norm_docs AS (
 )
 """
 
-# Shingle CTE twin of dedup.shingle_array (n=3).
+# Shingle CTE twin of dedup._exploded_shingles (n=3).
 _SHINGLE_CTE = (
     _NORM_CTE
     + """
@@ -671,7 +671,7 @@ def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_sig_sql(num_hashes: int = 8) -> str:
-    # Twin of dedup.minhash_hash_exprs: component i = 8-hex-char slice
+    # Twin of dedup's minhash signature: component i = 8-hex-char slice
     # slot i%4 of md5((i//4) || ':' || shingle).
     cols = ",\n           ".join(
         f"MIN(substr(md5('{i // 4}:' || shingle), {(i % 4) * 8 + 1}, 8)) AS mh_{i}"
@@ -1263,13 +1263,10 @@ m AS (
 def multimodal_phash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 256-bit-class perceptual-hash WORD LAYOUT, oracle-checked
     bit-for-bit (operators/multimodal.media_phash_wide_det): 4 int64
-    words per media from the content sha2 hex — the deterministic
-    twin of ``media_phash_real_wide``'s output shape (the real-decode
-    16x16 aHash cannot be SQL-oracled; this pins the multi-word
-    construction and NULL contract across engines instead, and the
-    pixel path is pytest-pinned against brute force in
-    tests/test_codecs.py). Words flattened to scalar columns for the
-    driver's canonicalizer."""
+    words per media from the content sha2 hex (a pixel-decoded hash
+    cannot be SQL-oracled; this pins the multi-word construction and
+    NULL contract across engines instead). Words flattened to scalar
+    columns for the driver's canonicalizer."""
     docs = load_table(spark, "documents", sf_dir)
     media = multimodal.documents_as_media(docs)
     h = multimodal.media_phash_wide_det(media).where(
@@ -1401,6 +1398,64 @@ def _commerce_tables(spark: SparkSession):
     return t, _commerce.normalize_actions(t["user_visit_action"])
 
 
+# Reqs 1-4 share one session filter (ages 10-50), as the reference's
+# SessionStat runs them off one filtered-session RDD.
+_COMMERCE_ORACLE_CTE = f"""
+WITH actions AS (
+    SELECT session_id, user_id, page_id, search_keyword,
+           CAST(action_time AS TIMESTAMP) AS action_time,
+           NULLIF(click_category_id, -1) AS click_category_id,
+           order_category_ids, pay_category_ids
+    FROM {_UVA}
+), sess AS (
+    SELECT session_id,
+           MIN(user_id) AS user_id,
+           MIN(action_time) AS start_time,
+           MAX(action_time) AS end_time,
+           COUNT(*) AS step_length,
+           CAST(epoch(MAX(action_time)) - epoch(MIN(action_time)) AS BIGINT)
+               AS visit_length,
+           list_sort(list_distinct(list(search_keyword))) AS search_keywords,
+           list_sort(list_distinct(list(click_category_id))) AS click_category_ids
+    FROM actions GROUP BY session_id
+), filtered AS (
+    SELECT s.*, u.username, u.name, u.age, u.professional, u.city, u.sex
+    FROM sess s JOIN {_UINFO} u ON s.user_id = u.user_id
+    WHERE u.age >= 10 AND u.age <= 50
+), session_actions AS (
+    SELECT * FROM actions WHERE session_id IN (SELECT session_id FROM filtered)
+), cats AS (
+    SELECT click_category_id AS category_id, 'click' AS kind
+    FROM session_actions WHERE click_category_id IS NOT NULL
+    UNION ALL
+    SELECT CAST(unnest(string_split(order_category_ids, ',')) AS BIGINT), 'order'
+    FROM session_actions WHERE length(order_category_ids) > 0
+    UNION ALL
+    SELECT CAST(unnest(string_split(pay_category_ids, ',')) AS BIGINT), 'pay'
+    FROM session_actions WHERE length(pay_category_ids) > 0
+), top10 AS (
+    SELECT category_id,
+           CAST(SUM(CASE WHEN kind = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click_count,
+           CAST(SUM(CASE WHEN kind = 'order' THEN 1 ELSE 0 END) AS BIGINT) AS order_count,
+           CAST(SUM(CASE WHEN kind = 'pay' THEN 1 ELSE 0 END) AS BIGINT) AS pay_count
+    FROM cats GROUP BY category_id
+    ORDER BY click_count DESC, order_count DESC, pay_count DESC, category_id
+    LIMIT 10
+)
+"""
+
+
+def _commerce_sessions(spark: SparkSession):
+    """(actions, filtered sessions, params) for reqs 1-4."""
+    from bigdata_commerce_spark.plans import commerce as C
+
+    t, actions = _commerce_tables(spark)
+    params = C.TaskParams(start_age=10, end_age=50)
+    actions = C.filter_actions_by_date(actions, params)
+    sessions = C.filter_sessions(C.session_full_info(actions, t["user_info"]), params)
+    return actions, sessions, params
+
+
 def _ratio_sql(flag: str, label: str, prefix: str) -> str:
     return (
         f"CASE WHEN COUNT(*) = 0 THEN 0.0 "
@@ -1430,22 +1485,7 @@ def _session_stats_oracle() -> str:
         for label, lo, hi in STEP_LENGTH_BUCKETS
     ]
     return f"""
-    WITH actions AS (
-        SELECT session_id, user_id,
-               CAST(action_time AS TIMESTAMP) AS action_time
-        FROM {_UVA}
-    ), sess AS (
-        SELECT session_id,
-               MIN(user_id) AS user_id,
-               COUNT(*) AS step_length,
-               CAST(epoch(MAX(action_time)) - epoch(MIN(action_time)) AS BIGINT)
-                   AS visit_length
-        FROM actions GROUP BY session_id
-    ), filtered AS (
-        SELECT s.* FROM sess s
-        JOIN {_UINFO} u ON s.user_id = u.user_id
-        WHERE u.age >= 10 AND u.age <= 50
-    )
+    {_COMMERCE_ORACLE_CTE}
     SELECT COUNT(*) AS session_count, {', '.join(ratios)}
     FROM filtered
     """
@@ -1458,9 +1498,7 @@ def commerce_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     param filter -> one-row histogram (``SessionStat.scala:23-92``)."""
     from bigdata_commerce_spark.plans import commerce as C
 
-    t, actions = _commerce_tables(spark)
-    params = C.TaskParams(start_age=10, end_age=50)
-    sessions = C.filter_sessions(C.session_full_info(actions, t["user_info"]), params)
+    _, sessions, params = _commerce_sessions(spark)
     return C.session_aggr_stats(sessions, params).drop("task_id")
 
 
@@ -1510,6 +1548,128 @@ def commerce_area_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     return C.area_top3_products(
         actions, t["product_info"], t["city_info"], params
     ).drop("task_id")
+
+
+@twin_query(
+    "commerce_session_extract",
+    oracle=f"""
+    {_COMMERCE_ORACLE_CTE}
+    , keyed AS (
+        SELECT *, CAST(start_time AS DATE) AS s_date,
+               CAST(hour(start_time) AS INT) AS s_hour
+        FROM filtered
+    ), ranked AS (
+        SELECT *,
+               COUNT(*) OVER (PARTITION BY s_date, s_hour) AS hour_count,
+               COUNT(*) OVER (PARTITION BY s_date) AS day_count,
+               ROW_NUMBER() OVER (
+                   PARTITION BY s_date, s_hour ORDER BY md5(session_id)
+               ) AS pick
+        FROM keyed
+    )
+    SELECT * EXCLUDE (hour_count, day_count, pick) FROM ranked
+    WHERE pick <= GREATEST(CAST(FLOOR(hour_count * 100 / day_count) AS BIGINT), 1)
+    """,
+)
+def commerce_session_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reference req 2 on the commerce schema: proportional
+    per-(day, hour) extraction of the filtered sessions, ranked on
+    md5(session_id) (``SessionStat.scala:314-454``)."""
+    from bigdata_commerce_spark.plans import commerce as C
+
+    _, sessions, params = _commerce_sessions(spark)
+    return C.session_random_extract(sessions, params).drop("task_id")
+
+
+@twin_query(
+    "commerce_top10_categories",
+    oracle=f"{_COMMERCE_ORACLE_CTE} SELECT * FROM top10",
+)
+def commerce_top10_categories(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reference req 3 on the commerce schema: top-10 categories of
+    the filtered sessions' actions by (click, order, pay) counts
+    (``SessionStat.scala:241-312``)."""
+    from bigdata_commerce_spark.plans import commerce as C
+
+    actions, sessions, params = _commerce_sessions(spark)
+    return C.top10_categories(
+        C.actions_of_sessions(actions, sessions), params
+    ).drop("task_id")
+
+
+@twin_query(
+    "commerce_top10_sessions",
+    oracle=f"""
+    {_COMMERCE_ORACLE_CTE}
+    , per_session AS (
+        SELECT click_category_id AS category_id, session_id,
+               COUNT(*) AS click_count
+        FROM session_actions
+        WHERE click_category_id IN (SELECT category_id FROM top10)
+        GROUP BY 1, 2
+    ), ranked AS (
+        SELECT *, CAST(ROW_NUMBER() OVER (
+            PARTITION BY category_id ORDER BY click_count DESC, session_id
+        ) AS INT) AS rank
+        FROM per_session
+    )
+    SELECT * FROM ranked WHERE rank <= 10
+    """,
+)
+def commerce_top10_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reference req 4 on the commerce schema: per top-10 category,
+    the 10 filtered sessions with the most clicks
+    (``SessionStat.scala:95-161``)."""
+    from bigdata_commerce_spark.plans import commerce as C
+
+    actions, sessions, params = _commerce_sessions(spark)
+    session_actions = C.actions_of_sessions(actions, sessions)
+    top = C.top10_categories(session_actions, params)
+    return C.top10_sessions_per_category(session_actions, top, params).drop("task_id")
+
+
+# The reference's task.params.json page flow.
+_COMMERCE_PAGE_FLOW = [1, 2, 3, 4, 5, 6, 7]
+
+
+@twin_query(
+    "commerce_page_convert_rate",
+    oracle=f"""
+    WITH trans AS (
+        SELECT CAST(page_id AS VARCHAR) AS from_page,
+               CAST(LEAD(page_id) OVER (
+                   PARTITION BY session_id ORDER BY action_time, page_id
+               ) AS VARCHAR) AS to_page
+        FROM (SELECT session_id, page_id,
+                     CAST(action_time AS TIMESTAMP) AS action_time
+              FROM {_UVA})
+    ), counts AS (
+        SELECT from_page, to_page, COUNT(*) AS split_count
+        FROM trans WHERE to_page IS NOT NULL GROUP BY 1, 2
+    ), spec(from_page, to_page, step) AS (
+        VALUES {", ".join(f"('{a}', '{b}', {i + 1})" for i, (a, b) in enumerate(zip(_COMMERCE_PAGE_FLOW, _COMMERCE_PAGE_FLOW[1:])))}
+    ), start AS (
+        SELECT COUNT(*) AS start_count FROM {_UVA}
+        WHERE page_id = {_COMMERCE_PAGE_FLOW[0]}
+    )
+    SELECT CAST(spec.step AS INT) AS step,
+           spec.from_page || '_' || spec.to_page AS split,
+           COALESCE(counts.split_count, 0) AS split_count,
+           CASE WHEN start_count = 0 THEN 0.0
+                ELSE ROUND(COALESCE(counts.split_count, 0) * 1.0 / start_count, 2)
+           END AS rate_vs_start
+    FROM spec LEFT JOIN counts USING (from_page, to_page) CROSS JOIN start
+    """,
+)
+def commerce_page_convert_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reference req 5 on the commerce schema: single-step conversion
+    rates along the page flow (``PageOneStepConvertRate.scala:44-99``)."""
+    from bigdata_commerce_spark.plans import commerce as C
+
+    _, actions = _commerce_tables(spark)
+    params = C.TaskParams(target_page_flow=_COMMERCE_PAGE_FLOW)
+    actions = C.filter_actions_by_date(actions, params)
+    return C.page_convert_rate(spark, actions, params).drop("task_id")
 
 
 # ---------------------------------------------------------------------------
@@ -2078,8 +2238,7 @@ def temperature_token_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     isqrt of BIGINT totals and budgets integer-divide — the same
     zero-float-surface discipline as the curation recipes — so the
     DuckDB oracle (FLOOR(SQRT()) + //) reproduces the kept set
-    bit-for-bit. ``temperature_token_budgets`` is the general-tau
-    float helper; this twin pins the tau=0.5 integer-exact path."""
+    bit-for-bit."""
     import math
 
     from bigdata_commerce_spark.operators.mixing import token_budget_per_source

@@ -1,25 +1,13 @@
-"""Training-shard export: the pipeline's last mile.
+"""Dense, order-defined row indexes for training-data export.
 
-Trainers consume fixed-size shards (so data-loader workers stripe
-evenly and resume points are cheap), not whatever file sizes the last
-shuffle happened to leave. This writer assigns every row a
-deterministic shard id from an explicit ordering column and lands
-exactly ceil(n / rows_per_shard) parquet files, one per shard, each
-internally sorted:
-
-- shard_id = dense_rank_by(order_col) // rows_per_shard, computed as
-  a two-level bucketed prefix sum over COUNTS (operators/packing.py
-  discipline) — never a global single-partition row_number over the
-  data. The per-bucket count table is tiny (one row per bucket), so
-  the only full-data shuffle is the final repartition BY shard.
-- repartition(num_shards, shard_id) + sortWithinPartitions lands one
-  in-order file per shard via parquet's one-file-per-partition write.
-
-At 100 TB: one count aggregate (map-side partials), one broadcast of
-the bucket offsets, one shuffle by shard id — the minimum any exact
-fixed-size sharding can do. If approximate shard sizes are
-acceptable, skip this and write with maxRecordsPerFile; this module
-exists for the exact, resumable layout.
+Trainers address examples by a contiguous index (fixed-size shards,
+cheap resume points), not by whatever ids the last shuffle left. The
+indexes here are computed as a two-level bucketed prefix sum over
+COUNTS (operators/packing.py discipline) — never a global
+single-partition row_number over the data. The per-bucket count table
+is tiny (one row per bucket), so at 100 TB the cost is one count
+aggregate (map-side partials), one broadcast of the bucket offsets and
+one bucket-local window.
 """
 
 from __future__ import annotations
@@ -113,63 +101,6 @@ def with_group_shuffled_index(
         .withColumn(index_col, F.col("__offset") + F.row_number().over(w_in) - 1)
         .drop("__h", "__sub", "__n", "__offset")
     )
-
-
-def assign_shards(
-    df: DataFrame,
-    rows_per_shard: int,
-    order_col: str = "doc_id",
-    bucket_width: int = 1 << 20,
-) -> DataFrame:
-    """Add ``shard_id`` and ``shard_pos`` (0-based position within the
-    shard) by global ``order_col`` order — the shard address is the
-    global index (with_global_index) divided into fixed-size runs."""
-    ranked = with_global_index(df, order_col, "__rank", bucket_width)
-    return (
-        ranked.withColumn("shard_id", F.expr(f"CAST(__rank div {rows_per_shard} AS INT)"))
-        .withColumn("shard_pos", F.pmod(F.col("__rank"), F.lit(rows_per_shard)).cast("int"))
-        .drop("__rank")
-    )
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    rows_per_shard: int,
-    order_col: str = "doc_id",
-) -> int:
-    """Write ``df`` as exactly ceil(n / rows_per_shard) shards under
-    ``path/shard_id=K/``, ONE parquet file per shard, each holding
-    ``rows_per_shard`` consecutive rows of the ``order_col`` order
-    (the last shard short), internally sorted by position. Returns
-    the shard count.
-
-    repartition BY shard_id can hash-collide two shards into one
-    task; ``partitionBy`` at write splits a task's rows per shard
-    value, so the one-file-per-shard layout holds regardless (each
-    task writes one file per shard directory it touches). The
-    count() that sizes the repartition is one extra aggregate —
-    acceptable for a terminal export job (it IS the job)."""
-    # persist before counting: the count() that sizes the repartition
-    # would otherwise recompute the whole rank pipeline (scan + bucket
-    # agg + windows) a second time for the write
-    assigned = assign_shards(df, rows_per_shard, order_col).persist()
-    try:
-        n = assigned.count()
-        num_shards = -(-n // rows_per_shard)
-        if n:
-            (
-                assigned.repartition(num_shards, "shard_id")
-                .sortWithinPartitions("shard_id", "shard_pos")
-                .write.mode("overwrite")
-                .partitionBy("shard_id")
-                .parquet(path)
-            )
-        # empty input: 0 shards, nothing written — a data-loader must
-        # see the true shard count, not a phantom shard 1
-        return num_shards
-    finally:
-        assigned.unpersist()
 
 
 def with_shuffled_index(

@@ -1,6 +1,9 @@
 """Batch sinks (SURVEY.md §2.1): JDBC append, warehouse table
 overwrite, partitioned parquet.
 
+Kept although no entry point imports it: it is the reference's MySQL/Hive
+result output, round-tripped in tests/test_commerce.py.
+
 The reference writes every result to MySQL via the DataFrame JDBC
 writer with inline credentials at six call sites
 (``SessionStat.scala:152-159`` etc.) and overwrites Hive tables with

@@ -77,55 +77,6 @@ def without_blacklisted(stream: DataFrame, blacklist: DataFrame) -> DataFrame:
     return stream.join(blacklist.select("user_id"), "user_id", "left_anti")
 
 
-def cumulative_counts(stream: DataFrame) -> DataFrame:
-    """Req 8: running totals per (date, province, city, ad) —
-    ``updateStateByKey`` (``AdverStat.scala:211-223``) becomes a
-    stateful aggregation in update mode.
-
-    State honesty: the grouping keys carry NO event-time column, so
-    the watermark mechanism cannot evict this state (Spark only
-    applies the watermark predicate to event-time grouping keys) —
-    running totals inherently keep one state row per key forever.
-    State is bounded by KEY CARDINALITY, not time: past dates stop
-    receiving updates but their rows remain until retired out-of-band.
-    That is exactly why the production topology (pipelines.py) keeps
-    these totals in SINK-side state (foreachBatch additive merge)
-    rather than the streaming state store — the sink table can be
-    partitioned and pruned by date. An earlier form took a watermark
-    parameter and claimed it bounded state; that claim was wrong and
-    the parameter is gone."""
-    return stream.groupBy("event_date", "province", "city", "ad_id").agg(
-        F.count(F.lit(1)).alias("click_count")
-    )
-
-
-def minute_window_trend(
-    stream: DataFrame,
-    window_minutes: int = 60,
-    slide_minutes: int = 1,
-    watermark: str = "5 minutes",
-) -> DataFrame:
-    """Req 10: sliding event-time window counts with a watermark —
-    the reference's ``reduceByKeyAndWindow(Minutes(60), Minutes(1))``
-    evaluated in *processing* time with no late-data policy
-    (``AdverStat.scala:93-109``); event time + watermark is the
-    documented semantic upgrade."""
-    return (
-        stream.withWatermark("event_time", watermark)
-        .groupBy(
-            F.window("event_time", f"{window_minutes} minutes", f"{slide_minutes} minutes"),
-            "ad_id",
-        )
-        .agg(F.count(F.lit(1)).alias("click_count"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "ad_id",
-            "click_count",
-        )
-    )
-
-
 def sliding_windows(events: DataFrame) -> DataFrame:
     """Req 10's window assignment: each row with a non-NULL
     ``event_time`` once per 60-minute window, sliding by 1 minute, that
@@ -173,27 +124,4 @@ def province_top3_from_counts(counts: DataFrame) -> DataFrame:
         ["event_date", "province"],
         [F.desc("click_count"), F.asc("ad_id")],
         k=3,
-    )
-
-
-def session_window_counts(
-    stream: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Optional extension (SURVEY.md §2.9 'session windows: absent'):
-    event-time session windows with a gap timeout — the streaming twin
-    of the batch gap-sessionization in operators/sessionize.py. The
-    reference can't express this at all (its sessions are pre-assigned
-    ids in mock data)."""
-    return (
-        stream.withWatermark("event_time", watermark)
-        .groupBy(F.session_window("event_time", gap), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
     )

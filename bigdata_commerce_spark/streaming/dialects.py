@@ -1,5 +1,9 @@
 """SQL dialects for the JDBC MERGE state backend.
 
+Kept although no entry point imports it: it is the MySQL dialect of the
+reference's ad-state output (streaming/jdbc_state.py), pinned by
+tests/test_jdbc_dialects.py.
+
 The reference's actual sink database is MySQL (``adversStat/src/main/
 scala/JdbcHelper.scala:82-137`` — row-at-a-time SELECT-then-INSERT-or-
 UPDATE DAOs over a MySQL pool); the backend here is proven end-to-end

@@ -1,5 +1,9 @@
 """MERGE-shaped JDBC state backend for the streaming sinks.
 
+Kept although no entry point imports it: it is the reference's MySQL
+ad-state output, held row-identical to the parquet store by
+tests/test_jdbc_state.py and tests/test_streaming.py.
+
 The parquet epoch sinks (``streaming/sinks.py``) carry the reference's
 four upsert-DAO merge algebras (``adversStat/src/main/scala/
 JdbcHelper.scala:21-389``) but rewrite the FULL state every

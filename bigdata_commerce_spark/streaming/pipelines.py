@@ -65,9 +65,7 @@ def run_ad_pipeline(
     foreachBatch topology keeps ALL state sink-side (additive epoch
     merges), so late rows fold in exactly and there is no streaming
     aggregation state for a watermark to bound — an earlier signature
-    accepted one and silently ignored it. The watermarked helpers
-    (minute_window_trend, session_window_counts) are separate
-    surfaces with event-time keys.
+    accepted one and silently ignored it.
 
     ``backend`` selects the state store: default is the parquet epoch
     store under ``work_dir``; pass a ``jdbc_state.JdbcStateBackend``
@@ -184,24 +182,6 @@ def file_event_source(
         spark.readStream.schema(ad_stream.AD_EVENT_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
-    )
-
-
-def jsonl_document_source(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """Streaming ingest of a JSONL document corpus (the arrival format
-    of training-data shards): each landed shard becomes a micro-batch,
-    feeding the same text/dedup operators the batch catalog runs —
-    e.g. fingerprint into a distinct-append sink for incremental exact
-    dedup. Explicit schema, same rule as the batch reader (inference
-    would re-scan the corpus)."""
-    from bigdata_commerce_spark.sources.formats import DOCUMENTS_SCHEMA
-
-    return (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
     )
 
 

@@ -87,3 +87,48 @@ def test_bench_stdout_is_one_json_line():
     assert isinstance(out["queries"], dict) and len(out["queries"]) == 50
     assert out["cpus"] == int(env["SPARK_GRAFT_CPUS"])
     assert not out.get("errors"), out.get("errors")
+
+
+_WARM_PROBE = """
+import os, sys
+from pathlib import Path
+sys.path.insert(0, {repo!r})
+import bench
+from bigdata_commerce_spark import get_spark
+
+spark = get_spark(shuffle_partitions=2)
+bench.warm_session(spark, {sf!r})
+parent = {{}}
+for proc in Path("/proc").iterdir():
+    if not proc.name.isdigit():
+        continue
+    try:
+        stat = (proc / "stat").read_text()
+        cmd = (proc / "cmdline").read_bytes().replace(b"\\0", b" ").decode()
+    except OSError:
+        continue
+    parent[int(proc.name)] = (int(stat.rsplit(")", 1)[1].split()[1]), cmd)
+family, frontier = [], [os.getpid()]
+while frontier:
+    top = frontier.pop()
+    kids = [p for p, (pp, _) in parent.items() if pp == top]
+    family += kids
+    frontier += kids
+print(sum("pyspark.daemon" in parent[p][1] for p in family))
+spark.stop()
+"""
+
+
+def test_warm_session_starts_python_workers():
+    """warm_session's pandas-UDF step must run, not be pruned: after
+    it, a pyspark.daemon process runs under the session. Checked in a
+    fresh process, so no earlier test's UDF can have started one."""
+    out = subprocess.run(
+        [sys.executable, "-c", _WARM_PROBE.format(repo=str(REPO), sf=SF_SMOKE)],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2"},
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert int(out.stdout.strip().splitlines()[-1]) >= 1

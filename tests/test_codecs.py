@@ -226,327 +226,16 @@ def test_real_frame_sample_even_spacing(spark):
     assert {r.offset_ms for r in img} == {0}
 
 
-def test_wav_roundtrip_and_rejects_garbage():
-    import numpy as np
-    import pytest as _pytest
-
-    from bigdata_commerce_spark.operators.codecs import decode_wav, encode_wav
-
-    t = np.sin(2 * np.pi * 440 * np.arange(1600) / 16000) * 0.5
-    b = encode_wav(t, sample_rate=16000, n_channels=1)
-    s, sr, ch = decode_wav(b)
-    assert (sr, ch, s.shape) == (16000, 1, (1600, 1))
-    assert abs(s[:, 0] - t).max() < 1e-4
-    # stereo interleave
-    stereo = np.stack([t, -t], axis=1)
-    s2, sr2, ch2 = decode_wav(encode_wav(stereo, 8000, 2))
-    assert (sr2, ch2, s2.shape) == (8000, 2, (1600, 2))
-    assert abs(s2 - stereo).max() < 1e-4
-    with _pytest.raises(ValueError, match="WAV"):
-        decode_wav(b"definitely not audio")
-
-
-def test_audio_features_real_path(spark):
-    import numpy as np
-
-    from bigdata_commerce_spark.operators.codecs import encode_wav
-    from bigdata_commerce_spark.operators.multimodal import audio_features
-
-    sr = 16000
-    tone = 0.5 * np.sin(2 * np.pi * 100 * np.arange(sr) / sr)   # 1s, 100 Hz
-    silence = np.zeros(sr // 2)                                 # 0.5s
-    rows = [
-        (1, bytearray(encode_wav(tone, sr))),
-        (2, bytearray(encode_wav(silence, sr))),
-        (3, None),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-    got = {r.media_id: r for r in audio_features(df, decode="real").collect()}
-
-    t1 = got[1]
-    assert t1.duration_ms == 1000 and t1.sample_rate == sr and t1.n_channels == 1
-    f = t1.features
-    assert abs(f[3] - 0.5 / 2**0.5) < 1e-3     # RMS of a sine = a/sqrt(2)
-    assert abs(f[4] - 0.5) < 1e-3              # peak
-    assert abs(f[5] - 200 / sr) < 1e-3         # zcr = 2*freq/sr
-    s2 = got[2]
-    assert s2.duration_ms == 500
-    assert s2.features[3] == 0.0 and s2.features[4] == 0.0  # silence
-    n = got[3]
-    # absent media -> every report field NULL (absent != 0-byte file)
-    assert n.features is None and n.duration_ms is None
-    assert n.n_bytes is None and n.content_sha is None
-
-
-def test_audio_features_deterministic_mode_plumbing(spark):
-    from bigdata_commerce_spark.operators.multimodal import (
-        AUDIO_FEATURE_DIM,
-        audio_features,
-    )
-
-    df = spark.createDataFrame(
-        [(1, bytearray(b"anything")), (2, bytearray(b"else"))],
-        "media_id long, content binary",
-    )
-    out = audio_features(df).collect()
-    assert all(len(r.features) == AUDIO_FEATURE_DIM for r in out)
-    # pure function of content bytes
-    again = audio_features(
-        spark.createDataFrame([(9, bytearray(b"anything"))],
-                              "media_id long, content binary")
-    ).collect()[0]
-    byid = {r.media_id: r for r in out}
-    assert list(again.features) == list(byid[1].features)
-    assert again.content_sha == byid[1].content_sha
-
-
 # ------------------------------------- real-decode perceptual hash
-
-
-def _upscale2(base8: np.ndarray) -> np.ndarray:
-    """16x16 image whose nearest-resize back to 8x8 is exactly base8."""
-    return np.kron(base8, np.ones((2, 2, 1), dtype=np.uint8))
-
-
-def test_phash_real_container_invariance(spark):
-    """The real-decode aHash sees PIXELS, not bytes: the same image
-    encoded as BMP and as PPM hashes identically (the deterministic
-    sha-path cannot do this), and NULL / undecodable payloads yield
-    NULL phash instead of killing the batch."""
-    from bigdata_commerce_spark.operators.multimodal import media_phash_real
-
-    rng = np.random.default_rng(7)
-    img = _upscale2(rng.integers(0, 256, (8, 8, 3)).astype(np.uint8))
-    df = spark.createDataFrame(
-        [
-            (0, bytearray(encode_bmp(img))),
-            (1, bytearray(encode_ppm(img))),
-            (2, bytearray(b"not an image at all")),
-            (3, None),
-        ],
-        "media_id long, content binary",
-    )
-    out = {r.media_id: r.phash for r in media_phash_real(df).collect()}
-    assert out[0] is not None and out[0] == out[1]
-    assert out[2] is None and out[3] is None
-
-
-def test_phash_real_decode_banding_equals_brute_force(spark):
-    """Round-8 verdict item 3: the 64-bit aHash over REAL BMP/PPM
-    decodes, fed through the same pigeonhole banding as the
-    deterministic path — banded candidates verify to EXACTLY the
-    brute-force hamming<=3 pair set, the banded candidate space is a
-    strict subset of all pairs (banding beats brute force), and the
-    plan has no CartesianProduct."""
-    from bigdata_commerce_spark.operators.multimodal import (
-        PHASH_REAL_BITS,
-        media_phash_real,
-        phash_hamming_pairs,
-    )
-
-    # bits sit at +-85 from the mean, so flipping k cells dark<->bright
-    # moves exactly k aHash bits (the ~2.6 mean shift can't reach any)
-    dark, bright = 40, 210
-    rng = np.random.default_rng(13)
-    payloads = []
-    for g in range(4):  # 4 groups x 3 variants + 8 loners = 20 images
-        base8 = np.where(
-            rng.random((8, 8, 1)) < 0.5, dark, bright
-        ).astype(np.uint8).repeat(3, axis=2)
-        for k in (0, 1, 3):  # planted hamming 0/1/3 wrt the base
-            var = base8.copy()
-            flat = var.reshape(64, 3)
-            for cell in range(k):
-                pos = 8 * g + cell  # distinct cells per group
-                flat[pos] = bright if flat[pos][0] == dark else dark
-            img = _upscale2(var)
-            payloads.append(
-                encode_bmp(img) if (g + k) % 2 == 0 else encode_ppm(img)
-            )
-    for _ in range(8):
-        base8 = np.where(
-            rng.random((8, 8, 1)) < 0.5, dark, bright
-        ).astype(np.uint8).repeat(3, axis=2)
-        payloads.append(encode_ppm(_upscale2(base8)))
-
-    df = spark.createDataFrame(
-        [(i, bytearray(p)) for i, p in enumerate(payloads)],
-        "media_id long, content binary",
-    )
-    h = media_phash_real(df)
-    hashes = {r.media_id: r.phash & ((1 << 64) - 1) for r in h.collect()}
-    brute = {
-        (a, b, bin(hashes[a] ^ hashes[b]).count("1"))
-        for a in hashes
-        for b in hashes
-        if a < b and bin(hashes[a] ^ hashes[b]).count("1") <= 3
-    }
-    # the planted pairs are really there (one hamming-1 and one
-    # hamming-3 pair per group at minimum), so the check is not vacuous
-    assert len(brute) >= 12
-    pairs = phash_hamming_pairs(h, PHASH_REAL_BITS, max_hamming=3)
-    got = {(r.media_a, r.media_b, r.hamming) for r in pairs.collect()}
-    assert got == brute
-    # banding prunes: candidates (>=1 of the 4 16-bit bands equal) are
-    # a strict subset of the n*(n-1)/2 brute-force comparisons
-    def bands(x):
-        return [(x >> (16 * j)) & 0xFFFF for j in range(4)]
-
-    cands = {
-        (a, b)
-        for a in hashes
-        for b in hashes
-        if a < b and any(u == v for u, v in zip(bands(hashes[a]), bands(hashes[b])))
-    }
-    n = len(hashes)
-    assert len(cands) < n * (n - 1) // 2
-    assert {(a, b) for a, b, _ in got} <= cands
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-
-
-def test_phash_real_wide_256bit_banding_equals_brute_force(spark):
-    """VERDICT r9 item 5: the production-width 16x16 -> 256-bit aHash
-    over real decodes. Same invariants as the 64-bit seam at 4x the
-    width: banded candidates (4 one-word bands at max_hamming=3)
-    verify to EXACTLY the brute-force pair set, container (BMP vs
-    PPM) doesn't matter, NULL/undecodable -> NULL, and the plan has
-    no CartesianProduct."""
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_phash_real_wide,
-        phash_words_hamming_pairs,
-    )
-
-    dark, bright = 40, 210
-    rng = np.random.default_rng(29)
-    payloads = []
-    for g in range(4):  # 4 groups x 3 variants + 8 loners = 20 images
-        base = np.where(
-            rng.random((16, 16, 1)) < 0.5, dark, bright
-        ).astype(np.uint8).repeat(3, axis=2)
-        for k in (0, 1, 3):
-            var = base.copy()
-            flat = var.reshape(256, 3)
-            for cell in range(k):
-                pos = 16 * g + cell  # distinct cells per group
-                flat[pos] = bright if flat[pos][0] == dark else dark
-            payloads.append(
-                encode_bmp(var) if (g + k) % 2 == 0 else encode_ppm(var)
-            )
-    for _ in range(8):
-        base = np.where(
-            rng.random((16, 16, 1)) < 0.5, dark, bright
-        ).astype(np.uint8).repeat(3, axis=2)
-        payloads.append(encode_ppm(base))
-
-    df = spark.createDataFrame(
-        [(i, bytearray(p)) for i, p in enumerate(payloads)]
-        + [(900, bytearray(b"not an image")), (901, None)],
-        "media_id long, content binary",
-    )
-    h = media_phash_real_wide(df, hash_size=16)
-    rows = {r.media_id: r.phash_words for r in h.collect()}
-    assert rows[900] is None and rows[901] is None
-    hashes = {
-        m: sum((w & ((1 << 64) - 1)) << (64 * i) for i, w in enumerate(ws))
-        for m, ws in rows.items()
-        if ws is not None
-    }
-    assert all(x < (1 << 256) for x in hashes.values())
-    brute = {
-        (a, b, bin(hashes[a] ^ hashes[b]).count("1"))
-        for a in hashes
-        for b in hashes
-        if a < b and bin(hashes[a] ^ hashes[b]).count("1") <= 3
-    }
-    assert len(brute) >= 8  # the planted hamming-1/-3 pairs exist
-    pairs = phash_words_hamming_pairs(
-        h.where(F.col("phash_words").isNotNull()), n_words=4, max_hamming=3
-    )
-    got = {(r.media_a, r.media_b, r.hamming) for r in pairs.collect()}
-    assert got == brute
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-
-
-def test_phash_real_wide_container_invariance_and_identity(spark):
-    """Same pixels, different container -> identical 256-bit hash;
-    and a 16x16 input resized to 16x16 is the identity, so the wide
-    hash of a 16x16 image is a pure function of its pixels."""
-    from bigdata_commerce_spark.operators.multimodal import media_phash_real_wide
-
-    rng = np.random.default_rng(31)
-    img = rng.integers(0, 256, (16, 16, 3)).astype(np.uint8)
-    df = spark.createDataFrame(
-        [(0, bytearray(encode_bmp(img))), (1, bytearray(encode_ppm(img)))],
-        "media_id long, content binary",
-    )
-    out = {r.media_id: r.phash_words for r in media_phash_real_wide(df).collect()}
-    assert out[0] is not None and list(out[0]) == list(out[1])
-    assert len(out[0]) == 4
 
 
 def test_phash_words_rejects_unaligned_bands():
     import pytest
 
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_phash_real_wide,
-        phash_words_hamming_pairs,
-    )
+    from bigdata_commerce_spark.operators.multimodal import phash_words_hamming_pairs
 
     with pytest.raises(ValueError, match="divide"):
         phash_words_hamming_pairs(None, n_words=4, max_hamming=2)
-    with pytest.raises(ValueError, match="multiple of 64"):
-        media_phash_real_wide(None, hash_size=12)
-
-
-def test_banded_pair_ops_decode_each_image_once(spark, tmp_path, monkeypatch):
-    """VERDICT r10 item 3: the banded pair kernels persist their hash
-    input, so composing them with the real-decode Arrow kernel pays
-    ONE decode per image across the 2 x bands band-union scans (the
-    round-10 scale probe's manual localCheckpoint, now built in).
-    Counts actual decode calls via an instrumented decoder that logs
-    to a file (local mode: workers share the filesystem), and pins
-    the plan shape: every band branch reads the InMemoryTableScan."""
-    from bigdata_commerce_spark.operators import codecs
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_phash_real_wide,
-        phash_words_hamming_pairs,
-    )
-
-    log = tmp_path / "decodes.log"
-    real_decode = codecs.decode_image
-
-    def counting_decode(raw: bytes):
-        with open(log, "a") as f:
-            f.write("x\n")
-        return real_decode(raw)
-
-    monkeypatch.setattr(codecs, "decode_image", counting_decode)
-
-    rng = np.random.default_rng(7)
-    imgs = [
-        np.where(rng.random((16, 16, 1)) < 0.5, 40, 210)
-        .astype(np.uint8)
-        .repeat(3, axis=2)
-        for _ in range(6)
-    ]
-    df = spark.createDataFrame(
-        [(i, bytearray(encode_bmp(im))) for i, im in enumerate(imgs)],
-        "media_id long, content binary",
-    ).coalesce(1)
-    pairs = phash_words_hamming_pairs(
-        media_phash_real_wide(df, hash_size=16), n_words=4, max_hamming=3
-    )
-    pairs.collect()
-    n_decodes = len(log.read_text().splitlines())
-    assert n_decodes == len(imgs), (
-        f"expected one decode per image, got {n_decodes} for {len(imgs)}"
-    )
-    # AQE prints final + initial plans after execution; count the final
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("InMemoryTableScan") == 2 * 4  # both sides x 4 bands
 
 
 def test_banded_pair_ops_cache_is_bounded(spark):
@@ -589,408 +278,7 @@ def test_banded_pair_ops_cache_is_bounded(spark):
     assert len(cache_util._REGISTRY) <= cache_util.PERSIST_BOUND
 
 
-def _hk_clip(freqs, bed, sr=16000):
-    """Broadband test clip: tone mixture over a fixed-seed noise bed
-    (pure tones are the adversarial case for band-energy fingerprints
-    — empty bands flip on any perturbation; real audio is broadband)."""
-    t = np.arange(sr) / sr
-    return sum(np.sin(2 * np.pi * f * t) for f in freqs) * 0.15 + 0.05 * bed
-
-
-def test_audio_fingerprint_gain_invariant_noise_robust_discriminative(spark):
-    """media_audio_fingerprint (Haitsma-Kalker): a global VOLUME
-    change leaves the fingerprint bit-identical (energy differences
-    scale uniformly — the construction's headline invariance); small
-    additive noise flips only a few bits; a different clip reads far
-    apart. NULL and non-WAV payloads yield NULL."""
-    from bigdata_commerce_spark.operators.codecs import encode_wav
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_audio_fingerprint,
-    )
-
-    sr = 16000
-    bed = np.random.default_rng(7).standard_normal(sr)
-    a = _hk_clip([440, 880, 1320], bed)
-    pert = np.random.default_rng(9).standard_normal(sr)
-    payloads = [
-        encode_wav(a, sr),
-        encode_wav(a + 0.003 * pert, sr),     # mild additive noise
-        encode_wav(0.4 * a, sr),              # global gain change
-        encode_wav(_hk_clip([523, 1046, 1569], bed), sr),  # different clip
-        b"not a wav payload",
-    ]
-    rows = [(i, bytearray(p)) for i, p in enumerate(payloads)] + [(99, None)]
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-    fp = {r.media_id: r.phash_words for r in media_audio_fingerprint(df).collect()}
-
-    def ham(x, y):
-        return sum(bin((u ^ v) & ((1 << 64) - 1)).count("1") for u, v in zip(x, y))
-
-    assert all(len(fp[i]) == 4 for i in range(4))  # 256 bits, 4 words
-    assert ham(fp[0], fp[2]) == 0          # gain: exactly invariant
-    assert ham(fp[0], fp[1]) <= 8          # noise: a few bits
-    assert ham(fp[0], fp[3]) >= 60         # different content: far
-    assert fp[4] is None and fp[99] is None
-
-
-def test_audio_fingerprint_banding_equals_brute_force(spark):
-    """The audio fingerprint rides the SAME phash_words layout, so
-    phash_words_hamming_pairs must return exactly the brute-force
-    pair set over it — near-dup audio joins with nothing downstream
-    changing."""
-    from itertools import combinations
-
-    from bigdata_commerce_spark.operators.codecs import encode_wav
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_audio_fingerprint,
-        phash_words_hamming_pairs,
-    )
-
-    sr = 16000
-    bed = np.random.default_rng(11).standard_normal(sr)
-    clips = []
-    for base_i, freqs in enumerate([[440, 880], [660, 990], [523, 1569]]):
-        a = _hk_clip(freqs, bed)
-        clips.append(a)             # original
-        clips.append(0.5 * a)       # gain twin: hamming 0 -> a pair
-        clips.append(1.7 * a)       # clipping-range gain twin
-    df = spark.createDataFrame(
-        [(i, bytearray(encode_wav(c, sr))) for i, c in enumerate(clips)],
-        "media_id long, content binary",
-    )
-    fp = media_audio_fingerprint(df)
-    got = {
-        (r.media_a, r.media_b): r.hamming
-        for r in phash_words_hamming_pairs(fp, n_words=4, max_hamming=3).collect()
-    }
-    words = {r.media_id: r.phash_words for r in fp.collect()}
-
-    def ham(x, y):
-        return sum(bin((u ^ v) & ((1 << 64) - 1)).count("1") for u, v in zip(x, y))
-
-    brute = {
-        (i, j): ham(words[i], words[j])
-        for i, j in combinations(sorted(words), 2)
-        if ham(words[i], words[j]) <= 3
-    }
-    assert got == brute and got  # equality AND at least the planted twins
-    for base in (0, 3, 6):  # each clip's gain twins pair with it
-        assert (base, base + 1) in got
-
-
-def _blob_image(rng) -> np.ndarray:
-    """Smooth 'natural' 32x32 grayscale: a few gaussian blobs, values
-    clipped into [30, 140] so an additive gradient never saturates."""
-    base = np.zeros((32, 32))
-    for _ in range(6):
-        cx, cy = rng.uniform(0, 32, 2)
-        s = rng.uniform(4, 10)
-        a = rng.uniform(30, 90)
-        y, x = np.mgrid[0:32, 0:32]
-        base += a * np.exp(-((x - cx) ** 2 + (y - cy) ** 2) / (2 * s * s))
-    return np.clip(base, 0, 110) + 30
-
-
-def _gray3(base: np.ndarray) -> bytes:
-    return encode_bmp(base[:, :, None].repeat(3, axis=2).astype(np.uint8))
-
-
-def _words_to_int(ws) -> int:
-    return sum((w & ((1 << 64) - 1)) << (64 * i) for i, w in enumerate(ws))
-
-
-def test_dct_phash_survives_brightness_gradient_ahash_does_not(spark):
-    """VERDICT r10 item 6: the true-pHash construction (DCT
-    low-frequency block, median threshold) vs the average hash under
-    a NON-UNIFORM luminance change — a smooth left-to-right +80
-    brightness gradient. The gradient is low-frequency energy in a
-    couple of DCT terms, so the pHash pair survives at hamming <= 3;
-    the same gradient drags pixels across aHash's global mean all
-    over the image, so the aHash pair is far outside any near-dup
-    bound. Images are crafted blobs (seeded), picked so the margin is
-    wide on every pair."""
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_phash_dct,
-        media_phash_real,
-    )
-
-    rng = np.random.default_rng(5)
-    bases = [_blob_image(rng) for _ in range(27)]
-    chosen = [bases[i] for i in (2, 5, 9, 26)]
-    grad = np.linspace(0, 80, 32)[None, :]
-    rows = []
-    for g, base in enumerate(chosen):
-        rows.append((10 * g, bytearray(_gray3(base))))
-        rows.append((10 * g + 1, bytearray(_gray3(base + grad))))
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-
-    dct = {r.media_id: _words_to_int(r.phash_words)
-           for r in media_phash_dct(df, hash_size=8).collect()}
-    ah = {r.media_id: r.phash & ((1 << 64) - 1)
-          for r in media_phash_real(df).collect()}
-    for g in range(len(chosen)):
-        a, b = 10 * g, 10 * g + 1
-        d_dct = bin(dct[a] ^ dct[b]).count("1")
-        d_ah = bin(ah[a] ^ ah[b]).count("1")
-        assert d_dct <= 3, f"pair {g}: DCT pair should survive, hamming {d_dct}"
-        assert d_ah >= 6, f"pair {g}: aHash pair should drop, hamming {d_ah}"
-
-
-def test_dct_phash_256bit_banding_equals_brute_force(spark):
-    """The 256-bit DCT pHash runs through the SAME banded hamming
-    kernel as the aHash path (phash_words_hamming_pairs, 4 one-word
-    bands at max_hamming=3) and must agree with brute force
-    pair-for-pair. Planted near-dups: exact duplicates and uniform
-    brightness shifts (DC-only energy -> hamming 0) keep the pair set
-    non-vacuous; patch-edited variants land far outside the bound and
-    must NOT appear. NULL/undecodable rows hash to NULL and join
-    nothing."""
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_phash_dct,
-        phash_words_hamming_pairs,
-    )
-
-    rng = np.random.default_rng(11)
-    payloads = []
-    for _ in range(8):
-        base = _blob_image(rng)
-        payloads.append(_gray3(base))
-        payloads.append(_gray3(base.copy()))       # exact dup
-        payloads.append(_gray3(base + 10))         # uniform shift
-        patch = base.copy()
-        patch[10:13, 10:13] += 12                  # far pair (negative case)
-        payloads.append(_gray3(patch))
-    df = spark.createDataFrame(
-        [(i, bytearray(p)) for i, p in enumerate(payloads)]
-        + [(900, bytearray(b"not an image")), (901, None)],
-        "media_id long, content binary",
-    )
-    h = media_phash_dct(df, hash_size=16)
-    rows = {r.media_id: r.phash_words for r in h.collect()}
-    assert rows[900] is None and rows[901] is None
-    hashes = {m: _words_to_int(ws) for m, ws in rows.items() if ws is not None}
-    brute = {
-        (a, b, bin(hashes[a] ^ hashes[b]).count("1"))
-        for a in hashes
-        for b in hashes
-        if a < b and bin(hashes[a] ^ hashes[b]).count("1") <= 3
-    }
-    assert len(brute) >= 8  # dup/shift groups are within the bound
-    pairs = phash_words_hamming_pairs(
-        h.where(F.col("phash_words").isNotNull()), n_words=4, max_hamming=3
-    )
-    got = {(r.media_a, r.media_b, r.hamming) for r in pairs.collect()}
-    assert got == brute
-
-
-def test_dct_phash_contract_edges(spark):
-    """Shared contracts with the other real-decode kernels: contrast
-    SCALING is invariant (every DCT coefficient scales, comparisons
-    against the median are unchanged), and misaligned sizes raise."""
-    from bigdata_commerce_spark.operators.multimodal import media_phash_dct
-
-    rng = np.random.default_rng(3)
-    base = _blob_image(rng)
-    scaled = np.clip((base - 80) * 1.4 + 80, 0, 255)  # contrast stretch
-    df = spark.createDataFrame(
-        [(0, bytearray(_gray3(base))), (1, bytearray(_gray3(scaled)))],
-        "media_id long, content binary",
-    )
-    out = {r.media_id: _words_to_int(r.phash_words)
-           for r in media_phash_dct(df, hash_size=8).collect()}
-    assert bin(out[0] ^ out[1]).count("1") <= 3
-    with pytest.raises(ValueError, match="multiple of 64"):
-        media_phash_dct(None, hash_size=12)
-
-
 # ---------------------------------------------- scene changes
 
 
-def test_scene_changes_detects_cuts(spark):
-    """A stream of 4 red frames, a hard cut to 3 blue frames, then a
-    gradual small-noise tail stays 2 scenes: the cut clears the MAD
-    threshold, the noise does not; keyframes are the first frame of
-    each scene; spans tile [0, n_frames-1]."""
-    import hashlib as _hl
-
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_scene_changes,
-    )
-
-    red = np.zeros((6, 6, 3), dtype=np.uint8)
-    red[..., 0] = 200
-    blue = np.zeros((6, 6, 3), dtype=np.uint8)
-    blue[..., 2] = 200
-    rng = np.random.default_rng(11)
-    noisy = [
-        np.clip(
-            blue.astype(np.int16) + rng.integers(-4, 5, blue.shape), 0, 255
-        ).astype(np.uint8)
-        for _ in range(2)
-    ]
-    frames = [red] * 4 + [blue] + noisy
-    stream = b"".join(encode_ppm(f) for f in frames)
-    media = _media_df(spark, [stream])
-    rows = sorted(
-        media_scene_changes(media).collect(), key=lambda r: r.scene_no
-    )
-    assert [(r.scene_no, r.start_frame, r.end_frame) for r in rows] == [
-        (0, 0, 3),
-        (1, 4, 6),
-    ]
-    assert all(r.n_scenes == 2 and r.n_frames == 7 for r in rows)
-    assert rows[0].keyframe_sha == _hl.sha256(
-        encode_ppm(red)
-    ).hexdigest()[:16]
-    assert rows[1].keyframe_sha == _hl.sha256(
-        encode_ppm(blue)
-    ).hexdigest()[:16]
-
-
-def test_scene_changes_static_and_single_frame(spark):
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_scene_changes,
-    )
-
-    frame = np.full((4, 4, 3), 90, dtype=np.uint8)
-    static = b"".join(encode_ppm(frame) for _ in range(5))
-    single = encode_bmp(frame)
-    media = _media_df(spark, [static, single])
-    by_id = {}
-    for r in media_scene_changes(media).collect():
-        by_id.setdefault(r.media_id, []).append(r)
-    assert len(by_id[0]) == 1
-    assert (by_id[0][0].start_frame, by_id[0][0].end_frame) == (0, 4)
-    assert len(by_id[1]) == 1 and by_id[1][0].n_frames == 1
-
-
-def test_scene_changes_geometry_cut_and_garbage(spark):
-    """A frame-size change is a hard cut by construction; undecodable
-    payloads and NULL content contribute no rows."""
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_scene_changes,
-    )
-
-    small = np.full((4, 4, 3), 90, dtype=np.uint8)
-    big = np.full((8, 8, 3), 90, dtype=np.uint8)
-    stream = encode_ppm(small) + encode_ppm(big)
-    rows_all = [
-        (0, bytearray(stream), ("image/x-ppm", None, None, None)),
-        (1, bytearray(b"not media"), ("image/bmp", None, None, None)),
-        (2, None, ("image/bmp", None, None, None)),
-    ]
-    media = spark.createDataFrame(rows_all, multimodal.MEDIA_SCHEMA)
-    rows = media_scene_changes(media).collect()
-    assert {r.media_id for r in rows} == {0}
-    assert [(r.scene_no, r.start_frame, r.end_frame)
-            for r in sorted(rows, key=lambda r: r.scene_no)] == [
-        (0, 0, 0),
-        (1, 1, 1),
-    ]
-
-
-def test_scene_changes_threshold_dial(spark):
-    """The threshold is the sensitivity dial: a mid-size jump counts
-    as a cut at a low threshold and merges at a high one."""
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_scene_changes,
-    )
-
-    a = np.full((4, 4, 3), 100, dtype=np.uint8)
-    b = np.full((4, 4, 3), 140, dtype=np.uint8)  # MAD = 40
-    stream = encode_ppm(a) + encode_ppm(b)
-    media = _media_df(spark, [stream])
-    low = media_scene_changes(media, threshold=30.0).collect()
-    high = media_scene_changes(media, threshold=50.0).collect()
-    assert max(r.n_scenes for r in low) == 2
-    assert max(r.n_scenes for r in high) == 1
-
-
 # ---------------------------------------------- audio segments
-
-
-def _seg_media(spark, payloads):
-    rows = [
-        (i, bytearray(p), ("audio/wav", None, None, None))
-        for i, p in enumerate(payloads)
-    ]
-    return spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-
-
-def test_audio_segments_silence_tone_pattern(spark):
-    """silence-tone-silence-tone at 16 kHz with 1024-sample frames:
-    two segments whose ms spans match the frame grid, RMS near the
-    tone's theoretical sin RMS (0.5/sqrt(2)), and spans strictly
-    inside the clip."""
-    from bigdata_commerce_spark.operators.codecs import encode_wav
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_audio_segments,
-    )
-
-    sr = 16000
-    blk = 4096  # 4 frames of 1024
-    t = np.arange(blk) / sr
-    tone = 0.5 * np.sin(2 * np.pi * 440 * t)
-    sig = np.concatenate(
-        [np.zeros(blk), tone, np.zeros(blk), tone, np.zeros(blk)]
-    )
-    media = _seg_media(spark, [encode_wav(sig, sample_rate=sr)])
-    rows = sorted(
-        media_audio_segments(media).collect(), key=lambda r: r.seg_no
-    )
-    assert [r.n_segments for r in rows] == [2, 2]
-    # frame grid: blocks of 4096 samples = 256 ms each
-    assert (rows[0].start_ms, rows[0].end_ms) == (256, 512)
-    assert (rows[1].start_ms, rows[1].end_ms) == (768, 1024)
-    want_rms = 0.5 / np.sqrt(2)
-    for r in rows:
-        assert abs(r.seg_rms - want_rms) < 0.01
-
-
-def test_audio_segments_silence_and_garbage(spark):
-    from bigdata_commerce_spark.operators.codecs import encode_wav
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_audio_segments,
-    )
-
-    silent = encode_wav(np.zeros(8192), sample_rate=16000)
-    rows_all = [
-        (0, bytearray(silent), ("audio/wav", None, None, None)),
-        (1, bytearray(b"not audio"), ("audio/wav", None, None, None)),
-        (2, None, ("audio/wav", None, None, None)),
-    ]
-    media = spark.createDataFrame(rows_all, multimodal.MEDIA_SCHEMA)
-    assert media_audio_segments(media).count() == 0
-
-
-def test_audio_segments_threshold_gates_quiet_audio(spark):
-    """A tone below the RMS threshold produces no segments; raising
-    its level (or lowering the threshold) surfaces it — the dial a
-    pipeline tunes per corpus."""
-    from bigdata_commerce_spark.operators.codecs import encode_wav
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_audio_segments,
-    )
-
-    sr = 16000
-    t = np.arange(4096) / sr
-    quiet = 0.01 * np.sin(2 * np.pi * 440 * t)  # rms ~0.007
-    media = _seg_media(spark, [encode_wav(quiet, sample_rate=sr)])
-    assert media_audio_segments(media, threshold=0.02).count() == 0
-    assert media_audio_segments(media, threshold=0.005).count() == 1
-
-
-def test_audio_segments_short_clip_pads(spark):
-    """A clip shorter than one frame still segments (zero-padded
-    trailing frame); the end_ms lands on the padded frame edge."""
-    from bigdata_commerce_spark.operators.codecs import encode_wav
-    from bigdata_commerce_spark.operators.multimodal import (
-        media_audio_segments,
-    )
-
-    sr = 16000
-    sig = 0.5 * np.ones(100)  # 100 samples, frame_len 1024
-    media = _seg_media(spark, [encode_wav(sig, sample_rate=sr)])
-    rows = media_audio_segments(media).collect()
-    assert len(rows) == 1
-    assert (rows[0].start_ms, rows[0].end_ms) == (0, 64)  # 1024/16000 s

@@ -367,10 +367,7 @@ def test_contamination_report_planted_overlap(spark):
     """Planted corpus/benchmark overlap with hand-computable 3-gram
     sets; the benchmark side must broadcast (corpus never shuffles
     before the probe join)."""
-    from bigdata_commerce_spark.operators.contamination import (
-        contaminated_ids,
-        contamination_report,
-    )
+    from bigdata_commerce_spark.operators.contamination import contamination_report
 
     corpus = spark.createDataFrame(
         [
@@ -402,19 +399,12 @@ def test_contamination_report_planted_overlap(spark):
     plan = rep._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
-    flagged = contaminated_ids(corpus, bench, n=3, min_coverage=0.5)
-    assert {r.doc_id for r in flagged.collect()} == {1}
-
 
 def test_mixture_sample_determinism_nesting_and_rates(spark):
     """Hash-threshold mixing: deterministic across runs, nested across
     fraction increases, observed rates near targets, edge fractions
     exact (0 drops all, 1 keeps all), and the plan stays shuffle-free."""
-    from bigdata_commerce_spark.operators.mixing import (
-        mixture_sample,
-        temperature_fractions,
-        threshold_hex,
-    )
+    from bigdata_commerce_spark.operators.mixing import mixture_sample, threshold_hex
 
     rows = [(i, "a" if i % 2 == 0 else "b") for i in range(4000)]
     df = spark.createDataFrame(rows, "doc_id long, source string")
@@ -440,79 +430,6 @@ def test_mixture_sample_determinism_nesting_and_rates(spark):
     assert threshold_hex(0.0) == "00000000"
     assert threshold_hex(1.0) == "g" > "ffffffff"
 
-    # temperature helper: tau=1 reproduces natural shares; tau=0
-    # splits the budget evenly across sources
-    counts = {"a": 3000, "b": 1000}
-    nat = temperature_fractions(counts, budget_rows=2000, temperature=1.0)
-    assert abs(nat["a"] - 0.5) < 1e-12 and abs(nat["b"] - 0.5) < 1e-12
-    uni = temperature_fractions(counts, budget_rows=2000, temperature=0.0)
-    assert abs(uni["a"] - 1000 / 3000) < 1e-12 and abs(uni["b"] - 1.0) < 1e-12
-
-
-def test_salted_join_equals_plain_join(spark):
-    """Salted join must be result-identical to the plain join (inner
-    and left, incl. unmatched left rows), with the dim side replicated
-    salt_buckets ways."""
-    from bigdata_commerce_spark.operators.salted import salted_join
-
-    facts = spark.createDataFrame(
-        [(i, i % 7, float(i)) for i in range(2000)] + [(9999, 42, 1.0)],
-        "fact_id long, k long, v double",
-    )
-    dim = spark.createDataFrame(
-        [(i, f"d{i}") for i in range(7)], "k long, label string"
-    )
-    for how in ("inner", "left"):
-        got = salted_join(facts, dim, ["k"], F.xxhash64("fact_id"), 8, how=how)
-        want = facts.join(dim, ["k"], how)
-        assert sorted(got.columns) == sorted(want.columns)
-        cols = sorted(got.columns)
-        assert sorted(map(tuple, got.select(cols).collect())) == sorted(
-            map(tuple, want.select(cols).collect())
-        ), how
-    with pytest.raises(ValueError):
-        salted_join(facts, dim, ["k"], F.xxhash64("fact_id"), 8, how="right")
-
-
-def test_write_training_shards_exact_layout(spark, tmp_path):
-    """Exact fixed-size sharding: ceil(n/size) shard dirs, one file
-    each, every shard full except the last, rows in global order_col
-    order across (shard_id, shard_pos)."""
-    import glob
-
-    from bigdata_commerce_spark.sources.shards import assign_shards, write_training_shards
-
-    n, size = 1034, 100
-    # non-contiguous, shuffled ids across partitions
-    df = spark.createDataFrame(
-        [(i * 3 + 1, f"t{i}") for i in range(n)], "doc_id long, text string"
-    ).repartition(13)
-    path = str(tmp_path / "shards")
-    num = write_training_shards(df, path, rows_per_shard=size, order_col="doc_id")
-    assert num == -(-n // size) == 11
-
-    dirs = sorted(glob.glob(f"{path}/shard_id=*"))
-    assert len(dirs) == num
-    for d in dirs:
-        assert len(glob.glob(f"{d}/part-*.parquet")) == 1, d
-
-    back = spark.read.parquet(path)
-    rows = [(r.shard_id, r.shard_pos, r.doc_id) for r in back.collect()]
-    rows.sort()
-    # global order: doc_id ascending across (shard, pos)
-    assert [r[2] for r in rows] == sorted(r[2] for r in rows)
-    # every shard full except the last
-    from collections import Counter
-
-    sizes = Counter(r[0] for r in rows)
-    assert all(sizes[s] == size for s in range(num - 1))
-    assert sizes[num - 1] == n - size * (num - 1)
-    # positions dense within each shard
-    got_assign = assign_shards(df, size, "doc_id")
-    assert got_assign.where(
-        (F.col("shard_pos") < 0) | (F.col("shard_pos") >= size)
-    ).count() == 0
-
 
 def test_cli_list_names_all_queries(capsys):
     """python -m bigdata_commerce_spark list prints every catalog and
@@ -524,70 +441,6 @@ def test_cli_list_names_all_queries(capsys):
     out = capsys.readouterr().out.splitlines()
     names = {line.split()[0] for line in out if line.strip()}
     assert names == set(QUERIES) | set(TWIN_QUERIES)
-
-
-def test_salted_join_null_salt_rows_survive(spark):
-    """A NULL salt expression must not drop (inner) or mis-null (left)
-    fact rows — NULLs fold into bucket 0."""
-    from bigdata_commerce_spark.operators.salted import salted_join
-
-    facts = spark.createDataFrame(
-        [(1, 0, "x"), (2, 0, None), (3, 1, "y")],
-        "fact_id long, k long, tag string",
-    )
-    dim = spark.createDataFrame([(0, "d0"), (1, "d1")], "k long, label string")
-    salt = F.xxhash64("tag")  # NULL tag -> NULL hash
-    for how in ("inner", "left"):
-        got = salted_join(facts, dim, ["k"], salt, 4, how=how)
-        want = facts.join(dim, ["k"], how)
-        cols = sorted(got.columns)
-        assert sorted(map(tuple, got.select(cols).collect())) == sorted(
-            map(tuple, want.select(cols).collect())
-        ), how
-
-
-def test_write_training_shards_empty_input(spark, tmp_path):
-    from bigdata_commerce_spark.sources.shards import write_training_shards
-
-    df = spark.createDataFrame([], "doc_id long, text string")
-    assert write_training_shards(df, str(tmp_path / "s"), 10) == 0
-
-
-def test_contaminated_ids_threshold_unrounded(spark):
-    """The decontamination filter must compare the raw ratio, not the
-    4dp-rounded coverage: 49996/100000 rounds to 0.5 but is below it."""
-    from bigdata_commerce_spark.operators.contamination import contaminated_ids
-
-    # tiny analog: 4999/10000 ~ 0.4999 -> rounds to 0.4999, fine; use
-    # 3-gram counts where shared/bench rounds UP across the cutoff:
-    # bench has 3 n-grams, corpus shares 1 -> 1/3 = 0.3333 rounds to
-    # 0.3333; threshold 1/3: raw 0.33333... >= 1/3 exactly? 1/3 double
-    # compare of the same division is equal -> kept. Use threshold
-    # slightly above the raw value but below the rounded one.
-    corpus = spark.createDataFrame(
-        [(1, "zz beta gamma delta yy qq")], "doc_id long, text string"
-    )
-    bench = spark.createDataFrame(
-        [(100, "alpha beta gamma delta epsilon")], "doc_id long, text string"
-    )
-    # raw = 1/3 = 0.33333...; rounded coverage = 0.3333 (below raw).
-    # A rounded filter at min_coverage=0.33335 would use 0.3333 and
-    # drop the doc; the raw filter keeps it.
-    flagged = contaminated_ids(corpus, bench, n=3, min_coverage=0.33333)
-    assert {r.doc_id for r in flagged.collect()} == {1}
-    # and above the raw value nothing is flagged
-    assert contaminated_ids(corpus, bench, n=3, min_coverage=0.334).count() == 0
-
-
-def test_temperature_fractions_zero_count_sources(spark):
-    from bigdata_commerce_spark.operators.mixing import temperature_fractions
-
-    # tau=0: empty source must not absorb budget
-    f = temperature_fractions({"a": 1000, "b": 0}, budget_rows=1000, temperature=0.0)
-    assert f == {"a": 1.0, "b": 0.0}
-    # negative tau with a zero-count source must not raise
-    f2 = temperature_fractions({"a": 100, "b": 0}, budget_rows=50, temperature=-1.0)
-    assert f2["b"] == 0.0 and 0 < f2["a"] <= 1.0
 
 
 def test_bench_aggregate_total_degrades_on_failure():
@@ -689,70 +542,6 @@ def test_ngram_counts_known_values(spark):
     got = {r.ngram: (r.n_total, r.n_docs) for r in ngram_counts(df, n=2).collect()}
     # doc1 bigrams: ab, ba, ab ; doc2: ab, bc ; doc3: none (1 token)
     assert got == {"a b": (3, 2), "b a": (1, 1), "b c": (1, 1)}
-
-
-def test_salted_join_spreads_hot_key(spark):
-    """The point of the operator: the hot key's rows must land in more
-    than one partition after the salted join (a plain shuffle join
-    puts them all in the hot key's single reducer)."""
-    from bigdata_commerce_spark.operators.salted import salted_join
-
-    facts = spark.createDataFrame(
-        [(i, 7, float(i)) for i in range(5000)], "fact_id long, k long, v double"
-    )
-    dim = spark.createDataFrame([(7, "hot")], "k long, label string")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # AQE would coalesce this tiny test shuffle into one partition and
-    # mask the distribution being asserted; at real scale the salted
-    # partitions exceed the advisory size and stay separate
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        salted = salted_join(facts, dim, ["k"], F.xxhash64("fact_id"), 16)
-        n_parts_salted = (
-            salted.withColumn("p", F.spark_partition_id())
-            .select("p").distinct().count()
-        )
-        plain = facts.join(dim, ["k"])
-        n_parts_plain = (
-            plain.withColumn("p", F.spark_partition_id())
-            .select("p").distinct().count()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev_coalesce)
-    assert n_parts_plain == 1, "plain shuffle join funnels the hot key to one reducer"
-    assert n_parts_salted > 4, f"salted join spread over {n_parts_salted} partitions"
-
-
-def test_pack_then_shard_last_mile(spark, tmp_path):
-    """The pretraining last mile composed end-to-end: token counts ->
-    pack_sequences (contiguous fill) -> write_training_shards. Shard
-    files are per-shard sorted, the doc order inside the shard stream
-    matches the packing order, and no pack straddles a shard boundary
-    unexpectedly (shards cut on document, not token, boundaries)."""
-    import glob
-
-    from bigdata_commerce_spark.sources.shards import write_training_shards
-
-    docs = spark.createDataFrame(
-        [(i, 100 + (i * 37) % 400) for i in range(240)], "doc_id long, n_tokens long"
-    ).repartition(9)
-    packed = pack_sequences(docs, budget=2048, bucket_width=32)
-    path = str(tmp_path / "train_shards")
-    num = write_training_shards(packed, path, rows_per_shard=50, order_col="doc_id")
-    assert num == -(-240 // 50) == 5
-    assert len(glob.glob(f"{path}/shard_id=*/part-*.parquet")) == num
-
-    back = spark.read.parquet(path).collect()
-    rows = sorted((r.shard_id, r.shard_pos, r.doc_id, r.token_start) for r in back)
-    # global doc order across the shard stream == packing order
-    assert [r[2] for r in rows] == sorted(r[2] for r in rows)
-    # token_start is nondecreasing across the shard stream (packing
-    # order preserved through the export)
-    starts = [r[3] for r in rows]
-    assert starts == sorted(starts)
 
 
 def test_remove_frequent_lines_multiline_boilerplate(spark):
@@ -1889,12 +1678,8 @@ def test_rfm_scores_crafted(spark):
         assert shifted[c] == got[c].recency_days + delta
 
 
-def test_variant_extract_totality_and_malformed_report(spark):
-    from bigdata_commerce_spark.functions.semistructured import (
-        malformed_json_report,
-        parse_json_variant,
-        variant_extract,
-    )
+def test_variant_extract_totality(spark):
+    from bigdata_commerce_spark.functions.semistructured import variant_extract
 
     df = spark.createDataFrame(
         [
@@ -1923,15 +1708,9 @@ def test_variant_extract_totality_and_malformed_report(spark):
     assert got[5] == (None, None, None)   # missing path
     assert out.columns == ["id", "props", "k", "name", "d"]
 
-    rep = malformed_json_report(df, "props").collect()[0]
-    assert (rep.n_rows, rep.n_null_input, rep.n_malformed) == (5, 1, 1)
-    assert rep.malformed_frac == 0.25     # 1 malformed of 4 non-NULL
-
     # keep_variant exposes the parsed value for ad-hoc downstream use
     v = variant_extract(df, "props", {"k": ("$.k", "int")}, keep_variant=True)
     assert "__v" in v.columns
-    pj = parse_json_variant(df, "props")
-    assert pj.where("v IS NULL AND props IS NOT NULL").count() == 1  # row 3
 
 
 def test_cross_source_dup_matrix_exact_pair_arithmetic(spark):

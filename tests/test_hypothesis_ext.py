@@ -254,62 +254,6 @@ def test_validate_unique_surplus_matches_reference(spark, rows):
 
 
 @st.composite
-def interval_sets(draw):
-    """Two small sets of second-resolution intervals with ragged
-    lengths (sub-bucket to multi-bucket) and arbitrary overlap."""
-    def one(tag):
-        n = draw(st.integers(1, 8))
-        out = []
-        for i in range(n):
-            s = draw(st.integers(0, 20_000))
-            out.append((f"{tag}{i}", s, s + draw(st.integers(0, 9_000))))
-        return out
-
-    return one("l"), one("r")
-
-
-@_SETTINGS
-@given(data=interval_sets(), bucket=st.sampled_from([60, 3600]))
-def test_interval_overlap_join_equals_naive_theta(spark, data, bucket):
-    """Bucketized overlap join == naive theta join, each pair exactly
-    once, and the reported intersection is max(starts)..min(ends)."""
-    from pyspark.sql import functions as F
-
-    from bigdata_commerce_spark.operators.range_join import interval_overlap_join
-
-    lrows, rrows = data
-    base = 1_700_000_000  # any fixed epoch anchor
-    ldf = spark.createDataFrame(
-        [(i, base + s, base + e) for i, s, e in lrows], "lid string, ls long, le long"
-    ).select("lid", F.col("ls").cast("timestamp"), F.col("le").cast("timestamp"))
-    rdf = spark.createDataFrame(
-        [(i, base + s, base + e) for i, s, e in rrows], "rid string, rs long, re long"
-    ).select("rid", F.col("rs").cast("timestamp"), F.col("re").cast("timestamp"))
-
-    got = [
-        (r.lid, r.rid, r.overlap_start, r.overlap_end)
-        for r in interval_overlap_join(
-            ldf, rdf, "ls", "le", "rs", "re", bucket_seconds=bucket
-        ).collect()
-    ]
-    want = []
-    for li, ls, le in lrows:
-        for ri, rs, re_ in rrows:
-            os_, oe = max(ls, rs), min(le, re_)
-            if os_ <= oe:
-                want.append((li, ri, os_ + base, oe + base))
-    import datetime as dt
-
-    def ts(x):
-        return dt.datetime.fromtimestamp(x, dt.timezone.utc).replace(tzinfo=None)
-
-    assert sorted((a, b, c, d) for a, b, c, d in got) == sorted(
-        (a, b, ts(c), ts(d)) for a, b, c, d in want
-    )
-    assert len(got) == len(set(got))  # exactly-once, no distinct pass
-
-
-@st.composite
 def keyed_event_streams(draw):
     """(key, ts_seconds, value) triples with deliberately clumpy
     timestamps: duplicates (ties), bucket-boundary-exact values, long

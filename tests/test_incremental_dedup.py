@@ -80,53 +80,6 @@ def test_store_read_is_partition_pruned(spark, tmp_path):
     assert novel.count() == 0  # all three already committed
 
 
-def test_streamed_commits_match_one_shot_batch(spark, tmp_path):
-    """JSONL shards arriving as micro-batches, committed incrementally
-    to the fingerprint store, converge to exactly the store a single
-    batch commit over the whole corpus builds — and replaying the
-    stream from scratch against the SAME store appends nothing."""
-    import json as _json
-
-    from bigdata_commerce_spark.streaming import pipelines
-
-    docs = _docs(spark).limit(90).collect()
-    shard_dir = tmp_path / "shards"
-    shard_dir.mkdir()
-    for i, part in enumerate((docs[:30], docs[30:60], docs[60:])):
-        with open(shard_dir / f"shard_{i}.jsonl", "w") as f:
-            for r in part:
-                f.write(_json.dumps({"doc_id": r.doc_id, "text": r.text}) + "\n")
-
-    store = str(tmp_path / "fpstore")
-    inc.init_store(spark, store)
-    q = (
-        pipelines.jsonl_document_source(spark, str(shard_dir))
-        .writeStream.option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(inc.dedup_commit_sink(store))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    batch_store = str(tmp_path / "batch_store")
-    inc.init_store(spark, batch_store)
-    inc.commit_batch(_docs(spark).limit(90), batch_store)
-    streamed = {(r.doc_id, r.fp) for r in spark.read.parquet(store).collect()}
-    oneshot = {(r.doc_id, r.fp) for r in spark.read.parquet(batch_store).collect()}
-    assert streamed == oneshot and len(streamed) > 0
-
-    # replay from a fresh checkpoint: same shards, same store -> no growth
-    q2 = (
-        pipelines.jsonl_document_source(spark, str(shard_dir))
-        .writeStream.option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .foreachBatch(inc.dedup_commit_sink(store))
-        .start()
-    )
-    q2.processAllAvailable()
-    q2.stop()
-    assert spark.read.parquet(store).count() == len(streamed)
-
-
 def test_init_store_never_clobbers_existing(spark, tmp_path):
     store = str(tmp_path / "fpstore")
     inc.init_store(spark, store)
@@ -147,79 +100,3 @@ def test_non_integer_id_rejected(spark, tmp_path):
     bad = spark.createDataFrame([("u1", "t")], "doc_id string, text string")
     with _pytest.raises(ValueError, match="integer type"):
         inc.novel_documents(bad, store)
-
-
-def test_bloom_sidecar_commits_match_plain_path(spark, tmp_path):
-    """Two stores fed the same batch sequence — one with the Bloom
-    sidecar, one without — must produce identical novel sets at every
-    step and identical final store contents (the sidecar is a pure
-    accelerator)."""
-    plain, fast = str(tmp_path / "plain"), str(tmp_path / "fast")
-    docs = _docs(spark)
-    inc.init_store(spark, plain)
-    inc.init_store(spark, fast)
-    inc.init_bloom(spark, fast, capacity=1000)
-    batches = [
-        docs.where(F.col("doc_id") < 200),
-        docs.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 350)),
-        docs.where(F.col("doc_id") >= 300),
-    ]
-    for b in batches:
-        got = sorted((r.doc_id, r.fp) for r in inc.commit_batch(b, fast).collect())
-        want = sorted(
-            (r.doc_id, r.fp) for r in inc.commit_batch(b, plain).collect()
-        )
-        assert got == want
-    rows = lambda p: sorted(
-        (r.doc_id, r.fp) for r in spark.read.parquet(p).collect()
-    )
-    assert rows(fast) == rows(plain)
-
-
-def test_bloom_sidecar_invisible_to_store_reads(spark, tmp_path):
-    """The sidecar lives under <store>/_bloom; Spark's file listing
-    must skip underscore-paths so plain store reads are unaffected."""
-    store = str(tmp_path / "fpstore")
-    inc.init_store(spark, store)
-    inc.commit_batch(_docs(spark).limit(50), store)
-    before = spark.read.parquet(store).count()
-    inc.init_bloom(spark, store, capacity=1000)
-    assert spark.read.parquet(store).count() == before
-
-
-def test_bloom_with_extra_keys_still_exact(spark, tmp_path):
-    """Crash-ordering contract: a sidecar holding keys the store does
-    NOT have (commit died between bloom write and store append) only
-    adds false positives — novelty results stay exact and the doc is
-    re-admitted."""
-    store = str(tmp_path / "fpstore")
-    docs = _docs(spark)
-    inc.init_store(spark, store)
-    inc.init_bloom(spark, store, capacity=1000)
-    # simulate the torn commit: bloom learns the batch, store doesn't
-    from bigdata_commerce_spark.operators import bloom
-
-    batch = docs.where(F.col("doc_id") < 100)
-    filt, m, k = inc._read_bloom(spark, store)
-    torn = bloom.bloom_merge(
-        filt, bloom.bloom_build(inc._fingerprints(batch, "text", "doc_id"), "fp", m, k)
-    ).localCheckpoint(eager=True)
-    torn.write.mode("overwrite").parquet(inc._bloom_paths(store)[0])
-    # every batch doc must still be declared novel (store is empty)
-    novel = inc.novel_documents(batch, store)
-    n_fp = batch.select(fingerprint("text").alias("fp")).distinct().count()
-    assert novel.count() == n_fp
-
-
-def test_bloom_capacity_overflow_degrades_not_breaks(spark, tmp_path):
-    """A filter sized for 10 keys but fed 500 documents: fpp collapses
-    toward 1 (everything goes through exact verify) but results remain
-    identical to the plain path."""
-    store = str(tmp_path / "fpstore")
-    docs = _docs(spark)
-    inc.init_store(spark, store)
-    inc.init_bloom(spark, store, capacity=10)
-    first = inc.commit_batch(docs, store)
-    total_fp = docs.select(fingerprint("text").alias("fp")).distinct().count()
-    assert first.count() == total_fp
-    assert inc.commit_batch(docs, store).count() == 0  # still idempotent

@@ -1,7 +1,5 @@
 """Hashed-feature linear classifier (operators/linear_model.py):
-featurization vs a hashlib reference, scoring laws, and distributed
-full-batch logistic GD vs a numpy twin (the graph.py verification
-posture for iterative float fixpoints)."""
+featurization vs a hashlib reference and the scoring laws."""
 
 from __future__ import annotations
 
@@ -10,16 +8,12 @@ import math
 import re
 from collections import Counter
 
-import numpy as np
 import pytest
-from pyspark import StorageLevel
 
-# Suite tiering (VERDICT r10 item 7, extended after measuring the
-# round-11 durations): the distributed-training convergence runs are
-# wall-dominant — the full `pytest tests/` run keeps them;
+# Suite tiering (VERDICT r10 item 7): the full
+# `pytest tests/ -m "slow or not slow"` run keeps these;
 # `-m "not slow"` gives the fast development signal.
 pytestmark = pytest.mark.slow
-from pyspark.sql import functions as F
 
 from bigdata_commerce_spark.operators import linear_model as lm
 
@@ -60,85 +54,6 @@ def test_score_linear_matches_hand_computation(spark):
         s = sum(x * wmap.get(b, 0.0) for b, x in _feats(txt, 8).items()) + 0.25
         assert got[d][0] == pytest.approx(round(s, 6), abs=1e-9)
         assert got[d][1] == pytest.approx(round(1 / (1 + math.exp(-s)), 6), abs=1e-9)
-
-
-def _ref_train(docs, labels, n_buckets, iters, lr):
-    feats = [_feats(t, n_buckets) for t in docs]
-    w = np.zeros(n_buckets)
-    bias = 0.0
-    n = len(docs)
-    for _ in range(iters):
-        errs = [
-            1 / (1 + math.exp(-(sum(x * w[b] for b, x in f.items()) + bias))) - y
-            for f, y in zip(feats, labels)
-        ]
-        g = np.zeros(n_buckets)
-        for f, e in zip(feats, errs):
-            for b, x in f.items():
-                g[b] += x * e
-        w -= lr * g / n
-        bias -= lr * float(np.mean(errs))
-    return w, bias
-
-
-def test_train_logreg_matches_numpy_reference(spark):
-    texts = [
-        "good clean prose text here",
-        "more good clean words flow",
-        "prose text flow here words",
-        "spam spam buy buy now",
-        "buy now spam click click",
-        "click buy spam now spam",
-    ]
-    labels = [1, 1, 1, 0, 0, 0]
-    df = spark.createDataFrame(
-        [(i, t, y) for i, (t, y) in enumerate(zip(texts, labels))],
-        "doc_id long, text string, label int",
-    )
-    w_df, bias = lm.train_logreg(df, n_buckets=16, iters=12, lr=0.8)
-    got = {r.bucket: r.w for r in w_df.collect()}
-    ref_w, ref_bias = _ref_train(texts, labels, 16, 12, 0.8)
-    assert bias == pytest.approx(ref_bias, abs=1e-9)
-    for b in range(16):
-        assert got.get(b, 0.0) == pytest.approx(ref_w[b], abs=1e-9)
-
-
-def test_trained_model_separates_classes(spark):
-    """End-to-end: train on prose-vs-noise labels, score held-out
-    docs drawn from the same distributions — probabilities must
-    separate cleanly."""
-    prose = ["the quick brown fox jumps", "a calm clear morning walk",
-             "the fox walks a clear morning", "quick calm brown walk jumps"]
-    noise = ["zxq vvk qqj xxo pzz", "vvk zxq pzz qqj qqj",
-             "xxo pzz zxq vvk qqj", "pzz qqj xxo zxq vvk"]
-    train = [(i, t, 1) for i, t in enumerate(prose)] + [
-        (100 + i, t, 0) for i, t in enumerate(noise)
-    ]
-    df = spark.createDataFrame(train, "doc_id long, text string, label int")
-    w, bias = lm.train_logreg(df, n_buckets=64, iters=30, lr=2.0)
-    holdout = spark.createDataFrame(
-        [(1, "brown fox morning walk"), (2, "qqj zxq pzz xxo")],
-        "doc_id long, text string",
-    )
-    probs = {r.doc_id: r.prob for r in
-             lm.score_linear(holdout, w, bias, n_buckets=64).collect()}
-    assert probs[1] > 0.7
-    assert probs[2] < 0.3
-
-
-def test_empty_training_set_raises(spark):
-    df = spark.createDataFrame([], "doc_id long, text string, label int")
-    with pytest.raises(ValueError, match="at least one"):
-        lm.train_logreg(df, n_buckets=8)
-
-
-def test_failed_training_releases_its_features(spark):
-    """The persisted feature table is released on the error path too:
-    rebuilt from the same input, it is not cached."""
-    df = spark.createDataFrame([], "doc_id long, text string, label int")
-    with pytest.raises(ValueError):
-        lm.train_logreg(df, n_buckets=8)
-    assert lm.hashed_features(df, 8).storageLevel == StorageLevel.NONE
 
 
 def test_score_is_partitioning_independent(spark):

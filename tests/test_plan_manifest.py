@@ -1,7 +1,7 @@
 """Full-registry plan-fingerprint manifest (VERDICT r11 item 5).
 
 bench.py fingerprints only the 50 headline queries, so a plan
-regression in one of the 111 twins would go unflagged.
+regression in one of the 115 twins would go unflagged.
 PLAN_FP_MANIFEST.json commits a fingerprint for EVERY registered
 query (driver slots and twins) at sf0.01, and this test re-derives
 them and diffs: any twin plan change is flagged the round it lands.

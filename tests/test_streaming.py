@@ -188,33 +188,6 @@ def test_blacklisted_user_later_clicks_excluded(spark, stream_result):
     ).agg(F.sum("click_count")).collect()[0][0] == 4
 
 
-def test_update_mode_stateful_agg_matches_batch(spark, stream_result):
-    """ad_stream.cumulative_counts as a real update-mode stateful
-    aggregation wired to an overwrite-by-key sink equals the batch
-    twin (the updateStateByKey surface, independent of the pipeline's
-    sink-side accumulation)."""
-    state_dir = str(SCRATCH / "state" / "cumulative_updmode")
-    stream = pipelines.file_event_source(spark, str(SCRATCH / "flat"))
-    sink = sinks.overwrite_sink(
-        state_dir, ["event_date", "province", "city", "ad_id"]
-    )
-    q = (
-        ad_stream.cumulative_counts(stream)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", str(SCRATCH / "state" / "ckpt" / "updmode"))
-        .foreachBatch(sink)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = sinks.read_state(spark, state_dir)
-    # no blacklist filter on this standalone query -> all 6 burst rows
-    expected = stream_result["source_events"].groupBy(
-        "event_date", "province", "city", "ad_id"
-    ).agg(F.count(F.lit(1)).alias("click_count"))
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expected.collect()))
-
-
 def test_parse_ad_log(spark):
     lines = spark.createDataFrame(
         [("1704067200000 p1 c11 42 7",), ("1704067205000 p2 c22 43 9",)], "value string"
@@ -295,167 +268,6 @@ def test_blacklisted_users_filtered_from_stream(spark):
     remaining = ad_stream.without_blacklisted(events, bl)
     assert remaining.where(remaining.user_id == bl.first().user_id).count() == 0
     assert remaining.count() < 100
-
-
-def test_session_window_stream_matches_batch_gaps(spark, stream_result):
-    """Streaming session_window(gap) totals == batch gap sessionization
-    over the same rows (complete output after all data seen)."""
-    import shutil as _shutil
-
-    from bigdata_commerce_spark.operators.sessionize import session_aggregates, sessionize
-
-    events = stream_result["source_events"]  # no blacklist filter here
-    src = str(SCRATCH / "flat")
-    out_ckpt = str(SCRATCH / "state" / "ckpt" / "session_window")
-    stream = pipelines.file_event_source(spark, src)
-    agg = ad_stream.session_window_counts(stream, gap="30 minutes", watermark="365 days")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sess_win")
-        .option("checkpointLocation", out_ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql(
-        "SELECT user_id, n_events FROM sess_win ORDER BY user_id, session_start"
-    ).collect()
-    batch = session_aggregates(
-        sessionize(
-            events.select("user_id", F.col("event_time").alias("ts")), gap_minutes=30
-        ),
-        ts_col="ts",
-    ).orderBy("user_id", "start_time")
-    expected = [(r.user_id, r.step_length) for r in batch.collect()]
-    assert [(r.user_id, r.n_events) for r in got] == expected
-
-
-def test_watermark_drops_late_data(spark, tmp_path):
-    """An event arriving far behind the watermark must be excluded
-    from the windowed aggregation (the late-data policy the reference
-    lacks entirely — SURVEY.md §2.9)."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F2
-
-    flat = tmp_path / "flat"
-    flat.mkdir()
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def write_chunk(name, rows):
-        spark.createDataFrame(rows, ad_stream.AD_EVENT_SCHEMA).coalesce(1).write.parquet(
-            str(tmp_path / name)
-        )
-        part = next((tmp_path / name).glob("part-*.parquet"))
-        shutil.copy(part, flat / f"{name}.parquet")
-
-    def ev(ts, user=1, ad=1):
-        return (ts, ts.date(), "p1", "c1", user, ad)
-
-    # batch 1 advances event time to 12:30 (watermark -> 12:20)
-    write_chunk("b1", [ev(base), ev(base + dt.timedelta(minutes=30))])
-
-    stream = (
-        spark.readStream.schema(ad_stream.AD_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(flat))
-    )
-    agg = ad_stream.minute_window_trend(stream, watermark="10 minutes")
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("late_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()  # watermark now trails the 12:30 max by 10min
-
-    # batch 2, delivered strictly after batch 1 committed: one fresh
-    # event + one 2 hours late (far behind the watermark)
-    late = base - dt.timedelta(hours=2)
-    write_chunk("b2", [ev(base + dt.timedelta(minutes=31)), ev(late, user=99, ad=99)])
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM late_test").collect()
-    # the 2h-late event (ad 99) must not appear in any emitted window
-    assert not [r for r in rows if r.ad_id == 99], rows
-
-
-def test_stateful_sessions_match_batch_session_window(spark, tmp_path):
-    """applyInPandasWithState gap sessionization (streaming/stateful.py)
-    must emit exactly the sessions F.session_window computes in batch:
-    same gap-merge semantics, emission driven by the event-time
-    watermark timeout. A far-future sentinel user advances the
-    watermark so every real session provably completes."""
-    import datetime as dt
-
-    from bigdata_commerce_spark.streaming.stateful import user_sessions_stateful
-
-    flat = tmp_path / "flat"
-    flat.mkdir()
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    schema = "event_time timestamp, user_id long"
-
-    def write_chunk(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(tmp_path / name)
-        )
-        part = next((tmp_path / name).glob("part-*.parquet"))
-        shutil.copy(part, flat / f"{name}.parquet")
-
-    def s(sec):
-        return base + dt.timedelta(seconds=sec)
-
-    chunk1 = [(s(0), 1), (s(10), 1), (s(20), 1), (s(5), 2)]
-    # u1's hour-later events split a session INSIDE a batch; u2's 00:30
-    # merges with its open session (25s gap < 60s); u3 opens fresh.
-    chunk2 = [(s(3600), 1), (s(3610), 1), (s(30), 2), (s(3600), 3)]
-    sentinel1 = [(s(36000), 99)]
-    sentinel2 = [(s(36002), 99)]  # fires the timeouts (watermark ~ 09:59:59)
-
-    write_chunk("c1", chunk1)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(flat))
-    )
-    q = (
-        user_sessions_stateful(stream, gap_seconds=60, watermark="1 second")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stateful_sessions")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    for name, rows in (("c2", chunk2), ("f1", sentinel1), ("f2", sentinel2)):
-        write_chunk(name, rows)
-        q.processAllAvailable()
-    q.stop()
-
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.sql("SELECT * FROM stateful_sessions").collect()
-        if r.user_id != 99
-    }
-    batch_events = spark.createDataFrame(chunk1 + chunk2, schema)
-    twin = (
-        batch_events.groupBy(
-            "user_id", F.session_window("event_time", "60 seconds")
-        )
-        .agg(
-            F.min("event_time").alias("session_start"),
-            F.max("event_time").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .collect()
-    )
-    expected = {
-        (r.user_id, r.session_start, r.session_end, r.n_events) for r in twin
-    }
-    assert got == expected
-    assert len(expected) == 4  # u1 x2, u2 x1, u3 x1
 
 
 def test_ad_pipeline_on_jdbc_backend_matches_parquet(spark, stream_result, tmp_path):
@@ -609,365 +421,6 @@ def test_ad_pipeline_soak_six_batches_with_midrun_restart(spark, tmp_path):
         )
     finally:
         events.unpersist()
-
-
-def test_jsonl_stream_fingerprints_match_batch(spark, tmp_path):
-    """Streaming ingest of JSONL shards -> fingerprint -> distinct
-    sink must converge to exactly the batch doc_fingerprints result
-    over the same corpus (incremental exact dedup over arriving
-    shards)."""
-    import json as _json
-
-    from bigdata_commerce_spark.operators import text as text_ops
-
-    docs = load_table(spark, "documents", SF_SMOKE).limit(60).collect()
-    shard_dir = tmp_path / "shards"
-    shard_dir.mkdir()
-    # two JSONL shards, written as the stream source's files directly
-    for i, half in enumerate((docs[:30], docs[30:])):
-        with open(shard_dir / f"shard_{i}.jsonl", "w") as f:
-            for r in half:
-                f.write(_json.dumps({"doc_id": r.doc_id, "text": r.text}) + "\n")
-
-    stream = pipelines.jsonl_document_source(spark, str(shard_dir))
-    sink = sinks.distinct_append_sink(str(tmp_path / "state"), ["doc_id", "fp"])
-    q = (
-        stream.select("doc_id", text_ops.fingerprint("text").alias("fp"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(sink)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r.doc_id, r.fp)
-        for r in sinks.read_state(spark, str(tmp_path / "state")).collect()
-    }
-    batch = spark.createDataFrame(docs, load_table(spark, "documents", SF_SMOKE).schema)
-    expected = {
-        (r.doc_id, r.fp)
-        for r in batch.select(
-            "doc_id", text_ops.fingerprint("text").alias("fp")
-        ).collect()
-    }
-    assert got == expected and len(got) == 60
-
-
-def test_stream_dedup_within_watermark_drops_cross_batch_dupes(spark, tmp_path):
-    """dropDuplicatesWithinWatermark keeps the first arrival per key and
-    drops re-arrivals in LATER micro-batches (state spans batches);
-    result equals batch dropDuplicates over the same rows."""
-    import datetime as dt
-
-    from bigdata_commerce_spark.streaming.dedup_stream import dedup_exact_stream
-
-    flat = tmp_path / "flat"
-    flat.mkdir()
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def write_chunk(name, rows):
-        spark.createDataFrame(rows, ad_stream.AD_EVENT_SCHEMA).coalesce(1).write.parquet(
-            str(tmp_path / name)
-        )
-        part = next((tmp_path / name).glob("part-*.parquet"))
-        shutil.copy(part, flat / f"{name}.parquet")
-
-    def ev(ts, user, ad):
-        return (ts, ts.date(), "p1", "c1", user, ad)
-
-    write_chunk("b1", [ev(base, 1, 1), ev(base + dt.timedelta(minutes=1), 2, 2)])
-    stream = pipelines.file_event_source(spark, str(flat))
-    deduped = dedup_exact_stream(stream, ["user_id", "ad_id"], within="1 hour")
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_dedup")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    # batch 2, strictly after batch 1 committed: a replay of (1, 1)
-    # well inside the 1h horizon, plus a genuinely new key
-    write_chunk(
-        "b2",
-        [ev(base + dt.timedelta(minutes=2), 1, 1), ev(base + dt.timedelta(minutes=3), 3, 3)],
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = sorted(
-        (r.user_id, r.ad_id)
-        for r in spark.sql("SELECT user_id, ad_id FROM stream_dedup").collect()
-    )
-    assert got == [(1, 1), (2, 2), (3, 3)]
-
-
-def test_distinct_documents_stream_emits_each_content_once(spark, tmp_path):
-    """Global streaming content dedup over JSONL shard ingest: every
-    distinct text body emitted exactly once even when the duplicate
-    arrives in a later shard; fingerprint set matches the batch
-    exact-dedup operator over the same corpus."""
-    import json as _json
-
-    from bigdata_commerce_spark.operators.dedup import exact_duplicates
-    from bigdata_commerce_spark.sources.formats import DOCUMENTS_SCHEMA
-    from bigdata_commerce_spark.streaming.dedup_stream import distinct_documents_stream
-
-    corpus = [
-        (1, "alpha beta gamma"),
-        (2, "delta epsilon zeta"),
-        (3, "alpha beta gamma"),  # dup of 1, same shard
-        (4, "eta theta iota"),
-        (5, "delta epsilon zeta"),  # dup of 2, later shard
-        (6, "alpha beta gamma"),  # dup of 1, later shard
-        (7, "kappa lambda mu"),
-    ]
-    shard_dir = tmp_path / "shards"
-    shard_dir.mkdir()
-    for i, shard in enumerate((corpus[:4], corpus[4:])):
-        with open(shard_dir / f"shard_{i}.jsonl", "w") as f:
-            for doc_id, text in shard:
-                f.write(_json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-
-    stream = pipelines.jsonl_document_source(spark, str(shard_dir))
-    q = (
-        distinct_documents_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("doc_dedup")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT doc_id, fp FROM doc_dedup").collect()
-    batch = spark.createDataFrame(
-        [(i, t) for i, t in corpus], DOCUMENTS_SCHEMA
-    )
-    expected_fps = {r.fp for r in exact_duplicates(batch).select("fp").collect()}
-    assert {r.fp for r in rows} == expected_fps
-    assert len(rows) == len(expected_fps)  # exactly once per content
-    # each survivor must actually carry its content's text
-    text_of = dict(corpus)
-    from bigdata_commerce_spark.operators.text import fingerprint as _fp
-
-    fp_by_text = {
-        r.text: r.fp
-        for r in batch.select("text", _fp("text").alias("fp")).distinct().collect()
-    }
-    for r in rows:
-        assert fp_by_text[text_of[r.doc_id]] == r.fp
-
-
-def test_stateful_ewma_stream_bit_identical_to_batch(spark, tmp_path):
-    """Streaming EWMA (streaming/stateful.ewma_stateful) across three
-    in-order micro-batches must equal the batch fold
-    (timeseries.ewma_per_key) BIT-for-bit — same IEEE op order, state
-    threaded across batches; a late row behind the state is dropped."""
-    import datetime as dt
-
-    from bigdata_commerce_spark.operators.timeseries import ewma_per_key
-    from bigdata_commerce_spark.streaming.stateful import ewma_stateful
-
-    flat = tmp_path / "flat"
-    flat.mkdir()
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    schema = "event_time timestamp, user_id long, value double"
-
-    def write_chunk(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(tmp_path / name)
-        )
-        part = next((tmp_path / name).glob("part-*.parquet"))
-        shutil.copy(part, flat / f"{name}.parquet")
-
-    def s(sec):
-        return base + dt.timedelta(seconds=sec)
-
-    chunks = [
-        [(s(0), 1, 10.0), (s(10), 1, 20.0), (s(5), 2, 1.0)],
-        [(s(20), 1, 5.0), (s(15), 2, 2.0), (s(25), 2, 3.0)],
-        [(s(30), 1, 100.0), (s(1), 2, 99.0)],  # (s(1), 2) is LATE: dropped
-    ]
-    write_chunk("c1", chunks[0])
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(flat))
-    )
-    q = (
-        ewma_stateful(stream, alpha=0.3)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stateful_ewma")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    for i, rows in enumerate(chunks[1:], start=2):
-        write_chunk(f"c{i}", rows)
-        q.processAllAvailable()
-    q.stop()
-
-    got = {
-        (r.user_id, r.event_time): r.ewma
-        for r in spark.sql("select * from stateful_ewma").collect()
-    }
-    in_order = [r for ch in chunks for r in ch if r != (s(1), 2, 99.0)]
-    batch = ewma_per_key(
-        spark.createDataFrame(in_order, schema),
-        alpha=0.3,
-        key_col="user_id",
-        ts_col="event_time",
-        value_col="value",
-    )
-    want = {(r["user_id"], r["event_time"]): r["ewma"] for r in batch.collect()}
-    assert got == want  # BIT identical, late row absent from both
-
-
-def test_stateful_ewma_tie_contract(spark, tmp_path):
-    """Equal timestamps INSIDE a batch fold in (ts, value) order like
-    the batch path; an equal timestamp arriving in a LATER batch is
-    at-or-behind prior state and is dropped."""
-    import datetime as dt
-
-    from bigdata_commerce_spark.streaming.stateful import ewma_stateful
-
-    flat = tmp_path / "flat"
-    flat.mkdir()
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    schema = "event_time timestamp, user_id long, value double"
-
-    def write_chunk(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(tmp_path / name)
-        )
-        part = next((tmp_path / name).glob("part-*.parquet"))
-        shutil.copy(part, flat / f"{name}.parquet")
-
-    t0 = base
-    # chunk 1: a within-batch tie at t0 — folds 2.0 then 8.0
-    write_chunk("c1", [(t0, 1, 8.0), (t0, 1, 2.0)])
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(flat))
-    )
-    q = (
-        ewma_stateful(stream, alpha=0.5)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ewma_ties")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    # chunk 2: a cross-batch tie at t0 (dropped) + a real advance
-    write_chunk("c2", [(t0, 1, 99.0), (t0 + dt.timedelta(seconds=5), 1, 4.0)])
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted(
-        (r.event_time, r.value, r.ewma)
-        for r in spark.sql("select * from ewma_ties").collect()
-    )
-    # fold: y=2.0, then 0.5*8+0.5*2=5.0; 99.0 dropped; 0.5*4+0.5*5=4.5
-    assert got == [
-        (t0, 2.0, 2.0),
-        (t0, 8.0, 5.0),
-        (t0 + dt.timedelta(seconds=5), 4.0, 4.5),
-    ]
-
-
-def test_stateful_misra_gries_guarantees_and_exact_regime(spark, tmp_path):
-    """Streaming Misra-Gries (streaming/stateful.misra_gries_stateful)
-    across three micro-batches: per-bucket MG guarantees hold against
-    bucket traffic (every key with count > n_b/(k+1) present;
-    estimates never overcount; undercount bounded), and with
-    k >= distinct keys the streamed sketch equals exact counts."""
-    import datetime as dt
-    from collections import Counter
-
-    from bigdata_commerce_spark.streaming.stateful import misra_gries_stateful
-
-    flat = tmp_path / "flat"
-    flat.mkdir()
-    base = dt.datetime(2024, 3, 1)
-    schema = "event_time timestamp, user_id long, value double"
-
-    def write_chunk(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(tmp_path / name)
-        )
-        part = next((tmp_path / name).glob("part-*.parquet"))
-        shutil.copy(part, flat / f"{name}.parquet")
-
-    # heavy hitters 1 and 2, a mid key 3, singleton tail 100..119
-    def mk(i, uid):
-        return (base + dt.timedelta(seconds=i), uid, 0.0)
-
-    seq = ([1] * 30 + [2] * 20 + [3] * 6 + list(range(100, 120)))
-    rows = [mk(i, u) for i, u in enumerate(seq)]
-    chunks = [rows[:25], rows[25:50], rows[50:]]
-
-    def run(k, n_buckets, qname):
-        import shutil as _sh
-
-        _sh.rmtree(flat, ignore_errors=True)
-        flat.mkdir()
-        for p in tmp_path.glob("c_*"):
-            _sh.rmtree(p, ignore_errors=True)
-        write_chunk(f"c_{qname}_1", chunks[0])
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(flat))
-        )
-        q = (
-            misra_gries_stateful(stream, k=k, n_buckets=n_buckets)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{qname}"))
-            .start()
-        )
-        q.processAllAvailable()
-        for i, ch in enumerate(chunks[1:], start=2):
-            write_chunk(f"c_{qname}_{i}", ch)
-            q.processAllAvailable()
-        q.stop()
-        out = spark.sql(f"select * from {qname}").collect()
-        # current generation per bucket = max n_seen
-        latest_n = {}
-        for r in out:
-            latest_n[r.bucket] = max(latest_n.get(r.bucket, 0), r.n_seen)
-        return {
-            (r.bucket, r.user_id): r.est_count
-            for r in out
-            if r.n_seen == latest_n[r.bucket]
-        }, latest_n
-
-    true = Counter(seq)
-
-    # tight regime: k=3 per bucket, single bucket -> compression fires
-    est, latest_n = run(k=3, n_buckets=1, qname="mg_tight")
-    n_b = latest_n[list(latest_n)[0]]
-    assert n_b == len(seq)
-    bound = n_b / (3 + 1)
-    for u, c in true.items():
-        if c > bound:
-            assert (0, u) in est, f"heavy key {u} missing"
-    for (b, u), e in est.items():
-        assert e <= true[u]
-        assert true[u] - e <= bound
-
-    # exact regime: k >= distinct keys, several buckets -> no
-    # compression anywhere, estimates ARE the exact counts
-    est2, _ = run(k=64, n_buckets=4, qname="mg_exact")
-    got_counts = Counter()
-    for (b, u), e in est2.items():
-        got_counts[u] += e
-    assert got_counts == true
 
 
 def test_max_files_per_trigger_sets_batch_size(spark, tmp_path):

@@ -252,23 +252,6 @@ def test_token_budget_per_source_dict_budgets(spark, token_frame):
     assert per_src["a"] < per_src["b"]
 
 
-def test_temperature_token_budgets_endpoints():
-    """tau=1 reproduces the natural token mix, tau=0 splits the
-    budget uniformly; budgets never exceed a source's own tokens;
-    zero-token sources get zero."""
-    from bigdata_commerce_spark.operators.mixing import temperature_token_budgets
-
-    counts = {"web": 900_000, "code": 90_000, "wiki": 10_000, "empty": 0}
-    nat = temperature_token_budgets(counts, 100_000, temperature=1.0)
-    assert nat == {"web": 90_000, "code": 9_000, "wiki": 1_000, "empty": 0}
-    uni = temperature_token_budgets(counts, 30_000, temperature=0.0)
-    assert uni == {"web": 10_000, "code": 10_000, "wiki": 10_000, "empty": 0}
-    # cap: a tail source cannot be handed more tokens than it has
-    capped = temperature_token_budgets(counts, 3_000_000, temperature=0.0)
-    assert capped["wiki"] == 10_000
-    assert temperature_token_budgets({"x": 0}, 100) == {"x": 0}
-
-
 # --- token_budget_fill_report (underfill detector, VERDICT r9 #4) ---
 
 
@@ -453,55 +436,3 @@ def test_token_budget_rejects_tokens_before_collision(spark, token_frame):
 
 
 # --- water_fill_token_budgets (exact global fill, ADVICE r9 #2) -----
-
-
-def test_water_fill_exact_global_fill():
-    """The ADVICE example: tau=0 splits uniformly, a small source caps
-    at its total — the simple helper strands the surplus, the
-    water-fill hands it to the uncapped sources and hits the global
-    number exactly."""
-    from bigdata_commerce_spark.operators.mixing import (
-        temperature_token_budgets,
-        water_fill_token_budgets,
-    )
-
-    counts = {"web": 900_000, "code": 90_000, "wiki": 1_000}
-    simple = temperature_token_budgets(counts, 300_000, temperature=0.0)
-    assert sum(simple.values()) < 300_000  # wiki caps at 1k, surplus stranded
-    filled = water_fill_token_budgets(counts, 300_000, temperature=0.0)
-    assert sum(filled.values()) == 300_000
-    assert filled["wiki"] == 1_000  # still capped at its own total
-    assert all(filled[s] <= counts[s] for s in counts)
-    # redistribution went to the sources with room
-    assert filled["web"] + filled["code"] == 299_000
-
-
-def test_water_fill_budget_exceeds_total():
-    from bigdata_commerce_spark.operators.mixing import water_fill_token_budgets
-
-    counts = {"a": 10, "b": 5, "empty": 0}
-    filled = water_fill_token_budgets(counts, 10**9)
-    assert filled == {"a": 10, "b": 5, "empty": 0}
-
-
-def test_water_fill_properties_random():
-    """Property sweep: exact fill, per-source caps, determinism, and
-    zero-budget/empty-dict edges — over random counts/budgets/taus."""
-    import random
-
-    from bigdata_commerce_spark.operators.mixing import water_fill_token_budgets
-
-    rng = random.Random(17)
-    for _ in range(200):
-        n = rng.randrange(1, 8)
-        counts = {f"s{i}": rng.randrange(0, 1000) for i in range(n)}
-        budget = rng.randrange(0, 2500)
-        tau = rng.choice([0.0, 0.3, 0.5, 1.0])
-        got = water_fill_token_budgets(counts, budget, temperature=tau)
-        assert set(got) == set(counts)
-        assert all(0 <= got[s] <= counts[s] for s in counts)
-        assert sum(got.values()) == min(budget, sum(counts.values()))
-        # deterministic
-        assert got == water_fill_token_budgets(counts, budget, temperature=tau)
-    assert water_fill_token_budgets({}, 100) == {}
-    assert water_fill_token_budgets({"x": 50}, 0) == {"x": 0}
