@@ -21,20 +21,15 @@ from pyspark.sql import functions as F
 
 
 def variant_extract(
-    df: DataFrame,
-    json_col: str,
-    fields: dict[str, tuple[str, str]],
-    keep_variant: bool = False,
+    df: DataFrame, json_col: str, fields: dict[str, tuple[str, str]]
 ) -> DataFrame:
     """Parse ``json_col`` once and extract ``fields`` as typed
     columns: {out_name: (json_path, spark_type)} — e.g.
     {"ad_id": ("$.k", "int")}. A missing path, a type mismatch
     (try_variant_get — plain variant_get THROWS there), or a
-    malformed document all yield NULL in that column (totality).
-    ``keep_variant=True`` retains the parsed variant as ``__v`` for
-    further ad-hoc extraction downstream."""
+    malformed document all yield NULL in that column (totality)."""
     v = F.try_parse_json(F.col(json_col))
     out = df.withColumn("__v", v)
     for name, (path, typ) in fields.items():
         out = out.withColumn(name, F.try_variant_get(F.col("__v"), path, typ))
-    return out if keep_variant else out.drop("__v")
+    return out.drop("__v")

@@ -7,9 +7,8 @@ covered by ``explode`` over array expressions — the JVM-side fast
 path, always preferred. This module exists for the genuinely
 *procedural* generators a pipeline sometimes needs (per-row logic that
 won't fit array/higher-order expressions without contortion), using
-Spark 4's ``udtf`` with Arrow-optimized transfer when the runtime
-supports it — never a row-at-a-time pickled path when Arrow is
-available.
+Spark 4's ``udtf`` with Arrow-optimized transfer — never a
+row-at-a-time pickled path.
 
 ``chunk_documents_udtf`` is deliberately a TWIN of the expression-based
 ``operators/text.chunk_documents``: same normalization, same stride
@@ -44,11 +43,10 @@ def _normalize(text: str) -> str:
     return _WS.sub(" ", text.strip(" ").lower())
 
 
-def make_chunk_udtf(chunk_tokens: int = 256, overlap: int = 32, use_arrow: bool = True):
-    """Build the chunker UDTF class for the given window geometry.
-    Parameters are baked via closure because UDTF constructors take no
-    user args at call sites. ``use_arrow=False`` falls back to the
-    pickled row path (for runtimes without Arrow UDTF support)."""
+def make_chunk_udtf(chunk_tokens: int = 256, overlap: int = 32):
+    """Build the Arrow-optimized chunker UDTF class for the given
+    window geometry. Parameters are baked via closure because UDTF
+    constructors take no user args at call sites."""
     if not 0 <= overlap < chunk_tokens:
         raise ValueError(f"need 0 <= overlap < chunk_tokens, got {overlap}/{chunk_tokens}")
     stride = chunk_tokens - overlap
@@ -68,10 +66,7 @@ def make_chunk_udtf(chunk_tokens: int = 256, overlap: int = 32, use_arrow: bool 
                 yield chunk_no, len(piece), " ".join(piece)
 
     schema = "chunk_no: int, chunk_n_tokens: int, chunk_text: string"
-    try:
-        return udtf(ChunkDocuments, returnType=schema, useArrow=use_arrow)
-    except TypeError:  # runtime without the useArrow parameter
-        return udtf(ChunkDocuments, returnType=schema)
+    return udtf(ChunkDocuments, returnType=schema, useArrow=True)
 
 
 def chunk_documents_udtf(

@@ -1,26 +1,16 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
 Design for 100 TB media pipelines: media travel as ``binary`` columns
-with a typed metadata struct; decode / feature-extract / resize /
-frame-sample run as Arrow-batched ``mapInPandas`` operators so bytes
-never round-trip through Python row-at-a-time. Two decode modes, one
-contract (identical schemas and batch shapes):
-
-- ``decode="deterministic"``: a seeded fake derived from the content
-  hash — exercises the plumbing on arbitrary bytes (the text-adapter
-  fixtures) with no codec at all;
-- ``decode="real"``: actually decodes the payload with the
-  dependency-free BMP / P6-PPM codecs in operators/codecs.py
-  (concatenated P6 = the frame-addressable video container, exactly
-  ffmpeg's ``-c:v ppm`` output). A PIL/libvips/ffmpeg-backed kernel
-  satisfies the same bytes->(h,w,3)->resample->re-encode contract, so
-  swapping in heavyweight codecs later cannot change schemas. Real
-  mode raises ``CodecError`` on undecodable content — pre-filter
-  corrupt media (a cheap magic-byte check) before the expensive pass.
-  NULL content is ABSENT media, not corrupt media: real mode emits
-  NULL features / NULL resize fingerprint / zero frame rows for it
-  (the failed-fetch row must not kill a 100 TB batch), while the
-  deterministic stub hashes the empty payload as before.
+with a typed metadata struct; feature-extract / resize / frame-sample
+run as Arrow-batched ``mapInPandas`` operators so bytes never
+round-trip through Python row-at-a-time. The kernels are deterministic
+stand-ins derived from the content hash: they exercise the plumbing
+(schemas, batch shapes, partition-parallel execution) on arbitrary
+bytes — the text-adapter fixtures — with no codec at all. A
+PIL/libvips/ffmpeg-backed kernel satisfies the same bytes -> features
+/ fingerprint contract, so swapping in real codecs cannot change
+schemas. NULL content is ABSENT media: it yields NULL report fields
+and zero frame rows.
 """
 
 from __future__ import annotations
@@ -85,37 +75,9 @@ def _fake_features(digest: bytes) -> list[float]:
     ]
 
 
-def _real_features(raw: bytes) -> list[float]:
-    """FEATURE_DIM floats from an actually-decoded image, all in
-    [0, 1]: normalized dimensions, per-channel means, and gray-level
-    spread — the classic cheap image descriptor, and the slot a CNN
-    embedding would fill in a GPU-equipped deployment."""
-    from bigdata_commerce_spark.operators.codecs import decode_image
-
-    rgb = decode_image(raw)
-    h, w = rgb.shape[:2]
-    px = rgb.reshape(-1, 3).astype("float64")
-    means = px.mean(axis=0) / 255.0
-    gray = px.mean(axis=1)
-    return [
-        min(w / 65535.0, 1.0),
-        min(h / 65535.0, 1.0),
-        float(means[0]),
-        float(means[1]),
-        float(means[2]),
-        float(gray.std() / 255.0),
-        float(gray.min() / 255.0),
-        float(gray.max() / 255.0),
-    ]
-
-
-def extract_features(df: DataFrame, decode: str = "deterministic") -> DataFrame:
-    """Arrow-batched feature extraction over a binary media column.
-
-    ``decode="real"`` decodes BMP/PPM payloads (operators/codecs.py)
-    and emits actual image statistics; the deterministic mode hashes
-    the bytes. Same schema either way — FEATURE_DIM floats in [0,1].
-    """
+def extract_features(df: DataFrame) -> DataFrame:
+    """Arrow-batched feature extraction over a binary media column:
+    FEATURE_DIM floats in [0,1) derived from the content hash."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -127,14 +89,9 @@ def extract_features(df: DataFrame, decode: str = "deterministic") -> DataFrame:
             digests = pdf["content"].map(
                 lambda b: None if b is None else hashlib.sha256(bytes(b)).digest()
             )
-            if decode == "real":
-                features = pdf["content"].map(
-                    lambda b: None if b is None else _real_features(bytes(b))
-                )
-            else:
-                features = digests.map(
-                    lambda d: None if d is None else _fake_features(d)
-                )
+            features = digests.map(
+                lambda d: None if d is None else _fake_features(d)
+            )
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -160,13 +117,8 @@ RESIZE_SCHEMA = "media_id long, width int, height int, resized_sha string"
 FRAMES_SCHEMA = "media_id long, frame_no int, offset_ms long, frame_sha string"
 
 
-def resize_media(
-    df: DataFrame, width: int = 64, height: int = 64, decode: str = "deterministic"
-) -> DataFrame:
-    """Arrow-batched media resize. ``decode="real"`` runs the full
-    decode -> nearest-neighbor resample -> re-encode (same container
-    as the input: BMP in, BMP out) and fingerprints the re-encoded
-    bytes; the deterministic stub emits sha256(content ||
+def resize_media(df: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
+    """Arrow-batched media resize stub: emits sha256(content ||
     ':resize:WxH') so the plumbing — schema, batch shape,
     partition-parallel execution — is exercised on arbitrary bytes.
 
@@ -175,32 +127,15 @@ def resize_media(
     """
     tag = f":resize:{width}x{height}".encode()
 
-    def _real_resize_sha(raw: bytes) -> str:
-        from bigdata_commerce_spark.operators.codecs import (
-            decode_image,
-            encode_bmp,
-            encode_ppm,
-            resize_nearest,
-        )
-
-        resized = resize_nearest(decode_image(raw), width, height)
-        encoded = encode_bmp(resized) if raw[:2] == b"BM" else encode_ppm(resized)
-        return hashlib.sha256(encoded).hexdigest()[:16]
-
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            # None = absent media -> NULL fingerprint in BOTH modes
-            # (absent != 0-byte), matching extract_features' contract
-            if decode == "real":
-                shas = pdf["content"].map(
-                    lambda b: None if b is None else _real_resize_sha(bytes(b))
-                )
-            else:
-                shas = pdf["content"].map(
-                    lambda b: None
-                    if b is None
-                    else hashlib.sha256(bytes(b) + tag).hexdigest()[:16]
-                )
+            # None = absent media -> NULL fingerprint (absent !=
+            # 0-byte), matching extract_features' contract
+            shas = pdf["content"].map(
+                lambda b: None
+                if b is None
+                else hashlib.sha256(bytes(b) + tag).hexdigest()[:16]
+            )
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -213,45 +148,18 @@ def resize_media(
     return df.mapInPandas(kernel, schema=RESIZE_SCHEMA)
 
 
-def frame_sample(
-    df: DataFrame, n_frames: int = 4, decode: str = "deterministic"
-) -> DataFrame:
+def frame_sample(df: DataFrame, n_frames: int = 4) -> DataFrame:
     """Arrow-batched frame sampling: each media row fans out to
-    ``n_frames`` evenly spaced frame rows. ``decode="real"`` decodes
-    the payload as a concatenated-P6 video stream (a single BMP/PPM
-    image counts as a one-frame video), samples ``n_frames`` evenly
-    spaced ACTUAL frames, and fingerprints each frame's re-encoded
-    pixels; offsets spread ``meta.duration_ms`` across the real frame
-    indices. The stub derives offsets from ``meta.duration_ms``
-    (content length as a stand-in when duration is null, as for the
-    text adapter) and a deterministic frame fingerprint
-    sha256(content || ':frame:' || i).
+    ``n_frames`` evenly spaced frame rows. Offsets spread
+    ``meta.duration_ms`` (content length as a stand-in when duration
+    is null, as for the text adapter) and each frame gets a
+    deterministic fingerprint sha256(content || ':frame:' || i).
 
     The fan-out happens INSIDE the kernel (one input batch -> one
     n_frames-times-longer output batch), so there's no explode shuffle
     and output partitioning follows input splits — the right shape for
     a 100 TB video corpus where frames dwarf the source rows.
     """
-
-    def _real_frames(raw: bytes, dur: int) -> list[tuple[int, int, str]]:
-        # (frame_no, offset_ms, frame_sha) for n evenly spaced frames
-        from bigdata_commerce_spark.operators.codecs import (
-            decode_image,
-            encode_ppm,
-            iter_ppm_frames,
-        )
-
-        if raw[:2] == b"P6":
-            frames = list(iter_ppm_frames(raw))
-        else:
-            frames = [decode_image(raw)]
-        total = len(frames)
-        out = []
-        for i in range(n_frames):
-            idx = i * total // n_frames
-            sha = hashlib.sha256(encode_ppm(frames[idx])).hexdigest()[:16]
-            out.append((i, int(dur) * idx // total, sha))
-        return out
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -268,15 +176,8 @@ def frame_sample(
             ]
             for mid, content, dur in zip(pdf["media_id"], pdf["content"], durations):
                 if content is None:
-                    continue  # absent media has no frames (both modes)
+                    continue  # absent media has no frames
                 raw = bytes(content)
-                if decode == "real":
-                    for i, off, sha in _real_frames(raw, dur):
-                        out["media_id"].append(mid)
-                        out["frame_no"].append(i)
-                        out["offset_ms"].append(off)
-                        out["frame_sha"].append(sha)
-                    continue
                 for i in range(n_frames):
                     out["media_id"].append(mid)
                     out["frame_no"].append(i)
@@ -294,7 +195,7 @@ def media_phash(df: DataFrame) -> DataFrame:
     ``(media_id, phash)`` where bit i is the sign of feature i around
     0.5 — the aHash/pHash construction over whatever feature vector
     the extraction kernel emits (FEATURE_DIM bits; a CNN embedding or
-    DCT block plugs into the same bit rule on the real path).
+    DCT block plugs into the same bit rule).
 
     Engine-exactness: the deterministic kernel's feature i is
     ``uint32(sha256[4i:4i+4]) / 2**32`` (unsigned big-endian read,
@@ -346,15 +247,15 @@ def phash_hamming_pairs(
     h: DataFrame, n_bits: int, max_hamming: int = 1
 ) -> DataFrame:
     """Banded hamming self-join over a ``(media_id, phash)`` frame of
-    ``n_bits``-bit hashes — the pigeonhole kernel shared by the
-    deterministic and real-decode phash paths. Band extraction uses
+    ``n_bits``-bit hashes — the pigeonhole kernel behind
+    ``media_phash_pairs``. Band extraction uses
     the UNSIGNED shift so a 64-bit hash with the sign bit set bands
     identically to its unsigned value.
 
     The input is persisted here (VERDICT r10 item 3): the band union
-    scans ``h`` 2 x bands times, and when ``h`` is the real-decode
-    Arrow kernel that would mean 2 x bands image decodes per image —
-    the cache makes it ONE, the same move the round-10 scale probe
+    scans ``h`` 2 x bands times, and when ``h`` comes from a decoding
+    kernel that would mean 2 x bands decodes per row — the cache
+    makes it ONE, the same move the round-10 scale probe
     made manually with localCheckpoint. The cached frame is just
     (media_id, phash): ~16 bytes a row, memory-and-disk safe at any
     corpus size. Cache lifetime is bounded (VERDICT r11): see
@@ -399,7 +300,7 @@ def media_phash_wide_det(df: DataFrame) -> DataFrame:
     either engine). Pure JVM projection (sha2 + conv), no Arrow
     kernel, no float anywhere — the same oracle-exactness discipline
     as ``media_phash``'s nibble rule, widened to the multi-word shape
-    the real-decode path emits, so ``phash_words_hamming_pairs`` is
+    of a 256-bit perceptual hash, so ``phash_words_hamming_pairs`` is
     exercised end-to-end under a DuckDB oracle. NULL content -> NULL
     phash_words."""
     hx = F.sha2(F.col("content"), 256)

@@ -1,41 +1,19 @@
-"""Skew-mitigation operators: salted two-phase aggregation.
+"""Key-skew diagnostic.
 
-AQE's skew-join handling covers joins; for aggregations over a
-power-law key (one user with 100M events), the classic fix is a
-two-phase aggregate through a salted key: partial aggregation on
-(key, salt) spreads the hot key over ``salt_buckets`` reducers, the
-final aggregate combines the partials. Results are identical to the
-direct aggregation — the catalog checks that with a plain GROUP BY
-oracle.
+AQE's skew-join handling covers joins. An aggregation over a
+power-law key (one user with 100M events) needs no salting when its
+function combines map-side (count, sum, min, max): each map task
+sends the hot key one partial, and a salted two-phase count measured
+slower than the plain aggregate at every size tried
+(``salted_user_event_counts``' docstring has the numbers).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_count(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    salt_col: Column,
-    salt_buckets: int = 16,
-    count_alias: str = "n",
-) -> DataFrame:
-    """count(*) per key via (key, salt) partial -> final combine.
-
-    ``salt_col`` must be a deterministic expression over the row (a
-    hash of a high-cardinality column) so retries reproduce the same
-    partials.
-    """
-    partial = (
-        df.withColumn("__salt", F.pmod(salt_col, F.lit(salt_buckets)))
-        .groupBy(*key_cols, "__salt")
-        .agg(F.count(F.lit(1)).alias("__partial"))
-    )
-    return partial.groupBy(*key_cols).agg(F.sum("__partial").alias(count_alias))
 
 
 def key_skew_report(
@@ -46,8 +24,8 @@ def key_skew_report(
     """Measure key skew before choosing a mitigation: per-key counts,
     the top-k hottest keys with their share of all rows, and the
     skew factor (max key count / mean key count — 1.0 means uniform,
-    100 means the hottest reducer gets 100x the average and salting /
-    AQE skew-join is worth turning on).
+    100 means the hottest reducer gets 100x the average and a
+    mitigation such as AQE skew-join is worth turning on).
 
     One hash aggregate on the key (map-side combined), a one-row
     summary broadcast back, and a TakeOrderedAndProject for the

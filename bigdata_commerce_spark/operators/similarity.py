@@ -16,14 +16,10 @@ Two paths, as a 100 TB pipeline needs:
 
 from __future__ import annotations
 
-import logging
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-_LOG = logging.getLogger(__name__)
 
 
 # |x| band where ROUND(x, 4) is engine-portable: x*10^4 stays under
@@ -478,16 +474,14 @@ def _assign_cells_best(
     df: DataFrame, vec: str, centroids: DataFrame
 ) -> tuple[DataFrame, DataFrame, str]:
     """Assignment dispatcher: collect the centroid block once (tiny),
-    use the Arrow kernel when enabled and the id type is integral
-    (Python sort order == Spark ordering), else the expression fold.
+    use the Arrow kernel when the id type is integral (Python sort
+    order == Spark ordering), else the expression fold.
     Returns (assigned df+centroid_id, localized cent_row for the probe
     path, centroid id type). The localized cent_row carries the exact
     collected doubles, so probe-side scores are bit-identical to the
     in-plan recompute it replaces (and the centroid-pick job runs once
-    instead of twice). Env: SPARK_GRAFT_IVF_KERNEL=0 forces the fold.
+    instead of twice).
     """
-    import os
-
     id_type = centroids.schema["centroid_id"].dataType.simpleString()
     rows = centroids.select("centroid_id", "centroid_vec").collect()
     spark = df.sparkSession
@@ -497,8 +491,7 @@ def _assign_cells_best(
     )
     cent_row, _ = _centroid_fold_row(local_cents)
     use_kernel = (
-        os.environ.get("SPARK_GRAFT_IVF_KERNEL", "1") != "0"
-        and id_type in _KERNEL_ID_TYPES
+        id_type in _KERNEL_ID_TYPES
         and rows
         and all(r[0] is not None for r in rows)
     )
@@ -984,8 +977,6 @@ def semdedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
-    max_cell_size: int | None = None,
-    warn_hot_cells: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): cluster the
@@ -1017,35 +1008,12 @@ def semdedup(
     centroid sims to 4dp (the IVF convention) before any comparison,
     so engine ULPs cannot flip a keep decision.
 
-    Hot-cell bound (``max_cell_size``, r8 verdict item 2): semantic
-    skew — a duplicate-heavy blob — defeats the centroid dial, because
-    near-identical vectors share (to 4dp) the same best centroid no
-    matter how many centroids exist; sub-clustering can't split the
-    blob either (every member ties to every blob sub-centroid).
-    When ``max_cell_size`` is set, cells over the cap are SALT-SPLIT:
-    each member gets ``__salt = pmod(xxhash64(id), ceil(cell/cap))``
-    and dominance is only scored within (cell, salt), so the join
-    stays O(cap) per task. The price is bounded recall loss ONLY in
-    oversized cells: a duplicate group of size m splits over k salts,
-    leaving at most k survivors instead of 1 (each salt bucket still
-    holds ~m/k near-identical members and collapses to its own
-    minimum). Cells at or under the cap are bit-identical to the
-    unsalted result — the oracle-paired catalog query keeps
-    ``max_cell_size=None`` (exact published semantics).
-
-    Hot-cell pre-check (VERDICT r9 item 3): when the cap is UNSET,
-    the per-cell histogram the salt path would have computed anyway
-    (one groupBy(centroid_id).count() over the already-checkpointed
-    assignment, <= n_centroids rows) runs as a detector instead — if
-    any cell exceeds 4x the median cell size, a warning is logged
-    naming the hot cell and suggesting ``max_cell_size``, because
-    per-task self-join work grows with the SQUARE of the largest
-    cell (SCALE.md's measured 4.93x blowup on a planted blob). The
-    exact result is unchanged; the warning is the cost model talking.
-    The detector is a blocking driver collect (bounded — <=
-    n_centroids rows off the eager checkpoint), so it is opt-out-able
-    (ADVICE r10 item 3): pass ``warn_hot_cells=False`` when
-    n_centroids is very large or the driver is latency-sensitive.
+    Semantic skew — a duplicate-heavy blob — defeats the centroid
+    dial: near-identical vectors share (to 4dp) the same best centroid
+    however many centroids exist, so the blob's cell, and its
+    quadratic self-join, stays whole (SCALE.md measured a 4.93x
+    blowup on a planted blob). Splitting it would change which
+    members survive, so the exact published rule is kept.
     """
     if centroids is None:
         centroids = md5_centroids(corpus, n_centroids, id_col, vec_col)
@@ -1090,67 +1058,24 @@ def semdedup(
         )
         .localCheckpoint(eager=True)
     )
-    if max_cell_size is not None:
-        # broadcast the per-cell salt fan-out (one row per centroid —
-        # tiny); small cells get n_salt = 1, i.e. the exact path
-        sizes = assigned.groupBy("centroid_id").agg(
-            F.ceil(F.count(F.lit(1)) / F.lit(max_cell_size)).cast("int").alias("__n_salt")
-        )
-        joined = assigned.join(F.broadcast(sizes), "centroid_id", "left").withColumn(
-            "__salt", F.pmod(F.xxhash64("__id"), F.col("__n_salt"))
-        )
-    else:
-        if warn_hot_cells:
-            # hot-cell detector: same histogram the salt path
-            # broadcasts, collected instead (<= n_centroids rows —
-            # bounded by design; reads the eager localCheckpoint, not
-            # a re-scan). NULL cells (zero-magnitude vectors) never
-            # self-join, so they can't be hot — exclude them.
-            # warn_hot_cells=False skips the blocking driver
-            # round-trip entirely (ADVICE r10 item 3).
-            cell_sizes = sorted(
-                r["c"]
-                for r in assigned.where(F.col("centroid_id").isNotNull())
-                .groupBy("centroid_id")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .collect()
-            )
-            if cell_sizes:
-                median = cell_sizes[len(cell_sizes) // 2]
-                peak = cell_sizes[-1]
-                if peak > 4 * median:
-                    _LOG.warning(
-                        "semdedup hot cell: largest cell holds %d vectors "
-                        "(median %d, %.1fx) and max_cell_size is unset — "
-                        "the within-cell self-join does O(cell^2) work per "
-                        "task; set max_cell_size to salt-split oversized "
-                        "cells (bounded recall loss, see docstring)",
-                        peak,
-                        median,
-                        peak / median,
-                    )
-        joined = assigned.withColumn("__salt", F.lit(0))
-    a = joined.select(
+    a = assigned.select(
         F.col("__id").alias("__xa"),
         F.col("__v").alias("__va"),
         F.col("__nv").alias("__na"),
         F.col("centroid_id").alias("__ca"),
         F.col("centroid_sim").alias("__sa"),
-        F.col("__salt").alias("__salta"),
     )
-    b = joined.select(
+    b = assigned.select(
         F.col("__id").alias("__xb"),
         F.col("__v").alias("__vb"),
         F.col("__nv").alias("__nb"),
         F.col("centroid_id").alias("__cb"),
         F.col("centroid_sim").alias("__sb"),
-        F.col("__salt").alias("__saltb"),
     )
     dominated = (
         a.join(
             b,
             (F.col("__ca") == F.col("__cb"))
-            & (F.col("__salta") == F.col("__saltb"))
             & (F.col("__xa") != F.col("__xb")),
         )
         .where(

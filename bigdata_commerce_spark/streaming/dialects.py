@@ -8,7 +8,7 @@ The reference's actual sink database is MySQL (``adversStat/src/main/
 scala/JdbcHelper.scala:82-137`` — row-at-a-time SELECT-then-INSERT-or-
 UPDATE DAOs over a MySQL pool); the backend here is proven end-to-end
 against embedded Derby (the only database in the sandbox). This module
-makes the four merge algebras dialect-portable: every SQL string the
+makes the three merge algebras dialect-portable: every SQL string the
 backend executes is produced by a dialect object, so the Derby
 integration tests pin the executable behavior and the MySQL dialect is
 pinned by exact statement-string tests (``tests/test_jdbc_dialects.py``)
@@ -87,28 +87,13 @@ class SqlDialect:
     def create_epoch_ledger(self, table: str) -> str:
         raise NotImplementedError
 
-    def add_column(self, table: str, col: str, decl: str) -> str:
-        return (
-            f"ALTER TABLE {table} ADD COLUMN {self.quote(col)} {decl}"
-        )
-
     def insert_epoch(self, table: str, epoch_id: int) -> str:
         return f"INSERT INTO {table}_epochs VALUES ({int(epoch_id)})"
 
-    # -- the four merge algebras ------------------------------------------
+    # -- the three merge algebras -----------------------------------------
 
     def upsert_accumulate(
         self, table: str, stage: str, key_cols: list[str], value_col: str
-    ) -> list[str]:
-        raise NotImplementedError
-
-    def upsert_overwrite(
-        self,
-        table: str,
-        stage: str,
-        key_cols: list[str],
-        set_cols: list[str],
-        all_cols: list[str],
     ) -> list[str]:
         raise NotImplementedError
 
@@ -129,9 +114,8 @@ class DerbyDialect(SqlDialect):
     def __init__(self) -> None:
         super().__init__(
             name="derby",
-            # X0Y32 object exists; 42X14/42X04/42Z93 column/name
-            # variants raised by re-run migration DDL
-            exists_ok_markers=("X0Y32", "already exists", "42X14", "42X04", "42Z93"),
+            # X0Y32 object exists
+            exists_ok_markers=("X0Y32", "already exists"),
             dup_key_markers=("23505", "duplicate key"),
             missing_table_markers=("does not exist", "42X05"),
         )
@@ -180,19 +164,6 @@ class DerbyDialect(SqlDialect):
             self._merge(table, stage, key_cols, matched, [*key_cols, value_col, KH_COL])
         ]
 
-    def upsert_overwrite(
-        self,
-        table: str,
-        stage: str,
-        key_cols: list[str],
-        set_cols: list[str],
-        all_cols: list[str],
-    ) -> list[str]:
-        q = self.quote
-        sets = ", ".join(f"{q(c)} = s.{q(c)}" for c in set_cols)
-        matched = f"WHEN MATCHED THEN UPDATE SET {sets} "
-        return [self._merge(table, stage, key_cols, matched, all_cols)]
-
     def insert_missing(
         self, table: str, stage: str, key_cols: list[str], ins_cols: list[str]
     ) -> list[str]:
@@ -227,10 +198,9 @@ class MySqlDialect(SqlDialect):
     def __init__(self) -> None:
         super().__init__(
             name="mysql",
-            # 1050 table exists, 1061 duplicate key name (index),
-            # 1060 duplicate column
-            exists_ok_markers=("1050", "1061", "1060", "already exists",
-                               "Duplicate key name", "Duplicate column"),
+            # 1050 table exists, 1061 duplicate key name (index)
+            exists_ok_markers=("1050", "1061", "already exists",
+                               "Duplicate key name"),
             dup_key_markers=("1062", "Duplicate entry"),
             missing_table_markers=("1146", "doesn't exist", "does not exist"),
         )
@@ -276,22 +246,6 @@ class MySqlDialect(SqlDialect):
             self._insert_not_exists(
                 table, stage, key_cols, [*key_cols, value_col, KH_COL]
             ),
-        ]
-
-    def upsert_overwrite(
-        self,
-        table: str,
-        stage: str,
-        key_cols: list[str],
-        set_cols: list[str],
-        all_cols: list[str],
-    ) -> list[str]:
-        q = self.quote
-        sets = ", ".join(f"t.{q(c)} = s.{q(c)}" for c in set_cols)
-        return [
-            f"UPDATE {table} t JOIN {stage} s ON {self.on_clause(key_cols)} "
-            f"SET {sets}",
-            self._insert_not_exists(table, stage, key_cols, all_cols),
         ]
 
     def insert_missing(

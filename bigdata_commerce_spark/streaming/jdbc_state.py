@@ -4,9 +4,9 @@ Kept although no entry point imports it: it is the reference's MySQL
 ad-state output, held row-identical to the parquet store by
 tests/test_jdbc_state.py and tests/test_streaming.py.
 
-The parquet epoch sinks (``streaming/sinks.py``) carry the reference's
-four upsert-DAO merge algebras (``adversStat/src/main/scala/
-JdbcHelper.scala:21-389``) but rewrite the FULL state every
+The parquet epoch sinks (``streaming/sinks.py``) carry the three
+upsert-DAO merge algebras the ad topology uses
+(``adversStat/src/main/scala/JdbcHelper.scala:21-389``) but rewrite the FULL state every
 micro-batch — O(total state) I/O per batch, the acknowledged
 local-test compromise. This module is the production retarget behind
 the same ``BatchFn`` interface, with per-batch I/O proportional to the
@@ -81,9 +81,8 @@ def stage_column_types(dtypes: list[tuple[str, str]], dialect) -> str:
     the JDBC writer default (Derby CLOB / MySQL TEXT — neither can be
     a MERGE/join/index key). ``__kh`` is ALWAYS a 32-char md5 hex
     digest and is the ONLY indexed column (create_kh_index), so it
-    stages at VARCHAR(32), matching the _ensure_key_hash migration:
-    at the dialect default width a utf8mb4 VARCHAR(1024) index key is
-    4096 bytes, past InnoDB's 3072-byte limit — error 1071 is not in
+    stages at VARCHAR(32): at the dialect default width a utf8mb4
+    VARCHAR(1024) index key is 4096 bytes, past InnoDB's 3072-byte limit — error 1071 is not in
     exists_ok_markers, so create_kh_index on the LIKE-inherited state
     table would wedge every micro-batch on a real MySQL 8 server.
     """
@@ -95,7 +94,7 @@ def stage_column_types(dtypes: list[tuple[str, str]], dialect) -> str:
 
 
 class JdbcStateBackend:
-    """Factory for the four merge-mode sinks over one JDBC database.
+    """Factory for the three merge-mode sinks over one JDBC database.
 
     All SQL strings come from the ``dialect`` (inferred from the JDBC
     URL when not given): embedded Derby is the integration-tested
@@ -112,7 +111,6 @@ class JdbcStateBackend:
         self._spark = spark
         self._cfg = config
         self._dialect = dialect or dialect_for_url(config.url)
-        self._kh_migrated: set[str] = set()
 
     # -- raw driver-side connection (py4j) --------------------------------
     def _connect(self):
@@ -149,9 +147,8 @@ class JdbcStateBackend:
         # dialect -> TEXT; neither can be a MERGE/join/index key —
         # declare the dialect's indexable type for every string column.
         # __kh is ALWAYS a 32-char md5 hex digest: stage it at
-        # VARCHAR(32) (matching the _ensure_key_hash migration) so the
-        # state table inherited via CREATE TABLE ... LIKE keeps an
-        # indexable width — a utf8mb4 VARCHAR(1024) index key is 4096
+        # VARCHAR(32) so the state table inherited via CREATE TABLE ...
+        # LIKE keeps an indexable width — a utf8mb4 VARCHAR(1024) index key is 4096
         # bytes, past InnoDB's 3072-byte limit (error 1071, which is
         # not replay-ignorable, so create_kh_index would wedge every
         # micro-batch on a real MySQL 8 server).
@@ -169,35 +166,25 @@ class JdbcStateBackend:
                 raise
 
     def _apply(
-        self,
-        table: str,
-        stage: str,
-        statements: list[str],
-        epoch_id: int,
-        migrate_ddl: tuple[str, ...] = (),
+        self, table: str, stage: str, statements: list[str], epoch_id: int
     ) -> bool:
         """Run ``statements`` + epoch-ledger insert in one transaction.
-        Returns False (no-op) when the epoch was already applied.
-        ``migrate_ddl`` statements run (errors-ignored) after the lazy
-        CREATEs — the upgrade hook for schema additions on tables
-        created by earlier code versions."""
+        Returns False (no-op) when the epoch was already applied."""
         d = self._dialect
         conn = self._connect()
         try:
             conn.setAutoCommit(False)
             st = conn.createStatement()
-            # Lazy DDL: state table cloned from staging's shape, ledger
+            # Lazy DDL: state table cloned from staging's shape (so
+            # __kh and __epoch exist from the first write), ledger
             # keyed by epoch. Derby has no IF NOT EXISTS — ignorable
             # error markers come from the dialect.
             self._exec_ignore(
                 st, d.create_state_table(table, stage), d.exists_ok_markers
             )
             # The index behind the MERGE's leading __kh equality (KH_COL
-            # note). Pre-__kh legacy tables were already upgraded by
-            # _ensure_key_hash before any statement got here.
+            # note).
             self._exec_ignore(st, d.create_kh_index(table), d.exists_ok_markers)
-            for ddl in migrate_ddl:
-                self._exec_ignore(st, ddl, d.exists_ok_markers)
             self._exec_ignore(
                 st, d.create_epoch_ledger(table), d.exists_ok_markers
             )
@@ -220,59 +207,6 @@ class JdbcStateBackend:
             raise
         finally:
             conn.close()
-
-    def _ensure_key_hash(self, table: str, key_cols: list[str]) -> None:
-        """One-time upgrade of a pre-__kh state table: add the column
-        and backfill it with Spark-computed hashes (Derby can't md5)
-        via a full staged rewrite in one transaction. Memoized per
-        backend instance; no-op for fresh tables (created WITH the
-        column) and already-migrated ones."""
-        if table in self._kh_migrated:
-            return
-        from bigdata_commerce_spark.sources.sinks import read_jdbc
-
-        try:
-            raw = read_jdbc(self._spark, table, self._cfg)
-            raw.schema
-        except Exception as e:
-            if any(m in str(e) for m in self._dialect.missing_table_markers):
-                self._kh_migrated.add(table)  # first write creates it hashed
-                return
-            raise
-        if KH_COL in raw.columns and raw.where(F.col(KH_COL).isNull()).isEmpty():
-            self._kh_migrated.add(table)
-            return
-        # decode the staged string sentinel before hashing — staged
-        # hashes are computed on RAW values, the store holds encoded
-        decoded = raw.drop(KH_COL) if KH_COL in raw.columns else raw
-        for c, t in decoded.dtypes:
-            if t == "string":
-                decoded = decoded.withColumn(
-                    c, F.nullif(F.col(c), F.lit(NULL_SENTINEL))
-                )
-        hashed = _with_key_hash(decoded, key_cols)
-        stage = self._stage(hashed, f"{table}_mig")
-        cols = ", ".join(self._dialect.quote(c) for c in hashed.columns)
-        conn = self._connect()
-        try:
-            conn.setAutoCommit(False)
-            st = conn.createStatement()
-            self._exec_ignore(
-                st,
-                self._dialect.add_column(table, KH_COL, "VARCHAR(32)"),
-                self._dialect.exists_ok_markers,
-            )
-            st.executeUpdate(f"DELETE FROM {table}")
-            st.executeUpdate(
-                f"INSERT INTO {table} ({cols}) SELECT {cols} FROM {stage}"
-            )
-            conn.commit()
-        except Exception:
-            conn.rollback()
-            raise
-        finally:
-            conn.close()
-        self._kh_migrated.add(table)
 
     def state_location(self, name: str) -> str:
         return name
@@ -319,7 +253,7 @@ class JdbcStateBackend:
             )
         return df
 
-    # -- the four merge algebras ------------------------------------------
+    # -- the three merge algebras ------------------------------------------
 
     def accumulate_sink(
         self, table: str, key_cols: list[str], value_col: str
@@ -328,7 +262,6 @@ class JdbcStateBackend:
         ``JdbcHelper.scala:124``) as one additive set-based MERGE."""
 
         def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            self._ensure_key_hash(table, key_cols)
             new = _with_key_hash(
                 batch_df.groupBy(*key_cols).agg(F.sum(value_col).alias(value_col)),
                 key_cols,
@@ -338,40 +271,6 @@ class JdbcStateBackend:
                 table,
                 stage,
                 self._dialect.upsert_accumulate(table, stage, key_cols, value_col),
-                epoch_id,
-            )
-
-        return fn
-
-    def overwrite_sink(self, table: str, key_cols: list[str]) -> BatchFn:
-        """Batch rows replace same-key state rows (AdStat/AdClickTrend,
-        ``JdbcHelper.scala:230,360``) — UPDATE on match, INSERT on miss."""
-
-        def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            data_cols = [c for c in batch_df.columns if c not in key_cols]
-            if not data_cols:
-                # 'UPDATE SET <nothing>' is a syntax error on every
-                # backend; a key-only table is distinct_append's job
-                raise ValueError(
-                    f"overwrite_sink({table!r}) needs at least one non-key "
-                    "column to update; for key-only state use "
-                    "distinct_append_sink"
-                )
-            self._ensure_key_hash(table, key_cols)
-            hashed = _with_key_hash(batch_df, key_cols)
-            stage = self._stage(hashed, table)
-            # __kh rides the SET list: re-SET on match is a no-op
-            # (equal keys hash equally) and keeps the statement uniform
-            self._apply(
-                table,
-                stage,
-                self._dialect.upsert_overwrite(
-                    table,
-                    stage,
-                    key_cols,
-                    [*data_cols, KH_COL],
-                    list(hashed.columns),
-                ),
                 epoch_id,
             )
 
@@ -388,7 +287,6 @@ class JdbcStateBackend:
             # partition share it), indexing the DELETE's correlate;
             # the dialect keeps the null-safe residuals — a NULL
             # (non-string) partition value must still replace its rows
-            self._ensure_key_hash(table, partition_cols)
             stage = self._stage(_with_key_hash(batch_df, partition_cols), table)
             self._apply(
                 table,
@@ -409,7 +307,6 @@ class JdbcStateBackend:
         ``JdbcHelper.scala:21-41``) — insert-on-miss only."""
 
         def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            self._ensure_key_hash(table, key_cols)
             new = _with_key_hash(
                 batch_df.select(*key_cols)
                 .distinct()
@@ -424,16 +321,6 @@ class JdbcStateBackend:
                     table, stage, key_cols, [*key_cols, EPOCH_COL, KH_COL]
                 ),
                 epoch_id,
-                # upgrade path: a table created before the epoch stamp
-                # existed gains the column with DEFAULT -1 — the
-                # backend backfills existing rows with the default, so
-                # legacy rows read as epoch -1 and appear in EVERY
-                # before_epoch view (they predate all epochs)
-                migrate_ddl=(
-                    self._dialect.add_column(
-                        table, EPOCH_COL, "BIGINT DEFAULT -1"
-                    ),
-                ),
             )
 
         return fn

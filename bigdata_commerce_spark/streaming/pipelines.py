@@ -19,17 +19,12 @@ from bigdata_commerce_spark.streaming import ad_stream, sinks
 
 @dataclass
 class AdPipelineHandles:
-    """Running queries + the state backend (read via
-    ``backend.read_state(name)``; *_dir fields are the resolved state
-    locations — parquet paths or JDBC table names)."""
+    """Running queries + the state backend (read state via
+    ``backend.read_state(name)``, locate it via
+    ``backend.state_location(name)``)."""
 
     queries: list
     backend: object
-    user_counts_dir: str
-    blacklist_dir: str
-    cumulative_dir: str
-    top3_dir: str
-    trend_dir: str
 
     def stop(self) -> None:
         for q in self.queries:
@@ -162,15 +157,7 @@ def run_ad_pipeline(
         .start()
     )
 
-    return AdPipelineHandles(
-        queries=[q],
-        backend=backend,
-        user_counts_dir=backend.state_location("user_counts"),
-        blacklist_dir=backend.state_location("blacklist"),
-        cumulative_dir=backend.state_location("cumulative"),
-        top3_dir=backend.state_location("top3"),
-        trend_dir=backend.state_location("trend"),
-    )
+    return AdPipelineHandles(queries=[q], backend=backend)
 
 
 def file_event_source(

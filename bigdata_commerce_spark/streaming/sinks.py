@@ -1,10 +1,10 @@
 """Streaming sinks: idempotent keyed-state merges via foreachBatch.
 
-The reference treats MySQL as a mutable state store with four
-hand-rolled upsert DAOs (``adversStat/src/main/scala/JdbcHelper.scala``):
-AdUserClickCount *accumulates* (``:124``), AdStat / AdClickTrend
-*overwrite per key* (``:230,360``), AdProvinceTop3 *delete-then-insert
-per (date, province)* (``:283-309``), AdBlacklist *insert-distinct*
+The reference treats MySQL as a mutable state store with hand-rolled
+upsert DAOs (``adversStat/src/main/scala/JdbcHelper.scala``). The ad
+topology uses three of their merge shapes: AdUserClickCount
+*accumulates* (``:124``), AdProvinceTop3 *deletes-then-inserts per
+(date, province)* (``:283-309``) and AdBlacklist *inserts distinct*
 (``:21-41``) — all row-at-a-time JDBC with per-row SELECT-classify.
 
 Here each mode is a ``foreachBatch`` function over a **versioned
@@ -16,17 +16,16 @@ replay, which is exactly the guarantee the reference's DAOs lack.
 Cost per merge: the batch is planned once and meets the old state in
 one operator — accumulate is one ``groupBy().sum`` over old ∪ batch
 (so the batch may be raw per-event rows), distinct-append one
-``distinct``, replace-partition one window pass, overwrite one
-null-safe anti-join — followed by one parquet write. Reading state
-submits no Spark job: the schema comes from a part file's footer on
-the driver instead of parquet schema inference. Measured on the ad
-topology (``pipelines.run_ad_pipeline``, 1500-event epochs, local[4],
-4-core VM): a steady epoch runs 15 Spark jobs, none of them for a
-state read.
+``distinct``, replace-partition one window pass — followed by one
+parquet write. Reading state submits no Spark job: the schema comes
+from a part file's footer on the driver instead of parquet schema
+inference. Measured on the ad topology (``pipelines.run_ad_pipeline``,
+1500-event epochs, local[4], 4-core VM): a steady epoch runs 15 Spark
+jobs, none of them for a state read.
 
 Full-state rewrite per epoch is the local-test compromise; the
 production backend with per-batch I/O proportional to the batch is
-``streaming/jdbc_state.JdbcStateBackend`` — the same four merge
+``streaming/jdbc_state.JdbcStateBackend`` — the same three merge
 algebras as real set-based ``MERGE INTO`` (stage + merge + epoch
 ledger), exercised end-to-end against embedded Derby in
 ``tests/test_jdbc_state.py`` and parity-tested against these sinks.
@@ -144,9 +143,6 @@ class ParquetStateBackend:
     def accumulate_sink(self, name: str, key_cols: list[str], value_col: str) -> BatchFn:
         return accumulate_sink(self.state_location(name), key_cols, value_col)
 
-    def overwrite_sink(self, name: str, key_cols: list[str]) -> BatchFn:
-        return overwrite_sink(self.state_location(name), key_cols)
-
     def replace_partition_sink(self, name: str, partition_cols: list[str]) -> BatchFn:
         return replace_partition_sink(self.state_location(name), partition_cols)
 
@@ -167,27 +163,6 @@ def accumulate_sink(state_dir: str, key_cols: list[str], value_col: str) -> Batc
         if old is not None:
             rows = old.unionByName(rows)
         merged = rows.groupBy(*key_cols).agg(F.sum(value_col).alias(value_col))
-        _write_epoch(merged, state_dir, epoch_id)
-
-    return fn
-
-
-def overwrite_sink(state_dir: str, key_cols: list[str]) -> BatchFn:
-    """AdStat / AdClickTrend semantics (``JdbcHelper.scala:230,360``):
-    batch rows replace state rows with the same key (the batch carries
-    the new totals, e.g. from an update-mode stateful aggregation).
-    Keys match null-safely, so a NULL key is replaced like any other."""
-
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        old = read_state(spark, state_dir, before_epoch=epoch_id)
-        if old is None:
-            merged = batch_df
-        else:
-            keys = batch_df.select(*key_cols)
-            merged = old.join(
-                keys, [old[c].eqNullSafe(keys[c]) for c in key_cols], "left_anti"
-            ).unionByName(batch_df)
         _write_epoch(merged, state_dir, epoch_id)
 
     return fn

@@ -1,7 +1,8 @@
 """Fast-tier coverage of the reqs 7-10 ad-click topology: a three-file
 backlog drained through ``run_ad_pipeline`` with every state table
 checked against its batch twin, the state reads' zero-job contract,
-and the NULL-key semantics of the parquet merge sinks."""
+and the NULL-partition semantics of the parquet replace-partition
+sink."""
 
 from __future__ import annotations
 
@@ -53,6 +54,32 @@ def _counts(df) -> Counter:
     return Counter(map(tuple, df.collect()))
 
 
+class _BenchmarkSurface:
+    """The parquet state backend cut down to the five methods that
+    perfbench's ``_MeteredBackend`` (``perfbench/workloads.py``)
+    defines. The benchmark's ad workload runs the topology through
+    that class, so a topology change that calls any other backend
+    method fails this fast-tier drain instead of the benchmark."""
+
+    def __init__(self, inner: sinks.ParquetStateBackend) -> None:
+        self._inner = inner
+
+    def state_location(self, name):
+        return self._inner.state_location(name)
+
+    def read_state(self, name, before_epoch=None):
+        return self._inner.read_state(name, before_epoch)
+
+    def accumulate_sink(self, name, key_cols, value_col):
+        return self._inner.accumulate_sink(name, key_cols, value_col)
+
+    def replace_partition_sink(self, name, partition_cols):
+        return self._inner.replace_partition_sink(name, partition_cols)
+
+    def distinct_append_sink(self, name, key_cols):
+        return self._inner.distinct_append_sink(name, key_cols)
+
+
 @pytest.fixture(scope="module")
 def drained(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("ad_topology")
@@ -70,6 +97,7 @@ def drained(spark, tmp_path_factory):
         pipelines.file_event_source(spark, str(flat)),
         str(root / "state"),
         blacklist_threshold=THRESHOLD,
+        backend=_BenchmarkSurface(sinks.ParquetStateBackend(spark, str(root / "state"))),
     )
     try:
         handles.process_all()
@@ -175,13 +203,3 @@ def test_replace_partition_sink_replaces_null_partition(spark, tmp_path):
     sink(spark.createDataFrame([(None, "z", 3)], schema), 1)
     got = sinks.read_state(spark, state).collect()
     assert sorted(map(tuple, got), key=repr) == [("a", "y", 2), (None, "z", 3)]
-
-
-def test_overwrite_sink_replaces_null_key(spark, tmp_path):
-    state = str(tmp_path / "keys")
-    sink = sinks.overwrite_sink(state, ["k"])
-    schema = "k string, v long"
-    sink(spark.createDataFrame([("a", 2), (None, 1)], schema), 0)
-    sink(spark.createDataFrame([(None, 5)], schema), 1)
-    got = sinks.read_state(spark, state).collect()
-    assert sorted(map(tuple, got), key=repr) == [("a", 2), (None, 5)]

@@ -166,21 +166,6 @@ def test_multimodal_feature_shape(spark):
     assert all(0.0 <= f < 1.0 for f in r.features)
 
 
-def test_multimodal_real_decode_rejects_non_media(spark):
-    """Real-decode mode fails LOUD on payloads that aren't BMP/PPM
-    (here: raw text bytes) instead of silently hashing garbage — the
-    documented pre-filter-corrupt-media contract."""
-    docs = load_table(spark, "documents", SF_SMOKE).limit(2)
-    media = multimodal.documents_as_media(docs)
-    for op in (
-        lambda m: multimodal.extract_features(m, decode="real"),
-        lambda m: multimodal.resize_media(m, decode="real"),
-        lambda m: multimodal.frame_sample(m, decode="real"),
-    ):
-        with pytest.raises(Exception, match="CodecError|unrecognized media magic"):
-            op(media).collect()
-
-
 def test_multimodal_frame_sample_shape(spark):
     """Every media row fans out to exactly n_frames rows with
     monotonically nondecreasing offsets bounded by the duration proxy,

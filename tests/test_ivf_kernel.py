@@ -10,7 +10,6 @@ zero-magnitude vector, zero centroid, 4dp rounding ties).
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from bigdata_commerce_spark.operators.similarity import (
@@ -81,7 +80,7 @@ def test_kernel_matches_fold_on_rounding_ties(spark):
     assert dict(kern)[1] == 20  # rounded tie -> smaller cid wins
 
 
-def test_dispatcher_falls_back_for_string_ids(spark, monkeypatch):
+def test_dispatcher_falls_back_for_string_ids(spark):
     cent = spark.createDataFrame(
         [("a", [1.0] * 4), ("b", [-1.0] * 4)],
         "centroid_id string, centroid_vec array<double>",
@@ -93,12 +92,3 @@ def test_dispatcher_falls_back_for_string_ids(spark, monkeypatch):
     assert id_type == "string"
     got = dict(map(tuple, assigned.select("corpus_id", "centroid_id").collect()))
     assert got == {1: "a", 2: "b"}
-
-
-def test_dispatcher_env_knob_forces_fold(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_IVF_KERNEL", "0")
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").limit(50)
-    c = emb.select(F.col("vec_id").alias("corpus_id"), _as_double("embedding").alias("cvec"))
-    assigned, _, _ = _assign_cells_best(c, "cvec", md5_centroids(emb, 4))
-    plan = assigned._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "EvalPython" not in plan

@@ -1,7 +1,7 @@
 """Statement-string pins for the JDBC state-backend dialects.
 
 The Derby dialect is integration-proven (tests/test_jdbc_state.py runs
-the four algebras end-to-end against embedded Derby); MySQL — the
+the three algebras end-to-end against embedded Derby); MySQL — the
 reference's actual sink (``JdbcHelper.scala:82-137``) — has no server
 in the sandbox, so its statements are pinned here exactly: quoting,
 null-safe residuals, the two-statement upsert shape, and the
@@ -55,18 +55,6 @@ def test_mysql_accumulate_is_update_join_then_insert_not_exists():
     )
 
 
-def test_mysql_overwrite_sets_data_cols_only():
-    stmts = MY.upsert_overwrite(
-        "st", "st_stage", ["k"], ["v", "__kh"], ["k", "v", "__kh"]
-    )
-    assert len(stmts) == 2
-    assert stmts[0].startswith("UPDATE st t JOIN st_stage s ON ")
-    assert "SET t.`v` = s.`v`, t.`__kh` = s.`__kh`" in stmts[0]
-    # the key column is matched, never SET
-    assert "SET t.`k`" not in stmts[0]
-    assert stmts[1].startswith("INSERT INTO st (`k`, `v`, `__kh`) ")
-
-
 def test_mysql_distinct_append_is_insert_only():
     stmts = MY.insert_missing("bl", "bl_stage", ["user_id"], ["user_id", "__epoch", "__kh"])
     assert len(stmts) == 1
@@ -92,17 +80,14 @@ def test_mysql_ddl_is_idempotent_via_if_not_exists():
         "(epoch BIGINT NOT NULL PRIMARY KEY)"
     )
     assert MY.create_kh_index("st") == "CREATE INDEX st_kh_idx ON st(`__kh`)"
-    assert MY.add_column("st", "__epoch", "BIGINT DEFAULT -1") == (
-        "ALTER TABLE st ADD COLUMN `__epoch` BIGINT DEFAULT -1"
-    )
 
 
 def test_mysql_error_markers():
     # 1062 duplicate entry = epoch already applied (replay skip);
-    # 1146 = table missing on first read; 1050/1061/1060 = lazy DDL
+    # 1146 = table missing on first read; 1050/1061 = lazy DDL
     assert "1062" in MY.dup_key_markers
     assert "1146" in MY.missing_table_markers
-    for code in ("1050", "1061", "1060"):
+    for code in ("1050", "1061"):
         assert code in MY.exists_ok_markers
 
 
@@ -123,7 +108,7 @@ def test_kh_stages_at_index_safe_width():
     dtypes = [("k", "string"), ("n", "bigint"), ("__kh", "string")]
     assert stage_column_types(dtypes, MY) == "k VARCHAR(1024), __kh VARCHAR(32)"
     # Derby takes the same width: the staged digest never exceeds 32
-    # chars, and the migration path (add_column VARCHAR(32)) agrees.
+    # chars.
     assert stage_column_types(dtypes, DB) == "k VARCHAR(1024), __kh VARCHAR(32)"
 
 

@@ -86,14 +86,8 @@ def test_accumulate_merge_replay_and_kh_index(spark, backend):
     assert got == {("a", 13), ("b", 5), ("c", 1), (None, 7)}
 
 
-def test_overwrite_and_distinct_append(spark, backend):
-    _drop(spark, ["t_live_ow", "t_live_bl"])
-    ow = backend.overwrite_sink("t_live_ow", ["k"])
-    ow(_counts(spark, [("a", 1), ("b", 2)]), 0)
-    ow(_counts(spark, [("a", 9)]), 1)
-    got = {(r.k, r.v) for r in backend.read_state("t_live_ow").collect()}
-    assert got == {("a", 9), ("b", 2)}
-
+def test_distinct_append(spark, backend):
+    _drop(spark, ["t_live_bl"])
     bl = backend.distinct_append_sink("t_live_bl", ["k"])
     bl(_counts(spark, [("u1", 0), ("u1", 0), ("u2", 0)]), 0)
     bl(_counts(spark, [("u2", 0), ("u3", 0)]), 1)

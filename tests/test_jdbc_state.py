@@ -1,4 +1,4 @@
-"""JDBC MERGE state backend against embedded Derby: the four DAO
+"""JDBC MERGE state backend against embedded Derby: the three DAO
 merge algebras (reference ``JdbcHelper.scala:21-389``) applied as
 stage + set-based MERGE, with epoch-ledger replay idempotency, and
 parity with the parquet epoch sinks on identical batch sequences."""
@@ -64,15 +64,6 @@ def test_distinct_append_never_duplicates(spark, tmp_path):
     sink(_counts(spark, [("u2", 0), ("u3", 0)]), 1)
     got = sorted(r.k for r in be.read_state("t_bl").collect())
     assert got == ["u1", "u2", "u3"]
-
-
-def test_overwrite_updates_matched_keys(spark, tmp_path):
-    be = _backend(spark, tmp_path, "ovw")
-    sink = be.overwrite_sink("t_ovw", ["k"])
-    sink(_counts(spark, [("a", 1), ("b", 2)]), 0)
-    sink(_counts(spark, [("a", 99), ("c", 3)]), 1)
-    got = {(r.k, r.v) for r in be.read_state("t_ovw").collect()}
-    assert got == {("a", 99), ("b", 2), ("c", 3)}
 
 
 def test_replace_partition_deletes_then_inserts(spark, tmp_path):
@@ -210,36 +201,3 @@ def test_merge_sinks_fold_null_keys(spark, tmp_path):
     bl(_counts(spark, [(None, 0), ("u1", 0)]), 0)
     bl(_counts(spark, [(None, 0)]), 1)
     assert {r.k for r in be.read_state("t_null_bl").collect()} == {None, "u1"}
-
-
-def test_overwrite_sink_rejects_key_only_batch(spark, tmp_path):
-    import pytest as _pytest
-
-    be = _backend(spark, tmp_path, "keyonly")
-    sink = be.overwrite_sink("t_keys", ["k", "v"])
-    with _pytest.raises(ValueError, match="non-key"):
-        sink(_counts(spark, [("a", 1)]), 0)
-
-
-def test_distinct_append_migrates_legacy_table(spark, tmp_path):
-    """A blacklist table created by pre-epoch-stamp code gains the
-    __epoch column on first write (DEFAULT -1: legacy rows predate all
-    epochs, so they appear in every before_epoch view)."""
-    be = _backend(spark, tmp_path, "legacy")
-    legacy = spark.createDataFrame([("u0", 0)], "k string, v long").select("k")
-    stage = be._stage(legacy, "t_leg")
-    conn = be._connect()
-    try:
-        st = conn.createStatement()
-        st.executeUpdate(f"CREATE TABLE t_leg AS SELECT * FROM {stage} WITH NO DATA")
-        st.executeUpdate(f"INSERT INTO t_leg SELECT * FROM {stage}")
-    finally:
-        conn.close()
-
-    sink = be.distinct_append_sink("t_leg", ["k"])
-    sink(_counts(spark, [("u1", 0)]), 5)
-    sink(_counts(spark, [("u2", 0)]), 6)  # migration DDL must be idempotent
-
-    assert {r.k for r in be.read_state("t_leg").collect()} == {"u0", "u1", "u2"}
-    assert {r.k for r in be.read_state("t_leg", before_epoch=5).collect()} == {"u0"}
-    assert {r.k for r in be.read_state("t_leg", before_epoch=6).collect()} == {"u0", "u1"}

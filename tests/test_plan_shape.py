@@ -110,8 +110,10 @@ def test_aqe_splits_skewed_join_partitions(spark):
     the executed plan marks the sort-merge join skew=true. Thresholds
     are lowered to make the local toy skew qualify; at production
     sizes the defaults (256MB/5x median) fire on real skew. This plus
-    operators/salted.py (aggregation-side) and key_skew_report (the
-    diagnostic) is the engine's complete skew story."""
+    the map-side partial aggregate (aggregation-side: a hot key
+    reaches the shuffle as one partial per map task) and
+    operators/salted.key_skew_report (the diagnostic) is the engine's
+    complete skew story."""
     from pyspark.sql import functions as F
 
     hot = spark.range(0, 200_000).select(

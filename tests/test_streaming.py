@@ -108,7 +108,7 @@ def stream_result(spark):
 def test_cumulative_state_matches_batch(spark, stream_result):
     events = stream_result["events"]
     handles = stream_result["handles"]
-    got = sinks.read_state(spark, handles.cumulative_dir)
+    got = handles.backend.read_state("cumulative")
     expected = events.groupBy("event_date", "province", "city", "ad_id").agg(
         F.count(F.lit(1)).alias("click_count")
     )
@@ -118,7 +118,7 @@ def test_cumulative_state_matches_batch(spark, stream_result):
 def test_user_counts_accumulate_across_batches(spark, stream_result):
     events = stream_result["events"]
     handles = stream_result["handles"]
-    got = sinks.read_state(spark, handles.user_counts_dir)
+    got = handles.backend.read_state("user_counts")
     expected = events.groupBy("event_date", "user_id", "ad_id").agg(
         F.count(F.lit(1)).alias("click_count")
     )
@@ -128,7 +128,7 @@ def test_user_counts_accumulate_across_batches(spark, stream_result):
 def test_blacklist_matches_batch_threshold(spark, stream_result):
     events = stream_result["events"]
     handles = stream_result["handles"]
-    got = {r.user_id for r in sinks.read_state(spark, handles.blacklist_dir).collect()}
+    got = {r.user_id for r in handles.backend.read_state("blacklist").collect()}
     expected = {
         r.user_id
         for r in events.groupBy("event_date", "user_id", "ad_id")
@@ -145,7 +145,7 @@ def test_blacklist_matches_batch_threshold(spark, stream_result):
 def test_province_top3_matches_batch(spark, stream_result):
     events = stream_result["events"]
     handles = stream_result["handles"]
-    got = sinks.read_state(spark, handles.top3_dir)
+    got = handles.backend.read_state("top3")
     counts = events.groupBy("event_date", "province", "ad_id").agg(
         F.count(F.lit(1)).alias("click_count")
     )
@@ -158,7 +158,7 @@ def test_province_top3_matches_batch(spark, stream_result):
 def test_trend_windows_match_batch(spark, stream_result):
     events = stream_result["events"]
     handles = stream_result["handles"]
-    got = sinks.read_state(spark, handles.trend_dir)
+    got = handles.backend.read_state("trend")
     expected = (
         events.groupBy(F.window("event_time", "60 minutes", "1 minute"), "ad_id")
         .agg(F.count(F.lit(1)).alias("click_count"))
@@ -178,11 +178,11 @@ def test_blacklisted_user_later_clicks_excluded(spark, stream_result):
     9999 is blacklisted after batch 2, so the two batch-3 burst clicks
     in the source must not reach user_counts/cumulative state."""
     handles = stream_result["handles"]
-    uc = sinks.read_state(spark, handles.user_counts_dir)
+    uc = handles.backend.read_state("user_counts")
     assert uc.where(F.col("user_id") == 9999).agg(
         F.sum("click_count")
     ).collect()[0][0] == 4  # 6 written to the source, 2 post-blacklist
-    cum = sinks.read_state(spark, handles.cumulative_dir)
+    cum = handles.backend.read_state("cumulative")
     assert cum.where(
         (F.col("province") == "p9") & (F.col("city") == "c99")
     ).agg(F.sum("click_count")).collect()[0][0] == 4
@@ -365,7 +365,7 @@ def test_ad_pipeline_soak_six_batches_with_midrun_restart(spark, tmp_path):
         [tuple(r) for r in rows] + [burst_row] * 4, ad_stream.AD_EVENT_SCHEMA
     ).cache()
     try:
-        got_counts = sinks.read_state(spark, resumed.user_counts_dir)
+        got_counts = resumed.backend.read_state("user_counts")
         want_counts = events.groupBy("event_date", "user_id", "ad_id").agg(
             F.count(F.lit(1)).alias("click_count")
         )
@@ -373,7 +373,7 @@ def test_ad_pipeline_soak_six_batches_with_midrun_restart(spark, tmp_path):
             map(tuple, want_counts.collect())
         )
 
-        got_cum = sinks.read_state(spark, resumed.cumulative_dir)
+        got_cum = resumed.backend.read_state("cumulative")
         want_cum = events.groupBy("event_date", "province", "city", "ad_id").agg(
             F.count(F.lit(1)).alias("click_count")
         )
@@ -381,7 +381,7 @@ def test_ad_pipeline_soak_six_batches_with_midrun_restart(spark, tmp_path):
             map(tuple, want_cum.collect())
         )
 
-        bl = {r.user_id for r in sinks.read_state(spark, resumed.blacklist_dir).collect()}
+        bl = {r.user_id for r in resumed.backend.read_state("blacklist").collect()}
         want_bl = {
             r.user_id
             for r in events.groupBy("event_date", "user_id", "ad_id")
@@ -391,7 +391,7 @@ def test_ad_pipeline_soak_six_batches_with_midrun_restart(spark, tmp_path):
         }
         assert bl == want_bl and 9999 in bl
 
-        got_top3 = sinks.read_state(spark, resumed.top3_dir)
+        got_top3 = resumed.backend.read_state("top3")
         counts = events.groupBy("event_date", "province", "ad_id").agg(
             F.count(F.lit(1)).alias("click_count")
         )
@@ -405,7 +405,7 @@ def test_ad_pipeline_soak_six_batches_with_midrun_restart(spark, tmp_path):
             map(tuple, want_top3.collect())
         )
 
-        got_trend = sinks.read_state(spark, resumed.trend_dir)
+        got_trend = resumed.backend.read_state("trend")
         want_trend = (
             events.groupBy(F.window("event_time", "60 minutes", "1 minute"), "ad_id")
             .agg(F.count(F.lit(1)).alias("click_count"))
@@ -498,7 +498,7 @@ def test_trigger_sizing_throughput_ordering(spark, tmp_path):
         handles.stop()
         # same rows landed either way — the ordering claim is about
         # wall time, not output (which the stream_result twins pin)
-        assert sinks.read_state(spark, handles.user_counts_dir).count() == 10
+        assert handles.backend.read_state("user_counts").count() == 10
         return wall
 
     slow = run(1)   # 10 micro-batches
