@@ -183,9 +183,12 @@ def baseline_comparable(baseline: dict, cpus: int) -> bool:
     ``cpus`` cores: the baseline's provenance protocol names the
     ``local[N]`` it was recorded at, and a different N changes every
     query's parallelism. A baseline that names no N is taken as
-    comparable."""
-    protocol = baseline.get("provenance", {}).get("protocol", "")
-    m = re.search(r"local\[(\d+)\]", protocol)
+    comparable. The provenance's own ``cpus`` field, when present, is
+    preferred over the protocol string."""
+    prov = baseline.get("provenance", {})
+    if "cpus" in prov:
+        return prov["cpus"] == cpus
+    m = re.search(r"local\[(\d+)\]", prov.get("protocol", ""))
     return m is None or int(m.group(1)) == cpus
 
 
@@ -467,7 +470,10 @@ def rebaseline(n_warm: int = 5, names: list[str] | None = None) -> None:
     stalls multi-second at random: a storm spanning a query's whole
     shot window poisons its median; every other entry is fine, so a
     full re-run would risk trading one storm for another). The merged
-    file keeps both entries' shots for audit."""
+    file keeps both entries' shots for audit: the new shots are appended
+    to the prior ones, and ``provenance.entries`` gains one record per
+    re-time (head, timestamp, number of shots), so the flat shot list
+    splits back into its recordings."""
     import statistics
     import subprocess
 
@@ -480,6 +486,7 @@ def rebaseline(n_warm: int = 5, names: list[str] | None = None) -> None:
     queries: dict[str, float] = {}
     plan_fp: dict[str, str] = {}
     shots_log: dict[str, list[float]] = {}
+    entries: dict[str, list[dict]] = {}
     path = REPO / "BENCH_BASELINE.json"
     if names is not None:
         prior = json.loads(path.read_text())
@@ -489,6 +496,14 @@ def rebaseline(n_warm: int = 5, names: list[str] | None = None) -> None:
         queries = prior["queries"]
         plan_fp = prior.get("plan_fp", {})
         shots_log = prior.get("shots", {})
+        entries = prior.get("provenance", {}).get("entries", {})
+    try:
+        head = subprocess.run(
+            ["git", "rev-parse", "--short", "HEAD"],
+            capture_output=True, text=True, cwd=REPO,
+        ).stdout.strip() or "unknown"
+    except OSError:
+        head = "unknown"
     for name in names if names is not None else headline_names():
         fn = ALL_QUERIES[name]
         shots = []
@@ -498,15 +513,14 @@ def rebaseline(n_warm: int = 5, names: list[str] | None = None) -> None:
             shots.append(t)
         queries[name] = round(statistics.median(shots[1:]), 3)  # cold shot discarded
         plan_fp[name] = fp
-        shots_log[name] = shots
+        shots_log[name] = shots_log.get(name, []) + shots
+        entries.setdefault(name, []).append({
+            "head": head,
+            "recorded_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "shots": len(shots),
+        })
         print(f"  {name}: {queries[name]} (shots: {shots})", file=sys.stderr)
-    try:
-        head = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, cwd=REPO,
-        ).stdout.strip()
-    except OSError:
-        head = "unknown"
+    cpus = spark.sparkContext.defaultParallelism
     out = {
         "metric": "catalog_suite_wall",
         "value": round(sum(queries.values()), 3),
@@ -523,9 +537,11 @@ def rebaseline(n_warm: int = 5, names: list[str] | None = None) -> None:
                 "round-13 cold-honest protocol); timed region = collect "
                 "only (build/plan/fingerprint excluded — "
                 "bench.time_query); quiet box, "
-                f"local[{spark.sparkContext.defaultParallelism}]"
+                f"local[{cpus}]"
             ),
+            "cpus": cpus,
             "recorded_at_head": head,
+            "entries": entries,
             "replaces": (
                 "round-11 warm-protocol baseline (git history; "
                 "originally round-1 per-query best-of, BENCH_BASELINE_r1.json)"

@@ -17,8 +17,6 @@ Scale shape:
 - ONE full-outer shuffle equi-join on the key columns — both sides
   hash-partition on the same key set, so Spark co-partitions them in
   a single exchange each, and AQE's skew-join split applies as usual.
-  Snapshots of the same table written with the same bucketing
-  (`sources/bucketing.py`) join with zero exchanges.
 - Unchanged rows (the overwhelming majority between adjacent
   snapshots) are dropped by a null-safe column comparison BEFORE any
   further operator sees them, so the change feed is |delta|-sized.

@@ -52,6 +52,54 @@ def test_baseline_ratios_only_at_the_baseline_cores():
     # a baseline that names no local[N] keeps the ratios
     assert baseline_comparable({"queries": {}}, 4)
     assert baseline_comparable({"provenance": {"protocol": "best of 3"}}, 4)
+    # the provenance's cpus field wins over the protocol string
+    both = {"provenance": {"protocol": "quiet box, local[32]", "cpus": 4}}
+    assert baseline_comparable(both, 4) and not baseline_comparable(both, 32)
+
+
+def test_rebaseline_only_appends_shots_with_provenance(tmp_path, monkeypatch):
+    """``rebaseline(names=...)`` re-times only the named queries: their
+    new shots follow the prior ones, each re-time adds a provenance
+    entry (head, timestamp, shot count), and the provenance names the
+    session's cores. Spark and the timer are stubbed."""
+    import bench
+
+    prior = {
+        "metric": "catalog_suite_wall", "value": 3.0, "unit": "sec",
+        "queries": {"a": 1.0, "b": 2.0}, "sf": 0.1,
+        "plan_fp": {"a": "fa", "b": "fb"},
+        "shots": {"a": [1.0, 1.0, 1.0], "b": [2.0, 2.0, 2.0]},
+        "provenance": {"protocol": "old protocol, local[32]"},
+    }
+    (tmp_path / "BENCH_BASELINE.json").write_text(json.dumps(prior))
+
+    class _Context:
+        defaultParallelism = 4
+
+    class _Spark:
+        sparkContext = _Context()
+
+        def stop(self):
+            pass
+
+    shots = iter([9.0, 0.5, 0.7, 0.6])
+    monkeypatch.setattr(bench, "REPO", tmp_path)
+    monkeypatch.setattr(bench, "ALL_QUERIES", {"a": None, "b": None})
+    monkeypatch.setattr(bench, "get_spark", lambda **kw: _Spark())
+    monkeypatch.setattr(bench, "warm_session", lambda spark, sf_dir: None)
+    monkeypatch.setattr(bench, "time_query", lambda fn, spark, sf_dir: (next(shots), "fa2"))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path / "sf0.1"))
+    bench.rebaseline(n_warm=3, names=["a"])
+
+    out = json.loads((tmp_path / "BENCH_BASELINE.json").read_text())
+    assert out["queries"] == {"a": 0.6, "b": 2.0} and out["value"] == 2.6
+    assert out["shots"] == {"a": [1.0, 1.0, 1.0, 9.0, 0.5, 0.7, 0.6], "b": [2.0, 2.0, 2.0]}
+    assert out["plan_fp"] == {"a": "fa2", "b": "fb"}
+    (entry,) = out["provenance"]["entries"]["a"]
+    assert entry["shots"] == 4 and entry["head"] and entry["recorded_at"].endswith("Z")
+    assert "b" not in out["provenance"]["entries"]
+    assert out["provenance"]["cpus"] == 4
+    assert baseline_comparable(out, 4) and not baseline_comparable(out, 32)
 
 
 def test_plan_noise_drops_the_checkout_path():

@@ -35,6 +35,13 @@ ALLOWED_ENV = {
     "threshold; deployments with heavy collect_list state lower it",
     "SPARK_GRAFT_MIN_PARTITION_SIZE": "AQE coalesce floor; clusters that "
     "prefer fewer, larger tasks raise it",
+    "SPARK_HOME": "the Spark install whose conf directory must hold only "
+    "templates before the driver JVM's CDS archive applies, and whose jars "
+    "key that archive",
+    "SPARK_CONF_DIR": "a caller's own conf directory turns the CDS archive "
+    "off; otherwise it points at an empty directory for the JVM launch only",
+    "JAVA_HOME": "the JVM spark-class runs, whose install keys the CDS "
+    "archive so a JDK upgrade dumps a fresh one",
 }
 
 

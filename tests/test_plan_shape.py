@@ -1,7 +1,7 @@
 """Plan-shape regression tests: the properties that make queries
 survive a 100x scale-up, asserted against the optimized/executed
 plans rather than assumed (partition pruning has its own test in
-test_commerce.py; bucketing in test_bucketing.py)."""
+test_commerce.py)."""
 
 from __future__ import annotations
 

@@ -50,7 +50,6 @@ KEPT_MODULES = {
 DEFERRED_MODULES = {
     f"{PKG}.operators.bpe": "only subject of tests/test_bpe.py (9 tests)",
     f"{PKG}.operators.graph": "PageRank; only subject of 5 tests in tests/test_graph.py",
-    f"{PKG}.sources.bucketing": "only subject of tests/test_bucketing.py (2 tests)",
     f"{PKG}.sources.compaction": "only subject of 3 tests in "
     "tests/test_formats.py and tests/test_dataops.py",
     f"{PKG}.sources.formats": "only subject of 6 tests in tests/test_formats.py",
