@@ -445,7 +445,7 @@ def _run_suite() -> dict:
     return out
 
 
-def rebaseline(n_warm: int = 5, names: list[str] | None = None) -> None:
+def rebaseline(names: list[str] | None = None) -> None:
     """Record a fresh BENCH_BASELINE.json (VERDICT r11 item 2): the
     round-1 baseline was a per-query best-of that accumulated three
     pinned "the baseline was a lucky shot" bands and ±50% plan-stable
@@ -453,7 +453,7 @@ def rebaseline(n_warm: int = 5, names: list[str] | None = None) -> None:
     signal the 2x regression gate carries. Protocol: same pinned
     query set and warmups as the headline run; per query ONE
     discarded first shot (absorbs per-query codegen/JIT), then
-    ``n_warm`` timed shots via ``time_query`` (collect-only timed
+    five timed shots via ``time_query`` (collect-only timed
     region; since round 13 every shot is data-cache-cold — see
     ``reset_caches``), recording the MEDIAN of the timed shots — not the
     min, which just re-creates the lucky-shot denominator (measured:
@@ -508,7 +508,7 @@ def rebaseline(n_warm: int = 5, names: list[str] | None = None) -> None:
         fn = ALL_QUERIES[name]
         shots = []
         fp = None
-        for _ in range(n_warm + 1):
+        for _ in range(5 + 1):
             t, fp = time_query(fn, spark, sf_dir)
             shots.append(t)
         queries[name] = round(statistics.median(shots[1:]), 3)  # cold shot discarded
@@ -531,7 +531,7 @@ def rebaseline(n_warm: int = 5, names: list[str] | None = None) -> None:
         "shots": shots_log,
         "provenance": {
             "protocol": (
-                f"median of {n_warm} data-cache-cold shots per query "
+                "median of 5 data-cache-cold shots per query "
                 "after one discarded warmup shot; every shot resets the "
                 "persist registry + catalog cache (bench.reset_caches, "
                 "round-13 cold-honest protocol); timed region = collect "

@@ -32,12 +32,12 @@ def fan_out(df, min_parallelism: int | None = None):
     return df
 
 
-def nullif_sentinel(col: Column | str, sentinel: int = -1) -> Column:
+def nullif_sentinel(col: Column | str) -> Column:
     """``-1``-as-null compat: reference uses Long -1 / String null
     sentinels (``MockDataGenerate.scala:58-64``); the engine uses real
     NULLs at the boundary."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.nullif(c, F.lit(sentinel))
+    return F.nullif(c, F.lit(-1))
 
 
 def csv_to_array(col: Column | str) -> Column:
@@ -58,7 +58,7 @@ def csv_to_array(col: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def money_sum(col: Column, scale: int = 2) -> Column:
+def money_sum(col: Column) -> Column:
     """Order-insensitive, bit-stable sum of a money-like double.
 
     Summing doubles is order-dependent, so a Spark sum and a DuckDB
@@ -72,7 +72,7 @@ def money_sum(col: Column, scale: int = 2) -> Column:
     the ingest gate (operators/validate.finite), not a job abort in
     every downstream aggregate.
     """
-    return F.round(F.sum(col.cast("decimal(30,8)")), scale).cast("double")
+    return F.round(F.sum(col.cast("decimal(30,8)")), 2).cast("double")
 
 
 def money_dec(col: Column) -> Column:
@@ -91,22 +91,22 @@ def money_dec(col: Column) -> Column:
     return col.cast("decimal(30,8)")
 
 
-def money_sum_dec(col: Column, scale: int = 2) -> Column:
+def money_sum_dec(col: Column) -> Column:
     """``money_sum`` over a column already bound via ``money_dec``."""
-    return F.round(F.sum(col), scale).cast("double")
+    return F.round(F.sum(col), 2).cast("double")
 
 
-def money_avg_dec(dec_col: Column, raw_col: Column, scale: int = 6) -> Column:
+def money_avg_dec(dec_col: Column, raw_col: Column) -> Column:
     """``money_avg`` over a column already bound via ``money_dec``.
     The count divisor is the RAW column, exactly as money_avg counts
     it: a NaN/Inf addend becomes NULL in the decimal cast (skipped by
     the sum) but is a non-NULL double the original COUNT(col) still
     counts — dividing by COUNT(dec_col) would silently change the avg
     on corrupt rows."""
-    return F.round(F.sum(dec_col).cast("double") / F.count(raw_col), scale)
+    return F.round(F.sum(dec_col).cast("double") / F.count(raw_col), 6)
 
 
-def money_avg(col: Column, scale: int = 6) -> Column:
+def money_avg(col: Column) -> Column:
     """Exact-decimal sum -> double division -> deterministic rounding.
 
     (Dividing the *exact* sum keeps the whole computation bit-stable
@@ -114,7 +114,7 @@ def money_avg(col: Column, scale: int = 6) -> Column:
     dialects, double division does not.)
     """
     return F.round(
-        F.sum(col.cast("decimal(30,8)")).cast("double") / F.count(col), scale
+        F.sum(col.cast("decimal(30,8)")).cast("double") / F.count(col), 6
     )
 
 
@@ -157,10 +157,10 @@ def bucket_flag(col: Column, lo: int | None, hi: int | None) -> Column:
     return F.when(cond, F.lit(1)).otherwise(F.lit(0))
 
 
-def ratio(numer: Column, denom: Column, scale: int = 2) -> Column:
+def ratio(numer: Column, denom: Column) -> Column:
     """HALF_UP-style rounded ratio (reference ``Utils.formatDouble``,
     ``Utils.scala:156-168``); 0.0 when the denominator is empty."""
-    return F.when(denom == 0, F.lit(0.0)).otherwise(F.round(numer / denom, scale))
+    return F.when(denom == 0, F.lit(0.0)).otherwise(F.round(numer / denom, 2))
 
 
 def require_integer_id(df, id_col: str, context: str = "id column") -> None:

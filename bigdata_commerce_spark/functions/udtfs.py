@@ -69,13 +69,7 @@ def make_chunk_udtf(chunk_tokens: int = 256, overlap: int = 32):
     return udtf(ChunkDocuments, returnType=schema, useArrow=True)
 
 
-def chunk_documents_udtf(
-    df: DataFrame,
-    chunk_tokens: int = 256,
-    overlap: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def chunk_documents_udtf(df: DataFrame) -> DataFrame:
     """UDTF-backed document chunking: LATERAL-join the generator
     against each document row. Output schema and values are identical
     to operators/text.chunk_documents (asserted in tests): (doc_id,
@@ -87,8 +81,8 @@ def chunk_documents_udtf(
     the explode in the expression form.
     """
     spark = df.sparkSession
-    fn_name = f"__chunk_udtf_{chunk_tokens}_{overlap}"
-    spark.udtf.register(fn_name, make_chunk_udtf(chunk_tokens, overlap))
+    fn_name = "__chunk_udtf_256_32"
+    spark.udtf.register(fn_name, make_chunk_udtf(256, 32))
     # Per-call unique view name: a geometry-derived name would race
     # concurrent callers (B's createOrReplaceTempView swapping the
     # frame under A's sql()). spark.sql analyzes EAGERLY, so the view
@@ -98,11 +92,11 @@ def chunk_documents_udtf(
         global _VIEW_SEQ
         _VIEW_SEQ += 1
         view = f"__chunk_udtf_in_{_VIEW_SEQ}"
-        df.select(id_col, text_col).createOrReplaceTempView(view)
+        df.select("doc_id", "text").createOrReplaceTempView(view)
         try:
             return spark.sql(
-                f"SELECT v.`{id_col}`, c.chunk_no, c.chunk_n_tokens, c.chunk_text "
-                f"FROM {view} AS v, LATERAL {fn_name}(v.`{text_col}`) AS c"
+                "SELECT v.`doc_id`, c.chunk_no, c.chunk_n_tokens, c.chunk_text "
+                f"FROM {view} AS v, LATERAL {fn_name}(v.`text`) AS c"
             )
         finally:
             spark.catalog.dropTempView(view)

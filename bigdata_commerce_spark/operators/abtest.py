@@ -36,8 +36,6 @@ def conversion_chi2(
     population: DataFrame,
     exposures: DataFrame,
     conversions: DataFrame,
-    key_col: str = "user_id",
-    group_col: str = "campaign",
 ) -> DataFrame:
     """Per-campaign report: ``(campaign, exposed, converted_exposed,
     rate_exposed, rate_rest, chi2, significant)`` plus the population
@@ -48,23 +46,23 @@ def conversion_chi2(
     events (multi-exposure collapses); ``conversions`` rows are user
     events. Degenerate margins (every user exposed, zero or all
     converted) yield NULL chi2 rather than a division error."""
-    users = population.select(key_col).distinct()
-    exp_u = exposures.select(group_col, key_col).distinct()
+    users = population.select("user_id").distinct()
+    exp_u = exposures.select("campaign", "user_id").distinct()
     conv_u = (
-        conversions.select(key_col)
+        conversions.select("user_id")
         .distinct()
         .withColumn("__conv", F.lit(1))
     )
-    flags = users.join(conv_u, key_col, "left").select(
-        key_col, F.coalesce(F.col("__conv"), F.lit(0)).alias("__conv")
+    flags = users.join(conv_u, "user_id", "left").select(
+        "user_id", F.coalesce(F.col("__conv"), F.lit(0)).alias("__conv")
     )
     tot = flags.agg(
         F.count(F.lit(1)).alias("n_users"),
         F.sum("__conv").alias("n_converted"),
     )
     per = (
-        exp_u.join(flags, key_col)
-        .groupBy(group_col)
+        exp_u.join(flags, "user_id")
+        .groupBy("campaign")
         .agg(
             F.count(F.lit(1)).alias("exposed"),
             F.sum("__conv").alias("converted_exposed"),
@@ -83,7 +81,7 @@ def conversion_chi2(
     den = e * (n - e) * c * (n - c)
     chi2 = F.when(den > 0, F.round(n * x * x / den, 8))
     return per.select(
-        group_col,
+        "campaign",
         "exposed",
         "converted_exposed",
         F.round(a * F.lit(1.0) / e, 8).alias("rate_exposed"),

@@ -41,7 +41,6 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     payload_cols: Sequence[str],
-    prefix: str = "asof_",
     bucket_seconds: int | None = None,
 ) -> DataFrame:
     """For every left row, attach the right row with the greatest
@@ -50,7 +49,7 @@ def asof_join(
     payloads).
 
     ``payload_cols`` are carried from the right side, renamed with
-    ``prefix``. Right rows that tie on (key, ts) are deduplicated to
+    the ``asof_`` prefix. Right rows that tie on (key, ts) are deduplicated to
     the one with the lexicographically greatest payload struct so the
     result is deterministic.
 
@@ -96,8 +95,8 @@ def asof_join(
 
     out = filled.where(F.col("__side") == 1).select(
         *[F.col(f"__row.{c}").alias(c) for c in left.columns],
-        *[F.col(f"__last.{c}").alias(f"{prefix}{c}") for c in payload_cols],
-        F.col("__last.__ts").alias(f"{prefix}ts"),
+        *[F.col(f"__last.{c}").alias(f"asof_{c}") for c in payload_cols],
+        F.col("__last.__ts").alias("asof_ts"),
     )
     return out
 

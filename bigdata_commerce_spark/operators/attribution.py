@@ -29,45 +29,33 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def multitouch_attribution(
-    touches: DataFrame,
-    conversions: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    touch_id_col: str = "event_id",
-    conv_id_col: str = "event_id",
-    value_col: str = "value",
-    channel_col: str = "channel",
-    lookback_days: int = 7,
-    first_last_weight: float = 0.4,
-    middle_total: float = 0.2,
-) -> DataFrame:
+def multitouch_attribution(touches: DataFrame, conversions: DataFrame) -> DataFrame:
     """Per-channel attribution rollup: ``(channel, n_touches,
     n_first, n_last, n_conversions, attributed_value)``.
 
     A touch participates in a conversion when it is strictly before
-    the conversion and within ``lookback_days`` of it; every
+    the conversion and within 7 days of it; every
     qualifying (touch, conversion) pair receives a position weight
-    (U-shaped: ``first_last_weight`` at the ends, ``middle_total``
+    (U-shaped: 0.4 at the ends, 0.2 in total
     split evenly across the middle; 1.0 / 0.5 for singleton/pair
     paths). Ties on the touch timestamp break on the touch id."""
     t = touches.select(
-        F.col(key_col).alias("__k"),
-        F.col(ts_col).alias("__t_ts"),
-        F.col(touch_id_col).alias("__touch_id"),
-        F.col(channel_col).alias("channel"),
+        F.col("user_id").alias("__k"),
+        F.col("ts").alias("__t_ts"),
+        F.col("event_id").alias("__touch_id"),
+        F.col("channel").alias("channel"),
     )
     c = conversions.select(
-        F.col(key_col).alias("__k"),
-        F.col(ts_col).alias("__c_ts"),
-        F.col(conv_id_col).alias("__conv_id"),
-        F.col(value_col).alias("__value"),
+        F.col("user_id").alias("__k"),
+        F.col("ts").alias("__c_ts"),
+        F.col("event_id").alias("__conv_id"),
+        F.col("value").alias("__value"),
     )
     j = t.join(c, "__k").where(
         (F.col("__t_ts") < F.col("__c_ts"))
         & (
             F.col("__t_ts")
-            >= F.col("__c_ts") - F.expr(f"INTERVAL {lookback_days} DAYS")
+            >= F.col("__c_ts") - F.expr("INTERVAL 7 DAYS")
         )
     )
     w_rank = Window.partitionBy("__conv_id").orderBy("__t_ts", "__touch_id")
@@ -79,8 +67,8 @@ def multitouch_attribution(
     weight = (
         F.when(n == 1, F.lit(1.0))
         .when(n == 2, F.lit(0.5))
-        .when((rnk == 1) | (rnk == n), F.lit(first_last_weight))
-        .otherwise(F.lit(middle_total) / (n - F.lit(2)))
+        .when((rnk == 1) | (rnk == n), F.lit(0.4))
+        .otherwise(F.lit(0.2) / (n - F.lit(2)))
     )
     attr = ranked.withColumn(
         "__credit", F.round(F.col("__value") * weight, 8)

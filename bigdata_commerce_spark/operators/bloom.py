@@ -153,12 +153,10 @@ def bloom_might_contain(
 
 
 def _build_for_keys(
-    keys: DataFrame, key_col: str, fpp: float, n_items: int | None
+    keys: DataFrame, key_col: str, fpp: float
 ) -> tuple[DataFrame, int, int]:
-    if n_items is None:
-        # one count action over the (small) key side; pass n_items to
-        # skip it when the cardinality is already known
-        n_items = keys.where(F.col(key_col).isNotNull()).count()
+    # one count action over the (small) key side sizes the filter
+    n_items = keys.where(F.col(key_col).isNotNull()).count()
     m, k = bloom_params(max(1, n_items), fpp)
     return bloom_build(keys, key_col, m, k), m, k
 
@@ -169,7 +167,6 @@ def bloom_semi_join(
     big_col: str,
     key_col: str | None = None,
     fpp: float = 0.01,
-    n_items: int | None = None,
 ) -> DataFrame:
     """EXACT left-semi join (rows of ``big`` whose key is in ``keys``)
     with a Bloom pre-filter: the filter eliminates ~(1-fpp) of the
@@ -181,7 +178,7 @@ def bloom_semi_join(
     it when it is not a cheap columnar scan.
     """
     key_col = key_col or big_col
-    bloom, m, k = _build_for_keys(keys, key_col, fpp, n_items)
+    bloom, m, k = _build_for_keys(keys, key_col, fpp)
     pruned = bloom_might_contain(big, big_col, bloom, m, k, "__maybe").where(
         F.col("__maybe")
     )
@@ -198,7 +195,6 @@ def bloom_anti_join(
     big_col: str,
     key_col: str | None = None,
     fpp: float = 0.01,
-    n_items: int | None = None,
 ) -> DataFrame:
     """EXACT left-anti join (rows of ``big`` whose key is NOT in
     ``keys``) with a Bloom pre-filter: rows the filter rejects are
@@ -213,7 +209,7 @@ def bloom_anti_join(
     scan is expensive.
     """
     key_col = key_col or big_col
-    bloom, m, k = _build_for_keys(keys, key_col, fpp, n_items)
+    bloom, m, k = _build_for_keys(keys, key_col, fpp)
     flagged = bloom_might_contain(big, big_col, bloom, m, k, "__maybe")
     definitely_absent = flagged.where(~F.col("__maybe")).drop("__maybe")
     maybe = flagged.where(F.col("__maybe")).drop("__maybe")

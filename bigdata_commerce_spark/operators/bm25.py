@@ -6,6 +6,7 @@ retrieval-augmented dataset curation).
 Okapi BM25 (Robertson/Sparck Jones; the Lucene-default formulation):
 
     score(D, Q) = sum_t idf(t) * tf * (k1+1) / (tf + k1*(1 - b + b*|D|/avgdl))
+    with k1 = 1.2, b = 0.75
     idf(t)      = ln(1 + (N - df + 0.5) / (df + 0.5))
 
 Scale shape (in-plan end to end):
@@ -41,11 +42,6 @@ from pyspark.sql import functions as F
 def bm25_scores(
     docs: DataFrame,
     query_terms: Sequence[str],
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    score_col: str = "bm25",
     n_docs: int | None = None,
     avgdl: float | None = None,
 ) -> DataFrame:
@@ -53,7 +49,7 @@ def bm25_scores(
     term (docs with no match are absent — join-filter semantics, the
     useful shape when the corpus dwarfs the match set). Tokenization
     is lowercase whitespace split; pre-normalize the text column for
-    anything fancier. Scores are rounded to 6 dp.
+    anything fancier. Returns (doc_id, bm25), rounded to 6 dp.
 
     Pass ``n_docs`` AND ``avgdl`` (precomputed corpus stats) to skip
     the stats scan — the production path when many queries score the
@@ -66,9 +62,9 @@ def bm25_scores(
     terms = sorted({t.lower() for t in query_terms})
 
     toks = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.filter(
-            F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != ""
+            F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != ""
         ).alias("__toks"),
     ).withColumn("__dl", F.size("__toks"))
 
@@ -86,10 +82,10 @@ def bm25_scores(
     # membership filter on the exploded term evaluates map-side,
     # before any shuffle — the load-bearing line at corpus scale
     matches = toks.select(
-        id_col, "__dl", F.explode("__toks").alias("__term")
+        "doc_id", "__dl", F.explode("__toks").alias("__term")
     ).where(F.col("__term").isin(terms))
 
-    tf = matches.groupBy(id_col, "__dl", "__term").agg(
+    tf = matches.groupBy("doc_id", "__dl", "__term").agg(
         F.count(F.lit(1)).alias("__tf")
     )
     df_ = tf.groupBy("__term").agg(F.count(F.lit(1)).alias("__df"))
@@ -100,16 +96,16 @@ def bm25_scores(
     )
     tf_term = (
         F.col("__tf")
-        * F.lit(k1 + 1.0)
+        * F.lit(2.2)
         / (
             F.col("__tf")
-            + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("__dl") / avgdl)
+            + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("__dl") / avgdl)
         )
     )
     contrib = F.round(idf * tf_term, 8).cast("decimal(20,8)")
     return (
         tf.join(F.broadcast(df_), "__term")
         .crossJoin(F.broadcast(stats))
-        .groupBy(id_col)
-        .agg(F.round(F.sum(contrib), 6).cast("double").alias(score_col))
+        .groupBy("doc_id")
+        .agg(F.round(F.sum(contrib), 6).cast("double").alias("bm25"))
     )

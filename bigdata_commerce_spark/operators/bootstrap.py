@@ -39,11 +39,11 @@ _BOOT_SALT = ":boot:"
 _MAX_W = 8  # the ~1.0e-5 tail P(Poisson(1) >= 8) collapses onto w=8
 
 
-def poisson_cdf_thresholds(max_w: int = _MAX_W) -> list[int]:
-    """floor(P(Poisson(1) <= k) * 2^60) for k = 0..max_w-1 — the
+def poisson_cdf_thresholds() -> list[int]:
+    """floor(P(Poisson(1) <= k) * 2^60) for k = 0.._MAX_W-1 — the
     integer comparison grid both engines share."""
     out, p, cdf = [], math.exp(-1.0), 0.0
-    for k in range(max_w):
+    for k in range(_MAX_W):
         cdf += p
         out.append(int(cdf * (1 << 60)))
         p /= k + 1

@@ -16,13 +16,12 @@ the VOCABULARY, not the corpus:
   distinct words — the working set for everything after.
 - Per merge iteration (all over the tiny vocab table): explode each
   word's current symbol sequence into adjacent pairs weighted by word
-  freq → one hash aggregate → global argmax (ONE row to the driver —
-  the same one-scalar-per-iteration discipline as PageRank's dangling
-  mass) → apply the merge map-side with an ``F.aggregate`` fold (the
+  freq → one hash aggregate → global argmax (ONE row to the driver
+  per iteration) → apply the merge map-side with an ``F.aggregate`` fold (the
   greedy left-to-right non-overlapping replace, entirely in codegen).
 - Lineage: each iteration nests one fold expression; a
   ``localCheckpoint`` every ``checkpoint_every`` rounds truncates it
-  (the Pregel-loop cadence, same as operators/graph.py).
+  (the Pregel-loop cadence).
 
 Determinism: ties on pair frequency break lexicographically on
 (left, right) — stated, tested, and engine-independent, so two runs
@@ -187,9 +186,8 @@ def encode_tokens(
 def train_bpe_reference(
     word_freqs: dict[str, int], num_merges: int, min_pair_freq: int = 2
 ) -> list[tuple[str, str]]:
-    """Driver-side reference implementation (the test oracle — same
-    role as the pagerank driver reference): identical semantics,
-    plain Python."""
+    """Driver-side reference implementation (the test oracle):
+    identical semantics, plain Python."""
     vocab = {
         tuple(list(w) + [EOW]): f for w, f in word_freqs.items() if w
     }

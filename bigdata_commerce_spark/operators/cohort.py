@@ -21,18 +21,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """(cohort_month, period, cohort_size, active_users,
     retention_rate) — period 0 rows carry retention 1.0 by
     construction (every cohort member is active in their first
     month)."""
     activity = events.select(
-        F.col(user_col).alias("u"),
-        F.trunc(F.col(ts_col).cast("timestamp").cast("date"), "month").alias("m"),
+        F.col("user_id").alias("u"),
+        F.trunc(F.col("ts").cast("timestamp").cast("date"), "month").alias("m"),
     ).distinct()
     cohorts = activity.groupBy("u").agg(F.min("m").alias("cohort_month"))
     joined = activity.join(cohorts, "u").select(

@@ -43,7 +43,6 @@ def concentration_report(
     df: DataFrame,
     key_col: str,
     mass_col: str,
-    top_n: int = 5,
     bucket_width: int = 1 << 20,
 ) -> DataFrame:
     """One row per key: ``(key, n_rows, mass, share, cum_share,
@@ -56,7 +55,7 @@ def concentration_report(
     fraction"). NULL keys are excluded (report what you can name);
     a zero total mass yields NULL shares rather than a division
     error. ``topn_share`` is the cumulative share at rank
-    ``min(top_n, n_keys)``.
+    ``min(5, n_keys)``.
     """
     km = df.groupBy(key_col).agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -156,7 +155,7 @@ def concentration_report(
         F.max(
             F.when(
                 F.col("mass_rank")
-                == F.least(F.lit(top_n), F.col("n_keys")),
+                == F.least(F.lit(5), F.col("n_keys")),
                 F.col("cum_share"),
             )
         ).alias("topn_share"),

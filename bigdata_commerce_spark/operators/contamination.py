@@ -31,8 +31,6 @@ def contamination_report(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per (corpus doc, benchmark doc) with any shared word n-gram:
     (corpus_id, bench_id, shared_ngrams, bench_ngrams, coverage) where
@@ -43,10 +41,10 @@ def contamination_report(
     Shingles are DISTINCT per document on both sides (dedup's
     contract), so shared_ngrams is set-intersection cardinality.
     """
-    c = _exploded_shingles(corpus, text_col, id_col, n).withColumnRenamed(
+    c = _exploded_shingles(corpus, "text", "doc_id", n).withColumnRenamed(
         "id", "corpus_id"
     )
-    b = _exploded_shingles(benchmark, text_col, id_col, n).withColumnRenamed(
+    b = _exploded_shingles(benchmark, "text", "doc_id", n).withColumnRenamed(
         "id", "bench_id"
     )
     bench_sizes = b.groupBy("bench_id").agg(F.count(F.lit(1)).alias("bench_ngrams"))

@@ -39,7 +39,6 @@ def cooccurrence_pmi(
     item_col: str,
     min_pairs: int = 1,
     cap_per_group: int | None = None,
-    salt: str = "cooc",
 ) -> DataFrame:
     """``(item_x, item_y, n_xy, n_x, n_y, pmi)`` for every unordered
     item pair co-occurring in at least ``min_pairs`` groups
@@ -67,7 +66,7 @@ def cooccurrence_pmi(
                     F.col(group_col).cast("string"),
                     F.lit(":"),
                     F.col(item_col).cast("string"),
-                    F.lit(f":{salt}"),
+                    F.lit(":cooc"),
                 )
             ),
             item_col,

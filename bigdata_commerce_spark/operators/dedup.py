@@ -30,15 +30,13 @@ from bigdata_commerce_spark.operators.text import (
 HEX_DIGITS = "0123456789abcdef"
 
 
-def exact_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Exact dedup by content fingerprint: one row per distinct
     content, the surviving (minimum) id and the duplicate count."""
     return (
-        df.select(F.col(id_col), fingerprint(text_col).alias("fp"))
+        df.select(F.col("doc_id"), fingerprint("text").alias("fp"))
         .groupBy("fp")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
     )
 
 
@@ -198,13 +196,7 @@ def jaccard_pairs(
     return _verify_jaccard_arrays(candidates, per_doc, threshold)
 
 
-def containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
+def containment_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Near-duplicate ORDERED pairs by exact shingle-set CONTAINMENT
     — Broder's second resemblance measure: C(A, B) = |A ∩ B| / |A|,
     the fraction of the CONTAINED document's shingles the container
@@ -238,7 +230,7 @@ def containment_pairs(
     # the shingle stream feeds doc-frequency, the prefix rank AND the
     # verify — bounded-registry persist (cache_util), so repeated
     # calls don't accumulate cache entries for the session lifetime
-    ex = persist_bounded(_exploded_shingles(df, text_col, id_col, n))
+    ex = persist_bounded(_exploded_shingles(df, "text", "doc_id", 3))
     doc_freq = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("id").orderBy(F.asc("df"), F.asc("shingle"))
     ranked = (
@@ -383,13 +375,7 @@ def _minhash_digest_barrier(ex: DataFrame, num_hashes: int) -> tuple[DataFrame, 
     return bound, aggs
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 8,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, num_hashes: int = 8) -> DataFrame:
     """MinHash signature per document: component i is
     min(hash_i(shingle)) over the shingle set.
 
@@ -397,16 +383,13 @@ def minhash_signatures(
     family keeps it at ceil(k/4) md5 calls per (id, shingle) row
     (bound once via _minhash_digest_barrier).
     """
-    ex = _exploded_shingles(df, text_col, id_col, n)
+    ex = _exploded_shingles(df, "text", "doc_id", 3)
     bound, aggs = _minhash_digest_barrier(ex, num_hashes)
     return bound.groupBy("id").agg(*aggs)
 
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     num_hashes: int = 8,
     bands: int = 4,
     threshold: float = 0.8,
@@ -440,7 +423,7 @@ def minhash_lsh_pairs(
     # output: the min/substring expressions are byte-identical, and
     # the verify's size(array_intersect) over the distinct per-doc
     # arrays equals the old exploded join count.
-    ex = _exploded_shingles(df, text_col, id_col, n)
+    ex = _exploded_shingles(df, "text", "doc_id", 3)
     bound, aggs = _minhash_digest_barrier(ex, num_hashes)
     per_doc = persist_bounded(
         bound.groupBy("id").agg(
@@ -525,13 +508,7 @@ def simhash(
     return summed.selectExpr("id", f"{value} AS simhash")
 
 
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs: band the 60-bit hash into 4 x 15-bit
     chunks (pigeonhole: any pair with Hamming distance <= 3 shares at
     least one chunk; the hash table is persisted — the chunk self-join
@@ -540,7 +517,7 @@ def simhash_pairs(
     bit_count(xor) — never an all-pairs comparison."""
     from bigdata_commerce_spark.operators.cache_util import persist_bounded
 
-    sh = persist_bounded(simhash(df, text_col, id_col, n))
+    sh = persist_bounded(simhash(df, "text", "doc_id", 3))
     chunks = sh.select(
         "id",
         "simhash",
@@ -580,13 +557,10 @@ def simhash_pairs(
 def similarity_join(
     left: DataFrame,
     right: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
     """Cross-TABLE fuzzy match (entity resolution): every
-    (left, right) pair whose texts have n-gram Jaccard >= threshold —
+    (left, right) pair whose texts have 3-gram Jaccard >= threshold —
     linking product titles, merchant names, near-identical documents
     across two corpora.
 
@@ -610,17 +584,17 @@ def similarity_join(
     from bigdata_commerce_spark.functions import require_integer_id
 
     for side, df in (("left", left), ("right", right)):
-        require_integer_id(df, id_col, context=f"{side} id column")
+        require_integer_id(df, "doc_id", context=f"{side} id column")
 
     def _tag(df: DataFrame, offset: int) -> DataFrame:
-        i = F.col(id_col).cast("long")
+        i = F.col("doc_id").cast("long")
         # coalesce(assert_true, 0) rides the encoding expression so
         # column pruning can never drop the guard
         guard = F.coalesce(F.assert_true(i >= 0).cast("long"), F.lit(0))
-        return df.select((i * 2 + offset + guard).alias(id_col), F.col(text_col))
+        return df.select((i * 2 + offset + guard).alias("doc_id"), F.col("text"))
 
     tagged = _tag(left, 0).unionByName(_tag(right, 1))
-    pairs = jaccard_pairs(tagged, text_col, id_col, n, threshold)
+    pairs = jaccard_pairs(tagged, "text", "doc_id", 3, threshold)
     cross = pairs.where(F.pmod("id1", F.lit(2)) != F.pmod("id2", F.lit(2)))
     left_tag = F.when(F.pmod("id1", F.lit(2)) == 0, F.col("id1")).otherwise(F.col("id2"))
     right_tag = F.when(F.pmod("id1", F.lit(2)) == 1, F.col("id1")).otherwise(F.col("id2"))
@@ -636,12 +610,7 @@ def similarity_join(
     )
 
 
-def cross_source_dup_matrix(
-    df: DataFrame,
-    text_col: str = "text",
-    source_col: str = "source",
-    key_expr: Column | None = None,
-) -> DataFrame:
+def cross_source_dup_matrix(df: DataFrame, key_expr: Column | None = None) -> DataFrame:
     """Provenance view of exact duplication: for every unordered
     source pair, how many duplicate DOCUMENT PAIRS cross it (and how
     many distinct contents are shared) — the report that tells a
@@ -666,20 +635,20 @@ def cross_source_dup_matrix(
     """
     from bigdata_commerce_spark.operators.text import fingerprint
 
-    key = key_expr if key_expr is not None else fingerprint(text_col)
+    key = key_expr if key_expr is not None else fingerprint("text")
     # persisted: both sides of the fingerprint self-join read this
     # aggregate — without the cache the corpus scan+agg runs twice
     from bigdata_commerce_spark.operators.cache_util import persist_bounded
 
     per = persist_bounded(
-        df.groupBy(key.alias("__fp"), F.col(source_col))
+        df.groupBy(key.alias("__fp"), F.col("source"))
         .agg(F.count(F.lit(1)).alias("__n"))
     )
     a = per.select(
-        F.col("__fp"), F.col(source_col).alias("source_a"), F.col("__n").alias("__na")
+        F.col("__fp"), F.col("source").alias("source_a"), F.col("__n").alias("__na")
     )
     b = per.select(
-        F.col("__fp"), F.col(source_col).alias("source_b"), F.col("__n").alias("__nb")
+        F.col("__fp"), F.col("source").alias("source_b"), F.col("__n").alias("__nb")
     )
     joined = a.join(b, "__fp").where(F.col("source_a") <= F.col("source_b"))
     pairs = F.when(

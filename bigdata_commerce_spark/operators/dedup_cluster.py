@@ -22,8 +22,6 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     node_col: str = "id",
-    src_col: str = "id1",
-    dst_col: str = "id2",
     max_iterations: int = 20,
     small_graph_threshold: int = 1_000_000,
 ) -> DataFrame:
@@ -47,7 +45,7 @@ def connected_components(
 
     Returns (node_col, 'cluster_id').
     """
-    raw = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")).persist()
+    raw = edges.select(F.col("id1").alias("a"), F.col("id2").alias("b")).persist()
     sym = None
     try:
         n_edges = raw.count()
@@ -181,50 +179,39 @@ def connected_components(
             sym.unpersist()
 
 
-def dedup_survivors(
-    clusters: DataFrame,
-    quality: DataFrame | None = None,
-    node_col: str = "id",
-    quality_col: str = "quality",
-) -> DataFrame:
+def dedup_survivors(clusters: DataFrame, quality: DataFrame | None = None) -> DataFrame:
     """Pick one survivor per cluster: highest quality (ties -> lowest
     id), or lowest id when no quality signal is given. Returns
     (cluster_id, survivor_id, cluster_size)."""
     if quality is not None:
         scored = clusters.join(
-            quality.select(F.col(node_col), F.col(quality_col)), node_col, "left"
-        ).withColumn(quality_col, F.coalesce(F.col(quality_col), F.lit(0.0)))
+            quality.select(F.col("id"), F.col("quality")), "id", "left"
+        ).withColumn("quality", F.coalesce(F.col("quality"), F.lit(0.0)))
         # min_by over (negated QUALITY, id): max quality then min id in
         # one aggregate. The quality column is numeric by contract so
         # negating it is safe for ANY id type — negating the ID (the
         # previous form) broke on the string/uuid ids
         # connected_components explicitly supports.
         best = F.min_by(
-            node_col, F.struct((-F.col(quality_col)).alias("nq"), F.col(node_col))
+            "id", F.struct((-F.col("quality")).alias("nq"), F.col("id"))
         ).alias("survivor_id")
         return scored.groupBy("cluster_id").agg(
             best, F.count(F.lit(1)).alias("cluster_size")
         )
     return clusters.groupBy("cluster_id").agg(
-        F.min(node_col).alias("survivor_id"), F.count(F.lit(1)).alias("cluster_size")
+        F.min("id").alias("survivor_id"), F.count(F.lit(1)).alias("cluster_size")
     )
 
 
-def canonical_per_cluster(
-    clusters: DataFrame,
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    cluster_col: str = "cluster_id",
-    order_col: str = "n_chars",
-) -> DataFrame:
+def canonical_per_cluster(clusters: DataFrame, docs: DataFrame) -> DataFrame:
     """Canonical-representative selection — the step after clustering
     that curation actually needs: one surviving document per near-dup
-    cluster, the one with the largest ``order_col`` (ties -> smallest
+    cluster, the one with the largest ``n_chars`` (ties -> smallest
     id; a total order, so the survivor is deterministic).
 
     A thin document-shaped façade over `dedup_survivors` — the ONE
     min_by-over-(neg order, id) aggregate kernel (no ranking window,
-    mergeable map-side partials; ``order_col`` numeric by contract,
+    mergeable map-side partials; ``n_chars`` numeric by contract,
     the id never negated so string/uuid ids work). INNER-join member
     semantics: cluster members with no docs row (or NULL order) are
     neither survivor-eligible nor counted in n_members — a survivor
@@ -232,15 +219,15 @@ def canonical_per_cluster(
     score: dedup_survivors' own 0.0 imputation would outrank real
     negative scores). Output: (cluster_id, canonical id, n_members).
     """
-    scored = docs.where(F.col(order_col).isNotNull()).select(
-        F.col(id_col).alias("id"), F.col(order_col).alias("quality")
+    scored = docs.where(F.col("n_chars").isNotNull()).select(
+        F.col("doc_id").alias("id"), F.col("n_chars").alias("quality")
     )
     members = clusters.select(
-        F.col(id_col).alias("id"), F.col(cluster_col).alias("cluster_id")
+        F.col("doc_id").alias("id"), F.col("cluster_id").alias("cluster_id")
     ).join(scored.select("id"), "id", "left_semi")
     out = dedup_survivors(members, quality=scored)
     return out.select(
-        F.col("cluster_id").alias(cluster_col),
-        F.col("survivor_id").alias(id_col),
+        F.col("cluster_id").alias("cluster_id"),
+        F.col("survivor_id").alias("doc_id"),
         F.col("cluster_size").alias("n_members"),
     )

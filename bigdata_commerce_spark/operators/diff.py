@@ -110,27 +110,21 @@ def apply_changes(
     base: DataFrame,
     changes: DataFrame,
     keys: Sequence[str],
-    compare_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Fold a `table_diff` feed onto ``base``: deletes drop the key,
-    updates take the feed's ``new_*`` values, inserts append. Columns
-    of ``base`` outside ``keys + compare_cols`` pass through
-    untouched for surviving rows (and are NULL on inserted rows —
-    the feed doesn't carry them).
-
-    ``compare_cols`` defaults to the columns the FEED itself carries
-    (its ``new_*`` prefix) — a feed built with an explicit column
-    subset applies without the caller restating it.
+    updates take the feed's ``new_*`` values, inserts append. The
+    compared columns are the ones the FEED itself carries (its
+    ``new_*`` prefix), so a feed built with an explicit column subset
+    applies as is. Columns of ``base`` outside them and the keys pass
+    through untouched for surviving rows (and are NULL on inserted
+    rows — the feed doesn't carry them).
 
     One full-outer key join, same scale shape as `table_diff`; the
     changes side of a snapshot delta is |delta|-sized, so Spark's
     size estimates (or AQE at runtime) broadcast it when small.
     """
     keys = list(keys)
-    if compare_cols is None:
-        cols = [c[len("new_"):] for c in changes.columns if c.startswith("new_")]
-    else:
-        cols = list(compare_cols)
+    cols = [c[len("new_"):] for c in changes.columns if c.startswith("new_")]
     passthrough = [c for c in base.columns if c not in set(keys) and c not in set(cols)]
     b = base.alias("b")
     ch = changes.select(

@@ -146,12 +146,7 @@ def psi_report(
     return terms.withColumn("psi_total", total)
 
 
-def embedding_centroid_drift(
-    reference: DataFrame,
-    current: DataFrame,
-    group_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_centroid_drift(reference: DataFrame, current: DataFrame) -> DataFrame:
     """Semantic drift monitor: per-group embedding centroids of two
     corpus versions, compared by cosine. PSI watches a scalar
     column's shape; this watches where each group's MASS sits in
@@ -176,16 +171,16 @@ def embedding_centroid_drift(
     """
 
     def centroid(df: DataFrame, n_name: str, c_name: str) -> DataFrame:
-        e = df.where(F.col(vec_col).isNotNull()).select(
-            F.col(group_col),
+        e = df.where(F.col("embedding").isNotNull()).select(
+            F.col("label"),
             F.posexplode(
-                F.transform(F.col(vec_col), lambda x: x.cast("double"))
+                F.transform(F.col("embedding"), lambda x: x.cast("double"))
             ).alias("__dim", "__val"),
         )
-        per_dim = e.groupBy(group_col, "__dim").agg(
+        per_dim = e.groupBy("label", "__dim").agg(
             F.sum("__val").alias("__s"), F.count(F.lit(1)).alias("__n")
         )
-        return per_dim.groupBy(group_col).agg(
+        return per_dim.groupBy("label").agg(
             F.max("__n").alias(n_name),
             F.transform(
                 F.array_sort(
@@ -199,7 +194,7 @@ def embedding_centroid_drift(
 
     ref = centroid(reference, "n_ref", "__cr")
     cur = centroid(current, "n_cur", "__cc")
-    j = ref.join(cur, group_col, "full")
+    j = ref.join(cur, "label", "full")
     dot = F.aggregate(
         F.zip_with(F.col("__cr"), F.col("__cc"), lambda a, b: a * b),
         F.lit(0.0),
@@ -221,7 +216,7 @@ def embedding_centroid_drift(
         )
     )
     return j.select(
-        group_col,
+        "label",
         "n_ref",
         "n_cur",
         F.round(dot / (norm(F.col("__cr")) * norm(F.col("__cc"))), 6).alias(

@@ -145,17 +145,12 @@ def _merge_islands(hits: DataFrame, window: int, id_col: str) -> DataFrame:
     )
 
 
-def scrub_duplicate_spans(
-    df: DataFrame,
-    window: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def scrub_duplicate_spans(df: DataFrame, window: int = 8) -> DataFrame:
     """Remove corpus-duplicated token runs from every document,
     keeping the canonical first occurrence of each repeated window
     (keep_first spans) so the corpus retains exactly one copy.
 
-    Returns (id_col, text_col, removed_tokens): the rebuilt text and
+    Returns (doc_id, text, removed_tokens): the rebuilt text and
     how many tokens were dropped. Reconstruction joins surviving
     tokens with single spaces, so OUTPUT TEXT IS WHITESPACE-
     NORMALIZED for every document (scrubbed or not) — one uniform
@@ -169,9 +164,9 @@ def scrub_duplicate_spans(
     that array. No second corpus shuffle.
     """
     spans = duplicate_spans(
-        df, window=window, text_col=text_col, id_col=id_col, keep_first=True
+        df, window=window, text_col="text", id_col="doc_id", keep_first=True
     )
-    return _scrub_with_spans(df, spans, text_col, id_col)
+    return _scrub_with_spans(df, spans, "text", "doc_id")
 
 
 def _scrub_with_spans(
@@ -286,8 +281,6 @@ def scrub_contaminated_spans(
 def tag_phrases(
     df: DataFrame,
     phrases: "Sequence[str]",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     lowercase: bool = True,
 ) -> DataFrame:
     """Dictionary phrase tagging (the FlashText / Aho-Corasick job on
@@ -329,17 +322,17 @@ def tag_phrases(
 
     spark = df.sparkSession
     base = df.select(
-        F.col(id_col),
-        (F.lower(F.col(text_col)) if lowercase else F.col(text_col)).alias(
-            text_col
+        F.col("doc_id"),
+        (F.lower(F.col("text")) if lowercase else F.col("text")).alias(
+            "text"
         ),
     )
     out = None
     for n_tokens, rows in sorted(by_len.items()):
         dict_df = spark.createDataFrame(rows, "h string, phrase string")
-        occ = _window_occurrences(base, n_tokens, text_col, id_col)
+        occ = _window_occurrences(base, n_tokens, "text", "doc_id")
         hits = occ.join(F.broadcast(dict_df), "h").select(
-            id_col, "pos", "phrase", F.lit(n_tokens).alias("n_tokens")
+            "doc_id", "pos", "phrase", F.lit(n_tokens).alias("n_tokens")
         )
         out = hits if out is None else out.unionByName(hits)
     return out

@@ -74,8 +74,6 @@ def edit_distance_join(
     right: DataFrame,
     max_distance: int,
     q: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """``(lid, rid, distance)`` for every cross pair with
     ``levenshtein(l, r) <= max_distance``. Exact (complete candidates
@@ -90,8 +88,8 @@ def edit_distance_join(
     # len - q + 1 < prefix_n  <=>  len < (d+1)*q
     short_len = (d + 1) * q
 
-    L = _prep(left, id_col, text_col, "l")
-    R = _prep(right, id_col, text_col, "r")
+    L = _prep(left, "doc_id", "text", "l")
+    R = _prep(right, "doc_id", "text", "r")
 
     # --- gram path: LEFT long enough for the pigeonhole (right
     # length is irrelevant — the argument counts the left side's

@@ -123,11 +123,7 @@ def mojibake_repair_sql(expr: str) -> str:
     return expr
 
 
-def repair_encoding(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def repair_encoding(df: DataFrame) -> DataFrame:
     """Scan-speed mojibake repair + before/after accounting:
     (id, text_repaired, was_repaired, n_hits_before, n_hits_after).
 
@@ -137,7 +133,7 @@ def repair_encoding(
     ``n_hits_after`` measures what the fast path left for the exact
     kernel. One projection — no shuffle, no UDF. NULL text passes
     through as NULL (``was_repaired`` false)."""
-    raw = F.col(text_col)
+    raw = F.col("text")
     fixed = repair_expr(raw)
 
     def hits(c: Column) -> Column:
@@ -154,12 +150,12 @@ def repair_encoding(
     # ~120-deep expression tree; n_hits_after and the equality test
     # would otherwise each inline a full copy)
     barrier = df.select(
-        id_col,
+        "doc_id",
         F.explode(F.array(F.struct(raw.alias("t"), fixed.alias("r")))).alias("x"),
     )
     t, r = F.col("x.t"), F.col("x.r")
     return barrier.select(
-        id_col,
+        "doc_id",
         r.alias("text_repaired"),
         F.coalesce(r != t, F.lit(False)).alias("was_repaired"),
         hits(t).alias("n_hits_before"),

@@ -81,10 +81,6 @@ def window_funnel(
     events: DataFrame,
     steps: Sequence[str],
     window_seconds: int,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    out_col: str = "funnel_level",
 ) -> DataFrame:
     """Max funnel depth per key: the largest L such that events
     e_1 < e_2 < ... < e_L exist with types = ``steps[0..L-1]`` and
@@ -92,7 +88,8 @@ def window_funnel(
     conversion measure (ClickHouse's ``windowFunnel``; the
     time-bounded generalization of the reference's adjacent-page
     funnel, ``PageOneStepConvertRate.scala:20-99``). Returns one row
-    per key that has at least one step-1 event: ``(key, out_col)``.
+    per key that has at least one step-1 event: ``(user_id,
+    funnel_level)``.
 
     Exact DP, one pass in event-time order: ``state[i]`` = the LATEST
     chain-start timestamp among chains reaching level i+1 (keeping
@@ -116,11 +113,11 @@ def window_funnel(
     w_us = int(window_seconds) * 1_000_000
 
     ev = events.where(
-        F.col(type_col).isin(steps) & F.col(ts_col).isNotNull()
+        F.col("event_type").isin(steps) & F.col("ts").isNotNull()
     ).select(
-        key_col,
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
-        F.col(type_col).alias("ty"),
+        "user_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
+        F.col("event_type").alias("ty"),
     )
     items = F.sort_array(F.collect_list(F.struct("t", "ty")))
     init = F.array(*[F.lit(-1).cast("bigint")] * k)
@@ -142,7 +139,7 @@ def window_funnel(
             )
         return F.array(*elems)
 
-    g = ev.groupBy(key_col).agg(items.alias("__items"))
+    g = ev.groupBy("user_id").agg(items.alias("__items"))
     state = F.aggregate(F.col("__items"), init, merge)
     # reached levels are prefix-closed, so the count IS the max level
     level = F.aggregate(
@@ -150,4 +147,6 @@ def window_funnel(
         F.lit(0),
         lambda n, v: n + F.when(v >= 0, 1).otherwise(0),
     )
-    return g.select(key_col, level.alias(out_col)).where(F.col(out_col) >= 1)
+    return g.select("user_id", level.alias("funnel_level")).where(
+        F.col("funnel_level") >= 1
+    )

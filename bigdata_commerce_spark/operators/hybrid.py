@@ -36,8 +36,6 @@ def rrf_fuse(
     rank_col: str = "rank",
     k: int = 60,
     top_n: int | None = None,
-    score_col: str = "rrf",
-    score_dp: int = 6,
 ) -> DataFrame:
     """Fuse named ranked lists into ``id_cols + [per-list ranks] +
     rrf [+ rank]``. Each input needs ``id_cols`` and an integer
@@ -58,10 +56,10 @@ def rrf_fuse(
         F.coalesce(1.0 / (F.lit(k) + F.col(f"rank_{name}")), F.lit(0.0))
         for name in lists
     ]
-    score = F.round(reduce(lambda a, b: a + b, contribs), score_dp)
-    fused = fused.withColumn(score_col, score)
+    score = F.round(reduce(lambda a, b: a + b, contribs), 6)
+    fused = fused.withColumn("rrf", score)
     if top_n is not None:
-        w = Window.orderBy(F.desc(score_col), *[F.asc(c) for c in id_cols])
+        w = Window.orderBy(F.desc("rrf"), *[F.asc(c) for c in id_cols])
         fused = (
             fused.withColumn(rank_col, F.row_number().over(w))
             .where(F.col(rank_col) <= top_n)

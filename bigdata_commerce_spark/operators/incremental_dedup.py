@@ -61,20 +61,17 @@ def _fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def init_store(
-    spark: SparkSession, path: str, id_col: str = "doc_id", overwrite: bool = False
-) -> None:
+def init_store(spark: SparkSession, path: str) -> None:
     """Create an empty fingerprint store (schema only). Safe to call
-    at every job start: an EXISTING store is left untouched unless
-    ``overwrite=True`` — unconditional overwrite would wipe the
-    durable dedup history and re-admit every known duplicate, the
-    exact failure the store exists to prevent."""
+    at every job start: an EXISTING store is left untouched — an
+    overwrite would wipe the durable dedup history and re-admit every
+    known duplicate, the exact failure the store exists to prevent."""
     from bigdata_commerce_spark.sources.hadoopfs import fs_and_path
 
     fs, hpath, _ = fs_and_path(spark, path)
-    if fs.exists(hpath) and not overwrite:
+    if fs.exists(hpath):
         return
-    empty = spark.createDataFrame([], store_schema(id_col))
+    empty = spark.createDataFrame([], store_schema("doc_id"))
     empty.write.partitionBy("fp_prefix").mode("overwrite").parquet(path)
 
 
@@ -116,17 +113,12 @@ def novel_documents(
     return batch.join(store, "fp", "left_anti").select(id_col, "fp", "fp_prefix")
 
 
-def commit_batch(
-    df: DataFrame,
-    store_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def commit_batch(df: DataFrame, store_path: str) -> DataFrame:
     """One ingest step: compute the batch's novel documents, append
     their fingerprints to the store, and return them. The append is
     partition-wise (partitionBy fp_prefix, mode append): existing
     store files are never rewritten."""
-    novel = novel_documents(df, store_path, text_col, id_col)
+    novel = novel_documents(df, store_path, "text", "doc_id")
     # Read-then-append-to-the-same-path footgun: the anti-join plan
     # embeds a scan of the store as it looked BEFORE this commit
     # (including partitionSchema=[] on the very first commit, when no

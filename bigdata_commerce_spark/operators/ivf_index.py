@@ -44,8 +44,6 @@ def write_ivf_index(
     corpus: DataFrame,
     path: str,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: DataFrame | None = None,
 ) -> None:
     """Build the index at ``path``: ``cells/`` holds (id, vector) rows
@@ -56,7 +54,7 @@ def write_ivf_index(
     refined quantizer — the layout is identical.
     """
     if centroids is None:
-        centroids = md5_centroids(corpus, n_centroids, id_col, vec_col)
+        centroids = md5_centroids(corpus, n_centroids, "vec_id", "embedding")
     # loud, not lazy: an empty corpus yields zero md5-picked centroids
     # — no quantizer, so the index would be unreadable garbage. An
     # EMPTY index is still legitimate (build-then-append): pass a
@@ -68,7 +66,7 @@ def write_ivf_index(
             "to seed an empty index for later append)"
         )
     c = corpus.select(
-        F.col(id_col).alias("corpus_id"), _as_double(vec_col).alias("cvec")
+        F.col("vec_id").alias("corpus_id"), _as_double("embedding").alias("cvec")
     )
     # Arrow-kernel assignment (similarity._assign_cells_best): this is
     # the pass that touches every corpus vector at index build.
@@ -154,8 +152,6 @@ def search_ivf_index(
     probes: DataFrame,
     k: int = 5,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k per probe against a written index, touching only the
     probes' ``nprobe`` cells. Returns (probe_id, corpus_id, score,
@@ -163,7 +159,7 @@ def search_ivf_index(
     centroids = spark.read.parquet(f"{path}/centroids")
     cent_row, _ = _centroid_fold_row(centroids)
     p = probes.select(
-        F.col(id_col).alias("probe_id"), _as_double(vec_col).alias("pvec")
+        F.col("vec_id").alias("probe_id"), _as_double("embedding").alias("pvec")
     )
     # Persisted because the cell-id collect and the returned lazy
     # frame both read it; the bounded registry releases it later.
@@ -181,9 +177,9 @@ def search_ivf_index(
         .select("probe_id", "corpus_id")
     )
     index_vectors = cells.select(
-        F.col("corpus_id").alias(id_col), F.col("cvec").alias(vec_col)
+        F.col("corpus_id").alias("vec_id"), F.col("cvec").alias("embedding")
     )
-    return _exact_rerank(candidates, index_vectors, probes, k, id_col, vec_col)
+    return _exact_rerank(candidates, index_vectors, probes, k, "vec_id", "embedding")
 
 
 def _read_cells(spark: SparkSession, path: str) -> DataFrame:

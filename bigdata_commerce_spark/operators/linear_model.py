@@ -81,8 +81,6 @@ def score_linear(
     weights: DataFrame,
     bias: float,
     n_buckets: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document linear score + sigmoid probability against a
     (bucket, w) weight table. Returns (id, score, prob), both rounded
@@ -95,15 +93,15 @@ def score_linear(
     construction); documents without tokens — or whose tokens all hit
     zero-weight buckets absent from ``weights`` — score the bare bias.
     """
-    feats = hashed_features(df, n_buckets, text_col=text_col, id_col=id_col)
+    feats = hashed_features(df, n_buckets, text_col="text", id_col="doc_id")
     contrib = (
         feats.join(F.broadcast(weights), "bucket", "left")
         .select(
-            id_col,
+            "doc_id",
             "bucket",
             (F.col("x") * F.coalesce(F.col("w"), F.lit(0.0))).alias("c"),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.aggregate(
                 F.array_sort(F.collect_list(F.struct("bucket", "c"))),
@@ -112,10 +110,10 @@ def score_linear(
             ).alias("__dot")
         )
     )
-    out = df.select(id_col).join(contrib, id_col, "left")
+    out = df.select("doc_id").join(contrib, "doc_id", "left")
     score = F.coalesce(F.col("__dot"), F.lit(0.0)) + F.lit(float(bias))
     return out.select(
-        id_col,
+        "doc_id",
         F.round(score, 6).alias("score"),
         F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-score)), 6).alias("prob"),
     )

@@ -124,14 +124,7 @@ def char_bigram_nll(
     )
 
 
-def perplexity_buckets(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    head: float = 1 / 3,
-    middle: float = 2 / 3,
-) -> DataFrame:
+def perplexity_buckets(docs: DataFrame) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al. 2019): within
     each language, split documents into ``head`` / ``middle`` /
     ``tail`` by LM score terciles — head (lowest perplexity) is the
@@ -150,17 +143,17 @@ def perplexity_buckets(
     join, surfaced as NULL). Documents shorter than 2 characters have
     no bigrams and are absent, matching char_bigram_nll's contract.
     """
-    scored = char_bigram_nll(docs, None, id_col, text_col).join(
-        docs.select(id_col, lang_col), id_col
+    scored = char_bigram_nll(docs, None, "doc_id", "text").join(
+        docs.select("doc_id", "lang"), "doc_id"
     )
     # sentinel-key the language so NULL groups survive the equi-join
     # (both Spark equi-joins and SQL USING drop NULL keys); chr(1)
     # collides with no real language tag
-    grp = F.coalesce(F.col(lang_col), F.lit("\x01"))
+    grp = F.coalesce(F.col("lang"), F.lit("\x01"))
     keyed = scored.withColumn("__grp", grp)
     bounds = keyed.groupBy("__grp").agg(
-        F.round(F.expr(f"percentile(nll, {head!r})"), 6).alias("__p_head"),
-        F.round(F.expr(f"percentile(nll, {middle!r})"), 6).alias("__p_mid"),
+        F.round(F.expr(f"percentile(nll, {1 / 3!r})"), 6).alias("__p_head"),
+        F.round(F.expr(f"percentile(nll, {2 / 3!r})"), 6).alias("__p_mid"),
     )
     bucket = (
         F.when(F.col("nll") <= F.col("__p_head"), "head")
@@ -169,15 +162,13 @@ def perplexity_buckets(
     )
     return (
         keyed.join(F.broadcast(bounds), "__grp")
-        .select(id_col, lang_col, "nll", bucket.alias("bucket"))
+        .select("doc_id", "lang", "nll", bucket.alias("bucket"))
     )
 
 
 def dsir_logratio(
     raw: DataFrame,
     target: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     keep_fraction: float = 0.25,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
@@ -200,9 +191,9 @@ def dsir_logratio(
     """
     from bigdata_commerce_spark.operators.cache_util import persist_bounded
 
-    bg = persist_bounded(_doc_bigrams(raw, id_col, text_col))
+    bg = persist_bounded(_doc_bigrams(raw, "doc_id", "text"))
     lm_raw = _train_from_bigrams(bg)
-    lm_tgt = train_char_bigram_lm(target, id_col, text_col)
+    lm_tgt = train_char_bigram_lm(target, "doc_id", "text")
     consts = (
         lm_raw.agg(
             F.coalesce(F.max("unseen_logp"), F.lit(0.0)).alias("__u_raw")
@@ -235,7 +226,7 @@ def dsir_logratio(
     # rounding the double instead diverges between engines there
     # (Spark rounds the shortest repr, DuckDB the binary value —
     # caught by fuzz: 4.0404515 -> 4.040452 vs 4.040451)
-    weights = scored.groupBy(id_col).agg(
+    weights = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.round(F.sum(term.cast("decimal(20,8)")), 6)
         .cast("double")
@@ -247,20 +238,14 @@ def dsir_logratio(
         ).alias("__cut")
     )
     return weights.crossJoin(F.broadcast(cut)).select(
-        id_col,
+        "doc_id",
         "n_bigrams",
         "logratio",
         (F.col("logratio") >= F.col("__cut")).alias("keep"),
     )
 
 
-def published_recipe_funnel(
-    docs: DataFrame,
-    target: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
+def published_recipe_funnel(docs: DataFrame) -> DataFrame:
     """The four published curation recipes composed as one progressive
     funnel — Gopher (Rae 2021) -> C4 (Raffel 2019) -> CCNet (Wenzek
     2019, keep head+middle) -> DSIR (Xie 2023, keep top quartile) —
@@ -277,21 +262,20 @@ def published_recipe_funnel(
     percentiles broadcast back). The id-keyed joins co-partition
     after the first exchange, and the final aggregate is ONE row —
     nothing here grows faster than the (doc, bigram) aggregates the
-    LM recipes already pay. ``target`` defaults to the English slice
+    LM recipes already pay. The DSIR target is the English slice
     (the dsir_importance_weights twin's convention).
     """
     from bigdata_commerce_spark.operators import text as text_ops
 
-    if target is None:
-        target = docs.where(F.col(lang_col) == "en")
-    g = text_ops.gopher_quality_flags(docs).select(id_col, "passes_gopher")
-    c = text_ops.c4_line_filter(docs).select(id_col, "kept")
-    cc = perplexity_buckets(docs).select(id_col, "bucket")
-    ds = dsir_logratio(docs, target).select(id_col, "keep")
+    target = docs.where(F.col("lang") == "en")
+    g = text_ops.gopher_quality_flags(docs).select("doc_id", "passes_gopher")
+    c = text_ops.c4_line_filter(docs).select("doc_id", "kept")
+    cc = perplexity_buckets(docs).select("doc_id", "bucket")
+    ds = dsir_logratio(docs, target).select("doc_id", "keep")
     flags = (
-        g.join(c, id_col)
-        .join(cc, id_col, "left")
-        .join(ds, id_col, "left")
+        g.join(c, "doc_id")
+        .join(cc, "doc_id", "left")
+        .join(ds, "doc_id", "left")
     )
     s_gopher = F.col("passes_gopher")
     s_c4 = s_gopher & F.col("kept")
@@ -310,19 +294,12 @@ def published_recipe_funnel(
     )
 
 
-def unigram_kl_report(
-    docs: DataFrame,
-    source_a: str,
-    source_b: str,
-    source_col: str = "source",
-    text_col: str = "text",
-    top_k: int = 20,
-) -> DataFrame:
+def unigram_kl_report(docs: DataFrame, source_a: str, source_b: str) -> DataFrame:
     """Vocabulary-shift report between two sources: KL(P_a || P_b)
     over Laplace-smoothed token unigram distributions, with the
-    ``top_k`` tokens driving the divergence — the signal mixture
+    20 tokens driving the divergence — the signal mixture
     tuning and contamination triage actually read ("which words make
-    source A unlike source B"). Returns ``top_k`` rows
+    source A unlike source B"). Returns 20 rows
     (token, c_a, c_b, contribution, kl_total, rank); ``kl_total`` (the
     full-vocabulary sum, nats) repeats on every row so the one frame
     carries both the headline number and its explanation.
@@ -345,11 +322,11 @@ def unigram_kl_report(
     from bigdata_commerce_spark.operators.topk import global_top_k
 
     toks = docs.where(
-        F.col(source_col).isin([source_a, source_b])
-    ).select(source_col, F.explode(tokens(text_col)).alias("token"))
+        F.col("source").isin([source_a, source_b])
+    ).select("source", F.explode(tokens("text")).alias("token"))
     counts = toks.groupBy("token").agg(
-        F.sum(F.when(F.col(source_col) == source_a, 1).otherwise(0)).alias("c_a"),
-        F.sum(F.when(F.col(source_col) == source_b, 1).otherwise(0)).alias("c_b"),
+        F.sum(F.when(F.col("source") == source_a, 1).otherwise(0)).alias("c_a"),
+        F.sum(F.when(F.col("source") == source_b, 1).otherwise(0)).alias("c_b"),
     )
     tot = counts.agg(
         F.sum("c_a").alias("n_a"),
@@ -371,7 +348,7 @@ def unigram_kl_report(
         .alias("kl_total")
     )
     top = global_top_k(
-        terms, [F.col("contribution").desc(), F.col("token").asc()], top_k
+        terms, [F.col("contribution").desc(), F.col("token").asc()], 20
     )
     from pyspark.sql import Window
 

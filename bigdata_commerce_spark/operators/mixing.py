@@ -60,8 +60,6 @@ def mixture_sample(
     df: DataFrame,
     fractions: dict[str, float],
     default: float = 0.0,
-    source_col: str = "source",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Keep each row with probability ``fractions[source]`` (sources
     absent from the dict use ``default``), deterministically by id
@@ -69,30 +67,23 @@ def mixture_sample(
     runs, engines, and any other query using the same salt."""
     thr = F.lit(threshold_hex(default))
     for s in sorted(fractions):
-        thr = F.when(F.col(source_col) == s, F.lit(threshold_hex(fractions[s]))).otherwise(thr)
-    return df.where(hash_uniform(id_col) < thr)
+        hit = F.col("source") == s
+        thr = F.when(hit, F.lit(threshold_hex(fractions[s]))).otherwise(thr)
+    return df.where(hash_uniform("doc_id") < thr)
 
 
-def mixture_oracle_case(
-    fractions: dict[str, float], default: float = 0.0, source_col: str = "source"
-) -> str:
+def mixture_oracle_case(fractions: dict[str, float], default: float = 0.0) -> str:
     """The ANSI-SQL CASE expression computing the same per-source
     threshold — generated from the SAME dict the Spark plan uses, so
     the oracle can never drift from the engine."""
     whens = "\n        ".join(
-        f"WHEN {source_col} = '{s}' THEN '{threshold_hex(fractions[s])}'"
+        f"WHEN source = '{s}' THEN '{threshold_hex(fractions[s])}'"
         for s in sorted(fractions)
     )
     return f"CASE {whens} ELSE '{threshold_hex(default)}' END"
 
 
-def split_by_group(
-    df: DataFrame,
-    test_fraction: float,
-    group_col: str,
-    split_col: str = "split",
-    salt: str = ":groupsplit",
-) -> DataFrame:
+def split_by_group(df: DataFrame, test_fraction: float, group_col: str) -> DataFrame:
     """Leakage-safe train/test split: the hash of the GROUP key (a
     domain, a url prefix, a near-dup cluster id) decides, so every
     row of a group lands in the SAME split. Splitting per document
@@ -108,13 +99,13 @@ def split_by_group(
     """
     h = F.substring(
         F.md5(F.concat(F.coalesce(F.col(group_col).cast("string"), F.lit("")),
-                       F.lit(salt))),
+                       F.lit(":groupsplit"))),
         1,
         8,
     )
     thr = F.lit(threshold_hex(test_fraction))
     return df.withColumn(
-        split_col, F.when(h < thr, F.lit("test")).otherwise(F.lit("train"))
+        "split", F.when(h < thr, F.lit("test")).otherwise(F.lit("train"))
     )
 
 
@@ -122,7 +113,6 @@ def cap_per_source(
     df: DataFrame,
     quota: int,
     source_col: str = "source",
-    id_col: str = "doc_id",
     rank_col: str = "source_rank",
 ) -> DataFrame:
     """EXACT per-source quota cap: keep at most ``quota`` rows per
@@ -148,7 +138,7 @@ def cap_per_source(
     return top_k_per_group(
         df,
         [source_col],
-        [hash_uniform(id_col).asc(), F.col(id_col).asc()],
+        [hash_uniform("doc_id").asc(), F.col("doc_id").asc()],
         quota,
         rank_col=rank_col,
     )
@@ -159,9 +149,6 @@ def negative_samples(
     n_items: DataFrame,
     k: int = 5,
     oversample: int = 2,
-    user_col: str = "user_id",
-    item_col: str = "item_id",
-    salt: str = ":neg:",
 ) -> DataFrame:
     """Deterministic negative sampling for recommendation/contrastive
     training: for every user in ``positives``, up to ``k``
@@ -170,7 +157,7 @@ def negative_samples(
     re-runs, engines, and the DuckDB oracle agree row for row.
 
     Construction: slot j in [0, k * oversample) maps to candidate
-    item ``md5(user || salt || j) mod n_items`` (items must be densely
+    item ``md5(user || ':neg:' || j) mod n_items`` (items must be densely
     keyed 0..n_items-1 — the shard/partkey layout); duplicate hits of
     the same item keep their smallest slot; positives are removed by
     an anti-join; the survivors rank by (slot, item) and the first
@@ -188,16 +175,16 @@ def negative_samples(
     """
     if k < 1 or oversample < 1:
         raise ValueError(f"k and oversample must be >= 1 (got {k}, {oversample})")
-    users = positives.select(user_col).distinct()
+    users = positives.select("user_id").distinct()
     slots = users.select(
-        user_col, F.explode(F.sequence(F.lit(0), F.lit(k * oversample - 1))).alias("__j")
+        "user_id", F.explode(F.sequence(F.lit(0), F.lit(k * oversample - 1))).alias("__j")
     )
     h = F.conv(
         F.substring(
             F.md5(
                 F.concat(
-                    F.col(user_col).cast("string"),
-                    F.lit(salt),
+                    F.col("user_id").cast("string"),
+                    F.lit(":neg:"),
                     F.col("__j").cast("string"),
                 )
             ),
@@ -209,34 +196,27 @@ def negative_samples(
     ).cast("long")
     cands = (
         slots.crossJoin(F.broadcast(n_items))
-        .withColumn(item_col, F.pmod(h, F.col("n_items")))
-        .groupBy(user_col, item_col)
+        .withColumn("item_id", F.pmod(h, F.col("n_items")))
+        .groupBy("user_id", "item_id")
         .agg(F.min("__j").alias("__j"))
     )
     surv = cands.join(
-        positives.select(user_col, item_col).distinct(),
-        [user_col, item_col],
+        positives.select("user_id", "item_id").distinct(),
+        ["user_id", "item_id"],
         "left_anti",
     )
     from bigdata_commerce_spark.operators.topk import top_k_per_group
 
     return top_k_per_group(
         surv,
-        [user_col],
-        [F.col("__j").asc(), F.col(item_col).asc()],
+        ["user_id"],
+        [F.col("__j").asc(), F.col("item_id").asc()],
         k,
         rank_col="neg_rank",
     ).drop("__j")
 
 
-def token_budget_per_source(
-    df: DataFrame,
-    budget: int | dict[str, int],
-    token_col: str = "n_tokens",
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    default_budget: int = 0,
-) -> DataFrame:
+def token_budget_per_source(df: DataFrame, budget: int | dict[str, int]) -> DataFrame:
     """EXACT per-source TOKEN budget: keep documents per source, in
     the deterministic salted-id hash order (then id as total-order
     tiebreak), while the tokens BEFORE a document — its exclusive
@@ -245,7 +225,7 @@ def token_budget_per_source(
     so the row-quota ``cap_per_source`` is the wrong unit for the
     final mix; this is the token-denominated counterpart. ``budget``
     is one int for every source, or a per-source dict (sources absent
-    from the dict get ``default_budget``, 0 = dropped) — the dict a
+    from the dict are dropped) — the dict a
     real mix spec is.
 
     Keep rule: ``tokens_before < budget``. The first document of a
@@ -284,26 +264,24 @@ def token_budget_per_source(
             "input already has one — rename or drop it first"
         )
     w = (
-        Window.partitionBy(source_col)
-        .orderBy(hash_uniform(id_col).asc(), F.col(id_col).asc())
+        Window.partitionBy("source")
+        .orderBy(hash_uniform("doc_id").asc(), F.col("doc_id").asc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    before = F.coalesce(F.sum(F.col(token_col)).over(w), F.lit(0)).cast("bigint")
-    thr = _budget_threshold(budget, source_col, default_budget)
+    before = F.coalesce(F.sum(F.col("n_tokens")).over(w), F.lit(0)).cast("bigint")
+    thr = _budget_threshold(budget, "source")
     return df.withColumn("tokens_before", before).where(F.col("tokens_before") < thr)
 
 
-def _budget_threshold(
-    budget: int | dict[str, int], source_col: str, default_budget: int
-) -> Column:
+def _budget_threshold(budget: int | dict[str, int], source_col: str) -> Column:
     """The per-source budget as ONE JVM expression: a constant for an
     int spec, else a CASE built from the dict (same shape as
-    ``mixture_sample``'s threshold). A None key would be unreachable
-    anyway (col == NULL is never true), so NULL-source rows always
-    take ``default_budget``."""
+    ``mixture_sample``'s threshold), 0 for sources it omits. A None
+    key would be unreachable anyway (col == NULL is never true), so
+    NULL-source rows always take 0."""
     if not isinstance(budget, dict):
         return F.lit(int(budget))
-    thr = F.lit(int(default_budget))
+    thr = F.lit(0)
     for s in sorted(k for k in budget if k is not None):
         thr = F.when(F.col(source_col) == s, F.lit(int(budget[s]))).otherwise(thr)
     return thr
@@ -312,9 +290,6 @@ def _budget_threshold(
 def token_budget_fill_report(
     kept: DataFrame,
     budget: int | dict[str, int],
-    token_col: str = "n_tokens",
-    source_col: str = "source",
-    default_budget: int = 0,
     available: DataFrame | None = None,
 ) -> DataFrame:
     """Per-source fill report for a ``token_budget_per_source`` result
@@ -339,7 +314,7 @@ def token_budget_fill_report(
     With ``available``, the report enumerates the UNION of both
     sides (full outer, null-safe — ADVICE r10 item 1 / r11 item 2):
     a source whose every row was dropped — a 0 budget, a dict spec
-    with ``default_budget=0``, or a pre-thin that removed the whole
+    that omits it, or a pre-thin that removed the whole
     source — still appears, with ``kept_rows=0`` and
     ``underfilled=true``; and a kept-side source missing from
     ``available`` (mismatched frames) surfaces with
@@ -353,21 +328,21 @@ def token_budget_fill_report(
     for a positive budget, underfilled=true; there is no
     ``available_rows`` column to tighten the flag with).
     """
-    rep = kept.groupBy(source_col).agg(
-        F.sum(F.col(token_col)).cast("bigint").alias("kept_tokens"),
+    rep = kept.groupBy("source").agg(
+        F.sum(F.col("n_tokens")).cast("bigint").alias("kept_tokens"),
         F.count("*").alias("kept_rows"),
     )
-    thr = _budget_threshold(budget, source_col, default_budget)
+    thr = _budget_threshold(budget, "source")
     if available is None:
         if isinstance(budget, dict):
             # the spec names the sources: outer-union the dict keys so
             # a spec'd source that kept nothing still gets a row
             spec = kept.sparkSession.createDataFrame(
                 [(s,) for s in sorted(k for k in budget if k is not None)],
-                f"{source_col} string",
+                "source string",
             )
             rep = (
-                spec.join(rep, on=source_col, how="full")
+                spec.join(rep, on="source", how="full")
                 .withColumn("kept_tokens",
                             F.coalesce(F.col("kept_tokens"), F.lit(0)).cast("bigint"))
                 .withColumn("kept_rows",
@@ -386,27 +361,27 @@ def token_budget_fill_report(
     # available). The source key coalesces across the two sides; the
     # join is null-safe, so a NULL-source group still matches itself
     # and lands in ONE row.
-    avail = available.groupBy(source_col).agg(
+    avail = available.groupBy("source").agg(
         F.count("*").alias("available_rows")
     )
     joined = (
         avail.alias("a")
         .join(
             rep.alias("k"),
-            F.col(f"a.{source_col}").eqNullSafe(F.col(f"k.{source_col}")),
+            F.col("a.source").eqNullSafe(F.col("k.source")),
             "full",
         )
         .withColumn(
             "__src",
-            F.coalesce(F.col(f"a.{source_col}"), F.col(f"k.{source_col}")),
+            F.coalesce(F.col("a.source"), F.col("k.source")),
         )
     )
     # threshold keys off the coalesced source: after the self-aliased
     # full join the bare source name is ambiguous, and the a-side one
     # is NULL for kept-only sources
-    thr = _budget_threshold(budget, "__src", default_budget)
+    thr = _budget_threshold(budget, "__src")
     out = joined.select(
-        F.col("__src").alias(source_col),
+        F.col("__src").alias("source"),
         F.coalesce(F.col("k.kept_tokens"), F.lit(0))
         .cast("bigint")
         .alias("kept_tokens"),
@@ -429,23 +404,17 @@ def rate_cap_per_key_bucket(
     df: DataFrame,
     max_rows: int,
     bucket_seconds: int,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Keep at most ``max_rows`` rows per (key, time bucket), earliest
     first — burst limiting at ingest (bot storms, duplicate event
     floods, scraper loops) before the expensive operators run.
 
     One shuffle on (key, bucket) + a ranking window. Order is ts then
-    a tiebreak so equal timestamps cannot make reruns disagree: pass
-    ``tiebreak_col`` (a unique id) and the shuffle sort key stays
-    narrow — (ts, id) — regardless of row width. Without it, the
-    fallback tiebreak is a struct of every ORDERABLE remaining column
-    (map-typed columns can't sort and are excluded), which is still
-    deterministic but drags the full row width (text/array payloads
-    included) through the window sort — fine for narrow tables, pass
-    the id column for wide ones. Fully incremental: a new time bucket
+    a tiebreak so equal timestamps cannot make reruns disagree: the
+    tiebreak is a struct of every ORDERABLE column (map-typed columns
+    can't sort and are excluded), which is deterministic but drags the
+    full row width (text/array payloads included) through the window
+    sort. Fully incremental: a new time bucket
     never touches old ones, so it composes with the partition-append
     ingest layout.
     """
@@ -453,27 +422,24 @@ def rate_cap_per_key_bucket(
 
     from bigdata_commerce_spark.operators.topk import top_k_per_group
 
-    if tiebreak_col is not None:
-        tie = F.col(tiebreak_col).asc()
-    else:
-        def _orderable(dt) -> bool:
-            if isinstance(dt, MapType):
-                return False
-            if isinstance(dt, ArrayType):
-                return _orderable(dt.elementType)
-            if isinstance(dt, StructType):
-                return all(_orderable(f.dataType) for f in dt.fields)
-            return True
+    def _orderable(dt) -> bool:
+        if isinstance(dt, MapType):
+            return False
+        if isinstance(dt, ArrayType):
+            return _orderable(dt.elementType)
+        if isinstance(dt, StructType):
+            return all(_orderable(f.dataType) for f in dt.fields)
+        return True
 
-        tie_cols = [f.name for f in df.schema.fields if _orderable(f.dataType)]
-        tie = F.struct(*[F.col(c) for c in tie_cols]).asc()
+    tie_cols = [f.name for f in df.schema.fields if _orderable(f.dataType)]
+    tie = F.struct(*[F.col(c) for c in tie_cols]).asc()
     b = F.lit(bucket_seconds)
     bucketed = df.withColumn(
-        "__tb", F.floor(F.unix_timestamp(F.col(ts_col)) / b).cast("bigint")
+        "__tb", F.floor(F.unix_timestamp(F.col("ts")) / b).cast("bigint")
     )
-    order = [F.col(ts_col).asc(), tie]
+    order = [F.col("ts").asc(), tie]
     return top_k_per_group(
-        bucketed, [key_col, "__tb"], order, max_rows, rank_col="__r", keep_rank=False
+        bucketed, ["user_id", "__tb"], order, max_rows, rank_col="__r", keep_rank=False
     ).drop("__tb")
 
 
@@ -481,10 +447,7 @@ def weighted_sample(
     df: DataFrame,
     k: int,
     weight_col: str,
-    id_col: str = "doc_id",
     group_cols: Sequence[str] | None = None,
-    salt: str = "aes",
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement: the top-k
     rows (per group, or globally) by the Efraimidis–Spirakis A-ES key
@@ -496,8 +459,8 @@ def weighted_sample(
     A-ES draws u ~ U(0,1] per row and ranks by u^(1/w), here in log
     form ``ln(u)/w`` (descending). The uniform comes from the same
     engine-portable md5 machinery as every sampler in this module
-    (60-bit prefix of md5(id:salt), +1 so u > 0), so the sample is a
-    pure function of (id, salt, weight) — stable across runs,
+    (60-bit prefix of md5(id:aes), +1 so u > 0), so the sample is a
+    pure function of (id, weight) — stable across runs,
     partitionings, and engines. The key is rounded to 10 dp before
     ranking (libm ln() may differ by 1 ulp across engines; rounding
     plus the id tiebreak makes the order — and thus the SAMPLE —
@@ -515,32 +478,25 @@ def weighted_sample(
         raise ValueError("k must be >= 1")
     from bigdata_commerce_spark.functions import md5_uniform60
 
-    h = md5_uniform60(id_col, salt)
+    h = md5_uniform60("doc_id", "aes")
     u = (h + F.lit(1)).cast("double") / F.lit(float(1 << 60))
     key = F.round(F.log(u) / F.col(weight_col).cast("double"), 10)
     rows = df.where(
         F.col(weight_col).isNotNull() & (F.col(weight_col).cast("double") > 0)
     ).withColumn("__aes", key)
-    order = [F.desc("__aes"), F.asc(id_col)]
+    order = [F.desc("__aes"), F.asc("doc_id")]
     if group_cols:
         from bigdata_commerce_spark.operators.topk import top_k_per_group
 
-        out = top_k_per_group(rows, list(group_cols), order, k, rank_col=rank_col)
+        out = top_k_per_group(rows, list(group_cols), order, k, rank_col="rank")
     else:
         from bigdata_commerce_spark.operators.topk import rank_top_m
 
-        out = rank_top_m(rows, order, k, rank_col=rank_col)
+        out = rank_top_m(rows, order, k, rank_col="rank")
     return out.drop("__aes")
 
 
-def upsample_epochs(
-    df: DataFrame,
-    factors: dict[str, float],
-    default: float = 1.0,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    epoch_col: str = "epoch",
-) -> DataFrame:
+def upsample_epochs(df: DataFrame, factors: dict[str, float]) -> DataFrame:
     """Epoch-aware UPsampling: emit each row ``factors[source]`` times
     in expectation — the complement of mixture_sample, whose keep
     fractions cap at 1. Training mixes routinely repeat scarce
@@ -551,7 +507,7 @@ def upsample_epochs(
     nested: raising a factor only ADDS copies, never reshuffles the
     ones already emitted.
 
-    Output rows carry ``epoch_col`` (0-based copy index) so a trainer
+    Output rows carry ``epoch`` (0-based copy index) so a trainer
     can interleave epochs rather than concatenate them. Zero shuffle:
     one sequence-explode (fan-out = ceil(factor), map-side) + a
     filter. Factors must be >= 0; a factor of 0 drops the source.
@@ -564,8 +520,8 @@ def upsample_epochs(
     for s, f in factors.items():
         if f < 0:
             raise ValueError(f"factor for {s!r} must be >= 0, got {f}")
-    if default < 0:
-        raise ValueError(f"default must be >= 0, got {default}")
+    if 1.0 < 0:
+        raise ValueError("default must be >= 0, got 1.0")
 
     def whole(f: float) -> int:
         return int(f)
@@ -573,28 +529,28 @@ def upsample_epochs(
     def frac_thr(f: float) -> int:
         return int((f - int(f)) * (1 << 60))
 
-    k_expr = F.lit(whole(default))
-    thr_expr = F.lit(frac_thr(default))
+    k_expr = F.lit(whole(1.0))
+    thr_expr = F.lit(frac_thr(1.0))
     for s in sorted(factors):
-        k_expr = F.when(F.col(source_col) == s, F.lit(whole(factors[s]))).otherwise(
+        k_expr = F.when(F.col("source") == s, F.lit(whole(factors[s]))).otherwise(
             k_expr
         )
         thr_expr = F.when(
-            F.col(source_col) == s, F.lit(frac_thr(factors[s]))
+            F.col("source") == s, F.lit(frac_thr(factors[s]))
         ).otherwise(thr_expr)
     with_epoch = df.withColumn("__k", k_expr).withColumn("__thr", thr_expr)
     # k full epochs (0..k-1) plus the candidate fractional epoch k;
     # sequence(0, k) emits k+1 entries and the filter decides the last
     exploded = with_epoch.withColumn(
-        epoch_col, F.explode(F.sequence(F.lit(0), F.col("__k")))
+        "epoch", F.explode(F.sequence(F.lit(0), F.col("__k")))
     )
     u = F.conv(
         F.substring(
             F.md5(
                 F.concat(
-                    F.col(id_col).cast("string"),
+                    F.col("doc_id").cast("string"),
                     F.lit(":epoch:"),
-                    F.col(epoch_col).cast("string"),
+                    F.col("epoch").cast("string"),
                 )
             ),
             1,
@@ -604,6 +560,6 @@ def upsample_epochs(
         10,
     ).cast("long")
     kept = exploded.where(
-        (F.col(epoch_col) < F.col("__k")) | (u < F.col("__thr"))
+        (F.col("epoch") < F.col("__k")) | (u < F.col("__thr"))
     )
     return kept.drop("__k", "__thr")

@@ -35,8 +35,6 @@ from pyspark.sql import functions as F
 def pack_sequences(
     df: DataFrame,
     budget: int = 2048,
-    id_col: str = "doc_id",
-    token_count_col: str = "n_tokens",
     bucket_width: int = 1024,
 ) -> DataFrame:
     """Assign each document a pack id and its token offset inside the
@@ -54,10 +52,10 @@ def pack_sequences(
         # two-level prefix sum into one global single-partition window
         raise ValueError(f"bucket_width must be positive, got {bucket_width}")
     toks = df.select(
-        F.col(id_col).alias("id"),
-        F.col(token_count_col).cast("bigint").alias("n"),
+        F.col("doc_id").alias("id"),
+        F.col("n_tokens").cast("bigint").alias("n"),
         # integer div, not float-divide-then-cast: exact at any id
-        F.expr(f"`{id_col}` div {int(bucket_width)}").alias("bucket"),
+        F.expr(f"`doc_id` div {int(bucket_width)}").alias("bucket"),
     )
 
     w_in_bucket = (
@@ -78,26 +76,20 @@ def pack_sequences(
     # #buckets rows — broadcast; the corpus is never reshuffled for
     # the join.
     packed = in_bucket.join(F.broadcast(bucket_prefix), "bucket").select(
-        F.col("id").alias(id_col),
-        F.col("n").alias(token_count_col),
+        F.col("id").alias("doc_id"),
+        F.col("n").alias("n_tokens"),
         (F.col("bucket_start") + F.col("local_start")).alias("token_start"),
     )
     return packed.select(
-        id_col,
-        token_count_col,
+        "doc_id",
+        "n_tokens",
         "token_start",
         F.expr(f"token_start div {int(budget)}").alias("pack_id"),
         (F.col("token_start") % budget).alias("pack_offset"),
     )
 
 
-def length_bucketed_index(
-    df: DataFrame,
-    n_buckets: int = 4,
-    token_col: str = "n_tokens",
-    id_col: str = "doc_id",
-    salt: str = ":shuf",
-) -> DataFrame:
+def length_bucketed_index(df: DataFrame, n_buckets: int = 4) -> DataFrame:
     """Length-bucketed batching index: assign each document to one of
     ``n_buckets`` token-length buckets (exact interpolated quantile
     boundaries), then a dense 0-based SHUFFLED position within its
@@ -108,7 +100,7 @@ def length_bucketed_index(
     mixing and no in-loader sort.
 
     Bucketing: boundaries are the i/n_buckets interpolated percentiles
-    of ``token_col`` (Spark `percentile` == DuckDB `quantile_cont`,
+    of ``n_tokens`` (Spark `percentile` == DuckDB `quantile_cont`,
     the exact_price_percentiles parity), ROUNDED TO 6dp on both
     engines so the integer-vs-boundary comparisons below cannot flip
     on a 1-ULP interpolation difference; bucket = 1 + count of
@@ -130,14 +122,14 @@ def length_bucketed_index(
     bounds = df.agg(
         *[
             F.round(
-                F.expr(f"percentile(`{token_col}`, {i / n_buckets!r})"), 6
+                F.expr(f"percentile(`n_tokens`, {i / n_buckets!r})"), 6
             ).alias(f"__b{i}")
             for i in range(1, n_buckets)
         ]
     )
     bucket = F.lit(1)
     for i in range(1, n_buckets):
-        bucket = bucket + F.when(F.col(token_col) > F.col(f"__b{i}"), 1).otherwise(0)
+        bucket = bucket + F.when(F.col("n_tokens") > F.col(f"__b{i}"), 1).otherwise(0)
     bucketed = (
         df.crossJoin(F.broadcast(bounds))
         .withColumn("bucket", bucket.cast("int"))
@@ -146,5 +138,5 @@ def length_bucketed_index(
     from bigdata_commerce_spark.sources.shards import with_group_shuffled_index
 
     return with_group_shuffled_index(
-        bucketed, ["bucket"], id_col=id_col, index_col="pos", salt=salt
+        bucketed, ["bucket"], id_col="doc_id", index_col="pos", salt=":shuf"
     )

@@ -60,7 +60,6 @@ def profile_table(
     df: DataFrame,
     columns: Sequence[str] | None = None,
     exact_distinct: bool = False,
-    mean_dp: int = 6,
 ) -> DataFrame:
     """One row per profiled column:
     ``(column, n_rows, n_nonnull, n_null, n_distinct, min_num,
@@ -69,7 +68,7 @@ def profile_table(
     Numerics fill ``min_num/max_num/mean`` (double); strings and
     booleans fill ``min_str/max_str``; timestamps (tz and ntz) and
     dates fill ``min_str/max_str`` via ISO `date_format`
-    (engine-portable text). ``mean`` is rounded to ``mean_dp``
+    (engine-portable text). ``mean`` is rounded to 6
     places from the exact decimal sum.
     """
     cols = list(columns) if columns is not None else list(df.columns)
@@ -122,7 +121,7 @@ def profile_table(
                 F.col(f"_nn_{c}") == F.col(f"_cnt_{c}"),
                 F.round(
                     F.col(f"_sum_{c}").cast("double") / F.col(f"_cnt_{c}"),
-                    mean_dp,
+                    6,
                 ),
             )
             if num

@@ -30,15 +30,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def quantize_embeddings(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    qvec_col: str = "qvec",
-    scale_col: str = "qscale",
-) -> DataFrame:
-    """Replace ``vec_col`` with int8 codes + a per-vector scale.
+def quantize_embeddings(df: DataFrame) -> DataFrame:
+    """Replace ``embedding`` with int8 codes + a per-vector scale.
     Output carries all other columns unchanged."""
-    as_double = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     # NaN compares GREATER than everything in Spark, so a NaN
     # component would sail through `scale > 0` and the tinyint cast
     # of round(x/NaN) would throw under ANSI — guard on finiteness
@@ -58,20 +53,15 @@ def quantize_embeddings(
         scale == 0,  # the all-zero vector
         F.transform(as_double, lambda x: F.lit(0).cast("tinyint")),
     )  # scale NULL (non-finite / empty / NULL vector) -> NULL codes
-    return df.withColumn(scale_col, scale).withColumn(qvec_col, q).drop(vec_col)
+    return df.withColumn("qscale", scale).withColumn("qvec", q).drop("embedding")
 
 
-def dequantize_embeddings(
-    df: DataFrame,
-    qvec_col: str = "qvec",
-    scale_col: str = "qscale",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def dequantize_embeddings(df: DataFrame) -> DataFrame:
     """Inverse of :func:`quantize_embeddings` (lossy: max error is
     scale/2 per component). Emits float vectors — the dtype the
     similarity operators take."""
     v = F.transform(
-        F.col(qvec_col),
-        lambda x: (x.cast("double") * F.col(scale_col)).cast("float"),
+        F.col("qvec"),
+        lambda x: (x.cast("double") * F.col("qscale")).cast("float"),
     )
-    return df.withColumn(vec_col, v).drop(qvec_col, scale_col)
+    return df.withColumn("embedding", v).drop("qvec", "qscale")

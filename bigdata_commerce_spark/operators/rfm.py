@@ -36,31 +36,27 @@ from bigdata_commerce_spark.operators.drift import (
 def rfm_scores(
     orders: DataFrame,
     n_bins: int = 4,
-    key_col: str = "o_custkey",
-    ts_col: str = "o_orderdate",
-    amount_col: str = "o_totalprice",
     asof: dt.date | None = None,
 ) -> DataFrame:
     """(customer, recency_days, frequency, monetary, r_score,
     f_score, m_score, rfm) — scores in 1..n_bins, higher better on
     every axis (recency INVERTS the bin: the most recent quantile
     scores n_bins). ``asof`` anchors recency; default = the corpus's
-    max timestamp (one collected scalar, the PageRank one-float
-    pattern). ``rfm`` is the concatenated segment label ('444' = best
-    everything). Ties at quantile boundaries fold into the lower bin
+    max timestamp (one collected scalar). ``rfm`` is the concatenated
+    segment label ('444' = best everything). Ties at quantile boundaries fold into the lower bin
     on both engines (strictly-greater counting — drift.assign_bins
     semantics)."""
     if n_bins < 2:
         raise ValueError("n_bins must be >= 2")
-    per = orders.groupBy(F.col(key_col).alias("customer")).agg(
-        F.max(ts_col).alias("__last"),
+    per = orders.groupBy(F.col("o_custkey").alias("customer")).agg(
+        F.max("o_orderdate").alias("__last"),
         F.count(F.lit(1)).alias("frequency"),
-        F.sum(F.col(amount_col).cast("decimal(18,2)"))
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
         .cast("double")
         .alias("monetary"),
     )
     if asof is None:
-        asof = orders.agg(F.max(ts_col)).collect()[0][0]
+        asof = orders.agg(F.max("o_orderdate")).collect()[0][0]
         if asof is None:
             raise ValueError("cannot anchor recency on an empty/all-NULL corpus")
     per = per.withColumn(

@@ -58,7 +58,6 @@ def winsorize(
     lower: float = 0.01,
     upper: float = 0.99,
     group_col: str | None = None,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Clip each column in ``cols`` to its [lower, upper] exact
     percentile band — per ``group_col`` when given, else globally —
@@ -72,10 +71,10 @@ def winsorize(
     aggs = []
     for c in cols:
         aggs.append(
-            F.round(F.expr(f"percentile({c}, {lower!r})"), round_dp).alias(f"__lo_{c}")
+            F.round(F.expr(f"percentile({c}, {lower!r})"), 6).alias(f"__lo_{c}")
         )
         aggs.append(
-            F.round(F.expr(f"percentile({c}, {upper!r})"), round_dp).alias(f"__hi_{c}")
+            F.round(F.expr(f"percentile({c}, {upper!r})"), 6).alias(f"__hi_{c}")
         )
     if group_col is None:
         bounds = df.agg(*aggs)
@@ -94,13 +93,10 @@ def winsorize(
 def robust_flag_anomalies(
     df: DataFrame,
     key_col: str,
-    value_col: str = "value",
     z_threshold: float = 3.5,
-    consistency: float = 1.4826,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Median/MAD outlier flags per key: ``rz = (x - median) /
-    (consistency * MAD)``, ``is_anomaly = |rz| > z_threshold`` (3.5 is
+    (1.4826 * MAD)``, ``is_anomaly = |rz| > z_threshold`` (3.5 is
     the conventional cut for the 1.4826-scaled MAD, which estimates
     sigma under normality). A key whose MAD is zero — at least half
     its points sit exactly on the median — has no defined robust
@@ -119,19 +115,19 @@ def robust_flag_anomalies(
     from bigdata_commerce_spark.operators.cache_util import persist_bounded
 
     med = persist_bounded(df.groupBy(key_col).agg(
-        F.round(F.expr(f"percentile({value_col}, 0.5)"), round_dp).alias("__med")
+        F.round(F.expr("percentile(value, 0.5)"), 6).alias("__med")
     ))
     with_dev = df.join(med, key_col, "left").withColumn(
-        "__ad", F.abs(F.col(value_col) - F.col("__med"))
+        "__ad", F.abs(F.col("value") - F.col("__med"))
     )
     mad = persist_bounded(with_dev.groupBy(key_col).agg(
-        F.round(F.expr("percentile(__ad, 0.5)"), round_dp).alias("__mad")
+        F.round(F.expr("percentile(__ad, 0.5)"), 6).alias("__mad")
     ))
     rz = F.when(
         F.col("__mad") > 0,
         F.round(
-            (F.col(value_col) - F.col("__med"))
-            / (F.lit(consistency) * F.col("__mad")),
+            (F.col("value") - F.col("__med"))
+            / (F.lit(1.4826) * F.col("__mad")),
             4,
         ),
     )

@@ -35,9 +35,6 @@ def changes_to_scd2(
     changes: DataFrame,
     key_cols: Sequence[str],
     ts_col: str,
-    valid_from_col: str = "valid_from",
-    valid_to_col: str = "valid_to",
-    validate: bool = True,
 ) -> DataFrame:
     """Change log (one row per key per attribute change, stamped with
     the change time) -> SCD2 intervals: valid_from = the change time,
@@ -46,32 +43,30 @@ def changes_to_scd2(
     key are rejected loudly — two versions current at one instant
     has no meaning and would silently double-join downstream.
 
-    NOTE: ``validate=True`` (the default) runs an EAGER duplicate-
-    instant check — one extra aggregate scan of the change log AT
-    CALL TIME, unlike every other (lazy) builder in the package. At
-    100 TB that scan doubles the operator's read cost, so callers
-    whose change log is already validated (e.g. re-deriving intervals
-    from a log validated on first load) pass ``validate=False`` and
-    get a pure lazy plan with zero extra jobs."""
+    The duplicate check rides the same lead() window, inside the
+    plan: sorted by time, a key repeats an instant exactly when some
+    row's next row carries the same time (NULL-safe, so two NULL
+    instants of one key count, as a GROUP BY would group them; a
+    key's last row has no next row). Building the query runs no job;
+    the first action raises."""
     keys = [F.col(k) for k in key_cols]
     w = Window.partitionBy(*keys).orderBy(F.col(ts_col))
-    out = changes.withColumn(valid_from_col, F.col(ts_col)).withColumn(
-        valid_to_col, F.lead(ts_col).over(w)
+    ts = F.col(ts_col)
+    nxt = F.col("__next")
+    dup = nxt.isNotNull() & nxt["t"].eqNullSafe(ts)
+    msg = F.concat(
+        F.lit("duplicate change timestamp for key "),
+        F.to_json(F.struct(*keys, ts)),
+        F.lit(" — two dimension versions cannot be current at the same instant"),
     )
-    if validate:
-        dup = (
-            changes.groupBy(*keys, ts_col)
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .where(F.col("__c") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                f"duplicate change timestamp for key {dup[0]} — two dimension "
-                "versions cannot be current at the same instant"
-            )
-    return out.drop(ts_col) if ts_col not in (valid_from_col, valid_to_col) else out
+    out = (
+        changes.withColumn("__next", F.lead(F.struct(ts.alias("t"))).over(w))
+        .where(F.assert_true(~dup, msg).isNull())
+        .withColumn("valid_from", ts)
+        .withColumn("valid_to", nxt["t"])
+        .drop("__next")
+    )
+    return out.drop(ts_col) if ts_col not in ("valid_from", "valid_to") else out
 
 
 def scd2_join(
@@ -79,9 +74,6 @@ def scd2_join(
     dim: DataFrame,
     key_cols: Sequence[str],
     fact_ts_col: str,
-    valid_from_col: str = "valid_from",
-    valid_to_col: str = "valid_to",
-    how: str = "left",
 ) -> DataFrame:
     """Point-in-time enrichment: each fact row joins the dimension
     version whose [valid_from, valid_to) interval contains the fact's
@@ -110,11 +102,11 @@ def scd2_join(
     for k in key_cols:
         eq = F.col(f"__f.{k}") == F.col(f"__d.{k}")
         cond = eq if cond is None else cond & eq
-    interval = (ts >= F.col(f"__d.{valid_from_col}")) & (
-        F.col(f"__d.{valid_to_col}").isNull()
-        | (ts < F.col(f"__d.{valid_to_col}"))
+    interval = (ts >= F.col("__d.valid_from")) & (
+        F.col("__d.valid_to").isNull()
+        | (ts < F.col("__d.valid_to"))
     )
-    joined = fact.alias("__f").join(dim.alias("__d"), cond & interval, how)
+    joined = fact.alias("__f").join(dim.alias("__d"), cond & interval, "left")
     dim_cols = [
         c for c in dim.columns if c not in key_cols
     ]

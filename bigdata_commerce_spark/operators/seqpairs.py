@@ -29,14 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def next_event_examples(
-    df: DataFrame,
-    context_len: int,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    event_col: str = "event_type",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def next_event_examples(df: DataFrame, context_len: int) -> DataFrame:
     """(key, target_idx, context, target): for every event at ordered
     position i >= context_len within its key, context = the
     context_len event values at positions [i-context_len, i), oldest
@@ -48,21 +41,21 @@ def next_event_examples(
     if context_len < 1:
         raise ValueError("context_len must be >= 1")
     seq = (
-        df.where(F.col(ts_col).isNotNull())
-        .groupBy(key_col)
+        df.where(F.col("ts").isNotNull())
+        .groupBy("user_id")
         .agg(
             F.array_sort(
                 F.collect_list(
                     F.struct(
-                        F.col(ts_col).alias("t"),
-                        F.col(tiebreak_col).alias("k"),
-                        F.col(event_col).alias("e"),
+                        F.col("ts").alias("t"),
+                        F.col("event_id").alias("k"),
+                        F.col("event_type").alias("e"),
                     )
                 )
             ).alias("__seq")
         )
         .select(
-            F.col(key_col),
+            F.col("user_id"),
             F.transform(F.col("__seq"), lambda s: s["e"]).alias("__ev"),
         )
     )
@@ -84,9 +77,9 @@ def next_event_examples(
             "array<struct<target_idx:int,context:array<string>,target:string>>"
         )
     )
-    ex = seq.select(key_col, F.explode(examples).alias("__x"))
+    ex = seq.select("user_id", F.explode(examples).alias("__x"))
     return ex.select(
-        key_col,
+        "user_id",
         F.col("__x.target_idx").alias("target_idx"),
         F.col("__x.context").alias("context"),
         F.col("__x.target").alias("target"),

@@ -36,10 +36,7 @@ from bigdata_commerce_spark.functions import (
 
 def sessionize(
     df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     gap_minutes: int = 30,
-    session_col: str = "session_id",
     bucket_seconds: int | None = None,
 ) -> DataFrame:
     """Assign gap-based session ids: a new session starts when the gap
@@ -68,20 +65,20 @@ def sessionize(
     # timestamp[us] as NTZ) are value-preserving under the pinned UTC
     # session timezone.
     gap_us = gap_minutes * 60 * 1_000_000
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     if bucket_seconds is None:
-        w_user = Window.partitionBy(user_col).orderBy(ts_col)
-        prev_us = F.unix_micros(F.lag(ts_col).over(w_user).cast("timestamp"))
+        w_user = Window.partitionBy("user_id").orderBy("ts")
+        prev_us = F.unix_micros(F.lag("ts").over(w_user).cast("timestamp"))
         gap_break = (
             F.when(
-                F.lag(ts_col).over(w_user).isNull() | (ts_us - prev_us > gap_us),
+                F.lag("ts").over(w_user).isNull() | (ts_us - prev_us > gap_us),
                 F.lit(1),
             ).otherwise(F.lit(0))
         )
         seq = F.sum(gap_break).over(w_user.rowsBetween(Window.unboundedPreceding, 0))
         return df.withColumn(
-            session_col,
-            F.concat_ws("_", F.col(user_col).cast("string"), seq.cast("string")),
+            "session_id",
+            F.concat_ws("_", F.col("user_id").cast("string"), seq.cast("string")),
         )
 
     # ---- skew-bounded two-phase path ----
@@ -99,8 +96,8 @@ def sessionize(
             F.lit(-(2**62)),
         ),
     )
-    w_local = Window.partitionBy(user_col, "__sb").orderBy(ts_col)
-    prev_local = F.lag(ts_col).over(w_local)
+    w_local = Window.partitionBy("user_id", "__sb").orderBy("ts")
+    prev_local = F.lag("ts").over(w_local)
     # lag over a literal distinguishes "first row in bucket" from
     # "previous row's ts is NULL" — the exact path breaks on the
     # latter (NULL prev ts means an undefined gap, i.e. a new
@@ -119,9 +116,9 @@ def sessionize(
     )
 
     # Phase 2: one summary row per non-empty (user, bucket)
-    summary = rows.groupBy(user_col, "__sb").agg(
-        F.min(ts_col).alias("__first_ts"),
-        F.max(ts_col).alias("__last_ts"),
+    summary = rows.groupBy("user_id", "__sb").agg(
+        F.min("ts").alias("__first_ts"),
+        F.max("ts").alias("__last_ts"),
         F.max("__local_seq").alias("__local_breaks"),
     )
 
@@ -130,7 +127,7 @@ def sessionize(
     # NULL-ts bucket boundary, or the cross-bucket gap exceeds the
     # threshold). The row's global seq = breaks in all earlier buckets
     # + this bucket's boundary break + its local running breaks.
-    w_spine = Window.partitionBy(user_col).orderBy("__sb")
+    w_spine = Window.partitionBy("user_id").orderBy("__sb")
     prev_last = F.lag("__last_ts").over(w_spine)
     boundary_break = F.when(
         prev_last.isNull()
@@ -162,22 +159,17 @@ def sessionize(
     seq = F.col("__base") + F.col("__local_seq")
     return (
         null_safe_key_bucket_join(
-            rows, stitched.select(user_col, "__sb", "__base"), user_col, "__sb"
+            rows, stitched.select("user_id", "__sb", "__base"), "user_id", "__sb"
         )
         .withColumn(
-            session_col,
-            F.concat_ws("_", F.col(user_col).cast("string"), seq.cast("string")),
+            "session_id",
+            F.concat_ws("_", F.col("user_id").cast("string"), seq.cast("string")),
         )
         .drop("__sb", "__local_seq", "__base")
     )
 
 
-def session_aggregates(
-    df: DataFrame,
-    session_col: str = "session_id",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def session_aggregates(df: DataFrame) -> DataFrame:
     """Per-session aggregate: start/end, visit_length (sec), step_length.
 
     Mirrors ``getSessionFullInfo`` (``SessionStat.scala:618-673``)
@@ -198,17 +190,17 @@ def session_aggregates(
     many sessions, each aggregated over its own user's events only.
     """
     return (
-        df.groupBy(user_col, session_col)
+        df.groupBy("user_id", "session_id")
         .agg(
-            F.min(ts_col).alias("start_time"),
-            F.max(ts_col).alias("end_time"),
+            F.min("ts").alias("start_time"),
+            F.max("ts").alias("end_time"),
             F.count(F.lit(1)).alias("step_length"),
             (
-                F.unix_timestamp(F.max(ts_col)) - F.unix_timestamp(F.min(ts_col))
+                F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))
             ).alias("visit_length"),
         )
         .select(
-            session_col, user_col, "start_time", "end_time",
+            "session_id", "user_id", "start_time", "end_time",
             "step_length", "visit_length",
         )
     )
@@ -239,11 +231,7 @@ def visit_step_histogram(session_agg: DataFrame) -> DataFrame:
     return counts.select(*out_cols)
 
 
-def stratified_session_sample(
-    session_agg: DataFrame,
-    per_day: int = 100,
-    ts_col: str = "start_time",
-) -> DataFrame:
+def stratified_session_sample(session_agg: DataFrame, per_day: int = 100) -> DataFrame:
     """Req 2: proportional per-(day, hour) session extraction.
 
     The reference does countByKey -> driver-side random index lists ->
@@ -258,8 +246,8 @@ def stratified_session_sample(
     expressible identically in the DuckDB oracle. No driver state:
     scales to any number of days.
     """
-    keyed = session_agg.withColumn("s_date", F.to_date(ts_col)).withColumn(
-        "s_hour", F.hour(ts_col)
+    keyed = session_agg.withColumn("s_date", F.to_date("start_time")).withColumn(
+        "s_hour", F.hour("start_time")
     )
     w_hour = Window.partitionBy("s_date", "s_hour")
     w_day = Window.partitionBy("s_date")

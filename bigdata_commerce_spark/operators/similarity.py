@@ -573,8 +573,6 @@ def ivf_topk(
     corpus: DataFrame,
     probes: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
     nprobe: int = 4,
 ) -> DataFrame:
@@ -592,8 +590,8 @@ def ivf_topk(
     pruning); candidate volume per probe is ~nprobe/n_centroids of
     the corpus instead of all of it.
     """
-    centroids = md5_centroids(corpus, n_centroids, id_col, vec_col)
-    return _ivf_search(corpus, probes, centroids, k, nprobe, id_col, vec_col)
+    centroids = md5_centroids(corpus, n_centroids, "vec_id", "embedding")
+    return _ivf_search(corpus, probes, centroids, k, nprobe, "vec_id", "embedding")
 
 
 def md5_centroids(
@@ -622,12 +620,7 @@ def ivf_kmeans_topk(
     corpus: DataFrame,
     probes: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    nprobe: int = 4,
     seed: int = 42,
-    max_iter: int = 10,
 ) -> DataFrame:
     """IVF with a k-means-trained coarse quantizer (MLlib) — the
     production refinement of ``ivf_topk``'s deterministic pick.
@@ -647,9 +640,9 @@ def ivf_kmeans_topk(
     ``ivf_topk``.
     """
     centroids = train_kmeans_centroids(
-        corpus, n_centroids, vec_col=vec_col, seed=seed, max_iter=max_iter
+        corpus, 16, vec_col="embedding", seed=seed, max_iter=10
     )
-    return _ivf_search(corpus, probes, centroids, k, nprobe, id_col, vec_col)
+    return _ivf_search(corpus, probes, centroids, k, 4, "vec_id", "embedding")
 
 
 def train_kmeans_centroids(
@@ -696,12 +689,9 @@ def lsh_ann_topk(
     corpus: DataFrame,
     probes: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     num_planes: int = 16,
     bands: int = 4,
     dim: int = 64,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate cosine top-k via sign-random-projection LSH.
 
@@ -711,34 +701,29 @@ def lsh_ann_topk(
     exact cosine re-rank of candidates only. Recall < 1 by design;
     tests assert recall against cosine_topk.
     """
-    planes = np.random.default_rng(seed).standard_normal((num_planes, dim))
+    planes = np.random.default_rng(42).standard_normal((num_planes, dim))
     # Candidates as bare id pairs — dedup on (probe, corpus) ids only,
     # then join the vectors back for the re-rank. Distinct over rows
     # that carry two 64-float arrays would hash/compare the arrays per
     # band collision, which dominates the whole query.
-    cb = _sign_buckets(corpus, "corpus_id", id_col, vec_col, planes, bands)
-    pb = _sign_buckets(probes, "probe_id", id_col, vec_col, planes, bands)
+    cb = _sign_buckets(corpus, "corpus_id", "vec_id", "embedding", planes, bands)
+    pb = _sign_buckets(probes, "probe_id", "vec_id", "embedding", planes, bands)
     candidates = (
         cb.join(pb, ["band", "bucket"])
         .where(F.col("corpus_id") != F.col("probe_id"))
         .select("probe_id", "corpus_id")
         .distinct()
     )
-    return _exact_rerank(candidates, corpus, probes, k, id_col, vec_col)
+    return _exact_rerank(candidates, corpus, probes, k, "vec_id", "embedding")
 
 
-def topk_recall(
-    truth: DataFrame,
-    approx: DataFrame,
-    group_col: str = "probe_id",
-    id_col: str = "corpus_id",
-) -> DataFrame:
+def topk_recall(truth: DataFrame, approx: DataFrame) -> DataFrame:
     """Per-group recall of an approximate top-k result against the
     exact one — the quality measurement an approximate index MUST
     ship with at scale: at 100 TB the brute-force pass runs once on a
     probe sample to calibrate band/probe counts, and this report says
     whether the ANN path's recall actually holds. Returns one row per
-    ``group_col`` value in ``truth``: ``n_true`` (truth rows, <= k),
+    ``probe_id`` value in ``truth``: ``n_true`` (truth rows, <= k),
     ``n_hit`` (truth rows the approximate result also returned),
     ``recall`` (n_hit / n_true, 4dp).
 
@@ -749,11 +734,11 @@ def topk_recall(
     probe with no approximate rows at all still reports (left join
     from truth): recall 0, never a dropped row.
     """
-    t = truth.select(group_col, id_col)
-    a = approx.select(group_col, id_col).withColumn("__hit", F.lit(1))
+    t = truth.select("probe_id", "corpus_id")
+    a = approx.select("probe_id", "corpus_id").withColumn("__hit", F.lit(1))
     per_group = (
-        t.join(a, [group_col, id_col], "left")
-        .groupBy(group_col)
+        t.join(a, ["probe_id", "corpus_id"], "left")
+        .groupBy("probe_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_true"),
             F.coalesce(F.sum("__hit"), F.lit(0)).cast("bigint").alias("n_hit"),
@@ -852,10 +837,6 @@ def mine_hard_negatives(
     queries: DataFrame,
     positives: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    pos_id_col: str = "pos_id",
 ) -> DataFrame:
     """Hard-negative mining for embedding-model training (the DPR /
     sentence-transformers recipe): for every query vector, the k
@@ -863,8 +844,8 @@ def mine_hard_negatives(
     the near-misses a contrastive loss learns the most from, far more
     informative than random negatives.
 
-    ``queries`` carries (id_col, vec_col) like the corpus;
-    ``positives`` is (query_id_col, pos_id_col) — the labeled relevant
+    ``queries`` carries (vec_id, embedding) like the corpus;
+    ``positives`` is (query_id, pos_id) — the labeled relevant
     items to exclude. Returns (query_id, neg_id, score, rank).
 
     Shape rides cosine_topk's: queries are BROADCAST, the corpus is
@@ -878,13 +859,13 @@ def mine_hard_negatives(
     # norms hoisted onto each side before the pair join (the
     # neardup_pairs precedent) — same expression, bit-identical
     c = corpus.select(
-        F.col(id_col).alias("neg_id"), _as_double(vec_col).alias("cvec")
+        F.col("vec_id").alias("neg_id"), _as_double("embedding").alias("cvec")
     ).withColumn("__nc", _norm(F.col("cvec")))
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qvec")
+        F.col("vec_id").alias("query_id"), _as_double("embedding").alias("qvec")
     ).withColumn("__nq", _norm(F.col("qvec")))
     pos = positives.select(
-        F.col(query_id_col).alias("query_id"), F.col(pos_id_col).alias("neg_id")
+        F.col("query_id").alias("query_id"), F.col("pos_id").alias("neg_id")
     )
     scored = (
         c.join(F.broadcast(q), F.lit(True))
@@ -974,8 +955,6 @@ def semdedup(
     corpus: DataFrame,
     tau: float = 0.9,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
@@ -985,7 +964,7 @@ def semdedup(
     cluster centroid than itself — the published keep-the-peripheral
     rule, which preserves the cluster's diversity while removing its
     redundant core. Returns every row:
-    ``(id_col, centroid_id, centroid_sim, kept)``.
+    ``(vec_id, centroid_id, centroid_sim, kept)``.
 
     Decision rule (a deterministic total order, no connected
     components needed): x is DROPPED iff some same-cell y has
@@ -1016,8 +995,8 @@ def semdedup(
     members survive, so the exact published rule is kept.
     """
     if centroids is None:
-        centroids = md5_centroids(corpus, n_centroids, id_col, vec_col)
-    c = corpus.select(F.col(id_col).alias("__id"), _as_double(vec_col).alias("__v"))
+        centroids = md5_centroids(corpus, n_centroids, "vec_id", "embedding")
+    c = corpus.select(F.col("vec_id").alias("__id"), _as_double("embedding").alias("__v"))
     cent_row, id_type = _centroid_fold_row(centroids)
     # the _assign_cells fold, keeping the winning score as well
     best = F.aggregate(
@@ -1103,7 +1082,7 @@ def semdedup(
     out = (
         assigned.join(dominated, assigned["__id"] == dominated["__dropped"], "left")
         .select(
-            F.col("__id").alias(id_col),
+            F.col("__id").alias("vec_id"),
             "centroid_id",
             # + 0.0 canonicalizes a rounded -0.0 (engine-parity: the
             # oracle does the same)

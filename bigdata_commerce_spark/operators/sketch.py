@@ -71,7 +71,6 @@ def exact_group_percentiles(
     value_col: str,
     percentiles: dict[str, float],
     group_cols: list[str],
-    round_dp: int = 6,
     max_group_rows: int | None = EXACT_PERCENTILE_MAX_GROUP_ROWS,
 ) -> DataFrame:
     """Exact interpolated percentiles per group, with a LOUD scale
@@ -96,7 +95,7 @@ def exact_group_percentiles(
     unguarded aggregate (pinned by test).
     """
     aggs = [
-        F.round(F.expr(f"percentile({value_col}, {frac!r})"), round_dp).alias(name)
+        F.round(F.expr(f"percentile({value_col}, {frac!r})"), 6).alias(name)
         for name, frac in percentiles.items()
     ]
     if max_group_rows is None:

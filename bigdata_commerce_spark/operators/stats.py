@@ -131,15 +131,13 @@ def corr_from_sums(
     return sums.select(F.explode(rows).alias("p")).select("p.*")
 
 
-def corr_matrix(
-    df: DataFrame, cols: list[str], round_dp: int = 6
-) -> DataFrame:
+def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     """Pairwise Pearson correlation over ``cols`` in ONE scan/ONE
     aggregate: (col_x, col_y, n_pairs, corr) for every unordered pair
     in input order, complete-observations per pair. A pair with fewer
     than 2 complete rows or a zero-variance side has no defined
     correlation — corr NULL."""
-    return corr_from_sums(corr_sums(df, cols), cols, round_dp)
+    return corr_from_sums(corr_sums(df, cols), cols, 6)
 
 
 # Merge spec for trend_sums partial state, in the
@@ -215,13 +213,7 @@ def trend_from_sums(sums: DataFrame, key_col: str, round_dp: int = 6) -> DataFra
     )
 
 
-def trend_per_key(
-    df: DataFrame,
-    key_col: str,
-    t_col: str,
-    value_col: str,
-    round_dp: int = 6,
-) -> DataFrame:
+def trend_per_key(df: DataFrame, key_col: str, t_col: str, value_col: str) -> DataFrame:
     """Per-key OLS line value ~ slope * t + intercept, plus r2, from
     ONE grouped aggregate of exact decimal sums. ``t_col`` must be
     numeric (bucket index, epoch day — the caller picks the time
@@ -229,5 +221,5 @@ def trend_per_key(
     no defined fit — slope/intercept/r2 NULL (detected exactly via
     the t-range bounds, never by a float epsilon)."""
     return trend_from_sums(
-        trend_sums(df, key_col, t_col, value_col), key_col, round_dp
+        trend_sums(df, key_col, t_col, value_col), key_col, 6
     )

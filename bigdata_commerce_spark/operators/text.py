@@ -258,28 +258,26 @@ def _quality_expr() -> Column:
     return F.round(score, 4)
 
 
-def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Composite quality score in [0,1]: rewards stopword presence and
     sane token length, penalizes digit/punct density. A simple,
     deterministic stand-in for a trained quality classifier."""
-    s = text_stats(df, text_col, id_col)
-    return s.select(id_col, _quality_expr().alias("quality"))
+    s = text_stats(df, "text", "doc_id")
+    return s.select("doc_id", _quality_expr().alias("quality"))
 
 
-def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """n-gram/stopword language heuristic: CJK characters -> zh, else
     the language with the most stopword hits (ties: LANG_ORDER), else
     'unknown' when nothing matches. Expression-bound via _doc_profile
     (the tie-break when-chain otherwise re-evaluates every language's
     stopword filter per branch — measured 2.2x whole-query cost)."""
-    return _doc_profile(df, text_col, id_col, lang=True).select(
-        id_col, "predicted_lang"
+    return _doc_profile(df, "text", "doc_id", lang=True).select(
+        "doc_id", "predicted_lang"
     )
 
 
-def repetition_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Repetition-based quality signals (the Gopher/C4 family of
     filters): the fraction of duplicated tokens / 2-grams / 3-grams in
     each document. High values mark boilerplate, keyword stuffing and
@@ -291,7 +289,7 @@ def repetition_stats(
     fold), so the whole operator is ONE projection — no explode, no
     shuffle, stays in whole-stage codegen at any corpus size.
     """
-    t = tokens(text_col)
+    t = tokens("text")
 
     def _dup_fraction(arr: Column) -> Column:
         n = F.size(arr)
@@ -308,9 +306,9 @@ def repetition_stats(
     # slice), so unconditional binding is cheap and the guarded
     # fractions are byte-identical.
     barrier = df.select(
-        id_col, F.explode(F.array(F.struct(t.alias("t")))).alias("x0")
+        "doc_id", F.explode(F.array(F.struct(t.alias("t")))).alias("x0")
     ).select(
-        id_col,
+        "doc_id",
         F.explode(
             F.array(
                 F.struct(
@@ -330,7 +328,7 @@ def repetition_stats(
         return F.when(F.size(tb) >= n, _dup_fraction(grams[n])).otherwise(F.lit(0.0))
 
     return barrier.select(
-        id_col,
+        "doc_id",
         F.size(tb).alias("n_tokens"),
         _dup_of(1).alias("dup_token_frac"),
         _dup_of(2).alias("dup_2gram_frac"),
@@ -338,19 +336,13 @@ def repetition_stats(
     )
 
 
-def gopher_quality_flags(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words: int = GOPHER_MIN_WORDS,
-    max_words: int = GOPHER_MAX_WORDS,
-) -> DataFrame:
+def gopher_quality_flags(df: DataFrame) -> DataFrame:
     """The Gopher quality-filter rules (Rae et al. 2021 §A1.1) as one
     boolean flag per rule plus the combined verdict — the standard
     pretraining document filter (Dolma and RefinedWeb derive theirs
     from the same table):
 
-    - ``flag_word_count``     word count in [min_words, max_words]
+    - ``flag_word_count``     word count in [GOPHER_MIN_WORDS, GOPHER_MAX_WORDS]
     - ``flag_mean_word_len``  mean word length in [3, 10]
     - ``flag_symbol_ratio``   (# + ellipsis) per word <= 0.1
     - ``flag_bullet_lines``   <= 90% of lines start with a bullet
@@ -370,7 +362,7 @@ def gopher_quality_flags(
     projection — array expressions only, no shuffle, no UDF, stays in
     whole-stage codegen at any corpus size.
     """
-    raw = F.coalesce(F.col(text_col), F.lit(""))
+    raw = F.coalesce(F.col("text"), F.lit(""))
     words = F.filter(F.split(raw, ASCII_WS), lambda x: x != "")
     # single-arg lambda, NOT bare F.trim: transform passes (element,
     # index) to two-parameter callables, and F.trim's second parameter
@@ -386,7 +378,7 @@ def gopher_quality_flags(
     # and lines feed many expressions below; without it each one
     # re-splits the text.
     barrier = df.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.array(F.struct(words.alias("w"), lines.alias("l"), raw.alias("t")))
         ).alias("x"),
@@ -427,7 +419,7 @@ def gopher_quality_flags(
     dup_lines = n_lines - F.size(F.array_distinct(line_arr)).cast("long")
 
     flags = {
-        "flag_word_count": (n_words >= min_words) & (n_words <= max_words),
+        "flag_word_count": (n_words >= GOPHER_MIN_WORDS) & (n_words <= GOPHER_MAX_WORDS),
         "flag_mean_word_len": (n_words > 0)
         & (3 * n_words <= sum_word_len)
         & (sum_word_len <= 10 * n_words),
@@ -442,7 +434,7 @@ def gopher_quality_flags(
     for c in flags.values():
         passes = c if passes is None else (passes & c)
     return barrier.select(
-        id_col,
+        "doc_id",
         n_words.alias("n_words"),
         n_lines.alias("n_lines"),
         *[c.alias(name) for name, c in flags.items()],
@@ -454,11 +446,7 @@ C4_MIN_LINE_WORDS = 5
 C4_MIN_KEPT_LINES = 3
 
 
-def c4_line_filter(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def c4_line_filter(df: DataFrame) -> DataFrame:
     """The C4 cleaning rules (Raffel et al. 2019 §2.2) as a LINE-level
     scrub + document verdict — the complement of the document-level
     :func:`gopher_quality_flags`:
@@ -477,7 +465,7 @@ def c4_line_filter(
     contains), and every count is an integer, so the DuckDB oracle
     matches bit-for-bit by construction.
     """
-    raw = F.coalesce(F.col(text_col), F.lit(""))
+    raw = F.coalesce(F.col("text"), F.lit(""))
     # \r stripped with the line trim so CRLF corpora behave like LF;
     # \z (absolute end — identical in Java and RE2) instead of $,
     # which Java alone also matches before a trailing line
@@ -493,7 +481,7 @@ def c4_line_filter(
         & ~F.contains(F.lower(x), F.lit("javascript")),
     )
     barrier = df.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.array(F.struct(lines.alias("l"), kept_lines.alias("k"), raw.alias("t")))
         ).alias("x"),
@@ -507,7 +495,7 @@ def c4_line_filter(
         & ~F.contains(t, F.lit("{"))
     )
     return barrier.select(
-        id_col,
+        "doc_id",
         n_lines.alias("n_lines"),
         n_kept.alias("n_lines_kept"),
         kept.alias("kept"),
@@ -515,14 +503,9 @@ def c4_line_filter(
     )
 
 
-def top_ngram_char_fraction(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ns: tuple[int, ...] = (2, 3, 4),
-) -> DataFrame:
+def top_ngram_char_fraction(df: DataFrame) -> DataFrame:
     """The Gopher repetition rules 2-4 (Rae et al. 2021 §A1.1): for
-    each document and each n in ``ns``, the most frequent word n-gram
+    each document and each n in (2, 3, 4), the most frequent word n-gram
     and the fraction of the (normalized) text its occurrences cover —
     ``top_count * len(top_ngram) / n_chars_norm``. High coverage marks
     keyword stuffing and TEMPLATE boilerplate that the dup-fraction
@@ -534,7 +517,7 @@ def top_ngram_char_fraction(
     lexicographically greatest — a total order, so both engines pick
     the same gram. Shape: ONE scan builds all n-gram levels as a
     single concatenated struct array (one explode — the text is
-    tokenized once, not len(ns) times), then one (doc, n, gram) count
+    tokenized once, not three times), then one (doc, n, gram) count
     and one (doc, n) arg-max aggregate, both keyed by doc_id —
     per-document gram counts are bounded by document length, so the
     shuffle is skew-safe at any corpus size. Documents with fewer
@@ -546,12 +529,12 @@ def top_ngram_char_fraction(
     # times per level (no barrier existed here; the lambda-bearing
     # transform/concat is interpreted, outside codegen CSE).
     b1 = df.select(
-        id_col,
-        F.explode(F.array(F.struct(normalize_text(text_col).alias("n")))).alias("x0"),
+        "doc_id",
+        F.explode(F.array(F.struct(normalize_text("text").alias("n")))).alias("x0"),
     )
     norm = F.col("x0.n")
     b2 = b1.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.array(
                 F.struct(
@@ -569,16 +552,18 @@ def top_ngram_char_fraction(
             lambda g: F.struct(F.lit(n).alias("n"), g.alias("gram")),
         )
 
-    combined = F.concat(*[level(n) for n in ns])
+    combined = F.concat(*[level(n) for n in (2, 3, 4)])
     ex = b2.select(
-        id_col,
+        "doc_id",
         F.col("x1.nl").alias("n_chars_norm"),
         F.explode(combined).alias("x"),
-    ).select(id_col, "n_chars_norm", F.col("x.n").alias("n"), F.col("x.gram").alias("gram"))
-    counts = ex.groupBy(id_col, "n", "n_chars_norm", "gram").agg(
+    ).select(
+        "doc_id", "n_chars_norm", F.col("x.n").alias("n"), F.col("x.gram").alias("gram")
+    )
+    counts = ex.groupBy("doc_id", "n", "n_chars_norm", "gram").agg(
         F.count(F.lit(1)).alias("c")
     )
-    top = counts.groupBy(id_col, "n", "n_chars_norm").agg(
+    top = counts.groupBy("doc_id", "n", "n_chars_norm").agg(
         F.max(
             F.struct(
                 F.col("c").alias("c"),
@@ -588,7 +573,7 @@ def top_ngram_char_fraction(
         ).alias("m")
     )
     return top.select(
-        id_col,
+        "doc_id",
         "n",
         F.col("m.g").alias("top_ngram"),
         F.col("m.c").cast("long").alias("top_count"),
@@ -605,11 +590,7 @@ MOJIBAKE_MARKERS: tuple[str, ...] = ("Ã", "â€", "Â")
 _CONTROL_CLASS = r"[\x00-\x08\x0e-\x1f]"  # C0 controls minus \t\n\r\v\f
 
 
-def encoding_quality(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def encoding_quality(df: DataFrame) -> DataFrame:
     """Encoding-damage detection (the ftfy-style pre-filter every web
     corpus runs before tokenization): per document, counts of U+FFFD
     replacement characters (a decoder already gave up), mojibake
@@ -626,7 +607,7 @@ def encoding_quality(
     explicit escape-class both Java and RE2 parse identically. NULL
     text counts as clean-but-empty ('' has no damage).
     """
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
 
     def marker_count(m: str):
         return (
@@ -641,7 +622,7 @@ def encoding_quality(
         n_moji = c if n_moji is None else (n_moji + c)
     n_ctrl = F.size(F.regexp_extract_all(t, F.lit(_CONTROL_CLASS), 0)).cast("long")
     return df.select(
-        id_col,
+        "doc_id",
         n_repl.alias("n_replacement_chars"),
         n_moji.alias("n_mojibake_hits"),
         n_ctrl.alias("n_control_chars"),
@@ -653,8 +634,6 @@ def chunk_documents(
     df: DataFrame,
     chunk_tokens: int = 256,
     overlap: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Split documents into overlapping token windows — the step
     between cleaning and sequence packing in a pretraining pipeline
@@ -676,7 +655,7 @@ def chunk_documents(
     # one-element explode barrier: bind the token array once (see
     # _exploded_shingles in operators/dedup.py for the rationale)
     barrier = df.select(
-        id_col, F.explode(F.array(F.struct(tokens(text_col).alias("t")))).alias("x")
+        "doc_id", F.explode(F.array(F.struct(tokens("text").alias("t")))).alias("x")
     )
     t = F.col("x.t")
     # NULL text -> NULL token array -> NULL starts: explode then emits
@@ -695,9 +674,9 @@ def chunk_documents(
         ),
     )
     return (
-        barrier.select(id_col, F.explode(chunks).alias("c"))
+        barrier.select("doc_id", F.explode(chunks).alias("c"))
         .select(
-            id_col,
+            "doc_id",
             F.col("c.chunk_no").alias("chunk_no"),
             F.size("c.toks").alias("chunk_n_tokens"),
             F.array_join("c.toks", " ").alias("chunk_text"),
@@ -715,7 +694,7 @@ PII_PHONE = r"\+?[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}"
 PII_IPV4 = r"[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}"
 
 
-def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """Redact emails / phone numbers / IPv4 addresses with typed
     placeholders and report per-document match counts (the audit
     trail a compliance pass needs). Pure projection: regexp_count +
@@ -731,7 +710,7 @@ def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     class. Audit consumers should treat counts as detections, not as
     a placeholder census of scrubbed_text.
     """
-    c = F.col(text_col)
+    c = F.col("text")
     scrubbed = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(c, PII_EMAIL, "<EMAIL>"), PII_PHONE, "<PHONE>"
@@ -740,7 +719,7 @@ def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         "<IP>",
     )
     return df.select(
-        id_col,
+        "doc_id",
         scrubbed.alias("scrubbed_text"),
         F.regexp_count(c, F.lit(PII_EMAIL)).alias("n_emails"),
         F.regexp_count(c, F.lit(PII_PHONE)).alias("n_phones"),
@@ -748,13 +727,7 @@ def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     )
 
 
-def curate(
-    df: DataFrame,
-    min_quality: float = 0.5,
-    lang: str = "en",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def curate(df: DataFrame, min_quality: float = 0.5, lang: str = "en") -> DataFrame:
     """End-to-end corpus curation — the composed shape of a 100 TB
     cleaning job: quality gate + language gate + exact-dedup survivor
     selection in ONE scan and ONE shuffle.
@@ -769,25 +742,23 @@ def curate(
     duplicates it represents.
     """
     enriched = _doc_profile(
-        df, text_col, id_col, stats=True, lang=True, fp=True
+        df, "text", "doc_id", stats=True, lang=True, fp=True
     ).withColumn("quality", _quality_expr())
     kept = enriched.where(
         (F.col("quality") >= min_quality) & (F.col("predicted_lang") == lang)
     )
     return kept.groupBy("fp").agg(
-        F.min(id_col).alias(id_col),
-        F.min_by("quality", id_col).alias("quality"),
-        F.min_by("n_tokens", id_col).alias("n_tokens"),
+        F.min("doc_id").alias("doc_id"),
+        F.min_by("quality", "doc_id").alias("quality"),
+        F.min_by("n_tokens", "doc_id").alias("n_tokens"),
         F.count(F.lit(1)).alias("dup_count"),
-    ).select(id_col, "quality", "n_tokens", "fp", "dup_count")
+    ).select("doc_id", "quality", "n_tokens", "fp", "dup_count")
 
 
 def remove_frequent_lines(
     df: DataFrame,
     min_docs: int = 2,
     delimiter: str = "\n",
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Corpus-level boilerplate removal (the CCNet / RefinedWeb
     line-dedup family): split every document into lines, count how
@@ -818,15 +789,15 @@ def remove_frequent_lines(
     import re as _re
 
     lines = df.select(
-        id_col,
+        "doc_id",
         F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), _re.escape(delimiter))
+            F.split(F.coalesce(F.col("text"), F.lit("")), _re.escape(delimiter))
         ).alias("pos", "line"),
     ).withColumn("line_norm", F.lower(F.trim(F.col("line"))))
     frequent = (
         lines.where(F.col("line_norm") != "")
         .groupBy("line_norm")
-        .agg(F.countDistinct(id_col).alias("df"))
+        .agg(F.countDistinct("doc_id").alias("df"))
         .where(F.col("df") >= min_docs)
         .select("line_norm", F.lit(True).alias("is_boiler"))
     )
@@ -837,13 +808,13 @@ def remove_frequent_lines(
         F.col("keep"), F.struct(F.col("pos"), F.col("line"))
     )
     return (
-        marked.groupBy(id_col)
+        marked.groupBy("doc_id")
         .agg(
             F.array_sort(F.collect_list(kept_struct)).alias("kept"),
             F.sum(F.when(~F.col("keep"), 1).otherwise(0)).alias("n_removed_lines"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.array_join(F.transform("kept", lambda s: s.line), delimiter).alias(
                 "clean_text"
             ),
@@ -885,19 +856,13 @@ def ngram_counts(
     )
 
 
-def top_ngrams(
-    df: DataFrame,
-    n: int = 2,
-    k: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def top_ngrams(df: DataFrame, n: int = 2, k: int = 50) -> DataFrame:
     """The top-k most frequent n-grams with a dense rank —
     TakeOrderedAndProject over the ngram_counts aggregate (per-partition
     heaps, never a global sort of the full vocabulary)."""
     from pyspark.sql import Window
 
-    counts = ngram_counts(df, n, text_col, id_col)
+    counts = ngram_counts(df, n, "text", "doc_id")
     top = counts.orderBy(F.desc("n_total"), F.asc("ngram")).limit(k)
     w = Window.orderBy(F.desc("n_total"), F.asc("ngram"))
     return top.withColumn("rank", F.row_number().over(w)).select(
@@ -905,12 +870,7 @@ def top_ngrams(
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    k: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 5) -> DataFrame:
     """Top-k characteristic terms per document by smoothed TF-IDF —
     the classic keyword extractor (topic labels for a data card,
     routing keys for domain-balanced sampling). Terms come from the
@@ -937,9 +897,9 @@ def tfidf_top_terms(
     from pyspark.sql import Window
 
     toks = df.select(
-        F.col(id_col), tokens(text_col).alias("__tk")
+        F.col("doc_id"), tokens("text").alias("__tk")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("__tk").alias("__n"),
         F.explode("__tk").alias("term"),
     ).where(F.col("term") != "")
@@ -955,7 +915,7 @@ def tfidf_top_terms(
     # alternative would avoid the dual consumption entirely but
     # buffers df(term) rows per partition — a stopword's partition is
     # the whole corpus, the skew trap the join shape avoids.
-    doc_term = toks.groupBy(id_col, "term").agg(
+    doc_term = toks.groupBy("doc_id", "term").agg(
         (F.count(F.lit(1)).cast("double") / F.first("__n")).alias("__tf")
     )
     dfreq = doc_term.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
@@ -964,7 +924,7 @@ def tfidf_top_terms(
         doc_term.join(dfreq, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
-            id_col,
+            "doc_id",
             "term",
             F.round(
                 F.col("__tf")
@@ -976,24 +936,17 @@ def tfidf_top_terms(
             ).alias("tfidf"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("tfidf").desc(), F.col("term").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(id_col, "term", "tfidf", "rank")
+        .select("doc_id", "term", "tfidf", "rank")
     )
 
 
-def curation_funnel(
-    df: DataFrame,
-    min_quality: float = 0.5,
-    lang: str = "en",
-    source_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def curation_funnel(df: DataFrame) -> DataFrame:
     """Pipeline telemetry for the curate() gate chain: per source, how
     many documents survive each stage — raw -> quality gate ->
     quality+language -> unique (exact-dedup canonical). The data-card
@@ -1016,16 +969,16 @@ def curation_funnel(
     the driver (round-7 verdict item 2).
     """
     enriched = _doc_profile(
-        df, text_col, id_col, extra_cols=(source_col,), stats=True, lang=True, fp=True
+        df, "text", "doc_id", extra_cols=("source",), stats=True, lang=True, fp=True
     ).withColumn("quality", _quality_expr())
-    q = F.col("quality") >= min_quality
-    ql = q & (F.col("predicted_lang") == lang)
+    q = F.col("quality") >= 0.5
+    ql = q & (F.col("predicted_lang") == "en")
     flagged = enriched.select(
-        F.col(id_col), F.col(source_col), F.col("fp"), q.alias("__q"), ql.alias("__ql")
+        F.col("doc_id"), F.col("source"), F.col("fp"), q.alias("__q"), ql.alias("__ql")
     ).persist()
     try:
         base = (
-            flagged.groupBy(source_col)
+            flagged.groupBy("source")
             .agg(
                 F.count(F.lit(1)).alias("n_raw"),
                 F.sum(F.when(F.col("__q"), 1).otherwise(0)).alias("n_quality"),
@@ -1035,8 +988,8 @@ def curation_funnel(
         uniq = (
             flagged.where(F.col("__ql"))
             .groupBy("fp")
-            .agg(F.min_by(source_col, F.col(id_col)).alias(source_col))
-            .groupBy(source_col)
+            .agg(F.min_by("source", F.col("doc_id")).alias("source"))
+            .groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_unique"))
         )
         # eager=True materializes both aggregates off the shared cache
@@ -1052,10 +1005,10 @@ def curation_funnel(
     # a plain equi-join would silently drop its n_unique count
     return (
         base_df.join(
-            uniq_df, base_df[source_col].eqNullSafe(uniq_df[source_col]), "left"
+            uniq_df, base_df["source"].eqNullSafe(uniq_df["source"]), "left"
         )
         .select(
-            base_df[source_col].alias(source_col),
+            base_df["source"].alias("source"),
             "n_raw",
             "n_quality",
             "n_quality_lang",

@@ -87,9 +87,6 @@ def similar_series(
     n_buckets: int = 48,
     bucket_seconds: int = 3600,
     origin: str = "2024-01-01 00:00:00",
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
     round_dp: int | None = None,
 ) -> DataFrame:
     """Top-k most similar entities (cosine over resampled value
@@ -101,20 +98,20 @@ def similar_series(
     Returns (probe_id, corpus_id, score, rank).
     """
     series = value_series(
-        events, n_buckets, bucket_seconds, origin, key_col, ts_col, value_col, round_dp
+        events, n_buckets, bucket_seconds, origin, "user_id", "ts", "value", round_dp
     )
     # Probe vectors resample from the probes' OWN events only — a
     # `series.where(isin)` would re-run the full-corpus aggregation a
     # second time just to extract a handful of probe rows (cosine_topk
     # evaluates its probe branch independently).
     probes = value_series(
-        events.where(F.col(key_col).isin(probe_keys)),
+        events.where(F.col("user_id").isin(probe_keys)),
         n_buckets,
         bucket_seconds,
         origin,
-        key_col,
-        ts_col,
-        value_col,
+        "user_id",
+        "ts",
+        "value",
         round_dp,
     )
     return cosine_topk(series, probes, k=k, id_col="series_id", vec_col="series")
@@ -184,7 +181,6 @@ def fill_gaps_locf(
 def flag_anomalies(
     df: DataFrame,
     key_col: str = "series_id",
-    value_col: str = "value",
     z_threshold: float = 3.0,
 ) -> DataFrame:
     """Per-key z-score anomaly flags over a (key, ..., value) series —
@@ -212,9 +208,9 @@ def flag_anomalies(
 
     Returns the input columns plus (z, is_anomaly).
     """
-    v = F.col(value_col).cast("decimal(18,6)")
+    v = F.col("value").cast("decimal(18,6)")
     stats = df.groupBy(key_col).agg(
-        F.count(value_col).alias("__n"),
+        F.count("value").alias("__n"),
         F.sum(v).cast("double").alias("__s"),
         F.sum(v * v).cast("double").alias("__s2"),
     )
@@ -233,7 +229,7 @@ def flag_anomalies(
     stats = stats.withColumn("__mean", mean).withColumn("__sd", sd)
     z = F.when(
         F.col("__sd") > 0,
-        F.round((F.col(value_col) - F.col("__mean")) / F.col("__sd"), 4),
+        F.round((F.col("value") - F.col("__mean")) / F.col("__sd"), 4),
     )
     return (
         df.join(stats, key_col, "left")
@@ -249,8 +245,6 @@ def ohlc_resample(
     df: DataFrame,
     bucket_seconds: int,
     key_col: str = "series_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
 ) -> DataFrame:
     """Downsample a value series to per-bucket OHLC bars
     (open/high/low/close + count) — the lossy inverse of
@@ -260,23 +254,23 @@ def ohlc_resample(
     equal timestamps), high/low plain min/max — no window, no sort.
     """
     b = F.lit(bucket_seconds)
-    key = F.struct(F.col(ts_col), F.col(value_col))
+    key = F.struct(F.col("ts"), F.col("value"))
     # NULL values are NOT observations: without the filter min_by's
     # struct key still admits them (structs with NULL fields sort
     # first) and a bar could carry open=NULL next to a real high/low
     return (
-        df.where(F.col(value_col).isNotNull()).select(
+        df.where(F.col("value").isNotNull()).select(
             F.col(key_col),
-            F.floor(F.unix_timestamp(F.col(ts_col)) / b).cast("bigint").alias("bucket"),
-            F.col(ts_col),
-            F.col(value_col),
+            F.floor(F.unix_timestamp(F.col("ts")) / b).cast("bigint").alias("bucket"),
+            F.col("ts"),
+            F.col("value"),
         )
         .groupBy(key_col, "bucket")
         .agg(
-            F.min_by(value_col, key).alias("open"),
-            F.max(value_col).alias("high"),
-            F.min(value_col).alias("low"),
-            F.max_by(value_col, key).alias("close"),
+            F.min_by("value", key).alias("open"),
+            F.max("value").alias("high"),
+            F.min("value").alias("low"),
+            F.max_by("value", key).alias("close"),
             F.count(F.lit(1)).alias("n_obs"),
         )
     )
@@ -289,18 +283,14 @@ def ohlc_resample(
 def ewma_per_key(
     df: DataFrame,
     alpha: float,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
     tiebreak_col: str | None = None,
-    out_col: str = "ewma",
     bucket_seconds: int | None = None,
 ) -> DataFrame:
     """Per-key EWMA in (ts, tiebreak) order — the standard
     ``adjust=False`` recurrence: y_1 = v_1, y_t = a*v_t + (1-a)*y_{t-1}
     (pandas ``Series.ewm``; the smoothing half of every
     anomaly/forecast baseline). Returns
-    ``(key, [tiebreak], ts, value, out_col)``; rows with NULL ts or
+    ``(user_id, [tiebreak], ts, value, ewma)``; rows with NULL ts or
     NULL value are excluded (they have no place in the recurrence —
     pre-impute with `fill_gaps_locf` if they should).
 
@@ -337,12 +327,12 @@ def ewma_per_key(
         raise ValueError(f"bucket_seconds must be >= 1, got {bucket_seconds}")
     a, b = float(alpha), 1.0 - float(alpha)
     tb = [tiebreak_col] if tiebreak_col else []
-    rows = df.where(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
+    rows = df.where(F.col("ts").isNotNull() & F.col("value").isNotNull())
 
     item = F.struct(
-        F.col(ts_col).alias("ts"),
+        F.col("ts").alias("ts"),
         *[F.col(c).alias(c) for c in tb],
-        F.col(value_col).cast("double").alias("v"),
+        F.col("value").cast("double").alias("v"),
     )
     empty_ys = F.expr("CAST(array() AS array<double>)")
     init = F.struct(empty_ys.alias("ys"), F.lit(0.0).alias("y"))
@@ -361,32 +351,32 @@ def ewma_per_key(
     def _emit(grouped: DataFrame, extra_cols: list[str]) -> DataFrame:
         z = F.arrays_zip(F.col("__items").alias("i"), F.col("__ys").alias("y"))
         return grouped.select(
-            key_col,
+            "user_id",
             *extra_cols,
             F.explode(z).alias("__z"),
         ).select(
-            key_col,
+            "user_id",
             *extra_cols,
-            F.col("__z.i.ts").alias(ts_col),
+            F.col("__z.i.ts").alias("ts"),
             *[F.col(f"__z.i.{c}").alias(c) for c in tb],
-            F.col("__z.i.v").alias(value_col),
-            F.col("__z.y").alias(out_col),
+            F.col("__z.i.v").alias("value"),
+            F.col("__z.y").alias("ewma"),
         )
 
     if bucket_seconds is None:
-        g = rows.groupBy(key_col).agg(
+        g = rows.groupBy("user_id").agg(
             F.sort_array(F.collect_list(item)).alias("__items")
         )
         g = g.withColumn("__ys", F.aggregate("__items", init, _step())["ys"])
         return _emit(g, [])
 
     bucket = F.floor(
-        F.unix_micros(F.col(ts_col).cast("timestamp"))
+        F.unix_micros(F.col("ts").cast("timestamp"))
         / F.lit(int(bucket_seconds) * 1_000_000)
     )
     g = (
         rows.withColumn("__bk", bucket)
-        .groupBy(key_col, "__bk")
+        .groupBy("user_id", "__bk")
         .agg(F.sort_array(F.collect_list(item)).alias("__items"))
     )
     # Per-bucket linear summary: seeded fold (if this is the key's
@@ -410,8 +400,8 @@ def ewma_per_key(
 
     # Spine: one row per (key, bucket); thread entry state through in
     # bucket order with one fold per key over the (tiny) summaries.
-    spine = g.select(key_col, "__bk", "__seeded", "__local", "__decay")
-    sk = spine.groupBy(key_col).agg(
+    spine = g.select("user_id", "__bk", "__seeded", "__local", "__decay")
+    sk = spine.groupBy("user_id").agg(
         F.sort_array(
             F.collect_list(F.struct("__bk", "__seeded", "__local", "__decay"))
         ).alias("__bks")
@@ -439,9 +429,9 @@ def ewma_per_key(
 
     entries = (
         sk.withColumn("__entries", F.aggregate("__bks", entry_init, entry_merge)["es"])
-        .select(key_col, F.explode("__entries").alias("__e"))
+        .select("user_id", F.explode("__entries").alias("__e"))
         .select(
-            key_col,
+            "user_id",
             F.col("__e.bk").alias("__bk"),
             F.col("__e.y_in").alias("__y_in"),
             F.col("__e.has").alias("__has"),
@@ -449,7 +439,7 @@ def ewma_per_key(
     )
 
     # Re-fold each bucket from its entry state, emitting per-row values.
-    withe = g.join(entries, [key_col, "__bk"])
+    withe = g.join(entries, ["user_id", "__bk"])
     init2 = F.struct(
         empty_ys.alias("ys"), F.col("__y_in").alias("y"), F.col("__has").alias("has")
     )
@@ -468,14 +458,7 @@ def ewma_per_key(
     return _emit(withe, [])
 
 
-def decayed_sum_per_key(
-    df: DataFrame,
-    half_life_seconds: float,
-    asof,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def decayed_sum_per_key(df: DataFrame, half_life_seconds: float, asof) -> DataFrame:
     """Exponentially time-decayed sum and count per key, as of a fixed
     anchor: sum(v * 2^(-(asof - t)/half_life)) — recency-weighted
     popularity/affinity (the ranking-feature staple: an event loses
@@ -497,19 +480,19 @@ def decayed_sum_per_key(
     # fractional epoch seconds on BOTH engines: unix_timestamp would
     # TRUNCATE the microsecond part that DuckDB's epoch() keeps, and
     # the weights would drift
-    age = F.lit(asof).cast("timestamp").cast("double") - F.col(ts_col).cast(
+    age = F.lit(asof).cast("timestamp").cast("double") - F.col("ts").cast(
         "double"
     )
     w = F.pow(F.lit(2.0), -age / F.lit(float(half_life_seconds)))
     eligible = df.where(
-        F.col(ts_col).isNotNull()
-        & F.col(value_col).isNotNull()
-        & (F.col(ts_col) <= F.lit(asof))
+        F.col("ts").isNotNull()
+        & F.col("value").isNotNull()
+        & (F.col("ts") <= F.lit(asof))
     )
     return (
-        eligible.groupBy(key_col)
+        eligible.groupBy("user_id")
         .agg(
-            F.round(F.sum(w * F.col(value_col).cast("double")), 6).alias(
+            F.round(F.sum(w * F.col("value").cast("double")), 6).alias(
                 "decayed_sum"
             ),
             F.round(F.sum(w), 6).alias("decayed_count"),

@@ -158,7 +158,6 @@ def _domain_expr(canonical: Column, rules: "psl.PslRules | None" = None) -> Colu
 def with_canonical_url(
     df: DataFrame,
     url_col: str = "url",
-    out_col: str = "canonical_url",
     tracking_params: frozenset[str] = TRACKING_PARAMS,
 ) -> DataFrame:
     """Add the canonical form of ``url_col``. Zero shuffle.
@@ -166,14 +165,12 @@ def with_canonical_url(
     default deliberately excludes content-significant keys like
     'ref' — see TRACKING_PARAMS)."""
     return df.withColumn(
-        out_col, _canonical_expr(F.col(url_col), tracking_params)
+        "canonical_url", _canonical_expr(F.col(url_col), tracking_params)
     )
 
 
 def with_registered_domain(
     df: DataFrame,
-    canonical_col: str = "canonical_url",
-    out_col: str = "registered_domain",
     rules: "psl.PslRules | None" = None,
 ) -> DataFrame:
     """Add the registered domain of an already-canonical URL column.
@@ -182,13 +179,11 @@ def with_registered_domain(
     bundled snapshot; pass ``psl.load_psl(path)`` for the full
     published list, or ``psl.default_rules(include_private=False)``
     to key hosting-platform tenants under the platform domain."""
-    return df.withColumn(out_col, _domain_expr(F.col(canonical_col), rules))
+    return df.withColumn("registered_domain", _domain_expr(F.col("canonical_url"), rules))
 
 
-def dedup_by_canonical_url(
-    df: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
-    """URL-level dedup: canonicalize and keep the min-``id_col`` row
+def dedup_by_canonical_url(df: DataFrame) -> DataFrame:
+    """URL-level dedup: canonicalize and keep the min-``doc_id`` row
     id per canonical URL. Returns (canonical_url, survivor id) —
     callers semi-join back for payloads, exactly the
     ``dedup.dedup_exact`` contract. NULL canonicals (non-absolute
@@ -198,16 +193,14 @@ def dedup_by_canonical_url(
     map-side partial so the shuffle carries one row per (partition,
     url), not per input row."""
     return (
-        with_canonical_url(df, url_col)
+        with_canonical_url(df, "url")
         .where(F.col("canonical_url").isNotNull())
         .groupBy("canonical_url")
-        .agg(F.min(id_col).alias(id_col))
+        .agg(F.min("doc_id").alias("doc_id"))
     )
 
 
-def host_report(
-    df: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
+def host_report(df: DataFrame) -> DataFrame:
     """Per-registered-domain curation stats: rows seen, distinct
     canonical URLs, and the URL-dup ratio — the table a crawl
     operator reads to set per-domain quota caps
@@ -216,7 +209,7 @@ def host_report(
     One hash aggregate keyed on the domain. countDistinct adds the
     usual expand-for-distinct, still one shuffle; domain cardinality
     is tiny vs rows, so partials collapse map-side."""
-    canon = with_canonical_url(df, url_col).where(
+    canon = with_canonical_url(df, "url").where(
         F.col("canonical_url").isNotNull()
     )
     canon = with_registered_domain(canon)
@@ -291,11 +284,7 @@ def with_idna_host(
     return df.withColumn(out, _idna(F.col(url_col)))
 
 
-def filter_blocked_domains(
-    df: DataFrame,
-    blocked: DataFrame,
-    url_col: str = "url",
-) -> DataFrame:
+def filter_blocked_domains(df: DataFrame, blocked: DataFrame) -> DataFrame:
     """Drop rows whose registered domain appears in ``blocked`` (a
     one-column DataFrame of registered domains — the crawl blocklist;
     NULL-canonical rows are dropped too, they cannot be vetted).
@@ -306,7 +295,7 @@ def filter_blocked_domains(
     real blocklists range from tens (fits broadcast — AQE picks it)
     to hundreds of millions of domains (shuffle join is the only
     correct plan); size-based planning decides."""
-    canon = with_registered_domain(with_canonical_url(df, url_col)).where(
+    canon = with_registered_domain(with_canonical_url(df, "url")).where(
         F.col("canonical_url").isNotNull()
     )
     key = blocked.columns[0]

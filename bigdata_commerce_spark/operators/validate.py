@@ -81,27 +81,27 @@ class RefCheck:
 Check = RowCheck | AggCheck | UniqueCheck | RefCheck
 
 
-def not_null(col: str, name: str | None = None) -> RowCheck:
-    return RowCheck(name or f"not_null({col})", "not_null", F.col(col).isNotNull())
+def not_null(col: str) -> RowCheck:
+    return RowCheck(f"not_null({col})", "not_null", F.col(col).isNotNull())
 
 
-def in_range(col: str, lo, hi, name: str | None = None) -> RowCheck:
+def in_range(col: str, lo, hi) -> RowCheck:
     return RowCheck(
-        name or f"in_range({col})", "in_range", F.col(col).between(F.lit(lo), F.lit(hi))
+        f"in_range({col})", "in_range", F.col(col).between(F.lit(lo), F.lit(hi))
     )
 
 
-def in_set(col: str, values, name: str | None = None) -> RowCheck:
-    return RowCheck(name or f"in_set({col})", "in_set", F.col(col).isin(*values))
+def in_set(col: str, values) -> RowCheck:
+    return RowCheck(f"in_set({col})", "in_set", F.col(col).isin(*values))
 
 
-def matches(col: str, pattern: str, name: str | None = None) -> RowCheck:
+def matches(col: str, pattern: str) -> RowCheck:
     return RowCheck(
-        name or f"matches({col})", "matches", F.col(col).rlike(pattern)
+        f"matches({col})", "matches", F.col(col).rlike(pattern)
     )
 
 
-def finite(col: str, name: str | None = None) -> RowCheck:
+def finite(col: str) -> RowCheck:
     """A double column carries no NaN/Inf (NULL passes — absent data
     is a not_null() concern). The gate for the decimal-exact money
     aggregates: non-finite addends NULL out in their decimal cast and
@@ -109,7 +109,7 @@ def finite(col: str, name: str | None = None) -> RowCheck:
     upstream floats must be caught HERE, at the ingest boundary."""
     c = F.col(col)
     return RowCheck(
-        name or f"finite({col})",
+        f"finite({col})",
         "finite",
         c.isNull() | (~F.isnan(c) & (c != float("inf")) & (c != float("-inf"))),
     )
@@ -121,8 +121,8 @@ def satisfies(name: str, condition: Column) -> RowCheck:
     return RowCheck(name, "satisfies", condition)
 
 
-def unique(*cols: str, name: str | None = None) -> UniqueCheck:
-    return UniqueCheck(name or f"unique({','.join(cols)})", tuple(cols))
+def unique(*cols: str) -> UniqueCheck:
+    return UniqueCheck(f"unique({','.join(cols)})", tuple(cols))
 
 
 def in_reference(
@@ -133,7 +133,7 @@ def in_reference(
     return RefCheck(name or f"in_reference({col})", col, ref, ref_col)
 
 
-def mean_in_range(col: str, lo, hi, name: str | None = None) -> AggCheck:
+def mean_in_range(col: str, lo, hi) -> AggCheck:
     # Mean from EXACT decimal sum / count (the money_sum discipline),
     # not F.avg over doubles: a double avg is partitioning-order
     # dependent, so a mean sitting exactly on a bound could flip
@@ -153,7 +153,7 @@ def mean_in_range(col: str, lo, hi, name: str | None = None) -> AggCheck:
     d = F.col(col).try_cast("decimal(38,6)")
     exact_mean = F.try_sum(d).cast("double") / F.count(d)
     return AggCheck(
-        name or f"mean_in_range({col})",
+        f"mean_in_range({col})",
         "mean_in_range",
         (F.count(col) == F.count(d)) & exact_mean.between(F.lit(lo), F.lit(hi)),
     )

@@ -249,7 +249,7 @@ def chunk_documents_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, "documents", sf_dir)
-    return _chunk_udtf(docs, chunk_tokens=256, overlap=32)
+    return _chunk_udtf(docs)
 
 
 @query(

@@ -123,11 +123,11 @@ def session_aggr_stats(filtered_sessions: DataFrame, params: TaskParams) -> Data
 
 
 def session_random_extract(
-    filtered_sessions: DataFrame, params: TaskParams, per_day: int = 100
+    filtered_sessions: DataFrame, params: TaskParams
 ) -> DataFrame:
     """Req 2: deterministic proportional per-(day, hour) extraction."""
     return with_task_id(
-        stratified_session_sample(filtered_sessions, per_day=per_day), params
+        stratified_session_sample(filtered_sessions, per_day=100), params
     )
 
 

@@ -340,11 +340,11 @@ def get_spark(
         # early sort-based fallback acted as a memory-pressure valve.
         # The tens-of-MB sizing assumes small set buffers; 100 TB
         # deployments with heavy collect_list state should LOWER this
-        # via the env knob (per-task bound ~= threshold x mean per-key
-        # state; keep it under a small fraction of executor memory).
+        # through ``extra_conf``, which is applied after these defaults
+        # (per-task bound ~= threshold x mean per-key state; keep it
+        # under a small fraction of executor memory).
         .config(
-            "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-            os.environ.get("SPARK_GRAFT_OBJ_AGG_FALLBACK", str(128 * 1024)),
+            "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", str(128 * 1024)
         )
         # AQE coalesces shuffle reads by BYTE size, floored at this
         # value (default 1m). Compute-dense stages with tiny rows —
@@ -357,11 +357,8 @@ def get_spark(
         # real scale). Measured (alternating A/B medians, sf0.1):
         # embedding_neardup 1.60->0.74s, session_stats 0.55->0.30s,
         # no query slower. Clusters preferring fewer, larger tasks on
-        # busy schedulers can raise it via the env knob.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
-        )
+        # busy schedulers can raise it through ``extra_conf``.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     )
     # The archive only helps a JVM this call starts; a live gateway
     # (a stopped session's JVM is reused) already has its classes.

@@ -88,27 +88,24 @@ SEARCH_KEYWORDS = [
 ACTIONS = ("search", "click", "order", "pay")
 
 
-def generate_commerce_rows(
-    num_users: int = 100,
-    sessions_per_user: int = 11,
-    max_actions_per_session: int = 30,
-    date: str = "2024-03-08",
-    seed: int = 42,
-) -> dict[str, list[tuple]]:
+def generate_commerce_rows() -> dict[str, list[tuple]]:
     """Seeded twin of MockDataGenerate as plain Python rows (no Spark
     dependency, so fixtures can be persisted at import time for the
     DuckDB oracle): user_visit_action, user_info, product_info,
-    city_info with the reference's value domains."""
-    rng = random.Random(seed)
+    city_info with the reference's value domains. 50 users with 5
+    sessions each, up to 30 actions a session, all on 2024-03-08,
+    seed 7."""
+    rng = random.Random(7)
     u = uuid.UUID(int=rng.getrandbits(128))  # namespace for session ids
 
     actions = []
-    for user_id in range(num_users):
-        for s in range(sessions_per_user):
+    for user_id in range(50):
+        for s in range(5):
             session_id = uuid.uuid5(u, f"{user_id}:{s}").hex
             base_hour = rng.randint(0, 23)
-            for a in range(rng.randint(1, max_actions_per_session)):
-                ts = f"{date} {base_hour:02d}:{rng.randint(0, 59):02d}:{rng.randint(0, 59):02d}"
+            for a in range(rng.randint(1, 30)):
+                mm, ss = rng.randint(0, 59), rng.randint(0, 59)
+                ts = f"2024-03-08 {base_hour:02d}:{mm:02d}:{ss:02d}"
                 kind = ACTIONS[rng.randint(0, 3)]
                 search_kw = None
                 click_cat = click_prod = -1
@@ -126,7 +123,7 @@ def generate_commerce_rows(
                     pay_prods = ",".join(str(rng.randint(0, 99)) for _ in range(rng.randint(1, 3)))
                 actions.append(
                     (
-                        date, user_id, session_id, rng.randint(0, 9), ts, search_kw,
+                        "2024-03-08", user_id, session_id, rng.randint(0, 9), ts, search_kw,
                         click_cat, click_prod, order_cats, order_prods, pay_cats,
                         pay_prods, rng.randint(0, 9),
                     )
@@ -137,7 +134,7 @@ def generate_commerce_rows(
             i, f"user{i}", f"name{i}", rng.randint(0, 59), f"professional{rng.randint(0, 99)}",
             f"city{rng.randint(0, 9)}", "male" if rng.random() < 0.5 else "female",
         )
-        for i in range(num_users)
+        for i in range(50)
     ]
     products = [
         (i, f"product{i}", '{"product_status": %d}' % rng.randint(0, 1))
@@ -152,18 +149,9 @@ def generate_commerce_rows(
     }
 
 
-def generate_commerce_tables(
-    spark: SparkSession,
-    num_users: int = 100,
-    sessions_per_user: int = 11,
-    max_actions_per_session: int = 30,
-    date: str = "2024-03-08",
-    seed: int = 42,
-) -> dict[str, DataFrame]:
+def generate_commerce_tables(spark: SparkSession) -> dict[str, DataFrame]:
     """The row generator as Spark DataFrames (test/ad-hoc entry)."""
-    rows = generate_commerce_rows(
-        num_users, sessions_per_user, max_actions_per_session, date, seed
-    )
+    rows = generate_commerce_rows()
     return {
         "user_visit_action": spark.createDataFrame(
             rows["user_visit_action"], USER_VISIT_ACTION_SCHEMA
@@ -209,13 +197,7 @@ _ARROW_SCHEMAS = {
 }
 
 
-def ensure_commerce_fixtures(
-    num_users: int = 50,
-    sessions_per_user: int = 5,
-    max_actions_per_session: int = 30,
-    date: str = "2024-03-08",
-    seed: int = 7,
-) -> str:
+def ensure_commerce_fixtures() -> str:
     """Write the seeded fixture tables as single parquet files (one per
     table) and return the directory. Idempotent: generation is fully
     deterministic, so an existing complete directory is reused;
@@ -228,16 +210,14 @@ def ensure_commerce_fixtures(
         _REPO_ROOT,
         "spark-warehouse",
         "commerce_fixtures",
-        f"u{num_users}_s{sessions_per_user}_a{max_actions_per_session}_{date}_seed{seed}",
+        "u50_s5_a30_2024-03-08_seed7",
     )
     paths = {t: os.path.join(out_dir, f"{t}.parquet") for t in _ARROW_SCHEMAS}
     if all(os.path.exists(p) for p in paths.values()):
         return out_dir
 
     os.makedirs(out_dir, exist_ok=True)
-    rows = generate_commerce_rows(
-        num_users, sessions_per_user, max_actions_per_session, date, seed
-    )
+    rows = generate_commerce_rows()
     for table, fields in _ARROW_SCHEMAS.items():
         schema = pa.schema([(n, getattr(pa, t)()) for n, t in fields])
         cols = list(zip(*rows[table])) or [[] for _ in fields]

@@ -57,7 +57,6 @@ def write_zordered(
     col_a: str,
     col_b: str,
     n_files: int = 16,
-    bits: int = 16,
 ) -> None:
     """Write ``df`` as ``n_files`` parquet files range-ordered by the
     Z-value of (col_a, col_b). Each file then covers a compact
@@ -71,7 +70,7 @@ def write_zordered(
     times, so spend more on the sample: boundaries land near the
     exact Z-quantiles and each file stays a tight power-of-two block.
     (Restored after the write — it's a per-exchange planning knob.)"""
-    z = zorder_value(col_a, col_b, bits)
+    z = zorder_value(col_a, col_b, 16)
     spark = df.sparkSession
     key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
     prev = spark.conf.get(key, None)

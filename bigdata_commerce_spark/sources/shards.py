@@ -16,27 +16,22 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def with_global_index(
-    df: DataFrame,
-    order_col: str = "doc_id",
-    index_col: str = "idx",
-    bucket_width: int = 1 << 20,
-) -> DataFrame:
-    """Add a contiguous 0-based global index by ``order_col`` order
+def with_global_index(df: DataFrame) -> DataFrame:
+    """Add a contiguous 0-based global index (``idx``) by ``doc_id`` order
     WITHOUT a global single-partition window — the distributed
     replacement for zipWithIndex / monotonically_increasing_id when
     ids must be dense and order-defined (training-example numbering,
     stable row addressing).
 
-    ``order_col`` must be unique (it defines the total order). Bucket
-    prefix sums: rows bucket by order_col // bucket_width; per-bucket
+    ``doc_id`` must be unique (it defines the total order). Bucket
+    prefix sums: rows bucket by doc_id // 2^20; per-bucket
     counts (tiny) get an exclusive running total on the driver-sized
     frame; each row's global index = bucket offset + rank within
     bucket. The within-bucket window partitions by bucket — bounded
     memory, no single-reducer stage."""
     # integer `div`, not float `/`+cast: double rounding would misplace
     # ids above 2^53 and ids exactly at bucket boundaries
-    bucket = F.expr(f"`{order_col}` div {bucket_width}")
+    bucket = F.expr(f"`doc_id` div {1 << 20}")
     rows = df.withColumn("__bucket", bucket)
     counts = rows.groupBy("__bucket").agg(F.count(F.lit(1)).alias("__n"))
     w_off = Window.partitionBy().orderBy("__bucket").rowsBetween(
@@ -45,10 +40,10 @@ def with_global_index(
     offsets = counts.select(
         "__bucket", F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__offset")
     )
-    w_in = Window.partitionBy("__bucket").orderBy(order_col)
+    w_in = Window.partitionBy("__bucket").orderBy("doc_id")
     return (
         rows.join(F.broadcast(offsets), "__bucket")
-        .withColumn(index_col, F.col("__offset") + F.row_number().over(w_in) - 1)
+        .withColumn("idx", F.col("__offset") + F.row_number().over(w_in) - 1)
         .drop("__bucket", "__n", "__offset")
     )
 
@@ -103,33 +98,27 @@ def with_group_shuffled_index(
     )
 
 
-def with_shuffled_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    salt: str = "shuf",
-    index_col: str = "idx",
-    bucket_width: int = 1 << 44,
-) -> DataFrame:
+def with_shuffled_index(df: DataFrame, salt: str = "shuf") -> DataFrame:
     """Deterministic global SHUFFLE order: a dense 0-based index over
     a seeded pseudo-random permutation of the rows — the
     shuffle-before-sharding step of training-data prep, reproducible
     across runs/engines (no rand(), no partitioning dependence).
 
-    ``id_col`` must be unique (same contract as with_global_index —
+    ``doc_id`` must be unique (same contract as with_global_index —
     duplicate ids share both the hash key and the tiebreak, making
     their relative order partitioning-dependent). Order key = the
     first 15 hex chars of md5(id:salt) as a 60-bit integer (ties
     broken by id, so the order is total even on hash collisions); the index comes from the same two-level bucketed
     prefix sum as with_global_index — key-space buckets of
-    ``bucket_width`` give ~2^16 count rows for the driver-sized
+    2^44 give ~2^16 count rows for the driver-sized
     exclusive running total, and the within-bucket window stays
     bounded. Changing ``salt`` draws a fresh permutation.
     """
     from bigdata_commerce_spark.functions import md5_uniform60
 
-    key = md5_uniform60(id_col, salt)
+    key = md5_uniform60("doc_id", salt)
     rows = df.withColumn("__k", key).withColumn(
-        "__bucket", F.expr(f"__k div {bucket_width}")
+        "__bucket", F.expr(f"__k div {1 << 44}")
     )
     counts = rows.groupBy("__bucket").agg(F.count(F.lit(1)).alias("__n"))
     w_off = Window.partitionBy().orderBy("__bucket").rowsBetween(
@@ -138,9 +127,9 @@ def with_shuffled_index(
     offsets = counts.select(
         "__bucket", F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__offset")
     )
-    w_in = Window.partitionBy("__bucket").orderBy("__k", id_col)
+    w_in = Window.partitionBy("__bucket").orderBy("__k", "doc_id")
     return (
         rows.join(F.broadcast(offsets), "__bucket")
-        .withColumn(index_col, F.col("__offset") + F.row_number().over(w_in) - 1)
+        .withColumn("idx", F.col("__offset") + F.row_number().over(w_in) - 1)
         .drop("__bucket", "__n", "__offset", "__k")
     )

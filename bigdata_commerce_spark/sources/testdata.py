@@ -66,8 +66,8 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, sf_dir) for t in TABLES}
+def load_tables(spark: SparkSession) -> dict[str, DataFrame]:
+    return {t: load_table(spark, t, DEFAULT_SF_DIR) for t in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:

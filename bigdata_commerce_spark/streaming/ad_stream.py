@@ -101,27 +101,3 @@ def sliding_windows(events: DataFrame) -> DataFrame:
         .withColumn("window_end", F.timestamp_micros(start + F.lit(60 * minute_us)))
         .withColumn("window_start", F.timestamp_micros(start))
     )
-
-
-def blacklist_from_counts(counts: DataFrame, threshold: int = 100) -> DataFrame:
-    """Req 7 head: users over the per-(date, ad) threshold. Applied to
-    the state table inside foreachBatch (see pipelines.py), mirroring
-    ``AdverStat.scala:287-309`` without per-key DB lookups."""
-    return counts.where(F.col("click_count") > threshold).select("user_id").distinct()
-
-
-def province_top3_from_counts(counts: DataFrame) -> DataFrame:
-    """Req 9 head: top-3 ads per (date, province) from the cumulative
-    state (the reference recomputes it per batch from its state stream
-    — ``AdverStat.scala:134-191``)."""
-    from bigdata_commerce_spark.operators.topk import top_k_per_group
-
-    per_province = counts.groupBy("event_date", "province", "ad_id").agg(
-        F.sum("click_count").alias("click_count")
-    )
-    return top_k_per_group(
-        per_province,
-        ["event_date", "province"],
-        [F.desc("click_count"), F.asc("ad_id")],
-        k=3,
-    )

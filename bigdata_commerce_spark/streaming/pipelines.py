@@ -14,6 +14,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_commerce_spark.operators import adstats
 from bigdata_commerce_spark.streaming import ad_stream, sinks
 
 
@@ -129,7 +130,7 @@ def run_ad_pipeline(
             )
             counts_state = backend.read_state("user_counts")
             blacklist_sink(
-                ad_stream.blacklist_from_counts(counts_state, blacklist_threshold),
+                adstats.blacklist_head(counts_state, blacklist_threshold),
                 epoch_id,
             )
 
@@ -140,7 +141,10 @@ def run_ad_pipeline(
                 epoch_id,
             )
             cum_state = backend.read_state("cumulative")
-            top3_sink(ad_stream.province_top3_from_counts(cum_state), epoch_id)
+            per_province = cum_state.groupBy("event_date", "province", "ad_id").agg(
+                F.sum("click_count").alias("click_count")
+            )
+            top3_sink(adstats.province_top3_head(per_province), epoch_id)
 
             # Req 10: sliding 60min/1min windows, additive per batch.
             trend = ad_stream.sliding_windows(clicks).select(

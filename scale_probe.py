@@ -217,8 +217,8 @@ def build_relational_corpus(spark, docs10: str, emb10: str, n_copies: int) -> st
 
 
 
-def run_probe(pairs: dict, headline: str, labels: tuple[str, str] = ("1x", "10x")) -> dict:
-    a, b = labels
+def run_probe(pairs: dict, headline: str) -> dict:
+    a, b = ("1x", "10x")
     out = {"metric": headline, "copies": COPIES, "ops": {}}
     for name, (fn1, fn10) in pairs.items():
         # symmetric warm-up: both sides pay one run before timing, so

@@ -12,14 +12,14 @@ from bigdata_commerce_spark.operators.attribution import (
 _T0 = dt.datetime(2024, 1, 10, 12, 0, 0)
 
 
-def _run(spark, touches, convs, **kw):
+def _run(spark, touches, convs):
     t = spark.createDataFrame(
         touches, "user_id long, ts timestamp, event_id long, channel string"
     )
     c = spark.createDataFrame(
         convs, "user_id long, ts timestamp, event_id long, value double"
     )
-    out = multitouch_attribution(t, c, **kw)
+    out = multitouch_attribution(t, c)
     return {r["channel"]: r.asDict() for r in out.collect()}
 
 

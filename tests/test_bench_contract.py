@@ -82,21 +82,23 @@ def test_rebaseline_only_appends_shots_with_provenance(tmp_path, monkeypatch):
         def stop(self):
             pass
 
-    shots = iter([9.0, 0.5, 0.7, 0.6])
+    shots = iter([9.0, 0.5, 0.7, 0.6, 0.8, 0.4])
     monkeypatch.setattr(bench, "REPO", tmp_path)
     monkeypatch.setattr(bench, "ALL_QUERIES", {"a": None, "b": None})
     monkeypatch.setattr(bench, "get_spark", lambda **kw: _Spark())
     monkeypatch.setattr(bench, "warm_session", lambda spark, sf_dir: None)
     monkeypatch.setattr(bench, "time_query", lambda fn, spark, sf_dir: (next(shots), "fa2"))
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path / "sf0.1"))
-    bench.rebaseline(n_warm=3, names=["a"])
+    bench.rebaseline(names=["a"])
 
     out = json.loads((tmp_path / "BENCH_BASELINE.json").read_text())
     assert out["queries"] == {"a": 0.6, "b": 2.0} and out["value"] == 2.6
-    assert out["shots"] == {"a": [1.0, 1.0, 1.0, 9.0, 0.5, 0.7, 0.6], "b": [2.0, 2.0, 2.0]}
+    assert out["shots"] == {
+        "a": [1.0, 1.0, 1.0, 9.0, 0.5, 0.7, 0.6, 0.8, 0.4], "b": [2.0, 2.0, 2.0]
+    }
     assert out["plan_fp"] == {"a": "fa2", "b": "fb"}
     (entry,) = out["provenance"]["entries"]["a"]
-    assert entry["shots"] == 4 and entry["head"] and entry["recorded_at"].endswith("Z")
+    assert entry["shots"] == 6 and entry["head"] and entry["recorded_at"].endswith("Z")
     assert "b" not in out["provenance"]["entries"]
     assert out["provenance"]["cpus"] == 4
     assert baseline_comparable(out, 4) and not baseline_comparable(out, 32)

@@ -17,7 +17,7 @@ from bigdata_commerce_spark.sources.commerce import generate_commerce_tables, no
 
 @pytest.fixture(scope="module")
 def tables(spark):
-    t = generate_commerce_tables(spark, num_users=50, sessions_per_user=5, seed=7)
+    t = generate_commerce_tables(spark)
     actions = normalize_actions(t["user_visit_action"]).cache()
     actions.count()
     return {
@@ -111,12 +111,12 @@ def test_req1_filters_apply(tables, sessions):
 
 def test_req2_extract_quota(tables, sessions):
     params = C.TaskParams()
-    out = C.session_random_extract(sessions, params, per_day=100).toPandas()
+    out = C.session_random_extract(sessions, params).toPandas()
     # one generated day -> at most ~100 + one-per-hour rounding slack
     assert 0 < len(out) <= 100 + 24
     assert set(out["s_hour"]) <= set(range(24))
     # deterministic: same input -> same extraction
-    out2 = C.session_random_extract(sessions, params, per_day=100).toPandas()
+    out2 = C.session_random_extract(sessions, params).toPandas()
     assert sorted(out.session_id) == sorted(out2.session_id)
 
 

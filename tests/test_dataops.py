@@ -323,13 +323,13 @@ def test_unigram_kl_hand_computed(spark):
         [(1, "a", "apple apple banana"), (2, "b", "banana banana cherry")],
         "doc_id long, source string, text string",
     )
-    rows = unigram_kl_report(docs, "a", "b", top_k=10).collect()
+    rows = unigram_kl_report(docs, "a", "b").collect()
     by_token = {r.token: r for r in rows}
     assert set(by_token) == {"apple", "banana", "cherry"}
     assert by_token["apple"].contribution == round(0.5 * 1.0986122886681098, 8)
     assert by_token["apple"].rank == 1 and by_token["apple"].c_a == 2
     assert rows[0].kl_total == 0.298627
-    rev = unigram_kl_report(docs, "b", "a", top_k=10).collect()
+    rev = unigram_kl_report(docs, "b", "a").collect()
     assert rev[0].token in ("banana", "cherry")  # b's over-represented side
     assert rev[0].kl_total != rows[0].kl_total  # KL is asymmetric
 

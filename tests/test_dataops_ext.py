@@ -1631,15 +1631,18 @@ def test_scd2_join_point_in_time_semantics(spark):
         [(1, d(2020, 1, 1), "a"), (1, d(2020, 1, 1), "b")],
         "cust long, ts date, tier string",
     )
-    with _pytest.raises(ValueError, match="same instant"):
-        changes_to_scd2(dup, ["cust"], "ts")
+    with _pytest.raises(Exception, match='"cust":1.*same instant'):
+        changes_to_scd2(dup, ["cust"], "ts").collect()
 
 
-def test_scd2_validate_off_is_lazy_and_skips_the_check(spark):
-    """validate=False: plan construction runs ZERO jobs (no eager
-    duplicate-instant scan) — the off-switch for callers whose change
-    log is already validated (100x: the check doubles read cost)."""
+def test_scd2_build_is_lazy_and_the_check_runs_in_the_plan(spark):
+    """Plan construction runs ZERO jobs: the duplicate-instant check
+    is part of the plan, so it fails the first action, even one that
+    reads no interval column. Two NULL instants of one key are a
+    duplicate; a key's single NULL instant is not."""
     import datetime as dt
+
+    import pytest as _pytest
 
     from bigdata_commerce_spark.operators.scd2 import changes_to_scd2
 
@@ -1650,11 +1653,19 @@ def test_scd2_validate_off_is_lazy_and_skips_the_check(spark):
     )
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])
-    dim = changes_to_scd2(dup, ["cust"], "ts", validate=False)
+    dim = changes_to_scd2(dup, ["cust"], "ts")
     after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before, "validate=False must not launch a job"
-    # the duplicate slips through by explicit caller choice
-    assert dim.count() == 2
+    assert after == before, "building the intervals must not launch a job"
+    with _pytest.raises(Exception, match='"cust":1.*same instant'):
+        dim.count()
+    nulls = spark.createDataFrame(
+        [(1, None, "a"), (1, None, "b"), (2, None, "c"), (2, d(2020, 1, 1), "d")],
+        "cust long, ts date, tier string",
+    )
+    with _pytest.raises(Exception, match='"cust":1.*same instant'):
+        changes_to_scd2(nulls, ["cust"], "ts").collect()
+    ok = changes_to_scd2(nulls.where("cust = 2"), ["cust"], "ts").collect()
+    assert sorted((r.tier, r.valid_to) for r in ok) == [("c", d(2020, 1, 1)), ("d", None)]
 
 
 def test_scd2_join_rejects_column_name_collisions(spark):

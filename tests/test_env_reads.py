@@ -31,10 +31,6 @@ ALLOWED_ENV = {
     "JAVA_TOOL_OPTIONS": "a collector chosen here must not meet the "
     "default JVM profile's serial-GC flag",
     "JDK_JAVA_OPTIONS": "same as JAVA_TOOL_OPTIONS, for the launcher",
-    "SPARK_GRAFT_OBJ_AGG_FALLBACK": "object-hash-agg sort fallback "
-    "threshold; deployments with heavy collect_list state lower it",
-    "SPARK_GRAFT_MIN_PARTITION_SIZE": "AQE coalesce floor; clusters that "
-    "prefer fewer, larger tasks raise it",
     "SPARK_HOME": "the Spark install whose conf directory must hold only "
     "templates before the driver JVM's CDS archive applies, and whose jars "
     "key that archive",

@@ -87,9 +87,6 @@ def test_init_store_never_clobbers_existing(spark, tmp_path):
     n = spark.read.parquet(store).count()
     inc.init_store(spark, store)  # repeated init at job start: no-op
     assert spark.read.parquet(store).count() == n
-    inc.init_store(spark, store, overwrite=True)
-    empty = spark.read.schema(inc.store_schema()).parquet(store)
-    assert empty.count() == 0
 
 
 def test_non_integer_id_rejected(spark, tmp_path):

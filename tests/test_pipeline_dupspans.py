@@ -92,7 +92,8 @@ def test_dupspan_curation_chain_composes(spark):
     )
     assert purity == 0
     train = split.where("split = 'train'")
-    up = upsample_epochs(train, {}, default=2.0)
+    sources = [r.source for r in train.select("source").distinct().collect()]
+    up = upsample_epochs(train, dict.fromkeys(sources, 2.0))
     assert up.count() == 2 * train.count()  # every train doc, two epochs
     # epochs are copies of the SAME scrubbed text
     mismatch = (

@@ -45,27 +45,27 @@ def test_robust_flags_survive_outlier_contamination(spark):
     # the classic z-score path misses every one of them (masking);
     # median/MAD flags them all. This is the breakdown-point
     # property the operator exists for.
-    rows = [Row(k=1, v=100.0 + (i % 7) - 3.0) for i in range(40)] + [
-        Row(k=1, v=200.0) for _ in range(5)
+    rows = [Row(k=1, value=100.0 + (i % 7) - 3.0) for i in range(40)] + [
+        Row(k=1, value=200.0) for _ in range(5)
     ]
     df = spark.createDataFrame(rows)
-    robust = robust_flag_anomalies(df, key_col="k", value_col="v", z_threshold=3.5)
-    flagged = {r.v for r in robust.where("is_anomaly").collect()}
+    robust = robust_flag_anomalies(df, key_col="k", z_threshold=3.5)
+    flagged = {r.value for r in robust.where("is_anomaly").collect()}
     assert flagged == {200.0}
-    classic = flag_anomalies(df, key_col="k", value_col="v", z_threshold=3.5)
+    classic = flag_anomalies(df, key_col="k", z_threshold=3.5)
     assert classic.where("is_anomaly").count() == 0  # masked by inflated sd
 
 
 def test_robust_zero_mad_and_null_key_rows_kept(spark):
     rows = [
-        Row(k=1, v=5.0),
-        Row(k=1, v=5.0),
-        Row(k=1, v=5.0),
-        Row(k=1, v=99.0),  # minority point; MAD still 0
-        Row(k=None, v=7.0),
+        Row(k=1, value=5.0),
+        Row(k=1, value=5.0),
+        Row(k=1, value=5.0),
+        Row(k=1, value=99.0),  # minority point; MAD still 0
+        Row(k=None, value=7.0),
     ]
     out = robust_flag_anomalies(
-        spark.createDataFrame(rows), key_col="k", value_col="v"
+        spark.createDataFrame(rows), key_col="k"
     )
     assert out.count() == 5  # LEFT joins: NULL-key row survives
     k1 = out.where("k = 1").collect()

@@ -81,6 +81,38 @@ def test_local_master_gets_the_profile(plain_java_env, master):
     assert _session_conf(master, cds=cds) == {_OPTS: " ".join([_PROFILE, *cds])}
 
 
+def test_extra_conf_wins_over_a_builder_default(monkeypatch):
+    """``extra_conf`` is applied after the builder's defaults, so a
+    deployment overrides any of them, here the AQE coalesce floor. The
+    builder is a recorder and a JVM counts as already running: no
+    session starts."""
+    from bigdata_commerce_spark import session
+
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+    class _Builder:
+        conf: dict[str, str] = {}
+
+        def config(self, k, v):
+            self.conf[k] = v
+            return self
+
+        def __getattr__(self, name):
+            return lambda *a, **kw: self
+
+        def getOrCreate(self):
+            context = type("C", (), {"setLogLevel": lambda level: None})
+            return type("S", (), {"sparkContext": context})()
+
+    builder = _Builder()
+    monkeypatch.setattr(session, "SparkSession", type("SS", (), {"builder": builder}))
+    monkeypatch.setattr(session, "SparkContext", type("SC", (), {"_gateway": object()}))
+    session.get_spark(master="local[1]")
+    assert builder.conf[key] == "64k"
+    session.get_spark(master="local[1]", extra_conf={key: "1m"})
+    assert builder.conf[key] == "1m"
+
+
 def test_archive_flags_name_the_archive_or_the_dump():
     use = _Cds(Path("/a/k-9.jsa")).flags()
     dump = _Cds(Path("/a/k.7.tmp"), lock=3).flags()

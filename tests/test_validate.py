@@ -63,11 +63,11 @@ def test_unique_counts_surplus_rows(spark):
         [(1, "a"), (1, "a"), (1, "a"), (2, "b"), (None, "c"), (None, "c")],
         "k long, v string",
     )
-    got = _report(df, [V.unique("k", "v"), V.unique("v", name="v_alone")])
+    got = _report(df, [V.unique("k", "v"), V.unique("v")])
     # (1,a) has 2 surplus rows; (None,c) has 1 — NULL keys group together
     assert got["unique(k,v)"].n_violations == 3
     assert got["unique(k,v)"].n_rows == 6
-    assert got["v_alone"].n_violations == 3
+    assert got["unique(v)"].n_violations == 3
     # passing case
     ok = _report(df.limit(0), [V.unique("k")])
     assert ok["unique(k)"].n_violations == 0 and ok["unique(k)"].passed
@@ -111,18 +111,20 @@ def test_empty_input_reports_zero_violations(spark):
 
 
 def test_agg_checks_share_the_pass(spark):
-    df = spark.createDataFrame([(1, 5.0), (2, 7.0), (3, 9.0)], "id long, x double")
+    df = spark.createDataFrame(
+        [(1, 5.0, 5.0), (2, 7.0, 7.0), (3, 9.0, 9.0)], "id long, x double, y double"
+    )
     got = _report(
         df,
         [
             V.not_null("id"),
             V.mean_in_range("x", 6, 8),
-            V.mean_in_range("x", 0, 1, name="too_low"),
+            V.mean_in_range("y", 0, 1),
             V.agg_satisfies("spread_ok", (F.max("x") - F.min("x")) < 10),
         ],
     )
     assert got["mean_in_range(x)"].n_violations == 0 and got["mean_in_range(x)"].passed
-    assert got["too_low"].n_violations == 1 and not got["too_low"].passed
+    assert got["mean_in_range(y)"].n_violations == 1 and not got["mean_in_range(y)"].passed
     assert got["spread_ok"].passed
     # still one aggregate for everything
     rep = V.validate(df, [V.not_null("id"), V.mean_in_range("x", 0, 10)])
