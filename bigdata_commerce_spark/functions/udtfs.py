@@ -43,13 +43,10 @@ def _normalize(text: str) -> str:
     return _WS.sub(" ", text.strip(" ").lower())
 
 
-def make_chunk_udtf(chunk_tokens: int = 256, overlap: int = 32):
-    """Build the Arrow-optimized chunker UDTF class for the given
-    window geometry. Parameters are baked via closure because UDTF
-    constructors take no user args at call sites."""
-    if not 0 <= overlap < chunk_tokens:
-        raise ValueError(f"need 0 <= overlap < chunk_tokens, got {overlap}/{chunk_tokens}")
-    stride = chunk_tokens - overlap
+def make_chunk_udtf():
+    """Build the Arrow-optimized chunker UDTF class: 256-token windows
+    with a 32-token overlap."""
+    stride = 256 - 32
 
     class ChunkDocuments:
         def eval(self, text: str):
@@ -62,7 +59,7 @@ def make_chunk_udtf(chunk_tokens: int = 256, overlap: int = 32):
             # form's sequence(0, size-1, stride)
             toks = _normalize(text).split(" ")
             for chunk_no, s in enumerate(range(0, len(toks), stride)):
-                piece = toks[s : s + chunk_tokens]
+                piece = toks[s : s + 256]
                 yield chunk_no, len(piece), " ".join(piece)
 
     schema = "chunk_no: int, chunk_n_tokens: int, chunk_text: string"
@@ -82,7 +79,7 @@ def chunk_documents_udtf(df: DataFrame) -> DataFrame:
     """
     spark = df.sparkSession
     fn_name = "__chunk_udtf_256_32"
-    spark.udtf.register(fn_name, make_chunk_udtf(256, 32))
+    spark.udtf.register(fn_name, make_chunk_udtf())
     # Per-call unique view name: a geometry-derived name would race
     # concurrent callers (B's createOrReplaceTempView swapping the
     # frame under A's sql()). spark.sql analyzes EAGERLY, so the view

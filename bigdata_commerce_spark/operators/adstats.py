@@ -24,15 +24,6 @@ from pyspark.sql import functions as F
 from bigdata_commerce_spark.operators.topk import top_k_per_group
 
 
-def user_key_counts(
-    df: DataFrame,
-    key_cols: tuple[str, ...] = ("event_date", "user_id", "ad_id"),
-) -> DataFrame:
-    """Click counts per (date, user, ad) — the blacklist base
-    (``AdverStat.scala:250-268``)."""
-    return df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("click_count"))
-
-
 def blacklist_head(counts: DataFrame, threshold: int) -> DataFrame:
     """Req 7 head: the distinct users of the ``click_count`` rows over
     ``threshold`` (``AdverStat.scala:287-309`` — there a per-key MySQL
@@ -54,20 +45,11 @@ def province_top3_head(counts: DataFrame) -> DataFrame:
     )
 
 
-def blacklist(
-    df: DataFrame,
-    threshold: int = 100,
-    key_cols: tuple[str, ...] = ("event_date", "user_id", "ad_id"),
-) -> DataFrame:
-    """Req 7 in batch: users whose per-(date, ad) count exceeds
-    ``threshold``."""
-    return blacklist_head(user_key_counts(df, key_cols), threshold)
-
-
 def cumulative_stats(df: DataFrame) -> DataFrame:
-    """Req 8: total clicks per (date, province, city, ad). Batch = one
-    aggregate; streaming = stateful agg in update mode
-    (``AdverStat.scala:193-247``'s updateStateByKey)."""
+    """Req 8: total clicks per (date, province, city, ad), one
+    aggregate. The ad topology sums each batch into its additive
+    ``cumulative`` state instead (``AdverStat.scala:193-247``'s
+    updateStateByKey)."""
     return df.groupBy("event_date", "province", "city", "ad_id").agg(
         F.count(F.lit(1)).alias("click_count")
     )

@@ -17,8 +17,7 @@ dedup and the Misra-Gries heavy hitters).
 Representation: the filter is a DataFrame of (word_idx: long,
 bits: long) — the set bits of an m-bit array packed into 64-bit
 words, at most m/64 rows, only non-zero words materialized. That
-makes it mergeable (union + bit_or — the same mergeable-state
-discipline as the HLL rollup), incrementally appendable, and
+makes it mergeable (union + bit_or), incrementally appendable, and
 persistable next to the table it summarizes.
 
 Hashing is Kirsch-Mitzenmacher double hashing over md5 (public
@@ -114,9 +113,8 @@ def bloom_might_contain(
     bloom: DataFrame,
     num_bits: int,
     num_hashes: int,
-    flag_col: str = "might_contain",
 ) -> DataFrame:
-    """Add ``flag_col``: false = DEFINITELY not in the filtered key
+    """Add ``__maybe``: false = DEFINITELY not in the filtered key
     set, true = maybe (false positives at the filter's fpp). k
     broadcast hash joins against the filter table — the probe side
     never shuffles and nothing leaves codegen except the tiny build.
@@ -149,7 +147,7 @@ def bloom_might_contain(
         for i in range(num_hashes)
         for c in (f"__p{i}", f"__w{i}", f"__m{i}", f"__b{i}")
     ]
-    return out.withColumn(flag_col, F.coalesce(hit, F.lit(False))).drop(*drop)
+    return out.withColumn("__maybe", F.coalesce(hit, F.lit(False))).drop(*drop)
 
 
 def _build_for_keys(
@@ -179,7 +177,7 @@ def bloom_semi_join(
     """
     key_col = key_col or big_col
     bloom, m, k = _build_for_keys(keys, key_col, fpp)
-    pruned = bloom_might_contain(big, big_col, bloom, m, k, "__maybe").where(
+    pruned = bloom_might_contain(big, big_col, bloom, m, k).where(
         F.col("__maybe")
     )
     # no distinct on the keys side: semi joins already have set
@@ -210,7 +208,7 @@ def bloom_anti_join(
     """
     key_col = key_col or big_col
     bloom, m, k = _build_for_keys(keys, key_col, fpp)
-    flagged = bloom_might_contain(big, big_col, bloom, m, k, "__maybe")
+    flagged = bloom_might_contain(big, big_col, bloom, m, k)
     definitely_absent = flagged.where(~F.col("__maybe")).drop("__maybe")
     maybe = flagged.where(F.col("__maybe")).drop("__maybe")
     verified_absent = maybe.join(

@@ -64,25 +64,22 @@ def poisson_bootstrap_ci(
     df: DataFrame,
     value_col: str,
     id_col: str,
-    group_cols: list[str] | None = None,
-    n_resamples: int = 40,
     level: float = 0.95,
 ) -> DataFrame:
-    """One row per group: ``(group..., n_rows, mean_value, ci_lo,
+    """One row per event type: ``(event_type, n_rows, mean_value, ci_lo,
     ci_hi)`` where the CI endpoints are the order statistics of the
     B Poisson-bootstrap resample means at ranks ``ceil(a*B)`` /
     ``ceil((1-a)*B)`` with ``a = (1 - level) / 2`` (computed over the
     resamples whose weight total is positive; a resample that drew
     weight 0 everywhere carries no information and is skipped).
     NULL values are excluded."""
-    group_cols = group_cols or []
     ts = poisson_cdf_thresholds()
 
     b = F.explode(
-        F.sequence(F.lit(0), F.lit(n_resamples - 1))
+        F.sequence(F.lit(0), F.lit(39))
     ).alias("__b")
     rows = df.where(F.col(value_col).isNotNull()).select(
-        *group_cols, id_col, value_col
+        "event_type", id_col, value_col
     ).select("*", b)
     u = F.conv(
         F.substring(
@@ -105,7 +102,7 @@ def poisson_bootstrap_ci(
 
     per_resample = (
         rows.withColumn("__w", w)
-        .groupBy(*group_cols, "__b")
+        .groupBy("event_type", "__b")
         .agg(
             F.sum("__w").alias("__wsum"),
             # weight as DECIMAL(2,0): keeps the product inside
@@ -117,7 +114,7 @@ def poisson_bootstrap_ci(
         )
         .where(F.col("__wsum") > 0)
         .select(
-            *group_cols,
+            "event_type",
             "__b",
             F.round(
                 F.col("__wxsum").cast("string").cast("double")
@@ -126,8 +123,8 @@ def poisson_bootstrap_ci(
             ).alias("__mean_b"),
         )
     )
-    w_rank = Window.partitionBy(*group_cols).orderBy("__mean_b", "__b")
-    w_n = Window.partitionBy(*group_cols)
+    w_rank = Window.partitionBy("event_type").orderBy("__mean_b", "__b")
+    w_n = Window.partitionBy("event_type")
     ranked = per_resample.withColumn(
         "__rnk", F.row_number().over(w_rank)
     ).withColumn("__nb", F.count(F.lit(1)).over(w_n))
@@ -142,7 +139,7 @@ def poisson_bootstrap_ci(
         F.expr(f"(__nb * {lo_num} + {den} - 1) div {den}"), F.lit(1)
     )
     hi_k = F.expr(f"(__nb * {hi_num} + {den} - 1) div {den}")
-    ci = ranked.groupBy(*group_cols).agg(
+    ci = ranked.groupBy("event_type").agg(
         F.max(F.when(F.col("__rnk") == lo_k, F.col("__mean_b"))).alias(
             "ci_lo"
         ),
@@ -152,7 +149,7 @@ def poisson_bootstrap_ci(
     )
     base = (
         df.where(F.col(value_col).isNotNull())
-        .groupBy(*group_cols)
+        .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.round(
@@ -164,6 +161,4 @@ def poisson_bootstrap_ci(
             ).alias("mean_value"),
         )
     )
-    if group_cols:
-        return base.join(ci, group_cols)
-    return base.crossJoin(F.broadcast(ci))
+    return base.join(ci, ["event_type"])

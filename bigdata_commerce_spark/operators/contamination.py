@@ -27,11 +27,7 @@ from pyspark.sql import functions as F
 from bigdata_commerce_spark.operators.dedup import _exploded_shingles
 
 
-def contamination_report(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 3,
-) -> DataFrame:
+def contamination_report(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Per (corpus doc, benchmark doc) with any shared word n-gram:
     (corpus_id, bench_id, shared_ngrams, bench_ngrams, coverage) where
     coverage = shared / benchmark's distinct n-gram count — the usual
@@ -41,10 +37,10 @@ def contamination_report(
     Shingles are DISTINCT per document on both sides (dedup's
     contract), so shared_ngrams is set-intersection cardinality.
     """
-    c = _exploded_shingles(corpus, "text", "doc_id", n).withColumnRenamed(
+    c = _exploded_shingles(corpus, "text", "doc_id", 3).withColumnRenamed(
         "id", "corpus_id"
     )
-    b = _exploded_shingles(benchmark, "text", "doc_id", n).withColumnRenamed(
+    b = _exploded_shingles(benchmark, "text", "doc_id", 3).withColumnRenamed(
         "id", "bench_id"
     )
     bench_sizes = b.groupBy("bench_id").agg(F.count(F.lit(1)).alias("bench_ngrams"))

@@ -102,13 +102,7 @@ def _ceil_div(numer: Column, q: int) -> Column:
     return ((a - F.pmod(a, F.lit(q))) / F.lit(q)).cast("long")
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
+def jaccard_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Near-duplicate pairs by **exact** n-gram Jaccard similarity,
     with PPJoin-style prefix filtering for candidate generation.
 
@@ -142,7 +136,7 @@ def jaccard_pairs(
 
     # ex feeds doc-frequency AND the per-doc fold — persist, or the
     # regex tokenize+shingle pipeline (the CPU-heavy part) runs twice.
-    ex = persist_bounded(_exploded_shingles(df, text_col, id_col, n))
+    ex = persist_bounded(_exploded_shingles(df, "text", "doc_id", 3))
     doc_freq = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     # Exact integer arithmetic for the filters: t as a rational p/q
     # (float t*n breaks exactness at boundaries — 0.8*5 in double is
@@ -196,7 +190,7 @@ def jaccard_pairs(
     return _verify_jaccard_arrays(candidates, per_doc, threshold)
 
 
-def containment_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
+def containment_pairs(df: DataFrame) -> DataFrame:
     """Near-duplicate ORDERED pairs by exact shingle-set CONTAINMENT
     — Broder's second resemblance measure: C(A, B) = |A ∩ B| / |A|,
     the fraction of the CONTAINED document's shingles the container
@@ -238,7 +232,7 @@ def containment_pairs(df: DataFrame, threshold: float = 0.8) -> DataFrame:
         .withColumn("pos", F.row_number().over(w))
         .withColumn("n_shingles", F.count(F.lit(1)).over(Window.partitionBy("id")))
     )
-    p, q = _threshold_fraction(threshold)
+    p, q = _threshold_fraction(0.8)
     ceil_tn = _ceil_div(F.lit(p) * F.col("n_shingles"), q)
     prefix = ranked.where(F.col("pos") <= F.col("n_shingles") - ceil_tn + 1).select(
         "id", "shingle"
@@ -375,7 +369,7 @@ def _minhash_digest_barrier(ex: DataFrame, num_hashes: int) -> tuple[DataFrame, 
     return bound, aggs
 
 
-def minhash_signatures(df: DataFrame, num_hashes: int = 8) -> DataFrame:
+def minhash_signatures(df: DataFrame) -> DataFrame:
     """MinHash signature per document: component i is
     min(hash_i(shingle)) over the shingle set.
 
@@ -384,16 +378,11 @@ def minhash_signatures(df: DataFrame, num_hashes: int = 8) -> DataFrame:
     (bound once via _minhash_digest_barrier).
     """
     ex = _exploded_shingles(df, "text", "doc_id", 3)
-    bound, aggs = _minhash_digest_barrier(ex, num_hashes)
+    bound, aggs = _minhash_digest_barrier(ex, 8)
     return bound.groupBy("id").agg(*aggs)
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    num_hashes: int = 8,
-    bands: int = 4,
-    threshold: float = 0.8,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, bands: int = 4) -> DataFrame:
     """MinHash + LSH near-dup pairs: band the signature, bucket-join
     candidates, then verify candidates with *exact* Jaccard.
 
@@ -407,11 +396,11 @@ def minhash_lsh_pairs(
     # the candidate join silently degenerates to the all-pairs cross
     # product this module exists to avoid; non-divisible bands would
     # silently drop trailing components.
-    if not 1 <= bands <= num_hashes or num_hashes % bands:
+    if not 1 <= bands <= 8 or 8 % bands:
         raise ValueError(
-            f"bands must divide num_hashes (got bands={bands}, num_hashes={num_hashes})"
+            f"bands must divide num_hashes (got bands={bands}, num_hashes=8)"
         )
-    rows_per_band = num_hashes // bands
+    rows_per_band = 8 // bands
     from bigdata_commerce_spark.operators.cache_util import persist_bounded
 
     # ONE pass over the shingle stream (optimization round 13, guide
@@ -424,7 +413,7 @@ def minhash_lsh_pairs(
     # the verify's size(array_intersect) over the distinct per-doc
     # arrays equals the old exploded join count.
     ex = _exploded_shingles(df, "text", "doc_id", 3)
-    bound, aggs = _minhash_digest_barrier(ex, num_hashes)
+    bound, aggs = _minhash_digest_barrier(ex, 8)
     per_doc = persist_bounded(
         bound.groupBy("id").agg(
             *aggs,
@@ -453,7 +442,7 @@ def minhash_lsh_pairs(
         .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
         .distinct()
     )
-    return _verify_jaccard_arrays(candidates, per_doc, threshold)
+    return _verify_jaccard_arrays(candidates, per_doc, 0.8)
 
 
 # ---------------------------------------------------------------------------
@@ -463,9 +452,7 @@ def minhash_lsh_pairs(
 SIMHASH_NIBBLES = 15  # 15 hex chars = 60 bits, stays in signed int64
 
 
-def simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """60-bit SimHash per document from md5(shingle) nibbles.
 
     bit(p,b) of the hash contributes +1/-1 per shingle; the final bit
@@ -473,7 +460,7 @@ def simhash(
     everything stays in integer arithmetic so the oracle (strpos-based
     nibble decode) reproduces it exactly.
     """
-    ex = _exploded_shingles(df, text_col, id_col, n)
+    ex = _exploded_shingles(df, "text", "doc_id", 3)
     # One-element explode barrier (same trick as _exploded_shingles):
     # without it CollapseProject inlines the md5 alias into all 15
     # nibble decodes, hashing every shingle 15x. Generate binds the
@@ -508,7 +495,7 @@ def simhash(
     return summed.selectExpr("id", f"{value} AS simhash")
 
 
-def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
+def simhash_pairs(df: DataFrame) -> DataFrame:
     """SimHash near-dup pairs: band the 60-bit hash into 4 x 15-bit
     chunks (pigeonhole: any pair with Hamming distance <= 3 shares at
     least one chunk; the hash table is persisted — the chunk self-join
@@ -517,7 +504,7 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     bit_count(xor) — never an all-pairs comparison."""
     from bigdata_commerce_spark.operators.cache_util import persist_bounded
 
-    sh = persist_bounded(simhash(df, "text", "doc_id", 3))
+    sh = persist_bounded(simhash(df))
     chunks = sh.select(
         "id",
         "simhash",
@@ -550,7 +537,7 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
             F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
         )
         .distinct()
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= 3)
     )
 
 
@@ -594,7 +581,7 @@ def similarity_join(
         return df.select((i * 2 + offset + guard).alias("doc_id"), F.col("text"))
 
     tagged = _tag(left, 0).unionByName(_tag(right, 1))
-    pairs = jaccard_pairs(tagged, "text", "doc_id", 3, threshold)
+    pairs = jaccard_pairs(tagged, threshold)
     cross = pairs.where(F.pmod("id1", F.lit(2)) != F.pmod("id2", F.lit(2)))
     left_tag = F.when(F.pmod("id1", F.lit(2)) == 0, F.col("id1")).otherwise(F.col("id2"))
     right_tag = F.when(F.pmod("id1", F.lit(2)) == 1, F.col("id1")).otherwise(F.col("id2"))

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
-    node_col: str = "id",
     max_iterations: int = 20,
     small_graph_threshold: int = 1_000_000,
 ) -> DataFrame:
@@ -76,7 +75,7 @@ def connected_components(
                     parent[hi] = lo
             members = {x for r in edge_rows for x in (r.a, r.b)}
             labels_local = [(x, find(x)) for x in members]
-            id_type = nodes.schema[node_col].dataType.simpleString()
+            id_type = nodes.schema["id"].dataType.simpleString()
             # One local DF + one broadcast LEFT join: edge-nodes take
             # their union-find label, everything else falls through
             # coalesce to its own id (singletons). Parallelize the local
@@ -90,10 +89,10 @@ def connected_components(
                 f"a {id_type}, label {id_type}",
             )
             return (
-                nodes.select(F.col(node_col).alias("a"))
+                nodes.select(F.col("id").alias("a"))
                 .join(F.broadcast(labels), "a", "left")
                 .select(
-                    F.col("a").alias(node_col),
+                    F.col("a").alias("id"),
                     F.coalesce("label", F.col("a")).alias("cluster_id"),
                 )
             )
@@ -161,12 +160,12 @@ def connected_components(
                 "max_iterations"
             )
         singletons = (
-            nodes.select(F.col(node_col).alias("a"))
+            nodes.select(F.col("id").alias("a"))
             .join(edge_nodes, "a", "left_anti")
             .select("a", F.col("a").alias("label"))
         )
         return labels.unionByName(singletons).select(
-            F.col("a").alias(node_col), F.col("label").alias("cluster_id")
+            F.col("a").alias("id"), F.col("label").alias("cluster_id")
         )
     finally:
         # the small-graph result is a local frame and labels/edge_nodes

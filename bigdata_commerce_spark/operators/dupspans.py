@@ -78,8 +78,6 @@ def _window_occurrences(
 def duplicate_spans(
     df: DataFrame,
     window: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     keep_first: bool = False,
 ) -> DataFrame:
     """Per-document merged spans of corpus-duplicated token runs.
@@ -105,17 +103,17 @@ def duplicate_spans(
     # neardup_pairs' bucket-table precedent; LRU-evicted when cold.
     from bigdata_commerce_spark.operators.cache_util import persist_bounded
 
-    occ = persist_bounded(_window_occurrences(df, window, text_col, id_col))
+    occ = persist_bounded(_window_occurrences(df, window, "text", "doc_id"))
     stats = occ.groupBy("h").agg(
         F.count(F.lit(1)).alias("__c"),
-        F.min(F.struct(F.col(id_col), F.col("pos"))).alias("__canon"),
+        F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("__canon"),
     ).where(F.col("__c") >= 2)
     hits = occ.join(stats, "h")
     if keep_first:
         hits = hits.where(
-            F.struct(F.col(id_col), F.col("pos")) != F.col("__canon")
+            F.struct(F.col("doc_id"), F.col("pos")) != F.col("__canon")
         )
-    return _merge_islands(hits.select(id_col, "pos"), window, id_col)
+    return _merge_islands(hits.select("doc_id", "pos"), window, "doc_id")
 
 
 def _merge_islands(hits: DataFrame, window: int, id_col: str) -> DataFrame:
@@ -164,7 +162,7 @@ def scrub_duplicate_spans(df: DataFrame, window: int = 8) -> DataFrame:
     that array. No second corpus shuffle.
     """
     spans = duplicate_spans(
-        df, window=window, text_col="text", id_col="doc_id", keep_first=True
+        df, window=window, keep_first=True
     )
     return _scrub_with_spans(df, spans, "text", "doc_id")
 

@@ -33,35 +33,27 @@ from pyspark.sql import functions as F
 def rrf_fuse(
     lists: dict[str, DataFrame],
     id_cols: list[str],
-    rank_col: str = "rank",
-    k: int = 60,
-    top_n: int | None = None,
 ) -> DataFrame:
     """Fuse named ranked lists into ``id_cols + [per-list ranks] +
-    rrf [+ rank]``. Each input needs ``id_cols`` and an integer
-    ``rank_col`` (1-based). A candidate absent from a list simply
+    rrf + rank]``. Each input needs ``id_cols`` and an integer
+    ``rank`` (1-based). A candidate absent from a list simply
     contributes nothing for it (its ``rank_<name>`` is NULL).
 
-    ``top_n`` additionally ranks by (rrf desc, *id_cols) and keeps
-    the best N — tiny input, window over one fused frame.
+    The output is ranked by (rrf desc, *id_cols) and keeps the best
+    10 — tiny input, window over one fused frame.
     """
     if not lists:
         raise ValueError("rrf_fuse needs at least one ranked list")
     sides = [
-        df.select(*id_cols, F.col(rank_col).alias(f"rank_{name}"))
+        df.select(*id_cols, F.col("rank").alias(f"rank_{name}"))
         for name, df in lists.items()
     ]
     fused = reduce(lambda a, b: a.join(b, id_cols, "full_outer"), sides)
     contribs = [
-        F.coalesce(1.0 / (F.lit(k) + F.col(f"rank_{name}")), F.lit(0.0))
+        F.coalesce(1.0 / (F.lit(60) + F.col(f"rank_{name}")), F.lit(0.0))
         for name in lists
     ]
     score = F.round(reduce(lambda a, b: a + b, contribs), 6)
     fused = fused.withColumn("rrf", score)
-    if top_n is not None:
-        w = Window.orderBy(F.desc("rrf"), *[F.asc(c) for c in id_cols])
-        fused = (
-            fused.withColumn(rank_col, F.row_number().over(w))
-            .where(F.col(rank_col) <= top_n)
-        )
-    return fused
+    w = Window.orderBy(F.desc("rrf"), *[F.asc(c) for c in id_cols])
+    return fused.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= 10)

@@ -11,9 +11,8 @@ tables. Cost per cycle: one scan of the delta + one shuffle of
 (existing ∪ delta-partials) — both proportional to the delta and the
 key cardinality, independent of history size.
 
-The same algebra is why the engine's sketch rollups
-(operators/sketch.py HLL, rollup_hierarchy's lossless re-agg) are
-mergeable; this module is the plain-measure counterpart.
+The same algebra is why rollup_hierarchy's lossless re-aggregation
+is mergeable; this module is the plain-measure counterpart.
 
 Deletes/updates are out of scope by design: count/sum are
 subtractable (feed the delta with negated measures) but min/max are

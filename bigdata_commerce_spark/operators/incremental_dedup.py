@@ -39,14 +39,13 @@ from bigdata_commerce_spark.operators.text import fingerprint
 PREFIX_LEN = 2  # 16^2 = 256 store partitions
 
 
-def store_schema(id_col: str = "doc_id") -> str:
-    """Explicit store schema (a freshly-initialized store has zero
-    data files, so inference would fail; the declaration also keeps
-    reads stable as partitions appear). The id is pinned to BIGINT:
-    a drifting id type would commit fine and then crash every later
-    read, so the contract is enforced at the write boundary instead
-    (see _fingerprints)."""
-    return f"{id_col} long, fp string, fp_prefix string"
+# Explicit store schema (a freshly-initialized store has zero data
+# files, so inference would fail; the declaration also keeps reads
+# stable as partitions appear). The id is pinned to BIGINT: a drifting
+# id type would commit fine and then crash every later read, so the
+# contract is enforced at the write boundary instead (see
+# _fingerprints).
+STORE_SCHEMA = "doc_id long, fp string, fp_prefix string"
 
 
 def _fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -71,16 +70,11 @@ def init_store(spark: SparkSession, path: str) -> None:
     fs, hpath, _ = fs_and_path(spark, path)
     if fs.exists(hpath):
         return
-    empty = spark.createDataFrame([], store_schema("doc_id"))
+    empty = spark.createDataFrame([], STORE_SCHEMA)
     empty.write.partitionBy("fp_prefix").mode("overwrite").parquet(path)
 
 
-def novel_documents(
-    df: DataFrame,
-    store_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def novel_documents(df: DataFrame, store_path: str) -> DataFrame:
     """Documents in ``df`` whose normalized-text fingerprint is absent
     from the store, de-duplicated within the batch (min id per
     fingerprint wins). Returns (doc_id, fp, fp_prefix).
@@ -93,9 +87,9 @@ def novel_documents(
     fits."""
     spark = df.sparkSession
     batch = (
-        _fingerprints(df, text_col, id_col)
+        _fingerprints(df, "text", "doc_id")
         .groupBy("fp", "fp_prefix")
-        .agg(F.min(id_col).alias(id_col))
+        .agg(F.min("doc_id").alias("doc_id"))
     )
     # Materialize the batch aggregate ONCE (eager checkpoint): the
     # prefix collect and the anti-join both consume it, and without
@@ -107,10 +101,10 @@ def novel_documents(
     # rows by construction — a bounded driver-side collect that turns
     # the store read into a partition-pruned scan.
     prefixes = [r.fp_prefix for r in batch.select("fp_prefix").distinct().collect()]
-    store = spark.read.schema(store_schema(id_col)).parquet(store_path).where(
+    store = spark.read.schema(STORE_SCHEMA).parquet(store_path).where(
         F.col("fp_prefix").isin(prefixes)
     )
-    return batch.join(store, "fp", "left_anti").select(id_col, "fp", "fp_prefix")
+    return batch.join(store, "fp", "left_anti").select("doc_id", "fp", "fp_prefix")
 
 
 def commit_batch(df: DataFrame, store_path: str) -> DataFrame:
@@ -118,7 +112,7 @@ def commit_batch(df: DataFrame, store_path: str) -> DataFrame:
     their fingerprints to the store, and return them. The append is
     partition-wise (partitionBy fp_prefix, mode append): existing
     store files are never rewritten."""
-    novel = novel_documents(df, store_path, "text", "doc_id")
+    novel = novel_documents(df, store_path)
     # Read-then-append-to-the-same-path footgun: the anti-join plan
     # embeds a scan of the store as it looked BEFORE this commit
     # (including partitionSchema=[] on the very first commit, when no

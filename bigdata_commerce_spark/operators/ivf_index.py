@@ -54,7 +54,7 @@ def write_ivf_index(
     refined quantizer — the layout is identical.
     """
     if centroids is None:
-        centroids = md5_centroids(corpus, n_centroids, "vec_id", "embedding")
+        centroids = md5_centroids(corpus, n_centroids)
     # loud, not lazy: an empty corpus yields zero md5-picked centroids
     # — no quantizer, so the index would be unreadable garbage. An
     # EMPTY index is still legitimate (build-then-append): pass a
@@ -151,10 +151,9 @@ def search_ivf_index(
     path: str,
     probes: DataFrame,
     k: int = 5,
-    nprobe: int = 4,
 ) -> DataFrame:
     """Top-k per probe against a written index, touching only the
-    probes' ``nprobe`` cells. Returns (probe_id, corpus_id, score,
+    probes' 4 nearest cells. Returns (probe_id, corpus_id, score,
     rank) exactly as ``ivf_topk`` would."""
     centroids = spark.read.parquet(f"{path}/centroids")
     cent_row, _ = _centroid_fold_row(centroids)
@@ -163,7 +162,7 @@ def search_ivf_index(
     )
     # Persisted because the cell-id collect and the returned lazy
     # frame both read it; the bounded registry releases it later.
-    probe_cells = persist_bounded(_probe_cells(p, cent_row, nprobe))
+    probe_cells = persist_bounded(_probe_cells(p, cent_row, 4))
     # Bounded collect (<= probes x nprobe ids): materializing the cell
     # list as LITERALS is what lets the scan prune statically — a
     # broadcast-join form would read every partition and discard rows

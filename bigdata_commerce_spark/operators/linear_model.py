@@ -43,12 +43,7 @@ def token_bucket_expr(token, n_buckets: int):
     )
 
 
-def hashed_features(
-    df: DataFrame,
-    n_buckets: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def hashed_features(df: DataFrame, n_buckets: int) -> DataFrame:
     """(id, bucket, x): L1-normalized hashed term frequencies —
     x = count(tokens hashing to bucket) / count(tokens). Documents
     with no tokens contribute no rows (score_linear restores them
@@ -56,20 +51,20 @@ def hashed_features(
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
     tokens = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"), lambda t: t != ""
+        F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+"), lambda t: t != ""
     )
     toks = df.select(
-        F.col(id_col), tokens.alias("__tk")
+        F.col("doc_id"), tokens.alias("__tk")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("__tk").alias("__n"),
         F.explode("__tk").alias("__t"),
     )
     return (
         toks.select(
-            id_col, "__n", token_bucket_expr(F.col("__t"), n_buckets).alias("bucket")
+            "doc_id", "__n", token_bucket_expr(F.col("__t"), n_buckets).alias("bucket")
         )
-        .groupBy(id_col, "bucket")
+        .groupBy("doc_id", "bucket")
         .agg(
             (F.count(F.lit(1)).cast("double") / F.first("__n")).alias("x")
         )
@@ -93,7 +88,7 @@ def score_linear(
     construction); documents without tokens — or whose tokens all hit
     zero-weight buckets absent from ``weights`` — score the bare bias.
     """
-    feats = hashed_features(df, n_buckets, text_col="text", id_col="doc_id")
+    feats = hashed_features(df, n_buckets)
     contrib = (
         feats.join(F.broadcast(weights), "bucket", "left")
         .select(

@@ -50,12 +50,10 @@ def _doc_bigrams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def train_char_bigram_lm(
-    reference: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def train_char_bigram_lm(reference: DataFrame) -> DataFrame:
     """(bg, logp, unseen_logp) — the model frame. ``unseen_logp`` is
     carried on every row so scoring needs no second artifact."""
-    bg = _doc_bigrams(reference, id_col, text_col)
+    bg = _doc_bigrams(reference, "doc_id", "text")
     return _train_from_bigrams(bg)
 
 
@@ -72,12 +70,7 @@ def _train_from_bigrams(bg: DataFrame) -> DataFrame:
     )
 
 
-def char_bigram_nll(
-    docs: DataFrame,
-    reference: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def char_bigram_nll(docs: DataFrame, reference: DataFrame | None = None) -> DataFrame:
     """(id, n_bigrams, nll): mean negative log-likelihood of each
     document's char bigrams under the model trained on ``reference``
     (default: the corpus itself — self-perplexity, the no-clean-corpus
@@ -85,7 +78,7 @@ def char_bigram_nll(
     bigrams, no defined score). Rank ascending and keep the head, or
     feed the nll column to ``validate`` / ``drift`` as a monitored
     quality metric."""
-    bg = _doc_bigrams(docs, id_col, text_col)
+    bg = _doc_bigrams(docs, "doc_id", "text")
     if reference is None:
         # self-perplexity: train and score consume the SAME exploded
         # bigrams — persist so the corpus tokenizes once, not twice
@@ -96,7 +89,7 @@ def char_bigram_nll(
         bg = persist_bounded(bg)
         lm = _train_from_bigrams(bg)
     else:
-        lm = train_char_bigram_lm(reference, id_col, text_col)
+        lm = train_char_bigram_lm(reference)
     # unseen_logp is a model constant (same on every lm row). Recover
     # it through an aggregate, NOT limit(1): an aggregate always
     # yields one row, so a degenerate EMPTY model (reference with no
@@ -112,7 +105,7 @@ def char_bigram_nll(
     )
     lp = F.coalesce(F.col("logp"), F.col("unseen_logp"))
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.round(
@@ -143,7 +136,7 @@ def perplexity_buckets(docs: DataFrame) -> DataFrame:
     join, surfaced as NULL). Documents shorter than 2 characters have
     no bigrams and are absent, matching char_bigram_nll's contract.
     """
-    scored = char_bigram_nll(docs, None, "doc_id", "text").join(
+    scored = char_bigram_nll(docs, None).join(
         docs.select("doc_id", "lang"), "doc_id"
     )
     # sentinel-key the language so NULL groups survive the equi-join
@@ -193,7 +186,7 @@ def dsir_logratio(
 
     bg = persist_bounded(_doc_bigrams(raw, "doc_id", "text"))
     lm_raw = _train_from_bigrams(bg)
-    lm_tgt = train_char_bigram_lm(target, "doc_id", "text")
+    lm_tgt = train_char_bigram_lm(target)
     consts = (
         lm_raw.agg(
             F.coalesce(F.max("unseen_logp"), F.lit(0.0)).alias("__u_raw")

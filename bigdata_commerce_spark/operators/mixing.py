@@ -72,7 +72,7 @@ def mixture_sample(
     return df.where(hash_uniform("doc_id") < thr)
 
 
-def mixture_oracle_case(fractions: dict[str, float], default: float = 0.0) -> str:
+def mixture_oracle_case(fractions: dict[str, float]) -> str:
     """The ANSI-SQL CASE expression computing the same per-source
     threshold — generated from the SAME dict the Spark plan uses, so
     the oracle can never drift from the engine."""
@@ -80,7 +80,7 @@ def mixture_oracle_case(fractions: dict[str, float], default: float = 0.0) -> st
         f"WHEN source = '{s}' THEN '{threshold_hex(fractions[s])}'"
         for s in sorted(fractions)
     )
-    return f"CASE {whens} ELSE '{threshold_hex(default)}' END"
+    return f"CASE {whens} ELSE '{threshold_hex(0.0)}' END"
 
 
 def split_by_group(df: DataFrame, test_fraction: float, group_col: str) -> DataFrame:
@@ -144,40 +144,33 @@ def cap_per_source(
     )
 
 
-def negative_samples(
-    positives: DataFrame,
-    n_items: DataFrame,
-    k: int = 5,
-    oversample: int = 2,
-) -> DataFrame:
+def negative_samples(positives: DataFrame, n_items: DataFrame) -> DataFrame:
     """Deterministic negative sampling for recommendation/contrastive
-    training: for every user in ``positives``, up to ``k``
+    training: for every user in ``positives``, up to 5
     pseudo-random items the user did NOT interact with — the standard
     rejection-sampling construction made fully deterministic so
     re-runs, engines, and the DuckDB oracle agree row for row.
 
-    Construction: slot j in [0, k * oversample) maps to candidate
-    item ``md5(user || ':neg:' || j) mod n_items`` (items must be densely
+    Construction: slot j in [0, 10) (5 negatives, 2x oversampled)
+    maps to candidate item ``md5(user || ':neg:' || j) mod n_items`` (items must be densely
     keyed 0..n_items-1 — the shard/partkey layout); duplicate hits of
     the same item keep their smallest slot; positives are removed by
     an anti-join; the survivors rank by (slot, item) and the first
-    ``k`` win. With |positives per user| << n_items the chance of
-    fewer than k survivors is negligible, but the semantics are exact
+    5 win. With |positives per user| << n_items the chance of
+    fewer than 5 survivors is negligible, but the semantics are exact
     either way: a user interacting with nearly the whole catalog
     simply yields a shorter (well-defined) list — never a positive
     leaking in.
 
-    Scale shape: users x (k * oversample) candidate rows (linear in
+    Scale shape: users x 10 candidate rows (linear in
     users, never users x items); ONE shuffle for the anti-join
     against the interaction set; the ranking window sees at most
-    k * oversample rows per user. ``n_items`` rides a broadcast
+    10 rows per user. ``n_items`` rides a broadcast
     one-row cross join, in-plan.
     """
-    if k < 1 or oversample < 1:
-        raise ValueError(f"k and oversample must be >= 1 (got {k}, {oversample})")
     users = positives.select("user_id").distinct()
     slots = users.select(
-        "user_id", F.explode(F.sequence(F.lit(0), F.lit(k * oversample - 1))).alias("__j")
+        "user_id", F.explode(F.sequence(F.lit(0), F.lit(9))).alias("__j")
     )
     h = F.conv(
         F.substring(
@@ -211,7 +204,7 @@ def negative_samples(
         surv,
         ["user_id"],
         [F.col("__j").asc(), F.col("item_id").asc()],
-        k,
+        5,
         rank_col="neg_rank",
     ).drop("__j")
 
@@ -492,7 +485,7 @@ def weighted_sample(
     else:
         from bigdata_commerce_spark.operators.topk import rank_top_m
 
-        out = rank_top_m(rows, order, k, rank_col="rank")
+        out = rank_top_m(rows, order, k)
     return out.drop("__aes")
 
 

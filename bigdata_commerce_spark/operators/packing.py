@@ -89,9 +89,9 @@ def pack_sequences(
     )
 
 
-def length_bucketed_index(df: DataFrame, n_buckets: int = 4) -> DataFrame:
+def length_bucketed_index(df: DataFrame) -> DataFrame:
     """Length-bucketed batching index: assign each document to one of
-    ``n_buckets`` token-length buckets (exact interpolated quantile
+    4 token-length buckets (exact interpolated quantile
     boundaries), then a dense 0-based SHUFFLED position within its
     bucket — the data-loader prep that minimizes padding waste: a
     trainer drawing batch k of bucket b as positions
@@ -99,7 +99,7 @@ def length_bucketed_index(df: DataFrame, n_buckets: int = 4) -> DataFrame:
     deterministic pseudo-random order, with no cross-bucket length
     mixing and no in-loader sort.
 
-    Bucketing: boundaries are the i/n_buckets interpolated percentiles
+    Bucketing: boundaries are the i/4 interpolated percentiles
     of ``n_tokens`` (Spark `percentile` == DuckDB `quantile_cont`,
     the exact_price_percentiles parity), ROUNDED TO 6dp on both
     engines so the integer-vs-boundary comparisons below cannot flip
@@ -111,32 +111,30 @@ def length_bucketed_index(df: DataFrame, n_buckets: int = 4) -> DataFrame:
 
     Positions: ``sources/shards.with_group_shuffled_index`` — the
     two-level hash-prefix prefix sum, so no single-reducer-per-bucket
-    stage even though n_buckets is small (the naive window would put
-    a QUARTER of a 100 TB corpus on one reducer at n_buckets=4).
+    stage even though there are only 4 buckets (the naive window would
+    put a QUARTER of a 100 TB corpus on one reducer).
     Shuffle inventory: one tiny percentile agg (map-side partials),
     one count agg + broadcast (buckets x 256 rows), one shuffle keyed
     by (bucket, hash-prefix) for the ranking window.
     """
-    if n_buckets < 2:
-        raise ValueError(f"n_buckets must be >= 2 (got {n_buckets})")
     bounds = df.agg(
         *[
             F.round(
-                F.expr(f"percentile(`n_tokens`, {i / n_buckets!r})"), 6
+                F.expr(f"percentile(`n_tokens`, {i / 4!r})"), 6
             ).alias(f"__b{i}")
-            for i in range(1, n_buckets)
+            for i in range(1, 4)
         ]
     )
     bucket = F.lit(1)
-    for i in range(1, n_buckets):
+    for i in range(1, 4):
         bucket = bucket + F.when(F.col("n_tokens") > F.col(f"__b{i}"), 1).otherwise(0)
     bucketed = (
         df.crossJoin(F.broadcast(bounds))
         .withColumn("bucket", bucket.cast("int"))
-        .drop(*[f"__b{i}" for i in range(1, n_buckets)])
+        .drop(*[f"__b{i}" for i in range(1, 4)])
     )
     from bigdata_commerce_spark.sources.shards import with_group_shuffled_index
 
     return with_group_shuffled_index(
-        bucketed, ["bucket"], id_col="doc_id", index_col="pos", salt=":shuf"
+        bucketed, ["bucket"]
     )

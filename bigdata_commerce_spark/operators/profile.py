@@ -6,21 +6,18 @@ and an exact-decimal mean for numerics. The data-card companion to
 thing run against an unfamiliar 100 TB crawl drop).
 
 Scale shape:
-- ALL requested columns profile in ONE scan and ONE aggregate: N
-  columns = ~5N agg expressions riding a single hash aggregate with
-  map-side partials, exactly like validate.py's single-pass rule
-  suite (plan-shape test asserts one Aggregate, no Expand, for the
-  default approx path).
-- Distinct counts default to `approx_count_distinct` (HLL++, one
-  pass, mergeable partials). `exact_distinct=True` switches to true
-  COUNT(DISTINCT), one single-distinct aggregate per column
-  cross-joined onto the 1-row result: each reads only its own column
-  and shuffles only that column's map-side-deduplicated values. Fine
-  at audit scale, wrong as a routine 100 TB job; the docstring IS the
-  guidance, and the twin query uses exact only because its oracle
-  must hash-match. (Several COUNT(DISTINCT)s in ONE aggregate plan
+- ALL requested columns' counts, min/max and means ride ONE scan
+  and ONE aggregate: N columns = ~4N agg expressions on a single
+  hash aggregate with map-side partials, exactly like validate.py's
+  single-pass rule suite.
+- Distinct counts are exact COUNT(DISTINCT), one single-distinct
+  aggregate per column cross-joined onto the 1-row result: each
+  reads only its own column and shuffles only that column's
+  map-side-deduplicated values (the twin query's oracle must
+  hash-match). Several COUNT(DISTINCT)s in ONE aggregate would plan
   as an Expand whose group order follows expression-id hashes, so
-  that plan — and its fingerprint — varies from run to run.)
+  that plan — and its fingerprint — would vary from run to run; the
+  plan-shape test asserts there is no Expand.
 - The wide 1-row agg result is reshaped to one-row-per-column with
   `inline` on a literal struct array — driver-free, shuffle-free.
 - Mean uses the money_sum discipline (exact decimal(38,6) try_sum /
@@ -56,11 +53,7 @@ _ORDERED_STR = (T.StringType, T.BooleanType)
 _TIMELIKE = (T.TimestampType, T.TimestampNTZType, T.DateType)
 
 
-def profile_table(
-    df: DataFrame,
-    columns: Sequence[str] | None = None,
-    exact_distinct: bool = False,
-) -> DataFrame:
+def profile_table(df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
     """One row per profiled column:
     ``(column, n_rows, n_nonnull, n_null, n_distinct, min_num,
     max_num, min_str, max_str, mean)``.
@@ -78,8 +71,6 @@ def profile_table(
     for c in cols:
         dt = by_name[c]
         aggs.append(F.count(c).alias(f"_nn_{c}"))
-        if not exact_distinct:
-            aggs.append(F.approx_count_distinct(c).alias(f"_nd_{c}"))
         if isinstance(dt, _NUMERIC):
             aggs.append(F.min(c).cast("double").alias(f"_minn_{c}"))
             aggs.append(F.max(c).cast("double").alias(f"_maxn_{c}"))
@@ -101,9 +92,8 @@ def profile_table(
             aggs.append(F.date_format(F.min(c), fmt).alias(f"_mins_{c}"))
             aggs.append(F.date_format(F.max(c), fmt).alias(f"_maxs_{c}"))
     wide = df.agg(*aggs)
-    if exact_distinct:
-        for c in cols:
-            wide = wide.crossJoin(df.agg(F.count_distinct(c).alias(f"_nd_{c}")))
+    for c in cols:
+        wide = wide.crossJoin(df.agg(F.count_distinct(c).alias(f"_nd_{c}")))
 
     null_d = F.lit(None).cast("double")
     null_s = F.lit(None).cast("string")

@@ -27,14 +27,11 @@ def range_join(
     ts_col: str,
     start_col: str,
     end_col: str,
-    key_cols: list[str] | None = None,
     bucket_seconds: int = 3600,
 ) -> DataFrame:
     """Inner join of ``points`` to every interval containing its
-    timestamp (inclusive bounds), optionally also matching on
-    ``key_cols``. Returns the point columns plus the interval's
-    start/end (and any interval payload columns)."""
-    key_cols = key_cols or []
+    timestamp (inclusive bounds) with the same ``ad_id``. Returns the
+    point columns plus the interval's start/end (and any interval payload columns)."""
     b = F.lit(bucket_seconds)
     p = points.withColumn(
         "__bucket", F.floor(F.unix_timestamp(F.col(ts_col)) / b)
@@ -49,7 +46,7 @@ def range_join(
         ),
     )
     return (
-        p.join(i, [*key_cols, "__bucket"])
+        p.join(i, ["ad_id", "__bucket"])
         .where(
             (F.col(ts_col) >= F.col(start_col)) & (F.col(ts_col) <= F.col(end_col))
         )

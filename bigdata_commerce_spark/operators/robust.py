@@ -57,10 +57,9 @@ def winsorize(
     cols: list[str],
     lower: float = 0.01,
     upper: float = 0.99,
-    group_col: str | None = None,
 ) -> DataFrame:
     """Clip each column in ``cols`` to its [lower, upper] exact
-    percentile band — per ``group_col`` when given, else globally —
+    percentile band per ``event_type``,
     appending ``<col>_w`` clipped columns. One aggregate computes
     every bound; NULLs pass through unclipped."""
     if not cols or not 0.0 <= lower <= upper <= 1.0:
@@ -76,12 +75,8 @@ def winsorize(
         aggs.append(
             F.round(F.expr(f"percentile({c}, {upper!r})"), 6).alias(f"__hi_{c}")
         )
-    if group_col is None:
-        bounds = df.agg(*aggs)
-        out = df.crossJoin(F.broadcast(bounds))  # one-row bounds frame
-    else:
-        bounds = df.groupBy(group_col).agg(*aggs)
-        out = df.join(bounds, group_col, "left")
+    bounds = df.groupBy("event_type").agg(*aggs)
+    out = df.join(bounds, "event_type", "left")
     for c in cols:
         out = out.withColumn(
             f"{c}_w", _clip(F.col(c), F.col(f"__lo_{c}"), F.col(f"__hi_{c}"))

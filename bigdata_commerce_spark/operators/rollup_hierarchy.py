@@ -20,27 +20,19 @@ from pyspark.sql import functions as F
 LEVELS = ("minute", "hour", "day")
 
 
-def rollup_ladder(
-    events: DataFrame,
-    ts_col: str = "event_time",
-    key_cols: list[str] | None = None,
-    value_col: str | None = None,
-) -> dict[str, DataFrame]:
-    """Build the minute/hour/day ladder. Each level carries
-    (bucket, keys, event_count, value_sum) — the mergeable form.
+def rollup_ladder(events: DataFrame) -> dict[str, DataFrame]:
+    """Build the minute/hour/day ladder of ``events`` by ``province``.
+    Each level carries (bucket, province, event_count, value_sum =
+    sum of ``ad_id``) — the mergeable form.
     Only the minute level touches the raw events; each coarser level
     re-aggregates the previous one."""
-    key_cols = key_cols or []
-    base_val = (
-        F.col(value_col) if value_col is not None else F.lit(1).cast("bigint")
-    )
     minute = (
         events.groupBy(
-            F.date_trunc("minute", F.col(ts_col)).alias("bucket"), *key_cols
+            F.date_trunc("minute", F.col("ts")).alias("bucket"), "province"
         )
         .agg(
             F.count(F.lit(1)).alias("event_count"),
-            F.sum(base_val).alias("value_sum"),
+            F.sum(F.col("ad_id")).alias("value_sum"),
         )
     )
     ladder = {"minute": minute}
@@ -48,7 +40,7 @@ def rollup_ladder(
     for level in ("hour", "day"):
         finer = (
             finer.groupBy(
-                F.date_trunc(level, F.col("bucket")).alias("bucket"), *key_cols
+                F.date_trunc(level, F.col("bucket")).alias("bucket"), "province"
             )
             .agg(
                 F.sum("event_count").alias("event_count"),

@@ -39,38 +39,27 @@ from pyspark.sql import functions as F
 _NULL_BUCKET = -(2**62)
 
 
-def running_sum_per_key(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    out_col: str = "running_sum",
-    bucket_seconds: int | None = None,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """Add ``out_col`` = cumulative sum of ``value_col`` per key in
-    (ts, tiebreak) order, NULL until the key's first non-NULL value
-    (SQL running-SUM semantics).
-
-    Pass ``tiebreak_col`` (a unique id) whenever equal timestamps are
-    possible — without a total order, the intermediate sums at tied
-    rows are permutation-dependent (the same caveat as any SQL running
-    window). ``bucket_seconds`` selects the skew-bounded path (module
+def running_sum_per_key(df: DataFrame, bucket_seconds: int | None = None) -> DataFrame:
+    """Add ``__rs`` = cumulative sum of ``value`` per ``user_id`` in
+    (ts, event_id) order, NULL until the key's first non-NULL value
+    (SQL running-SUM semantics). The unique ``event_id`` makes the
+    order total, so sums at tied timestamps are deterministic.
+    ``bucket_seconds`` selects the skew-bounded path (module
     docstring); results are identical (tested, and oracle-checked by
     the ``events_running_value`` twin).
     """
-    order = [F.col(ts_col)] + ([F.col(tiebreak_col)] if tiebreak_col else [])
-    v = F.col(value_col).cast("decimal(30,8)")
+    order = [F.col("ts"), F.col("event_id")]
+    v = F.col("value").cast("decimal(30,8)")
 
     if bucket_seconds is None:
         w = (
-            Window.partitionBy(key_col)
+            Window.partitionBy("user_id")
             .orderBy(*order)
             .rowsBetween(Window.unboundedPreceding, 0)
         )
-        return df.withColumn(out_col, F.sum(v).over(w))
+        return df.withColumn("__rs", F.sum(v).over(w))
 
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     rows = df.withColumn(
         "__rb",
         F.coalesce(
@@ -79,17 +68,17 @@ def running_sum_per_key(
         ),
     )
     w_local = (
-        Window.partitionBy(key_col, "__rb")
+        Window.partitionBy("user_id", "__rb")
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     rows = rows.withColumn("__local", F.sum(v).over(w_local))
-    totals = rows.groupBy(key_col, "__rb").agg(F.sum(v).alias("__tot"))
+    totals = rows.groupBy("user_id", "__rb").agg(F.sum(v).alias("__tot"))
     # prefix WITHOUT coalesce: it must stay NULL when no earlier
     # bucket holds a non-NULL value, so a leading all-NULL stretch
     # yields NULL exactly like the exact path's running SUM
     w_spine = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("user_id")
         .orderBy("__rb")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -108,10 +97,10 @@ def running_sum_per_key(
 
     return (
         null_safe_key_bucket_join(
-            rows, prefix.select(key_col, "__rb", "__prefix"), key_col, "__rb"
+            rows, prefix.select("user_id", "__rb", "__prefix"), "user_id", "__rb"
         )
         .withColumn(
-            out_col,
+            "__rs",
             F.when(F.col("__local").isNotNull(), (p37 + l37).cast("decimal(38,8)"))
             .otherwise(F.col("__prefix").cast("decimal(38,8)")),
         )

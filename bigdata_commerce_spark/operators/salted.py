@@ -16,11 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def key_skew_report(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    k: int = 20,
-) -> DataFrame:
+def key_skew_report(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """Measure key skew before choosing a mitigation: per-key counts,
     the top-k hottest keys with their share of all rows, and the
     skew factor (max key count / mean key count — 1.0 means uniform,
@@ -42,7 +38,7 @@ def key_skew_report(
         F.max("cnt").cast("bigint").alias("max_cnt"),
     )
     order = [F.desc("cnt")] + [F.asc(c) for c in key_cols]
-    top = counts.orderBy(*order).limit(k)
+    top = counts.orderBy(*order).limit(20)
     w = Window.orderBy(*order)
     return (
         top.withColumn("rank", F.row_number().over(w))

@@ -34,13 +34,9 @@ from bigdata_commerce_spark.functions import (
 )
 
 
-def sessionize(
-    df: DataFrame,
-    gap_minutes: int = 30,
-    bucket_seconds: int | None = None,
-) -> DataFrame:
+def sessionize(df: DataFrame, bucket_seconds: int | None = None) -> DataFrame:
     """Assign gap-based session ids: a new session starts when the gap
-    since the user's previous event exceeds ``gap_minutes``.
+    since the user's previous event exceeds 30 minutes.
 
     session_id = (user_id, running count of gap-breaks) — stable,
     deterministic, and computable identically in ANSI SQL (lag +
@@ -64,7 +60,7 @@ def sessionize(
     # TIMESTAMP_NTZ inputs (Spark >=3.5 reads timezone-less parquet
     # timestamp[us] as NTZ) are value-preserving under the pinned UTC
     # session timezone.
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = 30 * 60 * 1_000_000
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     if bucket_seconds is None:
         w_user = Window.partitionBy("user_id").orderBy("ts")
@@ -231,7 +227,7 @@ def visit_step_histogram(session_agg: DataFrame) -> DataFrame:
     return counts.select(*out_cols)
 
 
-def stratified_session_sample(session_agg: DataFrame, per_day: int = 100) -> DataFrame:
+def stratified_session_sample(session_agg: DataFrame) -> DataFrame:
     """Req 2: proportional per-(day, hour) session extraction.
 
     The reference does countByKey -> driver-side random index lists ->
@@ -258,7 +254,7 @@ def stratified_session_sample(session_agg: DataFrame, per_day: int = 100) -> Dat
         .withColumn(
             "quota",
             F.greatest(
-                F.floor(F.col("hour_count") * per_day / F.col("day_count")),
+                F.floor(F.col("hour_count") * 100 / F.col("day_count")),
                 F.lit(1),
             ),
         )

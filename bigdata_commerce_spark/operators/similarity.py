@@ -307,11 +307,11 @@ def _centroid_fold_row(centroids: DataFrame):
     return cent_row, id_type
 
 
-def _cell_scores(vec: str, norm_col: str = "__nv") -> Column:
+def _cell_scores(vec: str) -> Column:
     """Per-row array of (cosine score, centroid id) structs against the
     broadcast ``cents`` array. transform (scores once per centroid)
     then fold on cheap scalars — a lambda body referencing the dot
-    product twice would re-evaluate it per element. ``norm_col`` must
+    product twice would re-evaluate it per element. ``__nv`` must
     be a BOUND column holding norm(vec) (callers compute it once per
     row before the centroid crossJoin): referencing an in-projection
     alias here would re-fold the row norm per centroid.
@@ -322,7 +322,7 @@ def _cell_scores(vec: str, norm_col: str = "__nv") -> Column:
         lambda cent: F.struct(
             F.round(
                 F.try_divide(
-                    _dot(F.col(vec), cent["cv"]), F.col(norm_col) * cent["cn"]
+                    _dot(F.col(vec), cent["cv"]), F.col("__nv") * cent["cn"]
                 ),
                 4,
             ).alias("s"),
@@ -569,43 +569,32 @@ def _ivf_search(
     return _exact_rerank(candidates, corpus, probes, k, id_col, vec_col)
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-) -> DataFrame:
+def ivf_topk(corpus: DataFrame, probes: DataFrame) -> DataFrame:
     """Approximate cosine top-k via an IVF (inverted-file) index —
     the partition-the-corpus counterpart of sign-LSH.
 
-    Coarse quantizer: ``n_centroids`` corpus vectors picked by md5
+    Coarse quantizer: 16 corpus vectors picked by md5
     order — deterministic pseudo-random init, which keeps the whole
     pipeline oracle-checkable (``ivf_kmeans_topk`` is the trained
     refinement when recall matters more than oracle determinism).
 
     At 100 TB the assignment is one broadcast-join pass over the
     corpus (write it partitioned BY cell and probe-time scans touch
-    only nprobe/n_centroids of the data — classic IVF partition
-    pruning); candidate volume per probe is ~nprobe/n_centroids of
+    only 4 of the 16 cells — classic IVF partition
+    pruning); candidate volume per probe is ~4/16 of
     the corpus instead of all of it.
     """
-    centroids = md5_centroids(corpus, n_centroids, "vec_id", "embedding")
-    return _ivf_search(corpus, probes, centroids, k, nprobe, "vec_id", "embedding")
+    centroids = md5_centroids(corpus, 16)
+    return _ivf_search(corpus, probes, centroids, 5, 4, "vec_id", "embedding")
 
 
-def md5_centroids(
-    corpus: DataFrame,
-    n_centroids: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def md5_centroids(corpus: DataFrame, n_centroids: int) -> DataFrame:
     """Deterministic pseudo-random coarse quantizer: ``n_centroids``
     corpus vectors picked by md5 order — reproducible across engines
     and partitionings (the property the oracle needs)."""
     return (
         corpus.select(
-            F.col(id_col).alias("centroid_id"), _as_double(vec_col).alias("centroid_vec")
+            F.col("vec_id").alias("centroid_id"), _as_double("embedding").alias("centroid_vec")
         )
         .withColumn(
             "__r", F.md5(F.concat(F.col("centroid_id").cast("string"), F.lit(":ivf")))
@@ -688,7 +677,6 @@ def train_kmeans_centroids(
 def lsh_ann_topk(
     corpus: DataFrame,
     probes: DataFrame,
-    k: int = 5,
     num_planes: int = 16,
     bands: int = 4,
     dim: int = 64,
@@ -714,7 +702,7 @@ def lsh_ann_topk(
         .select("probe_id", "corpus_id")
         .distinct()
     )
-    return _exact_rerank(candidates, corpus, probes, k, "vec_id", "embedding")
+    return _exact_rerank(candidates, corpus, probes, 5, "vec_id", "embedding")
 
 
 def topk_recall(truth: DataFrame, approx: DataFrame) -> DataFrame:
@@ -776,7 +764,7 @@ def embedding_dedup_clusters(
         corpus, threshold, id_col, vec_col, num_planes, bands, dim, seed
     )
     nodes = corpus.select(F.col(id_col).alias("id"))
-    return connected_components(nodes, pairs, node_col="id").select(
+    return connected_components(nodes, pairs).select(
         F.col("id").alias(id_col), F.col("cluster_id")
     )
 
@@ -788,7 +776,6 @@ def random_projection(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    out_col: str = "projected",
     round_dp: int | None = 4,
 ) -> DataFrame:
     """Johnson–Lindenstrauss random projection: embed each vector into
@@ -829,7 +816,7 @@ def random_projection(
             if round_dp is not None
             else c
         )
-    return emb.select(F.col(id_col), F.array(*coords).alias(out_col))
+    return emb.select(F.col(id_col), F.array(*coords).alias("projected"))
 
 
 def mine_hard_negatives(
@@ -926,11 +913,11 @@ def ivf_projected_topk(
     """
     proj_c = random_projection(
         corpus, out_dim=out_dim, in_dim=in_dim, seed=seed,
-        id_col=id_col, vec_col=vec_col, out_col="projected", round_dp=None,
+        id_col=id_col, vec_col=vec_col, round_dp=None,
     )
     proj_p = random_projection(
         probes, out_dim=out_dim, in_dim=in_dim, seed=seed,
-        id_col=id_col, vec_col=vec_col, out_col="projected", round_dp=None,
+        id_col=id_col, vec_col=vec_col, round_dp=None,
     )
     centroids = train_kmeans_centroids(
         proj_c, n_centroids, vec_col="projected", seed=seed, max_iter=max_iter
@@ -954,7 +941,6 @@ def ivf_projected_topk(
 def semdedup(
     corpus: DataFrame,
     tau: float = 0.9,
-    n_centroids: int = 16,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
@@ -995,7 +981,7 @@ def semdedup(
     members survive, so the exact published rule is kept.
     """
     if centroids is None:
-        centroids = md5_centroids(corpus, n_centroids, "vec_id", "embedding")
+        centroids = md5_centroids(corpus, 16)
     c = corpus.select(F.col("vec_id").alias("__id"), _as_double("embedding").alias("__v"))
     cent_row, id_type = _centroid_fold_row(centroids)
     # the _assign_cells fold, keeping the winning score as well

@@ -1,5 +1,5 @@
-"""Sketch-shaped aggregates: mergeable HLL distinct-count rollups and
-exact per-group percentiles with a loud scale guard.
+"""Sketch-shaped aggregates: exact per-group percentiles with a loud
+scale guard.
 
 Exact top-N frequent keys need no sketch here: a partial/final count
 aggregate plus ``topk.rank_top_m`` (TakeOrderedAndProject) is the
@@ -10,50 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-# ---------------------------------------------------------------------------
-# Mergeable distinct-count sketches (Apache DataSketches HLL, built in
-# since Spark 3.5): the hypertable pattern COUNT(DISTINCT) cannot use.
-# A daily count is summable across days, but a daily DISTINCT count is
-# not — re-answering "distinct users over an arbitrary date range"
-# from raw data rescans the fact table every time. Persisting one HLL
-# sketch per (day, dims) cell makes distinct-count ROLLUPS mergeable:
-# any range/subset query unions the relevant cell sketches (lossless
-# for a fixed lgK — the union of day sketches is byte-equivalent to a
-# sketch built over the concatenated data) and estimates once.
-# ---------------------------------------------------------------------------
-
-
-def hll_rollup(
-    df: DataFrame,
-    keys: list[str],
-    count_col: str,
-    lgk: int = 12,
-) -> DataFrame:
-    """One HLL sketch of ``count_col`` per ``keys`` cell — the
-    persistable base table of a distinct-count rollup ladder. One
-    shuffle on keys; sketch size is 2^lgk registers regardless of
-    cell cardinality (lgk=12 -> ~1.6% relative standard error)."""
-    return df.groupBy(*keys).agg(
-        F.hll_sketch_agg(count_col, F.lit(lgk)).alias("hll")
-    )
-
-
-def hll_estimate_over(
-    rollup: DataFrame,
-    group_keys: list[str],
-    out_col: str = "approx_distinct",
-) -> DataFrame:
-    """Merge cell sketches up to ``group_keys`` granularity and
-    estimate: e.g. a (day, event_type) rollup answers per-event_type
-    distinct users over all days with one union over sketch rows —
-    the fact table is never rescanned."""
-    merged = rollup.groupBy(*group_keys).agg(F.hll_union_agg("hll").alias("hll"))
-    return merged.select(
-        *group_keys,
-        F.hll_sketch_estimate("hll").cast("bigint").alias(out_col),
-    )
 
 
 # Default ceiling for exact_group_percentiles: Spark's `percentile` is

@@ -109,9 +109,7 @@ def corr_state_measures(cols: list[str]) -> dict:
     return out
 
 
-def corr_from_sums(
-    sums: DataFrame, cols: list[str], round_dp: int = 6
-) -> DataFrame:
+def corr_from_sums(sums: DataFrame, cols: list[str]) -> DataFrame:
     """Derive (col_x, col_y, n_pairs, corr) rows from a corr_sums
     state row — a pure projection over one row."""
     pairs = list(combinations(cols, 2))
@@ -121,7 +119,7 @@ def corr_from_sums(
                 F.lit(x).alias("col_x"),
                 F.lit(y).alias("col_y"),
                 F.col(f"__n_{i}").alias("n_pairs"),
-                _corr_from_sums(str(i), round_dp).alias("corr"),
+                _corr_from_sums(str(i), 6).alias("corr"),
             )
             for i, (x, y) in enumerate(pairs)
         ]
@@ -137,7 +135,7 @@ def corr_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     in input order, complete-observations per pair. A pair with fewer
     than 2 complete rows or a zero-variance side has no defined
     correlation — corr NULL."""
-    return corr_from_sums(corr_sums(df, cols), cols, 6)
+    return corr_from_sums(corr_sums(df, cols), cols)
 
 
 # Merge spec for trend_sums partial state, in the
@@ -182,7 +180,7 @@ def trend_sums(
     )
 
 
-def trend_from_sums(sums: DataFrame, key_col: str, round_dp: int = 6) -> DataFrame:
+def trend_from_sums(sums: DataFrame, key_col: str) -> DataFrame:
     """Derive (n_points, slope, intercept, r2) from a trend_sums
     state table — a pure projection, so finalizing a maintained
     state costs no scan of history."""
@@ -207,9 +205,9 @@ def trend_from_sums(sums: DataFrame, key_col: str, round_dp: int = 6) -> DataFra
     return sums.select(
         F.col(key_col),
         F.col("__n").alias("n_points"),
-        F.when(ok, F.round(slope, round_dp)).alias("slope"),
-        F.when(ok, F.round(intercept, round_dp)).alias("intercept"),
-        F.when(ok, F.round(r2, round_dp)).alias("r2"),
+        F.when(ok, F.round(slope, 6)).alias("slope"),
+        F.when(ok, F.round(intercept, 6)).alias("intercept"),
+        F.when(ok, F.round(r2, 6)).alias("r2"),
     )
 
 
@@ -221,5 +219,5 @@ def trend_per_key(df: DataFrame, key_col: str, t_col: str, value_col: str) -> Da
     no defined fit — slope/intercept/r2 NULL (detected exactly via
     the t-range bounds, never by a float epsilon)."""
     return trend_from_sums(
-        trend_sums(df, key_col, t_col, value_col), key_col, 6
+        trend_sums(df, key_col, t_col, value_col), key_col
     )

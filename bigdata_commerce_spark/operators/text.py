@@ -237,12 +237,12 @@ def _doc_profile(
     return b3.select(*out)
 
 
-def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def text_stats(df: DataFrame) -> DataFrame:
     """Per-document quality statistics: lengths, token counts,
     punctuation/digit ratios, stopword ratio, mean token length.
     One scan, no shuffle, no UDF (expression binding: _doc_profile)."""
-    return _doc_profile(df, text_col, id_col, stats=True).select(
-        id_col, *_STAT_COLS
+    return _doc_profile(df, "text", "doc_id", stats=True).select(
+        "doc_id", *_STAT_COLS
     )
 
 
@@ -262,7 +262,7 @@ def quality_score(df: DataFrame) -> DataFrame:
     """Composite quality score in [0,1]: rewards stopword presence and
     sane token length, penalizes digit/punct density. A simple,
     deterministic stand-in for a trained quality classifier."""
-    s = text_stats(df, "text", "doc_id")
+    s = text_stats(df)
     return s.select("doc_id", _quality_expr().alias("quality"))
 
 
@@ -727,7 +727,7 @@ def pii_scrub(df: DataFrame) -> DataFrame:
     )
 
 
-def curate(df: DataFrame, min_quality: float = 0.5, lang: str = "en") -> DataFrame:
+def curate(df: DataFrame) -> DataFrame:
     """End-to-end corpus curation — the composed shape of a 100 TB
     cleaning job: quality gate + language gate + exact-dedup survivor
     selection in ONE scan and ONE shuffle.
@@ -745,7 +745,7 @@ def curate(df: DataFrame, min_quality: float = 0.5, lang: str = "en") -> DataFra
         df, "text", "doc_id", stats=True, lang=True, fp=True
     ).withColumn("quality", _quality_expr())
     kept = enriched.where(
-        (F.col("quality") >= min_quality) & (F.col("predicted_lang") == lang)
+        (F.col("quality") >= 0.5) & (F.col("predicted_lang") == "en")
     )
     return kept.groupBy("fp").agg(
         F.min("doc_id").alias("doc_id"),
@@ -824,13 +824,8 @@ def remove_frequent_lines(
     )
 
 
-def ngram_counts(
-    df: DataFrame,
-    n: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Corpus-wide word n-gram frequency table: (ngram, n_total,
+def ngram_counts(df: DataFrame) -> DataFrame:
+    """Corpus-wide word bigram frequency table: (ngram, n_total,
     n_docs) — the statistic behind contamination thresholds, boilerplate
     detection and tokenizer/LM corpus reports. Counts are over ALL
     occurrences (not per-doc distinct); documents shorter than n tokens
@@ -843,27 +838,27 @@ def ngram_counts(
     aggregation. n_docs rides the same aggregate as a distinct count
     of doc ids per ngram."""
     barrier = df.select(
-        id_col, F.explode(F.array(F.struct(tokens(text_col).alias("t")))).alias("x")
+        "doc_id", F.explode(F.array(F.struct(tokens("text").alias("t")))).alias("x")
     )
     t = F.col("x.t")
-    grams = F.when(F.size(t) >= n, ngram_fold(t, n)).otherwise(
+    grams = F.when(F.size(t) >= 2, ngram_fold(t, 2)).otherwise(
         F.array().cast("array<string>")
     )
-    ex = barrier.select(id_col, F.explode(grams).alias("ngram"))
+    ex = barrier.select("doc_id", F.explode(grams).alias("ngram"))
     return ex.groupBy("ngram").agg(
         F.count(F.lit(1)).alias("n_total"),
-        F.countDistinct(id_col).alias("n_docs"),
+        F.countDistinct("doc_id").alias("n_docs"),
     )
 
 
-def top_ngrams(df: DataFrame, n: int = 2, k: int = 50) -> DataFrame:
-    """The top-k most frequent n-grams with a dense rank —
+def top_ngrams(df: DataFrame) -> DataFrame:
+    """The 50 most frequent word bigrams with a dense rank —
     TakeOrderedAndProject over the ngram_counts aggregate (per-partition
     heaps, never a global sort of the full vocabulary)."""
     from pyspark.sql import Window
 
-    counts = ngram_counts(df, n, "text", "doc_id")
-    top = counts.orderBy(F.desc("n_total"), F.asc("ngram")).limit(k)
+    counts = ngram_counts(df)
+    top = counts.orderBy(F.desc("n_total"), F.asc("ngram")).limit(50)
     w = Window.orderBy(F.desc("n_total"), F.asc("ngram"))
     return top.withColumn("rank", F.row_number().over(w)).select(
         "ngram", "n_total", "n_docs", "rank"

@@ -29,12 +29,8 @@ def value_series(
     n_buckets: int,
     bucket_seconds: int,
     origin: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    round_dp: int | None = None,
 ) -> DataFrame:
-    """(key, series) with ``series[i]`` = sum of ``value_col`` in
+    """(key, series) with ``series[i]`` = sum of ``value`` in
     ``[origin + i*bucket, origin + (i+1)*bucket)``; events outside the
     grid are dropped. ``origin`` is an ISO timestamp string so the
     grid is a fixed contract, not data-dependent (series from
@@ -43,24 +39,22 @@ def value_series(
     # floor, not truncate-toward-zero: a pre-origin event must land in
     # a negative bucket (and be dropped), not alias into bucket 0
     bucket = F.floor(
-        (F.unix_micros(F.col(ts_col).cast("timestamp")) - origin_us)
+        (F.unix_micros(F.col("ts").cast("timestamp")) - origin_us)
         / (bucket_seconds * 1_000_000)
     ).cast("bigint")
     per_bucket = (
         events.select(
-            F.col(key_col).alias("series_id"),
+            F.col("user_id").alias("series_id"),
             bucket.alias("bucket"),
-            F.col(value_col).alias("v"),
+            F.col("value").alias("v"),
         )
         .where((F.col("bucket") >= 0) & (F.col("bucket") < n_buckets))
         .groupBy("series_id", "bucket")
         .agg(
-            # round_dp pins the per-bucket sum to a fixed precision so
+            # rounding pins the per-bucket sum to a fixed precision so
             # float summation order (partial-aggregation dependent)
             # cannot drift an oracle hash comparison
-            (
-                F.round(F.sum("v"), round_dp) if round_dp is not None else F.sum("v")
-            ).alias("v")
+            F.round(F.sum("v"), 6).alias("v")
         )
     )
     # dense vector: aggregate the sparse (bucket, v) entries into a
@@ -86,8 +80,6 @@ def similar_series(
     k: int = 5,
     n_buckets: int = 48,
     bucket_seconds: int = 3600,
-    origin: str = "2024-01-01 00:00:00",
-    round_dp: int | None = None,
 ) -> DataFrame:
     """Top-k most similar entities (cosine over resampled value
     series) for each probe entity. Exact brute-force via
@@ -98,7 +90,7 @@ def similar_series(
     Returns (probe_id, corpus_id, score, rank).
     """
     series = value_series(
-        events, n_buckets, bucket_seconds, origin, "user_id", "ts", "value", round_dp
+        events, n_buckets, bucket_seconds, "2024-01-01 00:00:00"
     )
     # Probe vectors resample from the probes' OWN events only — a
     # `series.where(isin)` would re-run the full-corpus aggregation a
@@ -108,22 +100,12 @@ def similar_series(
         events.where(F.col("user_id").isin(probe_keys)),
         n_buckets,
         bucket_seconds,
-        origin,
-        "user_id",
-        "ts",
-        "value",
-        round_dp,
+        "2024-01-01 00:00:00",
     )
     return cosine_topk(series, probes, k=k, id_col="series_id", vec_col="series")
 
 
-def fill_gaps_locf(
-    df: DataFrame,
-    bucket_seconds: int,
-    key_col: str = "series_id",
-    ts_col: str = "ts",
-    value_col: str = "v",
-) -> DataFrame:
+def fill_gaps_locf(df: DataFrame, bucket_seconds: int) -> DataFrame:
     """Regularize a sparse per-key series: emit one row for EVERY
     bucket between each key's first and last observation, carrying
     the last observed value forward through gaps (LOCF) — the
@@ -146,10 +128,10 @@ def fill_gaps_locf(
 
     b = F.lit(bucket_seconds)
     obs = df.select(
-        F.col(key_col).alias("key"),
-        F.floor(F.unix_timestamp(F.col(ts_col)) / b).cast("bigint").alias("bucket"),
-        F.col(ts_col).alias("ts"),
-        F.col(value_col).alias("value"),
+        F.col("user_id").alias("key"),
+        F.floor(F.unix_timestamp(F.col("ts")) / b).cast("bigint").alias("bucket"),
+        F.col("ts"),
+        F.col("value").alias("value"),
     )
     # last observation per (key, bucket): max_by with a total order
     per_bucket = obs.groupBy("key", "bucket").agg(
@@ -169,7 +151,7 @@ def fill_gaps_locf(
     return (
         grid.join(per_bucket, ["key", "bucket"], "left")
         .select(
-            F.col("key").alias(key_col),
+            F.col("key").alias("user_id"),
             "bucket",
             (F.col("bucket") * b).cast("timestamp").alias("bucket_ts"),
             F.last("value", ignorenulls=True).over(w).alias("value"),
@@ -178,11 +160,7 @@ def fill_gaps_locf(
     )
 
 
-def flag_anomalies(
-    df: DataFrame,
-    key_col: str = "series_id",
-    z_threshold: float = 3.0,
-) -> DataFrame:
+def flag_anomalies(df: DataFrame, z_threshold: float = 3.0) -> DataFrame:
     """Per-key z-score anomaly flags over a (key, ..., value) series —
     the monitoring pass a rollup ladder feeds (volume spikes per
     user/region/ad, quality-metric drift per source).
@@ -209,7 +187,7 @@ def flag_anomalies(
     Returns the input columns plus (z, is_anomaly).
     """
     v = F.col("value").cast("decimal(18,6)")
-    stats = df.groupBy(key_col).agg(
+    stats = df.groupBy("user_id").agg(
         F.count("value").alias("__n"),
         F.sum(v).cast("double").alias("__s"),
         F.sum(v * v).cast("double").alias("__s2"),
@@ -232,7 +210,7 @@ def flag_anomalies(
         F.round((F.col("value") - F.col("__mean")) / F.col("__sd"), 4),
     )
     return (
-        df.join(stats, key_col, "left")
+        df.join(stats, "user_id", "left")
         .withColumn("z", z)
         .withColumn(
             "is_anomaly", F.coalesce(F.abs(F.col("z")) > z_threshold, F.lit(False))
@@ -241,11 +219,7 @@ def flag_anomalies(
     )
 
 
-def ohlc_resample(
-    df: DataFrame,
-    bucket_seconds: int,
-    key_col: str = "series_id",
-) -> DataFrame:
+def ohlc_resample(df: DataFrame, bucket_seconds: int) -> DataFrame:
     """Downsample a value series to per-bucket OHLC bars
     (open/high/low/close + count) — the lossy inverse of
     fill_gaps_locf, and the standard reduction before charting or
@@ -260,12 +234,12 @@ def ohlc_resample(
     # first) and a bar could carry open=NULL next to a real high/low
     return (
         df.where(F.col("value").isNotNull()).select(
-            F.col(key_col),
+            F.col("user_id"),
             F.floor(F.unix_timestamp(F.col("ts")) / b).cast("bigint").alias("bucket"),
             F.col("ts"),
             F.col("value"),
         )
-        .groupBy(key_col, "bucket")
+        .groupBy("user_id", "bucket")
         .agg(
             F.min_by("value", key).alias("open"),
             F.max("value").alias("high"),
@@ -283,14 +257,13 @@ def ohlc_resample(
 def ewma_per_key(
     df: DataFrame,
     alpha: float,
-    tiebreak_col: str | None = None,
     bucket_seconds: int | None = None,
 ) -> DataFrame:
-    """Per-key EWMA in (ts, tiebreak) order — the standard
+    """Per-key EWMA in (ts, event_id) order — the standard
     ``adjust=False`` recurrence: y_1 = v_1, y_t = a*v_t + (1-a)*y_{t-1}
     (pandas ``Series.ewm``; the smoothing half of every
     anomaly/forecast baseline). Returns
-    ``(user_id, [tiebreak], ts, value, ewma)``; rows with NULL ts or
+    ``(user_id, event_id, ts, value, ewma)``; rows with NULL ts or
     NULL value are excluded (they have no place in the recurrence —
     pre-impute with `fill_gaps_locf` if they should).
 
@@ -299,7 +272,7 @@ def ewma_per_key(
     two deliberate paths:
 
     - **exact** (default): ONE shuffle — groupBy(key), sort_array over
-      the collected (ts, tiebreak, value) structs, then a single
+      the collected (ts, event_id, value) structs, then a single
       `F.aggregate` fold that applies the recurrence element-by-element
       in exactly the IEEE op order ``a*v + b*y`` — bit-identical to
       the DuckDB recursive-CTE oracle and to pandas. The per-key
@@ -326,12 +299,11 @@ def ewma_per_key(
     if bucket_seconds is not None and int(bucket_seconds) < 1:
         raise ValueError(f"bucket_seconds must be >= 1, got {bucket_seconds}")
     a, b = float(alpha), 1.0 - float(alpha)
-    tb = [tiebreak_col] if tiebreak_col else []
     rows = df.where(F.col("ts").isNotNull() & F.col("value").isNotNull())
 
     item = F.struct(
         F.col("ts").alias("ts"),
-        *[F.col(c).alias(c) for c in tb],
+        F.col("event_id").alias("event_id"),
         F.col("value").cast("double").alias("v"),
     )
     empty_ys = F.expr("CAST(array() AS array<double>)")
@@ -358,7 +330,7 @@ def ewma_per_key(
             "user_id",
             *extra_cols,
             F.col("__z.i.ts").alias("ts"),
-            *[F.col(f"__z.i.{c}").alias(c) for c in tb],
+            F.col("__z.i.event_id").alias("event_id"),
             F.col("__z.i.v").alias("value"),
             F.col("__z.y").alias("ewma"),
         )

@@ -50,7 +50,6 @@ def rank_top_m(
     df: DataFrame,
     order_by: Sequence[Column],
     m: int,
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Global top-m + dense 1-based rank: TakeOrderedAndProject does
     the distributed heavy lift (per-partition top-m, merged at the
@@ -59,4 +58,4 @@ def rank_top_m(
     be a total order for a deterministic rank."""
     top = global_top_k(df, order_by, m)
     w = Window.orderBy(*order_by)
-    return top.withColumn(rank_col, F.row_number().over(w))
+    return top.withColumn("rank", F.row_number().over(w))

@@ -24,19 +24,17 @@ def latest_by_key(
     log: DataFrame,
     key_cols: list[str],
     version_col: str,
-    tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Current-state view of an append log: the row with the highest
-    ``version_col`` per key (ties broken by ``tiebreak_col`` —
-    REQUIRED when versions can collide, or the result is
-    nondeterministic).
+    ``version_col`` per key (ties broken by ``event_id``,
+    so colliding versions still give one deterministic row).
 
     Returns the full row, one per key, original column order.
     """
     data_cols = [c for c in log.columns if c not in key_cols]
     ver = F.struct(
         F.col(version_col),
-        *( [F.col(tiebreak_col)] if tiebreak_col and tiebreak_col != version_col else [] ),
+        *([F.col("event_id")] if version_col != "event_id" else []),
     )
     packed = log.groupBy(*key_cols).agg(
         F.max_by(F.struct(*data_cols), ver).alias("__row")

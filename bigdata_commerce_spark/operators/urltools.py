@@ -157,15 +157,14 @@ def _domain_expr(canonical: Column, rules: "psl.PslRules | None" = None) -> Colu
 
 def with_canonical_url(
     df: DataFrame,
-    url_col: str = "url",
     tracking_params: frozenset[str] = TRACKING_PARAMS,
 ) -> DataFrame:
-    """Add the canonical form of ``url_col``. Zero shuffle.
+    """Add the canonical form of ``url``. Zero shuffle.
     ``tracking_params`` widens/narrows the exact-key scrub set (the
     default deliberately excludes content-significant keys like
     'ref' — see TRACKING_PARAMS)."""
     return df.withColumn(
-        "canonical_url", _canonical_expr(F.col(url_col), tracking_params)
+        "canonical_url", _canonical_expr(F.col("url"), tracking_params)
     )
 
 
@@ -193,7 +192,7 @@ def dedup_by_canonical_url(df: DataFrame) -> DataFrame:
     map-side partial so the shuffle carries one row per (partition,
     url), not per input row."""
     return (
-        with_canonical_url(df, "url")
+        with_canonical_url(df)
         .where(F.col("canonical_url").isNotNull())
         .groupBy("canonical_url")
         .agg(F.min("doc_id").alias("doc_id"))
@@ -209,7 +208,7 @@ def host_report(df: DataFrame) -> DataFrame:
     One hash aggregate keyed on the domain. countDistinct adds the
     usual expand-for-distinct, still one shuffle; domain cardinality
     is tiny vs rows, so partials collapse map-side."""
-    canon = with_canonical_url(df, "url").where(
+    canon = with_canonical_url(df).where(
         F.col("canonical_url").isNotNull()
     )
     canon = with_registered_domain(canon)
@@ -295,7 +294,7 @@ def filter_blocked_domains(df: DataFrame, blocked: DataFrame) -> DataFrame:
     real blocklists range from tens (fits broadcast — AQE picks it)
     to hundreds of millions of domains (shuffle join is the only
     correct plan); size-based planning decides."""
-    canon = with_registered_domain(with_canonical_url(df, "url")).where(
+    canon = with_registered_domain(with_canonical_url(df)).where(
         F.col("canonical_url").isNotNull()
     )
     key = blocked.columns[0]

@@ -19,8 +19,4 @@ from bigdata_commerce_spark.plans.registry import (
     TWIN_QUERIES,
 )
 
-# The SQL-surface twin must produce byte-identical results to the
-# DataFrame form — give it the same oracle.
-ORACLES.setdefault("region_top3_parts_sql", ORACLES["region_top3_parts"])
-
 __all__ = ["QUERIES", "ORACLES", "TWIN_QUERIES", "TWIN_ORACLES"]

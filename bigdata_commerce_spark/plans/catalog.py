@@ -165,9 +165,9 @@ def top_orders_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "region_top3_parts",
-    oracle="""
+# The DataFrame form and the SQL-surface form (region_top3_parts_sql)
+# must give byte-identical results: one oracle for both.
+_REGION_TOP3_ORACLE = """
     WITH basic AS (
         SELECT r_name AS area, n_name AS nation, l_partkey
         FROM lineitem
@@ -191,8 +191,10 @@ def top_orders_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
            ranked.l_partkey, p_name, order_count, nation_list, rank
     FROM ranked JOIN part ON ranked.l_partkey = p_partkey
     WHERE rank <= 3
-    """,
-)
+    """
+
+
+@query("region_top3_parts", oracle=_REGION_TOP3_ORACLE)
 def region_top3_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Req-6 analog (AreaTop3Stat — ``AreaTop3Stat.scala:15-123``):
     top-3 parts per region with the distinct nation list and a CASE
@@ -330,7 +332,7 @@ ordered AS (
 
 def _session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir).select("user_id", "ts")
-    return session_aggregates(sessionize(ev, gap_minutes=30))
+    return session_aggregates(sessionize(ev))
 
 
 # generated: every band shares the functions.ratio contract (zero
@@ -372,7 +374,7 @@ def sessionize_skew_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket_seconds path must emit identical session ids (round-5 skew
     probe: exact 5.8x under a 30%-hot key, bucketized 0.9x)."""
     ev = load_table(spark, "events", sf_dir).select("user_id", "ts")
-    return sessionize(ev, gap_minutes=30, bucket_seconds=3600)
+    return sessionize(ev, bucket_seconds=3600)
 
 
 @query("session_stats", oracle=f"WITH {_SESSION_CTE} {_HISTOGRAM_SELECT}")
@@ -408,7 +410,7 @@ def session_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Req 2: proportional per-(day, hour) session sample, 100/day,
     deterministic via md5 ranking (replaces driver-side random index
     lists + broadcast + groupByKey — ``SessionStat.scala:314-454``)."""
-    out = stratified_session_sample(_session_agg(spark, sf_dir), per_day=100)
+    out = stratified_session_sample(_session_agg(spark, sf_dir))
     return out.select(
         "session_id",
         "user_id",
@@ -579,9 +581,12 @@ def ad_blacklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Req 7: users above the per-day click threshold (reference: >100
     with per-key MySQL lookups inside a filter —
     ``AdverStat.scala:287-309``; threshold 3 here to be meaningful at
-    test scale, parameterized in operators.adstats.blacklist)."""
+    test scale)."""
     ev = _events(spark, sf_dir).where(F.col("event_type") == "click")
-    return adstats.blacklist(ev, threshold=3, key_cols=("event_date", "user_id"))
+    # click counts per (date, user): the blacklist base
+    # (``AdverStat.scala:250-268``)
+    counts = ev.groupBy("event_date", "user_id").agg(F.count(F.lit(1)).alias("click_count"))
+    return adstats.blacklist_head(counts, 3)
 
 
 @query(

@@ -208,8 +208,6 @@ def ts_similar_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5,
         n_buckets=120,
         bucket_seconds=21600,
-        origin="2024-01-01 00:00:00",
-        round_dp=6,
     )
 
 
@@ -435,7 +433,7 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint groupBy via min_by — no self-joins back to the
     corpus."""
     docs = load_table(spark, "documents", sf_dir)
-    return text_ops.curate(docs, min_quality=0.5, lang="en")
+    return text_ops.curate(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -514,7 +512,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the result identical to the all-pairs definition the
     oracle computes."""
     docs = load_table(spark, "documents", sf_dir)
-    return dedup.containment_pairs(docs, threshold=0.8)
+    return dedup.containment_pairs(docs)
 
 
 @twin_query(
@@ -543,7 +541,7 @@ def top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate detection. Map-side fold, one explode, one hash
     aggregate on the ngram key, distributed top-k."""
     docs = load_table(spark, "documents", sf_dir)
-    return text_ops.top_ngrams(docs, n=2, k=50)
+    return text_ops.top_ngrams(docs)
 
 
 # Document frequency threshold for the boilerplate twin: with the
@@ -623,7 +621,7 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     bench = docs.where(F.col("doc_id") % 40 == 7)
     corpus = docs.where(F.col("doc_id") % 40 != 7)
-    return contamination_report(corpus, bench, n=3)
+    return contamination_report(corpus, bench)
 
 
 # Mixture config for the twin: a spread of per-source keep fractions
@@ -639,7 +637,7 @@ def _mix_oracle() -> str:
     return f"""
     SELECT doc_id, source, lang, n_chars FROM documents
     WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':mix'), 1, 8)
-        < {mixture_oracle_case(_MIX_FRACTIONS, default=0.0)}
+        < {mixture_oracle_case(_MIX_FRACTIONS)}
     """
 
 
@@ -670,12 +668,12 @@ def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return persist_bounded(dedup.jaccard_pairs(docs, threshold=0.8))
 
 
-def _minhash_sig_sql(num_hashes: int = 8) -> str:
+def _minhash_sig_sql() -> str:
     # Twin of dedup's minhash signature: component i = 8-hex-char slice
     # slot i%4 of md5((i//4) || ':' || shingle).
     cols = ",\n           ".join(
         f"MIN(substr(md5('{i // 4}:' || shingle), {(i % 4) * 8 + 1}, 8)) AS mh_{i}"
-        for i in range(num_hashes)
+        for i in range(8)
     )
     return f"SELECT id, {cols} FROM ex GROUP BY id"
 
@@ -684,7 +682,7 @@ def _minhash_sig_sql(num_hashes: int = 8) -> str:
     "minhash_signatures",
     oracle=f"""
     WITH {_SHINGLE_CTE}
-    {_minhash_sig_sql(8)}
+    {_minhash_sig_sql()}
     """,
 )
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -692,21 +690,21 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle) — fixed-width hex makes string-min == numeric-min, so the
     signature is engine-portable)."""
     docs = load_table(spark, "documents", sf_dir)
-    return dedup.minhash_signatures(docs, num_hashes=8)
+    return dedup.minhash_signatures(docs)
 
 
-def _minhash_lsh_sql(num_hashes: int = 8, bands: int = 4, threshold: float = 0.8) -> str:
-    rpb = num_hashes // bands
+def _minhash_lsh_sql() -> str:
+    rpb = 8 // 4
     band_selects = "\n        UNION ALL ".join(
         "SELECT id, {b} AS band, md5({concat}) AS bucket FROM sig".format(
             b=b,
             concat=" || '|' || ".join(f"mh_{b * rpb + r}" for r in range(rpb)),
         )
-        for b in range(bands)
+        for b in range(4)
     )
     return f"""
     WITH {_SHINGLE_CTE}
-    , sig AS ({_minhash_sig_sql(num_hashes)})
+    , sig AS ({_minhash_sig_sql()})
     , buckets AS (
         {band_selects}
     ), cand AS (
@@ -725,7 +723,7 @@ def _minhash_lsh_sql(num_hashes: int = 8, bands: int = 4, threshold: float = 0.8
     FROM common
     JOIN sizes sa ON sa.id = id1
     JOIN sizes sb ON sb.id = id2
-    WHERE common * 1.0 / (sa.n_shingles + sb.n_shingles - common) >= {threshold}
+    WHERE common * 1.0 / (sa.n_shingles + sb.n_shingles - common) >= 0.8
     """
 
 
@@ -735,7 +733,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-Jaccard verify on candidates only — the scale path (cost
     follows near-dup count, not documents^2)."""
     docs = load_table(spark, "documents", sf_dir)
-    return dedup.minhash_lsh_pairs(docs, num_hashes=8, bands=4, threshold=0.8)
+    return dedup.minhash_lsh_pairs(docs, bands=4)
 
 
 def _simhash_sql() -> str:
@@ -796,7 +794,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (Hamming <= 3) via 15-bit chunk banding
     (pigeonhole-complete for the threshold) + bit_count verify."""
     docs = load_table(spark, "documents", sf_dir)
-    return dedup.simhash_pairs(docs, max_hamming=3)
+    return dedup.simhash_pairs(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -911,7 +909,7 @@ def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest."""
     emb = load_table(spark, "embeddings", sf_dir)
     probes = emb.where(F.col("vec_id") < 5)
-    return similarity.lsh_ann_topk(emb, probes, k=5)
+    return similarity.lsh_ann_topk(emb, probes)
 
 
 @twin_query(
@@ -947,11 +945,11 @@ def embedding_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     probes = emb.where(F.col("vec_id") < 5)
     exact = similarity.cosine_topk(emb, probes, k=5)
-    approx = similarity.lsh_ann_topk(emb, probes, k=5)
+    approx = similarity.lsh_ann_topk(emb, probes)
     return similarity.topk_recall(exact, approx)
 
 
-def _neardup_oracle(threshold: float = 0.45) -> str:
+def _neardup_oracle() -> str:
     """DuckDB twin of similarity.neardup_pairs: same LSH bucket CTEs,
     corpus self-join (id1 < id2) for candidates, exact-cosine verify
     thresholded on the UNROUNDED score (WHERE before ROUND)."""
@@ -970,7 +968,7 @@ def _neardup_oracle(threshold: float = 0.45) -> str:
         JOIN v v1 ON v1.vec_id = cand.id1
         JOIN v v2 ON v2.vec_id = cand.id2
     )
-    SELECT id1, id2, ROUND(raw, 4) AS score FROM scored WHERE raw >= {threshold}
+    SELECT id1, id2, ROUND(raw, 4) AS score FROM scored WHERE raw >= 0.45
     """
 
 
@@ -1091,7 +1089,7 @@ def embedding_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join; centroid sims rounded to 4dp and pair cosines to 6dp
     before any comparison (engine parity)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    return similarity.semdedup(emb, tau=0.9, n_centroids=16)
+    return similarity.semdedup(emb, tau=0.9)
 
 
 @query("embedding_ann_ivf", oracle=_IVF_ORACLE)
@@ -1104,7 +1102,7 @@ def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe-time scans touch nprobe/n_centroids of the corpus."""
     emb = load_table(spark, "embeddings", sf_dir)
     probes = emb.where(F.col("vec_id") < 5)
-    return similarity.ivf_topk(emb, probes, k=5, n_centroids=16, nprobe=4)
+    return similarity.ivf_topk(emb, probes)
 
 
 @query("embedding_ann_ivf_indexed", oracle=_IVF_ORACLE)
@@ -1129,7 +1127,7 @@ def embedding_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.basename(os.path.normpath(sf_dir)),
     )
     ivf_index.write_ivf_index(emb, path, n_centroids=16)
-    return ivf_index.search_ivf_index(spark, path, probes, k=5, nprobe=4)
+    return ivf_index.search_ivf_index(spark, path, probes, k=5)
 
 
 # ---------------------------------------------------------------------------
@@ -1721,7 +1719,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     pairs = _jaccard_pairs_cached(spark, sf_dir)
     nodes = docs.select(F.col("doc_id").alias("id"))
-    out = connected_components(nodes, pairs, node_col="id")
+    out = connected_components(nodes, pairs)
     return out.select(F.col("id").alias("doc_id"), "cluster_id")
 
 
@@ -1858,8 +1856,7 @@ def ad_launch_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = range_join(
         ev, windows, ts_col="ts",
-        start_col="window_start", end_col="window_end",
-        key_cols=["ad_id"], bucket_seconds=3600,
+        start_col="window_start", end_col="window_end", bucket_seconds=3600,
     )
     return joined.groupBy("ad_id", "window_start", "window_end").agg(
         F.count(F.lit(1)).alias("events_in_window")
@@ -1893,7 +1890,7 @@ def event_rollup_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_commerce_spark.operators.rollup_hierarchy import rollup_ladder
 
     ev = _events(spark, sf_dir)
-    ladder = rollup_ladder(ev, ts_col="ts", key_cols=["province"], value_col="ad_id")
+    ladder = rollup_ladder(ev)
     out = None
     for lvl, df in ladder.items():
         tagged = df.select(
@@ -2184,7 +2181,7 @@ def length_bucketed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(text_ops.tokens("text")).cast("bigint").alias("n_tokens"),
     )
-    return length_bucketed_index(counted, n_buckets=4).select(
+    return length_bucketed_index(counted).select(
         "doc_id", "n_tokens", "bucket", "pos"
     )
 
@@ -2685,13 +2682,11 @@ _PROFILE_ORACLE = " UNION ALL ".join(
 def events_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass column profiler (operators/profile.py) over every
     events column: counts, exact distinct cardinality, typed min/max,
-    exact-decimal mean. Exact distinct here because the oracle must
-    hash-match; production default is the single-pass HLL++ path
-    (module docstring)."""
+    exact-decimal mean (the oracle must hash-match)."""
     from bigdata_commerce_spark.operators.profile import profile_table
 
     ev = load_table(spark, "events", sf_dir)
-    return profile_table(ev, exact_distinct=True)
+    return profile_table(ev)
 
 # ---------------------------------------------------------------------------
 # Hybrid retrieval (BM25 + embedding cosine, reciprocal-rank fusion)
@@ -2767,9 +2762,6 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused = rrf_fuse(
         {"lex": lex, "sem": sem},
         id_cols=["doc_id"],
-        rank_col="rank",
-        k=60,
-        top_n=10,
     )
     return fused.select("doc_id", "rank_lex", "rank_sem", "rrf", "rank")
 
@@ -2890,7 +2882,7 @@ def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     pairs = _jaccard_pairs_cached(spark, sf_dir)
     nodes = docs.select(F.col("doc_id").alias("id"))
-    clusters = connected_components(nodes, pairs, node_col="id").select(
+    clusters = connected_components(nodes, pairs).select(
         F.col("id").alias("doc_id"), "cluster_id"
     )
     return canonical_per_cluster(clusters, docs)

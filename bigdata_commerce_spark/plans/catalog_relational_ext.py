@@ -13,7 +13,11 @@ from pyspark.sql import functions as F
 
 from bigdata_commerce_spark.functions import money_sum
 from bigdata_commerce_spark.operators.asof import asof_join
-from bigdata_commerce_spark.plans.catalog import _EVENTS_ORACLE_CTE, _events
+from bigdata_commerce_spark.plans.catalog import (
+    _EVENTS_ORACLE_CTE,
+    _REGION_TOP3_ORACLE,
+    _events,
+)
 from bigdata_commerce_spark.plans.registry import query, twin_query
 from bigdata_commerce_spark.sources.testdata import load_table
 
@@ -118,12 +122,7 @@ def events_running_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir).select("event_id", "user_id", "ts", "value")
     out = running_sum_per_key(
         ev,
-        key_col="user_id",
-        ts_col="ts",
-        value_col="value",
-        out_col="__rs",
         bucket_seconds=3600,
-        tiebreak_col="event_id",
     )
     return out.select(
         "event_id",
@@ -295,7 +294,7 @@ def supplier_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("region_top3_parts_sql")
+@query("region_top3_parts_sql", oracle=_REGION_TOP3_ORACLE)
 def region_top3_parts_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-surface parity (SURVEY.md §3.2): the area/top-3 pipeline as
     the reference writes it — a chain of temp views consumed by
@@ -479,7 +478,7 @@ def latest_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir).select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
-    return latest_by_key(ev, ["user_id"], "ts", tiebreak_col="event_id")
+    return latest_by_key(ev, ["user_id"], "ts")
 
 
 @query(
@@ -669,7 +668,6 @@ def customer_kanonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kanonymity_report(
         cust,
         qi_cols=["c_nationkey", "c_mktsegment", "bal_band"],
-        k=5,
         show_n=20,
     )
 
@@ -906,9 +904,6 @@ def events_value_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev,
         value_col="value",
         id_col="event_id",
-        group_cols=["event_type"],
-        n_resamples=40,
-        level=0.95,
     )
 
 
@@ -989,7 +984,7 @@ def events_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_commerce_spark.operators.salted import key_skew_report
 
     ev = load_table(spark, "events", sf_dir)
-    return key_skew_report(ev, ["user_id"], k=20)
+    return key_skew_report(ev, ["user_id"])
 
 
 @twin_query(
@@ -1059,7 +1054,7 @@ def user_daily_value_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, "events", sf_dir).where(F.col("user_id") < 200)
     return fill_gaps_locf(
-        ev, bucket_seconds=86400, key_col="user_id", ts_col="ts", value_col="value"
+        ev, bucket_seconds=86400
     )
 
 
@@ -1145,7 +1140,7 @@ def user_value_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "bucket")
         .agg(money_sum(F.col("value")).alias("value"))
     )
-    return flag_anomalies(series, key_col="user_id", z_threshold=2.5)
+    return flag_anomalies(series, z_threshold=2.5)
 
 
 # Drift twin config: bins + the fraction list and epsilon are generated
@@ -1291,7 +1286,7 @@ def user_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdata_commerce_spark.operators.timeseries import ohlc_resample
 
     ev = load_table(spark, "events", sf_dir).where(F.col("user_id") < 100)
-    return ohlc_resample(ev, 3600, key_col="user_id")
+    return ohlc_resample(ev, 3600)
 
 
 @twin_query(
@@ -1358,7 +1353,7 @@ def events_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "user_id", "ts", "value"
     )
-    out = ewma_per_key(ev, alpha=0.1, tiebreak_col="event_id")
+    out = ewma_per_key(ev, alpha=0.1)
     return out.select("user_id", "event_id", "ts", "value", "ewma")
 
 
@@ -1416,7 +1411,7 @@ def customer_negative_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     n_items = part.agg(F.count(F.lit(1)).cast("bigint").alias("n_items"))
-    return negative_samples(positives, n_items, k=5, oversample=2)
+    return negative_samples(positives, n_items)
 
 
 @twin_query(
@@ -1544,7 +1539,7 @@ def events_value_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, "events", sf_dir)
     return winsorize(
-        ev, ["value"], lower=0.05, upper=0.95, group_col="event_type"
+        ev, ["value"], lower=0.05, upper=0.95
     ).select("event_id", "event_type", "value", "value_w")
 
 

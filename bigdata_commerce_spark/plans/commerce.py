@@ -127,7 +127,7 @@ def session_random_extract(
 ) -> DataFrame:
     """Req 2: deterministic proportional per-(day, hour) extraction."""
     return with_task_id(
-        stratified_session_sample(filtered_sessions, per_day=100), params
+        stratified_session_sample(filtered_sessions), params
     )
 
 

@@ -48,13 +48,7 @@ def with_global_index(df: DataFrame) -> DataFrame:
     )
 
 
-def with_group_shuffled_index(
-    df: DataFrame,
-    group_cols: list[str],
-    id_col: str = "doc_id",
-    index_col: str = "pos",
-    salt: str = ":shuf",
-) -> DataFrame:
+def with_group_shuffled_index(df: DataFrame, group_cols: list[str]) -> DataFrame:
     """Dense 0-based SHUFFLED position within each group — the keyed
     sibling of ``with_global_index``, with the deterministic md5
     order standing in for a random permutation (the
@@ -70,11 +64,11 @@ def with_group_shuffled_index(
     position is that offset + its rank within its (group, sub) cell.
     The heavy window partitions by (group, sub): bounded memory at
     any group size, exactly the ``with_global_index`` posture with a
-    key. ``id_col`` must be unique — it is both the hash input and
+    key. ``doc_id`` must be unique — it is both the hash input and
     the total-order tiebreak.
     """
     h = F.substring(
-        F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt))), 1, 16
+        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":shuf"))), 1, 16
     )
     rows = df.withColumn("__h", h).withColumn("__sub", F.substring("__h", 1, 2))
     counts = rows.groupBy(*group_cols, "__sub").agg(
@@ -90,10 +84,10 @@ def with_group_shuffled_index(
         "__sub",
         F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__offset"),
     )
-    w_in = Window.partitionBy(*group_cols, "__sub").orderBy("__h", id_col)
+    w_in = Window.partitionBy(*group_cols, "__sub").orderBy("__h", "doc_id")
     return (
         rows.join(F.broadcast(offsets), [*group_cols, "__sub"])
-        .withColumn(index_col, F.col("__offset") + F.row_number().over(w_in) - 1)
+        .withColumn("pos", F.col("__offset") + F.row_number().over(w_in) - 1)
         .drop("__h", "__sub", "__n", "__offset")
     )
 

@@ -5,13 +5,17 @@ The reference runs these on 5-second DStream micro-batches over Kafka
 reads/writes scattered across driver and executors. Here the whole
 topology is declarative:
 
-    source -> parse -> stream-static anti-join (blacklist)
-           -> four sinks (blacklist gen / cumulative / top-3 / trend)
+    source -> parse -> foreachBatch:
+        anti-join against the blacklist state (read before this epoch)
+        -> four sinks (blacklist gen / cumulative / top-3 / trend)
 
 Semantic upgrades over the reference (SURVEY.md §2.9): event-time
-windows with watermarks instead of processing-time
+sliding windows assigned per batch instead of processing-time
 ``reduceByKeyAndWindow``; retry-safe idempotent epoch sinks instead of
-read-modify-write JDBC; no driver-side DB reads per batch.
+read-modify-write JDBC. The blacklist is one lazy state read per
+batch, joined into the batch, not a DB point lookup per record.
+There is no watermark: all state is sink-side, so late rows
+fold in exactly.
 
 Sources are pluggable: Kafka in production
 (``spark.readStream.format('kafka')`` — same parse function), file /
@@ -40,7 +44,7 @@ AD_EVENT_SCHEMA = T.StructType(
 )
 
 
-def parse_ad_log(lines: DataFrame, value_col: str = "value") -> DataFrame:
+def parse_ad_log(lines: DataFrame) -> DataFrame:
     """Parse the reference's positional text lines into typed columns
     (replaces ``AdverStat.scala:97-103``'s split-at-every-use; fixes
     SURVEY.md §2.12/6 — epoch millis parsed as a number, not
@@ -56,7 +60,7 @@ def parse_ad_log(lines: DataFrame, value_col: str = "value") -> DataFrame:
     Garbage parses to NULL fields (NULL event_time/keys), which
     downstream groupings keep as an observable 'unattributed'
     bucket."""
-    parts = F.split(F.col(value_col).cast("string"), " ")
+    parts = F.split(F.col("value").cast("string"), " ")
     pos = {name: F.get(parts, i) for i, name in enumerate(AD_LOG_FIELDS)}
     ts = F.timestamp_millis(pos["ts_ms"].try_cast("bigint"))
     return lines.select(
@@ -70,10 +74,10 @@ def parse_ad_log(lines: DataFrame, value_col: str = "value") -> DataFrame:
 
 
 def without_blacklisted(stream: DataFrame, blacklist: DataFrame) -> DataFrame:
-    """Stream-static left-anti join: the static side is re-resolved
-    every micro-batch by Structured Streaming, which is exactly the
-    reference's per-batch blacklist re-read (``AdverStat.scala:54-69``)
-    without the driver-side DB round trip."""
+    """Left-anti join of one micro-batch against the blacklist state
+    that ``run_ad_pipeline`` reads inside ``foreachBatch`` before the
+    batch's epoch: the reference's per-batch blacklist re-read
+    (``AdverStat.scala:54-69``)."""
     return stream.join(blacklist.select("user_id"), "user_id", "left_anti")
 
 

@@ -207,4 +207,4 @@ def kafka_event_source(
                 f"{spark.version}"
             ) from e
         raise
-    return ad_stream.parse_ad_log(raw, value_col="value")
+    return ad_stream.parse_ad_log(raw)

@@ -31,7 +31,7 @@ def test_no_false_negatives(spark):
     m, k = bloom.bloom_params(len(keys), 0.01)
     filt = bloom.bloom_build(_df(spark, keys), "k", m, k)
     probed = bloom.bloom_might_contain(_df(spark, keys), "k", filt, m, k)
-    assert probed.where(~F.col("might_contain")).count() == 0
+    assert probed.where(~F.col("__maybe")).count() == 0
 
 
 def test_false_positive_rate_bounded(spark):
@@ -41,7 +41,7 @@ def test_false_positive_rate_bounded(spark):
     filt = bloom.bloom_build(_df(spark, member), "k", m, k)
     fp = (
         bloom.bloom_might_contain(_df(spark, absent), "k", filt, m, k)
-        .where(F.col("might_contain"))
+        .where(F.col("__maybe"))
         .count()
     )
     # 3x headroom over the configured 1% for sampling noise
@@ -52,7 +52,7 @@ def test_null_keys_never_stored_and_flag_false(spark):
     m, k = bloom.bloom_params(10, 0.01)
     filt = bloom.bloom_build(_df(spark, [1, 2, None]), "k", m, k)
     flags = {
-        r.k: r.might_contain
+        r.k: r["__maybe"]
         for r in bloom.bloom_might_contain(
             _df(spark, [1, None]), "k", filt, m, k
         ).collect()

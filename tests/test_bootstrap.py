@@ -14,7 +14,7 @@ from bigdata_commerce_spark.operators.bootstrap import (
 
 
 def _df(spark, rows, parts=None):
-    df = spark.createDataFrame(rows, "g string, id long, v double")
+    df = spark.createDataFrame(rows, "event_type string, id long, v double")
     return df.repartition(parts) if parts else df
 
 
@@ -31,9 +31,9 @@ def test_thresholds_match_poisson_cdf():
 
 def _run(spark, rows, parts=None, **kw):
     out = poisson_bootstrap_ci(
-        _df(spark, rows, parts), "v", "id", group_cols=["g"], **kw
+        _df(spark, rows, parts), "v", "id", **kw
     )
-    return {r["g"]: r.asDict() for r in out.collect()}
+    return {r["event_type"]: r.asDict() for r in out.collect()}
 
 
 def test_ci_brackets_mean_and_is_deterministic(spark):
@@ -71,10 +71,10 @@ def test_mean_weight_near_one(spark):
     from bigdata_commerce_spark.operators.bootstrap import _MAX_W
 
     df = _df(spark, [("a", i, 1.0) for i in range(500)])
-    out = poisson_bootstrap_ci(df, "v", "id", group_cols=["g"])
+    out = poisson_bootstrap_ci(df, "v", "id")
     # indirect check: with 500 rows x 40 resamples the resample SUM
     # of weights ~ Poisson(500); a broken grid (all-zero or
     # all-_MAX_W) would push the ci far from the value mean of 1.0
-    r = {x["g"]: x for x in out.collect()}["a"]
+    r = {x["event_type"]: x for x in out.collect()}["a"]
     assert r["ci_lo"] == r["ci_hi"] == 1.0  # constant values
     assert _MAX_W >= 8

@@ -28,7 +28,7 @@ def test_ann_recall_vs_bruteforce(spark):
     }
     approx = {
         (r.probe_id, r.corpus_id)
-        for r in similarity.lsh_ann_topk(emb, probes, k=5).collect()
+        for r in similarity.lsh_ann_topk(emb, probes).collect()
     }
     assert exact, "brute force returned nothing"
     recall = len(exact & approx) / len(exact)
@@ -44,7 +44,7 @@ def test_topk_recall_report_matches_set_arithmetic(spark):
     emb = load_table(spark, "embeddings", SF_SMOKE)
     probes = emb.where(F.col("vec_id") < 5)
     exact = similarity.cosine_topk(emb, probes, k=5)
-    approx = similarity.lsh_ann_topk(emb, probes, k=5)
+    approx = similarity.lsh_ann_topk(emb, probes)
     rep = {r.probe_id: r for r in similarity.topk_recall(exact, approx).collect()}
     truth = {(r.probe_id, r.corpus_id) for r in exact.collect()}
     got = {(r.probe_id, r.corpus_id) for r in approx.collect()}
@@ -75,7 +75,7 @@ def test_ann_scores_match_exact_for_shared_pairs(spark):
     }
     approx = {
         (r.probe_id, r.corpus_id): r.score
-        for r in similarity.lsh_ann_topk(emb, probes, k=5).collect()
+        for r in similarity.lsh_ann_topk(emb, probes).collect()
     }
     shared = set(exact) & set(approx)
     assert shared
@@ -95,7 +95,7 @@ def test_ivf_recall_vs_bruteforce(spark):
     }
     approx = {
         (r.probe_id, r.corpus_id)
-        for r in similarity.ivf_topk(emb, probes, k=5).collect()
+        for r in similarity.ivf_topk(emb, probes).collect()
     }
     assert exact
     recall = len(exact & approx) / len(exact)
@@ -112,7 +112,7 @@ def test_ivf_assignment_partitions_corpus(spark):
         (r.probe_id, r.corpus_id): r.score
         for r in similarity.cosine_topk(emb, probes, k=500).collect()
     }
-    ivf = similarity.ivf_topk(emb, probes, k=5).collect()
+    ivf = similarity.ivf_topk(emb, probes).collect()
     assert len(ivf) == 25  # 5 probes x full k (cells hold >> 5 each)
     for r in ivf:
         assert exact[(r.probe_id, r.corpus_id)] == r.score
@@ -276,7 +276,7 @@ def test_containment_catches_embedded_snippet_jaccard_misses(spark):
     assert j == set()  # resemblance blind to the embedding
     c = {
         (r.id1, r.id2): r.containment
-        for r in containment_pairs(docs, threshold=0.8).collect()
+        for r in containment_pairs(docs).collect()
     }
     assert c == {(1, 2): 1.0}
 
@@ -301,7 +301,7 @@ def test_containment_exact_dup_is_mutual_and_boundary_holds(spark):
     )
     c = {
         (r.id1, r.id2): r.containment
-        for r in containment_pairs(docs, threshold=0.8).collect()
+        for r in containment_pairs(docs).collect()
     }
     assert c[(2, 1)] == 1.0 and c[(2, 3)] == 1.0
     assert c[(1, 3)] == 1.0 and c[(3, 1)] == 1.0  # mutual for exact dups
@@ -349,11 +349,11 @@ def test_negative_samples_never_leak_positives_and_are_deterministic(spark):
     n_items = spark.createDataFrame([(50,)], "n_items long")
     out1 = sorted(
         (r.user_id, r.item_id, r.neg_rank)
-        for r in negative_samples(pos, n_items, k=5, oversample=2).collect()
+        for r in negative_samples(pos, n_items).collect()
     )
     out2 = sorted(
         (r.user_id, r.item_id, r.neg_rank)
-        for r in negative_samples(pos, n_items, k=5, oversample=2).collect()
+        for r in negative_samples(pos, n_items).collect()
     )
     assert out1 == out2 and out1
     positives = {(u, i) for u in range(20) for i in range(u % 4)}
@@ -368,7 +368,7 @@ def test_negative_samples_never_leak_positives_and_are_deterministic(spark):
     # tiny catalog: user bought 2 of 3 items -> at most the 1 remaining
     tiny_pos = spark.createDataFrame([(1, 0), (1, 1)], "user_id long, item_id long")
     tiny_n = spark.createDataFrame([(3,)], "n_items long")
-    tiny = negative_samples(tiny_pos, tiny_n, k=2, oversample=3).collect()
+    tiny = negative_samples(tiny_pos, tiny_n).collect()
     assert {(r.user_id, r.item_id) for r in tiny} <= {(1, 2)}
 
 
@@ -665,7 +665,7 @@ def test_corpus_curation_consistent_with_standalone_ops(spark):
     from bigdata_commerce_spark.operators import text as text_ops
 
     docs = load_table(spark, "documents", SF_SMOKE)
-    got = text_ops.curate(docs, min_quality=0.5, lang="en").collect()
+    got = text_ops.curate(docs).collect()
 
     q = {r.doc_id: r.quality for r in text_ops.quality_score(docs).collect()}
     lang = {r.doc_id: r.predicted_lang for r in text_ops.lang_id(docs).collect()}
@@ -725,7 +725,7 @@ def test_range_join_matches_naive_nonequi(spark):
     base = dt.datetime(2024, 1, 1)
     pts = spark.createDataFrame(
         [(i, base + dt.timedelta(minutes=7 * i)) for i in range(100)],
-        "k long, ts timestamp",
+        "ad_id long, ts timestamp",
     )
     iv = spark.createDataFrame(
         [
@@ -733,17 +733,17 @@ def test_range_join_matches_naive_nonequi(spark):
              base + dt.timedelta(minutes=30 * i + 95))
             for i in range(12)
         ],
-        "k long, s timestamp, e timestamp",
+        "ad_id long, s timestamp, e timestamp",
     )
     naive = (
-        pts.crossJoin(iv.withColumnRenamed("k", "k2"))
-        .where((F.col("k") == F.col("k2")) & (F.col("ts") >= F.col("s")) & (F.col("ts") <= F.col("e")))
-        .select("k", "ts", "s", "e")
+        pts.crossJoin(iv.withColumnRenamed("ad_id", "k2"))
+        .where((F.col("ad_id") == F.col("k2")) & (F.col("ts") >= F.col("s")) & (F.col("ts") <= F.col("e")))
+        .select("ad_id", "ts", "s", "e")
     )
     expected = sorted(map(tuple, naive.collect()))
     for bucket in (600, 3600, 86400):  # 10min < interval; 1h ~; 1d >
         got = sorted(
-            map(tuple, range_join(pts, iv, "ts", "s", "e", ["k"], bucket).select("k", "ts", "s", "e").collect())
+            map(tuple, range_join(pts, iv, "ts", "s", "e", bucket).select("ad_id", "ts", "s", "e").collect())
         )
         assert got == expected, f"bucket={bucket}"
     assert expected, "fixture produced no matches"
@@ -754,14 +754,15 @@ def test_rollup_ladder_levels_consistent(spark):
     that granularity (lossless re-aggregation), and coarser levels
     must be strictly smaller."""
     from bigdata_commerce_spark.operators.rollup_hierarchy import rollup_ladder
+    from bigdata_commerce_spark.plans.catalog import _events
 
-    ev = load_table(spark, "events", SF_SMOKE).select("ts", "user_id")
-    ladder = rollup_ladder(ev, ts_col="ts", key_cols=[], value_col="user_id")
+    ev = _events(spark, SF_SMOKE).select("ts", "province", "ad_id")
+    ladder = rollup_ladder(ev)
     sizes = {}
     for lvl in ("minute", "hour", "day"):
-        direct = ev.groupBy(F.date_trunc(lvl, "ts").alias("bucket")).agg(
+        direct = ev.groupBy(F.date_trunc(lvl, "ts").alias("bucket"), "province").agg(
             F.count(F.lit(1)).alias("event_count"),
-            F.sum("user_id").alias("value_sum"),
+            F.sum("ad_id").alias("value_sum"),
         )
         got = sorted(map(tuple, ladder[lvl].collect()))
         want = sorted(map(tuple, direct.collect()))
@@ -826,7 +827,7 @@ def test_ivf_index_search_matches_ivf_topk(spark, tmp_path):
     got = sorted(
         map(tuple, ivf_index.search_ivf_index(spark, path, probes, k=5).collect())
     )
-    want = sorted(map(tuple, similarity.ivf_topk(emb, probes, k=5).collect()))
+    want = sorted(map(tuple, similarity.ivf_topk(emb, probes).collect()))
     assert got == want and got
 
 
@@ -1034,73 +1035,6 @@ def test_ivf_index_scan_prunes_partitions(spark, tmp_path):
     # executed effect: the scan reads exactly the wanted cells
     got_cells = {r.centroid_id for r in scan.select("centroid_id").distinct().collect()}
     assert got_cells == set(wanted)
-
-
-def test_hll_rollup_union_is_lossless_and_accurate(spark):
-    """Mergeable distinct-count rollup: unioning per-day sketches
-    gives the SAME estimate as one sketch over the raw rows (HLL
-    union at fixed lgK is lossless), and the estimate lands within
-    5% of the exact distinct count."""
-    from bigdata_commerce_spark.operators.sketch import (
-        hll_estimate_over,
-        hll_rollup,
-    )
-
-    ev = load_table(spark, "events", SF_SMOKE).select(
-        F.to_date("ts").alias("d"), "event_type", "user_id"
-    )
-    rollup = hll_rollup(ev, ["d", "event_type"], "user_id")
-    got = {
-        r.event_type: r.approx_distinct
-        for r in hll_estimate_over(rollup, ["event_type"]).collect()
-    }
-    direct = {
-        r.event_type: r.e
-        for r in ev.groupBy("event_type")
-        .agg(
-            F.hll_sketch_estimate(F.hll_sketch_agg("user_id", F.lit(12)))
-            .cast("bigint")
-            .alias("e")
-        )
-        .collect()
-    }
-    exact = {
-        r.event_type: r.n
-        for r in ev.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    assert got == direct  # union of day sketches == sketch of union
-    for et, n in exact.items():
-        assert abs(got[et] - n) <= max(2, 0.05 * n), (et, got[et], n)
-
-
-def test_hll_rollup_two_level_merge_associative(spark):
-    """day -> (day-bucket) -> global merges equal the direct global
-    merge: sketch union is associative, so a rollup ladder can merge
-    level-to-level without touching raw data."""
-    from bigdata_commerce_spark.operators.sketch import (
-        hll_estimate_over,
-        hll_rollup,
-    )
-
-    ev = load_table(spark, "events", SF_SMOKE).select(
-        F.to_date("ts").alias("d"), "user_id"
-    ).withColumn("bucket", (F.dayofmonth("d") % 3).alias("bucket"))
-    daily = hll_rollup(ev, ["d", "bucket"], "user_id")
-    via_buckets = (
-        daily.groupBy("bucket")
-        .agg(F.hll_union_agg("hll").alias("hll"))
-        .agg(F.hll_sketch_estimate(F.hll_union_agg("hll")).cast("bigint").alias("e"))
-        .collect()[0]
-        .e
-    )
-    direct = (
-        hll_estimate_over(daily.withColumn("g", F.lit(1)), ["g"])
-        .collect()[0]
-        .approx_distinct
-    )
-    assert via_buckets == direct
 
 
 def test_ivf_appended_cells_compact_and_search_unchanged(spark, tmp_path):

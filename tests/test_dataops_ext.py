@@ -226,7 +226,6 @@ def test_similar_series_identical_series_rank_first(spark):
     df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
     got = similar_series(
         df, probe_keys=[1], k=2, n_buckets=4, bucket_seconds=60,
-        origin="2024-01-01 00:00:00",
     ).collect()
     assert [r.corpus_id for r in got] == [2, 3]
     assert got[0].score == 1.0
@@ -312,7 +311,7 @@ def test_length_bucketed_index_contract(spark):
 
     rows = [(i, (i * 37) % 997 + 1) for i in range(400)] + [(1000, None), (1001, None)]
     df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
-    out = length_bucketed_index(df, n_buckets=4)
+    out = length_bucketed_index(df)
     got = {r.doc_id: r for r in out.collect()}
     assert len(got) == len(rows)
     # NULL token counts: every comparison null -> bucket 1, still positioned
@@ -387,7 +386,7 @@ def test_contamination_report_planted_overlap(spark):
         [(100, "alpha beta gamma delta epsilon")],
         "doc_id long, text string",
     )
-    rep = contamination_report(corpus, bench, n=3)
+    rep = contamination_report(corpus, bench)
     got = {(r.corpus_id, r.bench_id): r for r in rep.collect()}
     assert set(got) == {(1, 100), (2, 100)}
     assert got[(1, 100)].shared_ngrams == 3
@@ -505,9 +504,9 @@ def test_lsh_band_geometry_validated(spark):
         [(1, [1.0, 0.0])], "vec_id long, embedding array<float>"
     )
     with pytest.raises(ValueError, match="bands"):
-        dedup.minhash_lsh_pairs(docs, num_hashes=8, bands=16)
+        dedup.minhash_lsh_pairs(docs, bands=16)
     with pytest.raises(ValueError, match="bands"):
-        dedup.minhash_lsh_pairs(docs, num_hashes=8, bands=3)
+        dedup.minhash_lsh_pairs(docs, bands=3)
     with pytest.raises(ValueError, match="bands"):
         similarity.lsh_ann_topk(emb, emb, num_planes=16, bands=20, dim=2)
 
@@ -539,7 +538,7 @@ def test_ngram_counts_known_values(spark):
     df = spark.createDataFrame(
         [(1, "a b a b"), (2, "a b c"), (3, "solo")], "doc_id long, text string"
     )
-    got = {r.ngram: (r.n_total, r.n_docs) for r in ngram_counts(df, n=2).collect()}
+    got = {r.ngram: (r.n_total, r.n_docs) for r in ngram_counts(df).collect()}
     # doc1 bigrams: ab, ba, ab ; doc2: ab, bc ; doc3: none (1 token)
     assert got == {"a b": (3, 2), "b a": (1, 1), "b c": (1, 1)}
 
@@ -639,11 +638,11 @@ def test_fill_gaps_locf_crafted(spark):
         # key 2: single observation -> single grid row
         (2, 40 * 60, 1.5),
     ]
-    df = spark.createDataFrame(rows, "k long, sec long, v double").select(
-        "k", F.col("sec").cast("timestamp").alias("ts"), "v"
+    df = spark.createDataFrame(rows, "user_id long, sec long, value double").select(
+        "user_id", F.col("sec").cast("timestamp").alias("ts"), "value"
     )
-    out = fill_gaps_locf(df, bucket_seconds=60, key_col="k", ts_col="ts", value_col="v")
-    got = {(r.k, r.bucket): (r.value, r.is_observed) for r in out.collect()}
+    out = fill_gaps_locf(df, bucket_seconds=60)
+    got = {(r.user_id, r.bucket): (r.value, r.is_observed) for r in out.collect()}
     assert got[(1, 10)] == (5.0, True)
     assert got[(1, 11)] == (5.0, False)
     assert got[(1, 12)] == (5.0, False)
@@ -717,9 +716,9 @@ def test_flag_anomalies_crafted(spark):
         + [(2, 0, 5.0)]                                       # single point
         + [(3, b, 7.0) for b in range(4)]                     # zero variance
     )
-    df = spark.createDataFrame(rows, "series_id long, bucket long, value double")
+    df = spark.createDataFrame(rows, "user_id long, bucket long, value double")
     # the spike's z is (100-19)/sd_samp = 2.846 — use a 2.5 threshold
-    got = {(r.series_id, r.bucket): r for r in flag_anomalies(df, z_threshold=2.5).collect()}
+    got = {(r.user_id, r.bucket): r for r in flag_anomalies(df, z_threshold=2.5).collect()}
     assert got[(1, 9)].is_anomaly and got[(1, 9)].z > 2.5
     assert not got[(1, 0)].is_anomaly
     assert got[(2, 0)].z is None and not got[(2, 0)].is_anomaly
@@ -774,11 +773,11 @@ def test_flag_anomalies_null_key_rows_survive(spark):
 
     df = spark.createDataFrame(
         [(1, 0, 1.0), (1, 1, 2.0), (None, 0, 9.0)],
-        "series_id long, bucket long, value double",
+        "user_id long, bucket long, value double",
     )
     got = flag_anomalies(df).collect()
     assert len(got) == 3  # NULL-key row kept, not dropped by the join
-    nk = [r for r in got if r.series_id is None][0]
+    nk = [r for r in got if r.user_id is None][0]
     assert nk.z is None and nk.is_anomaly is False
 
 
@@ -845,12 +844,9 @@ def test_running_sum_bucketed_equals_exact(spark):
     )
 
     def run(bucket):
-        out = running_sum_per_key(
-            df, "user_id", "ts", "value", "rs",
-            bucket_seconds=bucket, tiebreak_col="event_id",
-        )
+        out = running_sum_per_key(df, bucket_seconds=bucket)
         return sorted(
-            (r.event_id, None if r.rs is None else float(r.rs))
+            (r.event_id, None if r["__rs"] is None else float(r["__rs"]))
             for r in out.collect()
         )
 
@@ -880,12 +876,9 @@ def test_running_sum_keeps_8dp_precision(spark):
     )
 
     def run(bucket):
-        out = running_sum_per_key(
-            df, "user_id", "ts", "value", "rs",
-            bucket_seconds=bucket, tiebreak_col="event_id",
-        )
-        return out.schema["rs"].dataType.simpleString(), {
-            r.event_id: float(r.rs) for r in out.collect()
+        out = running_sum_per_key(df, bucket_seconds=bucket)
+        return out.schema["__rs"].dataType.simpleString(), {
+            r.event_id: float(r["__rs"]) for r in out.collect()
         }
 
     exact_type, exact_vals = run(None)
@@ -1197,7 +1190,7 @@ def test_retrieval_curation_pipeline_last_mile(spark, tmp_path):
     write_ivf_index(deq.select("vec_id", "embedding"), idx, n_centroids=8)
 
     probes = emb.where(F.col("vec_id") < 3)
-    hits = search_ivf_index(spark, idx, probes, k=5, nprobe=4).collect()
+    hits = search_ivf_index(spark, idx, probes, k=5).collect()
     assert hits
     kept_ids = {r.vec_id for r in curated_vecs.select("vec_id").collect()}
     assert {r.corpus_id for r in hits} <= kept_ids  # only curated docs

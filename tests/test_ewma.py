@@ -37,7 +37,7 @@ def _collect(df):
 def test_exact_path_bit_identical_to_pandas(spark):
     rng = random.Random(7)
     series = {u: [rng.uniform(-50, 50) for _ in range(40)] for u in range(5)}
-    got = _collect(ewma_per_key(_frame(spark, series), 0.3, tiebreak_col="event_id"))
+    got = _collect(ewma_per_key(_frame(spark, series), 0.3))
     for u, vals in series.items():
         want = pd.Series(vals).ewm(alpha=0.3, adjust=False).mean()
         for i in range(len(vals)):
@@ -48,9 +48,9 @@ def test_bucketized_path_matches_exact_within_tolerance(spark):
     rng = random.Random(11)
     series = {u: [rng.uniform(-1000, 1000) for _ in range(120)] for u in range(4)}
     df = _frame(spark, series)
-    exact = _collect(ewma_per_key(df, 0.2, tiebreak_col="event_id"))
+    exact = _collect(ewma_per_key(df, 0.2))
     buck = _collect(
-        ewma_per_key(df, 0.2, tiebreak_col="event_id", bucket_seconds=60)
+        ewma_per_key(df, 0.2, bucket_seconds=60)
     )
     assert set(exact) == set(buck)
     for k in exact:
@@ -67,7 +67,7 @@ def test_null_ts_and_value_rows_excluded(spark):
     df = spark.createDataFrame(
         rows, "user_id long, ts timestamp, event_id long, value double"
     )
-    out = _collect(ewma_per_key(df, 0.5, tiebreak_col="event_id"))
+    out = _collect(ewma_per_key(df, 0.5))
     # NULL rows neither appear nor perturb the state.
     assert out == {(1, 0): 10.0, (1, 3): 0.5 * 20.0 + 0.5 * 10.0}
 
@@ -78,7 +78,7 @@ def test_tie_timestamps_break_on_tiebreak_col(spark):
         [(1, t, 2, 30.0), (1, t, 1, 10.0)],
         "user_id long, ts timestamp, event_id long, value double",
     )
-    out = _collect(ewma_per_key(df, 0.5, tiebreak_col="event_id"))
+    out = _collect(ewma_per_key(df, 0.5))
     assert out[(1, 1)] == 10.0 and out[(1, 2)] == 20.0
 
 
@@ -92,7 +92,7 @@ def test_alpha_validated(spark):
 
 def test_alpha_one_is_identity(spark):
     series = {1: [3.0, 7.0, -2.0]}
-    out = _collect(ewma_per_key(_frame(spark, series), 1.0, tiebreak_col="event_id"))
+    out = _collect(ewma_per_key(_frame(spark, series), 1.0))
     assert out == {(1, 0): 3.0, (1, 1): 7.0, (1, 2): -2.0}
 
 
@@ -101,8 +101,8 @@ def test_bucket_boundaries_align_with_exact_first_value(spark):
     # exist; a key living entirely in one bucket equals the exact path.
     series = {1: [5.0, 6.0], 2: [1.0]}
     df = _frame(spark, series)
-    exact = _collect(ewma_per_key(df, 0.4, tiebreak_col="event_id"))
-    buck = _collect(ewma_per_key(df, 0.4, tiebreak_col="event_id", bucket_seconds=5))
+    exact = _collect(ewma_per_key(df, 0.4))
+    buck = _collect(ewma_per_key(df, 0.4, bucket_seconds=5))
     assert exact == buck  # single-element folds: no re-association at all
 
 

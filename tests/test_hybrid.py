@@ -22,7 +22,7 @@ def test_rrf_law_and_missing_candidates(spark):
     sem = _mk(spark, [(1, 2), (3, 1)])
     out = {
         r["doc_id"]: r.asDict()
-        for r in rrf_fuse({"lex": lex, "sem": sem}, ["doc_id"], k=60).collect()
+        for r in rrf_fuse({"lex": lex, "sem": sem}, ["doc_id"]).collect()
     }
     assert out[1]["rrf"] == round(1 / 61 + 1 / 62, 6)
     assert out[2]["rrf"] == round(1 / 62, 6)
@@ -38,14 +38,14 @@ def test_top_n_orders_by_fused_score_then_id(spark):
     # 1/61+1/63 > 2/62 (RRF is convex in rank), so the tied pair
     # wins and breaks on doc_id; doc 2 comes last.
     out = rrf_fuse(
-        {"lex": lex, "sem": sem}, ["doc_id"], k=60, top_n=3
+        {"lex": lex, "sem": sem}, ["doc_id"]
     ).orderBy("rank")
     assert [r["doc_id"] for r in out.collect()] == [1, 3, 2]
 
 
 def test_single_list_fusion_is_identity_ranking(spark):
     lex = _mk(spark, [(10, 1), (20, 2)])
-    out = rrf_fuse({"lex": lex}, ["doc_id"], k=60, top_n=2)
+    out = rrf_fuse({"lex": lex}, ["doc_id"])
     assert [(r["doc_id"], r["rank"]) for r in out.orderBy("rank").collect()] == [
         (10, 1),
         (20, 2),

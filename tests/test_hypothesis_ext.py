@@ -294,11 +294,11 @@ def test_sessionize_bucketed_equivalence_hypothesis(spark, rows, bucket):
     ).select("event_id", "user_id", F.col("sec").cast("timestamp").alias("ts"))
     exact = {
         r.event_id: r.session_id
-        for r in sessionize(df, gap_minutes=30).collect()
+        for r in sessionize(df).collect()
     }
     got = {
         r.event_id: r.session_id
-        for r in sessionize(df, gap_minutes=30, bucket_seconds=bucket).collect()
+        for r in sessionize(df, bucket_seconds=bucket).collect()
     }
     assert got == exact
 
@@ -319,11 +319,8 @@ def test_running_sum_bucketed_equivalence_hypothesis(spark, rows, bucket):
 
     def run(b):
         return {
-            r.event_id: r.rs
-            for r in running_sum_per_key(
-                df, "user_id", "ts", "value", "rs",
-                bucket_seconds=b, tiebreak_col="event_id",
-            ).collect()
+            r.event_id: r["__rs"]
+            for r in running_sum_per_key(df, bucket_seconds=b).collect()
         }
 
     assert run(bucket) == run(None)
@@ -432,12 +429,12 @@ def test_ewma_bucketed_equivalence_hypothesis(spark, rows, bucket):
     )
     exact = {
         (r["user_id"], r["event_id"]): r["ewma"]
-        for r in ewma_per_key(df, 0.25, tiebreak_col="event_id").collect()
+        for r in ewma_per_key(df, 0.25).collect()
     }
     buck = {
         (r["user_id"], r["event_id"]): r["ewma"]
         for r in ewma_per_key(
-            df, 0.25, tiebreak_col="event_id", bucket_seconds=bucket
+            df, 0.25, bucket_seconds=bucket
         ).collect()
     }
     assert set(exact) == set(buck)

@@ -88,12 +88,12 @@ def _median(xs: list[float]) -> float:
 @_SETTINGS
 @given(vals=st.lists(_VAL, min_size=1, max_size=40), z=st.sampled_from([2.0, 3.5]))
 def test_robust_flags_match_reference_mad(spark, vals, z):
-    df = spark.createDataFrame([(1, v) for v in vals], "k int, v double")
+    df = spark.createDataFrame([(1, v) for v in vals], "k int, value double")
     got = {
-        (r.v, i): (r.rz, r.is_anomaly)
+        (r.value, i): (r.rz, r.is_anomaly)
         for i, r in enumerate(
-            robust_flag_anomalies(df, "k", "v", z_threshold=z)
-            .orderBy("v")
+            robust_flag_anomalies(df, "k", z_threshold=z)
+            .orderBy("value")
             .collect()
         )
     }

@@ -37,7 +37,7 @@ def test_sessionize_partitions_events(spark, seed):
     exactly one session; session event counts sum to the input size;
     within a session, max gap <= threshold."""
     ev = _random_events(spark, seed)
-    agg = session_aggregates(sessionize(ev, gap_minutes=30))
+    agg = session_aggregates(sessionize(ev))
     total = ev.count()
     assert agg.agg(F.sum("step_length")).first()[0] == total
     # sessions of the same user don't overlap in time
@@ -79,12 +79,12 @@ def test_sessionize_bucketed_equals_exact(spark, seed):
     than, equal to, and wider than the gap threshold."""
     ev = _random_events(spark, seed)
     exact = sorted(
-        sessionize(ev, gap_minutes=30).collect(),
+        sessionize(ev).collect(),
         key=lambda r: (r.user_id, r.ts),
     )
     for b in (300, 1800, 6 * 3600):
         got = sorted(
-            sessionize(ev, gap_minutes=30, bucket_seconds=b).collect(),
+            sessionize(ev, bucket_seconds=b).collect(),
             key=lambda r: (r.user_id, r.ts),
         )
         assert got == exact, f"bucket_seconds={b} diverged"
@@ -107,8 +107,8 @@ def test_sessionize_bucketed_null_ts_rows(spark):
         (None, datetime(2024, 1, 1, 8, 10)),
     ]
     ev = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    exact = sessionize(ev, gap_minutes=30).collect()
-    bucketed = sessionize(ev, gap_minutes=30, bucket_seconds=3600).collect()
+    exact = sessionize(ev).collect()
+    bucketed = sessionize(ev, bucket_seconds=3600).collect()
 
     def sig(out):
         # None (user or ts) is not orderable — sort NULLs first
@@ -137,8 +137,8 @@ def test_stratified_sample_quotas(spark, seed):
     """Per-(day, hour) extraction count <= max(floor share, 1) and the
     sample is a subset of the population."""
     ev = _random_events(spark, seed, n_events=1000)
-    agg = session_aggregates(sessionize(ev, gap_minutes=30))
-    out = stratified_session_sample(agg, per_day=50)
+    agg = session_aggregates(sessionize(ev))
+    out = stratified_session_sample(agg)
     pop = {r.session_id for r in agg.collect()}
     sample = out.collect()
     assert {r.session_id for r in sample} <= pop
@@ -150,7 +150,7 @@ def test_stratified_sample_quotas(spark, seed):
         day_totals[r.d] = r["count"]
     for d, rows in per_day.items():
         # a day never extracts more than quota + one-per-hour slack
-        assert len(rows) <= 50 + 24
+        assert len(rows) <= 100 + 24
         assert len(rows) <= day_totals[d]
 
 

@@ -12,14 +12,19 @@ occurs anywhere else in the program — ``bigdata_commerce_spark/``,
 which drives the headline suite and the ad topology by name. A
 ``@query``/``@twin_query`` decorator counts as a use. Tests do not.
 
-One value in use: a defaulted parameter of a public function (or of a
-public class's ``__init__`` and public methods) is a setting only when
-some call in that same code binds it, by keyword or by position, so
-each one no call binds is a constant in waiting and fails unless
-``ALLOWED_PARAMS`` names it with a reason. Calls match by name, and a
-``*args``/``**kwargs`` splat binds every parameter of its callee. The
-deferred and kept modules and the deferred functions are out of scope:
-they go whole later or are a fixed interface.
+One value in use: for each defaulted parameter of a top-level function
+(public or private) and of a public class's ``__init__`` and public
+methods, the walk collects the values that calls in that same code
+give it. A call that leaves it unbound gives the default; a literal
+argument, by keyword or by position, gives its ``ast.literal_eval``
+value; any other expression, or a ``*args``/``**kwargs`` splat in the
+call, gives "unknown". The parameter is a setting only when it gets
+two or more distinct values or an unknown one. Otherwise it is a
+constant in waiting, whether no call binds it, every call passes its
+own default, or every call passes one other literal, and it fails
+unless ``ALLOWED_PARAMS`` names it with a reason. Calls match by name.
+The deferred and kept modules and the deferred functions are out of
+scope: they go whole later or are a fixed interface.
 
 Pure AST walk: no Spark, well under a second.
 """
@@ -112,8 +117,6 @@ ALLOWED_FUNCTIONS = {
     f"{PKG}.operators.psl.load_psl": "deferred; test_psl.py",
     f"{PKG}.operators.similarity.embedding_dedup_clusters": "deferred; test_dataops.py",
     f"{PKG}.operators.similarity.ivf_projected_topk": "deferred; test_dataops.py",
-    f"{PKG}.operators.sketch.hll_estimate_over": "deferred; test_dataops.py",
-    f"{PKG}.operators.sketch.hll_rollup": "deferred; test_dataops.py",
     f"{PKG}.operators.urltools.with_idna_host": "deferred; test_psl.py",
     f"{PKG}.operators.validate.agg_satisfies": "deferred; test_validate.py",
     f"{PKG}.operators.validate.in_reference": "deferred; test_validate.py",
@@ -123,8 +126,9 @@ ALLOWED_FUNCTIONS = {
 }
 
 
-# Defaulted parameters no program or perfbench call binds, as
-# module.function.parameter (module.Class.method.parameter).
+# Defaulted parameters that every program and perfbench call gives one
+# known value, as module.function.parameter
+# (module.Class.method.parameter).
 ALLOWED_PARAMS = {
     # deployment settings and the paper's own path
     f"{PKG}.session.get_spark.extra_conf": "the deployment's Spark confs; "
@@ -188,6 +192,82 @@ ALLOWED_PARAMS = {
     "without the private section; test_psl.py",
     f"{PKG}.operators.psl.default_rules.include_private": "same test; the "
     "ICANN-only rule set",
+    # every program call gives one value, but a test needs another to
+    # reach a path that stays, or to hold one path to a reference
+    f"{PKG}.operators.bloom.bloom_semi_join.key_col": "None joins on big_col's "
+    "own name, as every test_bloom.py join but one does",
+    f"{PKG}.operators.bloom.bloom_anti_join.key_col": "same test file",
+    f"{PKG}.operators.bootstrap.poisson_bootstrap_ci.level": "test_bootstrap.py::"
+    "test_wider_level_wider_interval nests the 0.5 interval in the 0.95 one",
+    f"{PKG}.operators.cooccur.cooccurrence_pmi.min_pairs": "test_cooccur.py "
+    "holds the support cut to a Python reference over generated min_pairs",
+    f"{PKG}.operators.dedup.minhash_lsh_pairs.bands": "test_dataops_ext.py::"
+    "test_lsh_band_geometry_validated reaches the bands-must-divide errors",
+    f"{PKG}.operators.dedup.similarity_join.threshold": "test_dataops_ext.py::"
+    "test_similarity_join_cross_table holds it to naive Jaccard at 0.5",
+    f"{PKG}.operators.ivf_index.search_ivf_index.k": "test_fuzz_differential.py "
+    "holds k=3 searches to brute force",
+    f"{PKG}.operators.ivf_index.write_ivf_index.n_centroids": "test_dataops_ext.py "
+    "builds an 8-cell index for its small corpus",
+    f"{PKG}.operators.lm_quality.char_bigram_nll.reference": "scoring under a "
+    "separate reference model; test_dataops_ext.py checks it, the empty "
+    "reference included",
+    f"{PKG}.operators.mixing.mixture_sample.default": "test_weighted_sample.py "
+    "pre-thins unlisted sources at 0.8 and holds the exact quota to the unthinned one",
+    f"{PKG}.operators.mixing.weighted_sample.group_cols": "the ungrouped sample; "
+    "test_weighted_sample.py holds it to a Python reference",
+    f"{PKG}.operators.multimodal.frame_sample.n_frames": "test_dataops_ext.py "
+    "samples 3 frames of tiny media",
+    f"{PKG}.operators.multimodal.media_phash_pairs.max_hamming": "test_dataops_ext.py "
+    "checks the distance cut at 2",
+    f"{PKG}.operators.multimodal.phash_words_hamming_pairs.max_hamming": "test_"
+    "dataops_ext.py reaches the unaligned-bands error at 2",
+    f"{PKG}.operators.multimodal.resize_media.height": "test_dataops_ext.py "
+    "resizes to 2x2 so a pixel-level check stays small",
+    f"{PKG}.operators.multimodal.resize_media.width": "same test",
+    f"{PKG}.operators.packing.pack_sequences.budget": "test_dataops_ext.py and "
+    "test_hypothesis_ext.py pack small documents under small budgets and "
+    "reach the budget errors",
+    f"{PKG}.operators.preference.preference_pairs.margin": "test_preference.py "
+    "checks the margin gate at 0, 0.01 and 0.7",
+    f"{PKG}.operators.preference.preference_pairs.max_pairs": "test_preference.py "
+    "checks the pair cap at 2",
+    f"{PKG}.operators.privacy.kanonymity_report.k": "test_privacy.py checks the "
+    "risky-class counts at k=2 and k=5",
+    f"{PKG}.operators.privacy.kanonymity_report.show_n": "test_privacy.py checks "
+    "the row cap at 5",
+    f"{PKG}.operators.range_join.range_join.bucket_seconds": "bucket layout; "
+    "test_dataops.py holds 600/3600/86400 s buckets to the naive join",
+    f"{PKG}.operators.robust.robust_flag_anomalies.z_threshold": "test_robust.py's "
+    "masking check flags both detectors at one z; test_hypothesis_stats.py "
+    "sweeps it against a reference",
+    f"{PKG}.operators.robust.winsorize.lower": "test_robust.py hand-computes the "
+    "clip band at 0.10/0.90 and 0/0.5",
+    f"{PKG}.operators.robust.winsorize.upper": "same test",
+    f"{PKG}.operators.running.running_sum_per_key.bucket_seconds": "the bucketed "
+    "path; test_dataops_ext.py and test_hypothesis_ext.py hold it to the exact one",
+    f"{PKG}.operators.similarity.mine_hard_negatives.k": "test_dataops_ext.py "
+    "checks small k against plain top-k",
+    f"{PKG}.operators.similarity.semdedup.tau": "test_dataops_ext.py checks the "
+    "prune gate at 0.75-0.99",
+    f"{PKG}.operators.text.chunk_documents.chunk_tokens": "window geometry; "
+    "test_dataops_ext.py and test_hypothesis_ext.py check chunking of short "
+    "documents with 2-4 token windows",
+    f"{PKG}.operators.text.chunk_documents.overlap": "same tests",
+    f"{PKG}.operators.text.remove_frequent_lines.delimiter": "test_dataops_ext.py "
+    "checks a literal '.' delimiter",
+    f"{PKG}.operators.text.tfidf_top_terms.k": "test_dataops_ext.py, "
+    "test_hypothesis_ext.py and test_plan_shape.py check small k by hand and "
+    "against brute force",
+    f"{PKG}.operators.timeseries.flag_anomalies.z_threshold": "test_robust.py's "
+    "masking check (see robust_flag_anomalies)",
+    f"{PKG}.operators.timeseries.similar_series.bucket_seconds": "test_dataops_"
+    "ext.py ranks a 4-bucket, 60 s grid",
+    f"{PKG}.operators.timeseries.similar_series.k": "same test",
+    f"{PKG}.operators.timeseries.similar_series.n_buckets": "same test",
+    f"{PKG}.sources.layout.zorder_value.bits": "test_layout.py and "
+    "test_hypothesis_ext.py check the interleave on a 3-bit grid and against "
+    "a Python reference",
 }
 
 
@@ -271,13 +351,12 @@ def analyse(root: Path = REPO) -> tuple[set[str], set[str]]:
     return set(mods) - reached, unused
 
 
-def _public_defs(tree: ast.Module):
-    """(qualified name, name a call uses, def node) of each public
+def _defs(tree: ast.Module):
+    """(qualified name, name a call uses, def node) of each top-level
     function, public class ``__init__`` and public method."""
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            if not node.name.startswith("_"):
-                yield node.name, node.name, node
+            yield node.name, node.name, node
         elif isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
             for sub in node.body:
                 if isinstance(sub, (ast.FunctionDef, ast.AsyncFunctionDef)) and (
@@ -287,29 +366,42 @@ def _public_defs(tree: ast.Module):
                     yield f"{node.name}.{sub.name}", callee, sub
 
 
-def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
-    """(name, positional index or None) of each defaulted parameter,
-    ``self``/``cls`` not counted."""
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None, ast.expr]]:
+    """(name, positional index or None, default) of each defaulted
+    parameter, ``self``/``cls`` not counted."""
     a = fn.args
     pos = [p.arg for p in a.posonlyargs + a.args]
     if pos[:1] in (["self"], ["cls"]):
         pos = pos[1:]
     first = len(pos) - len(a.defaults)
-    out = [(name, i) for i, name in enumerate(pos) if i >= first]
-    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    out = [(name, i, a.defaults[i - first]) for i, name in enumerate(pos) if i >= first]
+    out += [(p.arg, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
     return out
 
 
-def unset_params(root: Path = REPO) -> tuple[set[str], int]:
-    """(defaulted parameters no call binds, all defaulted parameters) of
-    the public functions in scope."""
+UNKNOWN = ("unknown",)
+
+
+def _value(node: ast.expr):
+    """A literal's value as a hashable key, else UNKNOWN."""
+    try:
+        v = ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return UNKNOWN
+    return type(v).__name__, repr(v)
+
+
+def param_values(root: Path = REPO) -> dict[str, set]:
+    """module.function.parameter -> the values program and perfbench
+    calls give it, for each defaulted parameter in scope. A call that
+    leaves it unbound gives the default (a non-literal default is one
+    value too); a literal argument gives its value; any other
+    expression, or a splat in the call, gives UNKNOWN."""
     mods = _program(root)
     trees = {m: ast.parse(p.read_text()) for m, p in mods.items()}
     callers = [*trees.values()]
     callers += [ast.parse(p.read_text()) for p in (root / "perfbench").glob("*.py")]
-    keywords: dict[str, set[str]] = {}
-    positional: Counter = Counter()
-    splat: set[str] = set()
+    calls: dict[str, list[ast.Call]] = {}
     for tree in callers:
         aliases = {
             a.asname: a.name.split(".")[-1]
@@ -319,33 +411,43 @@ def unset_params(root: Path = REPO) -> tuple[set[str], int]:
             if a.asname
         }
         for n in ast.walk(tree):
-            if not isinstance(n, ast.Call):
-                continue
-            name = getattr(n.func, "id", None) or getattr(n.func, "attr", None)
-            name = aliases.get(name, name)
-            if any(isinstance(a, ast.Starred) for a in n.args) or any(
-                k.arg is None for k in n.keywords
-            ):
-                splat.add(name)
-            positional[name] = max(positional[name], len(n.args))
-            keywords.setdefault(name, set()).update(k.arg for k in n.keywords)
+            if isinstance(n, ast.Call):
+                name = getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+                calls.setdefault(aliases.get(name, name), []).append(n)
     deferred = {f for f, why in ALLOWED_FUNCTIONS.items() if why.startswith("deferred")}
-    unset, total = set(), 0
+    values: dict[str, set] = {}
     for m, tree in trees.items():
         if m in DEFERRED_MODULES or m in KEPT_MODULES:
             continue
-        for qual, callee, fn in _public_defs(tree):
+        for qual, callee, fn in _defs(tree):
             if f"{m}.{qual.split('.')[0]}" in deferred:
                 continue
-            for param, i in _defaulted(fn):
-                total += 1
-                if not (
-                    callee in splat
-                    or param in keywords.get(callee, ())
-                    or (i is not None and positional[callee] > i)
-                ):
-                    unset.add(f"{m}.{qual}.{param}")
-    return unset, total
+            for param, i, default in _defaulted(fn):
+                got = values.setdefault(f"{m}.{qual}.{param}", set())
+                unbound = _value(default)
+                if unbound is UNKNOWN:
+                    unbound = ("default", ast.unparse(default))
+                for call in calls.get(callee, ()):
+                    bound = [k.value for k in call.keywords if k.arg == param]
+                    if i is not None and i < len(call.args):
+                        bound.append(call.args[i])
+                    if any(isinstance(a, ast.Starred) for a in call.args) or any(
+                        k.arg is None for k in call.keywords
+                    ):
+                        got.add(UNKNOWN)
+                    else:
+                        got.add(_value(bound[0]) if bound else unbound)
+                if not got:
+                    got.add(unbound)
+    return values
+
+
+def unset_params(root: Path = REPO) -> tuple[set[str], int]:
+    """(defaulted parameters every call gives one known value, all
+    defaulted parameters) in scope."""
+    values = param_values(root)
+    one = {p for p, got in values.items() if UNKNOWN not in got and len(got) < 2}
+    return one, len(values)
 
 
 def test_every_module_is_reached_or_allowed():
@@ -400,15 +502,41 @@ def test_planted_unreached_module_and_function_are_caught(tmp_path):
 
 
 def test_planted_unset_parameter_is_caught(tmp_path):
-    """A planted function whose one caller binds one of its two
-    defaulted parameters, by keyword, reports exactly the other."""
+    """A planted function whose callers bind one of its two defaulted
+    parameters, by keyword, to two values reports exactly the other."""
     _copy_program(tmp_path)
     with open(tmp_path / PKG / "operators" / "topk.py", "a") as fh:
         fh.write(
             "\n\ndef planted_fn(x, planted_opt=1, planted_set=2):\n"
             "    return x + planted_opt + planted_set\n"
             "\n\ndef _planted_caller():\n"
-            "    return planted_fn(1, planted_set=3)\n"
+            "    return planted_fn(1, planted_set=3) + planted_fn(2, planted_set=4)\n"
         )
     unset, _ = unset_params(tmp_path)
     assert unset - unset_params()[0] == {f"{PKG}.operators.topk.planted_fn.planted_opt"}
+
+
+def test_planted_one_valued_parameters_are_caught(tmp_path):
+    """The value rule on planted functions: a parameter every call
+    binds to its own default, one every call binds to the same other
+    literal and an unbound default of a private helper are reported;
+    one bound to two distinct literals and one bound to a variable
+    are not."""
+    _copy_program(tmp_path)
+    with open(tmp_path / PKG / "operators" / "topk.py", "a") as fh:
+        fh.write(
+            "\n\ndef planted_fn(x, own=1, other=2, two=3, var=4):\n"
+            "    return x + own + other + two + var\n"
+            "\n\ndef _planted_helper(x, unbound=5):\n"
+            "    return x + unbound\n"
+            "\n\ndef _planted_caller(v):\n"
+            "    planted_fn(1, own=1, other=7, two=8, var=v)\n"
+            "    planted_fn(2, 1, 7, two=9, var=0)\n"
+            "    return _planted_helper(planted_fn)\n"
+        )
+    unset, _ = unset_params(tmp_path)
+    assert unset - unset_params()[0] == {
+        f"{PKG}.operators.topk.planted_fn.own",
+        f"{PKG}.operators.topk.planted_fn.other",
+        f"{PKG}.operators.topk._planted_helper.unbound",
+    }

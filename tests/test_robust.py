@@ -16,23 +16,23 @@ from bigdata_commerce_spark.operators.timeseries import flag_anomalies
 
 
 def test_winsorize_clips_to_group_band(spark):
-    rows = [Row(g="a", v=float(x)) for x in range(1, 101)] + [
-        Row(g="b", v=1000.0)
+    rows = [Row(event_type="a", v=float(x)) for x in range(1, 101)] + [
+        Row(event_type="b", v=1000.0)
     ]
     out = winsorize(
-        spark.createDataFrame(rows), ["v"], lower=0.10, upper=0.90, group_col="g"
+        spark.createDataFrame(rows), ["v"], lower=0.10, upper=0.90
     )
-    a = {r.v: r.v_w for r in out.where("g = 'a'").collect()}
+    a = {r.v: r.v_w for r in out.where("event_type = 'a'").collect()}
     # exact interpolated p10/p90 of 1..100 are 10.9 and 90.1
     assert a[1.0] == 10.9 and a[5.0] == 10.9
     assert a[100.0] == 90.1 and a[95.0] == 90.1
     assert a[50.0] == 50.0  # interior values untouched
     # a single-row group clips to itself
-    assert out.where("g = 'b'").first().v_w == 1000.0
+    assert out.where("event_type = 'b'").first().v_w == 1000.0
 
 
 def test_winsorize_global_and_null_passthrough(spark):
-    rows = [Row(g="a", v=float(x)) for x in range(1, 11)] + [Row(g="a", v=None)]
+    rows = [Row(event_type="a", v=float(x)) for x in range(1, 11)] + [Row(event_type="a", v=None)]
     out = winsorize(spark.createDataFrame(rows), ["v"], lower=0.0, upper=0.5)
     got = {r.v: r.v_w for r in out.collect()}
     assert got[None] is None  # NULL is not an observation, stays NULL
@@ -45,14 +45,14 @@ def test_robust_flags_survive_outlier_contamination(spark):
     # the classic z-score path misses every one of them (masking);
     # median/MAD flags them all. This is the breakdown-point
     # property the operator exists for.
-    rows = [Row(k=1, value=100.0 + (i % 7) - 3.0) for i in range(40)] + [
-        Row(k=1, value=200.0) for _ in range(5)
+    rows = [Row(user_id=1, value=100.0 + (i % 7) - 3.0) for i in range(40)] + [
+        Row(user_id=1, value=200.0) for _ in range(5)
     ]
     df = spark.createDataFrame(rows)
-    robust = robust_flag_anomalies(df, key_col="k", z_threshold=3.5)
+    robust = robust_flag_anomalies(df, key_col="user_id", z_threshold=3.5)
     flagged = {r.value for r in robust.where("is_anomaly").collect()}
     assert flagged == {200.0}
-    classic = flag_anomalies(df, key_col="k", z_threshold=3.5)
+    classic = flag_anomalies(df, z_threshold=3.5)
     assert classic.where("is_anomaly").count() == 0  # masked by inflated sd
 
 

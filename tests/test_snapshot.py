@@ -123,7 +123,7 @@ def test_curation_to_snapshot_pipeline_last_mile(spark, tmp_path):
     from tests.conftest import SF_SMOKE
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    kept = curate(docs, min_quality=0.2)
+    kept = curate(docs)
     t = str(tmp_path / "corpus")
     v = snap.publish_snapshot(kept, t)
     assert v == 1

@@ -136,7 +136,7 @@ def test_skew_bounded_twins_row_identical_to_exact_siblings(spark):
 
     bucketized = all_q["sessionize_skew_bounded"](spark, SF_SMOKE)
     ev = load_table(spark, "events", SF_SMOKE).select("user_id", "ts")
-    exact = sessionize(ev, gap_minutes=30)
+    exact = sessionize(ev)
     assert bucketized.columns == exact.columns
     assert _sorted_rows(bucketized) == _sorted_rows(exact)
 
