@@ -163,7 +163,7 @@ def bloom_semi_join(
     big: DataFrame,
     keys: DataFrame,
     big_col: str,
-    key_col: str | None = None,
+    key_col: str,
     fpp: float = 0.01,
 ) -> DataFrame:
     """EXACT left-semi join (rows of ``big`` whose key is in ``keys``)
@@ -175,7 +175,6 @@ def bloom_semi_join(
     ``keys`` is scanned twice (filter build + exact verify); persist
     it when it is not a cheap columnar scan.
     """
-    key_col = key_col or big_col
     bloom, m, k = _build_for_keys(keys, key_col, fpp)
     pruned = bloom_might_contain(big, big_col, bloom, m, k).where(
         F.col("__maybe")
@@ -191,7 +190,7 @@ def bloom_anti_join(
     big: DataFrame,
     keys: DataFrame,
     big_col: str,
-    key_col: str | None = None,
+    key_col: str,
     fpp: float = 0.01,
 ) -> DataFrame:
     """EXACT left-anti join (rows of ``big`` whose key is NOT in
@@ -206,7 +205,6 @@ def bloom_anti_join(
     both scans are map-side filtered; persist ``big`` upstream if its
     scan is expensive.
     """
-    key_col = key_col or big_col
     bloom, m, k = _build_for_keys(keys, key_col, fpp)
     flagged = bloom_might_contain(big, big_col, bloom, m, k)
     definitely_absent = flagged.where(~F.col("__maybe")).drop("__maybe")

@@ -19,10 +19,8 @@ Scale shape (in-plan end to end):
   result; N/avgdl are a one-row aggregate — both broadcast;
 - per-document score = one aggregate over <= |Q| rows per doc.
 
-The corpus tokenizes twice by default (the N/avgdl stats pass and the
-match pass). At 100 TB, pass ``n_docs``/``avgdl`` explicitly — corpus
-stats are computed once per snapshot and reused across every query —
-and the stats scan disappears, leaving ONE corpus pass per query.
+The corpus tokenizes twice: the N/avgdl stats pass and the match
+pass.
 
 Determinism across engines: each term's contribution is rounded to
 8 dp and summed as DECIMAL (the money_sum discipline) — ln() may
@@ -39,26 +37,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: Sequence[str],
-    n_docs: int | None = None,
-    avgdl: float | None = None,
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, query_terms: Sequence[str]) -> DataFrame:
     """(id, score) for every document matching at least one query
     term (docs with no match are absent — join-filter semantics, the
     useful shape when the corpus dwarfs the match set). Tokenization
     is lowercase whitespace split; pre-normalize the text column for
     anything fancier. Returns (doc_id, bm25), rounded to 6 dp.
-
-    Pass ``n_docs`` AND ``avgdl`` (precomputed corpus stats) to skip
-    the stats scan — the production path when many queries score the
-    same snapshot (module docstring).
     """
     if not query_terms:
         raise ValueError("bm25_scores needs at least one query term")
-    if (n_docs is None) != (avgdl is None):
-        raise ValueError("pass both n_docs and avgdl, or neither")
     terms = sorted({t.lower() for t in query_terms})
 
     toks = docs.select(
@@ -68,16 +55,7 @@ def bm25_scores(
         ).alias("__toks"),
     ).withColumn("__dl", F.size("__toks"))
 
-    if n_docs is not None:
-        spark = docs.sparkSession
-        stats = spark.range(1).select(
-            F.lit(int(n_docs)).alias("__n"),
-            F.lit(float(avgdl)).alias("__avgdl"),
-        )
-    else:
-        stats = toks.agg(
-            F.count(F.lit(1)).alias("__n"), F.avg("__dl").alias("__avgdl")
-        )
+    stats = toks.agg(F.count(F.lit(1)).alias("__n"), F.avg("__dl").alias("__avgdl"))
 
     # membership filter on the exploded term evaluates map-side,
     # before any shuffle — the load-bearing line at corpus scale

@@ -276,20 +276,16 @@ def scrub_contaminated_spans(
     return _scrub_with_spans(corpus, spans, text_col, id_col)
 
 
-def tag_phrases(
-    df: DataFrame,
-    phrases: "Sequence[str]",
-    lowercase: bool = True,
-) -> DataFrame:
+def tag_phrases(df: DataFrame, phrases: "Sequence[str]") -> DataFrame:
     """Dictionary phrase tagging (the FlashText / Aho-Corasick job on
     the window-fingerprint kernel): find every occurrence of every
     dictionary phrase in every document — topic tagging, blocklist
     hits, entity spotting over a curated term list.
 
     Returns (id, pos, phrase, n_tokens): the 0-based token position of
-    each match. Matching is token-exact on whitespace tokens (lowered
-    on both sides when ``lowercase``, the dictionary-matching
-    convention); phrases with no tokens are rejected.
+    each match. Matching is token-exact on whitespace tokens, lowered
+    on both sides (the dictionary-matching convention); phrases with
+    no tokens are rejected.
 
     Shape: the dictionary is CONFIG — its per-length md5 fingerprints
     are computed driver-side (hashlib replays F.md5 over the same
@@ -310,21 +306,14 @@ def tag_phrases(
         )
     by_len: dict[int, list[tuple[str, str]]] = {}
     for p in phrases:
-        tk = [t for t in (p or "").split() if t]
-        if lowercase:
-            tk = [t.lower() for t in tk]
+        tk = [t.lower() for t in (p or "").split() if t]
         if not tk:
             raise ValueError(f"phrase {p!r} has no tokens")
         h = hashlib.md5(_SEP.join(tk).encode("utf-8")).hexdigest()
         by_len.setdefault(len(tk), []).append((h, p))
 
     spark = df.sparkSession
-    base = df.select(
-        F.col("doc_id"),
-        (F.lower(F.col("text")) if lowercase else F.col("text")).alias(
-            "text"
-        ),
-    )
+    base = df.select(F.col("doc_id"), F.lower(F.col("text")).alias("text"))
     out = None
     for n_tokens, rows in sorted(by_len.items()):
         dict_df = spark.createDataFrame(rows, "h string, phrase string")

@@ -1,5 +1,6 @@
 """Language-model quality scoring: per-document pseudo-perplexity
-under a character-bigram model trained on a reference corpus.
+under a character-bigram model, and DSIR importance weights between
+two such models.
 
 The CCNet pipeline (Wenzek et al., 2020) ranks crawl documents by
 KenLM perplexity against a clean reference (Wikipedia) and keeps the
@@ -16,12 +17,12 @@ document score = mean negative log-likelihood over its bigrams (low =
 reference-like, high = alien). The model is a (bigram, logp) frame —
 at most alphabet² rows, broadcast at scoring time.
 
-Scale shape: training is one explode + one hash aggregate over the
-REFERENCE (typically the small clean corpus); scoring is one explode
-of the target corpus + a broadcast join + one per-doc aggregate —
-no shuffle grows with the corpus beyond the (doc, bigram) aggregate.
-In self-perplexity mode (no reference) train and score share ONE
-persisted bigram explode, so the corpus still tokenizes once.
+Scale shape: training is one hash aggregate over the exploded
+bigrams; scoring is a broadcast join + one per-doc aggregate — no
+shuffle grows with the corpus beyond the (doc, bigram) aggregate.
+``char_bigram_nll`` scores the corpus against itself
+(self-perplexity): train and score share ONE persisted bigram
+explode, so the corpus tokenizes once.
 Determinism across engines: per-bigram log-probs are rounded to 8 dp
 at train time and summed as DECIMAL at score time (the same
 discipline as BM25), so libm ln() ulps and float sum order cannot
@@ -70,32 +71,22 @@ def _train_from_bigrams(bg: DataFrame) -> DataFrame:
     )
 
 
-def char_bigram_nll(docs: DataFrame, reference: DataFrame | None = None) -> DataFrame:
+def char_bigram_nll(docs: DataFrame) -> DataFrame:
     """(id, n_bigrams, nll): mean negative log-likelihood of each
-    document's char bigrams under the model trained on ``reference``
-    (default: the corpus itself — self-perplexity, the no-clean-corpus
-    mode). Documents with fewer than 2 characters are absent (no
-    bigrams, no defined score). Rank ascending and keep the head, or
-    feed the nll column to ``validate`` / ``drift`` as a monitored
-    quality metric."""
-    bg = _doc_bigrams(docs, "doc_id", "text")
-    if reference is None:
-        # self-perplexity: train and score consume the SAME exploded
-        # bigrams — persist so the corpus tokenizes once, not twice
-        # (the module's heaviest work; documented multi-consumer
-        # cache, the repo norm)
-        from bigdata_commerce_spark.operators.cache_util import persist_bounded
+    document's char bigrams under the model trained on the corpus
+    itself — self-perplexity, the no-clean-corpus mode. Documents
+    with fewer than 2 characters are absent (no bigrams, no defined
+    score). Rank ascending and keep the head, or feed the nll column
+    to ``validate`` / ``drift`` as a monitored quality metric."""
+    from bigdata_commerce_spark.operators.cache_util import persist_bounded
 
-        bg = persist_bounded(bg)
-        lm = _train_from_bigrams(bg)
-    else:
-        lm = train_char_bigram_lm(reference)
-    # unseen_logp is a model constant (same on every lm row). Recover
-    # it through an aggregate, NOT limit(1): an aggregate always
-    # yields one row, so a degenerate EMPTY model (reference with no
-    # 2+-char text) scores every bigram through the catch-all bucket
-    # (logp 0 — the 1-outcome model) instead of a limit(1)-empty
-    # crossJoin silently annihilating the whole output.
+    # train and score consume the SAME exploded bigrams — persist so
+    # the corpus tokenizes once, not twice (the module's heaviest
+    # work; documented multi-consumer cache, the repo norm)
+    bg = persist_bounded(_doc_bigrams(docs, "doc_id", "text"))
+    lm = _train_from_bigrams(bg)
+    # unseen_logp is a model constant (same on every lm row); an
+    # aggregate recovers it as exactly one row
     const = lm.agg(
         F.coalesce(F.max("unseen_logp"), F.lit(0.0)).alias("unseen_logp")
     )
@@ -136,7 +127,7 @@ def perplexity_buckets(docs: DataFrame) -> DataFrame:
     join, surfaced as NULL). Documents shorter than 2 characters have
     no bigrams and are absent, matching char_bigram_nll's contract.
     """
-    scored = char_bigram_nll(docs, None).join(
+    scored = char_bigram_nll(docs).join(
         docs.select("doc_id", "lang"), "doc_id"
     )
     # sentinel-key the language so NULL groups survive the equi-join

@@ -6,7 +6,7 @@ and an exact-decimal mean for numerics. The data-card companion to
 thing run against an unfamiliar 100 TB crawl drop).
 
 Scale shape:
-- ALL requested columns' counts, min/max and means ride ONE scan
+- ALL columns' counts, min/max and means ride ONE scan
   and ONE aggregate: N columns = ~4N agg expressions on a single
   hash aggregate with map-side partials, exactly like validate.py's
   single-pass rule suite.
@@ -37,8 +37,6 @@ get counts and distinct only.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -53,8 +51,8 @@ _ORDERED_STR = (T.StringType, T.BooleanType)
 _TIMELIKE = (T.TimestampType, T.TimestampNTZType, T.DateType)
 
 
-def profile_table(df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
-    """One row per profiled column:
+def profile_table(df: DataFrame) -> DataFrame:
+    """One row per column, in the frame's order:
     ``(column, n_rows, n_nonnull, n_null, n_distinct, min_num,
     max_num, min_str, max_str, mean)``.
 
@@ -64,7 +62,7 @@ def profile_table(df: DataFrame, columns: Sequence[str] | None = None) -> DataFr
     (engine-portable text). ``mean`` is rounded to 6
     places from the exact decimal sum.
     """
-    cols = list(columns) if columns is not None else list(df.columns)
+    cols = df.columns
     by_name = {f.name: f.dataType for f in df.schema.fields}
 
     aggs = [F.count(F.lit(1)).alias("_n_rows")]

@@ -29,12 +29,11 @@ evaluated inside the scan stage. ``registered_domain_sql`` emits the
 IDENTICAL logic as a DuckDB SQL expression from the SAME parsed
 rules, so the Spark side and the oracle side cannot drift.
 
-``load_psl(path)`` ingests the real
-https://publicsuffix.org/list/public_suffix_list.dat file — the
-bundled ``PSL_SNAPSHOT`` below is a hand-curated subset in the exact
-same format (ICANN + PRIVATE sections, wildcard and exception rules
-included) for container use; a production deployment swaps in the
-full file and nothing else changes.
+The rules are the bundled ``PSL_SNAPSHOT`` below: a hand-curated
+subset of https://publicsuffix.org/list/public_suffix_list.dat in the
+exact same format (ICANN + PRIVATE sections, wildcard and exception
+rules included). Both sections apply, so every tenant of a hosting
+platform (github.io) keys as its own site.
 """
 
 from __future__ import annotations
@@ -340,26 +339,14 @@ class PslRules:
         return most
 
 
-def parse_psl(text: str, include_private: bool = True) -> PslRules:
-    """Parse PSL file text (comments ``//``, section markers,
-    wildcard ``*.`` and exception ``!`` rules). ``include_private``
-    keeps the PRIVATE section (hosting suffixes like github.io) —
-    curation pipelines usually want it ON so every tenant of a
-    hosting platform keys as its own 'site'; registrar-style
-    consumers turn it off."""
+def parse_psl(text: str) -> PslRules:
+    """Parse PSL file text (comments ``//`` and section markers are
+    skipped; wildcard ``*.`` and exception ``!`` rules), ICANN and
+    PRIVATE sections alike."""
     exact, wildcard, exception = set(), set(), set()
-    in_private = False
     for raw in text.splitlines():
         line = raw.strip()
-        if not line:
-            continue
-        if line.startswith("//"):
-            if "BEGIN PRIVATE DOMAINS" in line:
-                in_private = True
-            elif "END PRIVATE DOMAINS" in line:
-                in_private = False
-            continue
-        if in_private and not include_private:
+        if not line or line.startswith("//"):
             continue
         rule = line.split()[0].lower()
         if rule.startswith("!"):
@@ -371,17 +358,10 @@ def parse_psl(text: str, include_private: bool = True) -> PslRules:
     return PslRules(frozenset(exact), frozenset(wildcard), frozenset(exception))
 
 
-def load_psl(path: str, include_private: bool = True) -> PslRules:
-    """Parse a real public_suffix_list.dat from disk (driver-side
-    CONFIG read, not a distributed input)."""
-    with open(path, encoding="utf-8") as fh:
-        return parse_psl(fh.read(), include_private)
-
-
-@lru_cache(maxsize=4)
-def default_rules(include_private: bool = True) -> PslRules:
+@lru_cache(maxsize=1)
+def default_rules() -> PslRules:
     """The bundled snapshot, parsed once."""
-    return parse_psl(PSL_SNAPSHOT, include_private)
+    return parse_psl(PSL_SNAPSHOT)
 
 
 def _by_label_count(rules: frozenset) -> dict[int, list[str]]:

@@ -22,8 +22,6 @@ money_sum discipline), so scores are partitioning-independent.
 
 from __future__ import annotations
 
-import datetime as dt
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,16 +31,12 @@ from bigdata_commerce_spark.operators.drift import (
 )
 
 
-def rfm_scores(
-    orders: DataFrame,
-    n_bins: int = 4,
-    asof: dt.date | None = None,
-) -> DataFrame:
+def rfm_scores(orders: DataFrame, n_bins: int = 4) -> DataFrame:
     """(customer, recency_days, frequency, monetary, r_score,
     f_score, m_score, rfm) — scores in 1..n_bins, higher better on
     every axis (recency INVERTS the bin: the most recent quantile
-    scores n_bins). ``asof`` anchors recency; default = the corpus's
-    max timestamp (one collected scalar). ``rfm`` is the concatenated
+    scores n_bins). Recency counts days to the corpus's max order date
+    (one collected scalar). ``rfm`` is the concatenated
     segment label ('444' = best everything). Ties at quantile boundaries fold into the lower bin
     on both engines (strictly-greater counting — drift.assign_bins
     semantics)."""
@@ -55,10 +49,9 @@ def rfm_scores(
         .cast("double")
         .alias("monetary"),
     )
+    asof = orders.agg(F.max("o_orderdate")).collect()[0][0]
     if asof is None:
-        asof = orders.agg(F.max("o_orderdate")).collect()[0][0]
-        if asof is None:
-            raise ValueError("cannot anchor recency on an empty/all-NULL corpus")
+        raise ValueError("cannot anchor recency on an empty/all-NULL corpus")
     per = per.withColumn(
         "recency_days", F.datediff(F.lit(asof), F.col("__last"))
     ).withColumn("__rec_d", F.col("recency_days").cast("double")).withColumn(

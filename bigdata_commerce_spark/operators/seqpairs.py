@@ -11,7 +11,7 @@ intent) consume exactly this shape.
 
 Scale shape: ONE shuffle (groupBy key) collecting each key's ordered
 history into an array — bounded by events-per-key, the same
-per-key-history regime as timeseries.ewma_per_key's exact path (at
+per-key-history regime as timeseries.ewma_per_key's fold (at
 100 TB, keys with ~1e5+ events should be pre-capped with
 mixing.rate_cap_per_key_bucket; the array is the point here, because
 every example needs a contiguous ordered slice). Window construction

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from bigdata_commerce_spark.operators.topk import top_k_per_group
+
 
 # |x| band where ROUND(x, 4) is engine-portable: x*10^4 stays under
 # 2^53, so Spark's exact BigDecimal round and a float-math round
@@ -45,6 +47,12 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
+def _cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` from their precomputed norms; NULL on
+    a zero-magnitude side (try_divide)."""
+    return F.try_divide(_dot(a, b), na * nb)
+
+
 def cosine_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -59,8 +67,7 @@ def cosine_topk(
     engine-stable."""
     # Norms hoisted onto each SIDE before the join (the neardup_pairs
     # precedent): norm(cvec) otherwise re-folds per probe and
-    # norm(pvec) per corpus row. try_divide(dot, nc*np) is the exact
-    # expression _cosine builds over the same values — bit-identical.
+    # norm(pvec) per corpus row.
     c = corpus.select(
         F.col(id_col).alias("corpus_id"), _as_double(vec_col).alias("cvec")
     ).withColumn("__nc", _norm(F.col("cvec")))
@@ -73,19 +80,13 @@ def cosine_topk(
             "probe_id",
             "corpus_id",
             F.round(
-                F.try_divide(
-                    _dot(F.col("cvec"), F.col("pvec")), F.col("__nc") * F.col("__np")
-                ),
-                4,
+                _cosine(F.col("cvec"), F.col("pvec"), F.col("__nc"), F.col("__np")), 4
             ).alias("score"),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "corpus_id", "score", "rank")
-    )
+    return top_k_per_group(
+        scored, ["probe_id"], [F.desc("score"), F.asc("corpus_id")], k
+    ).select("probe_id", "corpus_id", "score", "rank")
 
 
 def _sign_buckets(
@@ -210,9 +211,8 @@ def neardup_pairs(
     # candidate set is ~N^2/2^bits times larger than the corpus —
     # hoisting the norm folds onto the N-row side cuts per-pair work
     # to the single dot fold (measured 2.5s -> 1.0s verify at sf0.1).
-    # Bit-identical result: the SAME _norm fold just runs earlier, and
-    # try_divide(dot, n1*n2) is the exact expression _cosine builds,
-    # so the DuckDB oracle needs no restatement.
+    # Bit-identical result: the SAME _norm fold just runs earlier, so
+    # the DuckDB oracle needs no restatement.
     v1 = corpus.select(
         F.col(id_col).alias("id1"), _as_double(vec_col).alias("v1")
     ).withColumn("__n1", _norm(F.col("v1")))
@@ -228,8 +228,8 @@ def neardup_pairs(
         .select(
             "id1",
             "id2",
-            F.try_divide(
-                _dot(F.col("v1"), F.col("v2")), F.col("__n1") * F.col("__n2")
+            _cosine(
+                F.col("v1"), F.col("v2"), F.col("__n1"), F.col("__n2")
             ).alias("__raw"),
         )
         .where(F.col("__raw") >= threshold)
@@ -251,8 +251,7 @@ def _exact_rerank(
     before ranking so rank order is engine-stable."""
     # Norms hoisted onto the vector sides before the candidate joins
     # (the neardup_pairs precedent): computed once per corpus/probe
-    # row instead of once per candidate pair. try_divide(dot, nc*np)
-    # is the exact expression _cosine builds — bit-identical.
+    # row instead of once per candidate pair.
     c_vec = corpus.select(
         F.col(id_col).alias("corpus_id"), _as_double(vec_col).alias("corpus_vec")
     ).withColumn("__nc", _norm(F.col("corpus_vec")))
@@ -266,20 +265,19 @@ def _exact_rerank(
             "probe_id",
             "corpus_id",
             F.round(
-                F.try_divide(
-                    _dot(F.col("corpus_vec"), F.col("probe_vec")),
-                    F.col("__nc") * F.col("__np"),
+                _cosine(
+                    F.col("corpus_vec"),
+                    F.col("probe_vec"),
+                    F.col("__nc"),
+                    F.col("__np"),
                 ),
                 4,
             ).alias("score"),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("score"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("probe_id", "corpus_id", "score", "rank")
-    )
+    return top_k_per_group(
+        scored, ["probe_id"], [F.desc("score"), F.asc("corpus_id")], k
+    ).select("probe_id", "corpus_id", "score", "rank")
 
 
 def _centroid_fold_row(centroids: DataFrame):
@@ -314,17 +312,12 @@ def _cell_scores(vec: str) -> Column:
     product twice would re-evaluate it per element. ``__nv`` must
     be a BOUND column holding norm(vec) (callers compute it once per
     row before the centroid crossJoin): referencing an in-projection
-    alias here would re-fold the row norm per centroid.
-    try_divide(dot, nv*cn) is the exact expression _cosine builds over
-    the same values — bit-identical scores."""
+    alias here would re-fold the row norm per centroid."""
     return F.transform(
         F.col("cents"),
         lambda cent: F.struct(
             F.round(
-                F.try_divide(
-                    _dot(F.col(vec), cent["cv"]), F.col("__nv") * cent["cn"]
-                ),
-                4,
+                _cosine(F.col(vec), cent["cv"], F.col("__nv"), cent["cn"]), 4
             ).alias("s"),
             cent["cid"].alias("cid"),
         ),
@@ -861,19 +854,13 @@ def mine_hard_negatives(
             "query_id",
             "neg_id",
             F.round(
-                F.try_divide(
-                    _dot(F.col("cvec"), F.col("qvec")), F.col("__nc") * F.col("__nq")
-                ),
-                4,
+                _cosine(F.col("cvec"), F.col("qvec"), F.col("__nc"), F.col("__nq")), 4
             ).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neg_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neg_id", "score", "rank")
-    )
+    return top_k_per_group(
+        scored, ["query_id"], [F.desc("score"), F.asc("neg_id")], k
+    ).select("query_id", "neg_id", "score", "rank")
 
 
 def ivf_projected_topk(
@@ -1046,10 +1033,7 @@ def semdedup(
         .where(
             (
                 F.round(
-                    F.try_divide(
-                        _dot(F.col("__va"), F.col("__vb")),
-                        F.col("__na") * F.col("__nb"),
-                    ),
+                    _cosine(F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")),
                     6,
                 )
                 >= F.lit(tau)

@@ -889,7 +889,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 5) -> DataFrame:
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    from pyspark.sql import Window
+    from bigdata_commerce_spark.operators.topk import top_k_per_group
 
     toks = df.select(
         F.col("doc_id"), tokens("text").alias("__tk")
@@ -931,14 +931,9 @@ def tfidf_top_terms(df: DataFrame, k: int = 5) -> DataFrame:
             ).alias("tfidf"),
         )
     )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("tfidf").desc(), F.col("term").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("doc_id", "term", "tfidf", "rank")
-    )
+    return top_k_per_group(
+        scored, ["doc_id"], [F.col("tfidf").desc(), F.col("term").asc()], k
+    ).select("doc_id", "term", "tfidf", "rank")
 
 
 def curation_funnel(df: DataFrame) -> DataFrame:

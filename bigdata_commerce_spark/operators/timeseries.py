@@ -254,11 +254,7 @@ def ohlc_resample(df: DataFrame, bucket_seconds: int) -> DataFrame:
 # EWMA (exponentially weighted moving average)
 # ---------------------------------------------------------------------------
 
-def ewma_per_key(
-    df: DataFrame,
-    alpha: float,
-    bucket_seconds: int | None = None,
-) -> DataFrame:
+def ewma_per_key(df: DataFrame, alpha: float) -> DataFrame:
     """Per-key EWMA in (ts, event_id) order — the standard
     ``adjust=False`` recurrence: y_1 = v_1, y_t = a*v_t + (1-a)*y_{t-1}
     (pandas ``Series.ewm``; the smoothing half of every
@@ -268,36 +264,19 @@ def ewma_per_key(
     pre-impute with `fill_gaps_locf` if they should).
 
     A sequential recurrence is the one shape a running window cannot
-    bound and a re-association cannot make bit-exact, so there are
-    two deliberate paths:
-
-    - **exact** (default): ONE shuffle — groupBy(key), sort_array over
-      the collected (ts, event_id, value) structs, then a single
-      `F.aggregate` fold that applies the recurrence element-by-element
-      in exactly the IEEE op order ``a*v + b*y`` — bit-identical to
-      the DuckDB recursive-CTE oracle and to pandas. The per-key
-      array bounds this path: a key's whole history sits in one task
-      (same caveat as any per-key sequential state), and the
-      append-per-element fold copies O(n²) elements — fine to ~1e5
-      rows/key, wrong for a hot key at 100 TB.
-    - **bucketized** (``bucket_seconds``): the recurrence is linear
-      (y_out = decay*y_in + local, decay = (1-a)^m), so buckets
-      summarize independently — per (key, bucket) fold computes
-      (m, local, seeded), a per-key spine fold over the bucket
-      summaries (bounded by time-range/bucket, not traffic) threads
-      the entry state through, and a second in-bucket fold emits
-      per-row values. No task ever folds more than one bucket of the
-      hot key — `running_sum_per_key`'s spine discipline. Floating
-      re-association makes this path equal to the exact one only to
-      ~1e-12 relative (tested), NOT bit-identical: unlike the decimal
-      running sum, an IEEE recurrence cannot be exactly re-associated.
-      Use the exact path when hash-stable output matters; use this
-      one under skew.
+    bound and a re-association cannot make bit-exact, so this is an
+    exact fold: ONE shuffle — groupBy(key), sort_array over the
+    collected (ts, event_id, value) structs, then a single
+    `F.aggregate` fold that applies the recurrence element-by-element
+    in exactly the IEEE op order ``a*v + b*y`` — bit-identical to the
+    DuckDB recursive-CTE oracle and to pandas. The per-key array
+    bounds it: a key's whole history sits in one task (same caveat as
+    any per-key sequential state), and the append-per-element fold
+    copies O(n²) elements — fine to ~1e5 rows/key, wrong for a hot key
+    at 100 TB.
     """
     if not (0.0 < alpha <= 1.0):
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    if bucket_seconds is not None and int(bucket_seconds) < 1:
-        raise ValueError(f"bucket_seconds must be >= 1, got {bucket_seconds}")
     a, b = float(alpha), 1.0 - float(alpha)
     rows = df.where(F.col("ts").isNotNull() & F.col("value").isNotNull())
 
@@ -306,128 +285,28 @@ def ewma_per_key(
         F.col("event_id").alias("event_id"),
         F.col("value").cast("double").alias("v"),
     )
-    empty_ys = F.expr("CAST(array() AS array<double>)")
-    init = F.struct(empty_ys.alias("ys"), F.lit(0.0).alias("y"))
-
-    def _step():
-        # The key's first element starts the series (y_1 = v_1).
-        def merge(acc, x):
-            stepped = F.lit(a) * x["v"] + F.lit(b) * acc["y"]
-            y = F.when(F.size(acc["ys"]) == 0, x["v"]).otherwise(stepped)
-            return F.struct(
-                F.concat(acc["ys"], F.array(y)).alias("ys"), y.alias("y")
-            )
-
-        return merge
-
-    def _emit(grouped: DataFrame, extra_cols: list[str]) -> DataFrame:
-        z = F.arrays_zip(F.col("__items").alias("i"), F.col("__ys").alias("y"))
-        return grouped.select(
-            "user_id",
-            *extra_cols,
-            F.explode(z).alias("__z"),
-        ).select(
-            "user_id",
-            *extra_cols,
-            F.col("__z.i.ts").alias("ts"),
-            F.col("__z.i.event_id").alias("event_id"),
-            F.col("__z.i.v").alias("value"),
-            F.col("__z.y").alias("ewma"),
-        )
-
-    if bucket_seconds is None:
-        g = rows.groupBy("user_id").agg(
-            F.sort_array(F.collect_list(item)).alias("__items")
-        )
-        g = g.withColumn("__ys", F.aggregate("__items", init, _step())["ys"])
-        return _emit(g, [])
-
-    bucket = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp"))
-        / F.lit(int(bucket_seconds) * 1_000_000)
-    )
-    g = (
-        rows.withColumn("__bk", bucket)
-        .groupBy("user_id", "__bk")
-        .agg(F.sort_array(F.collect_list(item)).alias("__items"))
-    )
-    # Per-bucket linear summary: seeded fold (if this is the key's
-    # first bucket), 0-init fold (local), and the state decay b^m.
-    # These folds carry SCALAR (y, has) state — O(m) per bucket, no
-    # array building; only the final per-row emit pays the append.
-    def _scalar_fold(has_init: bool):
-        init_s = F.struct(F.lit(0.0).alias("y"), F.lit(has_init).alias("has"))
-
-        def merge(acc, x):
-            y = F.when(
-                acc["has"], F.lit(a) * x["v"] + F.lit(b) * acc["y"]
-            ).otherwise(x["v"])
-            return F.struct(y.alias("y"), F.lit(True).alias("has"))
-
-        return F.aggregate("__items", init_s, merge)["y"]
-
-    g = g.withColumn("__seeded", _scalar_fold(has_init=False))
-    g = g.withColumn("__local", _scalar_fold(has_init=True))
-    g = g.withColumn("__decay", F.pow(F.lit(b), F.size("__items")))
-
-    # Spine: one row per (key, bucket); thread entry state through in
-    # bucket order with one fold per key over the (tiny) summaries.
-    spine = g.select("user_id", "__bk", "__seeded", "__local", "__decay")
-    sk = spine.groupBy("user_id").agg(
-        F.sort_array(
-            F.collect_list(F.struct("__bk", "__seeded", "__local", "__decay"))
-        ).alias("__bks")
-    )
-    entry_init = F.struct(
-        F.expr(
-            "CAST(array() AS array<struct<bk:bigint,y_in:double,has:boolean>>)"
-        ).alias("es"),
-        F.lit(0.0).alias("y"),
-        F.lit(False).alias("has"),
+    init = F.struct(
+        F.expr("CAST(array() AS array<double>)").alias("ys"), F.lit(0.0).alias("y")
     )
 
-    def entry_merge(acc, x):
-        y_out = F.when(
-            acc["has"], x["__decay"] * acc["y"] + x["__local"]
-        ).otherwise(x["__seeded"])
-        e = F.struct(
-            x["__bk"].alias("bk"), acc["y"].alias("y_in"), acc["has"].alias("has")
-        )
-        return F.struct(
-            F.concat(acc["es"], F.array(e)).alias("es"),
-            y_out.alias("y"),
-            F.lit(True).alias("has"),
-        )
+    # The key's first element starts the series (y_1 = v_1).
+    def merge(acc, x):
+        stepped = F.lit(a) * x["v"] + F.lit(b) * acc["y"]
+        y = F.when(F.size(acc["ys"]) == 0, x["v"]).otherwise(stepped)
+        return F.struct(F.concat(acc["ys"], F.array(y)).alias("ys"), y.alias("y"))
 
-    entries = (
-        sk.withColumn("__entries", F.aggregate("__bks", entry_init, entry_merge)["es"])
-        .select("user_id", F.explode("__entries").alias("__e"))
-        .select(
-            "user_id",
-            F.col("__e.bk").alias("__bk"),
-            F.col("__e.y_in").alias("__y_in"),
-            F.col("__e.has").alias("__has"),
-        )
+    g = rows.groupBy("user_id").agg(
+        F.sort_array(F.collect_list(item)).alias("__items")
     )
-
-    # Re-fold each bucket from its entry state, emitting per-row values.
-    withe = g.join(entries, ["user_id", "__bk"])
-    init2 = F.struct(
-        empty_ys.alias("ys"), F.col("__y_in").alias("y"), F.col("__has").alias("has")
+    g = g.withColumn("__ys", F.aggregate("__items", init, merge)["ys"])
+    z = F.arrays_zip(F.col("__items").alias("i"), F.col("__ys").alias("y"))
+    return g.select("user_id", F.explode(z).alias("__z")).select(
+        "user_id",
+        F.col("__z.i.ts").alias("ts"),
+        F.col("__z.i.event_id").alias("event_id"),
+        F.col("__z.i.v").alias("value"),
+        F.col("__z.y").alias("ewma"),
     )
-
-    def merge2(acc, x):
-        y = F.when(
-            acc["has"], F.lit(a) * x["v"] + F.lit(b) * acc["y"]
-        ).otherwise(x["v"])
-        return F.struct(
-            F.concat(acc["ys"], F.array(y)).alias("ys"),
-            y.alias("y"),
-            F.lit(True).alias("has"),
-        )
-
-    withe = withe.withColumn("__ys", F.aggregate("__items", init2, merge2)["ys"])
-    return _emit(withe, [])
 
 
 def decayed_sum_per_key(df: DataFrame, half_life_seconds: float, asof) -> DataFrame:

@@ -47,8 +47,7 @@ quarantine rather than silently mis-key.
 
 ``with_registered_domain`` implements the full Public Suffix List
 algorithm via ``operators/psl.py`` (exact + wildcard + exception
-rules, ICANN and PRIVATE sections, bundled snapshot swappable for
-the complete published file via ``psl.load_psl``).
+rules, ICANN and PRIVATE sections of the bundled snapshot).
 """
 
 from __future__ import annotations
@@ -63,17 +62,10 @@ from bigdata_commerce_spark.operators import psl
 # family is matched by prefix instead — it is open-ended). 'ref' /
 # 'ref_src' are deliberately NOT here: on major sites 'ref' selects
 # content (GitHub '?ref=branch'), so stripping it would merge
-# genuinely different resources; callers curating corpora where ref
-# is known-noise pass tracking_params=TRACKING_PARAMS | {'ref', ...}.
+# genuinely different resources.
 TRACKING_PARAMS: frozenset[str] = frozenset(
     {"fbclid", "gclid", "msclkid", "mc_eid", "igshid", "_ga"}
 )
-
-# Registered-domain extraction delegates to the Public Suffix List
-# machinery in operators/psl.py (full publicsuffix.org algorithm:
-# exact + wildcard + exception rules, ICANN + PRIVATE sections). The
-# bundled snapshot parses once; load_psl() swaps in the complete
-# published list with no other change.
 
 _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.-]*)://"
 _HOSTPORT_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)"
@@ -86,9 +78,7 @@ _PATH_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)"
 _QUERY_RE = r"^[^#?]*\?([^#]*)"
 
 
-def _canonical_expr(
-    url: Column, tracking_params: frozenset[str] = TRACKING_PARAMS
-) -> Column:
+def _canonical_expr(url: Column) -> Column:
     """The canonical-URL Column expression. Pure built-ins; every
     step mirrors a numbered rule in the module docstring."""
     scheme = F.lower(F.regexp_extract(url, _SCHEME_RE, 1))
@@ -115,7 +105,7 @@ def _canonical_expr(
     # Rule 5: split, scrub tracking keys, sort, rejoin. Fragment is
     # never captured (rule 4). Keys compare via the text before the
     # first '=' so valueless params ('flag') scrub by name too.
-    tracked = F.array(*[F.lit(p) for p in sorted(tracking_params)])
+    tracked = F.array(*[F.lit(p) for p in sorted(TRACKING_PARAMS)])
     kept = F.filter(
         F.split(F.regexp_extract(url, _QUERY_RE, 1), "&"),
         lambda p: (p != "")
@@ -138,47 +128,33 @@ def _canonical_expr(
     return F.when((scheme != "") & (hostport != "") & host_is_ascii, canonical)
 
 
-def _domain_expr(canonical: Column, rules: "psl.PslRules | None" = None) -> Column:
+def _domain_expr(canonical: Column) -> Column:
     """Registered domain of an already-canonical URL (NULL in → NULL
-    out), per the full Public Suffix List algorithm
-    (operators/psl.py): longest matching exact/wildcard rule,
-    exceptions win, the implicit ``*`` fallback otherwise. IP
+    out), per the full Public Suffix List algorithm over the bundled
+    snapshot (operators/psl.py): longest matching exact/wildcard
+    rule, exceptions win, the implicit ``*`` fallback otherwise. IP
     literals and hosts that ARE public suffixes key as themselves
     (psl module docstring documents the deviation from the spec's
     NULL)."""
-    if rules is None:
-        rules = psl.default_rules()
     host = F.regexp_extract(canonical, _HOSTPORT_RE, 1)
     bare = F.regexp_replace(host, ":[0-9]+\\z", "")  # non-default port stays in host
     return F.when(
         canonical.isNull(), F.lit(None).cast("string")
-    ).otherwise(psl.registered_domain_expr(bare, rules))
+    ).otherwise(psl.registered_domain_expr(bare, psl.default_rules()))
 
 
-def with_canonical_url(
-    df: DataFrame,
-    tracking_params: frozenset[str] = TRACKING_PARAMS,
-) -> DataFrame:
-    """Add the canonical form of ``url``. Zero shuffle.
-    ``tracking_params`` widens/narrows the exact-key scrub set (the
-    default deliberately excludes content-significant keys like
-    'ref' — see TRACKING_PARAMS)."""
-    return df.withColumn(
-        "canonical_url", _canonical_expr(F.col("url"), tracking_params)
-    )
+def with_canonical_url(df: DataFrame) -> DataFrame:
+    """Add the canonical form of ``url``. Zero shuffle. The exact-key
+    scrub set is TRACKING_PARAMS, which deliberately excludes
+    content-significant keys like 'ref'."""
+    return df.withColumn("canonical_url", _canonical_expr(F.col("url")))
 
 
-def with_registered_domain(
-    df: DataFrame,
-    rules: "psl.PslRules | None" = None,
-) -> DataFrame:
+def with_registered_domain(df: DataFrame) -> DataFrame:
     """Add the registered domain of an already-canonical URL column.
     Zero shuffle — the PSL is CONFIG, embedded as literal arrays, so
-    this stays a scan-stage projection. ``rules`` defaults to the
-    bundled snapshot; pass ``psl.load_psl(path)`` for the full
-    published list, or ``psl.default_rules(include_private=False)``
-    to key hosting-platform tenants under the platform domain."""
-    return df.withColumn("registered_domain", _domain_expr(F.col("canonical_url"), rules))
+    this stays a scan-stage projection."""
+    return df.withColumn("registered_domain", _domain_expr(F.col("canonical_url")))
 
 
 def dedup_by_canonical_url(df: DataFrame) -> DataFrame:

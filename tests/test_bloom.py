@@ -82,7 +82,7 @@ def _join_case(spark):
 def test_semi_join_exact(spark):
     big, keys = _join_case(spark)
     got = sorted(
-        r.k for r in bloom.bloom_semi_join(big, keys, "k").collect()
+        r.k for r in bloom.bloom_semi_join(big, keys, "k", "k").collect()
     )
     want = sorted(
         r.k for r in big.join(keys, "k", "left_semi").collect()
@@ -94,7 +94,7 @@ def test_anti_join_exact_keeps_null_probe_rows(spark):
     big, keys = _join_case(spark)
     got = sorted(
         (r.k is None, r.k)
-        for r in bloom.bloom_anti_join(big, keys, "k").collect()
+        for r in bloom.bloom_anti_join(big, keys, "k", "k").collect()
     )
     want = sorted(
         (r.k is None, r.k) for r in big.join(keys, "k", "left_anti").collect()
@@ -165,7 +165,7 @@ try:
             ("left_anti", bloom.bloom_anti_join),
         ):
             got = sorted(
-                (r.k is None, r.k) for r in fn(bdf, kdf, "k", fpp=fpp).collect()
+                (r.k is None, r.k) for r in fn(bdf, kdf, "k", "k", fpp=fpp).collect()
             )
             want = sorted(
                 (r.k is None, r.k) for r in bdf.join(kdf, "k", how).collect()

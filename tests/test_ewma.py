@@ -1,18 +1,15 @@
 """EWMA per key (operators/timeseries.ewma_per_key). The exact
 path's unrounded hash-match against the DuckDB RECURSIVE-CTE oracle
 lives in test_twin_queries.py (events_ewma_value); here: bit-parity
-with pandas, the bucketized path's documented tolerance contract,
-null handling, ordering, and input validation."""
+with pandas, null handling, ordering, and input validation."""
 
 from __future__ import annotations
 
 import datetime as dt
-import math
 import random
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from bigdata_commerce_spark.operators.timeseries import ewma_per_key
 
@@ -42,19 +39,6 @@ def test_exact_path_bit_identical_to_pandas(spark):
         want = pd.Series(vals).ewm(alpha=0.3, adjust=False).mean()
         for i in range(len(vals)):
             assert got[(u, i)] == want.iloc[i], (u, i)  # BIT identical
-
-
-def test_bucketized_path_matches_exact_within_tolerance(spark):
-    rng = random.Random(11)
-    series = {u: [rng.uniform(-1000, 1000) for _ in range(120)] for u in range(4)}
-    df = _frame(spark, series)
-    exact = _collect(ewma_per_key(df, 0.2))
-    buck = _collect(
-        ewma_per_key(df, 0.2, bucket_seconds=60)
-    )
-    assert set(exact) == set(buck)
-    for k in exact:
-        assert math.isclose(exact[k], buck[k], rel_tol=1e-11, abs_tol=1e-11), k
 
 
 def test_null_ts_and_value_rows_excluded(spark):
@@ -94,16 +78,6 @@ def test_alpha_one_is_identity(spark):
     series = {1: [3.0, 7.0, -2.0]}
     out = _collect(ewma_per_key(_frame(spark, series), 1.0))
     assert out == {(1, 0): 3.0, (1, 1): 7.0, (1, 2): -2.0}
-
-
-def test_bucket_boundaries_align_with_exact_first_value(spark):
-    # First bucket of a key seeds with v_1 even when later buckets
-    # exist; a key living entirely in one bucket equals the exact path.
-    series = {1: [5.0, 6.0], 2: [1.0]}
-    df = _frame(spark, series)
-    exact = _collect(ewma_per_key(df, 0.4))
-    buck = _collect(ewma_per_key(df, 0.4, bucket_seconds=5))
-    assert exact == buck  # single-element folds: no re-association at all
 
 
 def test_decayed_sum_per_key_hand_computed(spark):

@@ -399,51 +399,6 @@ def test_table_diff_matches_dict_reference(spark, pair):
 
 @_SETTINGS
 @given(
-    rows=st.lists(
-        st.tuples(
-            st.integers(0, 3),          # key
-            st.integers(0, 500),        # seconds offset
-            st.integers(-100, 100),     # value
-        ),
-        min_size=1,
-        max_size=60,
-    ),
-    bucket=st.integers(1, 120),
-)
-def test_ewma_bucketed_equivalence_hypothesis(spark, rows, bucket):
-    """Bucketized EWMA == exact EWMA to the documented ~1e-12
-    relative tolerance, for arbitrary key/time/bucket shapes
-    (including buckets smaller than gaps and single-row keys)."""
-    import datetime as dt
-    import math
-
-    from bigdata_commerce_spark.operators.timeseries import ewma_per_key
-
-    base = dt.datetime(2024, 1, 1)
-    data = [
-        (k, base + dt.timedelta(seconds=s), i, float(v))
-        for i, (k, s, v) in enumerate(rows)
-    ]
-    df = spark.createDataFrame(
-        data, "user_id long, ts timestamp, event_id long, value double"
-    )
-    exact = {
-        (r["user_id"], r["event_id"]): r["ewma"]
-        for r in ewma_per_key(df, 0.25).collect()
-    }
-    buck = {
-        (r["user_id"], r["event_id"]): r["ewma"]
-        for r in ewma_per_key(
-            df, 0.25, bucket_seconds=bucket
-        ).collect()
-    }
-    assert set(exact) == set(buck)
-    for k in exact:
-        assert math.isclose(exact[k], buck[k], rel_tol=1e-11, abs_tol=1e-11), k
-
-
-@_SETTINGS
-@given(
     docs=st.lists(
         st.lists(st.sampled_from("a b c d".split()), min_size=0, max_size=12).map(
             " ".join

@@ -77,12 +77,6 @@ def test_exact_distinct_plans_without_expand(spark):
     assert plan.count("count(distinct") >= 3
 
 
-def test_column_subset_and_order(spark):
-    df = spark.createDataFrame([(1, "x", 2.0)], "a long, b string, c double")
-    out = profile_table(df, columns=["c", "a"])
-    assert [r["column"] for r in out.collect()] == ["c", "a"]
-
-
 def test_boolean_and_ntz_columns_route_to_string_minmax(spark):
     import datetime as dt
 

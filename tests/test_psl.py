@@ -4,8 +4,8 @@ restatement parity, and the IDNA host pre-pass.
 The cases cover every publicsuffix.org algorithm branch: exact rules
 at 2-4 labels, wildcard rules (*.ck, *.kawasaki.jp,
 *.compute.amazonaws.com), exception rules (!www.ck,
-!city.kawasaki.jp), the implicit '*' fallback, ICANN vs PRIVATE
-section handling, and the engine's documented keys-as-itself
+!city.kawasaki.jp), the implicit '*' fallback, ICANN and PRIVATE
+sections, and the engine's documented keys-as-itself
 deviation for unregistrable hosts and IP literals.
 """
 
@@ -48,13 +48,10 @@ PSL_CASES = [
 
 
 def test_parser_sections_and_rule_kinds():
-    rules = psl.default_rules(include_private=True)
+    rules = psl.default_rules()
     assert "co.uk" in rules.exact and "github.io" in rules.exact
     assert "ck" in rules.wildcard and "kawasaki.jp" in rules.wildcard
     assert "www.ck" in rules.exception and "city.kawasaki.jp" in rules.exception
-    no_private = psl.default_rules(include_private=False)
-    assert "github.io" not in no_private.exact
-    assert "co.uk" in no_private.exact
     assert rules.max_labels() >= 4  # *.compute.amazonaws.com
 
 
@@ -76,29 +73,6 @@ def test_duckdb_restatement_matches_spark_cases():
     for host, want in PSL_CASES:
         got = con.execute(f"SELECT {sql} FROM (SELECT ? AS h)", [host]).fetchone()[0]
         assert got == want, f"{host!r}: {got!r} != {want!r}"
-
-
-def test_private_section_toggle(spark):
-    """include_private=False keys hosting tenants under the platform."""
-    df = spark.createDataFrame([("blog.foo.github.io",)], "host string")
-    no_private = psl.default_rules(include_private=False)
-    out = df.withColumn("dom", psl.registered_domain_expr(df.host, no_private))
-    assert out.head()["dom"] == "github.io"
-    # and urltools threads the rules parameter through
-    urls = spark.createDataFrame(
-        [("https://blog.foo.github.io/x",)], "url string"
-    )
-    got = urltools.with_registered_domain(
-        urltools.with_canonical_url(urls), rules=no_private
-    ).head()["registered_domain"]
-    assert got == "github.io"
-
-
-def test_load_psl_roundtrip(tmp_path):
-    p = tmp_path / "psl.dat"
-    p.write_text(psl.PSL_SNAPSHOT, encoding="utf-8")
-    assert psl.load_psl(str(p)) == psl.default_rules(True)
-    assert psl.load_psl(str(p), include_private=False) == psl.default_rules(False)
 
 
 # ---------------------------------------------------------------------------
@@ -177,11 +151,13 @@ def test_idna_invalid_hosts_pass_through_and_quarantine(spark):
     assert row["canonical_url"] is None
 
 
-@pytest.mark.parametrize("include_private", [True, False])
-def test_rules_are_hashable_and_cached(include_private):
-    a = psl.default_rules(include_private)
-    b = psl.default_rules(include_private)
-    assert a is b  # lru_cache
+@pytest.mark.parametrize("cold_cache", [True, False])
+def test_rules_are_hashable_and_cached(cold_cache):
+    if cold_cache:
+        psl.default_rules.cache_clear()
+    a = psl.default_rules()
+    assert a is psl.default_rules()  # lru_cache
+    assert hash(a) == hash(psl.parse_psl(psl.PSL_SNAPSHOT))
 
 
 def test_nested_exception_rules_agree_across_engines(spark):

@@ -26,12 +26,22 @@ unless ``ALLOWED_PARAMS`` names it with a reason. Calls match by name.
 The deferred and kept modules and the deferred functions are out of
 scope: they go whole later or are a fixed interface.
 
-Pure AST walk: no Spark, well under a second.
+Each ``ALLOWED_PARAMS`` reason names the test file(s) that set the
+parameter, and each named file must bind it, by keyword or by
+position, on a call of that function. Test calls are read the same
+way for the signature check: every call in ``tests/`` of a function a
+test file imports from the package binds only parameters the function
+has, so a slow-tier test cannot keep a keyword the program dropped. A
+call of a test-local helper that forwards ``**kw`` to a program
+function counts as a call of that function.
+
+Pure AST walk: no Spark, about a second per check.
 """
 
 from __future__ import annotations
 
 import ast
+import re
 import shutil
 from collections import Counter
 from pathlib import Path
@@ -114,7 +124,6 @@ ALLOWED_FUNCTIONS = {
     f"{PKG}.operators.ivf_index.cell_stats": "deferred; test_dataops.py",
     f"{PKG}.operators.ivf_index.ivf_append_sink": "deferred; test_dataops.py",
     f"{PKG}.operators.ivf_index.pruned_cell_scan": "deferred; test_dataops.py",
-    f"{PKG}.operators.psl.load_psl": "deferred; test_psl.py",
     f"{PKG}.operators.similarity.embedding_dedup_clusters": "deferred; test_dataops.py",
     f"{PKG}.operators.similarity.ivf_projected_topk": "deferred; test_dataops.py",
     f"{PKG}.operators.urltools.with_idna_host": "deferred; test_psl.py",
@@ -128,11 +137,13 @@ ALLOWED_FUNCTIONS = {
 
 # Defaulted parameters that every program and perfbench call gives one
 # known value, as module.function.parameter
-# (module.Class.method.parameter).
+# (module.Class.method.parameter). Each reason names the test files
+# whose calls set it (allow_list_reason_breaks checks them).
 ALLOWED_PARAMS = {
     # deployment settings and the paper's own path
     f"{PKG}.session.get_spark.extra_conf": "the deployment's Spark confs; "
-    "applied after the builder defaults, so it overrides any of them",
+    "applied after the builder defaults, so it overrides any of them, as "
+    "test_session.py checks",
     f"{PKG}.streaming.pipelines.kafka_event_source.starting_offsets": "the "
     "reference's Kafka input; test_kafka_live.py replays a topic from earliest",
     # a test's only way into a path that stays
@@ -141,17 +152,12 @@ ALLOWED_PARAMS = {
     "(test_dataops.py)",
     f"{PKG}.operators.dedup_cluster.connected_components.max_iterations": "only "
     "way test_dataops.py reaches the non-convergence error",
-    f"{PKG}.operators.bm25.bm25_scores.n_docs": "snapshot-level corpus stats "
-    "skip the stats scan; test_dataops_ext.py holds that path to the computed one",
-    f"{PKG}.operators.bm25.bm25_scores.avgdl": "pairs with n_docs (same test)",
     f"{PKG}.operators.concentration.concentration_report.bucket_width": "forces "
     "the multi-bucket prefix-sum path; test_concentration.py checks invariance",
     f"{PKG}.operators.packing.pack_sequences.bucket_width": "bucket layout of "
     "the packer; test_dataops_ext.py and test_hypothesis_ext.py check invariance",
     f"{PKG}.operators.drift.ks_report.n_buckets": "bucket layout of the KS "
     "sweep; test_dataops.py checks the statistic does not depend on it",
-    f"{PKG}.operators.timeseries.ewma_per_key.bucket_seconds": "the bucketed "
-    "EWMA path; test_ewma.py and test_hypothesis_ext.py hold it to the exact one",
     f"{PKG}.operators.editdist.edit_distance_join.q": "q-gram length of the "
     "candidate filter; test_editdist.py fuzzes q 1-4 against brute force",
     f"{PKG}.operators.calibration.calibration_bins.n_bins": "bin-edge "
@@ -160,15 +166,9 @@ ALLOWED_PARAMS = {
     "sampling cap; test_cooccur.py checks its bound and determinism",
     f"{PKG}.operators.lm_quality.dsir_logratio.keep_fraction": "keep-threshold "
     "quantile; test_curation_recipes.py checks its extremes",
-    f"{PKG}.operators.profile.profile_table.columns": "column subset and order; "
-    "test_profile.py",
-    f"{PKG}.operators.rfm.rfm_scores.asof": "recency anchor override; "
-    "test_dataops_ext.py checks it shifts every recency by the same delta",
-    f"{PKG}.operators.dupspans.tag_phrases.lowercase": "case-sensitive "
-    "matching; test_dupspans.py",
     f"{PKG}.operators.bloom.bloom_semi_join.fpp": "filter false-positive "
     "rate; test_bloom.py holds the pruned join to Spark's own at 0.5-0.005",
-    f"{PKG}.operators.bloom.bloom_anti_join.fpp": "same test",
+    f"{PKG}.operators.bloom.bloom_anti_join.fpp": "the same test_bloom.py check",
     f"{PKG}.operators.sketch.exact_group_percentiles.max_group_rows": "the "
     "group-size guard; test_sketch_guard.py trips and disables it",
     f"{PKG}.sources.shards.with_shuffled_index.salt": "test_dataops_ext.py "
@@ -179,24 +179,17 @@ ALLOWED_PARAMS = {
     "test_dataops_ext.py puts a tiny corpus's near-dup pair in one cell",
     f"{PKG}.operators.similarity.ivf_kmeans_topk.k": "the reference top-k "
     "search_ivf_index is held to in test_dataops.py",
-    f"{PKG}.operators.similarity.ivf_kmeans_topk.seed": "same test; the "
-    "quantizer seed must match the index's",
+    f"{PKG}.operators.similarity.ivf_kmeans_topk.seed": "the same "
+    "test_dataops.py check; the quantizer seed must match the index's",
     f"{PKG}.operators.similarity.lsh_ann_topk.num_planes": "LSH geometry; "
     "test_dataops_ext.py reaches its contract errors with a band count that "
     "does not divide the planes",
-    f"{PKG}.operators.similarity.lsh_ann_topk.bands": "same test",
-    f"{PKG}.operators.similarity.lsh_ann_topk.dim": "same test",
-    f"{PKG}.operators.urltools.with_canonical_url.tracking_params": "the "
-    "scrubbed query-parameter set; test_urltools.py widens it",
-    f"{PKG}.operators.urltools.with_registered_domain.rules": "suffix rules "
-    "without the private section; test_psl.py",
-    f"{PKG}.operators.psl.default_rules.include_private": "same test; the "
-    "ICANN-only rule set",
+    f"{PKG}.operators.similarity.lsh_ann_topk.bands": "the same "
+    "test_dataops_ext.py check",
+    f"{PKG}.operators.similarity.lsh_ann_topk.dim": "the same "
+    "test_dataops_ext.py check",
     # every program call gives one value, but a test needs another to
     # reach a path that stays, or to hold one path to a reference
-    f"{PKG}.operators.bloom.bloom_semi_join.key_col": "None joins on big_col's "
-    "own name, as every test_bloom.py join but one does",
-    f"{PKG}.operators.bloom.bloom_anti_join.key_col": "same test file",
     f"{PKG}.operators.bootstrap.poisson_bootstrap_ci.level": "test_bootstrap.py::"
     "test_wider_level_wider_interval nests the 0.5 interval in the 0.95 one",
     f"{PKG}.operators.cooccur.cooccurrence_pmi.min_pairs": "test_cooccur.py "
@@ -209,9 +202,6 @@ ALLOWED_PARAMS = {
     "holds k=3 searches to brute force",
     f"{PKG}.operators.ivf_index.write_ivf_index.n_centroids": "test_dataops_ext.py "
     "builds an 8-cell index for its small corpus",
-    f"{PKG}.operators.lm_quality.char_bigram_nll.reference": "scoring under a "
-    "separate reference model; test_dataops_ext.py checks it, the empty "
-    "reference included",
     f"{PKG}.operators.mixing.mixture_sample.default": "test_weighted_sample.py "
     "pre-thins unlisted sources at 0.8 and holds the exact quota to the unthinned one",
     f"{PKG}.operators.mixing.weighted_sample.group_cols": "the ungrouped sample; "
@@ -224,7 +214,8 @@ ALLOWED_PARAMS = {
     "dataops_ext.py reaches the unaligned-bands error at 2",
     f"{PKG}.operators.multimodal.resize_media.height": "test_dataops_ext.py "
     "resizes to 2x2 so a pixel-level check stays small",
-    f"{PKG}.operators.multimodal.resize_media.width": "same test",
+    f"{PKG}.operators.multimodal.resize_media.width": "the same "
+    "test_dataops_ext.py check",
     f"{PKG}.operators.packing.pack_sequences.budget": "test_dataops_ext.py and "
     "test_hypothesis_ext.py pack small documents under small budgets and "
     "reach the budget errors",
@@ -243,7 +234,7 @@ ALLOWED_PARAMS = {
     "sweeps it against a reference",
     f"{PKG}.operators.robust.winsorize.lower": "test_robust.py hand-computes the "
     "clip band at 0.10/0.90 and 0/0.5",
-    f"{PKG}.operators.robust.winsorize.upper": "same test",
+    f"{PKG}.operators.robust.winsorize.upper": "the same test_robust.py check",
     f"{PKG}.operators.running.running_sum_per_key.bucket_seconds": "the bucketed "
     "path; test_dataops_ext.py and test_hypothesis_ext.py hold it to the exact one",
     f"{PKG}.operators.similarity.mine_hard_negatives.k": "test_dataops_ext.py "
@@ -253,7 +244,8 @@ ALLOWED_PARAMS = {
     f"{PKG}.operators.text.chunk_documents.chunk_tokens": "window geometry; "
     "test_dataops_ext.py and test_hypothesis_ext.py check chunking of short "
     "documents with 2-4 token windows",
-    f"{PKG}.operators.text.chunk_documents.overlap": "same tests",
+    f"{PKG}.operators.text.chunk_documents.overlap": "the same checks in "
+    "test_dataops_ext.py and test_hypothesis_ext.py",
     f"{PKG}.operators.text.remove_frequent_lines.delimiter": "test_dataops_ext.py "
     "checks a literal '.' delimiter",
     f"{PKG}.operators.text.tfidf_top_terms.k": "test_dataops_ext.py, "
@@ -263,8 +255,10 @@ ALLOWED_PARAMS = {
     "masking check (see robust_flag_anomalies)",
     f"{PKG}.operators.timeseries.similar_series.bucket_seconds": "test_dataops_"
     "ext.py ranks a 4-bucket, 60 s grid",
-    f"{PKG}.operators.timeseries.similar_series.k": "same test",
-    f"{PKG}.operators.timeseries.similar_series.n_buckets": "same test",
+    f"{PKG}.operators.timeseries.similar_series.k": "the same "
+    "test_dataops_ext.py check",
+    f"{PKG}.operators.timeseries.similar_series.n_buckets": "the same "
+    "test_dataops_ext.py check",
     f"{PKG}.sources.layout.zorder_value.bits": "test_layout.py and "
     "test_hypothesis_ext.py check the interleave on a 3-bit grid and against "
     "a Python reference",
@@ -283,19 +277,24 @@ def _program(root: Path) -> dict[str, Path]:
     return mods
 
 
+def _absolute(module: str, path: Path, node: ast.ImportFrom) -> str:
+    """The absolute module an ``ImportFrom`` in ``module`` names."""
+    if not node.level:
+        return node.module or ""
+    pkg = module.split(".")
+    if path.name != "__init__.py":
+        pkg.pop()
+    pkg = pkg[: len(pkg) - node.level + 1]
+    return ".".join(pkg + ([node.module] if node.module else []))
+
+
 def _imports(name: str, path: Path, tree: ast.Module, mods: dict[str, Path]) -> set[str]:
     named = set()
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
             named.update(a.name for a in node.names)
         elif isinstance(node, ast.ImportFrom):
-            base = node.module or ""
-            if node.level:
-                pkg = name.split(".")
-                if path.name != "__init__.py":
-                    pkg.pop()
-                pkg = pkg[: len(pkg) - node.level + 1]
-                base = ".".join(pkg + ([node.module] if node.module else []))
+            base = _absolute(name, path, node)
             named.add(base)
             named.update(f"{base}.{a.name}" for a in node.names)
     # importing a.b.c runs a/__init__ and a/b/__init__ too
@@ -450,6 +449,207 @@ def unset_params(root: Path = REPO) -> tuple[set[str], int]:
     return one, len(values)
 
 
+def _resolve(mods: dict[str, Path], trees: dict[str, ast.Module], module: str, name: str):
+    """What ``module.name`` is: ("module", dotted) for a submodule,
+    ("def", qualified, FunctionDef) for a function or a class with an
+    ``__init__`` (its qualified name ``module.Class.__init__``),
+    following top-level re-exports; ("other",) for any other name the
+    module binds; None when it binds no such name."""
+    if f"{module}.{name}" in mods:
+        return "module", f"{module}.{name}"
+    tree = trees.get(module)
+    for node in tree.body if tree else ():
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and node.name == name:
+            return "def", f"{module}.{name}", node
+        if isinstance(node, ast.ClassDef) and node.name == name:
+            init = [
+                f for f in node.body
+                if isinstance(f, ast.FunctionDef) and f.name == "__init__"
+            ]
+            return ("def", f"{module}.{name}.__init__", init[0]) if init else ("other",)
+        if isinstance(node, ast.ImportFrom):
+            for a in node.names:
+                if (a.asname or a.name) == name:
+                    source = _absolute(module, mods[module], node)
+                    return _resolve(mods, trees, source, a.name)
+    if tree is None or any(
+        isinstance(t, ast.Name) and isinstance(t.ctx, ast.Store) and t.id == name
+        or isinstance(t, ast.alias) and (t.asname or t.name).split(".")[0] == name
+        for node in tree.body
+        for t in ast.walk(node)
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+    ):
+        return ("other",)
+    return None
+
+
+def _signature(fn: ast.FunctionDef) -> tuple[list[str], set[str], bool, bool]:
+    """(positional names, keyword names, takes *args, takes **kwargs),
+    ``self`` of an ``__init__`` not counted."""
+    a = fn.args
+    pos = [p.arg for p in a.posonlyargs + a.args]
+    if fn.name == "__init__":
+        pos = pos[1:]
+    kw = {p.arg for p in a.args + a.kwonlyargs} - {"self"}
+    return pos, kw, a.vararg is not None, a.kwarg is not None
+
+
+def calls_in_tests(root: Path = REPO) -> list[tuple]:
+    """Every call in ``tests/`` to a program function: (test file,
+    line, qualified function, its def, positional arguments or -1
+    after a ``*`` splat, keyword names). A function is reached through
+    the names a test file imports from the package, anywhere in the
+    file, as ``name(...)`` or ``module_alias.name(...)``. A call to a
+    test-local helper that forwards its ``**kw`` to a program function
+    counts as a call of that function with the keywords the helper
+    does not take itself (no positional arguments). An import, or a
+    call through a module alias, of a name the module does not bind
+    gives (test file, line, dotted name, None, 0, [])."""
+    mods = _program(root)
+    trees = {m: ast.parse(p.read_text()) for m, p in mods.items() if m.startswith(PKG)}
+    out = []
+    for path in sorted((root / "tests").glob("test_*.py")):
+        tree = ast.parse(path.read_text())
+        names: dict[str, tuple] = {}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and (n.module or "").startswith(PKG):
+                for a in n.names:
+                    got = _resolve(mods, trees, n.module, a.name)
+                    if got:
+                        names[a.asname or a.name] = got
+                    else:
+                        dotted = f"{n.module}.{a.name}"
+                        out.append((path.name, n.lineno, dotted, None, 0, []))
+            elif isinstance(n, ast.Import):
+                for a in n.names:
+                    if a.asname and a.name in mods:
+                        names[a.asname] = ("module", a.name)
+
+        def target(f: ast.expr):
+            if isinstance(f, ast.Name):
+                got = names.get(f.id)
+            elif isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name):
+                mod = names.get(f.value.id)
+                if not mod or mod[0] != "module":
+                    return None
+                got = _resolve(mods, trees, mod[1], f.attr)
+                got = got or ("def", f"{mod[1]}.{f.attr}", None)
+            else:
+                got = None
+            return got if got and got[0] == "def" else None
+
+        # a loop variable over a literal tuple of program functions
+        # (``for fn in (mod.f, mod.g)``, or one component of a tuple
+        # target) calls each of them
+        looped: dict[str, list] = {}
+        for loop in (n for n in ast.walk(tree) if isinstance(n, ast.For)):
+            if not isinstance(loop.iter, (ast.Tuple, ast.List)):
+                continue
+            elts = loop.iter.elts
+            slots = {getattr(loop.target, "id", None): elts}
+            if isinstance(loop.target, ast.Tuple):
+                slots = {
+                    getattr(t, "id", None): [
+                        e.elts[i] for e in elts
+                        if isinstance(e, ast.Tuple) and len(e.elts) > i
+                    ]
+                    for i, t in enumerate(loop.target.elts)
+                }
+            for name, picked in slots.items():
+                gots = [target(e) for e in picked]
+                if name and gots and len(gots) == len(elts) and all(gots):
+                    looped[name] = gots
+
+        def targets(call: ast.Call) -> list:
+            if isinstance(call.func, ast.Name) and call.func.id in looped:
+                return looped[call.func.id]
+            got = target(call.func)
+            return [got] if got else []
+
+        def record(call: ast.Call, got, npos: int, keywords: list[str]):
+            out.append((path.name, call.lineno, got[1], got[2], npos, keywords))
+
+        helpers = {}
+        for fn in tree.body:
+            if isinstance(fn, ast.FunctionDef) and fn.args.kwarg:
+                own = {p.arg for p in fn.args.args + fn.args.kwonlyargs}
+                kw = fn.args.kwarg.arg
+                fwd = [
+                    got for c in ast.walk(fn) if isinstance(c, ast.Call)
+                    for got in targets(c)
+                    if any(k.arg is None and getattr(k.value, "id", None) == kw
+                           for k in c.keywords)
+                ]
+                if fwd:
+                    helpers[fn.name] = own, fwd
+        for call in (c for c in ast.walk(tree) if isinstance(c, ast.Call)):
+            gots = targets(call)
+            star = any(isinstance(a, ast.Starred) for a in call.args)
+            for got in gots:
+                record(call, got, -1 if star else len(call.args),
+                       [k.arg for k in call.keywords if k.arg])
+            if not gots and isinstance(call.func, ast.Name) and call.func.id in helpers:
+                own, fwd = helpers[call.func.id]
+                keywords = [k.arg for k in call.keywords if k.arg and k.arg not in own]
+                for got in fwd:
+                    record(call, got, 0, keywords)
+    return out
+
+
+def signature_breaks(root: Path = REPO) -> list[str]:
+    """Test calls that bind a parameter the function does not have:
+    an unknown keyword, too many positional arguments, or a parameter
+    bound by position and by keyword."""
+    bad = []
+    for file, line, qual, fn, npos, keywords in calls_in_tests(root):
+        where = f"{file}:{line} {qual}"
+        if fn is None:
+            bad.append(f"{where}: the program binds no such name")
+            continue
+        pos, kw, varargs, varkw = _signature(fn)
+        if npos > len(pos) and not varargs:
+            bad.append(f"{where}: {npos} positional arguments, takes {len(pos)}")
+        for k in keywords:
+            if k not in kw and not varkw:
+                bad.append(f"{where}: unknown keyword {k!r}")
+            elif k in pos[: max(npos, 0)]:
+                bad.append(f"{where}: {k!r} bound by position and by keyword")
+    return bad
+
+
+def bindings_in_tests(root: Path = REPO) -> dict[tuple[str, str], set[str]]:
+    """(test file, qualified function) -> the parameters that file's
+    calls bind, by keyword or by position."""
+    bound: dict[tuple[str, str], set[str]] = {}
+    for file, _, qual, fn, npos, keywords in calls_in_tests(root):
+        if fn is None:
+            continue
+        pos = _signature(fn)[0]
+        bound.setdefault((file, qual), set()).update(keywords, pos[: max(npos, 0)])
+    return bound
+
+
+def allow_list_reason_breaks(
+    root: Path = REPO, allowed: dict[str, str] = ALLOWED_PARAMS
+) -> list[str]:
+    """Allow-listed parameters whose reason names no test file, names
+    a file ``tests/`` lacks, or names a file none of whose calls of
+    that function binds the parameter."""
+    bound = bindings_in_tests(root)
+    bad = []
+    for key, why in allowed.items():
+        qual, param = key.rsplit(".", 1)
+        files = re.findall(r"\btest_\w+\.py\b", why)
+        if not files:
+            bad.append(f"{key}: the reason names no test file")
+        for f in files:
+            if not (root / "tests" / f).is_file():
+                bad.append(f"{key}: tests/{f} does not exist")
+            elif param not in bound.get((f, qual), ()):
+                bad.append(f"{key}: no call in {f} binds it")
+    return bad
+
+
 def test_every_module_is_reached_or_allowed():
     unreached, _ = analyse()
     extra = unreached - set(KEPT_MODULES) - set(DEFERRED_MODULES)
@@ -540,3 +740,58 @@ def test_planted_one_valued_parameters_are_caught(tmp_path):
         f"{PKG}.operators.topk.planted_fn.other",
         f"{PKG}.operators.topk._planted_helper.unbound",
     }
+
+
+def test_test_calls_bind_only_parameters_the_function_has():
+    bad = signature_breaks()
+    assert not bad, f"test calls that no longer match the program: {bad}"
+
+
+def test_planted_stale_test_calls_are_caught(tmp_path):
+    """On a copy of the program and the tests, a planted stale keyword,
+    one extra positional argument and a stale keyword passed through a
+    ``**kw``-forwarding helper are each reported; a valid planted call
+    is not."""
+    _copy_program(tmp_path)
+    shutil.copytree(REPO / "tests", tmp_path / "tests",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    with open(tmp_path / "tests" / "test_ewma.py", "a") as fh:
+        fh.write(
+            "\n\ndef test_planted(spark):\n"
+            "    df = _frame(spark, {1: [1.0]})\n"
+            "    ewma_per_key(df, 0.3, bucket_seconds=60)\n"
+            "    ewma_per_key(df, 0.3, 60)\n"
+            "    ewma_per_key(df, alpha=0.3)\n"
+        )
+    with open(tmp_path / "tests" / "test_privacy.py", "a") as fh:
+        fh.write("\n\ndef test_planted(spark):\n    _report(spark, [], kk=5)\n")
+    new = set(signature_breaks(tmp_path)) - set(signature_breaks())
+    fn = f"{PKG}.operators.timeseries.ewma_per_key"
+    assert {b.split(" ", 1)[1] for b in new} == {
+        f"{fn}: unknown keyword 'bucket_seconds'",
+        f"{fn}: 3 positional arguments, takes 2",
+        f"{PKG}.operators.privacy.kanonymity_report: unknown keyword 'kk'",
+    }
+
+
+def test_allow_list_reasons_name_a_test_that_binds_the_parameter():
+    bad = allow_list_reason_breaks()
+    assert not bad, f"allow-list reasons the tests do not back: {bad}"
+
+
+def test_planted_allow_list_reasons_are_checked():
+    """A reason naming no test file, a missing file, or a file with no
+    call binding the parameter fails; a file that binds it only
+    through a ``**kw``-forwarding helper passes."""
+    alpha = f"{PKG}.operators.timeseries.ewma_per_key.alpha"
+    level = f"{PKG}.operators.bootstrap.poisson_bootstrap_ci.level"
+    bad = allow_list_reason_breaks(allowed={
+        alpha: "test_profile.py",
+        f"{alpha}x": "a reason without a file",
+        level: "test_bootstrap.py and test_no_such_file.py",
+    })
+    assert sorted(bad) == sorted([
+        f"{alpha}: no call in test_profile.py binds it",
+        f"{alpha}x: the reason names no test file",
+        f"{level}: tests/test_no_such_file.py does not exist",
+    ])

@@ -84,30 +84,52 @@ def test_every_query_has_a_driver_row_or_pin():
     )
 
 
+def _horizon_stale(rows: dict[str, tuple[str, str]], names) -> list[str]:
+    """Names whose NEWEST driver row is more than 4 rounds behind the
+    current round: the newest driver row anywhere in the ledger,
+    pending ``rN*`` slots included. Pinned rows ride their target's
+    verification and ``queued (rN)`` rows are brand-new twins awaiting
+    their first slot: both are skipped, and a queue marker's round is
+    not a driver row, so it does not move the current round."""
+    driver = {
+        name: [int(n) for n in re.findall(r"\br(\d+)\*?", rounds)]
+        for name, (_, rounds) in rows.items()
+        if not rounds.startswith("pinned ==")
+        and not re.fullmatch(r"queued \(r\d+\)", rounds)
+    }
+    current = max(n for found in driver.values() for n in found)
+    return [
+        f"{name} (newest driver row r{max(driver[name])}, current r{current})"
+        for name in sorted(names)
+        if driver.get(name) and max(driver[name]) < current - 4
+    ]
+
+
 def test_ledger_horizon():
     """VERDICT r9 item 7: the informal "~3 rounds without a re-check"
-    promise, made structural — no oracle-paired query's NEWEST driver
-    row may be older than 4 rounds behind the current round (the max
-    round anywhere in the ledger, pending ``rN*`` slots included).
-    Pinned rows ride their target's verification (checked by
-    test_pins_point_at_driver_verified_queries); ``queued (rN)`` rows
-    are brand-new twins awaiting their first slot."""
-    rows = _parse_ledger()
-    all_rounds = [
-        int(n)
-        for _, (_, rounds) in rows.items()
-        for n in re.findall(r"\br(\d+)\*?", rounds)
-    ]
-    current = max(all_rounds)
-    stale = []
-    for name in sorted(set(QUERIES) | set(TWIN_QUERIES)):
-        slot, rounds = rows.get(name, ("", ""))
-        if rounds.startswith("pinned ==") or re.fullmatch(r"queued \(r\d+\)", rounds):
-            continue
-        newest = max(int(n) for n in re.findall(r"\br(\d+)\*?", rounds))
-        if newest < current - 4:
-            stale.append(f"{name} (newest driver row r{newest}, current r{current})")
+    promise, made structural — no oracle-paired query's newest driver
+    row may be older than 4 rounds behind the current round
+    (``_horizon_stale``). Pinned rows are checked by
+    test_pins_point_at_driver_verified_queries."""
+    stale = _horizon_stale(_parse_ledger(), set(QUERIES) | set(TWIN_QUERIES))
     assert not stale, f"ledger horizon exceeded (>4 rounds without a driver row): {stale}"
+
+
+def test_ledger_horizon_ignores_queue_markers():
+    """A twin queued one round past the newest driver row does not
+    move the current round: r9-newest rows stay inside the horizon of
+    r13, and only a row older than r9 is stale."""
+    rows = {
+        "newest": ("driver", "r12*, r13"),
+        "old_a": ("twin", "r6, r9"),
+        "old_b": ("twin", "r9"),
+        "too_old": ("twin", "r5, r8"),
+        "pinned": ("twin", "pinned == newest"),
+        "fresh": ("twin", "queued (r14)"),
+    }
+    assert _horizon_stale(rows, rows) == [
+        "too_old (newest driver row r8, current r13)"
+    ]
 
 
 def test_pins_point_at_driver_verified_queries():

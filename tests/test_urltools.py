@@ -49,7 +49,7 @@ CANON_CASES = [
     # param VALUES are not tracking keys: id=ref survives
     ("https://example.com/a?id=ref", "https://example.com/a?id=ref"),
     # 'ref' is content-significant (GitHub '?ref=branch') — NOT in the
-    # default scrub set; callers opt in via tracking_params
+    # scrub set
     ("https://example.com/a?ref=main&z=1", "https://example.com/a?ref=main&z=1"),
 ]
 
@@ -237,16 +237,6 @@ def test_variants_canonicalize_identically_and_idempotently(spark, fams):
     assert all(r["canonical_url"] == r["url"] for r in again), [
         (r["url"], r["canonical_url"]) for r in again if r["canonical_url"] != r["url"]
     ]
-
-
-def test_tracking_params_is_a_parameter(spark):
-    """Corpora where 'ref' IS known noise opt in explicitly."""
-    df = spark.createDataFrame(
-        [("https://example.com/a?ref=feed&z=1",)], "url string"
-    )
-    widened = urltools.TRACKING_PARAMS | {"ref"}
-    out = urltools.with_canonical_url(df, tracking_params=widened)
-    assert out.head()["canonical_url"] == "https://example.com/a?z=1"
 
 
 def test_filter_blocked_domains_drops_blocked_and_unvettable(spark):
