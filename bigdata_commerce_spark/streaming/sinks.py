@@ -18,10 +18,11 @@ one operator — accumulate is one ``groupBy().sum`` over old ∪ batch
 (so the batch may be raw per-event rows), distinct-append one
 ``distinct``, replace-partition one window pass — followed by one
 parquet write. Reading state submits no Spark job: the schema comes
-from a part file's footer on the driver instead of parquet schema
-inference. Measured on the ad topology (``pipelines.run_ad_pipeline``,
-1500-event epochs, local[4], 4-core VM): a steady epoch runs 15 Spark
-jobs, none of them for a state read.
+from a part file's footer on the driver (``hadoopfs.parquet_schema``,
+the reader ``sources.testdata.load_table`` uses too) instead of
+parquet schema inference. Measured on the ad topology
+(``pipelines.run_ad_pipeline``, 1500-event epochs, local[4], 4-core
+VM): a steady epoch runs 15 Spark jobs, none of them for a state read.
 
 Full-state rewrite per epoch is the local-test compromise; the
 production backend with per-batch I/O proportional to the batch is
@@ -33,14 +34,14 @@ ledger), exercised end-to-end against embedded Derby in
 
 from __future__ import annotations
 
-import json
 import os
 import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from bigdata_commerce_spark.sources.hadoopfs import parquet_schema
 
 BatchFn = Callable[[DataFrame, int], None]
 
@@ -69,35 +70,18 @@ def read_state(
     Sinks merge against the state *before* their own epoch: epoch E is
     a pure function of (state at E-1, batch E), so replaying a
     micro-batch rewrites identical content instead of double-merging.
+
+    The read submits no Spark job: the schema comes from the epoch's
+    first part-file footer on the driver (``hadoopfs.parquet_schema``),
+    which is the schema inference would find. Every epoch is written by
+    ``_write_epoch``, so each has at least one part file, an empty
+    epoch included.
     """
     latest = _latest_epoch(state_dir, before_epoch)
     if latest is None:
         return None
     epoch_dir = os.path.join(state_dir, f"epoch={latest}")
-    return spark.read.schema(_footer_schema(epoch_dir)).parquet(epoch_dir)
-
-
-# Footer key under which Spark's parquet writer stores the DataFrame
-# schema as JSON (ParquetReadSupport.SPARK_METADATA_KEY).
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _footer_schema(epoch_dir: str) -> T.StructType:
-    """The schema Spark recorded in one part file's footer, read on the
-    driver. Passing it to the reader skips parquet schema inference,
-    which is a Spark job per read. Every epoch is written by
-    ``_write_epoch``, so every part file of it carries the same schema,
-    an empty epoch included (Spark writes one empty part file)."""
-    import pyarrow.parquet as pq
-
-    parts = sorted(f for f in os.listdir(epoch_dir) if f.startswith("part-"))
-    if not parts:
-        raise ValueError(f"committed state epoch {epoch_dir} has no part file")
-    part = os.path.join(epoch_dir, parts[0])
-    raw = (pq.read_metadata(part).metadata or {}).get(_SPARK_SCHEMA_KEY)
-    if raw is None:
-        raise ValueError(f"{part} carries no Spark schema in its footer")
-    return T.StructType.fromJson(json.loads(raw))
+    return spark.read.schema(parquet_schema(spark, epoch_dir)).parquet(epoch_dir)
 
 
 # Committed epochs kept per state dir. One committed predecessor is
